@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main — runs every SparkEntry query end-to-end at
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
@@ -10,38 +10,24 @@ import org.apache.spark.sql.SparkSession
   * under-measure compute-heavy operators.
   */
 object Bench {
+  def noopWrite(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  /** Wall seconds of building `df` (construction jobs included) and
+    * writing it to the noop sink: the unit every bench timing measures. */
+  def noopSeconds(df: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    noopWrite(df)
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** One unbilled action so JVM/codegen startup isn't billed to the first query. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
+    noopWrite(spark.read.parquet(s"$sfDir/lineitem.parquet"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // codegen falls back to interpreted expressions once a generated
-      // method exceeds HotSpot's 8 KB JIT-compile limit (the 64 KB default
-      // guards Janino, not the JIT): an un-JIT-able giant method runs as
-      // interpreted BYTECODE, ~3x slower than Spark's interpreted
-      // expression path on the wide conversion sweeps
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.adaptive.enabled", "true")
-      // shuffle WRITE file layout (guide §2.2 "many small blocks"): the
-      // bypass-merge writer creates R partition files per map task —
-      // M·R file creates/deletes per exchange, and at local SF the
-      // file-create syscalls DOMINATE iterative queries (jstack-sampled:
-      // BypassMergeSortShuffleWriter.write / FileOutputStream.open0 were
-      // the hottest executor frames; web_pagerank warm 3.7 s → 2.0 s
-      // with the sort writer's one data+index file per task). At
-      // production scale R > 200, so Spark picks the sort writer anyway
-      // (default threshold 200) — this setting only makes small-R local
-      // runs use the same path; byte volumes and partition counts are
-      // untouched. Env-overridable to restore the stock default.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_BYPASS_THRESHOLD", "1"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // one warm-up action so JVM/codegen startup isn't billed to the first query
-    spark.read.parquet(s"$sfDir/lineitem.parquet").write.format("noop").mode("overwrite").save()
+    val spark = GraftSession()
+    warmUp(spark, sfDir)
     // median of 3 runs per query: at small SF the suite is dominated by
     // per-plan codegen compilation and JIT/GC scheduling — single-shot
     // timings vary >5× run-to-run and manufacture phantom regressions
@@ -54,28 +40,12 @@ object Bench {
     // single-query timing loops (the driver passes no args → full run)
     val only: Option[Set[String]] =
       args.headOption.filter(_.nonEmpty).map(_.split(",").toSet)
-    // §1.4 suite-order adjudication knobs (default OFF — the committed
-    // numbers never use them): UNPIN drops every still-persisted RDD
-    // between queries (the localCheckpoint pins queries create are dead
-    // once their query's action completes, but the ContextCleaner only
-    // releases them after a driver GC notices), QUERY_GC forces a GC
-    // between queries. Both run OUTSIDE the timed region; they exist to
-    // measure whether the in-suite-vs-isolated band on late-suite
-    // queries is accumulated pin/GC pressure.
-    val unpinBetween = sys.env.get("SPARK_GRAFT_BENCH_UNPIN").contains("1")
-    val gcBetween = sys.env.get("SPARK_GRAFT_BENCH_QUERY_GC").contains("1")
-    def interQueryCleanup(): Unit = {
-      if (unpinBetween)
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      if (gcBetween) System.gc()
-    }
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(t => only.forall(_.contains(t._1))).map { case (name, fn) =>
       var err: Option[String] = None
       val times = (1 to iters).map { _ =>
-        interQueryCleanup()
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        try noopWrite(fn(spark, sfDir))
         catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -115,11 +85,7 @@ object Bench {
     val isolated = ok.sortBy(-_._2).take(isolatedN).map { case (name, _, _) =>
       val fn = SparkEntry.queries(name)
       System.gc()
-      def run(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      def run(): Double = noopSeconds(fn(spark, sfDir))
       try {
         run() // warm-up: plan/codegen caches primed, not billed
         val times = (1 to 3).map(_ => run()).sorted

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The standalone entry point — the analog of the reference's binary
   * (`cmd/timescaledb-event-streamer/main.go:129-175`): read a config
   * file (TOML or flat `key=value` properties), overlay environment
@@ -346,14 +344,8 @@ object Replicator {
       else props.getOrElse("graft.data.dir",
         throw new IllegalArgumentException(
           "data directory required: pass as arg 2 or set graft.data.dir"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // deployment override: a cluster master in place of local[cores]
+    val spark = GraftSession(master = sys.env.get("SPARK_GRAFT_MASTER"))
     // reference startup order: validate the replication connection and
     // identify the system BEFORE creating any pipeline state
     // (streamer.go:57-71). Opt-in — the file harness has no walsender.

@@ -18,8 +18,9 @@ object Tables {
     * consults. Handles both a single file and a directory-style table
     * (row groups summed across part files), and degrades to
     * Int.MaxValue — "wide layout, spread no-ops" — on any footer-read
-    * failure, so a layout this census can't read gets STOCK behavior
-    * instead of a query-construction crash. */
+    * failure and on a directory with no direct part files (hive-
+    * partitioned or empty), so a layout this census can't read gets
+    * STOCK behavior instead of a query-construction crash or a spread. */
   private def rowGroups(spark: SparkSession, dir: String, name: String): Int =
     scala.util.Try {
       val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
@@ -31,6 +32,7 @@ object Tables {
           fs.listStatus(path).filter(s => s.isFile &&
             s.getPath.getName.endsWith(".parquet")).map(_.getPath).toSeq
         else Seq(path)
+      require(files.nonEmpty, s"no part files directly under $path")
       files.map { p =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,24 +11,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // codegen falls back to interpreted expressions once a generated
-      // method exceeds HotSpot's 8 KB JIT-compile limit (the 64 KB default
-      // guards Janino, not the JIT): an un-JIT-able giant method runs as
-      // interpreted BYTECODE, ~3x slower than Spark's interpreted
-      // expression path on the wide conversion sweeps
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.adaptive.enabled", "true")
-      // same shuffle-writer setting as Bench (see the comment there)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_BYPASS_THRESHOLD", "1"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // concurrent query submission: wall time at this scale is dominated
     // by per-plan codegen COMPILE (driver-side, per-thread), so a small

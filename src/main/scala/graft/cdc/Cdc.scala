@@ -1336,8 +1336,8 @@ object Cdc {
     * one codegen'd projection, applicable to ANY frame carrying the
     * shaped-WAL columns (op, ts_ms, schema_name, table_name, xid, lsn,
     * event_id, user_id, value, props). Shared by the batch
-    * `envelopeJson` and the streaming `BenchStream` path, so the
-    * streaming throughput number measures the identical rendering.
+    * `envelopeJson` and any streaming frame of the same shape, so both
+    * render identically.
     */
   def envelopeJsonCol(dbName: String = "graft"): Column = {
     val rowStruct = struct(col("event_id"), col("user_id"), col("value"), col("props"))

@@ -53,8 +53,7 @@ case class CmsEstimate(left: Expression, right: Expression)
 
   override protected def nullSafeEval(sketchBytes: Any, key: Any): Any = {
     val bytes = sketchBytes.asInstanceOf[Array[Byte]]
-    if (lastSketch == null ||
-        ((lastBytes ne bytes) && !java.util.Arrays.equals(lastBytes, bytes))) {
+    if (lastSketch == null || !java.util.Arrays.equals(lastBytes, bytes)) {
       lastSketch = CountMinSketch.readFrom(new java.io.ByteArrayInputStream(bytes))
       // defensive copy: a source that reuses/mutates its buffer would
       // otherwise mutate the cache key under us and a later

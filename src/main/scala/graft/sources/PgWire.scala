@@ -603,17 +603,15 @@ object PgWireTailer {
 
   /** Drain `client` (already in COPY-BOTH mode) into `segmentsPath`,
     * rotating a parquet file every `framesPerSegment` frames. Stops at
-    * CopyDone or after `maxSegments` rotations; flushes the partial
-    * tail segment either way. Each rotation's parquet commit is
-    * followed by `client.confirm(segment end LSN)` — the ack cursor
-    * never runs ahead of durable data. Returns the final PROCESSED
-    * LSN — the cursor to hand the next session's START_REPLICATION. */
+    * CopyDone, flushing the partial tail segment. Each rotation's
+    * parquet commit is followed by `client.confirm(segment end LSN)` —
+    * the ack cursor never runs ahead of durable data. Returns the final
+    * PROCESSED LSN — the cursor to hand the next session's
+    * START_REPLICATION. */
   def tail(spark: org.apache.spark.sql.SparkSession, client: PgReplicationClient,
-           segmentsPath: String, framesPerSegment: Int = 1000,
-           maxSegments: Int = Int.MaxValue): Long = {
+           segmentsPath: String, framesPerSegment: Int = 1000): Long = {
     require(framesPerSegment > 0, "framesPerSegment must be positive")
-    // a reconnecting session appends after the segments already on disk;
-    // maxSegments stays a PER-CALL rotation budget
+    // a reconnecting session appends after the segments already on disk
     val base = nextSegmentIndex(spark, segmentsPath)
     var rotations = 0L
     var open = true
@@ -625,21 +623,30 @@ object PgWireTailer {
     // (`containers/relationcache.go`): the cache state IS what makes a
     // resume point valid.
     val relCache = scala.collection.mutable.LinkedHashMap[Int, (Long, Array[Byte])]()
-    while (open && rotations < maxSegments) {
+    // the open transaction's Begin frame: decodeSegments takes the xid
+    // from the Begin it last saw IN THE SEGMENT, so a rotation inside a
+    // transaction replays it too — otherwise the rows after the rotation
+    // decode with xid -1 and escape per-transaction marker suppression
+    var openBegin: Option[(Long, Array[Byte])] = None
+    while (open) {
       val bos = new ByteArrayOutputStream()
       val o = new DataOutputStream(bos)
       var n = 0
       var startLsn = -1L
       var endLsn = client.processedLsn
-      if (rotations > 0) relCache.values.foreach { case (lsn, msg) =>
+      if (rotations > 0) (relCache.values ++ openBegin).foreach { case (lsn, msg) =>
         PgOutput.writeFrame(o, lsn, msg)
       }
       while (n < framesPerSegment && open) client.nextRaw() match {
         case Some((lsn, msg)) =>
           if (startLsn < 0) startLsn = lsn
           endLsn = math.max(endLsn, lsn + msg.length)
-          if (msg.nonEmpty && msg(0).toChar == 'R')
-            relCache(ByteBuffer.wrap(msg, 1, 4).getInt) = (lsn, msg)
+          if (msg.nonEmpty) msg(0).toChar match {
+            case 'R' => relCache(ByteBuffer.wrap(msg, 1, 4).getInt) = (lsn, msg)
+            case 'B' => openBegin = Some((lsn, msg))
+            case 'C' => openBegin = None
+            case _ =>
+          }
           PgOutput.writeFrame(o, lsn, msg); n += 1
         case None => open = false
       }

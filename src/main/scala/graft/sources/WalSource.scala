@@ -87,11 +87,24 @@ class WalMicroBatchStream(path: String, batchSize: Int)
   // stream observes WAL growth — the tail-capable behavior of the
   // reference's replication socket; AvailableNow snapshots it once so
   // that run has a stable endpoint.
+  //
+  // A growing WAL is replaced atomically, which can land between the
+  // length stat and the footer read: the read then seeks the old length
+  // in the new file and fails. Only when the file's (length, mtime)
+  // changed under the read is it retried, on the new file.
   private def readMaxLsn(): Long = {
     val conf = new org.apache.hadoop.conf.Configuration()
-    val file = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(s"$path/events.parquet"), conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(file)
+    val walPath = new org.apache.hadoop.fs.Path(s"$path/events.parquet")
+    val fs = walPath.getFileSystem(conf)
+    val before = fs.getFileStatus(walPath)
+    def replaced: Boolean = {
+      val now = fs.getFileStatus(walPath)
+      now.getLen != before.getLen || now.getModificationTime != before.getModificationTime
+    }
+    val reader =
+      try org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(before, conf))
+      catch { case _: Exception if replaced => return readMaxLsn() }
     try {
       import scala.jdk.CollectionConverters._
       val maxes = for {

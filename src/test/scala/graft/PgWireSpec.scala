@@ -315,6 +315,34 @@ class PgWireSpec extends AnyFunSuite {
     } finally c.close()
   }
 
+  test("tailer rotation inside a transaction replays its Begin: every insert keeps the xid") {
+    // Begin, Relation, five inserts, Commit at 2 frames a segment: four
+    // rotations fall inside the transaction, and each later segment must
+    // still decode its inserts under xid 902, not -1
+    val spark = SparkSpec.session
+    val frames = Seq(0x3000L -> PgOutput.BeginMsg(0x3901L, 78000000L, 902),
+      0x3100L -> PgOutput.RelationMsg(PgOutput.EventsRelId, "public", "events",
+        'd'.toByte, PgOutput.EventsRelCols)) ++
+      (0 until 5).map(i => (0x3200L + i * 0x100) -> PgOutput.InsertMsg(PgOutput.EventsRelId,
+        PgOutput.rowTuple(5000L + i, 1700000000000000000L + i, 7L, "click", 1.0, "{}"))) :+
+      (0x3900L -> PgOutput.CommitMsg(0, 0x3901L, 0x3902L, 78000000L))
+    val srv = new FakeWalsender(
+      script = _ => frames.map { case (l, m) => (l, PgOutput.encode(m)) }, sendKeepalive = false)
+    val dir = java.nio.file.Files.createTempDirectory("graft-wire-xid").toString
+    val c = new PgReplicationClient("127.0.0.1", srv.port, "rep", "events_db")
+    try {
+      c.handshake()
+      c.startReplication("graft_slot", "graft_pub", 0L)
+      graft.sources.PgWireTailer.tail(spark, c, dir, framesPerSegment = 2)
+      assert(srv.done.await(5, TimeUnit.SECONDS))
+      val segs = spark.read.schema(PgOutput.frameSchema).parquet(dir)
+      assert(segs.count() === 4L, "8 frames at 2 a segment")
+      val ins = PgOutput.decodeSegments(segs).collect().filter(_.op_wire == "I")
+      assert(ins.flatMap(_.event_id).sorted.toSeq === (5000L until 5005L))
+      assert(ins.map(_.xid).toSet === Set(902L), ins.map(r => r.event_id -> r.xid).mkString(", "))
+    } finally c.close()
+  }
+
   test("live chain: streaming decode consumes segments WHILE the tailer spools them") {
     // the full production topology, CONCURRENT: one thread drains the
     // replication socket into rotating segment files (single-reader by

@@ -13,15 +13,5 @@ trait SparkSpec extends AnyFunSuite {
 object SparkSpec {
   // one session per JVM: suites share it (Test / fork := true gives one
   // JVM per test run), so startup cost is paid once
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession(cores = 8)
 }

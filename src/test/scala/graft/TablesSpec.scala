@@ -41,6 +41,19 @@ class TablesSpec extends SparkSpec {
     assert(Tables.normalizeTsNanos(asTs).head().getLong(1) === 1704067200123456000L)
   }
 
+  test("spread: a hive-partitioned table counts as a wide layout (no Exchange)") {
+    // no part files directly under the table directory: the row-group
+    // census cannot read the layout, so the gate must keep the stock plan
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-partitioned").toString
+    (0 until 40).map(i => (i.toLong, i % 4)).toDF("doc_id", "part")
+      .write.partitionBy("part").parquet(s"$dir/docs.parquet")
+    val df = spark.read.parquet(s"$dir/docs.parquet")
+    val plan = Tables.spread(spark, dir, "docs", df, col("doc_id"))
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+  }
+
   test("WalRangeReader ts_ms agrees with the batch path on real testdata") {
     // the DSv2 range reader derives its int64→nanos multiplier from the
     // parquet logical type; batch path goes through Tables.events — the

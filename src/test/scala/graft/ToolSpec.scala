@@ -1,0 +1,33 @@
+package graft
+
+import java.io.ByteArrayOutputStream
+
+/** `graft.Tool`'s dispatch, through `run` (which returns the exit code,
+  * so nothing here can exit the test JVM). */
+class ToolSpec extends SparkSpec {
+
+  private def captured(args: String*)(session: => org.apache.spark.sql.SparkSession): (Int, String, String) = {
+    val out = new ByteArrayOutputStream
+    val err = new ByteArrayOutputStream
+    val code = Console.withOut(out)(Console.withErr(err)(Tool.run(args, session)))
+    (code, out.toString("UTF-8"), err.toString("UTF-8"))
+  }
+
+  test("Tool: an unknown or incomplete subcommand returns nonzero and the full usage") {
+    val subcommands = Seq("bench", "profile", "run", "plan-dump", "plans", "scale-probe",
+      "scale-replicate", "diag-edit-distance", "diag-joint-dedup")
+    Seq(Seq("no-such-subcommand"), Seq(), Seq("run", "q1_pricing_summary")).foreach { args =>
+      val (code, _, err) = captured(args: _*)(fail("a usage error must not build a session"))
+      assert(code !== 0, args)
+      subcommands.foreach(c => assert(err.contains(s"  $c "), s"usage does not name '$c':\n$err"))
+    }
+  }
+
+  test("Tool run: prints the query's row count") {
+    val q = "q1_pricing_summary"
+    val expected = SparkEntry.queries(q)(spark, sf001).count()
+    val (code, out, err) = captured("run", q, sf001)(spark)
+    assert(code === 0, err)
+    assert(out.linesIterator.contains(s"ROWS=$expected"), out)
+  }
+}

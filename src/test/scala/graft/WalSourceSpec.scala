@@ -101,6 +101,40 @@ class WalSourceSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("high-watermark read survives the WAL being replaced mid-read") {
+    // a growing WAL is swapped in atomically; a footer read racing the
+    // swap must re-read the new file, never fail the stream
+    import java.nio.file.{Files, StandardCopyOption => C}
+    import org.apache.spark.sql.functions.col
+    val dir = Files.createTempDirectory("wal-swap")
+    val versions = Seq(300L, 500L).map { n =>
+      val out = Files.createTempDirectory("wal-swap-v").toString
+      spark.range(0, n).select(col("id").as("event_id"))
+        .coalesce(1).write.mode("overwrite").parquet(out)
+      new java.io.File(out).listFiles().find(_.getName.endsWith(".parquet")).get.toPath
+    }
+    def swapIn(v: java.nio.file.Path): Unit = {
+      // a fresh copy gets a fresh mtime, as a rewritten WAL file would
+      val staged = Files.copy(v, dir.resolve("staged"), C.REPLACE_EXISTING)
+      Files.move(staged, dir.resolve("events.parquet"), C.REPLACE_EXISTING, C.ATOMIC_MOVE)
+    }
+    swapIn(versions.head)
+    val stream = new graft.sources.WalMicroBatchStream(dir.toString, 100)
+    @volatile var stop = false
+    val writer = new Thread(() => {
+      var i = 1
+      while (!stop) { swapIn(versions(i % 2)); i += 1; Thread.sleep(2) }
+    })
+    writer.start()
+    try {
+      val deadline = System.nanoTime() + 3e9.toLong
+      while (System.nanoTime() < deadline) {
+        val hw = stream.reportLatestOffset().asInstanceOf[graft.sources.LsnOffset].lsn
+        assert(hw === 300L || hw === 500L)
+      }
+    } finally { stop = true; writer.join() }
+  }
+
   test("restart recovery at sf0.1 with a heap-bounded driver (100k events)") {
     val ckpt = java.nio.file.Files.createTempDirectory("wal-src-ckpt-sf01").toString
     val sink = new graft.sinks.CollectorSink
