@@ -76,8 +76,8 @@ object Sinks {
   }
 
   /** Dial a (possibly TLS) socket with the configured deadlines: a
-    * bounded connect, SO_TIMEOUT on reads, and for TLS the same trust
-    * policy as `KafkaWire.tlsSocket` — skipVerify trusts anything,
+    * bounded connect, SO_TIMEOUT on reads, and for TLS the one trust
+    * policy of [[sslSocketFactory]] — skipVerify trusts anything,
     * otherwise platform trust store + HTTPS endpoint identification,
     * eager handshake so a bad certificate fails at dial. */
   private[sinks] def dialSocket(host: String, port: Int, tls: Boolean,

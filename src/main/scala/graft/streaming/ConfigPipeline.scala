@@ -621,7 +621,8 @@ object ConfigPipeline {
     *    value; sinks without null-value records (NATS/Redis/HTTP/SQS/
     *    Kinesis) drop the fan-out row and keep the delete event;
     *  - the SQS FIFO dedup id is CONTENT-based over (topic, envelope,
-    *    key) — robust to any of the above reshapes.
+    *    key) — robust to any of the above reshapes — and is rendered
+    *    only when the primary or the DLQ sink is SQS.
     */
   private[graft] def renderWireRows(shaped: DataFrame,
                                     props: Map[String, String]): DataFrame = {
@@ -697,11 +698,20 @@ object ConfigPipeline {
             .cast(org.apache.spark.sql.types.StringType))
             .otherwise(col("envelope")))
       else withEnvelope.filter(!col("is_tombstone"))
-    tombAware.withColumn("dedup_id",
+    // only the SQS sink reads the dedup id; foreachBatch hands sinks a
+    // Dataset over the already-planned rows, so a sink's select cannot
+    // prune an unread column and every render would hash every envelope
+    if (!readsDedupId(props)) tombAware
+    else tombAware.withColumn("dedup_id",
       sha2(concat_ws("|", col("topic"),
         coalesce(col("envelope"), lit("∅")),
         coalesce(col("key"), lit(""))), 256))
   }
+
+  /** The primary or the dead-letter sink is SQS, the one sink that
+    * reads `dedup_id`. */
+  private def readsDedupId(props: Map[String, String]): Boolean =
+    Seq("sink.type", "sink.dlq.type").exists(k => props.get(k).exists(_.equalsIgnoreCase("sqs")))
 
   def startWithControlPlane(spark: SparkSession, dir: String,
                             props: Map[String, String],
@@ -757,8 +767,8 @@ object ConfigPipeline {
       typeResolver = typeResolver,
       markerSuppress = markerMode(props))
     val shaped = shape(if (statsOn) StreamPipeline.withStats(base) else base, props)
-    // Wire sinks consume RENDERED rows (topic, key, envelope and a
-    // content dedup id) — render HERE, after filters and masking, so an
+    // Wire sinks consume RENDERED rows (topic, key, envelope and, for
+    // SQS, a content dedup id) — render HERE, after filters and masking, so an
     // excluded/masked column can never leak into an envelope byte.
     // Collector/stdout/file paths keep the shaped columns (the
     // reference's sinks all take the serialized envelope,

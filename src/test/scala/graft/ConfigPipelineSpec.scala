@@ -734,8 +734,14 @@ class ConfigPipelineSpec extends SparkSpec {
     assert(tombs.filter(col("key").isNull).count() === 0, "tombstones keep the PK key")
     val ntProps = Map("sink.tombstone" -> "true", "sink.type" -> "nats")
     assert(render(ntProps).filter(col("is_tombstone")).count() === 0)
-    // dedup id: content-based, defined even for null-envelope tombstones
-    assert(tb.filter(col("dedup_id").isNull).count() === 0)
+    // dedup id: rendered only for SQS, the one sink that reads it —
+    // content-based, defined even for null-envelope tombstones (a kafka
+    // primary with an SQS DLQ keeps those tombstones)
+    assert(!tb.columns.contains("dedup_id"), "no SQS sink: no dedup id")
+    val tbDlq = render(tbProps + ("sink.dlq.type" -> "sqs"))
+    assert(tbDlq.filter(col("is_tombstone") && col("envelope").isNull).count() > 0)
+    assert(tbDlq.filter(col("dedup_id").isNull).count() === 0)
+    assert(render(Map("sink.type" -> "sqs")).columns.contains("dedup_id"))
     // the render gate considers the DLQ: a wire DLQ behind a non-wire
     // primary must receive renderable rows the day it engages
     assert(ConfigPipeline.needsWireRender(Map("sink.type" -> "stdout", "sink.dlq.type" -> "kafka")))

@@ -6,14 +6,23 @@ package graft
   * the same contract the OpsSpec kafka wire tests assert piecewise; this
   * reusable form exists for topology tests that need a real socket at
   * the END of a pipeline rather than a parser under the microscope.
+  *
+  * `errorOnRequest = n` answers the n-th Produce request (counted over
+  * all connections, from 1) with a partition error code. With
+  * `holdResponsesMs > 0` each connection holds its responses back until
+  * no request has arrived for that long, so a pipelining client can
+  * reach its in-flight bound: `maxUnanswered` is the most requests a
+  * connection had received and not yet answered.
   */
-final class FakeKafkaBroker {
+final class FakeKafkaBroker(errorOnRequest: Int = 0, holdResponsesMs: Int = 0) {
   import scala.jdk.CollectionConverters._
   // a QUEUE, not a set: exactly-once assertions need duplicate
   // deliveries to be VISIBLE — a set would silently absorb a re-send
   // and let an at-least-twice sink pass an exactly-once test
   val received = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val crcBad = new java.util.concurrent.atomic.AtomicInteger(0)
+  val requests = new java.util.concurrent.atomic.AtomicInteger(0)
+  val maxUnanswered = new java.util.concurrent.atomic.AtomicInteger(0)
   private val server =
     new java.net.ServerSocket(0, 50, java.net.InetAddress.getByName("127.0.0.1"))
   val port: Int = server.getLocalPort
@@ -35,9 +44,17 @@ final class FakeKafkaBroker {
   private def serveOne(s: java.net.Socket): Unit = {
     val in = new java.io.DataInputStream(new java.io.BufferedInputStream(s.getInputStream))
     val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(s.getOutputStream))
+    val held = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
+    def answer(): Unit = {
+      held.foreach { r => out.writeInt(r.length); out.write(r) }
+      out.flush(); held.clear()
+    }
+    if (holdResponsesMs > 0) s.setSoTimeout(holdResponsesMs)
     try {
       while (true) {
-        val size = in.readInt()
+        var size = -1 // an idle wait answers what is held
+        while (size < 0)
+          size = try in.readInt() catch { case _: java.net.SocketTimeoutException => answer(); -1 }
         val req = new Array[Byte](size); in.readFully(req)
         val r = new java.io.DataInputStream(new java.io.ByteArrayInputStream(req))
         def rstr(): String = {
@@ -84,17 +101,20 @@ final class FakeKafkaBroker {
           }
           topic
         }
+        val err = if (requests.incrementAndGet() == errorOnRequest) 7 else 0 // REQUEST_TIMED_OUT
         val resp = new java.io.ByteArrayOutputStream()
         val d = new java.io.DataOutputStream(resp)
         d.writeInt(corr)
         d.writeInt(topicNames.length)
         topicNames.foreach { t =>
           val tb = t.getBytes("UTF-8"); d.writeShort(tb.length); d.write(tb)
-          d.writeInt(1); d.writeInt(0); d.writeShort(0) // no error
+          d.writeInt(1); d.writeInt(0); d.writeShort(err)
           d.writeLong(0L); d.writeLong(-1L)
         }
         d.writeInt(0) // throttle_time_ms
-        out.writeInt(resp.size()); resp.writeTo(out); out.flush()
+        held += resp.toByteArray
+        maxUnanswered.accumulateAndGet(held.length, (a: Int, b: Int) => math.max(a, b))
+        if (holdResponsesMs == 0) answer()
       }
     } catch { case _: Exception => () } finally s.close()
   }

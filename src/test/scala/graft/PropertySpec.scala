@@ -169,10 +169,12 @@ class PropertySpec extends AnyFunSuite {
       Int.MinValue.toLong, Long.MaxValue, Long.MinValue)
     val rand = samples(Gen.long, 200)
     (edge ++ rand).foreach { v =>
-      val out = new java.io.ByteArrayOutputStream()
-      graft.sinks.KafkaWire.writeVarlong(out, v)
-      val (back, used) = decode(out.toByteArray)
-      assert(back === v && used === out.size(), s"varlong $v")
+      val out = new graft.sinks.KafkaWire.WireBuffer()
+      out.varlong(v)
+      val (back, used) = decode(out.toArray)
+      assert(back === v && used === out.size, s"varlong $v")
+      // the record-length computation sizes fields with this function
+      assert(graft.sinks.KafkaWire.varlongSize(v) === out.size, s"varlongSize $v")
     }
   }
 

@@ -30,4 +30,13 @@ class ToolSpec extends SparkSpec {
     assert(code === 0, err)
     assert(out.linesIterator.contains(s"ROWS=$expected"), out)
   }
+
+  test("Bench summary: exactly one \"metric\":\"total\" line, and it is the last") {
+    val lines = Bench.summaryLines("1.500", 3, 2, """{"q1_pricing_summary":0.500}""",
+      """{"q9":"boom"}""", "bench_detail.json", "/data/sf0.1")
+    assert(lines.filter(_.contains("\"metric\":\"total\"")) === Seq(lines.last))
+    assert(lines.head.contains("\"metric\":\"total_headline\"") &&
+      lines.head.contains("\"q1_pricing_summary\":0.500"))
+    assert(lines.last.contains("\"queries\":{}") && lines.last.contains("\"errors\":{\"q9\":\"boom\"}"))
+  }
 }
