@@ -1,30 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.cdc.Cdc
-import graft.catalog.TableFilter
-import graft.model.Envelope
-import graft.ops.{Dedup, Graph, Ingest, Layout, Learn, Retrieval, Sampling, Similarity, TextAnalysis, Web}
-import graft.types.PgConverters
+import graft.queries.Query
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Every implemented operator from SURVEY.md §2 gets a `queries` entry
-  * (Spark) and, where SQL-expressible, an `oracleSql` entry (DuckDB).
-  * Column names are aliased identically on both sides — the driver sorts
-  * columns by name before hashing.
-  *
-  * Numeric discipline for oracle parity:
-  *   - double aggregations: cast to DECIMAL at the leaves, aggregate in
-  *     decimal (exact, engine-independent; double-sum association order
-  *     is not);
-  *   - dot products / folds: sequential left folds via
-  *     `aggregate(zip_with(...))` ≙ DuckDB `list_reduce` — bit-identical;
-  *   - timestamps: never emitted raw; always converted to epoch
-  *     millis/micros BIGINT or a formatted string.
+  * Every implemented operator from SURVEY.md §2 is one
+  * `graft.queries.Query`: its Spark plan (`queries`) and its DuckDB
+  * oracle (`oracleSql`), declared side by side in the family files under
+  * `graft/queries/`. Both maps here are derived from that one registry.
   */
 object SparkEntry {
 
@@ -35,10066 +20,11 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Cdc.envelopePipeline(spark, "/root/testdata/sf0.001")
 
-  /** Representation-stable money: round to integer cents in pure IEEE-754
-    * double arithmetic (multiply + add + floor are correctly rounded and
-    * bit-identical in Spark and DuckDB), then aggregate as BIGINT — integer
-    * sums are associative, so shuffle/aggregation order can't change the
-    * result. Avoids the double→decimal cast boundary (Spark shortest-string
-    * vs DuckDB binary value, e.g. 1.005 → 1.01 vs 1.00) that hash-broke
-    * q1/rollup/window_running in round 1. Oracle twin: `centsSql`. */
-  private def cents(c: Column): Column = floor(c * lit(100.0) + lit(0.5))
-
-  // Sort-first render fan-out lives in Tables.sortedSpread now: same
-  // orderBy row order, but ROW-GROUP-CONDITIONAL — explicit
-  // repartitionByRange(N) only when the source layout caps scan
-  // parallelism (the bench fixtures), stock orderBy (AQE skew/advisory
-  // handling intact) on any real layout.
-  private def centsSql(e: String): String = s"CAST(FLOOR(($e) * 100.0 + 0.5) AS BIGINT)"
-
-  /** Shared MinHash+LSH DuckDB twin: FNV-64a shingle hash fold, the
-    * 16-perm LCG family, 4-row banding, and the hot-bucket star-edge
-    * guard — parameterized by the unit CTE (must yield `tok(doc_id, t)`)
-    * so document- and paragraph-granularity gates replay ONE tail. */
-  private def minhashPairsSql(unitsCte: String): String =
-    ("""WITH UNITS_CTE,
-      |sh AS (SELECT DISTINCT doc_id,
-      |         unnest(list_transform(list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-      |           x -> x[1] || ' ' || x[2] || ' ' || x[3])) AS shingle
-      |       FROM tok WHERE len(t) >= 3),
-      |hv AS (SELECT doc_id,
-      |         list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-      |           list_transform(range(1, length(shingle) + 1),
-      |             i -> ascii(substr(shingle, CAST(i AS INTEGER), 1)))),
-      |           (acc, c) -> (xor(acc, CAST(c AS HUGEINT)) * 1099511628211) % 18446744073709551616) AS hu
-      |       FROM sh),
-      |hb AS (SELECT doc_id,
-      |         CAST((((CASE WHEN hu >= CAST(9223372036854775808 AS HUGEINT)
-      |                      THEN hu - CAST(18446744073709551616 AS HUGEINT) ELSE hu END)
-      |                % 2147483647 + 2147483647) % 2147483647) AS BIGINT) AS h
-      |       FROM hv),
-      |perm AS (SELECT i,
-      |           CAST(CASE WHEN ((6364136223846793005 * CAST(i AS HUGEINT) + 1442695040888963407) & 2147483647) = 0
-      |                     THEN 1
-      |                     ELSE ((6364136223846793005 * CAST(i AS HUGEINT) + 1442695040888963407) & 2147483647) END AS BIGINT) AS a,
-      |           CAST(((2862933555777941757 * CAST(i AS HUGEINT) + 3037000493) & 2147483647) AS BIGINT) AS b
-      |         FROM (SELECT unnest(range(1, 17)) AS i)),
-      |mh AS (SELECT doc_id, p.i AS i, min((h * p.a + p.b) % 2147483647) AS mh
-      |       FROM hb CROSS JOIN perm p GROUP BY doc_id, p.i),
-      |bd AS (SELECT doc_id, (i - 1) // 4 AS band,
-      |              array_to_string(list(CAST(mh AS VARCHAR) ORDER BY i), ',') AS bkey
-      |       FROM mh GROUP BY doc_id, (i - 1) // 4),
-      |bsz AS (SELECT doc_id, band, bkey,
-      |              count(*) OVER (PARTITION BY band, bkey) AS bc,
-      |              min(doc_id) OVER (PARTITION BY band, bkey) AS anchor
-      |        FROM bd)
-      |SELECT DISTINCT doc_a, doc_b FROM (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM (SELECT doc_id, band, bkey FROM bsz WHERE bc <= MAXB) a
-      |  JOIN (SELECT doc_id, band, bkey FROM bsz WHERE bc <= MAXB) b
-      |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-      |  UNION ALL
-      |  SELECT anchor AS doc_a, doc_id AS doc_b FROM bsz
-      |  WHERE bc > MAXB AND doc_id <> anchor)
-      |ORDER BY doc_a, doc_b""".stripMargin
-      .replace("MAXB", Dedup.DefaultMaxBucket.toString)
-      .replace("UNITS_CTE", unitsCte))
-
-  /** Integer cents → decimal text `x.yy` — rendering decimals as text
-    * without a float-to-string crossing engines (numrange/float8 text). */
-  private def decimalCentsText(c: Column): Column = concat(
-    (c / 100).cast("long"), lit("."), lpad(pmod(c, lit(100)).cast("string"), 2, "0"))
-
-  /** DuckDB FNV-1a 64 fold over a string expression (HUGEINT modular
-    * arithmetic) — the oracle twin of `graft.functions.FnvHash64`. ONE
-    * definition: five CTE families hash with it, and a drift in any
-    * copy would silently break that oracle's parity. */
-  private def fnvSql(e: String): String =
-    s"list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT), " +
-      s"list_transform(range(1, length($e) + 1), i -> ascii(substr($e, CAST(i AS INTEGER), 1)))), " +
-      "(acc, c) -> (xor(acc, CAST(c AS HUGEINT)) * 1099511628211) % 18446744073709551616)"
-
-  /** Unsigned-FNV HUGEINT → signed i64 → `pmod 2³¹−1`, the same
-    * conversion the minhash twins apply — shared so the watermark
-    * oracle can't drift from it. `e` must be a plain column reference
-    * (it is spliced into scalar context). */
-  private def signedModP(e: String): String =
-    s"CAST((((CASE WHEN $e >= CAST(9223372036854775808 AS HUGEINT) " +
-      s"THEN $e - CAST(18446744073709551616 AS HUGEINT) ELSE $e END) " +
-      "% 2147483647 + 2147483647) % 2147483647) AS BIGINT)"
-
-  /** Shared CTE chain for the hybrid-retrieval oracles: BM25 top-50
-    * with ranks (`sp`) + hash-embedding integer dot-product top-50 with
-    * ranks (`de`). The dot is computed in bucket-join form — identical
-    * to Spark's zip_with lane product because non-shared lanes multiply
-    * to 0. Ends with `)),` so callers append their own closing CTE +
-    * SELECT. Terms/query fixed to 'hash join vector' (the bm25 query's
-    * term set). */
-  private val retrievalCtes =
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-      |lens AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
-      |g AS (SELECT count(*) AS n, CAST(sum(dl) AS BIGINT) AS tot FROM lens),
-      |av AS (SELECT greatest(tot * 1000 // greatest(n, 1), 1) AS avgdl_milli, n FROM g),
-      |tf AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl, term, count(*) AS tf
-      |       FROM (SELECT doc_id, t, unnest(t) AS term FROM toks) z
-      |       WHERE term IN ('hash', 'join', 'vector')
-      |       GROUP BY 1, 2, 3),
-      |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |scored AS (SELECT tf.doc_id,
-      |    (av.n * 1000000 // dfreq.df) * tf.tf * (1200 + 1000) //
-      |      (tf.tf * 1000 + 1200 * (1000 - 750 + 750 * tf.dl * 1000 // av.avgdl_milli) // 1000)
-      |      AS contrib
-      |  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN av),
-      |sp AS (SELECT doc_id, row_number() OVER (ORDER BY score_milli DESC, doc_id) AS sparse_rank
-      |       FROM (SELECT doc_id, CAST(sum(contrib) AS BIGINT) AS score_milli
-      |             FROM scored GROUP BY 1
-      |             ORDER BY score_milli DESC, doc_id LIMIT 50)),
-      |tok2 AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
-      |h2 AS (SELECT doc_id, ${fnvSql("t")} AS hv FROM tok2),
-      |da AS (SELECT doc_id, CAST(hv % 64 AS BIGINT) AS bkt,
-      |         CAST(sum(CASE WHEN (hv // 64) % 2 = 0 THEN 1 ELSE -1 END) AS BIGINT) AS v
-      |       FROM h2 GROUP BY 1, 2),
-      |qt AS (SELECT unnest(string_split('hash join vector', ' ')) AS t),
-      |qh AS (SELECT ${fnvSql("t")} AS hv FROM qt),
-      |qa AS (SELECT CAST(hv % 64 AS BIGINT) AS bkt,
-      |         CAST(sum(CASE WHEN (hv // 64) % 2 = 0 THEN 1 ELSE -1 END) AS BIGINT) AS v
-      |       FROM qh GROUP BY 1),
-      |dot AS (SELECT d0.doc_id, CAST(coalesce(s.dot, 0) AS BIGINT) AS dot
-      |        FROM (SELECT doc_id FROM documents) d0
-      |        LEFT JOIN (SELECT d.doc_id, sum(d.v * q.v) AS dot
-      |                   FROM da d JOIN qa q USING (bkt) GROUP BY 1) s USING (doc_id)),
-      |de AS (SELECT doc_id, dot, row_number() OVER (ORDER BY dot DESC, doc_id) AS dense_rank
-      |       FROM (SELECT * FROM dot ORDER BY dot DESC, doc_id LIMIT 50)),""".stripMargin
-
-  /** Shared CTE chain producing the MinHash-LSH near-dup pair set
-    * (`pairs(doc_a, doc_b)`) — the dedup_minhash_lsh pipeline as a
-    * composable block for the split-leakage family. Declared RECURSIVE
-    * so callers may append recursive CTEs (connected components); ends
-    * WITHOUT a trailing comma. The FNV split hash CTE (`spl`) is
-    * appended per-oracle because its input text differs (raw text vs
-    * cluster-representative text). */
-  // splitmix64-style finalization constants of the multimodal fixtures
-  // (`Multimodal.ImageCodec.syntheticPng` / `AudioCodec.syntheticWav*`),
-  // as unsigned decimals for DuckDB HUGEINT arithmetic
-  private val SmK1 = java.lang.Long.toUnsignedString(0x9e3779b97f4a7c15L)
-  private val SmK2 = java.lang.Long.toUnsignedString(0xbf58476d1ce4e5b9L)
-  private val SmK3 = java.lang.Long.toUnsignedString(0x94d049bb133111ebL)
-  private val U64  = "18446744073709551616"
-
-  /** DuckDB CTE chain computing the Java aHash for synthetic images —
-    * the exact integer pipeline `ImageCodec.averageHash` runs on REAL
-    * decoded pixels, replayed from the fixture generator's arithmetic
-    * (pixels survive the PNG roundtrip losslessly, so the codec chain
-    * must land on these very bits). Input CTE `imgs(img_key, sid, w, h,
-    * flip)`: `sid` seeds the pixel hash, `flip` applies the
-    * `perturbImages` (0,0)-pixel xor. The 64×64 multiply is split 32/32
-    * to stay inside signed HUGEINT. Emits `ah(img_key, ahash)`. */
-  private def ahashCtes: String =
-    s"""apx AS (SELECT img_key, sid, w, h, flip, CAST(x AS HUGEINT) AS x, CAST(y AS HUGEINT) AS y
-       |        FROM imgs, unnest(range(0, w)) tx(x), unnest(range(0, h)) ty(y)),
-       |az0 AS (SELECT img_key, w, h, flip, x, y,
-       |          (CAST(sid AS HUGEINT) * $SmK1 + x * $SmK2 + y * $SmK3) % $U64 AS z FROM apx),
-       |az1 AS (SELECT img_key, w, h, flip, x, y, xor(z, z // 1073741824) AS z FROM az0),
-       |az2 AS (SELECT img_key, w, h, flip, x, y,
-       |          ((z % 4294967296) * $SmK2 + ((z // 4294967296) * $SmK2 % 4294967296) * 4294967296)
-       |            % $U64 AS z FROM az1),
-       |apxv AS (SELECT img_key, w, h, x, y,
-       |           CASE WHEN flip AND x = 0 AND y = 0
-       |                THEN xor(xor(z, z // 134217728) % 16777216, 986895)
-       |                ELSE xor(z, z // 134217728) % 16777216 END AS rgb FROM az2),
-       |alum AS (SELECT img_key, (8*x + w + 7) // w - 1 AS cx, (8*y + h + 7) // h - 1 AS cy,
-       |           299*(rgb // 65536) + 587*((rgb // 256) % 256) + 114*(rgb % 256) AS l FROM apxv),
-       |acell AS (SELECT img_key, CAST(cy*8 + cx AS INTEGER) AS cell, sum(l) // count(*) AS cv
-       |          FROM alum GROUP BY 1, 2),
-       |amean AS (SELECT img_key, sum(cv) // 64 AS mean FROM acell GROUP BY 1),
-       |ahu AS (SELECT c.img_key,
-       |          sum(CASE WHEN cv > mean THEN CAST(1 AS HUGEINT) << cell
-       |              ELSE CAST(0 AS HUGEINT) END) AS hu
-       |        FROM acell c JOIN amean USING (img_key) GROUP BY 1),
-       |ah AS (SELECT img_key, CAST(CASE WHEN hu >= CAST(9223372036854775808 AS HUGEINT)
-       |         THEN hu - CAST($U64 AS HUGEINT) ELSE hu END AS BIGINT) AS ahash FROM ahu)""".stripMargin
-
-  private val minhashPairCtes =
-    s"""WITH RECURSIVE tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-      |sh AS (SELECT DISTINCT doc_id,
-      |         unnest(list_transform(list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-      |           x -> x[1] || ' ' || x[2] || ' ' || x[3])) AS shingle
-      |       FROM tok WHERE len(t) >= 3),
-      |hv AS (SELECT doc_id, ${fnvSql("shingle")} AS hu FROM sh),
-      |hb AS (SELECT doc_id,
-      |         CAST((((CASE WHEN hu >= CAST(9223372036854775808 AS HUGEINT)
-      |                      THEN hu - CAST(18446744073709551616 AS HUGEINT) ELSE hu END)
-      |                % 2147483647 + 2147483647) % 2147483647) AS BIGINT) AS h
-      |       FROM hv),
-      |perm AS (SELECT i,
-      |           CAST(CASE WHEN ((6364136223846793005 * CAST(i AS HUGEINT) + 1442695040888963407) & 2147483647) = 0
-      |                     THEN 1
-      |                     ELSE ((6364136223846793005 * CAST(i AS HUGEINT) + 1442695040888963407) & 2147483647) END AS BIGINT) AS a,
-      |           CAST(((2862933555777941757 * CAST(i AS HUGEINT) + 3037000493) & 2147483647) AS BIGINT) AS b
-      |         FROM (SELECT unnest(range(1, 17)) AS i)),
-      |mh AS (SELECT doc_id, p.i AS i, min((h * p.a + p.b) % 2147483647) AS mh
-      |       FROM hb CROSS JOIN perm p GROUP BY doc_id, p.i),
-      |bd AS (SELECT doc_id, (i - 1) // 4 AS band,
-      |              array_to_string(list(CAST(mh AS VARCHAR) ORDER BY i), ',') AS bkey
-      |       FROM mh GROUP BY doc_id, (i - 1) // 4),
-      |bsz AS (SELECT doc_id, band, bkey,
-      |              count(*) OVER (PARTITION BY band, bkey) AS bc,
-      |              min(doc_id) OVER (PARTITION BY band, bkey) AS anchor
-      |        FROM bd),
-      |pairs AS (SELECT DISTINCT doc_a, doc_b FROM (
-      |          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |          FROM (SELECT doc_id, band, bkey FROM bsz WHERE bc <= ${Dedup.DefaultMaxBucket}) a
-      |          JOIN (SELECT doc_id, band, bkey FROM bsz WHERE bc <= ${Dedup.DefaultMaxBucket}) b
-      |            ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-      |          UNION ALL
-      |          SELECT anchor AS doc_a, doc_id AS doc_b FROM bsz
-      |          WHERE bc > ${Dedup.DefaultMaxBucket} AND doc_id <> anchor))""".stripMargin
-
-  /** Shared CTE chain for the topic-clustering oracles: hash-embed per
-    * doc (FNV fold, 64 buckets, sign bit), unrolled-Lloyd k-means
-    * (`duckKmeans`), and the broadcast-argmax assignment — ends at
-    * `asg(doc_id, topic_id)`, no trailing comma; `tok` stays visible
-    * for term-level consumers. */
-  private lazy val topicAsgCtes: String =
-    s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
-       |h AS (SELECT doc_id,
-       |  list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-       |      list_transform(range(1, length(t) + 1),
-       |        i -> ascii(substr(t, CAST(i AS INTEGER), 1)))),
-       |      (acc, c) -> (xor(acc, CAST(c AS HUGEINT)) * 1099511628211) % 18446744073709551616) AS hv
-       |  FROM tok),
-       |bh AS (SELECT doc_id, CAST(hv % 64 AS BIGINT) AS bkt,
-       |        CASE WHEN (hv // 64) % 2 = 0 THEN 1 ELSE -1 END AS s FROM h),
-       |bagg AS (SELECT doc_id, bkt, sum(s) AS v FROM bh GROUP BY 1, 2),
-       |grid AS (SELECT d.doc_id, dims.b FROM (SELECT doc_id FROM documents) d
-       |         CROSS JOIN (SELECT unnest(range(0, 64)) AS b) dims),
-       |e0 AS (SELECT g.doc_id AS vec_id,
-       |    list(CAST(CAST(coalesce(a.v, 0) AS BIGINT) AS REAL) ORDER BY g.b) AS embedding
-       |  FROM grid g LEFT JOIN bagg a ON a.doc_id = g.doc_id AND a.bkt = g.b
-       |  GROUP BY g.doc_id),
-       |e AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS norm FROM e0),
-       |${duckKmeans("e", 8, 64, 2, "tk")},
-       |asg AS (SELECT vec_id AS doc_id, centroid_id AS topic_id FROM (
-       |    SELECT s.vec_id, c.centroid_id,
-       |      row_number() OVER (PARTITION BY s.vec_id
-       |        ORDER BY ${duckDot("s.embedding", "c.centroid")} / (s.norm * c.cnorm) DESC,
-       |                 c.centroid_id) AS rn
-       |    FROM e s CROSS JOIN tk2 c) t WHERE rn = 1)""".stripMargin
-
-  /** DCG discount lookup as a SQL CASE chain — generated from the SAME
-    * Scala constant table the Spark op reads (Retrieval
-    * .ndcgDiscountsMicro), so `log` never executes inside either
-    * engine. */
-  private def ndcgDiscCase(rankExpr: String, k: Int): String =
-    "CASE " + ops.Retrieval.ndcgDiscountsMicro(k).zipWithIndex
-      .map { case (d, i) => s"WHEN $rankExpr = ${i + 1} THEN $d" }
-      .mkString(" ") + " ELSE 0 END"
-
-  /** Shared CASE expression for op mapping in oracles. */
-  private val opCaseSql =
-    """CASE event_type WHEN 'signup' THEN 'c' WHEN 'purchase' THEN 'u'
-      |    WHEN 'error' THEN 'd' WHEN 'view' THEN 'r' ELSE 'm' END""".stripMargin
-
-  /** Pigeonhole edit-distance oracle, parameterized by the hot-segment
-    * df cap — shared by the default-recall and capped-posture gates. */
-  private def editDistanceOracle(dfCap: Int): String =
-    s"""WITH t AS (SELECT doc_id AS id, substring(text, 1, 24) AS s FROM documents
-       |           WHERE length(substring(text, 1, 24)) >= 1),
-       |segs AS (
-       |  SELECT id, s, length(s) AS L, iv.i AS seg_i,
-       |    substring(s, CAST(iv.i * (length(s) // 7) + least(iv.i, length(s) % 7) + 1 AS INTEGER),
-       |      CAST((length(s) // 7) + CASE WHEN iv.i < length(s) % 7 THEN 1 ELSE 0 END AS INTEGER)) AS seg
-       |  FROM t CROSS JOIN (SELECT unnest(range(0, 7)) AS i) iv
-       |  WHERE length(s) >= 7
-       |  UNION ALL
-       |  SELECT id, s, length(s) AS L, CAST(0 AS BIGINT) AS seg_i, '' AS seg
-       |  FROM t WHERE length(s) < 7),
-       |hot AS (SELECT seg_i, seg, L FROM segs
-       |        GROUP BY 1, 2, 3 HAVING count(*) > $dfCap),
-       |capped AS (SELECT s.* FROM segs s ANTI JOIN hot h USING (seg_i, seg, L)),
-       |cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b, a.s AS s_a, b.s AS s_b
-       |  FROM capped a JOIN capped b ON a.seg_i = b.seg_i AND a.seg = b.seg
-       |    AND a.L = b.L AND a.id < b.id)
-       |SELECT id_a, id_b, CAST(levenshtein(s_a, s_b) AS BIGINT) AS dist
-       |FROM cand WHERE levenshtein(s_a, s_b) <= 6
-       |ORDER BY id_a, id_b""".stripMargin
-
-  /** Shared oracle CTE chain replaying the logical-message prefix
-    * fixture (Cdc.withMessagePrefix) and the 2.12+ marker brackets
-    * (Cdc.withMarkerFlag): `mwalp` = the prefixed WAL, `mbr` = per-txn
-    * decompression-bracket boundaries gated on the EXACT
-    * `::timescaledb-decompression-start/end` ids. Window frames: lsn is
-    * unique, so DuckDB's RANGE-to-current-row default matches Spark's.
-    */
-  private val msgPrefixCtes: String =
-    s"""mwal AS (SELECT event_id AS lsn, event_id // 10 AS xid,
-       |    $opCaseSql AS op,
-       |    epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day,
-       |    epoch_ns(ts) // 1000000 AS ts_ms, props FROM events),
-       |mwalp AS (SELECT lsn, xid, op, chunk_day, ts_ms, props,
-       |    CASE WHEN op = 'm' THEN
-       |      CASE WHEN nm >= 2 AND xid % 3 <> 2 THEN
-       |        CASE WHEN mi = 1 THEN '::timescaledb-decompression-start'
-       |             WHEN mi = nm THEN '::timescaledb-decompression-end'
-       |             ELSE 'graft' END
-       |      WHEN nm >= 2 THEN 'app.outbox' ELSE 'graft' END END AS msg_prefix
-       |  FROM (SELECT *,
-       |      SUM(CASE WHEN op = 'm' THEN 1 ELSE 0 END)
-       |        OVER (PARTITION BY xid) AS nm,
-       |      SUM(CASE WHEN op = 'm' THEN 1 ELSE 0 END)
-       |        OVER (PARTITION BY xid ORDER BY lsn) AS mi
-       |    FROM mwal) t),
-       |mbr AS (SELECT s.xid, s.start_lsn, e.end_lsn FROM
-       |    (SELECT xid, MIN(lsn) AS start_lsn FROM mwalp
-       |     WHERE msg_prefix = '::timescaledb-decompression-start' GROUP BY xid) s
-       |  LEFT JOIN
-       |    (SELECT xid, MAX(lsn) AS end_lsn FROM mwalp
-       |     WHERE msg_prefix = '::timescaledb-decompression-end' GROUP BY xid) e
-       |  ON s.xid = e.xid)""".stripMargin
-
-  /** Shared oracle CTE chain replaying the T3 chunk-status fixture
-    * (Cdc.chunkStatusUpdates) and the transactiontracker state machine
-    * (Cdc.compressionFromStatus): `su` = the status-UPDATE stream,
-    * `ce` = the emitted compression/decompression events. All-integer
-    * arithmetic on non-negative operands, so `//` ≡ Spark's `div`. */
-  private val chunkStatusCtes: String =
-    """mx AS (SELECT MAX(event_id) AS max_lsn,
-      |    MAX(epoch_ns(ts) // 1000000) AS max_ts FROM events),
-      |days AS (SELECT DISTINCT epoch_ns(ts) // 86400000000000 - 19723 AS d FROM events),
-      |b AS (SELECT d, ((max_lsn // 10) + 10) * 10 AS base, max_ts FROM days, mx),
-      |u AS (
-      |  SELECT base + d*40 AS lsn,
-      |    CASE WHEN d % 3 = 0 THEN 9 ELSE 1 END AS new_status, d, base, max_ts FROM b
-      |  UNION ALL
-      |  SELECT base + d*40 + CASE WHEN d % 4 = 0 THEN 1 ELSE 10 END, 0, d, base, max_ts
-      |  FROM b WHERE d % 2 = 0
-      |  UNION ALL
-      |  SELECT base + d*40 + 20, 1, d, base, max_ts FROM b WHERE d % 4 = 2),
-      |su AS (SELECT lsn, lsn // 10 AS xid, d AS chunk_id, new_status,
-      |    max_ts + (lsn - base) AS ts_ms FROM u),
-      |st AS (SELECT *, lag(new_status, 1, 0)
-      |    OVER (PARTITION BY chunk_id ORDER BY lsn) AS old_status FROM su),
-      |kk AS (SELECT *, CASE WHEN old_status = 0 AND new_status <> 0 THEN 'c'
-      |                      WHEN old_status <> 0 AND new_status = 0 THEN 'd' END AS kind
-      |  FROM st),
-      |wn AS (SELECT * FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY xid, kind ORDER BY lsn DESC) AS rn
-      |    FROM kk WHERE kind IS NOT NULL) z WHERE rn = 1),
-      |cm AS (SELECT xid, MAX(lsn) AS commit_lsn, MAX(ts_ms) AS commit_ts_ms
-      |  FROM su GROUP BY xid),
-      |ccat AS (SELECT d AS chunk_id,
-      |    concat('_hyper_1_', CAST(d AS VARCHAR), '_chunk') AS chunk_name,
-      |    1 AS hypertable_id FROM days),
-      |cht AS (SELECT 1 AS hypertable_id, 'public' AS ht_schema,
-      |    'events' AS ht_table),
-      |ce AS (SELECT cm.commit_lsn AS lsn, wn.xid, '$' AS op, wn.kind AS tsdb_op,
-      |    ccat.chunk_name,
-      |    (wn.new_status & 8) = 8 AS partial,
-      |    cht.ht_schema AS key_schema, cht.ht_table AS key_table,
-      |    cm.commit_ts_ms AS ts_ms
-      |  FROM wn JOIN cm ON wn.xid = cm.xid
-      |  JOIN ccat ON ccat.chunk_id = wn.chunk_id
-      |  JOIN cht ON cht.hypertable_id = ccat.hypertable_id)""".stripMargin
-
-  /** Shared IVF-PQ oracle chain through the `ranked` candidates CTE —
-    * the topk entry appends its own cut, the rerank entry appends an
-    * exact re-scoring stage over the same candidates. */
-  private lazy val ivfPqRankedCtes: String =
-    s"""WITH e AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS norm FROM embeddings),
-         |${duckKmeans("e", 16, 64, 2, "km")},
-         |asg AS (SELECT vec_id, centroid_id FROM (
-         |    SELECT e.vec_id, c.centroid_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckDot("e.embedding", "c.centroid")} / (e.norm * c.cnorm) DESC,
-         |                 c.centroid_id) AS rn
-         |    FROM e CROSS JOIN km2 c) t WHERE rn = 1),
-         |q AS (SELECT vec_id AS query_id, embedding AS qe, norm AS qnorm FROM e WHERE vec_id < 10),
-         |pr AS (SELECT query_id, centroid_id FROM (
-         |    SELECT q.query_id, c.centroid_id,
-         |      row_number() OVER (PARTITION BY q.query_id
-         |        ORDER BY ${duckDot("q.qe", "c.centroid")} / (q.qnorm * c.cnorm) DESC,
-         |                 c.centroid_id) AS rn
-         |    FROM q CROSS JOIN km2 c) t WHERE rn <= 4),
-         |${duckPqKmeans(16, 8, 8, 2, "pq")},
-         |cscored AS (SELECT c2.vec_id, c2.sm, b.cid,
-         |    2 * ${duckDot("c2.subvec", "b.csub")} - ${duckDot("b.csub", "b.csub")} AS score
-         |  FROM pqcorp c2 JOIN pq2 b ON c2.sm = b.sm),
-         |codes AS (SELECT vec_id, sm, cid AS code FROM (
-         |    SELECT vec_id, sm, cid,
-         |      row_number() OVER (PARTITION BY vec_id, sm ORDER BY score DESC, cid ASC) AS rn
-         |    FROM cscored) t WHERE rn = 1),
-         |qsub AS (SELECT vec_id AS query_id, sm, subvec AS qsub
-         |         FROM pqcorp WHERE vec_id < 10),
-         |dt AS (SELECT query_id, b.sm, b.cid,
-         |    2 * ${duckDot("qs.qsub", "b.csub")} - ${duckDot("b.csub", "b.csub")} AS score
-         |  FROM qsub qs JOIN pq2 b ON qs.sm = b.sm),
-         |cand AS (SELECT pr.query_id, asg.vec_id
-         |  FROM pr JOIN asg ON pr.centroid_id = asg.centroid_id
-         |  WHERE pr.query_id <> asg.vec_id),
-         |joined AS (SELECT cand.query_id, cd.vec_id, cd.sm, dt.score
-         |  FROM cand JOIN codes cd ON cd.vec_id = cand.vec_id
-         |    JOIN dt ON dt.query_id = cand.query_id AND dt.sm = cd.sm AND dt.cid = cd.code),
-         |summed AS (SELECT query_id, vec_id AS neighbor_id,
-         |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list(score ORDER BY sm)),
-         |      (a, x) -> a + x) AS adc_score
-         |  FROM joined GROUP BY 1, 2),
-         |ranked AS (SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY adc_score DESC, neighbor_id ASC) AS rank FROM summed)""".stripMargin
-
-  /** Unrolled batch-perceptron CTE chain (Learn.perceptronTrain twin):
-    * sparse token-shape features + bias, zero weights, then per
-    * iteration margins → misclassified gradient → weight update, all
-    * exact integers. */
-  private def perceptronCtes(iters: Int): String = {
-    val steps = (1 to iters).map { i =>
-      s"""m$i AS (SELECT f.doc_id, f.y, SUM(f.xv * w.w) AS margin
-         |  FROM f JOIN w${i - 1} w USING (pos) GROUP BY 1, 2),
-         |g$i AS (SELECT f.pos, SUM(f.y * f.xv) AS g FROM f
-         |  JOIN (SELECT doc_id FROM m$i WHERE y * margin <= 0) d USING (doc_id)
-         |  GROUP BY 1),
-         |w$i AS (SELECT w.pos, CAST(w.w + COALESCE(g.g, 0) AS BIGINT) AS w
-         |  FROM w${i - 1} w LEFT JOIN g$i g USING (pos))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH f AS (
-       |  SELECT doc_id, CAST(CASE WHEN lang = 'en' THEN 1 ELSE -1 END AS BIGINT) AS y,
-       |    CAST(length(tok) % 8 AS INT) AS pos, CAST(count(*) AS BIGINT) AS xv
-       |  FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok FROM documents)
-       |  GROUP BY 1, 2, 3
-       |  UNION ALL
-       |  SELECT doc_id, CAST(CASE WHEN lang = 'en' THEN 1 ELSE -1 END AS BIGINT),
-       |    8, 1 FROM documents),
-       |w0 AS (SELECT CAST(unnest(generate_series(0, 8)) AS INT) AS pos,
-       |              CAST(0 AS BIGINT) AS w),
-       |$steps""".stripMargin
-  }
-
-  /** DuckDB sequential-fold dot product over two list columns (parity
-    * with Similarity.dot's aggregate/zip_with left fold). */
-  private def duckDot(a: String, b: String): String =
-    s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |  list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))),
-       |  (acc, v) -> acc + v)""".stripMargin
-  private def duckNorm(a: String): String =
-    s"""sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |  list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-       |  (acc, v) -> acc + v))""".stripMargin
-
-  /** MMR twin, generated for k greedy steps: the same top-`preselect`
-    * relevance cut, then per step a max-sim aggregate against the
-    * picked set, the identical fixed-order score text
-    * (0.7·rel − 0.3·maxsim — decimal literals parse to the same IEEE
-    * doubles lambdaMicro/10⁶ produces), NOT EXISTS exclusion, and the
-    * smallest-cand_id tie break. */
-  private def mmrOracle(k: Int, preselect: Int): String = {
-    val pairSim = s"${duckDot("r.ce", "s.se")} / (r.cnorm * s.snorm)"
-    val steps = (2 to k).map { i =>
-      s""",
-         |ms$i AS (SELECT r.query_id, r.cand_id, max($pairSim) AS maxsim
-         |  FROM rel r JOIN sel${i - 1} s ON s.query_id = r.query_id
-         |  GROUP BY r.query_id, r.cand_id),
-         |sc$i AS (SELECT r.query_id, r.cand_id, r.ce, r.cnorm,
-         |    0.7 * r.rel - 0.3 * m.maxsim AS score
-         |  FROM rel r JOIN ms$i m ON m.query_id = r.query_id AND m.cand_id = r.cand_id
-         |  WHERE NOT EXISTS (SELECT 1 FROM sel${i - 1} s
-         |                    WHERE s.query_id = r.query_id AND s.sel_id = r.cand_id)),
-         |pk$i AS (SELECT query_id, cand_id AS sel_id, $i AS rnk, score,
-         |    ce AS se, cnorm AS snorm
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-         |          ORDER BY score DESC, cand_id) AS rn FROM sc$i) z WHERE rn = 1),
-         |sel$i AS (SELECT * FROM sel${i - 1} UNION ALL SELECT * FROM pk$i)"""
-        .stripMargin
-    }.mkString
-    s"""WITH e AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS norm FROM embeddings),
-       |q AS (SELECT vec_id AS query_id, embedding AS qe, norm AS qnorm FROM e WHERE vec_id < 6),
-       |rel0 AS (SELECT q.query_id, c.vec_id AS cand_id,
-       |    ${duckDot("q.qe", "c.embedding")} / (q.qnorm * c.norm) AS rel,
-       |    c.embedding AS ce, c.norm AS cnorm
-       |  FROM q JOIN e c ON q.query_id <> c.vec_id),
-       |rel AS (SELECT query_id, cand_id, rel, ce, cnorm FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY rel DESC, cand_id) AS rn FROM rel0) z WHERE rn <= $preselect),
-       |sel1 AS (SELECT query_id, cand_id AS sel_id, 1 AS rnk,
-       |    0.7 * rel - 0.3 * 0.0 AS score, ce AS se, cnorm AS snorm
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-       |          ORDER BY (0.7 * rel - 0.3 * 0.0) DESC, cand_id) AS rn FROM rel) z
-       |  WHERE rn = 1)$steps
-       |SELECT query_id, rnk, sel_id AS selected_id, score
-       |FROM sel$k ORDER BY query_id, rnk""".stripMargin
-  }
-
-  /** The exact fixed-point mean used by every fitted-quantizer twin:
-    * integer micros summed as BIGINT (order-free), ONE double division,
-    * cast to REAL — bit-identical to Similarity.kmeansCentroids. */
-  private def duckExactMean(v: String): String =
-    s"CAST(CAST(sum(CAST(floor(CAST($v AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)" +
-      s" / (CAST(count(*) AS DOUBLE) * 1000000.0) AS REAL)"
-
-  /** Unrolled exact-mean Lloyd rounds — the oracle twin of
-    * `Similarity.kmeansCentroids` (fitted quantizers are only hash-
-    * verifiable because the Spark means are integer-exact, not float
-    * `avg`). Emits CTEs `{p}0 … {p}{iters}`, each
-    * (centroid_id, centroid, cnorm); callers reference `{p}{iters}`.
-    * `src` must be a CTE with (vec_id, embedding, norm). */
-  private def duckKmeans(src: String, k: Int, dim: Int, iters: Int,
-                         p: String = "km"): String = {
-    val init = s"${p}0 AS (SELECT vec_id AS centroid_id, embedding AS centroid, " +
-      s"norm AS cnorm FROM $src ORDER BY vec_id LIMIT $k)"
-    val rounds = (1 to iters).map { i =>
-      val prev = s"$p${i - 1}"; val cur = s"$p$i"
-      s"""${cur}_asg AS (SELECT vec_id, centroid_id FROM (
-SELECT s.vec_id, c.centroid_id,
-  row_number() OVER (PARTITION BY s.vec_id
-    ORDER BY ${duckDot("s.embedding", "c.centroid")} / (s.norm * c.cnorm) DESC,
-             c.centroid_id) AS rn
-FROM $src s CROSS JOIN $prev c) t WHERE rn = 1),
-${cur}_m AS (SELECT a.centroid_id, px.pos, ${duckExactMean(s"s.embedding[px.pos]")} AS mn
-FROM ${cur}_asg a JOIN $src s ON s.vec_id = a.vec_id
-  CROSS JOIN (SELECT unnest(range(1, ${dim + 1})) AS pos) px
-GROUP BY a.centroid_id, px.pos),
-$cur AS (SELECT p0.centroid_id,
-  COALESCE(mm.marr, p0.centroid) AS centroid,
-  ${duckNorm("COALESCE(mm.marr, p0.centroid)")} AS cnorm
-FROM $prev p0 LEFT JOIN (SELECT centroid_id, list(mn ORDER BY pos) AS marr
-  FROM ${cur}_m GROUP BY centroid_id) mm USING (centroid_id))"""
-    }
-    (init +: rounds).mkString(",\n")
-  }
-
-  /** Unrolled BPE merge learning — the oracle twin of
-    * `TextAnalysis.bpeFit`. Emits the word table `{p}0 … {p}{iters}`
-    * (w, freq, sym) and per-round winning pairs `{p}{i}_b` (pr, cnt):
-    * adjacent-pair weighted counts over the space-joined symbol string,
-    * argmax with (count desc, pair asc) tie-break, then the engine's
-    * double-spaced literal replace (" l  r " → " lr " with every
-    * separator doubled, so consecutive runs of the winning pair all
-    * merge — Sennrich semantics), collapsed back — exactly the
-    * engine's round. */
-  private def duckBpe(iters: Int, p: String = "bpe"): String = {
-    val init =
-      s"""${p}0 AS (SELECT w, freq,
-trim(regexp_replace(w, '(.)', '\\1 ', 'g')) || ' </w>' AS sym FROM (
-  SELECT tok AS w, count(*) AS freq FROM (
-    SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok FROM documents) t
-  WHERE tok <> '' GROUP BY tok) wf)"""
-    val rounds = (1 to iters).map { i =>
-      val prev = s"$p${i - 1}"; val cur = s"$p$i"
-      s"""${cur}_b AS (SELECT pr, cnt FROM (
-  SELECT pr, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-    SELECT unnest(list_transform(range(1, len(arr)),
-      j -> arr[j] || ' ' || arr[j+1])) AS pr, freq
-    FROM (SELECT string_split(sym, ' ') AS arr, freq FROM $prev) s) g
-  GROUP BY pr) z ORDER BY cnt DESC, pr LIMIT 1),
-$cur AS (SELECT w, freq,
-  trim(replace(
-    replace('  ' || replace(sym, ' ', '  ') || '  ',
-            ' ' || replace(b.pr, ' ', '  ') || ' ',
-            ' ' || replace(b.pr, ' ', '') || ' '),
-    '  ', ' ')) AS sym
-  FROM $prev CROSS JOIN ${cur}_b b)"""
-    }
-    (init +: rounds).mkString(",\n")
-  }
-
-  /** Per-subspace unrolled PQ codebook fit — the oracle twin of
-    * `Similarity.pqCodebookFitted` (independent exact-mean Lloyd rounds
-    * in every subspace, squared-L2 argmin as `2·a·c − ‖c‖²` argmax).
-    * Emits `{p}sm`, `{p}corp` (vec_id, sm, subvec) and codebooks
-    * `{p}0 … {p}{iters}` (cid, sm, csub). */
-  private def duckPqKmeans(k: Int, m: Int, sub: Int, iters: Int,
-                           p: String = "pq"): String = {
-    val header =
-      s"""${p}sm AS (SELECT unnest(range(0, $m)) AS sm),
-${p}corp AS (SELECT vec_id, sm, embedding[sm*$sub+1 : sm*$sub+$sub] AS subvec
-FROM embeddings CROSS JOIN ${p}sm),
-${p}0 AS (SELECT cid, sm, embedding[sm*$sub+1 : sm*$sub+$sub] AS csub
-FROM (SELECT vec_id AS cid, embedding FROM embeddings ORDER BY vec_id LIMIT $k) cb0
-CROSS JOIN ${p}sm)"""
-    val rounds = (1 to iters).map { i =>
-      val prev = s"$p${i - 1}"; val cur = s"$p$i"
-      s"""${cur}_asg AS (SELECT vec_id, sm, cid FROM (
-SELECT c2.vec_id, c2.sm, b.cid,
-  row_number() OVER (PARTITION BY c2.vec_id, c2.sm
-    ORDER BY 2 * ${duckDot("c2.subvec", "b.csub")} - ${duckDot("b.csub", "b.csub")} DESC,
-             b.cid ASC) AS rn
-FROM ${p}corp c2 JOIN $prev b ON c2.sm = b.sm) t WHERE rn = 1),
-${cur}_m AS (SELECT a.sm, a.cid, px.pos, ${duckExactMean(s"c2.subvec[px.pos]")} AS mn
-FROM ${cur}_asg a JOIN ${p}corp c2 ON c2.vec_id = a.vec_id AND c2.sm = a.sm
-  CROSS JOIN (SELECT unnest(range(1, ${sub + 1})) AS pos) px
-GROUP BY a.sm, a.cid, px.pos),
-$cur AS (SELECT p0.cid, p0.sm, COALESCE(mm.marr, p0.csub) AS csub
-FROM $prev p0 LEFT JOIN (SELECT sm, cid, list(mn ORDER BY pos) AS marr
-  FROM ${cur}_m GROUP BY sm, cid) mm ON mm.sm = p0.sm AND mm.cid = p0.cid)"""
-    }
-    (header +: rounds).mkString(",\n")
-  }
-
-  /** DuckDB twin of `Similarity.lshBucketKey`: per-plane sign bits from
-    * the SAME generated hyperplanes (rendered as exact-double literals —
-    * `(double)f` round-trips through shortest-string), summed to the
-    * bucket id. */
-  private def duckLshBucket(embCol: String, dim: Int, nPlanes: Int,
-                            seed: Long = 42L): String = {
-    val planes = graft.ops.Similarity.lshPlanes(dim, nPlanes, seed)
-    (0 until nPlanes).map { j =>
-      val lst = planes(j).map(f => f.toDouble.toString).mkString("[", ", ", "]")
-      val dot = s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-        s"list_transform(list_zip($embCol, $lst), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))), " +
-        s"(acc, v) -> acc + v)"
-      s"(CASE WHEN $dot > 0 THEN CAST(${1L << j} AS BIGINT) ELSE 0 END)"
-    }.mkString("(", " + ", ")")
-  }
-
-  /** The corpus_profile enrichment, shared with its HLL approx twin so
-    * the exact and approximate profiles can never silently diverge in
-    * token/hash definitions. */
-  private def profileEnriched(docs: DataFrame): DataFrame =
-    docs.select(col("source"), col("lang"),
-      TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"),
-      md5(col("text")).as("h"))
-
-  /** Deterministic messy-URL synthesis for the Web-op queries (the
-    * corpus has no URL column): consecutive doc pairs share everything
-    * derived from `doc_id div 2`, while the even doc takes uppercase
-    * host + explicit :443 + tracking-params/fragment noise — so after
-    * [[graft.ops.Web.urlNormalize]] exactly the pairs whose query
-    * params survive identically collapse. Mirrored literally by
-    * [[synthUrlSql]]. */
-
-  private def synthUrl: Column = {
-    val k = expr("doc_id div 2")
-    val hostBase = concat(
-      when(k % 3 === 0, lit("cdn.")).otherwise(lit("")),
-      lit("site"), (k % 50).cast("string"),
-      when(k % 5 === 0, lit(".co.uk")).otherwise(lit(".com")))
-    concat(
-      when(col("doc_id") % 2 === 0, lit("HTTPS://")).otherwise(lit("https://")),
-      when(col("doc_id") % 2 === 0, upper(hostBase)).otherwise(hostBase),
-      when(col("doc_id") % 2 === 0, lit(":443")).otherwise(lit("")),
-      lit("/page/"), k.cast("string"),
-      when(col("doc_id") % 4 === 0, lit("?utm_source=x&b=2&a=1"))
-        .when(col("doc_id") % 4 === 1, lit("?a=1&b=2"))
-        .when(col("doc_id") % 4 === 2, lit("?b=2&a=1&fbclid=zz"))
-        .otherwise(lit("")),
-      when(col("doc_id") % 7 === 0, lit("#frag")).otherwise(lit("")))
-  }
-
-  /** DuckDB twin of [[synthUrl]]. */
-  private val synthUrlSql: String =
-    """(CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://' ELSE 'https://' END ||
-      | CASE WHEN doc_id % 2 = 0 THEN upper(hb) ELSE hb END ||
-      | CASE WHEN doc_id % 2 = 0 THEN ':443' ELSE '' END ||
-      | '/page/' || CAST(doc_id // 2 AS VARCHAR) ||
-      | CASE doc_id % 4 WHEN 0 THEN '?utm_source=x&b=2&a=1'
-      |                 WHEN 1 THEN '?a=1&b=2'
-      |                 WHEN 2 THEN '?b=2&a=1&fbclid=zz' ELSE '' END ||
-      | CASE WHEN doc_id % 7 = 0 THEN '#frag' ELSE '' END)""".stripMargin
-
-  /** The `hb` (host-base) CTE column [[synthUrlSql]] consumes. */
-  private val synthHostSql: String =
-    """(CASE WHEN (doc_id // 2) % 3 = 0 THEN 'cdn.' ELSE '' END ||
-      | 'site' || CAST((doc_id // 2) % 50 AS VARCHAR) ||
-      | CASE WHEN (doc_id // 2) % 5 = 0 THEN '.co.uk' ELSE '.com' END)""".stripMargin
-
-  /** Deterministic JSONL fixture for the ingest queries: one JSON
-    * object per document (id/lang/n_chars — fields whose string forms
-    * are engine-identical), with every `doc_id % 7 == 3` line truncated
-    * to 10 chars (never a closing brace → malformed in BOTH engines,
-    * and the cut always severs `lang`, the corruption marker). DuckDB
-    * twin inline in the `ingest_*` oracles. */
-  private def synthJsonl(docs: DataFrame): DataFrame = {
-    val full = concat(
-      lit("{\"id\": "), col("doc_id"),
-      lit(", \"lang\": \""), col("lang"),
-      lit("\", \"nc\": "), col("n_chars"), lit("}"))
-    docs.select(
-      col("doc_id").as("line_no"),
-      (col("doc_id") % 8).as("shard"),
-      when(col("doc_id") % 7 === 3, substring(full, 1, 10)).otherwise(full).as("line"))
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ================= analytics (Catalyst built-ins) =================
-    "q1_pricing_summary" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(cents(col("l_quantity"))).as("sum_qty"),
-          sum(cents(col("l_extendedprice"))).as("sum_base_price"),
-          sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-            .as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    "q6_forecast_revenue" -> ((s, dir) =>
-      // TPC-H Q6: tight-band filter + single agg — the pure predicate-
-      // pushdown showcase (every filter reaches the parquet scan)
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1994-01-01") &&
-          col("l_shipdate") < lit("1995-01-01") &&
-          col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
-        .agg(sum(cents(col("l_extendedprice") * col("l_discount"))).as("revenue_cents"),
-          count(lit(1)).as("n"))),
-
-    "q4_order_priority" -> ((s, dir) => {
-      // TPC-H Q4 (adapted: "late" = shipped >30 days after order date —
-      // this dataset has no commit/receipt dates): EXISTS decorrelates to
-      // a left-semi join whose equi-key (orderkey) carries the non-equi
-      // lateness residual — one shuffle, no subquery re-execution per row
-      val ord = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= lit("1996-01-01") &&
-          col("o_orderdate") < lit("1996-04-01"))
-      val li = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_shipdate"))
-      ord.join(li, col("l_orderkey") === col("o_orderkey") &&
-          col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 30 DAYS"), "leftsemi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("order_count"))
-        .orderBy(col("o_orderpriority"))
-    }),
-
-    "q7_volume_shipping" -> ((s, dir) => {
-      // TPC-H Q7: revenue between two nation pairs by ship year. The two
-      // catalog-sized dims (supplier+nation, customer+nation) broadcast;
-      // lineitem⋈orders is the only shuffle
-      val n1 = Tables.nation(s, dir).select(col("n_nationkey").as("sn_key"), col("n_name").as("supp_nation"))
-      val n2 = Tables.nation(s, dir).select(col("n_nationkey").as("cn_key"), col("n_name").as("cust_nation"))
-      val sup = Tables.supplier(s, dir).join(broadcast(n1), col("s_nationkey") === col("sn_key"))
-      val cus = Tables.customer(s, dir).join(broadcast(n2), col("c_nationkey") === col("cn_key"))
-      Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(cus), col("o_custkey") === col("c_custkey"))
-        .filter((col("supp_nation") === "NATION_1" && col("cust_nation") === "NATION_2") ||
-          (col("supp_nation") === "NATION_2" && col("cust_nation") === "NATION_1"))
-        .withColumn("l_year", year(col("l_shipdate")))
-        .groupBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-        .agg(sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount")))).as("revenue_cents"))
-        .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-    }),
-
-    "q10_returned_items" -> ((s, dir) => {
-      // TPC-H Q10: returned-item revenue per customer, one quarter, top 20.
-      // Aggregate BEFORE joining the customer dim: the groupBy key is
-      // o_custkey, so the heavy lineitem⋈orders rolls up first and only
-      // ~|customers| rows meet the (broadcast) dim join
-      val rev = Tables.lineitem(s, dir).filter(col("l_returnflag") === "R")
-        .join(Tables.orders(s, dir)
-          .filter(col("o_orderdate") >= lit("1995-10-01") && col("o_orderdate") < lit("1996-01-01")),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey"))
-        .agg(sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount")))).as("revenue_cents"))
-      val nat = Tables.nation(s, dir)
-      rev.join(broadcast(Tables.customer(s, dir)), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
-        .select(col("c_custkey"), col("c_name"), col("revenue_cents"), col("n_name"))
-        .orderBy(col("revenue_cents").desc, col("c_custkey"))
-        .limit(20)
-    }),
-
-    "q12_shipping_delay" -> ((s, dir) => {
-      // TPC-H Q12 (adapted: delay bands replace ship modes): per band,
-      // how many high- vs low-priority lines — the CASE-sum pattern;
-      // single lineitem⋈orders shuffle, bands derived post-join
-      Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .withColumn("delay_band",
-          when(datediff(col("l_shipdate"), col("o_orderdate")) > 90, "late")
-            .when(datediff(col("l_shipdate"), col("o_orderdate")) > 30, "slow")
-            .otherwise("fast"))
-        .groupBy(col("delay_band"))
-        .agg(
-          sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L).otherwise(0L))
-            .as("high_line_count"),
-          sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 0L).otherwise(1L))
-            .as("low_line_count"))
-        .orderBy(col("delay_band"))
-    }),
-
-    "q14_promo_effect" -> ((s, dir) =>
-      // TPC-H Q14: promo revenue share for one month. The ratio is
-      // emitted as its two integer-cents terms (numerator/denominator) —
-      // exact under any aggregation order, division left to the reader
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1995-09-01") && col("l_shipdate") < lit("1995-10-01"))
-        .join(broadcast(Tables.part(s, dir)), col("l_partkey") === col("p_partkey"))
-        .agg(
-          sum(when(col("p_type") === "PROMO",
-            cents(col("l_extendedprice") * (lit(1.0) - col("l_discount")))).otherwise(0L))
-            .as("promo_cents"),
-          sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount")))).as("total_cents"))),
-
-    "q16_supplier_cnt" -> ((s, dir) =>
-      // TPC-H Q16 (adapted: lineitem links parts to suppliers — this
-      // dataset has no partsupp): distinct-supplier counts per brand/size
-      // slice; the part dim broadcasts, count(distinct) is the only
-      // aggregate (expands to a two-phase exact distinct)
-      Tables.lineitem(s, dir).select(col("l_partkey"), col("l_suppkey"))
-        .join(broadcast(Tables.part(s, dir)
-          .filter(col("p_brand") =!= "Brand#9" && col("p_type") =!= "PROMO" &&
-            col("p_size").isin(1, 5, 9, 13, 17, 21, 25, 29))),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"), col("p_size"))
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-        .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_size"))),
-
-    "q18_large_volume" -> ((s, dir) => {
-      // TPC-H Q18: orders whose total quantity exceeds 300. The HAVING
-      // subquery and the outer per-order rollup are the SAME aggregation —
-      // computed once, filtered, then joined to the order/customer dims
-      val big = Tables.lineitem(s, dir)
-        .groupBy(col("l_orderkey"))
-        .agg(sum(cents(col("l_quantity"))).as("sum_qty_cents"))
-        .filter(col("sum_qty_cents") > 300 * 100L)
-      big.join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(Tables.customer(s, dir)), col("o_custkey") === col("c_custkey"))
-        .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
-          unix_millis(col("o_orderdate")).as("order_ms"),
-          cents(col("o_totalprice")).cast("long").as("total_cents"),
-          col("sum_qty_cents"))
-        .orderBy(col("total_cents").desc, col("o_orderkey"))
-        .limit(100)
-    }),
-
-    "q19_disjunctive" -> ((s, dir) =>
-      // TPC-H Q19: OR-of-ANDs over joined attributes — the predicate
-      // can't fully push past the join, but each disjunct's part-side
-      // half prunes the broadcast build, and the lineitem quantity
-      // envelope (1..40 across all branches) pushes to the scan
-      Tables.lineitem(s, dir)
-        .join(broadcast(Tables.part(s, dir)), col("l_partkey") === col("p_partkey"))
-        .filter(
-          (col("p_brand") === "Brand#1" && col("p_size").between(1, 15) &&
-            col("l_quantity").between(1, 21)) ||
-          (col("p_brand") === "Brand#13" && col("p_size").between(1, 25) &&
-            col("l_quantity").between(10, 30)) ||
-          (col("p_brand") === "Brand#20" && col("p_size").between(1, 35) &&
-            col("l_quantity").between(20, 40)))
-        .agg(sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount")))).as("revenue_cents"),
-          count(lit(1)).as("n"))),
-
-    "q21_waiting_supplier" -> ((s, dir) => {
-      // TPC-H Q21 (adapted lateness): suppliers who were the ONLY late
-      // supplier on a multi-supplier order. EXISTS/NOT-EXISTS become one
-      // left-semi + one left-anti on the same orderkey — Catalyst plans
-      // all three lineitem passes off a shared scan, keyed shuffles only
-      val li = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-      val late = li
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"))
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val l1 = late.as("l1")
-      val others = li.select(col("l_orderkey").as("o2_key"), col("l_suppkey").as("s2_key"))
-      val lateOthers = late.select(col("l_orderkey").as("o3_key"), col("l_suppkey").as("s3_key"))
-      l1.join(others, col("l1.l_orderkey") === col("o2_key") &&
-          col("l1.l_suppkey") =!= col("s2_key"), "leftsemi")
-        .join(lateOthers, col("l1.l_orderkey") === col("o3_key") &&
-          col("l1.l_suppkey") =!= col("s3_key"), "leftanti")
-        .join(broadcast(Tables.supplier(s, dir)), col("l1.l_suppkey") === col("s_suppkey"))
-        .groupBy(col("s_name"))
-        .agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name"))
-        .limit(50)
-    }),
-
-    "q22_dormant_customers" -> ((s, dir) => {
-      // TPC-H Q22 (adapted: "no orders" → "no orders since 2000" — every
-      // customer here has some order): above-average balance, integer-
-      // exact mean test (bal_cents·n > Σcents avoids the float mean), the
-      // 1-row global stats broadcast-crossed, recent orders anti-joined
-      val cust = Tables.customer(s, dir)
-      val stats = cust.filter(col("c_acctbal") > 0)
-        .agg(sum(cents(col("c_acctbal")).cast("long")).as("pos_sum"),
-          count(lit(1)).as("pos_n"))
-      val recent = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= lit("2000-01-01"))
-        .select(col("o_custkey"))
-      cust.crossJoin(broadcast(stats))
-        .filter(cents(col("c_acctbal")).cast("long") * col("pos_n") > col("pos_sum"))
-        .join(recent, col("c_custkey") === col("o_custkey"), "leftanti")
-        .groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("numcust"),
-          sum(cents(col("c_acctbal")).cast("long")).as("totacctbal_cents"))
-        .orderBy(col("c_nationkey"))
-    }),
-
-    "q8_market_share" -> ((s, dir) => {
-      // TPC-H Q8: NATION_1 suppliers' share of ASIA-customer revenue per
-      // order year, emitted as exact (nation_cents, total_cents) pairs.
-      // Every dim chain (customer→nation→region, supplier→nation)
-      // broadcasts; the only shuffle is the final 2-key agg
-      val asiaCust = Tables.customer(s, dir)
-        .join(broadcast(Tables.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, dir).filter(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("c_custkey"))
-      val suppNation = Tables.supplier(s, dir)
-        .join(broadcast(Tables.nation(s, dir)
-          .select(col("n_nationkey").as("sn_key"), col("n_name").as("supp_nation"))),
-          col("s_nationkey") === col("sn_key"))
-        .select(col("s_suppkey"), col("supp_nation"))
-      Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir)
-          .filter(col("o_orderdate") >= lit("1995-01-01") &&
-            col("o_orderdate") < lit("1997-01-01")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(asiaCust), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(suppNation), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(year(col("o_orderdate")).as("o_year"))
-        .agg(
-          sum(when(col("supp_nation") === "NATION_1",
-            cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-            .otherwise(0L)).as("nation_cents"),
-          sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-            .as("total_cents"))
-        .orderBy(col("o_year"))
-    }),
-
-    "q9_product_profit" -> ((s, dir) =>
-      // TPC-H Q9 (adapted: no partsupp → profit is the discounted
-      // revenue on name-matched parts): per supplier nation and order
-      // year. part/supplier/nation broadcast; one (nation, year) agg
-      Tables.lineitem(s, dir)
-        .join(broadcast(Tables.part(s, dir)
-          .filter(col("p_name").contains("red")).select(col("p_partkey"))),
-          col("l_partkey") === col("p_partkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(Tables.supplier(s, dir)), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(Tables.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name").as("nation"), year(col("o_orderdate")).as("o_year"))
-        .agg(sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-          .as("profit_cents"))
-        .orderBy(col("nation"), col("o_year").desc)),
-
-    "q11_important_stock" -> ((s, dir) => {
-      // TPC-H Q11 (adapted: no partsupp → "stock value" is NATION_2
-      // suppliers' shipped value per part): parts whose value exceeds
-      // 1/1000 of the nation's total. The HAVING-against-a-scalar
-      // subquery is the pattern: a 1-row aggregate broadcast-crossed,
-      // compared division-free (value·1000 > total)
-      val natSupp = Tables.supplier(s, dir)
-        .join(broadcast(Tables.nation(s, dir).filter(col("n_name") === "NATION_2")),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"))
-      val vals = Tables.lineitem(s, dir)
-        .join(broadcast(natSupp), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("l_partkey"))
-        .agg(sum(cents(col("l_extendedprice") * col("l_quantity"))).as("value_cents"))
-      val total = vals.agg(sum(col("value_cents")).as("total_cents"))
-      vals.crossJoin(broadcast(total))
-        .filter(col("value_cents") * 1000 > col("total_cents"))
-        .select(col("l_partkey"), col("value_cents"))
-        .orderBy(col("value_cents").desc, col("l_partkey"))
-    }),
-
-    "q13_order_distribution" -> ((s, dir) => {
-      // TPC-H Q13: customers per order count INCLUDING zero-order
-      // customers — the left outer join is the point (an inner join
-      // silently drops the c_count=0 row); "special" orders excluded
-      val ords = Tables.orders(s, dir)
-        .filter(col("o_orderpriority") =!= "1-URGENT")
-        .select(col("o_custkey"))
-      Tables.customer(s, dir)
-        .join(ords, col("c_custkey") === col("o_custkey"), "left_outer")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_custkey")).as("c_count")) // count(col) skips nulls
-        .groupBy(col("c_count"))
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
-
-    "q15_top_supplier" -> ((s, dir) => {
-      // TPC-H Q15: supplier(s) with max quarterly revenue. The view +
-      // scalar-max subquery collapses to one agg reused twice via a
-      // rank-1 window over an UNPARTITIONED 100-row frame (supplier-
-      // sized, never data-sized — safe at any SF)
-      val rev = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1996-01-01") &&
-          col("l_shipdate") < lit("1996-04-01"))
-        .groupBy(col("l_suppkey"))
-        .agg(sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-          .as("total_revenue_cents"))
-      val w = Window.orderBy(col("total_revenue_cents").desc)
-      rev.withColumn("rk", rank().over(w)).filter(col("rk") === 1).drop("rk")
-        .join(broadcast(Tables.supplier(s, dir)), col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"), col("total_revenue_cents"))
-        .orderBy(col("s_suppkey"))
-    }),
-
-    "q17_small_quantity" -> ((s, dir) => {
-      // TPC-H Q17: revenue from lines whose quantity is below 20% of the
-      // part's average — the correlated AVG subquery becomes a per-part
-      // agg self-join, and the 0.2·avg comparison is cleared of division:
-      // 5·qty·n_part < sum_qty (exact integers, no float mean)
-      val li = Tables.lineitem(s, dir)
-        .join(broadcast(Tables.part(s, dir)
-          .filter(col("p_brand") === "Brand#3").select(col("p_partkey"))),
-          col("l_partkey") === col("p_partkey"))
-      val perPart = li.groupBy(col("p_partkey").as("agg_partkey"))
-        .agg(sum(cents(col("l_quantity")).cast("long")).as("sum_qty_cents"),
-          count(lit(1)).as("n_lines"))
-      li.join(broadcast(perPart), col("p_partkey") === col("agg_partkey"))
-        .filter(cents(col("l_quantity")).cast("long") * lit(5L) * col("n_lines") <
-          col("sum_qty_cents"))
-        .agg(sum(cents(col("l_extendedprice")).cast("long")).as("yearly_cents"))
-    }),
-
-    "q20_dominant_supplier" -> ((s, dir) => {
-      // TPC-H Q20 (adapted: no partsupp availability → a supplier
-      // "dominates" a part when it shipped over half of the part's 1995
-      // volume): division-free 2·supp_qty > part_qty, supplier dim
-      // broadcast, the part-total agg reused via a broadcast join
-      val li95 = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1995-01-01") &&
-          col("l_shipdate") < lit("1996-01-01"))
-        .select(col("l_partkey"), col("l_suppkey"), cents(col("l_quantity")).cast("long").as("qc"))
-      val perPart = li95.groupBy(col("l_partkey").as("pk"))
-        .agg(sum(col("qc")).as("part_qty_cents"))
-      val perSupp = li95.groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(sum(col("qc")).as("supp_qty_cents"))
-      perSupp.join(broadcast(perPart), col("l_partkey") === col("pk"))
-        .filter(col("supp_qty_cents") * 2 > col("part_qty_cents"))
-        .select(col("l_suppkey")).distinct()
-        .join(broadcast(Tables.supplier(s, dir)), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(Tables.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("s_name"), col("n_name"))
-        .orderBy(col("s_suppkey"))
-    }),
-
-    "layout_zorder_key" -> ((s, dir) =>
-      // Z-order clustering key (Delta/Iceberg OPTIMIZE ZORDER analog):
-      // pure shift/mask integer ladder, codegen'd, zero shuffle to
-      // compute — the oracle runs the identical bit arithmetic
-      Tables.events(s, dir)
-        .select(col("event_id"),
-          Layout.mortonKey(col("user_id"), col("event_id"), bits = 16).as("zkey"))
-        .orderBy(col("event_id"))),
-
-    "layout_zorder_extents" -> ((s, dir) => {
-      // layout-quality report: bucket events into the 64 aligned Morton
-      // quadrants of (user_id, value_cents>>8) and measure each bucket's
-      // extent in BOTH dimensions — the numbers a zone map prunes on.
-      // Coordinates are chosen UNWRAPPED (user_id < 256, cents>>8 < 256)
-      // so quadrant membership genuinely bounds both raw columns
-      val vc = floor(col("value") * lit(100.0) + lit(0.5))
-      Layout.zorderExtents(Tables.events(s, dir),
-          col("user_id"), shiftright(vc, 8), bits = 8, quadBits = 3)
-        .orderBy(col("bucket"))
-    }),
-
-    "layout_zonemap_prune" -> ((s, dir) => {
-      // zone-map data skipping, proven lossless: the pruned scan (bucket
-      // min/max intersect → broadcast semi-join → residual filter) must
-      // hash-match the oracle's PLAIN filter over all rows
-      val ev = Tables.events(s, dir)
-        .withColumn("value_cents", floor(col("value") * lit(100.0) + lit(0.5)))
-      val bucket = shiftright(
-        Layout.mortonKey(col("user_id"), shiftright(col("value_cents"), 8), bits = 8), 10)
-      val zm = Layout.zoneMap(ev, bucket, col("value_cents"))
-      Layout.zoneMapPrunedFilter(ev, bucket, col("value_cents"),
-          zm, lit(2000L), lit(3000L))
-        .select(col("event_id"), col("user_id"), col("value_cents"))
-        .orderBy(col("event_id"))
-    }),
-
-    "sample_priority" -> ((s, dir) =>
-      // weighted sampling without replacement (Duffield-Lund-Thorup
-      // priority sampling), deterministic integer instantiation —
-      // u = (keepHash+1)/1e6, priority = w·1e6 div (h+1), top-k
-      Sampling.prioritySample(Tables.documents(s, dir), k = 100, weightCol = "n_chars")
-        .select(col("doc_id"), col("n_chars"), col("priority"))),
-
-    "sample_kcenter" -> ((s, dir) =>
-      // k-center greedy coreset (farthest-point): the diverse-subset
-      // selection a curation pipeline runs AFTER dedup — maximize
-      // coverage, the opposite pressure from near-dup removal. dist is
-      // the squared-L2 coverage radius sequence; sequential-fold double
-      // dots are engine-exact, so the oracle replays all 8 rounds
-      Sampling.kCenterSelect(Tables.embeddingsSpread(s, dir), k = 8)
-        .orderBy(col("rank"))),
-
-    "profile_heavy_hitters" -> ((s, dir) => {
-      // exact heavy hitters via the two-pass hash filter: pass-1 state
-      // is nBuckets rows (NOT key cardinality); the oracle's plain
-      // HAVING twin proves the bounded-memory path loses nothing
-      val toks = Tables.documents(s, dir)
-        .select(explode(split(col("text"), " ")).as("tok"))
-      graft.ops.Profile.heavyHitters(toks, "tok", minCount = 700L, nBuckets = 1 << 12)
-        .orderBy(col("cnt").desc, col("tok"))
-    }),
-
-    "text_boilerplate_remove" -> ((s, dir) =>
-      // CCNet dedup-paragraphs rewrite on 3-token chunks: chunks seen
-      // ≥3 times corpus-wide are cut, survivors reassembled in order
-      TextAnalysis.boilerplateRemove(Tables.documentsSpread(s, dir), width = 3, maxDf = 3)
-        .orderBy(col("doc_id"))),
-
-    "text_blocklist_hits" -> ((s, dir) => {
-      // safety-filter primitive: substring occurrence counts against a
-      // broadcast-free compiled-in blocklist + a keep/flag verdict
-      val terms = Seq("slow", "big table", "vector")
-      val (total, distinctHit) = TextAnalysis.blocklistHits(col("text"), terms)
-      Tables.documentsSpread(s, dir)
-        .select(col("doc_id"), total.as("n_hits"), distinctHit.as("n_terms_hit"),
-          (total * 1000000L / greatest(length(col("text")), lit(1))).cast("long")
-            .as("hit_ppm_per_char"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "pipeline_funnel_report" -> ((s, dir) => {
-      // curation funnel observability: doc counts surviving each stage
-      // (raw → length gate → english → exact dedup → near-dup prune) —
-      // the report every data-pipeline review starts from
-      val docs = Tables.documents(s, dir)
-      val quality = docs.filter(length(col("text")) >= 100)
-      val english = quality.filter(col("lang") === "en")
-      val exact = english.withColumn("__rn",
-          row_number().over(Window.partitionBy(col("text")).orderBy(col("doc_id"))))
-        .filter(col("__rn") === 1).drop("__rn")
-      val pairs = Dedup.jaccardPairs(exact, n = 3, threshold10 = 4)
-      val pruned = exact.join(
-        pairs.select(col("doc_b").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-      def stage(no: Int, name: String, df: DataFrame) =
-        df.agg(count(lit(1)).as("n_docs"))
-          .select(lit(no).as("stage_no"), lit(name).as("stage"), col("n_docs"))
-      stage(1, "raw", docs)
-        .unionByName(stage(2, "min_length", quality))
-        .unionByName(stage(3, "english", english))
-        .unionByName(stage(4, "exact_dedup", exact))
-        .unionByName(stage(5, "neardup_prune", pruned))
-        .orderBy(col("stage_no"))
-    }),
-
-    "q3_shipping_priority" -> ((s, dir) => {
-      val cust = Tables.customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
-      val ord  = Tables.orders(s, dir)
-        .filter(col("o_orderdate") < to_timestamp(lit("1998-01-01")))
-      val li   = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") > to_timestamp(lit("1998-01-01")))
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"),
-          PgConverters.timestampToMillis(col("o_orderdate")).as("order_ms"))
-        .agg(sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(10)
-    }),
-
-    "q5_local_supplier" -> ((s, dir) => {
-      val reg  = Tables.region(s, dir).filter(col("r_name") === "ASIA")
-      val nat  = Tables.nation(s, dir)
-      val cust = Tables.customer(s, dir)
-      val sup  = Tables.supplier(s, dir)
-      val ord  = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= to_timestamp(lit("1996-01-01")) &&
-                col("o_orderdate") < to_timestamp(lit("1997-01-01")))
-      val li   = Tables.lineitem(s, dir)
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey") &&
-                              col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("n_name"))
-        .agg(sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))
-    }),
-
-    "q_window_rank" -> ((s, dir) => {
-      val w1 = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      val w2 = Window.partitionBy(col("o_custkey")).orderBy(col("o_totalprice").desc)
-      Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderkey"),
-          row_number().over(w1).as("rn"), rank().over(w2).as("rnk"))
-        .filter(col("rn") <= 3)
-        .orderBy(col("o_custkey"), col("rn"))
-    }),
-
-    "q_geo_radius_join" -> ((s, dir) => {
-      // 2-D radius join via grid binning: users × stores within 25k
-      // micro-units — the oracle recomputes by ALL-PAIRS distance, so
-      // the hash match proves the 3×3-cell candidate set is complete
-      val users = Cdc.walEvents(s, dir).select(col("user_id")).distinct()
-        .select(col("user_id"),
-          expr("(user_id * 37) % 1000 * 1000").as("lat_m"),
-          expr("(user_id * 91 + 13) % 1000 * 1000").as("lon_m"))
-      val stores = Tables.supplier(s, dir)
-        .select(col("s_suppkey"),
-          expr("(s_suppkey * 53) % 1000 * 1000").as("lat_m"),
-          expr("(s_suppkey * 17 + 7) % 1000 * 1000").as("lon_m"))
-      ops.RangeJoin.geoRadiusJoin(users, stores, radius = 25000L)
-        .select(col("user_id"), col("s_suppkey"),
-          col("lat_m"), col("lon_m"), col("b_lat_m"), col("b_lon_m"))
-        .orderBy(col("user_id"), col("s_suppkey"))
-    }),
-
-    "q_window_range_frame" -> ((s, dir) => {
-      // RANGE (value-based) frame — the window class rows-frames can't
-      // express: per-user rolling 24h event count + micro-value sum
-      // over the ts_ms ORDER key itself; one shuffle on user_id
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_ms"))
-        .rangeBetween(-86400000L + 1, Window.currentRow)
-      Cdc.walEvents(s, dir)
-        .select(col("user_id"), col("lsn"), col("ts_ms"),
-          count(lit(1)).over(w).as("n_24h"),
-          sum(expr("cast(floor(value * 1000000 + 0.5) as bigint)")).over(w)
-            .as("sum_micros_24h"))
-        .orderBy(col("lsn"))
-    }),
-
-    "q_window_running" -> ((s, dir) => {
-      // frame spec: per-customer running revenue + lead/lag deltas
-      val w = Window.partitionBy(col("o_custkey")).orderBy(col("o_orderkey"))
-      Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderkey"),
-          sum(cents(col("o_totalprice")))
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .as("running_total"),
-          lag(col("o_orderkey"), 1).over(w).as("prev_order"),
-          lead(col("o_orderkey"), 1).over(w).as("next_order"))
-        .orderBy(col("o_custkey"), col("o_orderkey"))
-    }),
-
-    "q_string_funcs" -> ((s, dir) => {
-      Tables.part(s, dir)
-        .select(col("p_partkey"),
-          upper(col("p_name")).as("uname"),
-          length(trim(col("p_name"))).as("nlen"),
-          substring(col("p_brand"), 1, 5).as("brand5"),
-          regexp_replace(col("p_type"), "[aeiou]", "_").as("devoweled"),
-          levenshtein(col("p_brand"), col("p_type")).as("dist"))
-        .orderBy(col("p_partkey"))
-    }),
-
-    "q_date_funcs" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .select(col("o_orderkey"),
-          year(col("o_orderdate")).as("y"),
-          month(col("o_orderdate")).as("m"),
-          dayofmonth(col("o_orderdate")).as("d"),
-          PgConverters.timestampToMillis(date_trunc("month", col("o_orderdate")))
-            .as("month_start_ms"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    "q_topk_orders" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .select(col("o_orderkey"), cents(col("o_totalprice")).as("total"))
-        .orderBy(col("total").desc, col("o_orderkey"))
-        .limit(20)
-    }),
-
-    "q_semi_join" -> ((s, dir) => {
-      // customers with at least one 1996 order (left_semi ≙ EXISTS)
-      val ord96 = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= to_timestamp(lit("1996-01-01")) &&
-                col("o_orderdate") < to_timestamp(lit("1997-01-01")))
-      Tables.customer(s, dir)
-        .join(ord96, col("c_custkey") === col("o_custkey"), "left_semi")
-        .select(col("c_custkey"), col("c_mktsegment"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    "q_rollup_revenue" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(cents(col("l_quantity"))).as("sum_qty"), count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-    }),
-
-    "q_cube_events" -> ((s, dir) =>
-      // the full grouping-sets lattice (CUBE) + grouping_id — the §2.4
-      // "Catalyst built-ins" claim made checkable: one expand+agg, the
-      // 4 grouping sets share a single shuffle
-      Cdc.walEvents(s, dir)
-        .cube(col("event_type"), expr("user_id div 20").as("user_band"))
-        .agg(count(lit(1)).as("n"),
-          sum(expr("cast(floor(value * 1000000 + 0.5) as bigint)")).as("sum_micros"),
-          grouping_id().as("gid"))
-        .orderBy(col("gid"), col("event_type").asc_nulls_first,
-          col("user_band").asc_nulls_first)),
-
-    "q_pivot_events" -> ((s, dir) => {
-      // PIVOT with an explicit value list (the only scale-sane form —
-      // an implicit list means a distinct scan before planning): one
-      // groupBy shuffle on user_id, absent cells coalesced to 0
-      val kinds = Seq("click", "error", "purchase", "signup", "view")
-      val p = Cdc.walEvents(s, dir)
-        .groupBy(col("user_id"))
-        .pivot("event_type", kinds)
-        .agg(count(lit(1)))
-      p.select(col("user_id") +:
-          kinds.map(k => coalesce(col(k), lit(0L)).as(s"n_$k")): _*)
-        .orderBy(col("user_id"))
-    }),
-
-    "q_min_cost_supplier" -> ((s, dir) => {
-      // scalar-subquery shape: per nation, the supplier(s) with minimal
-      // account balance (correlated min via join-back)
-      val sup = Tables.supplier(s, dir)
-      val mins = sup.groupBy(col("s_nationkey").as("nk"))
-        .agg(min(col("s_acctbal")).as("min_bal"))
-      sup.join(broadcast(mins),
-          col("s_nationkey") === col("nk") && col("s_acctbal") === col("min_bal"))
-        .select(col("s_nationkey"), col("s_suppkey"), col("s_name"))
-        .orderBy(col("s_nationkey"), col("s_suppkey"))
-    }),
-
-    "q_quantiles" -> ((s, dir) => {
-      // exact interpolated quantiles (continuous definition, both engines)
-      Tables.orders(s, dir)
-        .agg(
-          count_distinct(col("o_custkey")).as("n_customers"),
-          expr("percentile(o_totalprice, 0.5)").as("p50"),
-          expr("percentile(o_totalprice, 0.9)").as("p90"))
-    }),
-
-    "q_quantiles_approx" -> ((s, dir) => {
-      // the documented 100 TB path for q_quantiles: quantile-sketch agg
-      // (bounded state, mergeable) instead of exact percentile's
-      // hold-all-values state; no SQL oracle (sketch ≠ bit-exact) —
-      // OpsSpec bounds its error against the exact result.
-      // count_distinct stays in its OWN aggregation: a distinct agg
-      // mixed with a TypedImperativeAggregate forces sort-based agg with
-      // per-row sketch (de)serialization (~10× slower); two single-row
-      // aggs + cross join keep both hash-aggregated.
-      val o = Tables.orders(s, dir)
-      val sketch = o.agg(
-        expr("approx_percentile(o_totalprice, 0.5, 10000)").as("p50"),
-        expr("approx_percentile(o_totalprice, 0.9, 10000)").as("p90"))
-      // driver-checkable sketch gate (r8 advice: shrink the rows-only
-      // set): re-rank the sketch estimates against the data and emit
-      // BOUND BOOLEANS — approx_percentile guarantees rank error
-      // <= n/accuracy, so the oracle states `true` and a drifting sketch
-      // turns the hash red. The extra pass is gate-only arithmetic; the
-      // production operator remains the single sketch aggregation.
-      val ranked = o.crossJoin(broadcast(sketch)).agg(
-        count(lit(1)).as("n"),
-        sum(when(col("o_totalprice") <= col("p50"), 1L).otherwise(0L)).as("r50"),
-        sum(when(col("o_totalprice") <= col("p90"), 1L).otherwise(0L)).as("r90"))
-        .select(
-          (abs(col("r50") * 20000 - col("n") * 10000) <= col("n") * 2 + 20000).as("p50_rank_ok"),
-          (abs(col("r90") * 10000 - col("n") * 9000) <= col("n") + 10000).as("p90_rank_ok"))
-      o.agg(count_distinct(col("o_custkey")).as("n_customers")).crossJoin(broadcast(ranked))
-    }),
-
-    "q_except_customers" -> ((s, dir) => {
-      Tables.customer(s, dir).select(col("c_custkey"))
-        .except(Tables.orders(s, dir).select(col("o_custkey").as("c_custkey")))
-        .orderBy(col("c_custkey"))
-    }),
-
-    "q_intersect_users" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      ev.filter(col("event_type") === "purchase").select(col("user_id"))
-        .intersect(ev.filter(col("event_type") === "error").select(col("user_id")))
-        .orderBy(col("user_id"))
-    }),
-
-    // ================= CDC operator suite (SURVEY §2) =================
-    "cdc_envelope" -> ((s, dir) => {
-      Cdc.walEvents(s, dir)
-        .select(
-          col("lsn"), col("xid"), col("op"), col("ts_ms"),
-          col("schema_name"), col("table_name"),
-          Envelope.topicName("graft", col("schema_name"), col("table_name")).as("topic"),
-          col("event_id"), col("user_id"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_pgoutput_decode" -> ((s, dir) =>
-      // S1/S2 closed end-to-end: events → binary pgoutput segment blobs
-      // (Relation/Begin/DML/Message/Commit wire frames) → executor-side
-      // byte decode → the same envelope columns the parquet path yields.
-      // Every tuple value round-trips THROUGH protocol text format.
-      graft.cdc.PgOutput.decodeGate(s, dir).orderBy(col("lsn"))),
-
-    "cdc_pgoutput_binary" -> ((s, dir) =>
-      // the same end-to-end chain in BINARY tuple format (`binary
-      // 'true'`, requested by the reference on PG14+): network-order
-      // send-function bytes through the registry codecs must land on
-      // the identical envelope rows
-      graft.cdc.PgOutput.decodeGate(s, dir, binary = true).orderBy(col("lsn"))),
-
-    "cdc_wire_marker_suppress" -> ((s, dir) => {
-      // the 2.12+ marker flow END-TO-END ON THE WIRE: real
-      // ::timescaledb-decompression-start/end logical-message FRAMES
-      // ride the pgoutput bytes (transactiontracker.go:33-34), the
-      // byte decode surfaces their prefix for free (msg_prefix), and
-      // the same prefix-gated suppression that runs on the parquet
-      // fixture drops exactly the bracketed physical re-INSERTs
-      val wal = graft.cdc.PgOutput.decodeSegments(
-          graft.cdc.PgOutput.segmentsSpread(s, dir,
-            graft.cdc.PgOutput.encodeSegments(Tables.events(s, dir),
-              markerTxns = true))).toDF()
-        .withColumn("op",
-          when(col("op_wire") === "I", lit("c")).otherwise(col("op_wire")))
-      Cdc.markerSuppressPrefixed(wal)
-        .select(col("lsn"), col("xid"), col("op_wire"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_schema_evolution" -> ((s, dir) => {
-      // T9 in flight: a mid-WAL ALTER TABLE ADD COLUMN — the fixture
-      // re-announces the relation with a new `score int8` column halfway
-      // through the stream (the Relation message PG emits after DDL);
-      // the dynamic decode carries both shapes through ONE stream and
-      // resolveBatch widens them (pre-DDL rows NULL score) without a
-      // restart — the reference's ApplySchemaUpdate, per-batch
-      val ev = Tables.events(s, dir)
-      val boundary = ev.agg(max(col("event_id"))).head.getLong(0) / 2 + 1
-      // pin the wire decode: resolveBatch runs two driver-sized census
-      // collects before the typed projection, so an unpinned lineage
-      // would replay the encode+decode flatMap three times (guide §1.2 —
-      // don't recompute what you already computed)
-      val wide = graft.streaming.SchemaEvolution.resolveBatch(
-        graft.cdc.PgOutput.decodeRowsDynamic(
-          graft.cdc.PgOutput.segmentsSpread(s, dir,
-            graft.cdc.PgOutput.encodeSegmentsEvolving(ev, boundary))).toDF()
-          .localCheckpoint(true))
-      wide.select(col("lsn"), col("op_wire").as("op"),
-          col("event_id"), col("user_id"), col("event_type"),
-          expr("cast(floor(value * 100 + 0.5) as bigint)").as("value_cents"),
-          col("props"), col("score"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_schema_evolution_schema" -> ((s, dir) => {
-      // the self-describing {schema} block across the DDL (verdict-15
-      // #6): each micro-batch's envelopes carry the schema JSON rebuilt
-      // from THAT batch's resolved field set — pre-DDL batches describe
-      // the old shape, post-DDL batches the widened one (the
-      // reference's ApplySchemaUpdate rebuilds per-table schemas and
-      // every later envelope embeds the new block). Two batches split
-      // at the boundary model the committed batch sequence.
-      val ev = Tables.events(s, dir)
-      val boundary = ev.agg(max(col("event_id"))).head.getLong(0) / 2 + 1
-      // pinned: BOTH arms filter this frame, and each resolveBatch adds
-      // two census collects — unpinned, the encode+decode flatMap would
-      // replay six times (guide §1.2)
-      val dyn = graft.cdc.PgOutput.decodeRowsDynamic(
-        graft.cdc.PgOutput.segmentsSpread(s, dir,
-          graft.cdc.PgOutput.encodeSegmentsEvolving(ev, boundary))).toDF()
-        .localCheckpoint(true)
-      def arm(batch: org.apache.spark.sql.DataFrame) = {
-        val wide = graft.streaming.SchemaEvolution.resolveBatch(batch)
-        wide.select(col("lsn"), col("event_id"),
-          lit(graft.streaming.SchemaEvolution.envelopeSchemaJsonFor(
-            wide, "graft.public.events")).as("schema_json"))
-      }
-      arm(dyn.filter(col("lsn") < boundary))
-        .unionByName(arm(dyn.filter(col("lsn") >= boundary)))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_schema_evolution_type" -> ((s, dir) => {
-      // T9's nastiest in-flight case: mid-WAL ALTER COLUMN TYPE —
-      // user_id re-announces as text (oid 25) with 'u'-prefixed values
-      // halfway through the stream. resolveBatch keys schema versions
-      // on (name, oid), casts each row by the version it ARRIVED under
-      // (the row's own col_oids), and widens to the common supertype
-      // last — so pre-DDL longs render as decimal text and post-DDL
-      // text rides verbatim. A name-keyed first-seen-type union (the
-      // r15 bug) would cast 'u123' with the stale int8 plan and
-      // silently NULL every post-DDL value — this gate hash-fails that.
-      val ev = Tables.events(s, dir)
-      val boundary = ev.agg(max(col("event_id"))).head.getLong(0) / 2 + 1
-      // pinned for the same reason as cdc_schema_evolution: three
-      // lineage replays of the wire encode+decode otherwise
-      val wide = graft.streaming.SchemaEvolution.resolveBatch(
-        graft.cdc.PgOutput.decodeRowsDynamic(
-          graft.cdc.PgOutput.segmentsSpread(s, dir,
-            graft.cdc.PgOutput.encodeSegmentsRetyping(ev, boundary))).toDF()
-          .localCheckpoint(true))
-      wide.select(col("lsn"), col("op_wire").as("op"),
-          col("event_id"), col("user_id"), col("event_type"),
-          expr("cast(floor(value * 100 + 0.5) as bigint)").as("value_cents"),
-          col("props"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_pgoutput_txn" -> ((s, dir) => {
-      // transaction boundaries RECOVERED FROM THE WIRE: xid attachment
-      // happens inside the per-segment decode loop (Begin sets it,
-      // Commit clears it — `xlogdecoder.go:38-48`), so grouping the
-      // decoded rows by xid must reproduce the exact txn windows the
-      // parquet path derives arithmetically
-      val wal = graft.cdc.PgOutput.decodeSegments(
-        graft.cdc.PgOutput.segmentsSpread(s, dir,
-          graft.cdc.PgOutput.encodeSegments(Tables.events(s, dir))))
-      wal.groupBy(col("xid"))
-        .agg(count(lit(1)).as("n_events"),
-          min(col("lsn")).as("first_lsn"), max(col("lsn")).as("last_lsn"))
-        .orderBy(col("xid"))
-    }),
-
-    "cdc_toast_omit" -> ((s, dir) =>
-      // unchanged-TOAST elision end-to-end: every 3rd update's props
-      // column rides the wire as 'u' (PG never read the TOASTed value);
-      // the decoded envelope must OMIT the key — not render null — and
-      // the gate parses the rendered JSON back to prove key absence
-      // (`decoderplan.go:54-59`)
-      graft.cdc.PgOutput.toastGate(s, dir, toastEvery = 3)),
-
-    "cdc_update_before" -> ((s, dir) =>
-      // REPLICA IDENTITY FULL old tuples: every update's before surface
-      // decodes COMPLETE off the wire — including updates whose new
-      // tuple elided props as unchanged TOAST ('u'); before carries the
-      // value the after key omitted
-      graft.cdc.PgOutput.beforeGate(s, dir, toastEvery = 3)),
-
-    "cdc_pgoutput_envelope" -> ((s, dir) =>
-      // the wire path's full Debezium payload: before from the decoded
-      // OLD tuple, after with unchanged-TOAST keys omitted, source block
-      // with textual LSN — gated by re-parsing the rendered JSON
-      // (json_object_keys proves key absence on the envelope text)
-      graft.cdc.PgOutput.envelopeGate(s, dir, toastEvery = 3)),
-
-    "cdc_op_gates" -> ((s, dir) => {
-      Cdc.opGate(Seq(Envelope.Op.Create, Envelope.Op.Update, Envelope.Op.Delete))(
-        Cdc.walEvents(s, dir))
-        .select(col("lsn"), col("op"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_chunk_resolution" -> ((s, dir) => {
-      val resolved = Cdc.resolveHypertable(
-        Cdc.walEvents(s, dir), Cdc.chunkCatalog(s, dir), Cdc.hypertableCatalog(s))
-      resolved.groupBy(col("chunk_name"), col("ht_table"))
-        .agg(count(lit(1)).as("n_events"), min(col("lsn")).as("min_lsn"), max(col("lsn")).as("max_lsn"))
-        .orderBy(col("chunk_name"))
-    }),
-
-    "cdc_high_watermark" -> ((s, dir) => {
-      Cdc.highWatermark(Cdc.walEvents(s, dir), Seq("event_id"))
-        .select(col("event_id"), col("ts_ms"))
-    }),
-
-    "cdc_tombstones" -> ((s, dir) => {
-      Cdc.withTombstones(Cdc.walEvents(s, dir))
-        .select(col("lsn"), col("op"), col("is_tombstone"))
-        .orderBy(col("lsn"), col("is_tombstone"))
-    }),
-
-    "cdc_txn_boundaries" -> ((s, dir) => {
-      Cdc.txnBoundaries(Cdc.walEvents(s, dir)).orderBy(col("xid"))
-    }),
-
-    "cdc_snapshot_batch" -> ((s, dir) => {
-      Cdc.snapshotBatch(Cdc.walEvents(s, dir), "event_id", 100, 600, 200)
-        .select(col("lsn"), col("op"), col("ts_ms"))
-    }),
-
-    "cdc_snapshot_fence" -> ((s, dir) => {
-      Cdc.snapshotWithFence(Cdc.walEvents(s, dir), 500)
-        .select(col("lsn"), col("op"), col("snapshot"))
-        .orderBy(col("lsn"), col("snapshot"))
-    }),
-
-    "cdc_jdbc_snapshot" -> ((s, dir) => {
-      // the LIVE-SOURCE path, driver-gated: events loaded once per JVM
-      // into an in-JVM Derby database, then snapshotted through the real
-      // JDBC side channel (fenced keyset predicates → parallel
-      // spark.read.jdbc partitions) and shaped by the SAME shapeWal the
-      // file path uses — the oracle reads the parquet directly, so a
-      // hash match proves the whole JDBC round-trip is lossless
-      val url = graft.sources.JdbcSideChannel.derbyEventsUrl(s, dir)
-      val (snap, _) = graft.sources.JdbcSideChannel.snapshot(
-        s, url, "APP", "EVENTS", "EVENT_ID", lowWatermark = Some(-1L), parts = 8)
-      val lowered = snap.columns.foldLeft(snap)((d, c) =>
-        d.withColumnRenamed(c, c.toLowerCase))
-      Cdc.shapeWal(lowered)
-        .select(col("lsn"), col("xid"), col("op"), col("ts_ms"),
-          col("event_id"), col("user_id"),
-          expr("cast(floor(value * 100 + 0.5) as bigint)").as("value_cents"),
-          col("props"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_decomp_suppress" -> ((s, dir) => {
-      Cdc.decompressionSuppress(Cdc.walEvents(s, dir))
-        .select(col("lsn"), col("xid"), col("op"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_publication_antijoin" -> ((s, dir) => {
-      val known = Cdc.chunkCatalog(s, dir)
-      val published = known.filter(col("chunk_day") < 10).select(col("chunk_name"))
-      Cdc.publicationAntiJoin(known, published)
-        .select(col("chunk_name"))
-        .orderBy(col("chunk_name"))
-    }),
-
-    "cdc_scroll_snapshot" -> ((s, dir) => {
-      // SCROLL-cursor chunk snapshot: per-chunk FETCH FORWARD batches,
-      // resumed from batch 1 (sidechannel.go:838-905)
-      Cdc.snapshotScrollCursor(Cdc.walEvents(s, dir).select("lsn", "chunk_day", "event_id"),
-          chunkCol = "chunk_day", orderCol = "event_id",
-          fetchSize = 100, resumeFromBatch = 1L)
-        .select(col("chunk_day"), col("batch_no"), col("event_id"))
-        .orderBy(col("chunk_day"), col("batch_no"), col("event_id"))
-    }),
-
-    "cdc_publication_lifecycle" -> ((s, dir) => {
-      // replicator.go:352-427 startup partition: which chunks and which
-      // vanilla tables still need ALTER PUBLICATION ADD TABLE, given a
-      // pre-existing published set spanning internal + public schemas
-      import s.implicits._
-      val chunkKnown = Cdc.chunkCatalog(s, dir)
-        .select(col("chunk_schema").as("schema_name"), col("chunk_name").as("table_name"))
-      val vanillaKnown = Seq(("public", "events"), ("public", "users"), ("public", "cagg_view"))
-        .toDF("schema_name", "table_name")
-      val published = Seq(
-        ("_timescaledb_internal", "_hyper_1_3_chunk"),
-        ("_timescaledb_internal", "_hyper_1_5_chunk"),
-        ("public", "events"),
-        ("_timescaledb_catalog", "hypertable")).toDF("schema_name", "table_name")
-      graft.catalog.PublicationManager.chunksToAttach(chunkKnown, published)
-        .withColumn("kind", lit("chunk"))
-        .unionByName(graft.catalog.PublicationManager
-          .vanillaTablesToAttach(vanillaKnown, published).withColumn("kind", lit("vanilla")))
-        .select(col("kind"), col("schema_name"), col("table_name"))
-        .orderBy(col("kind"), col("schema_name"), col("table_name"))
-    }),
-
-    "cdc_table_filter" -> ((s, dir) => {
-      val tf = TableFilter(Seq("public.events_1?"), Seq("public.events_13"))
-      Tables.events(s, dir)
-        .select(concat(lit("public.events_"), col("user_id")).as("tbl")).distinct()
-        .filter(tf.includeRegexes.map(col("tbl").rlike).reduce(_ || _) &&
-                !tf.excludeRegexes.map(col("tbl").rlike).reduce(_ || _))
-        .orderBy(col("tbl"))
-    }),
-
-    "cdc_distinct_ops" -> ((s, dir) => {
-      Cdc.distinctTables(Cdc.walEvents(s, dir), Seq("chunk_day", "op"))
-        .select(col("chunk_day"), col("op"))
-        .orderBy(col("chunk_day"), col("op"))
-    }),
-
-    // ============ type conversion layer (SURVEY §1.2) ============
-    "conv_timestamp_millis" -> ((s, dir) => {
-      Tables.sortedSpread(s, dir, "lineitem", Tables.lineitem(s, dir), col("l_orderkey"), col("l_linenumber"))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          PgConverters.timestampToMillis(col("l_shipdate")).as("ship_ms"))
-    }),
-
-    "conv_timestamptz_text" -> ((s, dir) => {
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"), PgConverters.timestamptzNanosToText("ts").as("ts_text"))
-    }),
-
-    "conv_time_text" -> ((s, dir) => {
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          PgConverters.timeToText(timestamp_micros(expr("ts div 1000"))).as("time_text"))
-    }),
-
-    "conv_date_days" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .select(col("o_orderkey"), PgConverters.dateToDays(col("o_orderdate")).as("order_days"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    "conv_interval_micros" -> ((s, dir) => {
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          PgConverters.intervalToMicros(col("user_id"), expr("event_id % 30"),
-            expr("(ts % 1000000000) div 1000")).as("interval_us"))
-    }),
-
-    "conv_numeric_double" -> ((s, dir) => {
-      Tables.sortedSpread(s, dir, "lineitem", Tables.lineitem(s, dir), col("l_orderkey"), col("l_linenumber"))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          PgConverters.numericToDouble(col("l_extendedprice")).as("num_val"))
-    }),
-
-    "conv_bytea_hex" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          PgConverters.byteaToHex(substring(col("text"), 1, 16).cast("binary")).as("hex16"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "conv_json_extract" -> ((s, dir) => {
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"), PgConverters.jsonGet(col("props"), "$.k").as("k_val"))
-    }),
-
-    "conv_bits_string" -> ((s, dir) => {
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          PgConverters.bitsToString(expr("user_id % 256"), 8).as("bits"))
-    }),
-
-    "conv_range_string" -> ((s, dir) => {
-      // int8range [event_id, event_id+10)
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          PgConverters.rangeToString(col("event_id"), col("event_id") + 10).as("range_text"))
-    }),
-
-    "conv_point_string" -> ((s, dir) => {
-      // point from (user_id, chunk-local second); integer-valued to keep
-      // numeric text rendering engine-independent
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          PgConverters.pointToText(col("user_id"), expr("(ts % 1000000000) div 1000000"))
-            .as("point_text"))
-    }),
-
-    "conv_numrange_path" -> ((s, dir) => {
-      // numrange text with decimal bounds rendered from integer cents
-      // (engine-independent: no float-to-string), plus the open `path`
-      // form [(x,y),...] completing the geometry family
-      val loC = col("user_id") * 100 + 50
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          PgConverters.rangeToString(decimalCentsText(loC), decimalCentsText(loC + 125)).as("numrange_text"),
-          PgConverters.pathToText(closed = false,
-            (col("user_id"), pmod(col("event_id"), lit(100))),
-            (col("user_id") + 2, pmod(col("event_id"), lit(100)) + 3)).as("path_text"))
-    }),
-
-    "conv_uuid_string" -> ((s, dir) => {
-      // uuid canonical 8-4-4-4-12 text (builtin_converters.go:300-318);
-      // hex source synthesized deterministically via md5
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          PgConverters.uuidFromHex32(md5(col("event_id").cast("string"))).as("uuid_text"))
-    }),
-
-    "conv_inet_string" -> ((s, dir) => {
-      // inet/cidr v4 + v6 text passthrough (README type table)
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          PgConverters.textPassthrough(concat(lit("10."), pmod(col("user_id"), lit(256)),
-            lit("."), pmod(col("event_id"), lit(256)), lit(".1/24"))).as("cidr4"),
-          PgConverters.textPassthrough(concat(lit("fe80::"),
-            lower(hex(pmod(col("user_id"), lit(65536)))))).as("inet6"))
-    }),
-
-    "conv_macaddr_string" -> ((s, dir) => {
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          PgConverters.macaddrToText(col("event_id") * 65536 + col("user_id")).as("mac"),
-          PgConverters.macaddr8ToText(col("event_id") * 4294967296L + col("user_id")).as("mac8"))
-    }),
-
-    "conv_enum_string" -> ((s, dir) => {
-      // enum2string with the allowed-values list as column metadata
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          PgConverters.enumToString(col("event_type"),
-            Seq("signup", "purchase", "error", "view", "click")).as("enum_val"))
-    }),
-
-    "conv_composite_json" -> ((s, dir) => {
-      // composite → STRUCT (typemanager.go:419-430); JSON-rendered so the
-      // driver comparator can hash it
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          to_json(PgConverters.compositeToStruct(
-            "user_id" -> col("user_id"), "kind" -> col("event_type"))).as("comp_json"))
-    }),
-
-    "conv_hstore_text" -> ((s, dir) => {
-      // hstore → MAP(string,string); keys/values re-emitted as strings
-      val hsJson = concat(lit("{\"a\":\""), col("user_id"),
-        lit("\",\"b\":\""), pmod(col("event_id"), lit(10)), lit("\"}"))
-      val m = PgConverters.hstoreToMap(hsJson)
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          array_join(map_keys(m), ",").as("hs_keys"),
-          array_join(map_values(m), ",").as("hs_vals"))
-    }),
-
-    "conv_uint32_long" -> ((s, dir) => {
-      // oid/xid/cid: top-bit-set uint32s must not surface negative
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          PgConverters.uint32ToLong(
-            expr("CAST((event_id * 2654435761) % 4294967296 - 2147483648 AS INT)")).as("uval"))
-    }),
-
-    "conv_scalar_widths" -> ((s, dir) => {
-      // int2 / float4 / boolean width mappings
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          pmod(col("user_id"), lit(32768)).cast("smallint").as("i16"),
-          col("value").cast("float").cast("double").as("f4d"),
-          (pmod(col("event_id"), lit(2)) === 0).as("is_even"))
-    }),
-
-    "conv_tsrange_string" -> ((s, dir) => {
-      // tsrange canonical [lo,hi) over RFC3339 text bounds
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          PgConverters.rangeToString(
-            PgConverters.timestamptzNanosToText("ts"),
-            PgConverters.timestamptzNanosToText("(ts + 3600000000000)")).as("tsrange_text"))
-    }),
-
-    "conv_daterange_string" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .select(col("o_orderkey"),
-          PgConverters.rangeToString(
-            date_format(col("o_orderdate"), "yyyy-MM-dd"),
-            date_format(date_add(to_date(col("o_orderdate")), 30), "yyyy-MM-dd"))
-            .as("daterange_text"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    "conv_geo_shapes" -> ((s, dir) => {
-      // box, line, lseg, circle, polygon text forms (integer coords keep
-      // numeric rendering engine-independent)
-      val u = col("user_id"); val m = pmod(col("event_id"), lit(100))
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          PgConverters.boxToText(u, m, u + 10, m + 10).as("box_text"),
-          PgConverters.lineToText(u, pmod(col("event_id"), lit(7)) + 1, lit(3)).as("line_text"),
-          PgConverters.lsegToText(u, m, u + 5, m + 5).as("lseg_text"),
-          PgConverters.circleToText(u, m, lit(7)).as("circle_text"),
-          PgConverters.polygonToText((u, m), (u + 1, m), (u, m + 1)).as("poly_text"))
-    }),
-
-    "conv_postgis" -> ((s, dir) => {
-      // PostGIS geometry/geography → STRUCT {wkb: base64, srid}
-      // (builtin_converters.go:102-143, schemabuilder.go:185-195).
-      // WKB coordinates use the exact-mantissa trick: double(2^52 + v)
-      // has IEEE-754 bits 0x4330000000000000 + v, so big-endian WKB hex
-      // is pure integer arithmetic replicable in any engine. The 5-point
-      // linestring is 89 WKB bytes — past the MIME encoder's 57-byte
-      // line break, proving base64Std parity for long content.
-      val mant = lit(4841369599423283200L)
-      def coordHex(v: Column) = hex(mant + v)
-      val x = pmod(col("user_id"), lit(1000))
-      val y = pmod(col("event_id"), lit(100))
-      val pointWkb = unhex(concat(lit("0000000001"), coordHex(x), coordHex(y)))
-      val pts = (0 until 5).flatMap(i => Seq(coordHex(x + i), coordHex(y + i)))
-      val lineWkb = unhex(concat((lit("000000000200000005") +: pts): _*))
-      val geom = PgConverters.postgisToStruct(pointWkb, lit(4326))
-      val geog = PgConverters.postgisToStruct(lineWkb, lit(3857))
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          to_json(geom).as("geom_point"),
-          to_json(geog).as("geog_line"),
-          to_json(array(geom, geog)).as("geom_arr"))
-    }),
-
-    "conv_ltree_xml_char" -> ((s, dir) => {
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          PgConverters.textPassthrough(concat(lit("root.u"), col("user_id"),
-            lit(".e"), pmod(col("event_id"), lit(10)))).as("ltree_path"),
-          PgConverters.textPassthrough(concat(lit("<e id=\""), col("event_id"),
-            lit("\"/>"))).as("xml_text"),
-          substring(col("event_type"), 1, 1).as("qchar"),
-          PgConverters.bpcharPad(col("event_type"), 12).as("bp12"))
-    }),
-
-    "conv_timetz_text" -> ((s, dir) => {
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          PgConverters.timetzToText(timestamp_micros(expr("ts div 1000"))).as("timetz_text"))
-    }),
-
-    "conv_interval_negative" -> ((s, dir) => {
-      // negative month/day components — Go int64 micros arithmetic is
-      // sign-agnostic (builtin_converters.go:350-360)
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          PgConverters.intervalToMicros(col("user_id") - 100,
-            expr("event_id % 30 - 15"),
-            expr("(ts % 1000000000) div 1000")).as("interval_us"))
-    }),
-
-    "conv_numeric_edges" -> ((s, dir) => {
-      // numeric magnitudes: tiny / huge / repeating-fraction doubles;
-      // single IEEE ops (correctly rounded) keep engines bit-identical
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          (col("event_id") / 1000.0).as("small_val"),
-          (col("event_id") * 1000000000000.0).as("big_val"),
-          (-(col("event_id") / 7.0)).as("frac_val"))
-    }),
-
-    "conv_array_long" -> ((s, dir) => {
-      // arrayOf lifts the uint32 converter over elements (incl. negatives)
-      val arr = array(
-        pmod(col("user_id"), lit(100)).cast("int") - 50,
-        pmod(col("event_id"), lit(97)).cast("int") - 48)
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          array_join(transform(PgConverters.arrayOf(PgConverters.uint32ToLong)(arr),
-            _.cast("string")), ",").as("arr_vals"))
-    }),
-
-    "conv_array_date_days" -> ((s, dir) => {
-      val arr = array(to_date(col("o_orderdate")), date_add(to_date(col("o_orderdate")), 10))
-      Tables.orders(s, dir)
-        .select(col("o_orderkey"),
-          array_join(transform(PgConverters.arrayOf(PgConverters.dateToDays)(arr),
-            _.cast("string")), ",").as("days_arr"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    "conv_array_ts_millis" -> ((s, dir) => {
-      val arr = array(col("l_shipdate"), expr("l_shipdate + INTERVAL 1 DAY"))
-      Tables.sortedSpread(s, dir, "lineitem", Tables.lineitem(s, dir), col("l_orderkey"), col("l_linenumber"))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          array_join(transform(PgConverters.arrayOf(PgConverters.timestampToMillis)(arr),
-            _.cast("string")), ",").as("ms_arr"))
-    }),
-
-    "conv_array_mixed" -> ((s, dir) => {
-      // boolean[], uuid[], text[], interval[], composite[] element lifts
-      val u = col("user_id"); val e = col("event_id")
-      val uuidOf = (c: Column) => PgConverters.uuidFromHex32(md5(c.cast("string")))
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(e.as("event_id"),
-          array_join(transform(array(pmod(e, lit(2)) === 0, pmod(u, lit(3)) === 0),
-            _.cast("string")), ",").as("bool_arr"),
-          array_join(array(uuidOf(e), uuidOf(u)), ",").as("uuid_arr"),
-          array_join(array(col("event_type"), upper(col("event_type"))), ",").as("txt_arr"),
-          array_join(transform(array(
-            PgConverters.intervalToMicros(u, pmod(e, lit(30)), lit(0L)),
-            PgConverters.intervalToMicros(u - 100, pmod(e, lit(30)) - 15, lit(0L))),
-            _.cast("string")), ",").as("interval_arr"),
-          to_json(array(
-            PgConverters.compositeToStruct("a" -> u),
-            PgConverters.compositeToStruct("a" -> pmod(e, lit(10))))).as("comp_arr"))
-    }),
-
-    "conv_array_more" -> ((s, dir) => {
-      // point[], macaddr[], timestamptz-text[], float8[] (cents-text,
-      // engine-stable), ltree[] — remaining array lifts of the matrix
-      val u = col("user_id"); val e = col("event_id")
-      val m = pmod(e, lit(100))
-      // sort first, project after — see conv_array_scalar_sweep
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(e.as("event_id"),
-          array_join(array(
-            PgConverters.pointToText(u, m),
-            PgConverters.pointToText(u + 1, m + 1)), ";").as("point_arr"),
-          array_join(array(
-            PgConverters.macaddrToText(e * 65536 + u),
-            PgConverters.macaddrToText(u * 65536 + e)), ",").as("mac_arr"),
-          array_join(array(
-            PgConverters.timestamptzNanosToText("ts"),
-            PgConverters.timestamptzNanosToText("(ts + 60000000000)")), ",").as("tstz_arr"),
-          array_join(array(decimalCentsText(u * 100 + 25), decimalCentsText(e * 100 + 75)), ",").as("f8_arr"),
-          array_join(array(
-            concat(lit("root.u"), u), concat(lit("root.e"), pmod(e, lit(10)))), ",")
-            .as("ltree_arr"))
-    }),
-
-    "conv_array_bits" -> ((s, dir) => {
-      val arr = array(pmod(col("user_id"), lit(256)), pmod(col("event_id"), lit(256)))
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(col("event_id"),
-          array_join(PgConverters.arrayOf(c => PgConverters.bitsToString(c, 8))(arr), ",")
-            .as("bits_arr"))
-    }),
-
-    "conv_array_scalar_sweep" -> ((s, dir) => {
-      // remaining scalar-family array lifts of the README §1.2 matrix:
-      // name[], bytea[], int2[], int4[], json[]/jsonb[], cidr[], float4[],
-      // macaddr8[], inet6[], "char"[], oid/xid/cid[], enum[], xml[],
-      // varbit[], char(x)[] — every element converter already
-      // oracle-proven scalar-side; the lift is arrayOf/array_join
-      val u = col("user_id"); val e = col("event_id")
-      def uintOf(name: String) = PgConverters.uint32ToLong(
-        expr(s"CAST(($name * 2654435761) % 4294967296 - 2147483648 AS INT)"))
-      // sort FIRST, project after: the range exchange ships the narrow
-      // source rows, not the ~17 wide rendered strings (the projection
-      // is order-preserving, so output order is unchanged)
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(e.as("event_id"),
-          array_join(array(concat(lit("t_"), u), concat(lit("idx_"), pmod(e, lit(10)))), ",").as("name_arr"),
-          array_join(array(lower(hex(col("event_type").cast("binary"))),
-            lower(hex(concat(col("event_type"), lit("!")).cast("binary")))), ",").as("bytea_arr"),
-          array_join(transform(array(pmod(u, lit(32768)), pmod(e, lit(32768))),
-            _.cast("smallint").cast("string")), ",").as("i16_arr"),
-          array_join(transform(array(pmod(u, lit(1000000)), pmod(e, lit(1000000))),
-            _.cast("int").cast("string")), ",").as("i32_arr"),
-          array_join(array(concat(lit("{\"k\":"), u, lit("}")),
-            concat(lit("{\"k\":"), pmod(e, lit(10)), lit("}"))), ";").as("json_arr"),
-          array_join(array(
-            concat(lit("10."), pmod(u, lit(256)), lit("."), pmod(e, lit(256)), lit(".0/24")),
-            concat(lit("192.168."), pmod(e, lit(256)), lit(".0/16"))), ",").as("cidr_arr"),
-          array_join(transform(array(pmod(u, lit(8388608)), pmod(e, lit(8388608))),
-            c => c.cast("float").cast("long").cast("string")), ",").as("f4_arr"),
-          array_join(array(PgConverters.macaddr8ToText(u), PgConverters.macaddr8ToText(e)), ",").as("mac8_arr"),
-          array_join(array(concat(lit("fe80::"), lower(hex(pmod(u, lit(65536))))),
-            concat(lit("fe80::"), lower(hex(pmod(e, lit(65536)))))), ",").as("inet6_arr"),
-          array_join(array(substring(col("event_type"), 1, 1),
-            substring(col("event_type"), 2, 1)), ",").as("qchar_arr"),
-          array_join(transform(array(uintOf("event_id"), uintOf("user_id")), _.cast("string")), ",").as("oid_arr"),
-          array_join(array(col("event_type"), lit("view")), ",").as("enum_arr"),
-          array_join(array(concat(lit("<e id=\""), e, lit("\"/>")),
-            concat(lit("<u id=\""), u, lit("\"/>"))), ";").as("xml_arr"),
-          array_join(array(PgConverters.bitsToString(pmod(u, lit(256)), 8),
-            PgConverters.bitsToString(pmod(e, lit(32)), 5)), ",").as("varbit_arr"),
-          array_join(array(PgConverters.bpcharPad(col("event_type"), 10),
-            PgConverters.bpcharPad(lit("x"), 3)), "|").as("bp_arr"),
-          {
-            // hstore[]: ARRAY of MAP — each element round-trips through
-            // the real map converter (from_json → MAP → to_json); the
-            // compact source text is the engine-neutral rendering
-            val h1 = concat(lit("{\"a\":\""), u, lit("\",\"b\":\""), pmod(e, lit(10)), lit("\"}"))
-            val h2 = concat(lit("{\"c\":\""), col("event_type"), lit("\"}"))
-            array_join(transform(array(h1, h2),
-              j => to_json(PgConverters.hstoreToMap(j))), ";").as("hstore_arr")
-          })
-    }),
-
-    "conv_array_temporal_geo_sweep" -> ((s, dir) => {
-      // remaining temporal/range/geometry array lifts: time[], timetz[],
-      // int4range[]/int8range[], numrange[], tsrange[]/tstzrange[],
-      // daterange[], lseg[], box[], polygon[], line[], circle[], path[]
-      val u = col("user_id"); val e = col("event_id")
-      val m = pmod(e, lit(100))
-      val t0 = timestamp_micros(expr("ts div 1000"))
-      val t1 = timestamp_micros(expr("ts div 1000 + 60000000"))
-      def day(shift: Int) = date_format(
-        timestamp_micros(expr(s"ts div 1000 + ${shift.toLong * 86400000000L}")), "yyyy-MM-dd")
-      // sort first, project after — see conv_array_scalar_sweep
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
-        .select(e.as("event_id"),
-          array_join(array(PgConverters.timeToText(t0), PgConverters.timeToText(t1)), ",").as("time_arr"),
-          array_join(array(PgConverters.timetzToText(t0), PgConverters.timetzToText(t1)), ",").as("timetz_arr"),
-          array_join(array(PgConverters.rangeToString(u, u + 5),
-            PgConverters.rangeToString(e, e + 10)), ";").as("intrange_arr"),
-          array_join(array(
-            PgConverters.rangeToString(decimalCentsText(u * 100 + 50), decimalCentsText(u * 100 + 175)),
-            PgConverters.rangeToString(decimalCentsText(m * 100 + 25), decimalCentsText(m * 100 + 99))), ";")
-            .as("numrange_arr"),
-          array_join(array(
-            PgConverters.rangeToString(PgConverters.timestamptzNanosToText("ts"),
-              PgConverters.timestamptzNanosToText("(ts + 3600000000000)")),
-            PgConverters.rangeToString(PgConverters.timestamptzNanosToText("(ts + 7200000000000)"),
-              PgConverters.timestamptzNanosToText("(ts + 10800000000000)"))), ";").as("tstzrange_arr"),
-          array_join(array(PgConverters.rangeToString(day(0), day(30)),
-            PgConverters.rangeToString(day(1), day(8))), ";").as("daterange_arr"),
-          array_join(array(PgConverters.lsegToText(u, m, u + 5, m + 5),
-            PgConverters.lsegToText(u + 1, m, u + 6, m + 9)), ";").as("lseg_arr"),
-          array_join(array(PgConverters.boxToText(u, m, u + 10, m + 10),
-            PgConverters.boxToText(u, m, u + 2, m + 3)), ";").as("box_arr"),
-          array_join(array(PgConverters.polygonToText((u, m), (u + 1, m), (u, m + 1)),
-            PgConverters.polygonToText((u, m), (u + 2, m), (u, m + 2))), ";").as("poly_arr"),
-          array_join(array(PgConverters.lineToText(u, m + 1, lit(3)),
-            PgConverters.lineToText(u + 1, m + 2, lit(7))), ";").as("line_arr"),
-          array_join(array(PgConverters.circleToText(u, m, lit(7)),
-            PgConverters.circleToText(u + 1, m + 1, lit(2))), ";").as("circle_arr"),
-          array_join(array(
-            PgConverters.pathToText(closed = false, (u, m), (u + 2, m + 3)),
-            PgConverters.pathToText(closed = false, (u + 1, m), (u + 3, m + 4))), ";").as("path_arr"))
-    }),
-
-    "pipeline_gopher_filter" -> ((s, dir) => {
-      // the full Gopher rule set composed in one plan: length band,
-      // duplicate-token fraction, top-2-gram share, stopword presence —
-      // integer inequalities throughout (ratio-free, oracle-stable)
-      val docs = Tables.documents(s, dir)
-      // n_stop computed inside repetitionMetrics' narrow words projection:
-      // one corpus scan, no second shuffle-join (r8 bench regression fix)
-      TextAnalysis.repetitionMetrics(docs, includeStopwords = true)
-        .filter(col("n_tokens").between(20, 1000) &&
-          col("n_distinct_tokens") * 2 >= col("n_tokens") &&
-          col("top2_count") * 20 <= col("n_2grams") &&
-          col("n_stop") >= 1)
-        .select(col("doc_id"), col("n_tokens"), col("n_distinct_tokens"),
-          col("top2_count"), col("n_2grams"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_lsh_eval" -> ((s, dir) =>
-      // banding calibration: raw LSH candidate precision/recall vs the
-      // exact Jaccard truth set — the measured S-curve that picks
-      // (bands × rows) before a 100 TB run commits to one
-      Dedup.lshEval(Tables.documentsSpread(s, dir))),
-
-    "dedup_incremental" -> ((s, dir) => {
-      // continuous-ingest dedup: short-named sources (src0..src9) play
-      // the historical corpus, long-named (src10..src19) the new batch
-      val docs = Tables.documentsSpread(s, dir)
-      Dedup.incrementalPrune(
-        batch   = docs.filter(length(col("source")) === 5),
-        history = docs.filter(length(col("source")) === 4))
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "pipeline_clean_corpus" -> ((s, dir) => {
-      // end-to-end corpus cleaning in ONE Catalyst plan: quality gate →
-      // language filter → exact-dedup keep-lowest — the composition a
-      // training-data pipeline actually runs; every stage is one of the
-      // oracle-proven operators above. One shuffle total (the dedup
-      // groupBy); the quality/langid stages are narrow codegen columns.
-      val docs = Tables.documents(s, dir)
-      val scored = docs.select(col("doc_id"), col("text"),
-        TextAnalysis.tokenCount(col("text")).as("n_tokens"),
-        TextAnalysis.langId("text").as("lang"))
-      val kept = scored.filter(col("n_tokens") >= 5 &&
-        col("lang").isin("en", "de", "es", "fr"))
-      // identical text ⇒ identical lang/n_tokens, so min() is exact
-      kept.groupBy(md5(col("text")).as("text_hash"))
-        .agg(min(col("doc_id")).as("doc_id"), min(col("lang")).as("lang"),
-          min(col("n_tokens")).as("n_tokens"))
-        .select(col("doc_id"), col("lang"), col("n_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ============ training-data pipeline: text analysis ============
-    "text_quality" -> ((s, dir) =>
-      TextAnalysis.qualityFeatures(Tables.documentsSpread(s, dir)).orderBy(col("doc_id"))),
-
-    "text_fingerprint" -> ((s, dir) => {
-      Tables.documentsSpread(s, dir)
-        .select(col("doc_id"), TextAnalysis.fingerprint("text").as("fp"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_repetition" -> ((s, dir) =>
-      TextAnalysis.repetitionMetrics(Tables.documentsSpread(s, dir)).orderBy(col("doc_id"))),
-
-    "text_pii_redact" -> ((s, dir) => {
-      // The synthetic corpus carries no PII, so seed deterministic
-      // PII-shaped content from doc_id (both engines derive the same
-      // input) — the redaction pass then has real work to do.
-      val seeded = Tables.documentsSpread(s, dir).select(col("doc_id"),
-        concat_ws(" ",
-          substring(col("text"), 1, 40),
-          concat(lit("contact user"), col("doc_id").cast("string"), lit("@example.com")),
-          concat(lit("host 10.0."), (col("doc_id") % 256).cast("string"), lit(".7")),
-          concat(lit("tel 21-555-"), lpad((col("doc_id") % 1000).cast("string"), 3, "0"),
-            lit("-1234"))).as("raw"))
-      val counted = TextAnalysis.piiCounts(col("raw"))
-        .foldLeft(seeded.withColumn("redacted", TextAnalysis.piiRedact(col("raw")))) {
-          case (d, (name, c)) => d.withColumn(name, c)
-        }
-      counted.select(col("doc_id"), col("n_email"), col("n_ip"), col("n_phone"),
-        col("redacted")).orderBy(col("doc_id"))
-    }),
-
-    "text_contamination" -> ((s, dir) => {
-      // Benchmark stand-in: two sources play the eval suite; the rest is
-      // the corpus. 5-gram collision counts per corpus doc.
-      val docs = Tables.documentsSpread(s, dir)
-      val bench  = docs.filter(col("source").isin("src0", "src1"))
-      val corpus = docs.filter(!col("source").isin("src0", "src1"))
-      TextAnalysis.contamination(corpus, bench, n = 5).orderBy(col("doc_id"))
-    }),
-
-    "emb_quantize" -> ((s, dir) =>
-      Similarity.quantizeInt8(Tables.embeddingsSpread(s, dir)).orderBy(col("vec_id"))),
-
-    "embed_project" -> ((s, dir) =>
-      // JL random projection 64→8 dims; shuffle-free per-row map
-      Similarity.randomProject(Tables.embeddingsSpread(s, dir)).orderBy(col("vec_id"))),
-
-    "embed_dim_drift" -> ((s, dir) => {
-      // model-input drift monitor: per-dimension exact mean shift between
-      // the even-id slice (the "fitted" corpus) and the odd-id slice
-      // (the "arriving" one), scaled by the fitted slice's range
-      val emb = Tables.embeddingsSpread(s, dir)
-      Similarity.dimDrift(
-          emb.filter(pmod(col("vec_id"), lit(2)) === 0),
-          emb.filter(pmod(col("vec_id"), lit(2)) === 1))
-        .orderBy(col("pos"))
-    }),
-
-    "embed_dim_stats" -> ((s, dir) =>
-      // per-dimension micro-exact stats — the normalization/whitening
-      // input table; one (pos)-keyed partial agg
-      Similarity.dimStats(Tables.embeddingsSpread(s, dir)).orderBy(col("pos"))),
-
-    "embed_power_iteration" -> ((s, dir) =>
-      // 1-component PCA direction via 3 integer power iterations (two
-      // sparse matvecs + max-|w| renorm per round, broadcast direction)
-      Similarity.powerIterationTop(Tables.embeddingsSpread(s, dir), iters = 3)
-        .orderBy(col("pos"))),
-
-    "ann_pq_codes" -> ((s, dir) =>
-      // product-quantization encode; zero corpus shuffle
-      Similarity.pqCodes(Tables.embeddingsSpread(s, dir))
-        .orderBy(col("vec_id"), col("subspace"))),
-
-    "ann_pq_adc_topk" -> ((s, dir) => {
-      // ADC search over PQ codes: 8 bytes touched per corpus vector
-      val emb = Tables.embeddingsSpread(s, dir)
-      Similarity.pqAdcTopK(emb.filter(col("vec_id") < 10), emb, k = 10)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "embed_centroids" -> ((s, dir) =>
-      // per-label centroids as exact integer micro-sums + count
-      Similarity.centroidSumsByLabel(Tables.embeddingsSpread(s, dir))
-        .orderBy(col("label"), col("pos"))),
-
-    "text_classifier" -> ((s, dir) =>
-      // hashed-feature linear scorer; keep-flag at score > 0
-      Tables.documentsSpread(s, dir)
-        .select(col("doc_id"),
-          TextAnalysis.classifierScoreMilli("text").as("score_milli"))
-        .withColumn("kept", col("score_milli") > 0)
-        .orderBy(col("doc_id"))),
-
-    "text_compressibility" -> ((s, dir) =>
-      // gzip-ratio proxy: distinct/total 4-gram ppm, zero shuffle
-      TextAnalysis.compressibility(Tables.documentsSpread(s, dir))
-        .orderBy(col("doc_id"))),
-
-    "text_rake_keywords" -> ((s, dir) =>
-      // phrase-level keywords (RAKE): stopword-split candidate runs,
-      // deg/freq word scores in milli fixed point, per-doc top-3
-      TextAnalysis.rakeKeywords(Tables.documentsSpread(s, dir), k = 3)
-        .orderBy(col("doc_id"), col("rank"))),
-
-    "classifier_perceptron" -> ((s, dir) =>
-      // TRAINED quality/lang filter (vs text_classifier's fixed
-      // weights): 3 synchronous batch-perceptron passes over sparse
-      // integer features — exact-integer updates, broadcast weight
-      // vector, unrolled-SQL oracle parity
-      Learn.perceptronTrain(
-          Learn.perceptronFeatures(Tables.documentsSpread(s, dir)), iters = 3)
-        .orderBy(col("pos"))),
-
-    "classifier_perceptron_eval" -> ((s, dir) => {
-      // training-set confusion of the trained hyperplane (ties = errors)
-      val feats = Learn.perceptronFeatures(Tables.documentsSpread(s, dir))
-      Learn.perceptronEval(feats, Learn.perceptronTrain(feats, iters = 3))
-        .orderBy(col("y"))
-    }),
-
-    "chunk_documents" -> ((s, dir) =>
-      TextAnalysis.chunk(Tables.documents(s, dir), width = 32, overlap = 8)
-        .orderBy(col("doc_id"), col("chunk_no"))),
-
-    "tokenize_ids" -> ((s, dir) => {
-      // corpus → model-ready id sequences: top-100 frequency vocab,
-      // OOV → -1, broadcast vocab join, position-restored sequences
-      val docs = Tables.documents(s, dir)
-      TextAnalysis.tokenizeToIds(docs, TextAnalysis.buildVocab(docs, topK = 100))
-        .orderBy(col("doc_id"))
-    }),
-
-    "vocab_bpe_merges" -> ((s, dir) =>
-      // tokenizer TRAINING (Sennrich BPE): corpus touched once for the
-      // word-freq table, then 6 merge rounds over the vocab-sized table
-      TextAnalysis.bpeMerges(Tables.documentsSpread(s, dir), nMerges = 6)),
-
-    "vocab_bpe_fertility" -> ((s, dir) =>
-      // symbols-per-word by source under the learned tokenizer — the
-      // corpus-mass → token-budget conversion a mixing plan needs
-      TextAnalysis.bpeFertility(Tables.documentsSpread(s, dir), nMerges = 6)
-        .orderBy(col("source"))),
-
-    "vocab_bpe_encode" -> ((s, dir) =>
-      // the tokenizer APPLIED: every doc as its loader-ready subword-id
-      // sequence under the 6-merge fit; two broadcast vocab joins
-      TextAnalysis.bpeEncode(Tables.documentsSpread(s, dir), nMerges = 6)
-        .orderBy(col("doc_id"))),
-
-    "pack_token_ids" -> ((s, dir) =>
-      // the full loader artifact: BPE-encoded corpus concat-and-chopped
-      // into 256-id context windows per source, in one plan
-      TextAnalysis.bpeEncodePacked(Tables.documentsSpread(s, dir), nMerges = 6,
-          windowTokens = 256)
-        .orderBy(col("source"), col("win"))),
-
-    "sample_stratified" -> ((s, dir) => {
-      // Data mixing: per-source sampling rates applied via the shared
-      // doc-id-keyed FNV-64a keep-hash — deterministic across retries
-      // and partitionings (no RNG, no seed plumbing), the property a
-      // reproducible 100 TB training run needs. Narrow projection + one
-      // groupBy(source); the hash kernel is codegen'd.
-      val docs = Tables.documents(s, dir)
-      val keyed = docs.select(col("source"),
-        graft.functions.FnvHash64.keepHash(col("doc_id"), 100).as("bucket"),
-        when(length(col("source")) === 4, lit(70)).otherwise(lit(30)).as("rate"))
-      keyed.groupBy(col("source")).agg(
-        count(lit(1)).as("n_total"),
-        sum(when(col("bucket") < col("rate"), 1L).otherwise(0L)).as("n_kept"))
-        .orderBy(col("source"))
-    }),
-
-    "mix_curriculum" -> ((s, dir) =>
-      // data-dependent mixture rates toward a token budget; broadcast-
-      // only joins, two narrow scans
-      TextAnalysis.mixCurriculum(Tables.documents(s, dir))
-        .orderBy(col("source"))),
-
-    "text_tfidf_topk" -> ((s, dir) =>
-      // integer-exact per-doc keyword extraction
-      TextAnalysis.tfidfTopK(Tables.documentsSpread(s, dir))
-        .orderBy(col("doc_id"), col("rank"))),
-
-    "dedup_substring_spans" -> ((s, dir) =>
-      // Lee-et-al exact-substring dedup: first occurrence survives
-      Dedup.substringSpans(Tables.documentsSpread(s, dir))
-        .orderBy(col("doc_id"))),
-
-    "dedup_self_spans" -> ((s, dir) =>
-      // within-doc repeated-trigram trim: the self-repetition REWRITE
-      // (repetitionMetrics only scores); (doc, gram)-keyed window, so
-      // no cross-doc skew and no df-cap to tune
-      Dedup.selfDedupSpans(Tables.documents(s, dir), n = 3)
-        .orderBy(col("doc_id"))),
-
-    "pack_shards" -> ((s, dir) => {
-      // Sequence packing: docs accumulate in doc_id order into fixed
-      // token-budget training shards, via the SAME shardAssign math
-      // pack_concat materializes (one shared helper — the two views of
-      // a shard can never desync). Partitioned by source so the window
-      // never globally sorts the corpus.
-      Sampling.shardAssign(Tables.documents(s, dir), budgetTokens = 512)
-        .groupBy(col("source"), col("shard"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("__nt")).as("shard_tokens"))
-        .orderBy(col("source"), col("shard"))
-    }),
-
-    "pack_windows" -> ((s, dir) =>
-      // Token-level concat-and-chop: the context-window manifest (docs
-      // SPLIT across fixed 256-token windows, zero padding waste) —
-      // the loader-facing complement of pack_shards' doc-granular form
-      Sampling.packSequences(Tables.documents(s, dir), windowTokens = 256)
-        .orderBy(col("source"), col("win"), col("doc_id"))),
-
-    "pack_efficiency" -> ((s, dir) =>
-      // the report read BEFORE committing a window size: padding waste
-      // and truncation loss per candidate W under the three loader
-      // strategies (pad-per-doc / clip-to-W / concat-and-chop)
-      Sampling.packingEfficiency(Tables.documents(s, dir), Seq(64, 128, 256, 512))
-        .orderBy(col("window_tokens"), col("strategy"))),
-
-    // ============ web-corpus URL/domain front-of-pipeline ============
-    "ingest_jsonl" -> ((s, dir) =>
-      // front-door tolerant JSONL parse: every line surfaces exactly
-      // once, typed or quarantined (corruption anchored on the
-      // mandatory `lang` field, so partial-parse salvage differences
-      // between engines can't split the verdict)
-      Ingest.jsonlParse(synthJsonl(Tables.documents(s, dir)),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "id BIGINT, lang STRING, nc BIGINT"),
-          markerCol = "lang", keep = Seq("line_no", "shard"))
-        .orderBy(col("line_no"))),
-
-    "ingest_quarantine" -> ((s, dir) =>
-      // quarantine-rate report per shard — the ops dashboard row that
-      // makes a bad input shard visible the batch it lands
-      Ingest.quarantineStats(
-          Ingest.jsonlParse(synthJsonl(Tables.documents(s, dir)),
-            org.apache.spark.sql.types.StructType.fromDDL(
-              "id BIGINT, lang STRING, nc BIGINT"),
-            markerCol = "lang", keep = Seq("shard")),
-          "shard")
-        .orderBy(col("shard"))),
-
-    "web_url_dedup" -> ((s, dir) =>
-      // canonical-URL dedup over deterministically synthesized messy
-      // URLs: case/port/tracking-param/fragment variants of the same
-      // page collapse to one key (zero shuffle before the one groupBy)
-      Web.urlDedup(Tables.documentsSpread(s, dir), synthUrl)
-        .orderBy(col("url_norm"))),
-
-    "web_joint_dedup" -> ((s, dir) => {
-      // multi-signal dedup (RefinedWeb's URL-then-content passes as ONE
-      // component computation): URL groups contract to their anchors,
-      // only the MinHash-LSH near-dup pairs drive the iterative CC —
-      // exact quotient-graph equivalence to clustering the edge union
-      // (the r13 form), at a fraction of the loop's node/edge count
-      val docs = Tables.documentsSpread(s, dir)
-      val withUrl = docs.select(col("doc_id"), Web.urlNormalize(synthUrl).as("u"))
-      val ka = withUrl.groupBy(col("u")).agg(min(col("doc_id")).as("ka"))
-      val anchors = withUrl.join(ka, "u")
-        .select(col("doc_id"), col("ka").as("anchor"))
-      Dedup.clustersContracted(
-          Dedup.minhashLshPairs(docs).select(col("doc_a"), col("doc_b")), anchors)
-        .withColumn("keep", col("doc_id") === col("cluster_id"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "graph_triangles" -> ((s, dir) => {
-      // dedup-graph QA: exact triangle participation per node via the
-      // degree-ordered orientation (Schank/Wagner) — hot hubs fan out
-      // only toward higher-degree nodes, bounding wedge skew at O(√|E|)
-      // ring-with-chords graph (i→i+1, i→i+2, plus a long chord): the
-      // short edges guarantee (i, i+1, i+2) triangles to count
-      val ids = Tables.documents(s, dir).select(col("doc_id"))
-      val n = ids.agg((max(col("doc_id")) + 1).as("__n"))
-      val edges = ids.crossJoin(broadcast(n))
-        .select(col("doc_id").as("doc_a"), explode(array(
-          pmod(col("doc_id") + 1, col("__n")),
-          pmod(col("doc_id") + 2, col("__n")),
-          pmod(col("doc_id") * 31 + 7, col("__n")))).as("doc_b"))
-        .filter(col("doc_a") =!= col("doc_b")).distinct()
-      Graph.triangles(edges).orderBy(col("node"))
-    }),
-
-    "web_redirect_resolve" -> ((s, dir) => {
-      // synthetic acyclic redirect forest (doc_id % 7 != 0 points one
-      // id back; multiples of 7 terminate): the closed-form oracle
-      // final = doc_id − (doc_id % 7) proves the log-round pointer
-      // doubling resolves every chain exactly, hops included
-      val r = Tables.documents(s, dir).select(col("doc_id"))
-        .filter(pmod(col("doc_id"), lit(7)) =!= 0)
-        .select(col("doc_id").as("src"), (col("doc_id") - 1).as("dst"))
-      Web.resolveRedirects(r, rounds = 4)
-        .orderBy(col("src"))
-    }),
-
-    "profile_benford" -> ((s, dir) =>
-      // Benford first-digit audit of the value column (integer cents):
-      // expectations are plan-time log10 literals, shares integer ppm
-      graft.ops.Profile.benfordReport(
-          Cdc.walEvents(s, dir).select(
-            expr("cast(floor(value * 100 + 0.5) as bigint)").as("cents")),
-          "cents")
-        .orderBy(col("digit"))),
-
-    "web_hits" -> ((s, dir) => {
-      // hubs & authorities over the same deterministic 3-out-link graph
-      // as web_pagerank: 3 synchronous integer fixed-point HITS rounds,
-      // renormalized by the max per half-step (no float L2 — integer
-      // division keeps the scores engine- and partitioning-exact)
-      val ids = Tables.documents(s, dir).select(col("doc_id"))
-      val n = ids.agg((max(col("doc_id")) + 1).as("__n"))
-      val edges = ids.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"), explode(array(
-          pmod(col("doc_id") * 31 + 7, col("__n")),
-          pmod(col("doc_id") * 17 + 3, col("__n")),
-          pmod(col("doc_id") * 13 + 11, col("__n")))).as("dst"))
-        .filter(col("src") =!= col("dst")).distinct()
-      Graph.hitsInt(edges, iters = 3)
-        .select(col("node").as("doc_id"), col("hub"), col("auth"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_watermark_detect" -> ((s, dir) =>
-      // green-list watermark detector (Kirchenbauer et al. 2023):
-      // prev-token-seeded green fraction + one-proportion z statistic,
-      // FNV-based so the whole statistic hash-verifies
-      TextAnalysis.watermarkDetect(Tables.documentsSpread(s, dir))
-        .orderBy(col("doc_id"))),
-
-    "web_pagerank" -> ((s, dir) => {
-      // link-graph centrality for corpus weighting: 5 synchronous
-      // integer-fixed-point PageRank iterations over a deterministic
-      // 3-out-link graph (dst = (id·a+b) mod N, the N scalar rides as a
-      // broadcast — no driver action). Static edges repartitioned once
-      // on src; each iteration = one rank join + one partial-agg.
-      val ids = Tables.documents(s, dir).select(col("doc_id"))
-      val n = ids.agg((max(col("doc_id")) + 1).as("__n"))
-      val edges = ids.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"), explode(array(
-          pmod(col("doc_id") * 31 + 7, col("__n")),
-          pmod(col("doc_id") * 17 + 3, col("__n")),
-          pmod(col("doc_id") * 13 + 11, col("__n")))).as("dst"))
-        .filter(col("src") =!= col("dst")).distinct()
-      Graph.pageRankInt(edges, iters = 5)
-        .select(col("node").as("doc_id"), col("rank"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "web_domain_stats" -> ((s, dir) =>
-      // corpus mass per registrable domain (PSL-approximate: co.uk-
-      // style generic second levels take three labels) — the input
-      // table for per-domain caps and blocklist review
-      Web.domainStats(Tables.documentsSpread(s, dir), synthUrl)
-        .orderBy(col("domain"))),
-
-    "web_domain_filter" -> ((s, dir) => {
-      import s.implicits._
-      // blocklist gate: broadcast anti-join on registrable domain,
-      // surviving corpus counted per source
-      Web.domainFilter(Tables.documentsSpread(s, dir), synthUrl,
-          Seq("site7.com", "site13.com", "site0.co.uk").toDF("domain"))
-        .groupBy(col("source")).agg(count(lit(1)).as("n_kept"))
-        .orderBy(col("source"))
-    }),
-
-    "web_domain_cap" -> ((s, dir) =>
-      // RefinedWeb §3.2 per-registered-domain cap: the Web family
-      // composes with the sampling family — registrable domain becomes
-      // the capPerGroup key (one window shuffle), longest docs survive
-      Sampling.capPerGroup(
-          Tables.documentsSpread(s, dir)
-            .withColumn("domain", Web.registrableDomain(synthUrl)),
-          "domain", n = 5, Seq(col("n_chars").desc, col("doc_id")))
-        .select(col("domain"), col("doc_id"), col("n_chars"))
-        .orderBy(col("domain"), col("doc_id"))),
-
-    // ============ training-data pipeline: dedup ============
-    "dedup_exact" -> ((s, dir) => {
-      Dedup.exact(Tables.documents(s, dir)).orderBy(col("text_hash"))
-    }),
-
-    "dedup_ngram_jaccard" -> ((s, dir) => {
-      Dedup.jaccardPairs(Tables.documentsSpread(s, dir), n = 3, threshold10 = 4)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    "text_ngram_novelty" -> ((s, dir) =>
-      // per-doc novelty: share of the doc's 3-grams first seen HERE —
-      // the first-occurrence trick at gram granularity, one linear
-      // groupBy + join, no per-doc distinct scans
-      TextAnalysis.ngramNovelty(Tables.documentsSpread(s, dir))
-        .orderBy(col("doc_id"))),
-
-    "dedup_clusters" -> ((s, dir) => {
-      Dedup.clusters(Dedup.jaccardPairs(Tables.documentsSpread(s, dir), n = 3, threshold10 = 4))
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_canonical" -> ((s, dir) => {
-      // the SHIP step after near-dup detection: one keeper per cluster
-      // (longest doc, ties to lowest id); filter(keep) = pruned corpus
-      val docs = Tables.documentsSpread(s, dir)
-      Dedup.canonicalKeep(docs,
-          Dedup.jaccardPairs(docs, n = 3, threshold10 = 4))
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_neardup_embedding" -> ((s, dir) => {
-      Dedup.embeddingNearDups(Tables.embeddingsSpread(s, dir), 0.45)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // ============ training-data pipeline: similarity search ============
-    "ann_cosine_topk" -> ((s, dir) => {
-      val emb = Tables.embeddingsSpread(s, dir)
-      Similarity.cosineTopK(emb.filter(col("vec_id") < 10), emb, 5)
-        .withColumnRenamed("rank", "rnk")
-        .orderBy(col("query_id"), col("rnk"))
-    }),
-
-    "ann_mmr_diverse" -> ((s, dir) => {
-      // MMR diversified top-k: greedy λ·rel − (1−λ)·max-sim-to-picked
-      // over a top-30 relevance cut (retrieve-then-rerank geometry)
-      val emb = Tables.embeddingsSpread(s, dir)
-      Similarity.mmrSelect(emb.filter(col("vec_id") < 6), emb,
-          k = 4, lambdaMicro = 700000L, preselect = 30)
-        .withColumnRenamed("rank", "rnk")
-        .orderBy(col("query_id"), col("rnk"))
-    }),
-
-    "cdc_compression_events" -> ((s, dir) => {
-      // status-transition-detected events (both kinds + partial bit),
-      // shaped to the reference's `$`-event surface
-      Cdc.compressionEvents(Cdc.walEvents(s, dir))
-        .orderBy(col("lsn"), col("tsdb_op"), col("chunk_name"))
-    }),
-
-    "cdc_compression_status" -> ((s, dir) => {
-      // the transactiontracker state machine itself: chunk-status
-      // catalog UPDATEs → lag-per-chunk old status → per-txn last-writer
-      // c/d fields → commit-time emission with the 0x08 partial bit;
-      // chunk name + hypertable key resolve through the J1 catalog
-      // broadcast, never string-synthesis at emission
-      val wal = Cdc.walEvents(s, dir)
-      Cdc.compressionFromStatus(Cdc.chunkStatusUpdates(wal),
-          Cdc.chunkCatalogOf(wal), Cdc.hypertableCatalog(s))
-        .orderBy(col("lsn"), col("tsdb_op"), col("chunk_name"))
-    }),
-
-    "cdc_marker_decompression" -> ((s, dir) => {
-      // 2.12+ marker flow gated on the EXACT
-      // ::timescaledb-decompression-start/end prefixes: marker-open →
-      // suppress re-INSERTs → marker-close → tsdb_op='d' event per
-      // affected chunk, chunk identity via the catalog broadcast
-      Cdc.markerDecompression(Cdc.walEvents(s, dir))
-        .orderBy(col("lsn"), col("chunk_name"))
-    }),
-
-    "cdc_marker_suppress" -> ((s, dir) => {
-      // the live-stream arm of the marker flow: exactly the bracketed
-      // re-INSERTs vanish; application txns (app.outbox prefix) and
-      // everything outside brackets survive untouched
-      Cdc.markerSuppress(Cdc.walEvents(s, dir))
-        .select(col("lsn"), col("xid"), col("op"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_marker_negative" -> ((s, dir) => {
-      // negative fidelity gate: a transaction emitting ≥2 APPLICATION
-      // messages (an outbox) is NOT a decompression bracket — every one
-      // of its inserts survives suppression. A count-based heuristic
-      // would zero this out.
-      val wal = Cdc.walEvents(s, dir)
-      val outbox = Cdc.withMessagePrefix(wal.filter(col("op") === "m"))
-        .filter(col("msg_prefix") === "app.outbox")
-        .select(col("xid")).distinct()
-      Cdc.markerSuppress(wal)
-        .join(outbox, Seq("xid"))
-        .filter(col("op") === "c")
-        .groupBy(col("xid")).agg(count(lit(1)).as("n_creates_kept"))
-        .orderBy(col("xid"))
-    }),
-
-    "cdc_chunk_status_catalog" -> ((s, dir) => {
-      // compressed-chunk resolution through the status-bearing catalog:
-      // compress_hyper_2_* rows resolve via ResolveUncompressedHypertable
-      // (hypertable 2 → 1) back to 'events'; the origin chunk carries the
-      // status/partial bits and its event count from the live stream
-      val cat = Cdc.chunkCatalogStatus(s, dir)
-      val res = Cdc.resolveUncompressed(Cdc.hypertableCatalogCompression(s))
-      val origin = cat.filter(col("compressed_chunk_id").isNotNull)
-        .select(col("chunk_day"), col("chunk_name"), col("status"),
-          col("partial"), col("compressed_chunk_id"))
-      val cside = cat.filter(col("hypertable_id") === 2)
-        .select(col("chunk_id").as("compressed_chunk_id"),
-          col("chunk_name").as("compressed_chunk_name"), col("hypertable_id"))
-        .join(broadcast(res), Seq("hypertable_id"))
-      val counts = Cdc.walEvents(s, dir).groupBy(col("chunk_day"))
-        .agg(count(lit(1)).as("n_events"))
-      origin.join(broadcast(cside), Seq("compressed_chunk_id"))
-        .join(counts, Seq("chunk_day"))
-        .select(col("chunk_name"), col("status"), col("partial"),
-          col("compressed_chunk_name"),
-          col("uncompressed_table").as("ht_table"), col("n_events"))
-        .orderBy(col("chunk_name"))
-    }),
-
-    "cdc_chunk_delete_decompression" -> ((s, dir) => {
-      // marker-mode decompression signal: catalog DELETE of a compress_
-      // chunk row → resolve compressed hypertable → user hypertable →
-      // 'd' event; plain-chunk retention drops in the same fixture
-      // stream pass through silently
-      Cdc.chunkDeleteDecompression(Cdc.chunkDeleteEvents(Cdc.walEvents(s, dir)),
-          Cdc.hypertableCatalogCompression(s))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_compression_envelope" -> ((s, dir) => {
-      // op='$' full envelope with the com.timescale.Event key schema;
-      // c and d can share a commit LSN, so the envelope text (which
-      // embeds tsdb_op) joins the sort key
-      Cdc.compressionEnvelopes(Cdc.walEvents(s, dir))
-        .orderBy(col("lsn"), col("chunk_name"), col("envelope"))
-    }),
-
-    "cdc_logical_messages" -> ((s, dir) => {
-      Cdc.logicalMessages(Cdc.walEvents(s, dir)).orderBy(col("lsn"))
-    }),
-
-    "cdc_stats_counters" -> ((s, dir) => {
-      Cdc.statsCounters(Cdc.walEvents(s, dir)).orderBy(col("op"))
-    }),
-
-    "cdc_watermarks" -> ((s, dir) => {
-      Cdc.watermarks(Cdc.walEvents(s, dir))
-    }),
-
-    "cdc_apply_upsert" -> ((s, dir) =>
-      // consumer-side materialization: replay the keyed change stream
-      // into the target table's CURRENT state (last-LSN-wins, terminal
-      // delete removes the row) — one partial-agg shuffle on the key
-      Cdc.applyUpsert(Cdc.walEvents(s, dir))
-        .orderBy(col("user_id"))),
-
-    "cdc_scd2" -> ((s, dir) =>
-      // SCD2 dimension build: half-open version intervals per key,
-      // deletes close without opening — one per-key lead window
-      Cdc.scd2History(Cdc.walEvents(s, dir))
-        .orderBy(col("user_id"), col("valid_from_lsn"))),
-
-    "cdc_time_travel" -> ((s, dir) => {
-      // state AS OF the mid-stream fence (broadcast scalar, in-plan);
-      // oracle replays the same fenced slice from scratch
-      val wal = Cdc.walEvents(s, dir)
-      val fenced = wal.crossJoin(
-        broadcast(wal.agg(expr("max(lsn) div 2").as("__fence"))))
-      Cdc.stateAtLsn(fenced, col("__fence")).orderBy(col("user_id"))
-    }),
-
-    "cdc_forget" -> ((s, dir) =>
-      // right-to-be-forgotten: keys whose TERMINAL change is a delete
-      // vanish from the store, history included (tombstone propagation)
-      Cdc.forgetDeleted(Cdc.walEvents(s, dir))
-        .select(col("lsn"), col("user_id"), col("op"))
-        .orderBy(col("lsn"))),
-
-    "cdc_unwrap" -> ((s, dir) =>
-      // Debezium ExtractNewRecordState SMT (consumer-side): envelope →
-      // flat row (after.* + __op/__lsn/__source_ts_ms/__table), rewrite
-      // mode keeps deletes as soft-delete markers with null state —
-      // pure narrow projection, fuses into the scan
-      Cdc.unwrapNewRecordState(Cdc.walEvents(s, dir), deleteMode = "rewrite")
-        .orderBy(col("__lsn"))),
-
-    "cdc_outbox_route" -> ((s, dir) =>
-      // transactional-outbox consumer: INSERT-only rows re-topiced by
-      // aggregate type, keyed by aggregate id, payload verbatim
-      Cdc.outboxRoute(Cdc.walEvents(s, dir)).orderBy(col("lsn"))),
-
-    "cdc_incremental_snapshot" -> ((s, dir) => {
-      // DBLog/Debezium watermark-windowed incremental snapshot: chunk =
-      // 2nd user_id quartile as of the mid-stream low watermark, window
-      // = (max/2, 3·max/4] LSN; stream events supersede snapshot rows
-      // for touched keys. Bounds from one 1-row agg (documented tiny
-      // driver-side scalar, same class as the bm25 stats).
-      val wal = Cdc.walEvents(s, dir)
-      val b = wal.agg(max(col("lsn")).as("ml"), max(col("user_id")).as("mu")).head()
-      val (ml, mu) = (b.getLong(0), b.getLong(1))
-      Cdc.incrementalSnapshotChunk(wal, mu / 4, mu / 2, ml / 2, ml * 3 / 4)
-        .orderBy(col("lsn"), col("user_id"), col("op"))
-    }),
-
-    "cdc_compact_log" -> ((s, dir) => {
-      // Kafka-compacted-topic retention: below the mid-stream fence
-      // only each key's last event survives; everything above passes
-      // through — replay-equivalent for any lsn ≥ fence (CdcSpec)
-      val wal = Cdc.walEvents(s, dir)
-      val fenced = wal.crossJoin(
-        broadcast(wal.agg(expr("max(lsn) div 2").as("__fence"))))
-      Cdc.compactChangelog(fenced, col("__fence"))
-        .select(col("lsn"), col("user_id"), col("op"), col("ts_ms"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_cagg_refresh" -> ((s, dir) => {
-      // continuous-aggregate refresh: merge the materialized base
-      // partials with partials from ONLY the delta WAL slice (lsn above
-      // the fence); oracle recomputes from scratch, proving the
-      // incremental merge is exact. Fence rides as a broadcast scalar.
-      val wal = Cdc.walEvents(s, dir)
-      val fenced = wal.crossJoin(
-        broadcast(wal.agg(expr("max(lsn) div 2").as("__fence"))))
-      Cdc.caggRefresh(
-          Cdc.caggPartials(fenced.filter(col("lsn") <= col("__fence"))),
-          fenced.filter(col("lsn") > col("__fence")))
-        .orderBy(col("chunk_day"))
-    }),
-
-    "cdc_catalog_columns" -> ((s, dir) => {
-      Cdc.catalogColumns(s, dir).orderBy(col("ordinal"))
-    }),
-
-    "cdc_schema_diff" -> ((s, dir) => {
-      // the DDL control-plane diff driver-visible: live events schema vs
-      // its next version (value widened, props dropped, geo added,
-      // event_type→kind positional rename) → typed change report
-      import org.apache.spark.sql.types._
-      import graft.streaming.SchemaEvolution
-      val cur = Tables.events(s, dir).schema
-      val next = StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", LongType),
-        StructField("user_id", LongType), StructField("kind", StringType),
-        StructField("value", DecimalType(18, 6)),
-        StructField("geo", LongType))) // type differs from props ⇒ drop+add, not rename
-      val rows = SchemaEvolution.diff(cur, next).map {
-        case SchemaEvolution.Added(c, t)           => (c, "added", t.simpleString)
-        case SchemaEvolution.Dropped(c, t)         => (c, "dropped", t.simpleString)
-        case SchemaEvolution.TypeChanged(c, f, t)  => (c, "type_changed", s"${f.simpleString}->${t.simpleString}")
-        case SchemaEvolution.NullabilityChanged(c, n) => (c, "nullability", n.toString)
-        case SchemaEvolution.Renamed(c, to)        => (c, "renamed", to)
-      }
-      import s.implicits._
-      rows.toDF("column_name", "change", "detail").orderBy(col("column_name"), col("change"))
-    }),
-
-    "cdc_heartbeats" -> ((s, dir) =>
-      // heartbeat.interval analog: per elapsed hour, the high-watermark
-      // LSN — the offset-advance signal for quiet tables
-      Cdc.heartbeats(Cdc.walEvents(s, dir), intervalMs = 3600000L)
-        .orderBy(col("beat_ms"))),
-
-    "cdc_column_mask" -> ((s, dir) =>
-      // column.exclude.list + column.mask.hash: value dropped, props
-      // hashed (pseudonymous equality preserved), applied at capture
-      Cdc.maskColumns(
-          Cdc.walEvents(s, dir)
-            .select(col("lsn"), col("user_id"), col("op"), col("value"), col("props")),
-          exclude = Seq("value"), maskHash = Seq("props"))
-        .orderBy(col("lsn"))),
-
-    "cdc_ivm_join" -> ((s, dir) => {
-      // JOIN-view incremental maintenance: base view ∪ (ΔWAL ⋈ dim) —
-      // refresh cost O(Δ), oracle recomputes the view from scratch
-      val wal = Cdc.walEvents(s, dir).select(col("lsn"), col("user_id"), col("value"))
-      val dim = Tables.customer(s, dir)
-        .select(col("c_custkey").as("user_id"), col("c_nationkey"))
-      val fenced = wal.crossJoin(
-        broadcast(wal.agg(expr("max(lsn) div 2").as("__fence"))))
-      val base = fenced.filter(col("lsn") <= col("__fence"))
-        .join(broadcast(dim), "user_id")
-      Cdc.ivmJoinRefresh(base, fenced.filter(col("lsn") > col("__fence")), dim, "user_id")
-        .select(col("lsn"), col("user_id"), col("value"), col("c_nationkey"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_lsn_gaps" -> ((s, dir) => {
-      // delivery-loss audit: two slices carved out of the stream must
-      // surface as exactly two gaps with exact bounds/widths
-      val wal = Cdc.walEvents(s, dir)
-      val ml = wal.agg(max(col("lsn"))).head.getLong(0)
-      val delivered = wal.filter(
-        !col("lsn").between(ml / 4, ml / 4 + 9) &&
-          !col("lsn").between(ml / 2, ml / 2 + 4))
-      Cdc.lsnGaps(delivered).orderBy(col("gap_after_lsn"))
-    }),
-
-    "cdc_reconcile" -> ((s, dir) => {
-      // source↔target divergence report over checksum tables: a target
-      // with one dropped row (count_mismatch), one altered value
-      // (checksum_mismatch) and one dropped chunk (missing_on_target);
-      // bounds from a 1-row agg (documented tiny driver scalar)
-      val wal = Cdc.walEvents(s, dir)
-      val ml = wal.agg(max(col("lsn"))).head.getLong(0)
-      val target = wal
-        .filter(col("lsn") =!= ml / 2 && col("chunk_day") =!= 0)
-        .withColumn("value",
-          when(col("lsn") === ml / 3, col("value") + 1.0).otherwise(col("value")))
-      Cdc.reconcile(Cdc.chunkChecksums(wal), Cdc.chunkChecksums(target))
-        .orderBy(col("table_name"), col("chunk_day"))
-    }),
-
-    "cdc_cagg_weekly" -> ((s, dir) =>
-      // hierarchical cagg: weekly level rolled up FROM the daily
-      // partials (count/sum states merge losslessly); oracle recomputes
-      // the weekly truth from raw events
-      Cdc.caggWeeklyFromDaily(Cdc.caggPartials(Cdc.walEvents(s, dir)))
-        .orderBy(col("chunk_week"))),
-
-    "cdc_chunk_checksums" -> ((s, dir) =>
-      // replica-verification digests: order-independent XOR of per-row
-      // FNV-64a per (table, chunk) — equal checksum + count verifies a
-      // chunk without moving rows
-      Cdc.chunkChecksums(Cdc.walEvents(s, dir))
-        .orderBy(col("table_name"), col("chunk_day"))),
-
-    "cdc_chunk_added" -> ((s, dir) => {
-      // T9 control plane: chunk registration sequence (FNV partition
-      // column exercised in the rows-only snapshot_partitions query)
-      Cdc.chunkAddedEvents(Cdc.walEvents(s, dir))
-        .select(col("chunk_name"), col("registered_at_lsn"), col("parent_hypertable"))
-        .orderBy(col("registered_at_lsn"))
-    }),
-
-    "cdc_sqs_dedup_id" -> ((s, dir) => {
-      // S13: SQS FIFO dedup-id = hash(LSN, txId, content) — README.md:444-447
-      Cdc.walEvents(s, dir)
-        .select(col("lsn"),
-          sha2(concat_ws("|", col("lsn"), col("xid"), col("props")), 256).as("dedup_id"))
-        .orderBy(col("lsn"))
-    }),
-
-    "q_array_agg" -> ((s, dir) => {
-      // deterministic array agg: per-user sorted event types
-      // array column joined to a string — the driver's comparator can't
-      // hash list cells (round-1 oracle error), values are unchanged
-      Tables.events(s, dir)
-        .groupBy(col("user_id"))
-        .agg(array_join(sort_array(collect_list(col("event_type"))), ",").as("types"),
-          count(lit(1)).as("n"))
-        .orderBy(col("user_id"))
-    }),
-
-    "q_explode_tokens" -> ((s, dir) => {
-      // posexplode ≙ unnest WITH ORDINALITY (1-based to match SQL);
-      // orderBy before limit so the 50-doc selection is deterministic
-      // regardless of parquet split order (ADVICE r1)
-      Tables.documents(s, dir).orderBy(col("doc_id")).limit(50)
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos0", "tok")))
-        .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("tok"))
-        .orderBy(col("doc_id"), col("pos"))
-    }),
-
-    "cdc_event_filter" -> ((s, dir) => {
-      // P5: Expr dialect `op == "c" && user_id > 5` → Catalyst predicate
-      graft.filter.EventFilter("""op == "c" && user_id > 5""")
-        .apply(Cdc.walEvents(s, dir))
-        .select(col("lsn"), col("op"), col("user_id"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_truncate" -> ((s, dir) => {
-      // T-op fan-out with distinct-by-canonical-name (OnTruncateEvent)
-      Cdc.truncateEvents(Cdc.walEvents(s, dir),
-          Cdc.chunkCatalog(s, dir), Cdc.hypertableCatalog(s))
-        .orderBy(col("xid"))
-    }),
-
-    "cdc_message_txn_flag" -> ((s, dir) => {
-      Cdc.logicalMessagesTxn(Cdc.walEvents(s, dir))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_envelope_schema" -> ((s, dir) => {
-      // full Debezium {payload, schema} artifact with per-kind key blocks
-      Cdc.envelopeWithSchema(s, dir).orderBy(col("lsn"))
-    }),
-
-    "cdc_multitable" -> ((s, dir) =>
-      // events CDC + orders/lineitem snapshots, per-table schemas,
-      // composite key on lineitem — one unioned stream, RENDER-LATE:
-      // the (topic, lsn) sort moves the narrow union; the ~1 KB
-      // envelope strings assemble above the sort (r9 — previously the
-      // exchange carried ~850 MB of rendered strings)
-      Cdc.multiTableEnvelopesSorted(s, dir)),
-
-    "cdc_filter_paths" -> ((s, dir) => {
-      // envelope field paths + `in` list (eventfilter.go env mapping)
-      graft.filter.EventFilter("""value.op == "u" || value.after.user_id in [1, 2, 3]""")
-        .apply(Cdc.walEvents(s, dir))
-        .select(col("lsn"), col("op"), col("user_id"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_filter_strfns" -> ((s, dir) => {
-      // matches/contains/startsWith + literal-preserving lexer: the
-      // quoted prefix contains '{' and an escaped quote
-      graft.filter.EventFilter(
-        """props contains "7" && !(props startsWith "{\"k\": 1") && props matches "[0-9][0-9]"""")
-        .apply(Cdc.walEvents(s, dir))
-        .select(col("lsn"), col("props"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_filter_builtins" -> ((s, dir) => {
-      // expr-lang built-in functions (len/min/indexOf/upper/hasPrefix/
-      // trimPrefix) compiled to Catalyst twins — eventfilter.go:73-83
-      // compiles the full Expr stdlib
-      graft.filter.EventFilter(
-        """len(props) % 2 == 0 && min(user_id, 500) < 500 && indexOf(props, "k") == 2 && (upper(event_type) in ["PURCHASE", "VIEW", "ERROR"] || hasPrefix(trimPrefix(event_type, "sign"), "up"))""")
-        .apply(Cdc.walEvents(s, dir))
-        .select(col("lsn"), col("user_id"), col("event_type"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_filter_ternary" -> ((s, dir) => {
-      // ternary + nil-coalescing
-      graft.filter.EventFilter(
-        """(user_id > 50 ? op == "c" : op != "c") && (props ?? "") endsWith "9}"""")
-        .apply(Cdc.walEvents(s, dir))
-        .select(col("lsn"), col("op"), col("user_id"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_filter_wave2" -> ((s, dir) => {
-      // wave-2 dialect surface: postfix slicing (0-based end-exclusive),
-      // map-literal KEY membership, and type() — all compiled to
-      // Catalyst builtins through the polymorphic PolyAt/PolySlice/
-      // PolyIn expressions (dispatch at analysis, codegen at run time)
-      graft.filter.EventFilter(
-        """event_type[0:3] in {sig: 1, pur: 2, vie: 3} && len(props[2:6]) == 4 && type(user_id) == "int"""")
-        .apply(Cdc.shapeWal(Tables.eventsSpreadBarrier(s, dir)))
-        .select(col("lsn"), col("event_type"), col("user_id"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_filter_wave3" -> ((s, dir) => {
-      // wave-3 dialect surface: let-binding prelude, inclusive ranges
-      // (with `in` and as closure/take/reduce inputs), reduce with the
-      // #acc accumulator, findIndex — one narrow codegen predicate
-      graft.filter.EventFilter(
-        """let v = int(props[6:-1]); v in 10..60 && reduce(take(1..v, 3), #acc + #, int(0)) == 6 && findIndex(split(props, ":"), {hasPrefix(#, " ")}) == 1""")
-        .apply(Cdc.shapeWal(Tables.eventsSpreadBarrier(s, dir)))
-        .select(col("lsn"), col("user_id"), col("props"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_filter_wave4" -> ((s, dir) => {
-      // wave-4 dialect surface: end-scans (findLast/findLastIndex),
-      // stable sortBy + get, concat/takeLast array algebra, mean, and
-      // a base64 round-trip — still one narrow codegen predicate
-      graft.filter.EventFilter(
-        """let toks = split(props, ":"); let lens = map(toks, {len(#)}); let v = int(props[6:-1]); findLastIndex(toks, {hasSuffix(#, "}")}) == 1 && findLast(toks, {hasPrefix(#, "{")}) == get(toks, 0) && takeLast(sortBy(concat(lens, [v]), #), 1) == [v] && mean(concat(lens, [v])) >= 20.0 && len(get(groupBy(toks, len(#)), 4)) >= 1 && fromBase64(toBase64(props)) == props""")
-        // spread input: this wave's predicate (sortBy/groupBy/base64
-        // kernels) is pure compute no scan could push — layout-aware
-        // fan-out off the single-row-group fixture (no-op at scale)
-        .apply(Cdc.shapeWal(Tables.eventsSpreadBarrier(s, dir)))
-        .select(col("lsn"), col("user_id"), col("props"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_filter_wave5" -> ((s, dir) =>
-      // wave-5 dialect surface: bit builtins (&, |, ^, shifts as 64-bit
-      // Catalyst operators) and lastIndexOf (reverse-trick compile)
-      graft.filter.EventFilter(
-        """bitand(user_id, 7) in [1, 2, 3] && bitshl(1, 3) == 8 && bitushr(bitshl(user_id, 1), 1) == user_id && bitxor(bitor(user_id, 4), 4) <= user_id && lastIndexOf(props, "1") >= 2 && lastIndexOf(props, "zz") == -1""")
-        .apply(Cdc.shapeWal(Tables.eventsSpreadBarrier(s, dir)))
-        .select(col("lsn"), col("user_id"), col("props"))
-        .orderBy(col("lsn"))),
-
-    "cdc_filter_wave6" -> ((s, dir) =>
-      // wave-6 dialect surface: fromJSON (columnar map<string,string>
-      // reading), toJSON, toPairs/fromPairs (native entry structs), and
-      // splitAfter — the whole predicate stays one codegen projection
-      graft.filter.EventFilter(
-        """int(get(fromJSON(value.props), "k")) >= 40 && len(toPairs(fromJSON(value.props))) == 1 && get(fromPairs(toPairs(fromJSON(value.props))), "k") == get(fromJSON(value.props), "k") && len(splitAfter(value.event_type, "e")) >= 2 && first(splitAfter(value.event_type, "e")) != "e" && len(toJSON(keys(fromJSON(value.props)))) == 5""")
-        .apply(Cdc.shapeWal(Tables.eventsSpreadBarrier(s, dir)))
-        .select(col("lsn"), col("user_id"), col("event_type"), col("props"))
-        .orderBy(col("lsn"))),
-
-    "cdc_filter_wave7" -> ((s, dir) =>
-      // wave-7 dialect surface: optional chaining `?.` (nil-safe member
-      // access over maps — every access already total in the columnar
-      // compile) incl. chained `?.` after a let binding, missing-key nil
-      // + `??` default, and nil-propagation through int()
-      graft.filter.EventFilter(
-        """let m = fromJSON(value.props);
-          |m?.k != nil && (m?.absent ?? "42") == "42" &&
-          |int(fromJSON(value.props)?.k) >= 0 &&
-          |(int(m?.absent) ?? -1) == -1""".stripMargin)
-        .apply(Cdc.shapeWal(Tables.eventsSpreadBarrier(s, dir)))
-        .select(col("lsn"), col("user_id"), col("props"))
-        .orderBy(col("lsn"))),
-
-    "cdc_filter_wave8" -> ((s, dir) =>
-      // wave-8: the filter env's SCHEMA members (the reference evaluates
-      // over {key, value, keySchema, valueSchema} — eventfilter.go:
-      // 127-138). The descriptor is plan-time constant, so these paths
-      // fold to literals at compile time; the bracket indexes run over
-      // the inlined array/map literals. Zero per-row schema work.
-      graft.filter.EventFilter(
-        """valueSchema.name == "graft.public.events.Envelope" &&
-          |valueSchema.type == "struct" &&
-          |len(valueSchema.fields) == 6 &&
-          |valueSchema.fields[3]["field"] == "op" &&
-          |keySchema.name == "graft.public.events.Key" &&
-          |keySchema.fields[0]["name"] == "event_id" &&
-          |value.user_id % 2 == 0""".stripMargin)
-        .apply(Cdc.shapeWal(Tables.eventsSpreadBarrier(s, dir)))
-        .select(col("lsn"), col("user_id"))
-        .orderBy(col("lsn"))),
-
-    "cdc_filter_wave9" -> ((s, dir) => {
-      // wave-9 dialect surface: date() with a Go reference-time layout
-      // and timezone() (expr-lang's date/timezone builtins; Go
-      // time.ParseInLocation semantics — the wall-clock string is IN
-      // the zone, compared as the instant it denotes). The zone under
-      // oracle test is a FIXED-OFFSET id so the DuckDB twin is plain
-      // interval arithmetic (no ICU dependency); DST-zone parity is
-      // spec-proven against java.time in EventFilterSpec instead.
-      val wal = Cdc.shapeWal(Tables.eventsSpreadBarrier(s, dir))
-        .withColumn("dt",
-          date_format(timestamp_millis(col("ts_ms")), "yyyy-MM-dd HH:mm:ss"))
-      graft.filter.EventFilter(
-        """date(value.dt, "2006-01-02 15:04:05", timezone("Etc/GMT+5")) < date("2024-01-15T19:00:00") &&
-          |date(value.dt, "2006-01-02 15:04:05") >= date("2024-01-05T00:00:00") &&
-          |value.user_id % 3 == 0""".stripMargin)
-        .apply(wal)
-        .select(col("lsn"), col("user_id"), col("dt"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_filter_closures" -> ((s, dir) => {
-      // expr-lang array closures (# placeholder, brace shorthand, nested
-      // map-inside-count) compiled to Catalyst higher-order functions —
-      // the predicate stays one narrow codegen projection
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
-        .withColumn("table_name", lit("public.documents"))
-      graft.filter.EventFilter(
-        """any(value.toks, {hasPrefix(#, "b")}) && count(map(value.toks, {len(#)}), {# >= 7}) > 3 && none(value.toks, {# == "zzz"}) && !all(value.toks, {len(#) < 7})""")
-        .apply(docs)
-        .select(col("doc_id"), size(col("toks")).as("n_toks"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "events_sessionize" -> ((s, dir) => {
-      Cdc.sessionize(Cdc.walEvents(s, dir))
-        .orderBy(col("user_id"), col("sess_no"))
-    }),
-
-    "q_interval_overlap" -> ((s, dir) => {
-      // two-sided range join, binned: purchases (any user) landing
-      // inside each user-session window — equi-join on the hour bin +
-      // residual BETWEEN, never a nested-loop cross product
-      val wal = Cdc.walEvents(s, dir)
-      val sessions = Cdc.sessionize(wal)
-        .select(col("user_id"), col("sess_no").cast("long").as("sess_no"),
-          col("sess_start_ms"), col("sess_end_ms"))
-      val purchases = wal.filter(col("event_type") === "purchase")
-        .select(col("lsn").as("purchase_lsn"), col("ts_ms").as("pt_ms"))
-      graft.ops.RangeJoin.pointInInterval(purchases, sessions,
-          "pt_ms", "sess_start_ms", "sess_end_ms", binWidth = 3600000L)
-        .select(col("user_id"), col("sess_no"), col("purchase_lsn"), col("pt_ms"))
-        .orderBy(col("user_id"), col("sess_no"), col("purchase_lsn"))
-    }),
-
-    "q_range_autobin" -> ((s, dir) => {
-      // the SAME containment join as q_interval_overlap, written the
-      // NAIVE declarative way (bare BETWEEN, no manual binning) —
-      // RangeJoinBinRule rewrites it into the binned equi-join at
-      // optimization time, so the nested-loop product never plans.
-      // The binWidth conf scopes to a CHILD session: setting it on the
-      // shared session would race concurrent planners (Verify submits
-      // queries in parallel) into seeing a conf they never asked for
-      val sess = s.newSession()
-      GraftExtensions.registerTo(sess)
-      sess.conf.set("spark.graft.rangeJoin.binWidth", "3600000")
-      val wal = Cdc.walEvents(sess, dir)
-      val sessions = Cdc.sessionize(wal)
-        .select(col("user_id"), col("sess_no").cast("long").as("sess_no"),
-          col("sess_start_ms"), col("sess_end_ms"))
-      val purchases = wal.filter(col("event_type") === "purchase")
-        .select(col("lsn").as("purchase_lsn"), col("ts_ms").as("pt_ms"))
-      purchases
-        .join(sessions,
-          col("pt_ms") >= col("sess_start_ms") && col("pt_ms") <= col("sess_end_ms"))
-        .select(col("user_id"), col("sess_no"), col("purchase_lsn"), col("pt_ms"))
-        .orderBy(col("user_id"), col("sess_no"), col("purchase_lsn"))
-    }),
-
-    "events_funnel" -> ((s, dir) =>
-      // strict-order view→click→purchase funnel, converting within 7
-      // days of entry; greedy earliest-chain per user, nulls where the
-      // funnel stalls. Timestamps are floored to MICROS first: DuckDB
-      // truncates TIMESTAMP_NS to micro precision on read, so the
-      // engines must compare the same integers (the sub-micro tail
-      // would flip strict-order comparisons between them)
-      ops.EventAnalytics.funnel(
-          Tables.events(s, dir).withColumn("ts_us", expr("ts div 1000")),
-          steps = Seq("view", "click", "purchase"),
-          windowNs = 604800L * 1000000L, tsCol = "ts_us")
-        .orderBy(col("user_id"))),
-
-    "events_retention" -> ((s, dir) =>
-      // weekly cohort-retention triangle: users bucketed by first-seen
-      // week, distinct-active counts per (cohort, weeks-since) cell
-      ops.EventAnalytics.cohortRetention(Tables.events(s, dir),
-          periodNs = 604800L * 1000000000L)
-        .orderBy(col("cohort_period"), col("period_offset"))),
-
-    "events_time_bucket" -> ((s, dir) =>
-      // TimescaleDB first()/last() per day bucket — deterministic via
-      // the combined ts·10⁶+lsn order key, one partial-agg shuffle
-      ops.EventAnalytics.timeBucketFirstLast(Cdc.walEvents(s, dir))
-        .orderBy(col("event_type"), col("chunk_day"))),
-
-    "events_gapfill_locf" -> ((s, dir) =>
-      // time_bucket_gapfill + locf: dense per-type daily grid, absent
-      // buckets n=0 with last observed value carried forward
-      ops.EventAnalytics.gapfillLocf(Cdc.walEvents(s, dir))
-        .orderBy(col("event_type"), col("chunk_day"))),
-
-    "events_gapfill_interp" -> ((s, dir) =>
-      // gapfill → interpolate(): a deterministic outage mask (every
-      // third (day+typelen) slot dropped) creates REAL gaps, so the
-      // linear branch is exercised, not just the observed-day passthrough
-      ops.EventAnalytics.gapfillInterpolate(
-          Cdc.walEvents(s, dir)
-            .filter(expr("(chunk_day + length(event_type)) % 3 != 0")))
-        .orderBy(col("event_type"), col("chunk_day"))),
-
-    "events_candlestick" -> ((s, dir) =>
-      // candlestick_agg: OHLC + volume + integer VWAP per (type, day),
-      // open/close by the ts·10⁶+lsn order, mergeable accumulators
-      ops.EventAnalytics.candlestick(Cdc.walEvents(s, dir))
-        .orderBy(col("event_type"), col("chunk_day"))),
-
-    "events_heartbeat" -> ((s, dir) =>
-      // heartbeat_agg: 12h-TTL liveness merge per user — uptime,
-      // live-range count, longest dead gap, downtime
-      ops.EventAnalytics.heartbeatAgg(Cdc.walEvents(s, dir), ttlMs = 43200000L)
-        .orderBy(col("user_id"))),
-
-    "events_time_weighted_interp" -> ((s, dir) =>
-      // interpolated_average: LOCF holds carry across day boundaries,
-      // each day charged for its exact overlap with every hold span
-      ops.EventAnalytics.timeWeightedInterpolated(Cdc.walEvents(s, dir))
-        .orderBy(col("event_type"), col("chunk_day"))),
-
-    "events_hdr_quantiles" -> ((s, dir) =>
-      // approx_percentile on engine-exact parts: log2 (HDR) bucket
-      // sketch, mergeable by addition, integer in-bucket interpolation
-      ops.EventAnalytics.hdrQuantiles(Cdc.walEvents(s, dir))
-        .orderBy(col("event_type"), col("p"))),
-
-    "events_attribution" -> ((s, dir) =>
-      // purchase→view attribution: the stream-stream interval join's
-      // batch twin (one code path — withWatermark is a no-op in batch)
-      graft.streaming.StreamPipeline.streamStreamAttribution(Cdc.walEvents(s, dir))
-        .orderBy(col("purchase_lsn"), col("view_lsn"))),
-
-    "events_time_weighted" -> ((s, dir) =>
-      // time_weight('LOCF') per (type, day): exact integer numerator +
-      // observed span — division left to the caller (float ratios are
-      // not engine-exact)
-      ops.EventAnalytics.timeWeighted(Cdc.walEvents(s, dir))
-        .orderBy(col("event_type"), col("chunk_day"))),
-
-    "events_seasonality" -> ((s, dir) =>
-      // dow×hour activity matrix, Thursday-anchored integer epoch math
-      ops.EventAnalytics.seasonality(Cdc.walEvents(s, dir))
-        .orderBy(col("event_type"), col("dow"), col("hour"))),
-
-    "events_stats_agg" -> ((s, dir) =>
-      // stats_agg hyperfunction analog: the exact integer regression
-      // accumulator (mergeable by addition — the rollup() contract) +
-      // fixed-op-order double accessors scaled to integers
-      ops.EventAnalytics.statsAgg(Cdc.walEvents(s, dir))
-        .orderBy(col("event_type"))),
-
-    "events_stats_rollup" -> ((s, dir) =>
-      // the rollup() contract live: fine (type, day) accumulators — the
-      // granularity a cagg would materialize — whose sums re-aggregate
-      // exactly to any coarser slice (spec-proven ≡ the direct fit)
-      ops.EventAnalytics.statsAgg(Cdc.walEvents(s, dir),
-          Seq("event_type", "chunk_day"))
-        .select(col("event_type"), col("chunk_day"), col("n"), col("sum_x"),
-          col("sum_y"), col("sum_xy"), col("sum_x2"), col("sum_y2"))
-        .orderBy(col("event_type"), col("chunk_day"))),
-
-    "events_state_agg" -> ((s, dir) =>
-      // state_agg hyperfunction analog: per-state LOCF dwell time over
-      // each user's event sequence; open last intervals counted apart
-      ops.EventAnalytics.stateAgg(Cdc.walEvents(s, dir))
-        .orderBy(col("event_type"))),
-
-    "events_state_timeline" -> ((s, dir) =>
-      // state_timeline accessor: run-length encoded state periods per
-      // user, [start, end) against the next period's start
-      ops.EventAnalytics.stateTimeline(Cdc.walEvents(s, dir))
-        .orderBy(col("user_id"), col("period"))),
-
-    "events_candlestick_weekly" -> ((s, dir) =>
-      // rollup(candlestick_agg): weekly candles merged FROM the daily
-      // candle rows (never from raw ticks) — the oracle computes the
-      // week from scratch, so a hash match proves the rollup contract
-      ops.EventAnalytics.candlestickRollup(
-          ops.EventAnalytics.candlestick(Cdc.walEvents(s, dir)))
-        .orderBy(col("event_type"), col("chunk_week"))),
-
-    "conv_saturating_i32" -> ((s, dir) => {
-      // toolkit saturating i32 math: operands derived to cross both
-      // clamp bounds (sums past +2^31, mul both directions, negative
-      // sums for the _pos floor)
-      val base = Cdc.walEvents(s, dir).select(col("lsn"),
-        expr("cast((cast(floor(value * 100 + 0.5) as bigint) * 48271L) % 2147483647L as int)").as("a"),
-        expr("cast(((lsn * 69621L) % 2147483647L) - 1073741823L as int)").as("b"))
-      base.select(col("lsn"), col("a"), col("b"),
-        ops.EventAnalytics.saturatingAdd(col("a"), col("b")).as("sat_add"),
-        ops.EventAnalytics.saturatingSub(col("a"), col("b")).as("sat_sub"),
-        ops.EventAnalytics.saturatingMul(col("a"), col("b")).as("sat_mul"),
-        ops.EventAnalytics.saturatingAddPos(col("a"), col("b")).as("sat_add_pos"),
-        ops.EventAnalytics.saturatingSubPos(col("a"), col("b")).as("sat_sub_pos"))
-        .orderBy(col("lsn"))
-    }),
-
-    "events_duration_in_interp" -> ((s, dir) =>
-      // interpolated_duration_in accessor: per-(state, day) dwell time
-      // with per-user LOCF holds carrying across day boundaries
-      ops.EventAnalytics.interpolatedDurationIn(Cdc.walEvents(s, dir))
-        .orderBy(col("state"), col("chunk_day"))),
-
-    "events_lttb" -> ((s, dir) =>
-      // lttb hyperfunction analog (bucket-centroid parallel form):
-      // integer-exact scaled-area argmax, one window shuffle, no
-      // sequential dependency — see EventAnalytics.lttbDownsample
-      ops.EventAnalytics.lttbDownsample(Cdc.walEvents(s, dir), nBuckets = 40)
-        .orderBy(col("event_type"), col("bucket"))),
-
-    "events_change_point" -> ((s, dir) =>
-      // mean-shift CUSUM per type in exact integers: the scaled
-      // deviation n·cᵢ − i·S needs no rational mean; peak position =
-      // candidate change point (earliest lsn on ties)
-      ops.EventAnalytics.cusumChangePoint(Cdc.walEvents(s, dir))
-        .orderBy(col("event_type"))),
-
-    "events_histogram" -> ((s, dir) =>
-      // histogram() hyperfunction: 10 equal-width micro-value buckets
-      // per type + under/overflow, integer bucket arithmetic
-      ops.EventAnalytics.valueHistogram(Cdc.walEvents(s, dir),
-          loMicros = 100000000L, hiMicros = 900000000L, nBuckets = 10)
-        .orderBy(col("event_type"), col("bucket"))),
-
-    "events_instant_rate" -> ((s, dir) =>
-      // gauge idelta + counter irate from the final sample pair per
-      // series — both conventions from one window pass
-      ops.EventAnalytics.instantRate(Cdc.walEvents(s, dir))
-        .orderBy(col("event_type"))),
-
-    "events_counter_increase" -> ((s, dir) =>
-      // Prometheus-convention extrapolated increase per (type, day):
-      // exact integer accumulator, fixed-order double extrapolation
-      ops.EventAnalytics.counterIncreaseExtrapolated(Cdc.walEvents(s, dir))
-        .orderBy(col("event_type"), col("chunk_day"))),
-
-    "events_counter_delta" -> ((s, dir) =>
-      // counter_agg delta() with reset handling (drop ⇒ restart),
-      // integer milli-values, one per-key window
-      ops.EventAnalytics.counterDelta(Cdc.walEvents(s, dir))
-        .orderBy(col("user_id"))),
-
-    "events_gauge_agg" -> ((s, dir) =>
-      // gauge_agg: counter_agg for metrics that may decrease — signed
-      // delta plus left/right edge idelta/irate per (type, day)
-      ops.EventAnalytics.gaugeAgg(Cdc.walEvents(s, dir))
-        .orderBy(col("event_type"), col("chunk_day"))),
-
-    "events_time_weight" -> ((s, dir) =>
-      // time_weight('LOCF'|'Linear') + average accessor: integral over
-      // the bucket's duration, exact integer millicents both methods
-      ops.EventAnalytics.timeWeightedAvg(Cdc.walEvents(s, dir))
-        .orderBy(col("event_type"), col("chunk_day"))),
-
-    "events_stats2d" -> ((s, dir) =>
-      // stats_agg 2-D accessor family: covariance / corr /
-      // determination_coefficient / x_intercept from the SAME exact
-      // integer accumulator, fixed-op-order doubles floored to integers
-      ops.EventAnalytics.stats2dAccessors(Cdc.walEvents(s, dir))
-        .orderBy(col("event_type"))),
-
-    "events_stats_moments" -> ((s, dir) =>
-      // stats_agg skewness/kurtosis accessors: exact integer power sums
-      // (mergeable — the rollup contract) + central-moment expansion in
-      // fixed-order doubles, sqrt-only (pow is not correctly rounded)
-      ops.EventAnalytics.statsMoments(Cdc.walEvents(s, dir))
-        .orderBy(col("event_type"), col("chunk_day"))),
-
-    "events_max_n" -> ((s, dir) =>
-      // max_n/min_n/max_n_by: N extreme values per type with their
-      // carried payload; WindowGroupLimit keeps the exchange top-k-sized
-      ops.EventAnalytics.maxN(Cdc.walEvents(s, dir), n = 5)
-        .orderBy(col("side"), col("event_type"), col("rnk"))),
-
-    "events_hdr_rank" -> ((s, dir) =>
-      // approx_percentile_rank: the hdrQuantiles inverse — probe values
-      // rank against the power-of-two bucket table, integer interpolation
-      ops.EventAnalytics.hdrPercentileRank(Cdc.walEvents(s, dir),
-          probesCents = Seq(1000L, 10000L, 30000L, 56000L))
-        .orderBy(col("event_type"), col("probe_cents"))),
-
-    "text_bleu_pairs" -> ((s, dir) =>
-      // BLEU-style clipped n-gram precisions (p1..p4 ppm) + brevity
-      // parts per (even, odd) doc pair — the synthetic-rewrite QA gate
-      TextAnalysis.bleuPairs(Tables.documentsSpread(s, dir))
-        .orderBy(col("pair_id"))),
-
-    "classifier_calibration" -> ((s, dir) => {
-      // reliability report: margin bins relative to max |margin|
-      // (scale-invariant; portable FLOOR(x·n/max) signed division) vs
-      // empirical positive rate — score order must carry probability
-      // before the hyperplane gates a corpus
-      val feats = Learn.perceptronFeatures(Tables.documentsSpread(s, dir))
-      Learn.calibrationReport(feats, Learn.perceptronTrain(feats, iters = 3))
-        .orderBy(col("bin"))
-    }),
-
-    "events_freq_topn" -> ((s, dir) => {
-      // freq_agg/topn hyperfunction analog: Misra–Gries mergeable
-      // heavy-hitters as a custom TypedImperativeAggregate — ONE
-      // shuffle of capacity-sized sketch states, never of rows. The
-      // gate runs it in the exact regime (40 distinct keys ≤ capacity
-      // 64 ⇒ zero decrements ⇒ estimates ARE the counts and max_err
-      // is 0); the inexact-regime n/(k+1) bound is spec-proven
-      val keyed = Cdc.walEvents(s, dir).select(
-        concat(col("event_type"), lit("#"),
-          pmod(col("user_id"), lit(8)).cast("string")).as("k"))
-      keyed
-        .agg(graft.functions.MisraGriesAgg.freq_agg(col("k"), 64).as("fa"))
-        .select(explode(col("fa.items")).as("item"),
-          col("fa.dec").as("max_err"), col("fa.n").as("n_rows"))
-        .select(col("item.key").as("key"), col("item.est").as("est"),
-          col("max_err"), col("n_rows"))
-        .orderBy(col("est").desc, col("key"))
-    }),
-
-    "events_asap_smooth" -> ((s, dir) =>
-      // asap_smooth hyperfunction analog (ASAP, VLDB'17): hourly
-      // densified per-type series, candidate moving windows, winner =
-      // argmin integer roughness (telescoped diffs, wide-int squares);
-      // everything past the first agg is dashboard-sized
-      ops.EventAnalytics.asapSmooth(Cdc.walEvents(s, dir))
-        .orderBy(col("event_type"), col("hour"))),
-
-    "events_m4" -> ((s, dir) =>
-      // M4 downsample (VLDB'14): first/last/min/max per equal-count
-      // bucket — the pixel-exact line-rendering reduction; one window
-      // pass + one partial agg of four champions
-      ops.EventAnalytics.m4Downsample(Cdc.walEvents(s, dir), nBuckets = 40)
-        .orderBy(col("event_type"), col("bucket"))),
-
-    "events_cms_heavy" -> ((s, dir) => {
-      // count_min_sketch + in-plan decode: Spark ships the CMS aggregate
-      // but no SQL read-back — cms_estimate (custom expression) probes
-      // the broadcast one-row sketch per key on the executors. Gate:
-      // the CMS contract booleans (est ≥ true; est ≤ true + ε·N with
-      // the fixed seed ⇒ deterministic at every SF) hash alongside the
-      // exact counts
-      val wal = Cdc.walEvents(s, dir)
-      val sketch = wal.agg(
-        expr("count_min_sketch(user_id, 0.0005d, 0.99d, 42)").as("cms"),
-        count(lit(1)).as("n_rows"))
-      val exact = wal.groupBy(col("user_id")).agg(count(lit(1)).as("true_cnt"))
-      val est = graft.functions.CmsEstimate.cms_estimate(col("cms"), col("user_id"))
-      exact.crossJoin(broadcast(sketch))
-        .select(col("user_id"), col("true_cnt"), col("n_rows"),
-          (est >= col("true_cnt")).as("never_undercounts"),
-          // ceil(n / 2000) = ε·N at ε = 0.0005; integer div, not `/`
-          (est <= col("true_cnt") + expr("(n_rows + 1999) div 2000"))
-            .as("within_eps_n"))
-        .orderBy(col("user_id"))
-    }),
-
-    "events_hll_rollup" -> ((s, dir) => {
-      // hyperloglog + rollup() hyperfunction contract: per-day
-      // DataSketches HLL sketches union to the per-type range estimate
-      // (register-max merge — order/partitioning-invariant), instead of
-      // re-scanning the range. The gate emits the EXACT distincts (SQL-
-      // checkable) plus 5%-bound booleans for the rollup and direct
-      // estimates (~3×RSE at lgK=12 and deterministic — the sketch hash
-      // is fixed, so the comparison is stable at every SF, exact below
-      // the coupon threshold). Exact distincts aggregate in their own
-      // frames: a distinct agg mixed with the TypedImperative sketch agg
-      // would force the slow sort-based fallback (see q_quantiles_approx)
-      val wal = Cdc.walEvents(s, dir)
-      val daySk = wal.groupBy(col("event_type"), col("chunk_day"))
-        .agg(expr("hll_sketch_agg(user_id)").as("sk"))
-      val rolled = daySk.groupBy(col("event_type"))
-        .agg(expr("hll_sketch_estimate(hll_union_agg(sk))").as("est_rollup"),
-          count(lit(1)).as("n_days"))
-      val direct = wal.groupBy(col("event_type"))
-        .agg(expr("hll_sketch_estimate(hll_sketch_agg(user_id))").as("est_direct"))
-      val dayExact = wal.groupBy(col("event_type"), col("chunk_day"))
-        .agg(count_distinct(col("user_id")).as("day_users"))
-        .groupBy(col("event_type"))
-        .agg(sum(col("day_users")).as("sum_day_users"))
-      val allExact = wal.groupBy(col("event_type"))
-        .agg(count_distinct(col("user_id")).as("exact_users"))
-      rolled.join(direct, "event_type").join(dayExact, "event_type")
-        .join(allExact, "event_type")
-        .select(col("event_type"), col("n_days"), col("exact_users"),
-          col("sum_day_users"),
-          (abs(col("est_rollup") - col("exact_users")) * 20 <=
-            col("exact_users")).as("rollup_within_5pct"),
-          (abs(col("est_direct") - col("exact_users")) * 20 <=
-            col("exact_users")).as("direct_within_5pct"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q_asof_join" -> ((s, dir) => {
-      Cdc.asofLastOrder(Cdc.walEvents(s, dir), Tables.orders(s, dir))
-        .orderBy(col("event_id"))
-    }),
-
-    "dedup_prune" -> ((s, dir) => {
-      // end-to-end dedup: drop every doc that appears as the right side
-      // of a near-dup pair (keep-lowest-id policy)
-      val pairs = Dedup.jaccardPairs(Tables.documentsSpread(s, dir), n = 3, threshold10 = 4)
-      Tables.documentsSpread(s, dir)
-        .join(pairs.select(col("doc_b").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-        .select(col("doc_id"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- sketch/LSH ops. MinHash, SimHash, SRP-LSH and plain IVF have
-    //      full oracle twins (FNV-64a / shared-generator hyperplanes);
-    //      only the kmeans IVF variant stays rows-only (float-mean
-    //      association order is engine-defined) ----
-    "dedup_minhash_lsh" -> ((s, dir) => {
-      Dedup.minhashLshPairs(Tables.documentsSpread(s, dir)).orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    "dedup_paragraph_minhash" -> ((s, dir) => {
-      // paragraph-granularity fuzzy dedup (the Dolma/RefinedWeb recipe:
-      // boilerplate repeats at paragraph level long before whole docs
-      // collide): 16-token chunk units re-keyed doc_id·1000+chunk_no,
-      // then the SAME MinHash+LSH stack — chunking is a narrow
-      // projection, so the scale shape is unchanged from doc-level
-      val units = TextAnalysis.chunk(Tables.documentsSpread(s, dir), width = 16, overlap = 0)
-        .select((col("doc_id") * 1000 + col("chunk_no")).as("doc_id"),
-          col("chunk_text").as("text"))
-      Dedup.minhashLshPairs(units).orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    "dedup_simhash" -> ((s, dir) => {
-      Dedup.simhash(Tables.documentsSpread(s, dir)).orderBy(col("doc_id"))
-    }),
-
-    "ann_ivf_topk" -> ((s, dir) => {
-      // DEFAULT path: fitted exact-mean quantizer (2 Lloyd rounds) +
-      // balance guard; hash-verified against the unrolled-kmeans twin
-      val emb = Tables.embeddingsSpread(s, dir)
-      Similarity.ivfTopK(emb.filter(col("vec_id") < 10), emb, 5, nLists = 16, nProbe = 4)
-        .withColumnRenamed("rank", "rnk")
-        .orderBy(col("query_id"), col("rnk"))
-    }),
-
-    "ann_ivf_sampled_topk" -> ((s, dir) => {
-      // the 100 TB fit posture: Lloyd rounds over the pmod(vec_id,2)=0
-      // HALF of the corpus, assignment over everything — sampled fits
-      // stay hash-verified because the sample predicate is engine-neutral
-      val emb = Tables.embeddingsSpread(s, dir)
-      Similarity.ivfTopK(emb.filter(col("vec_id") < 10), emb, 5, nLists = 16,
-          nProbe = 4, fitSampleMod = 2)
-        .withColumnRenamed("rank", "rnk")
-        .orderBy(col("query_id"), col("rnk"))
-    }),
-
-    "ann_ivf_seed_topk" -> ((s, dir) => {
-      // seeded lowest-id quantizer baseline (kmeansIters = 0)
-      val emb = Tables.embeddingsSpread(s, dir)
-      Similarity.ivfTopK(emb.filter(col("vec_id") < 10), emb, 5, nLists = 16,
-          nProbe = 4, kmeansIters = 0)
-        .withColumnRenamed("rank", "rnk")
-        .orderBy(col("query_id"), col("rnk"))
-    }),
-
-    "ann_ivf_pq_topk" -> ((s, dir) => {
-      // true IVF-PQ: coarse quantizer routes, product quantizer scores
-      val emb = Tables.embeddingsSpread(s, dir)
-      Similarity.ivfPqTopK(emb.filter(col("vec_id") < 10), emb, 10,
-          nLists = 16, nProbe = 4)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "ann_ivf_pq_rerank" -> ((s, dir) => {
-      // two-stage: PQ proposes 30 candidates, exact cosine re-scores
-      // — full vectors touched only for candidates, never the corpus
-      val emb = Tables.embeddingsSpread(s, dir)
-      Similarity.ivfPqRerank(emb.filter(col("vec_id") < 10), emb, k = 10,
-          kCand = 30, nLists = 16, nProbe = 4)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "ann_ivf_kmeans_topk" -> ((s, dir) => {
-      // deeper fit: 3 distributed Lloyd rounds. Exact fixed-point means
-      // made this hash-verifiable (was rows-only when means were float)
-      val emb = Tables.embeddingsSpread(s, dir)
-      Similarity.ivfTopK(emb.filter(col("vec_id") < 10), emb, 5, nLists = 16,
-          nProbe = 4, kmeansIters = 3)
-        .withColumnRenamed("rank", "rnk")
-        .orderBy(col("query_id"), col("rnk"))
-    }),
-
-    "ann_lsh_cosine" -> ((s, dir) => {
-      Similarity.lshCosinePairs(Tables.embeddingsSpread(s, dir), dim = 64, threshold = 0.3)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "ann_lsh_occupancy" -> ((s, dir) =>
-      // the pre-flight saturation audit for the LSH candidate join:
-      // candidate_pairs prices each table's within-bucket join without
-      // running it — the number that says "raise nPlanes" at scale
-      Similarity.lshBucketStats(Tables.embeddingsSpread(s, dir), dim = 64)
-        .orderBy(col("tbl"))),
-
-    "ann_ivf_balance" -> ((s, dir) =>
-      // the quantizer-skew report: per-list size/share + micro-cosine
-      // cohesion for the default fitted quantizer — read BEFORE a run,
-      // fixed with more Lloyd rounds / higher k / the salt guard
-      Similarity.ivfBalance(Tables.embeddingsSpread(s, dir), nLists = 16,
-          kmeansIters = 2)
-        .orderBy(col("centroid_id"))),
-
-    "ann_recall_report" -> ((s, dir) => {
-      // the tuning loop ANN serving actually runs: recall@k of the IVF
-      // probe path (nProbe=2, deliberately lossy) against the exact
-      // scan, per query — the number that decides nProbe before a
-      // 100 TB index build. Integer pct keeps it engine-exact.
-      val emb = Tables.embeddingsSpread(s, dir)
-      val qs = emb.filter(col("vec_id") < 10)
-      val exact = Similarity.cosineTopK(qs, emb, 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val approx = Similarity.ivfTopK(qs, emb, 5, nLists = 16, nProbe = 2)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-      exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-        .select(col("query_id"), col("k"), col("n_hit"),
-          expr("n_hit * 100 div k").as("recall_pct"))
-        .orderBy(col("query_id"))
-    }),
-
-    "text_langid" -> ((s, dir) => {
-      Tables.documentsSpread(s, dir)
-        .select(col("doc_id"), TextAnalysis.langId("text").as("pred_lang"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_strip_markup" -> ((s, dir) => {
-      // C4's extraction step: deterministic HTML wrapper (script/style
-      // payload, attributes, comments, single- and double-escaped
-      // entities) around the corpus, stripped back to prose
-      val html = concat(
-        lit("<html><head><script type=\"text/javascript\">var x = 1 < 2;" +
-          "</script><style>p{color:red}</style></head><body><h1 class=\"t\">"),
-        col("source"), lit("</h1><p>"),
-        replace(col("text"), lit(" the "), lit(" &amp; ")),
-        lit(" &lt;tag&gt; &amp;lt;literal&#39;s&nbsp;end</p>" +
-          "<!-- note --></body></html>"))
-      Tables.documentsSpread(s, dir)
-        .select(col("doc_id"), TextAnalysis.stripMarkup(html).as("clean"))
-        .withColumn("n_tokens",
-          TextAnalysis.tokenCount(col("clean")).cast("long"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_langid_confusion" -> ((s, dir) =>
-      // the langid AUDIT: predicted × labeled confusion counts — the
-      // first table anyone checks before trusting a language gate.
-      // One corpus scan + one tiny (|langs|²-row) groupBy
-      Tables.documentsSpread(s, dir)
-        .select(col("lang"), TextAnalysis.langId("text").as("pred_lang"))
-        .groupBy(col("lang"), col("pred_lang"))
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy(col("lang"), col("pred_lang"))),
-
-    "multimodal_features" -> ((s, dir) => {
-      // real javax.imageio PNG decode: width/height are true pixel dims.
-      // Gate columns are the SQL-predictable invariants (the fixture
-      // dims derive from the id), so encode→decode round-trips hash
-      // against the oracle; byte_len/checksum (codec-specific) stay
-      // spec-asserted in MultimodalSpec
-      ops.Multimodal.decodeFeatures(ops.Multimodal.attachImages(Tables.documents(s, dir)))
-        .select(col("source_id"), col("mime"), col("width"), col("height"))
-        .orderBy(col("source_id"))
-    }),
-
-    "multimodal_ahash" -> ((s, dir) =>
-      // perceptual hash per image: real ImageIO decode → integer aHash
-      // (rows-only: codec output is not SQL-replicable)
-      ops.Multimodal.imageHashes(
-          ops.Multimodal.attachImages(Tables.documents(s, dir)))
-        .orderBy(col("source_id"))),
-
-    "dedup_image_ahash" -> ((s, dir) => {
-      // image near-dup demo: every doc's image + a 1px-perturbed
-      // re-encode; banded hamming join must recover the planted twins
-      // pinned: base feeds BOTH union branches (directly and through
-      // perturbImages) — unpinned, the PNG synthesis runs twice
-      val base = ops.Multimodal.attachImages(
-        Tables.documents(s, dir).filter(col("doc_id") < 2000))
-        .localCheckpoint(true)
-      val twins = ops.Multimodal.perturbImages(base, idOffset = 1000000L)
-      ops.Multimodal.imageNearDups(base.unionByName(twins), maxHamming = 3)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "dedup_audio_fp" -> ((s, dir) => {
-      // acoustic near-dup: base corpus + EXACT 4×-gain remasters —
-      // energy-delta fingerprints are gain-invariant, so every twin
-      // must pair; equality dedup, no pairwise stage
-      val docs = Tables.documents(s, dir).filter(col("doc_id") < 2000)
-      val base = ops.Multimodal.attachAudioGain(docs, gain = 1, idOffset = 0L)
-      val twins = ops.Multimodal.attachAudioGain(docs, gain = 4, idOffset = 1000000L)
-      ops.Multimodal.audioNearDups(base.unionByName(twins))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "multimodal_video" -> ((s, dir) => {
-      // real demux + per-keyframe ImageIO decode over the labeled
-      // frame-container fixture (no mp4 codec in the JDK). Scoped to
-      // 2000 docs: the bench cost of this query is dominated by the
-      // fixture's per-frame PNG ENCODE, not the operator under test
-      // gate columns: decoded frame dims (fixture-derivable), so the
-      // mux→demux→ImageIO chain hashes against the oracle; the PNG byte
-      // size stays spec-asserted
-      ops.Multimodal.videoKeyFrames(
-          ops.Multimodal.attachVideo(
-            Tables.documents(s, dir).filter(col("doc_id") < 2000)), stride = 2)
-        .select(col("source_id"), col("frame_no"), col("width"), col("height"))
-        .orderBy(col("source_id"), col("frame_no"))
-    }),
-
-    "dedup_video_keyframes" -> ((s, dir) => {
-      // video near-dup demo: every doc's container + a last-frame-
-      // trimmed repack; the keyframe-hash equi-join must recover each
-      // planted trimmed copy (rows-only: real-codec outputs)
-      // pinned: base feeds BOTH union branches (directly and through
-      // perturbVideos) — unpinned, the per-frame PNG mux runs twice
-      val base = ops.Multimodal.attachVideo(
-        Tables.documents(s, dir).filter(col("doc_id") < 1000))
-        .localCheckpoint(true)
-      val twins = ops.Multimodal.perturbVideos(base, idOffset = 1000000L)
-      ops.Multimodal.videoNearDups(base.unionByName(twins), stride = 2,
-          minShared = 2)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "multimodal_audio" -> ((s, dir) => {
-      // real javax.sound.sampled WAV decode: sample rate / channels /
-      // frame length parsed from the container
-      ops.Multimodal.audioFeatures(ops.Multimodal.attachAudio(Tables.documents(s, dir)))
-        .orderBy(col("source_id"))
-    }),
-
-    "multimodal_resize" -> ((s, dir) => {
-      // decode → bilinear box-fit resize → re-encode; emitted dims are
-      // the true resized pixel dims (bytes dropped for the dump)
-      ops.Multimodal.resizeImages(
-          ops.Multimodal.attachImages(Tables.documents(s, dir)), 16, 16)
-        .select(col("source_id"), col("mime"), col("width"), col("height"))
-        .orderBy(col("source_id"))
-    }),
-
-    "multimodal_frames" -> ((s, dir) => {
-      // frame slicing over opaque bytes; the corpus is ASCII, so the
-      // sliced frames re-read as text and gate against a substring twin
-      ops.Multimodal.sampleFrames(ops.Multimodal.attachMedia(Tables.documents(s, dir)))
-        .select(col("source_id"), col("frame_no"),
-          octet_length(col("frame")).as("frame_len"),
-          col("frame").cast("string").as("frame_text"))
-        .orderBy(col("source_id"), col("frame_no"))
-    }),
-
-    "cdc_envelope_json" -> ((s, dir) => {
-      // driver-checkable form (r8 advice): the rendered JSON is parsed
-      // BACK and its fields gate against the oracle — well-formedness,
-      // op routing, before/after presence rules, the textual LSN, the
-      // schema descriptor identity, and the key envelope all hash;
-      // byte-exactness of the envelope text itself is covered by the
-      // cdc_multitable twin (same builder) and DebeziumSchemaSpec
-      // one from_json per JSON column (sparse schema) instead of one
-      // get_json_object per FIELD: each get_json_object re-parses the
-      // whole envelope (schema descriptor included) per row, so the old
-      // form paid 7 full parses/row — the bench's top outlier at sf0.1
-      val envSchema = StructType(Seq(
-        StructField("payload", StructType(Seq(
-          StructField("op", StringType),
-          StructField("source", StructType(Seq(StructField("lsn", StringType)))),
-          StructField("after", StructType(Seq(StructField("event_id", LongType)))),
-          StructField("before", StructType(Seq(StructField("user_id", LongType))))))),
-        StructField("schema", StructType(Seq(
-          StructField("name", StringType), StructField("type", StringType))))))
-      val keySchema = StructType(Seq(
-        StructField("payload", StructType(Seq(StructField("event_id", LongType))))))
-      // sort FIRST, render+parse after (the conv_array_scalar_sweep
-      // posture): the range exchange ships the narrow WAL columns and
-      // the ~1 KB render + full parse-back run ABOVE it on all lanes —
-      // below it they ran inside the single-row-group scan task. Same
-      // rows, same builder (envelopeJsonCol), same parse.
-      Tables.sortedSpread(s, dir, "events", Cdc.walEvents(s, dir), col("lsn"))
-        .select(col("lsn"),
-          from_json(Cdc.envelopeJsonCol(), envSchema).as("env"),
-          from_json(Cdc.envelopeKeyJsonCol, keySchema).as("k"))
-        .select(col("lsn"),
-          col("env.payload.op").as("op"),
-          col("env.payload.source.lsn").as("source_lsn"),
-          col("env.payload.after.event_id").as("after_event_id"),
-          col("env.payload.before.user_id").as("before_user_id"),
-          col("env.schema.name").as("schema_name"),
-          col("env.schema.type").as("schema_type"),
-          col("k.payload.event_id").as("key_event_id"))
-    }),
-
-    "cdc_snapshot_partitions" -> ((s, dir) => {
-      // FNV-64a table→partition assignment (snapshotter.go:88 parity)
-      Tables.events(s, dir)
-        .select(concat(lit("public.events_"), col("user_id")).as("tbl")).distinct()
-        .select(col("tbl"),
-          graft.functions.FnvHash64.snapshotPartition(col("tbl"), 5).as("partition"))
-        .orderBy(col("tbl"))
-    }),
-
-    "dedup_semantic" -> ((s, dir) => {
-      // SemDeDup: cluster-scoped cosine pairs (within-cluster equi-join,
-      // never all-pairs) with each side's centroid similarity
-      Dedup.semanticDupPairs(Tables.embeddingsSpread(s, dir), nClusters = 16, threshold = 0.4)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "dedup_semantic_prune" -> ((s, dir) => {
-      // keep the LOWER-centroid-sim side of every dup relation (the
-      // paper's diversity-keeping policy, parallel relaxation)
-      Dedup.semanticPrune(Tables.embeddingsSpread(s, dir), nClusters = 16, threshold = 0.4)
-        .select(col("vec_id"), col("label"))
-        .orderBy(col("vec_id"))
-    }),
-
-    "dedup_semantic_incremental" -> ((s, dir) => {
-      // continuous-ingest SemDeDup: batch (high ids) pruned against the
-      // frozen history (low ids), binned by the HISTORY's quantizer
-      val emb = Tables.embeddingsSpread(s, dir)
-      Dedup.semanticPruneIncremental(
-          batch = emb.filter(col("vec_id") >= 350),
-          history = emb.filter(col("vec_id") < 350),
-          nClusters = 16, threshold = 0.4)
-        .select(col("vec_id"), col("label"))
-        .orderBy(col("vec_id"))
-    }),
-
-    "dedup_semantic_sweep" -> ((s, dir) =>
-      // the τ-tuning chart: pairs + cumulative would-be-drops per cosine
-      // threshold bucket, ONE pass over the pair set (re-running dedup
-      // per candidate τ is the naive 100 TB mistake)
-      Dedup.semanticThresholdSweep(Tables.embeddingsSpread(s, dir), nClusters = 16,
-          tauFloor = 0.2, step = 0.05)
-        .orderBy(col("threshold_milli"))),
-
-    "dedup_bloom_prune" -> ((s, dir) => {
-      // bloom-prefiltered incremental exact dedup: history = short-named
-      // sources, batch = long-named (the dedup_incremental split)
-      val docs = Tables.documents(s, dir)
-      Dedup.bloomPrune(
-        batch   = docs.filter(length(col("source")) === 5),
-        history = docs.filter(length(col("source")) === 4))
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_bloom_sharded" -> ((s, dir) => {
-      // the beyond-10^9-keys form: 4 hash-range bloom shards built in
-      // one grouped pass; each batch row probes exactly one filter
-      val docs = Tables.documents(s, dir)
-      Dedup.bloomPrune(
-        batch   = docs.filter(length(col("source")) === 5),
-        history = docs.filter(length(col("source")) === 4),
-        shards  = 4)
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_edit_distance" -> ((s, dir) => {
-      // fuzzy short-string dedup: exact levenshtein <= 6 over
-      // pigeonhole-blocked 24-char title prefixes (k+1 aligned
-      // segments; substitution-complete recall, indel shifts are the
-      // documented blocking trade). DEFAULT posture = the scale-safe
-      // cap (EditDistanceDfCap=250, slope 0.15 across the sf0.8
-      // synthetic decade) — the configuration a 1000-executor run
-      // should get without reading the docs
-      val titles = Tables.documentsSpread(s, dir)
-        .select(col("doc_id"), substring(col("text"), 1, 24).as("text"))
-      Dedup.editDistancePairs(titles, k = 6)
-        .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "dedup_edit_recall" -> ((s, dir) => {
-      // the recall-leaning OPT-IN: a wide df cap keeps boilerplate
-      // segment blocks in play (pre-cap quadratic candidate regime —
-      // SCALING.md's sf0.8 forensics measured slope 1.21); for small
-      // corpora where the extra candidates are affordable
-      val titles = Tables.documentsSpread(s, dir)
-        .select(col("doc_id"), substring(col("text"), 1, 24).as("text"))
-      Dedup.editDistancePairs(titles, k = 6, dfCap = 2000)
-        .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "dedup_edit_excised" -> ((s, dir) => {
-      // the cap's recall-loss AUDIT (r15 advice: excised hot blocks
-      // must be observable, not silent): every pigeonhole block the df
-      // cap cuts, with its document frequency — the corpus owner's
-      // before-trusting-the-default inspection surface. Small cap here
-      // so the fixture exercises a non-trivial excision set
-      val titles = Tables.documentsSpread(s, dir)
-        .select(col("doc_id"), substring(col("text"), 1, 24).as("text"))
-      Dedup.editDistanceExcisedBlocks(titles, k = 6, dfCap = 8)
-        .select(col("seg_i").cast("long").as("seg_i"), col("seg"),
-          col("L").cast("long").as("seg_len"), col("df"))
-        .orderBy(col("seg_i"), col("seg"), col("seg_len"))
-    }),
-
-    "layout_zorder" -> ((s, dir) =>
-      // the data-skipping clustering key: 10-bit Morton interleave of
-      // (n_chars, doc_id) rank spaces — files sorted by it carry tight
-      // min/max on BOTH columns
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          ops.Compaction.zOrderValue(Seq(
-            pmod(col("n_chars"), lit(1024L)), pmod(col("doc_id"), lit(1024L))),
-            bits = 10).as("zval"))
-        .orderBy(col("doc_id"))),
-
-    "mix_temperature" -> ((s, dir) =>
-      // T=2 temperature mixing (mT5 posture): keep rates ∝ sqrt(n)/n,
-      // engine-exact floor-sqrt weights + defined nested-floor ppm
-      Sampling.temperatureMixRates(Tables.documents(s, dir), budget = 50000L)
-        .orderBy(col("source"))),
-
-    "mix_unimax" -> ((s, dir) =>
-      // UniMax: epoch-capped waterfilling of a token budget across
-      // sources — small sources saturate at n*E, the rest split evenly
-      Sampling.unimaxAllocation(Tables.documents(s, dir),
-          budget = 100000L, epochCap = 2)
-        .orderBy(col("source"))),
-
-    "sample_neyman" -> ((s, dir) =>
-      // Neyman vs proportional stratified allocation of a 1000-doc
-      // budget: high-variance sources earn more than their share,
-      // largest-remainder apportionment sums to the budget exactly
-      Sampling.neymanAllocation(Tables.documents(s, dir), k = 1000L)
-        .orderBy(col("source"))),
-
-    "mix_quality_budget" -> ((s, dir) =>
-      // quality-first waterfall (the third mixing recipe next to
-      // UniMax/temperature): spend the budget on the highest-TTR
-      // sources first, each capped at 2.0 epochs
-      Sampling.qualityBudgetMix(
-          TextAnalysis.sourceProfile(Tables.documents(s, dir))
-            .select(col("source"), col("total_tokens").as("n_tokens"),
-              col("ttr_ppm").as("priority")),
-          budget = 20000L)
-        .orderBy(col("source"))),
-
-    "ann_matryoshka_recall" -> ((s, dir) => {
-      // Matryoshka truncation eval: recall@10 of 16-dim-prefix cosine
-      // search vs the 64-dim truth — is the 4x cheaper index safe?
-      val emb = Tables.embeddingsSpread(s, dir)
-      Similarity.matryoshkaRecall(emb.filter(col("vec_id") < 10), emb,
-          k = 10, prefixDim = 16)
-        .orderBy(col("query_id"))
-    }),
-
-    "pack_concat" -> ((s, dir) =>
-      // shard materialization: the EOS-joined blob + char-offset index
-      // a training loader consumes, per (source, 512-token shard)
-      Sampling.packConcat(Tables.documents(s, dir), budgetTokens = 512)
-        .orderBy(col("source"), col("shard"))),
-
-    "pack_manifest" -> ((s, dir) =>
-      // shard integrity sidecar: byte size + sha256 per blob — what the
-      // loader checks before reading; manifest ≡ artifact by derivation
-      Sampling.packManifest(Tables.documents(s, dir), budgetTokens = 512)
-        .orderBy(col("source"), col("shard"))),
-
-    "sample_splits" -> ((s, dir) =>
-      // leakage-safe train/val/test: content-keyed FNV ppm, so exact
-      // duplicates always share a split and can't leak into eval
-      Sampling.assignSplits(Tables.documents(s, dir))
-        .select(col("doc_id"), col("split"))
-        .orderBy(col("doc_id"))),
-
-    "sample_cap_per_source" -> ((s, dir) => {
-      // RefinedWeb-style per-domain frequency cap: best 20 docs per
-      // source by (n_chars desc, doc_id)
-      Sampling.capPerGroup(Tables.documents(s, dir), "source", 20,
-          Seq(col("n_chars").desc, col("doc_id")))
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "sample_top_quantile" -> ((s, dir) => {
-      // quantile gate: top 25% of each source by length rank,
-      // integer-exact (rank*100 <= 25*count)
-      Sampling.topPercentPerGroup(Tables.documents(s, dir), "source", 25,
-          Seq(col("n_chars").desc, col("doc_id")))
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_lm_quality" -> ((s, dir) => {
-      // CCNet-style LM quality score: add-one-smoothed bigram likelihood
-      // (integer-exact surrogate) of the long-source slice under a model
-      // fit on the short-source "clean reference" slice
-      val docs = Tables.documents(s, dir)
-      TextAnalysis.lmLikelihoodMilli(
-          docs.filter(length(col("source")) === 5),
-          reference = docs.filter(length(col("source")) === 4))
-        .orderBy(col("doc_id"))
-    }),
-
-    "profile_source_stats" -> ((s, dir) =>
-      // per-source corpus-health report: doc/token counts, vocabulary,
-      // type-token ratio, mean doc length — all integer-exact
-      TextAnalysis.sourceProfile(Tables.documents(s, dir))
-        .orderBy(col("source"))),
-
-    "text_stupid_backoff" -> ((s, dir) => {
-      // Brants et al. 2007 stupid-backoff trigram scoring: highest
-      // observed order wins, lower orders carry the fixed 0.4 factor —
-      // integer-exact micro scores, model fit on the clean-slice
-      val docs = Tables.documentsSpread(s, dir)
-      TextAnalysis.stupidBackoffMilli(
-          docs.filter(length(col("source")) === 5),
-          reference = docs.filter(length(col("source")) === 4))
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_chunk_exact" -> ((s, dir) =>
-      // chunk-level exact dedup (the Dolma paragraph-dedup granularity):
-      // duplicated 20-token chunks removed corpus-wide, first stays
-      Dedup.chunkDedup(Tables.documents(s, dir), chunkTokens = 20)
-        .orderBy(col("doc_id"))),
-
-    "text_bm25_topk" -> ((s, dir) => {
-      // integer fixed-point BM25 retrieval for a fixed query term set
-      TextAnalysis.bm25TopK(Tables.documentsSpread(s, dir),
-          Seq("hash", "join", "vector"), k = 15)
-        .orderBy(col("score_milli").desc, col("doc_id"))
-    }),
-
-    "profile_k_anonymity" -> ((s, dir) =>
-      // governance gate: (lang, source) quasi-identifier groups below
-      // k=5 re-identify their members; 1-row report, examples withheld
-      graft.ops.Profile.kAnonymity(Tables.documents(s, dir),
-        Seq("lang", "source"), k = 5)),
-
-    "profile_mad_outliers" -> ((s, dir) =>
-      // robust per-source length-outlier gate: lower-median/MAD, all
-      // integer, 50% breakdown point — the estimator the outliers
-      // themselves can't drag
-      graft.ops.Profile.madOutliers(Tables.documents(s, dir), "n_chars", k = 3)
-        .orderBy(col("source"))),
-
-    "retrieval_maxsim" -> ((s, dir) =>
-      // ColBERT-style late interaction on engine-exact parts: per query
-      // unit, the best-matching 8-token chunk; score = Σ of the maxes.
-      // Long docs win on a local passage instead of an averaged blur
-      Retrieval.maxSimTopK(Tables.documents(s, dir),
-        Seq("vector", "batch window", "slow scan"), k = 10)
-        .orderBy(col("rank"))),
-
-    "retrieval_rrf" -> ((s, dir) => {
-      // hybrid retrieval: BM25 top-50 ⊕ dense hash-embedding top-50,
-      // merged by reciprocal-rank fusion (integer micro-scaled)
-      val docs = Tables.documents(s, dir)
-      Retrieval.rrfFuse(
-          Retrieval.sparseTopK(docs, Seq("hash", "join", "vector"), 50),
-          Retrieval.denseTopK(docs, "hash join vector", 50))
-        .select(col("doc_id"), col("sparse_rank"), col("dense_rank"),
-          col("rrf_micro"), col("rank"))
-        .orderBy(col("rank"))
-    }),
-
-    "retrieval_hard_negatives" -> ((s, dir) =>
-      // contrastive hard negatives: dense-retrieved docs the lexical
-      // arm misses — the DPR/Contriever negative-mining set
-      Retrieval.hardNegatives(Tables.documents(s, dir),
-          Seq("hash", "join", "vector"), "hash join vector")
-        .select(col("doc_id"), col("dot"), col("dense_rank"))
-        .orderBy(col("dense_rank"))),
-
-    "retrieval_eval" -> ((s, dir) =>
-      // recall@20 / MRR of the dense arm and the fusion vs the BM25
-      // top-10 relevance proxy — is the fusion earning its extra arm?
-      Retrieval.evalVsLexical(Tables.documents(s, dir),
-          Seq("hash", "join", "vector"), "hash join vector")
-        .orderBy(col("system"))),
-
-    "topic_purity" -> ((s, dir) =>
-      // external-validity check of the topic clustering: per topic the
-      // dominant lang label and its share (ties to the largest label)
-      TextAnalysis.topicPurity(Tables.documents(s, dir))
-        .orderBy(col("topic_id"))),
-
-    "q_grouping_sets" -> ((s, dir) =>
-      // GROUPING SETS ((type), (day), ()): three aggregation grains in
-      // one pass, grouping_id disambiguates the null grain markers
-      Cdc.walEvents(s, dir)
-        .groupingSets(
-          Seq(Seq(col("event_type")), Seq(col("chunk_day")), Seq()),
-          col("event_type"), col("chunk_day"))
-        .agg(grouping_id().as("gid"), count(lit(1)).as("n"),
-          sum(expr("cast(floor(value * 1000 + 0.5) as bigint)")).as("sum_milli"))
-        .select(col("gid"), col("event_type"), col("chunk_day"),
-          col("n"), col("sum_milli"))
-        .orderBy(col("gid"), col("event_type"), col("chunk_day"))),
-
-    "q_unpivot_daily" -> ((s, dir) =>
-      // wide per-day metrics melted long (the Spark 3.4+ unpivot /
-      // ANSI UNPIVOT): name-value pairs a metrics store ingests
-      Cdc.walEvents(s, dir)
-        .groupBy(col("chunk_day"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(expr("cast(floor(value * 1000 + 0.5) as bigint)")).as("sum_milli"),
-          max(expr("cast(floor(value * 1000 + 0.5) as bigint)")).as("max_milli"))
-        .unpivot(Array(col("chunk_day")),
-          Array(col("n_events"), col("sum_milli"), col("max_milli")),
-          "metric", "value")
-        .orderBy(col("chunk_day"), col("metric"))),
-
-    "retrieval_ndcg" -> ((s, dir) =>
-      // NDCG@10: rank-aware where recall is rank-blind — DCG discounts
-      // are plan-time integer-micro constants (no in-engine log, no
-      // order-dependent double sums)
-      Retrieval.ndcgAtK(Tables.documents(s, dir),
-          Seq("hash", "join", "vector"), "hash join vector")
-        .orderBy(col("system"))),
-
-    "retrieval_rank_eval" -> ((s, dir) =>
-      // the standard IR eval card: MRR / P@10 / recall@10 / AP@10 per
-      // system, integer-exact over k-bounded hit frames
-      Retrieval.rankEvalAtK(Tables.documents(s, dir),
-          Seq("hash", "join", "vector"), "hash join vector")
-        .orderBy(col("system"))),
-
-    "ann_sq_topk" -> ((s, dir) => {
-      // SQ8 search: exact i64 dot over int8 codes, scales multiply back
-      // in only at the final fixed-order score
-      val emb = Tables.embeddingsSpread(s, dir)
-      Similarity.sqTopK(emb.filter(col("vec_id") < 10), emb, 5)
-        .orderBy(col("query_id"), col("rnk"))
-    }),
-
-    "profile_gini" -> ((s, dir) =>
-      // corpus-mix inequality: Gini of doc/token mass across sources,
-      // exact sorted-rank identity in ppm
-      graft.ops.Profile.giniReport(Tables.documents(s, dir))),
-
-    "profile_heaps_curve" -> ((s, dir) =>
-      // vocabulary growth at corpus-prefix checkpoints (Heaps' law):
-      // first-occurrence trick — one linear token groupBy, no
-      // per-checkpoint distinct
-      graft.ops.Profile.heapsCurve(Tables.documents(s, dir))
-        .orderBy(col("frac_ppm"))),
-
-    "dedup_minhash_est" -> ((s, dir) =>
-      // signature-agreement Jaccard estimates vs exact, per LSH
-      // candidate pair — the k-width calibration companion of lshEval
-      Dedup.minhashJaccardEst(Tables.documentsSpread(s, dir))
-        .orderBy(col("doc_a"), col("doc_b"))),
-
-    "split_leakage" -> ((s, dir) => {
-      // decontamination audit: near-dup pairs (MinHash-LSH) that CROSS
-      // the content-keyed train/val/test boundary — exact duplicates
-      // can't leak (content hashing pins them to one split), so every
-      // hit here is a fuzzy leak the split assignment can't see.
-      // NOTE: the pair set is star-capped in hot buckets, so a
-      // non-anchor x non-anchor dup can escape this PAIR listing —
-      // split_leakage_clusters is the complete (component-level) audit
-      val docs = Tables.documents(s, dir)
-      val splits = Sampling.assignSplits(docs).select(col("doc_id"), col("split"))
-      Dedup.minhashLshPairs(docs)
-        .join(splits.select(col("doc_id").as("doc_a"), col("split").as("split_a")), "doc_a")
-        .join(splits.select(col("doc_id").as("doc_b"), col("split").as("split_b")), "doc_b")
-        .filter(col("split_a") =!= col("split_b"))
-        .select(col("doc_a"), col("doc_b"), col("split_a"), col("split_b"))
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    "split_leakage_clusters" -> ((s, dir) => {
-      // the COMPLETE decontamination audit: pairwise split_leakage can
-      // miss a non-anchor x non-anchor dup inside a star-capped hot
-      // bucket, but star edges preserve connected components — so audit
-      // at the CLUSTER level: any near-dup cluster whose members span
-      // more than one content-keyed split is a leak, with no pair-set
-      // blind spot at any bucket size
-      val docs = Tables.documents(s, dir)
-      val splits = Sampling.assignSplits(docs).select(col("doc_id"), col("split"))
-      Dedup.clusters(Dedup.minhashLshPairs(docs))
-        .join(splits, "doc_id")
-        .groupBy(col("cluster_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("split")).as("n_splits"),
-          concat_ws(",", array_sort(collect_set(col("split")))).as("splits"))
-        .filter(col("n_splits") > 1)
-        .orderBy(col("cluster_id"))
-    }),
-
-    "split_by_cluster" -> ((s, dir) => {
-      // the FIX for split_leakage: near-dup clusters (connected
-      // components of the MinHash-LSH graph) keyed by their
-      // representative's content hash — one split per cluster, so
-      // fuzzy leakage across train/val/test is structurally impossible
-      val docs = Tables.documents(s, dir)
-      Sampling.assignSplitsByCluster(docs, Dedup.minhashLshPairs(docs))
-        .select(col("doc_id"), col("cluster_id"), col("split"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_norm_exact" -> ((s, dir) => {
-      // normalize-then-hash exact dedup (C4/RefinedWeb form)
-      Dedup.normalizedExact(Tables.documents(s, dir))
-        .orderBy(col("norm_hash"))
-    }),
-
-    "dedup_cdc_chunks" -> ((s, dir) =>
-      // content-defined chunk dedup: boundaries where the 3-gram FNV
-      // hits hash mod 16 = 0 (content-anchored — edits reshape chunks
-      // locally, unlike fixed-width); first occurrence survives
-      Dedup.cdcChunkDedup(Tables.documentsSpread(s, dir), w = 3, maskBits = 4)
-        .orderBy(col("doc_id"))),
-
-    "dedup_unicode_nfc" -> ((s, dir) => {
-      // canonical-form dedup: the SAME text arrives precomposed (U+00E9)
-      // and decomposed (e + U+0301) — byte-hash dedup sees 2 docs, the
-      // codegen unicode_normalize(NFC) key merges them. Variants are
-      // synthesized per doc (both forms of an accented suffix); the
-      // countDistinct pair proves raw keys split where NFC keys fuse.
-      import graft.functions.TextFunctions
-      Tables.documents(s, dir)
-        .select(col("doc_id"), explode(array(
-          concat(col("text"), lit(" café")),
-          concat(col("text"), lit(" café")))).as("raw"))
-        .groupBy(col("doc_id"))
-        .agg(countDistinct(col("raw")).as("n_raw"),
-          countDistinct(TextFunctions.unicode_normalize(col("raw"))).as("n_nfc"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_containment" -> ((s, dir) => {
-      // containment near-dups: a doc 80%-contained in another is a dup
-      // even when symmetric Jaccard dilutes below any threshold
-      Dedup.containmentPairs(Tables.documents(s, dir), n = 3, threshold10 = 8)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    "dedup_winnow_prune" -> ((s, dir) => {
-      Dedup.winnowingPrune(Tables.documentsSpread(s, dir), k = 5, w = 4, minShared = 2)
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_cluster_report" -> ((s, dir) => {
-      // the dedup run's headline output: cluster-size histogram (how
-      // many dup groups of each size) over the near-dup graph
-      val pairs = Dedup.jaccardPairs(Tables.documentsSpread(s, dir), n = 3, threshold10 = 4)
-      Dedup.clusters(pairs)
-        .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
-        .groupBy(col("sz")).agg(count(lit(1)).as("n_clusters"))
-        .orderBy(col("sz"))
-    }),
-
-    "dedup_winnow_fp" -> ((s, dir) => {
-      // winnowing fingerprint sets (MOSS): window-min of FNV k-gram hashes
-      Dedup.winnowingFingerprints(Tables.documents(s, dir), k = 5, w = 4)
-        .orderBy(col("doc_id"), col("fp"))
-    }),
-
-    "dedup_winnow_pairs" -> ((s, dir) => {
-      Dedup.winnowingPairs(Tables.documents(s, dir), k = 5, w = 4, minShared = 2)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    "corpus_diff" -> ((s, dir) => {
-      // version audit: synthetic v2 = drop ids < 20, modify 20..39,
-      // add 10 new ids — classify every id across versions
-      val docs = Tables.documents(s, dir)
-      val after = docs.filter(col("doc_id") >= 20)
-        .withColumn("text", when(col("doc_id") < 40,
-          concat(col("text"), lit(" v2"))).otherwise(col("text")))
-        .unionByName(docs.filter(col("doc_id") < 10)
-          .withColumn("doc_id", col("doc_id") + 100000))
-      TextAnalysis.corpusDiff(docs, after)
-        .orderBy(col("doc_id"))
-    }),
-
-    "corpus_divergence" -> ((s, dir) =>
-      // mixing diagnostic: per-source total-variation distance from the
-      // corpus blend, integer ppm (which source is lexically unlike the
-      // mix — the signal mixture reweighting actually moves)
-      TextAnalysis.sourceDivergence(Tables.documents(s, dir))
-        .orderBy(col("source"))),
-
-    "pipeline_quality_buckets" -> ((s, dir) => {
-      // CCNet-style quality bucketing composed from two proven ops in
-      // ONE plan: per-doc classifier score → keep the better half of
-      // each source (quantile gate, integer-exact)
-      val scored = Tables.documents(s, dir).select(
-        col("doc_id"), col("source"),
-        TextAnalysis.classifierScoreMilli("text").as("score_milli"))
-      Sampling.topPercentPerGroup(scored, "source", 50,
-          Seq(col("score_milli").desc, col("doc_id")))
-        .orderBy(col("doc_id"))
-    }),
-
-    "sample_dsir_topk" -> ((s, dir) => {
-      // DSIR-shaped selection: rank the general corpus by hashed-bigram
-      // similarity to the src0 target domain, keep the top 100
-      val docs = Tables.documents(s, dir)
-      TextAnalysis.dsirScores(
-          raw = docs.filter(col("source") =!= "src0"),
-          target = docs.filter(col("source") === "src0"))
-        .orderBy(col("dsir_score_ppm").desc, col("doc_id"))
-        .limit(100)
-    }),
-
-    "corpus_top_ngrams" -> ((s, dir) => {
-      // corpus-level heavy hitters = boilerplate shortlist
-      TextAnalysis.topNgrams(Tables.documents(s, dir), n = 3, k = 20)
-    }),
-
-    "text_boilerplate" -> ((s, dir) =>
-      // per-doc share of corpus-common 3-grams (df >= 4): the doc-level
-      // boilerplate signal behind RefinedWeb/CCNet line filtering
-      TextAnalysis.boilerplateScore(Tables.documents(s, dir), n = 3, minDf = 4)
-        .orderBy(col("doc_id"))),
-
-    "topic_clusters" -> ((s, dir) =>
-      // BERTopic-shaped corpus map: hash-embed → exact-Lloyd k-means →
-      // fixed-point c-TF-IDF labels; the whole chain stays hash-
-      // verifiable because every stage is engine-exact
-      TextAnalysis.topicClusters(Tables.documents(s, dir), nTopics = 8, iters = 2)
-        .orderBy(col("topic_id"), col("rank"))),
-
-    "text_hash_embedding" -> ((s, dir) =>
-      // model-free doc embedding via the signed hashing trick: 64-dim
-      // FNV-bucketed signed token counts, map-only, feeds the ANN family
-      TextAnalysis.hashEmbedding(Tables.documents(s, dir), dim = 64)
-        .select(col("vec_id").as("doc_id"),
-          array_join(transform(col("embedding"),
-            v => v.cast("long").cast("string")), ",").as("emb_csv"))
-        .orderBy(col("doc_id"))),
-
-    "source_overlap" -> ((s, dir) =>
-      // pairwise distinct-3-gram Jaccard between sources: the
-      // mirror-crawl detector read before committing mixing weights
-      TextAnalysis.sourceOverlap(Tables.documents(s, dir), n = 3)
-        .orderBy(col("source_a"), col("source_b"))),
-
-    "source_overlap_approx" -> ((s, dir) => {
-      // the 100 TB overlap path: HLL inclusion-exclusion per source
-      // pair — corpus read once into sketch states, no distinct, no
-      // gram self-join. Gate: exact sizes hash (gate-only arithmetic,
-      // same pairing as q_quantiles_approx) + deterministic bound
-      // booleans — 5% of the UNION absorbs the three compounded RSEs
-      val docs = Tables.documentsSpread(s, dir)
-      val approx = TextAnalysis.sourceOverlapApprox(docs, n = 3)
-      val exact = TextAnalysis.sourceOverlap(docs, n = 3)
-        .select(col("source_a"), col("source_b"), col("n_a"), col("n_b"),
-          col("n_common"))
-      approx.join(exact, Seq("source_a", "source_b"))
-        .select(col("source_a"), col("source_b"), col("n_a"), col("n_b"),
-          col("n_common"),
-          (abs(col("est_a") - col("n_a")) * 20 <= col("n_a"))
-            .as("a_within_5pct"),
-          (abs(col("est_b") - col("n_b")) * 20 <= col("n_b"))
-            .as("b_within_5pct"),
-          (abs(col("est_common") - col("n_common")) * 20 <=
-            col("n_a") + col("n_b") - col("n_common"))
-            .as("common_within_5pct_of_union"))
-        .orderBy(col("source_a"), col("source_b"))
-    }),
-
-    "text_script_profile" -> ((s, dir) => {
-      // Unicode-script routing: the pre-model script detector
-      TextAnalysis.scriptProfile(Tables.documents(s, dir))
-        .orderBy(col("doc_id"))
-    }),
-
-    "profile_columns" -> ((s, dir) =>
-      // deequ-posture column profile: completeness + exact distinctness
-      // per column in one scan (multi-distinct → one Expand shuffle)
-      graft.ops.Profile.columnProfile(Tables.documents(s, dir),
-          Seq("doc_id", "lang", "source", "n_chars"))
-        .orderBy(col("column_name"))),
-
-    "profile_constraints" -> ((s, dir) =>
-      // the ship gate: named row-level assertions → violation counts.
-      // 'text_min_length' is a deliberately tight bar real docs miss —
-      // the report must prove failures SURFACE, not that data is clean
-      graft.ops.Profile.checkConstraints(Tables.documents(s, dir), Seq(
-          "doc_id_not_null" -> col("doc_id").isNotNull,
-          "lang_known" -> col("lang").isin("en", "de", "fr", "es", "zh", "ja"),
-          "n_chars_positive" -> (col("n_chars") > 0),
-          "n_chars_matches_text" -> (length(col("text")) === col("n_chars")),
-          "text_min_length" -> (length(col("text")) >= 200)))
-        .orderBy(col("constraint"))),
-
-    "profile_skew" -> ((s, dir) =>
-      // pre-join skew diagnostic: hottest keys + exact ppm shares —
-      // the report that decides whether a join needs salting
-      graft.ops.Profile.keySkew(Cdc.walEvents(s, dir), "user_id", topK = 5)
-        .orderBy(col("rank"))),
-
-    "corpus_profile" -> ((s, dir) => {
-      // ONE-plan corpus report: per-source doc/token totals, exact-dup
-      // rate, and language mix — the summary a curation run prints
-      // before and after each pipeline stage. One shuffle on source
-      // (the dup-rate subaggregate shares it via partial aggs).
-      profileEnriched(Tables.documents(s, dir))
-        .groupBy(col("source"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("n_tokens"),
-          countDistinct(col("h")).as("n_distinct"),
-          countDistinct(col("lang")).as("n_langs"),
-          max(col("n_tokens")).as("max_doc_tokens"))
-        .withColumn("n_exact_dups", col("n_docs") - col("n_distinct"))
-        .orderBy(col("source"))
-    }),
-
-    "corpus_profile_approx" -> ((s, dir) => {
-      // the 100 TB form of corpus_profile: HLL++ approximate distincts
-      // replace the exact countDistinct (whose per-group state is the
-      // distinct value set — the thing that doesn't fit at scale) over
-      // the SAME shared enrichment (the two can't diverge in token/hash
-      // definitions). Rows-only: sketch estimates are engine-specific,
-      // the q_quantiles_approx stance; OpsSpec bounds the error vs exact
-      // driver-checkable form (r8 advice): the exact aggregates gate
-      // directly; the HLL estimates gate via BOUND BOOLEANS against the
-      // exact distincts (computed alongside — gate arithmetic only; the
-      // production operator is the sketch-only aggregation above this
-      // comment's history). |approx - exact| <= 15% of exact + 5 is ~3x
-      // the default 5% rsd — a broken sketch turns the hash red, a
-      // healthy one never flaps.
-      profileEnriched(Tables.documents(s, dir))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
-          approx_count_distinct(col("h")).as("ad"),
-          approx_count_distinct(col("lang")).as("al"),
-          count_distinct(col("h")).as("ed"),
-          count_distinct(col("lang")).as("el"))
-        .select(col("source"), col("n_docs"), col("n_tokens"),
-          (abs(col("ad") * 100 - col("ed") * 100) <= col("ed") * 15 + 500).as("distinct_ok"),
-          (abs(col("al") * 100 - col("el") * 100) <= col("el") * 15 + 500).as("langs_ok"))
-        .orderBy(col("source"))
-    }),
-
-    "cdc_config_snapshot_only" -> ((s, dir) => {
-      // postgresql.snapshot.initial=initial_only → the snapshot alone
-      // (op='r'), scoped filter applied via the canonical table name
-      graft.streaming.ConfigPipeline.fromProperties(s, dir, Map(
-        "postgresql.snapshot.initial" -> "initial_only",
-        "sink.filters.keep_even.condition" -> "event_id % 2 == 0",
-        "sink.filters.keep_even.tables.includes" -> "public.events"))
-        .select(col("lsn"), col("op"), col("topic"), col("event_id"), col("user_id"))
-        .orderBy(col("lsn"))
-    }),
-
-    "cdc_config_pipeline" -> ((s, dir) => {
-      // the reference's TOML property surface assembled end-to-end:
-      // gates (read off) + hypertable includes + a scoped Expr filter +
-      // topic prefix — one declarative plan from config alone
-      graft.streaming.ConfigPipeline.fromProperties(s, dir, Map(
-        "timescaledb.events.read" -> "false",
-        "timescaledb.hypertables.includes" -> "public.*",
-        "sink.filters.keep_high.condition" -> "user_id > 3",
-        "topic.prefix" -> "cfg"))
-        .select(col("lsn"), col("op"), col("topic"), col("event_id"), col("user_id"))
-        .orderBy(col("lsn"))
-    })
-  )
-
-  /** DuckDB twin of the events `{payload, schema}` envelope (no final
-    * ORDER BY — reused standalone and inside the multi-table union).
-    * Schema literals come from the SAME generator as the Spark side
-    * (`Cdc.events*SchemaJson`) — only double quotes, safe inside
-    * single-quoted SQL literals. */
-  private lazy val eventsEnvelopeOracle: String = {
-    val env = graft.cdc.Cdc.eventsEnvelopeSchemaJson
-    val msgEnv = graft.cdc.Cdc.messageEnvelopeSchemaJson
-    val pkKey = graft.cdc.Cdc.eventsPkKeySchemaJson
-    val msgKey = graft.model.DebeziumSchema.messageKeySchemaJson
-    s"""WITH w AS (
-       |  SELECT event_id, user_id, value, props, event_id AS lsn,
-       |    event_id // 10 AS xid, epoch_ns(ts) // 1000000 AS ts_ms,
-       |    $opCaseSql AS op
-       |  FROM events),
-       |wp AS (
-       |  SELECT * EXCLUDE (nm, mi),
-       |    CASE WHEN op = 'm' THEN
-       |      CASE WHEN nm >= 2 AND xid % 3 <> 2 THEN
-       |        CASE WHEN mi = 1 THEN '${graft.cdc.Cdc.DecompressionMarkerStartId}'
-       |             WHEN mi = nm THEN '${graft.cdc.Cdc.DecompressionMarkerEndId}'
-       |             ELSE 'graft' END
-       |      WHEN nm >= 2 THEN 'app.outbox' ELSE 'graft' END END AS msg_prefix
-       |  FROM (SELECT *,
-       |      SUM(CASE WHEN op = 'm' THEN 1 ELSE 0 END)
-       |        OVER (PARTITION BY xid) AS nm,
-       |      SUM(CASE WHEN op = 'm' THEN 1 ELSE 0 END)
-       |        OVER (PARTITION BY xid ORDER BY lsn) AS mi
-       |    FROM w) t),
-       |j AS (
-       |  SELECT lsn, op, ts_ms, event_id, msg_prefix,
-       |    '{"event_id":' || CAST(event_id AS VARCHAR) || ',"props":' || props
-       |      || ',"user_id":' || CAST(user_id AS VARCHAR)
-       |      || ',"value_cents":' || ${centsSql("value")} || '}' AS rowj,
-       |    '{"connector":"spark-graft","db":"graft","lsn":"' || hex(lsn >> 32) || '/' || hex(lsn & 4294967295)
-       |      || '","name":"graft","schema":"public","snapshot":false,"table":"events","ts_ms":'
-       |      || CAST(ts_ms AS VARCHAR) || ',"txId":' || CAST(event_id // 10 AS VARCHAR)
-       |      || ',"version":"0.1.0"}' AS srcj,
-       |    '{"content":"' || to_base64(encode(props)) || '","prefix":"' || msg_prefix || '"}' AS msgj
-       |  FROM wp),
-       |t AS (
-       |  SELECT *, ',"op":"' || op || '","source":' || srcj || ',"ts_ms":' || CAST(ts_ms AS VARCHAR) || '}' AS tailj
-       |  FROM j)
-       |SELECT lsn,
-       |  '{"payload":' || CASE
-       |     WHEN op IN ('r','c') THEN '{"after":' || rowj || tailj
-       |     WHEN op = 'u' THEN '{"after":' || rowj || ',"before":' || rowj || tailj
-       |     WHEN op = 'd' THEN '{"before":' || rowj || tailj
-       |     ELSE '{"message":' || msgj || tailj END
-       |    || ',"schema":' || CASE WHEN op = 'm' THEN '$msgEnv' ELSE '$env' END || '}' AS envelope,
-       |  '{"payload":' || CASE WHEN op = 'm' THEN '{"prefix":"' || msg_prefix || '"}'
-       |     ELSE '{"event_id":' || CAST(event_id AS VARCHAR) || '}' END
-       |    || ',"schema":' || CASE WHEN op = 'm' THEN '$msgKey' ELSE '$pkKey' END || '}' AS key_json
-       |FROM t""".stripMargin
-  }
-
-  /** DuckDB twin of `PgConverters.timestamptzNanosToText` for a nanos
-    * expression (used by conv_timestamptz_text and conv_tsrange_string). */
-  private def duckTsText(n: String): String =
-    // single line: this splices into outer stripMargin strings, where a
-    // line-leading '||' would lose a pipe to margin stripping.
-    // Fraction gate is on the µs-TRUNCATED remainder (like the Spark
-    // twin): a sub-µs-only fraction must render no dot at all.
-    s"strftime(make_timestamp((($n) // 1000000000) * 1000000), '%Y-%m-%dT%H:%M:%S') || " +
-    s"CASE WHEN (($n) % 1000000000) // 1000 > 0 THEN '.' || " +
-    s"rtrim(lpad(CAST((($n) % 1000000000) // 1000 * 1000 AS VARCHAR), 9, '0'), '0') " +
-    s"ELSE '' END || 'Z'"
-
-  /** DuckDB twin of `decimalCentsText` (single-line: safe to splice into
-    * stripMargin oracles). */
-  private def duckCentsText(e: String): String =
-    s"(CAST(($e) // 100 AS VARCHAR) || '.' || lpad(CAST(($e) % 100 AS VARCHAR), 2, '0'))"
-
-  /** DuckDB twin of `conv_uint32_long`'s synthesized-uint32 expression. */
-  private def duckUint(e: String): String =
-    s"(CASE WHEN (($e) * 2654435761) % 4294967296 - 2147483648 < 0 THEN (($e) * 2654435761) % 4294967296 - 2147483648 + 4294967296 ELSE (($e) * 2654435761) % 4294967296 - 2147483648 END)"
-
-  /** DuckDB twin of `PgConverters.macaddr8ToText` for a long expression. */
-  private def duckMac8(e: String): String =
-    s"printf('%02x:%02x:%02x:%02x:%02x:%02x:%02x:%02x', (($e) >> 56) & 255, (($e) >> 48) & 255, (($e) >> 40) & 255, (($e) >> 32) & 255, (($e) >> 24) & 255, (($e) >> 16) & 255, (($e) >> 8) & 255, ($e) & 255)"
+  /** Spark plan of every query, by name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Query.registry.map { case (name, q) => name -> q.build }
 
   /** DuckDB-runnable oracle SQL, column-aliased identically to `queries`. */
-  def oracleSql: Map[String, String] = Map(
-    // ---- multimodal invariants (r8 advice: shrink the rows-only set).
-    // The codec fixtures are id-parameterized (ImageCodec.dims,
-    // AudioCodec.frames, VideoCodec.frameCount), so the REAL
-    // encode→decode chains must land exactly on these SQL-derivable
-    // values — dims wrong, container wrong, or demux wrong → hash red.
-    "multimodal_features" ->
-      """SELECT doc_id AS source_id, 'image/png' AS mime,
-        |  CAST(8 + doc_id % 32 AS INT) AS width,
-        |  CAST(8 + (doc_id // 3) % 24 AS INT) AS height
-        |FROM documents ORDER BY source_id""".stripMargin,
-
-    // box-fit 16x16, aspect preserved, never upscaled: identical IEEE
-    // double ops on both engines, FLOOR = Scala's toInt for positives
-    "multimodal_resize" ->
-      """WITH d AS (SELECT doc_id,
-        |    CAST(8 + doc_id % 32 AS DOUBLE) AS w0,
-        |    CAST(8 + (doc_id // 3) % 24 AS DOUBLE) AS h0
-        |  FROM documents),
-        |s AS (SELECT doc_id, w0, h0, LEAST(1.0, 16.0 / w0, 16.0 / h0) AS sc FROM d)
-        |SELECT doc_id AS source_id, 'image/png' AS mime,
-        |  CAST(GREATEST(1, FLOOR(w0 * sc)) AS INT) AS width,
-        |  CAST(GREATEST(1, FLOOR(h0 * sc)) AS INT) AS height
-        |FROM s ORDER BY source_id""".stripMargin,
-
-    // canonical RIFF/WAV: 44-byte header + 2 bytes per 16-bit mono frame
-    "multimodal_audio" ->
-      """SELECT doc_id AS source_id, 'audio/wav' AS mime,
-        |  CAST(44 + 2 * (100 + doc_id % 400) AS INT) AS byte_len,
-        |  8000 AS sample_rate, 1 AS channels,
-        |  CAST(100 + doc_id % 400 AS BIGINT) AS n_frames
-        |FROM documents ORDER BY source_id""".stripMargin,
-
-    // 64-byte frame slicing at stride 4 over the (ASCII) text bytes
-    "multimodal_frames" ->
-      """WITH f AS (SELECT doc_id AS source_id, CAST(i AS INT) AS frame_no,
-        |    substring(text, CAST(i * 64 + 1 AS INT), 64) AS frame_text
-        |  FROM documents, unnest(range(0, (length(text) - 1) // 64 + 1)) AS t(i)
-        |  WHERE i % 4 = 0)
-        |SELECT source_id, frame_no,
-        |  CAST(length(frame_text) AS INT) AS frame_len, frame_text
-        |FROM f ORDER BY source_id, frame_no""".stripMargin,
-
-    // the REAL-codec perceptual hash, oracle-replayed: PNG pixels are a
-    // lossless roundtrip of the generator arithmetic, so the decoded
-    // aHash must equal the recomputed one bit-for-bit
-    "multimodal_ahash" ->
-      s"""WITH imgs AS (SELECT doc_id AS img_key, doc_id AS sid,
-         |    8 + doc_id % 32 AS w, 8 + (doc_id // 3) % 24 AS h, false AS flip
-         |  FROM documents),
-         |$ahashCtes
-         |SELECT img_key AS source_id, ahash FROM ah ORDER BY source_id""".stripMargin,
-
-    // image near-dup twin: base + (0,0)-xored re-encodes, the SAME
-    // 4-band pigeonhole candidates + df-cap + hamming cut as the engine
-    "dedup_image_ahash" ->
-      s"""WITH imgs AS (
-         |  SELECT doc_id AS img_key, doc_id AS sid,
-         |    8 + doc_id % 32 AS w, 8 + (doc_id // 3) % 24 AS h, false AS flip
-         |  FROM documents WHERE doc_id < 2000
-         |  UNION ALL
-         |  SELECT doc_id + 1000000 AS img_key, doc_id AS sid,
-         |    8 + doc_id % 32 AS w, 8 + (doc_id // 3) % 24 AS h, true AS flip
-         |  FROM documents WHERE doc_id < 2000),
-         |$ahashCtes,
-         |bd AS (SELECT img_key, ahash, CAST(i AS INTEGER) AS band_i,
-         |         (ahash >> CAST(16*i AS INTEGER)) & 65535 AS band
-         |       FROM ah, unnest(range(0, 4)) t(i)),
-         |keep AS (SELECT bd.* FROM bd LEFT JOIN (
-         |    SELECT band_i, band FROM bd GROUP BY 1, 2 HAVING count(*) > ${graft.ops.Dedup.DefaultDfCap}
-         |  ) hot USING (band_i, band) WHERE hot.band IS NULL),
-         |cand AS (SELECT DISTINCT a.img_key AS id_a, b.img_key AS id_b,
-         |           a.ahash AS h_a, b.ahash AS h_b
-         |         FROM keep a JOIN keep b
-         |           ON a.band_i = b.band_i AND a.band = b.band AND a.img_key < b.img_key)
-         |SELECT id_a, id_b, CAST(bit_count(xor(h_a, h_b)) AS BIGINT) AS hamming
-         |FROM cand WHERE bit_count(xor(h_a, h_b)) <= 3
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // acoustic-fingerprint twin: quiet 12-bit samples from the same
-    // splitmix arithmetic; gain-4 remasters share the fingerprint
-    // EXACTLY (energies scale by 16, comparisons unchanged), so both
-    // sides carry the gain-1 fingerprint into the equality join
-    "dedup_audio_fp" ->
-      s"""WITH d AS (SELECT doc_id, 100 + doc_id % 400 AS n
-         |  FROM documents WHERE doc_id < 2000),
-         |sm0 AS (SELECT doc_id, n, CAST(i AS HUGEINT) AS i,
-         |    (CAST(doc_id AS HUGEINT) * $SmK1 + CAST(i AS HUGEINT) * $SmK2) % $U64 AS z
-         |  FROM d, unnest(range(0, (n // 4) * 4)) t(i)),
-         |sm1 AS (SELECT doc_id, n, i, xor(z, z // 1073741824) AS z FROM sm0),
-         |sm2 AS (SELECT doc_id, n, i,
-         |    ((z % 4294967296) * $SmK2 + ((z // 4294967296) * $SmK2 % 4294967296) * 4294967296)
-         |      % $U64 AS z FROM sm1),
-         |smp AS (SELECT doc_id, n, i,
-         |    CAST(xor(z, z // 134217728) % 4096 - 2048 AS BIGINT) AS s FROM sm2),
-         |en AS (SELECT doc_id, n, CAST(i // 4 AS BIGINT) AS wi, sum(s * s) AS e
-         |       FROM smp GROUP BY 1, 2, 3),
-         |fpb AS (SELECT a.doc_id, a.n // 4 AS nw,
-         |          sum(CASE WHEN a.e > b.e THEN CAST(1 AS HUGEINT) << CAST(a.wi % 64 AS INTEGER)
-         |              ELSE CAST(0 AS HUGEINT) END) AS hu
-         |        FROM en a JOIN en b ON a.doc_id = b.doc_id AND b.wi = a.wi + 1
-         |        WHERE a.wi < least(a.n // 4 - 1, 64)
-         |        GROUP BY 1, 2),
-         |fp AS (SELECT doc_id, CAST(nw AS INTEGER) AS n_windows,
-         |         CAST(CASE WHEN hu >= CAST(9223372036854775808 AS HUGEINT)
-         |           THEN hu - CAST($U64 AS HUGEINT) ELSE hu END AS BIGINT) AS fingerprint
-         |       FROM fpb),
-         |un AS (SELECT doc_id AS source_id, n_windows, fingerprint FROM fp
-         |       UNION ALL
-         |       SELECT doc_id + 1000000, n_windows, fingerprint FROM fp)
-         |SELECT a.source_id AS id_a, b.source_id AS id_b,
-         |  a.n_windows, a.fingerprint
-         |FROM un a JOIN un b
-         |  ON a.n_windows = b.n_windows AND a.fingerprint = b.fingerprint
-         |    AND a.source_id < b.source_id
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // keyframe twin: frame f of doc d hashes the synthetic image for
-    // id d*131+f; trimmed repacks drop the last frame; shared-hash
-    // equi-join with the engine's df-cap and minShared cut
-    "dedup_video_keyframes" ->
-      s"""WITH fr AS (SELECT doc_id, CAST(f AS BIGINT) AS f, doc_id * 131 + f AS fid
-         |  FROM documents, unnest(range(0, 4 + doc_id % 6)) t(f)
-         |  WHERE doc_id < 1000 AND f % 2 = 0),
-         |imgs AS (SELECT DISTINCT fid AS img_key, fid AS sid,
-         |    8 + fid % 32 AS w, 8 + (fid // 3) % 24 AS h, false AS flip FROM fr),
-         |$ahashCtes,
-         |kept AS (
-         |  SELECT fr.doc_id AS source_id, ah.ahash FROM fr JOIN ah ON fr.fid = ah.img_key
-         |  UNION
-         |  SELECT fr.doc_id + 1000000 AS source_id, ah.ahash
-         |  FROM fr JOIN ah ON fr.fid = ah.img_key
-         |  WHERE fr.f < 4 + fr.doc_id % 6 - 1),
-         |capped AS (SELECT k.* FROM kept k LEFT JOIN (
-         |    SELECT ahash FROM kept GROUP BY 1 HAVING count(*) > ${graft.ops.Dedup.DefaultDfCap}
-         |  ) hot USING (ahash) WHERE hot.ahash IS NULL),
-         |cnt AS (SELECT source_id, count(*) AS n_frames FROM capped GROUP BY 1),
-         |prs AS (SELECT a.source_id AS id_a, b.source_id AS id_b, count(*) AS n_shared
-         |        FROM capped a JOIN capped b
-         |          ON a.ahash = b.ahash AND a.source_id < b.source_id
-         |        GROUP BY 1, 2 HAVING count(*) >= 2)
-         |SELECT id_a, id_b, n_shared, ca.n_frames AS n_a, cb.n_frames AS n_b
-         |FROM prs JOIN cnt ca ON id_a = ca.source_id JOIN cnt cb ON id_b = cb.source_id
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // demux + per-keyframe decode: frame f of doc d is the synthetic
-    // image for id d*131+f; stride 2 over 4 + d%6 frames
-    "multimodal_video" ->
-      """WITH fr AS (SELECT doc_id, CAST(f AS INT) AS frame_no,
-        |    doc_id * 131 + f AS fid
-        |  FROM documents, unnest(range(0, 4 + doc_id % 6)) AS t(f)
-        |  WHERE doc_id < 2000 AND f % 2 = 0)
-        |SELECT doc_id AS source_id, frame_no,
-        |  CAST(8 + fid % 32 AS INT) AS width,
-        |  CAST(8 + (fid // 3) % 24 AS INT) AS height
-        |FROM fr ORDER BY source_id, frame_no""".stripMargin,
-
-    "q1_pricing_summary" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         |  CAST(SUM(${centsSql("l_quantity")}) AS BIGINT) AS sum_qty,
-         |  CAST(SUM(${centsSql("l_extendedprice")}) AS BIGINT) AS sum_base_price,
-         |  CAST(SUM(${centsSql("l_extendedprice * (1.0 - l_discount)")}) AS BIGINT) AS sum_disc_price,
-         |  COUNT(*) AS count_order
-         |FROM lineitem GROUP BY l_returnflag, l_linestatus
-         |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q3_shipping_priority" ->
-      s"""SELECT l_orderkey, epoch_ms(o_orderdate) AS order_ms,
-        |  CAST(SUM(${centsSql("l_extendedprice * (1.0 - l_discount)")}) AS BIGINT) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY l_orderkey, order_ms
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-
-    "q5_local_supplier" ->
-      s"""SELECT n_name,
-        |  CAST(SUM(${centsSql("l_extendedprice * (1.0 - l_discount)")}) AS BIGINT) AS revenue
-        |FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-
-    "q_window_rank" ->
-      """SELECT o_custkey, o_orderkey, rn, rnk FROM (
-        |  SELECT o_custkey, o_orderkey,
-        |    row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn,
-        |    rank() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC) AS rnk
-        |  FROM orders) t
-        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-
-    // radius-join twin: the brute-force all-pairs truth
-    "q_geo_radius_join" ->
-      """WITH u AS (SELECT DISTINCT user_id FROM events),
-        |a AS (SELECT user_id, (user_id * 37) % 1000 * 1000 AS lat_m,
-        |             (user_id * 91 + 13) % 1000 * 1000 AS lon_m FROM u),
-        |b AS (SELECT s_suppkey, (s_suppkey * 53) % 1000 * 1000 AS b_lat_m,
-        |             (s_suppkey * 17 + 7) % 1000 * 1000 AS b_lon_m FROM supplier)
-        |SELECT user_id, s_suppkey, lat_m, lon_m, b_lat_m, b_lon_m
-        |FROM a, b
-        |WHERE (lat_m - b_lat_m) * (lat_m - b_lat_m)
-        |    + (lon_m - b_lon_m) * (lon_m - b_lon_m) <= 625000000
-        |ORDER BY user_id, s_suppkey""".stripMargin,
-
-    // range-frame twin: identical RANGE bound on the ms integers
-    "q_window_range_frame" ->
-      """WITH wal AS (SELECT event_id AS lsn, user_id,
-        |    epoch_ns(ts) // 1000000 AS ts_ms,
-        |    CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vm
-        |  FROM events)
-        |SELECT user_id, lsn, ts_ms,
-        |  COUNT(*) OVER w AS n_24h,
-        |  CAST(SUM(vm) OVER w AS BIGINT) AS sum_micros_24h
-        |FROM wal
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts_ms
-        |  RANGE BETWEEN 86399999 PRECEDING AND CURRENT ROW)
-        |ORDER BY lsn""".stripMargin,
-
-    "q_window_running" ->
-      s"""SELECT o_custkey, o_orderkey,
-        |  CAST(SUM(${centsSql("o_totalprice")}) OVER
-        |    (PARTITION BY o_custkey ORDER BY o_orderkey
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS running_total,
-        |  lag(o_orderkey, 1) OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS prev_order,
-        |  lead(o_orderkey, 1) OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS next_order
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q_string_funcs" ->
-      """SELECT p_partkey, upper(p_name) AS uname, length(trim(p_name)) AS nlen,
-        |  substr(p_brand, 1, 5) AS brand5,
-        |  regexp_replace(p_type, '[aeiou]', '_', 'g') AS devoweled,
-        |  levenshtein(p_brand, p_type) AS dist
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "q_date_funcs" ->
-      """SELECT o_orderkey,
-        |  CAST(EXTRACT(year FROM o_orderdate) AS INTEGER) AS y,
-        |  CAST(EXTRACT(month FROM o_orderdate) AS INTEGER) AS m,
-        |  CAST(EXTRACT(day FROM o_orderdate) AS INTEGER) AS d,
-        |  epoch_ms(date_trunc('month', o_orderdate)) AS month_start_ms
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q_topk_orders" ->
-      s"""SELECT o_orderkey, ${centsSql("o_totalprice")} AS total
-         |FROM orders ORDER BY total DESC, o_orderkey LIMIT 20""".stripMargin,
-
-    "q_semi_join" ->
-      """SELECT c_custkey, c_mktsegment FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01')
-        |ORDER BY c_custkey""".stripMargin,
-
-    // pivot twin: one conditional-sum column per pivoted value
-    "q_pivot_events" ->
-      """SELECT user_id,
-        |  CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
-        |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error,
-        |  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase,
-        |  CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
-        |  CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS n_view
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_rollup_revenue" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         |  CAST(SUM(${centsSql("l_quantity")}) AS BIGINT) AS sum_qty, COUNT(*) AS n
-         |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-         |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-
-    // cube twin: DuckDB CUBE + GROUPING() (standard bit order: leftmost
-    // column = most significant bit, 1 when aggregated away)
-    "q_cube_events" ->
-      s"""SELECT event_type, user_id // 20 AS user_band, COUNT(*) AS n,
-         |  CAST(SUM(CAST(floor(value * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_micros,
-         |  CAST(GROUPING(event_type, user_id // 20) AS BIGINT) AS gid
-         |FROM events
-         |GROUP BY CUBE (event_type, user_id // 20)
-         |ORDER BY gid, event_type ASC NULLS FIRST, user_band ASC NULLS FIRST""".stripMargin,
-
-    "q_min_cost_supplier" ->
-      """SELECT s_nationkey, s_suppkey, s_name FROM supplier s
-        |WHERE s_acctbal = (SELECT MIN(s2.s_acctbal) FROM supplier s2
-        |                   WHERE s2.s_nationkey = s.s_nationkey)
-        |ORDER BY s_nationkey, s_suppkey""".stripMargin,
-
-    "q_quantiles" ->
-      """SELECT COUNT(DISTINCT o_custkey) AS n_customers,
-        |  quantile_cont(o_totalprice, 0.5) AS p50,
-        |  quantile_cont(o_totalprice, 0.9) AS p90
-        |FROM orders""".stripMargin,
-
-    // approx twin: the sketch's rank-error contract is the checkable
-    // fact (estimates themselves are engine-specific); a sketch outside
-    // its n/accuracy bound turns these booleans false -> hash red
-    "q_quantiles_approx" ->
-      """SELECT COUNT(DISTINCT o_custkey) AS n_customers,
-        |  true AS p50_rank_ok, true AS p90_rank_ok
-        |FROM orders""".stripMargin,
-
-    "q_except_customers" ->
-      """SELECT c_custkey FROM customer EXCEPT SELECT o_custkey FROM orders
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_intersect_users" ->
-      """SELECT user_id FROM events WHERE event_type = 'purchase'
-        |INTERSECT SELECT user_id FROM events WHERE event_type = 'error'
-        |ORDER BY user_id""".stripMargin,
-
-    "cdc_envelope" ->
-      s"""SELECT event_id AS lsn, event_id // 10 AS xid,
-         |  $opCaseSql AS op,
-         |  epoch_ns(ts) // 1000000 AS ts_ms,
-         |  'public' AS schema_name, 'events' AS table_name,
-         |  'graft.public.events' AS topic,
-         |  event_id, user_id
-         |FROM events ORDER BY lsn""".stripMargin,
-
-    // parse-back twin of the rendered envelope JSON: op routing,
-    // before/after presence rules, textual LSN, schema identity, key
-    "cdc_envelope_json" ->
-      s"""SELECT event_id AS lsn, $opCaseSql AS op,
-         |  hex(event_id // 4294967296) || '/' || hex(event_id % 4294967296) AS source_lsn,
-         |  CASE WHEN $opCaseSql IN ('r','c','u') THEN event_id END AS after_event_id,
-         |  CASE WHEN $opCaseSql IN ('u','d') THEN user_id END AS before_user_id,
-         |  'graft.public.events.Envelope' AS schema_name,
-         |  'struct' AS schema_type,
-         |  event_id AS key_event_id
-         |FROM events ORDER BY lsn""".stripMargin,
-
-    // wire-recovered transaction windows == arithmetic ones
-    "cdc_pgoutput_txn" ->
-      """SELECT event_id // 10 AS xid, count(*) AS n_events,
-        |  min(event_id) AS first_lsn, max(event_id) AS last_lsn
-        |FROM events GROUP BY 1 ORDER BY xid""".stripMargin,
-
-    // pgoutput-decode twin: click rows travel as logical messages (only
-    // props survives as message content); everything else is a DML tuple
-    // in REPLICA IDENTITY FULL, so all six columns round-trip
-    // wire-marker twin: replays the marker fixture arithmetic — frame
-    // lsns double, decompression txns (xid % 7 = 3) bracket their rows
-    // with marker messages at first*2-1 / last*2+1, and every physical
-    // INSERT inside a bracket vanishes from the surviving stream
-    "cdc_wire_marker_suppress" ->
-      """WITH w AS (SELECT event_id, event_id // 10 AS xid, event_type FROM events),
-        |r AS (SELECT event_id * 2 AS lsn, xid,
-        |        CASE event_type WHEN 'purchase' THEN 'U' WHEN 'error' THEN 'D'
-        |             WHEN 'click' THEN 'M' ELSE 'I' END AS op_wire
-        |      FROM w),
-        |mt AS (SELECT xid, MIN(event_id) * 2 - 1 AS s, MAX(event_id) * 2 + 1 AS e
-        |       FROM w WHERE xid % 7 = 3 GROUP BY xid)
-        |SELECT lsn, xid, op_wire FROM (
-        |  SELECT lsn, r.xid AS xid, op_wire FROM r LEFT JOIN mt ON r.xid = mt.xid
-        |  WHERE NOT (mt.xid IS NOT NULL AND op_wire = 'I')
-        |  UNION ALL SELECT s AS lsn, xid, 'M' AS op_wire FROM mt
-        |  UNION ALL SELECT e AS lsn, xid, 'M' AS op_wire FROM mt) t
-        |ORDER BY lsn""".stripMargin,
-
-    // schema-evolution twin: both engines agree on every row on BOTH
-    // sides of the mid-stream ADD COLUMN — pre-DDL rows carry NULL score
-    "cdc_schema_evolution" ->
-      """SELECT event_id AS lsn,
-        |  CASE event_type WHEN 'signup' THEN 'I' WHEN 'purchase' THEN 'U'
-        |       WHEN 'error' THEN 'D' ELSE 'I' END AS op,
-        |  event_id, user_id, event_type,
-        |  CAST(floor(value * 100 + 0.5) AS BIGINT) AS value_cents, props,
-        |  CASE WHEN event_id >= (SELECT max(event_id) // 2 + 1 FROM events)
-        |       THEN user_id % 100 END AS score
-        |FROM events WHERE event_type <> 'click'
-        |ORDER BY lsn""".stripMargin,
-
-    // per-batch {schema} block twin: the two literals come from the
-    // SAME generator as the Spark side (DebeziumSchema.envelopeSchemaJson
-    // over the relation's pre/post-DDL column sets) — only double
-    // quotes, safe inside single-quoted SQL literals
-    "cdc_schema_evolution_schema" -> {
-      def shape(cols: Seq[graft.cdc.PgOutput.RelCol]) =
-        org.apache.spark.sql.types.StructType(cols.map(c =>
-          org.apache.spark.sql.types.StructField(c.name,
-            graft.streaming.SchemaEvolution.sparkTypeForOid(c.typeOid))))
-      val pre = graft.model.DebeziumSchema.envelopeSchemaJson(
-        shape(graft.cdc.PgOutput.EventsRelCols), "graft.public.events")
-      val post = graft.model.DebeziumSchema.envelopeSchemaJson(
-        shape(graft.cdc.PgOutput.EventsRelColsEvolved), "graft.public.events")
-      s"""SELECT event_id AS lsn, event_id,
-         |  CASE WHEN event_id >= (SELECT max(event_id) // 2 + 1 FROM events)
-         |       THEN '$post' ELSE '$pre' END AS schema_json
-         |FROM events WHERE event_type <> 'click'
-         |ORDER BY lsn""".stripMargin
-    },
-
-    // ALTER-TYPE twin: the same arithmetic boundary, user_id rendered
-    // per the version each row arrived under — pre-DDL int8 as decimal
-    // text (the widened supertype), post-DDL 'u'-prefixed text verbatim
-    "cdc_schema_evolution_type" ->
-      """SELECT event_id AS lsn,
-        |  CASE event_type WHEN 'signup' THEN 'I' WHEN 'purchase' THEN 'U'
-        |       WHEN 'error' THEN 'D' ELSE 'I' END AS op,
-        |  event_id,
-        |  CASE WHEN event_id >= (SELECT max(event_id) // 2 + 1 FROM events)
-        |       THEN 'u' || CAST(user_id AS VARCHAR)
-        |       ELSE CAST(user_id AS VARCHAR) END AS user_id,
-        |  event_type,
-        |  CAST(floor(value * 100 + 0.5) AS BIGINT) AS value_cents, props
-        |FROM events WHERE event_type <> 'click'
-        |ORDER BY lsn""".stripMargin,
-
-    "cdc_pgoutput_decode" ->
-      s"""SELECT event_id AS lsn, event_id // 10 AS xid,
-         |  CASE event_type WHEN 'signup' THEN 'I' WHEN 'purchase' THEN 'U'
-         |       WHEN 'error' THEN 'D' WHEN 'view' THEN 'I' ELSE 'M' END AS op_wire,
-         |  $opCaseSql AS op,
-         |  CASE WHEN event_type = 'click' THEN NULL ELSE epoch_ns(ts) // 1000000 END AS ts_ms,
-         |  CASE WHEN event_type = 'click' THEN NULL ELSE event_id END AS event_id,
-         |  CASE WHEN event_type = 'click' THEN NULL ELSE user_id END AS user_id,
-         |  CASE WHEN event_type = 'click' THEN NULL ELSE event_type END AS event_type,
-         |  CASE WHEN event_type = 'click' THEN NULL ELSE value END AS value,
-         |  props,
-         |  CASE WHEN event_type = 'click' THEN NULL ELSE 'public' END AS schema_name,
-         |  CASE WHEN event_type = 'click' THEN NULL ELSE 'events' END AS table_name
-         |FROM events ORDER BY lsn""".stripMargin,
-
-    // binary-format twin: identical envelope rows, different wire bytes
-    "cdc_pgoutput_binary" ->
-      s"""SELECT event_id AS lsn, event_id // 10 AS xid,
-         |  CASE event_type WHEN 'signup' THEN 'I' WHEN 'purchase' THEN 'U'
-         |       WHEN 'error' THEN 'D' WHEN 'view' THEN 'I' ELSE 'M' END AS op_wire,
-         |  $opCaseSql AS op,
-         |  CASE WHEN event_type = 'click' THEN NULL ELSE epoch_ns(ts) // 1000000 END AS ts_ms,
-         |  CASE WHEN event_type = 'click' THEN NULL ELSE event_id END AS event_id,
-         |  CASE WHEN event_type = 'click' THEN NULL ELSE user_id END AS user_id,
-         |  CASE WHEN event_type = 'click' THEN NULL ELSE event_type END AS event_type,
-         |  CASE WHEN event_type = 'click' THEN NULL ELSE value END AS value,
-         |  props,
-         |  CASE WHEN event_type = 'click' THEN NULL ELSE 'public' END AS schema_name,
-         |  CASE WHEN event_type = 'click' THEN NULL ELSE 'events' END AS table_name
-         |FROM events ORDER BY lsn""".stripMargin,
-
-    // TOAST-elision twin: the elision rule is arithmetic on event_id, so
-    // DuckDB replays it — key absent exactly when the wire said 'u'
-    "cdc_toast_omit" ->
-      """SELECT event_id AS lsn,
-        |  NOT (props IS NOT NULL AND event_id % 3 = 0) AS props_key_present,
-        |  CASE WHEN event_id % 3 = 0 THEN NULL ELSE props END AS props_parsed,
-        |  event_id, user_id
-        |FROM events WHERE event_type = 'purchase' ORDER BY lsn""".stripMargin,
-
-    // old-tuple twin: RI FULL logs old rows whole, so before == the raw
-    // row on every update regardless of TOAST elision in the new tuple
-    "cdc_update_before" ->
-      """SELECT event_id AS lsn, 'O' AS old_kind,
-        |  event_id AS before_event_id, user_id AS before_user_id,
-        |  value AS before_value, props AS before_props,
-        |  (props IS NOT NULL AND event_id % 3 = 0) AS after_props_elided
-        |FROM events WHERE event_type = 'purchase' ORDER BY lsn""".stripMargin,
-
-    // wire-path envelope twin: presence rules by op, TOAST elision by
-    // the arithmetic rule, before from the (identical-valued) old tuple
-    "cdc_pgoutput_envelope" ->
-      s"""SELECT event_id AS lsn, $opCaseSql AS op,
-         |  CASE WHEN $opCaseSql IN ('r','c','u')
-         |       THEN NOT (event_type = 'purchase' AND props IS NOT NULL
-         |                 AND event_id % 3 = 0) END AS after_has_props_key,
-         |  CASE WHEN $opCaseSql IN ('r','c','u') THEN event_id END AS after_event_id,
-         |  CASE WHEN $opCaseSql IN ('u','d') THEN user_id END AS before_user_id,
-         |  CASE WHEN $opCaseSql IN ('u','d') THEN props END AS before_props,
-         |  hex(event_id // 4294967296) || '/' || hex(event_id % 4294967296) AS source_lsn
-         |FROM events WHERE event_type IN ('signup','view','purchase','error')
-         |ORDER BY lsn""".stripMargin,
-
-    "cdc_op_gates" ->
-      s"""SELECT event_id AS lsn, $opCaseSql AS op
-         |FROM events
-         |WHERE event_type IN ('signup','purchase','error')
-         |ORDER BY lsn""".stripMargin,
-
-    "cdc_chunk_resolution" ->
-      """SELECT concat('_hyper_1_', CAST(chunk_day AS VARCHAR), '_chunk') AS chunk_name,
-        |  'events' AS ht_table,
-        |  COUNT(*) AS n_events, MIN(lsn) AS min_lsn, MAX(lsn) AS max_lsn
-        |FROM (SELECT event_id AS lsn,
-        |        epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day
-        |      FROM events) t
-        |GROUP BY chunk_name, ht_table
-        |ORDER BY chunk_name""".stripMargin,
-
-    "cdc_high_watermark" ->
-      "SELECT event_id, epoch_ns(ts) // 1000000 AS ts_ms FROM events ORDER BY event_id DESC LIMIT 1",
-
-    "cdc_tombstones" ->
-      s"""SELECT event_id AS lsn, $opCaseSql AS op, false AS is_tombstone FROM events
-         |UNION ALL
-         |SELECT event_id, 'd', true FROM events WHERE event_type = 'error'
-         |ORDER BY lsn, is_tombstone""".stripMargin,
-
-    "cdc_txn_boundaries" ->
-      """SELECT event_id // 10 AS xid, MIN(event_id) AS begin_lsn,
-        |  MAX(event_id) AS commit_lsn, COUNT(*) AS n_events,
-        |  MAX(epoch_ns(ts) // 1000000) AS commit_ts_ms
-        |FROM events GROUP BY xid ORDER BY xid""".stripMargin,
-
-    "cdc_snapshot_batch" ->
-      s"""SELECT event_id AS lsn, $opCaseSql AS op, epoch_ns(ts) // 1000000 AS ts_ms
-         |FROM events WHERE event_id > 100 AND event_id <= 600
-         |ORDER BY event_id LIMIT 200""".stripMargin,
-
-    "cdc_snapshot_fence" ->
-      s"""SELECT event_id AS lsn, 'r' AS op, true AS snapshot
-         |FROM events WHERE event_id <= 500
-         |UNION ALL
-         |SELECT event_id, $opCaseSql, false FROM events WHERE event_id > 500
-         |ORDER BY lsn, snapshot""".stripMargin,
-
-    // jdbc-snapshot twin reads the parquet directly: a hash match proves
-    // the parquet → Derby → keyset-JDBC-snapshot → shapeWal round-trip
-    // loses nothing (values, nulls, op mapping, ts precision)
-    "cdc_jdbc_snapshot" ->
-      s"""SELECT event_id AS lsn, event_id // 10 AS xid, $opCaseSql AS op,
-         |  epoch_ns(ts) // 1000000 AS ts_ms, event_id, user_id,
-         |  CAST(floor(value * 100 + 0.5) AS BIGINT) AS value_cents, props
-         |FROM events ORDER BY lsn""".stripMargin,
-
-    "cdc_decomp_suppress" ->
-      s"""SELECT lsn, xid, op FROM (
-         |  SELECT event_id AS lsn, event_id // 10 AS xid, $opCaseSql AS op,
-         |    MAX(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-         |      OVER (PARTITION BY event_id // 10) AS decomp_txn
-         |  FROM events) t
-         |WHERE NOT (decomp_txn = 1 AND op = 'c')
-         |ORDER BY lsn""".stripMargin,
-
-    "cdc_publication_antijoin" ->
-      """SELECT chunk_name FROM (
-        |  SELECT DISTINCT
-        |    concat('_hyper_1_', CAST(epoch_ns(ts) // 86400000000000 - 19723 AS VARCHAR), '_chunk') AS chunk_name,
-        |    epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day
-        |  FROM events) t
-        |WHERE chunk_day >= 10 ORDER BY chunk_name""".stripMargin,
-
-    "cdc_scroll_snapshot" ->
-      """SELECT chunk_day, batch_no, event_id FROM (
-        |  SELECT epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day, event_id,
-        |    CAST((row_number() OVER (PARTITION BY epoch_ns(ts) // 86400000000000 - 19723
-        |                             ORDER BY event_id) - 1) // 100 AS BIGINT) AS batch_no
-        |  FROM events) t
-        |WHERE batch_no >= 1
-        |ORDER BY chunk_day, batch_no, event_id""".stripMargin,
-
-    "cdc_publication_lifecycle" ->
-      """WITH chunks AS (
-        |  SELECT DISTINCT '_timescaledb_internal' AS schema_name,
-        |    concat('_hyper_1_', CAST(epoch_ns(ts) // 86400000000000 - 19723 AS VARCHAR), '_chunk') AS table_name
-        |  FROM events
-        |), vanilla AS (
-        |  SELECT * FROM (VALUES ('public', 'events'), ('public', 'users'),
-        |                        ('public', 'cagg_view')) t(schema_name, table_name)
-        |), pub AS (
-        |  SELECT * FROM (VALUES ('_timescaledb_internal', '_hyper_1_3_chunk'),
-        |                        ('_timescaledb_internal', '_hyper_1_5_chunk'),
-        |                        ('public', 'events'),
-        |                        ('_timescaledb_catalog', 'hypertable')) t(schema_name, table_name)
-        |)
-        |SELECT * FROM (
-        |  SELECT 'chunk' AS kind, c.schema_name, c.table_name FROM chunks c
-        |  WHERE NOT EXISTS (SELECT 1 FROM pub p
-        |    WHERE p.schema_name = '_timescaledb_internal'
-        |      AND p.schema_name = c.schema_name AND p.table_name = c.table_name)
-        |  UNION ALL
-        |  SELECT 'vanilla' AS kind, v.schema_name, v.table_name FROM vanilla v
-        |  WHERE NOT EXISTS (SELECT 1 FROM pub p
-        |    WHERE p.schema_name NOT IN ('_timescaledb_internal', '_timescaledb_catalog')
-        |      AND p.schema_name = v.schema_name AND p.table_name = v.table_name)
-        |) ORDER BY kind, schema_name, table_name""".stripMargin,
-
-    "cdc_table_filter" ->
-      """SELECT tbl FROM (SELECT DISTINCT 'public.events_' || CAST(user_id AS VARCHAR) AS tbl FROM events) t
-        |WHERE regexp_matches(tbl, '^public\.events_1.$')
-        |  AND NOT regexp_matches(tbl, '^public\.events_13$')
-        |ORDER BY tbl""".stripMargin,
-
-    "cdc_distinct_ops" ->
-      s"""SELECT DISTINCT epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day, $opCaseSql AS op
-         |FROM events ORDER BY chunk_day, op""".stripMargin,
-
-    "cdc_compression_events" ->
-      s"""WITH $chunkStatusCtes
-         |SELECT lsn, op, tsdb_op, chunk_name, partial, key_schema, key_table, ts_ms
-         |FROM ce ORDER BY lsn, tsdb_op, chunk_name""".stripMargin,
-
-    "cdc_compression_status" ->
-      s"""WITH $chunkStatusCtes
-         |SELECT lsn, xid, op, tsdb_op, chunk_name, partial, key_schema, key_table, ts_ms
-         |FROM ce ORDER BY lsn, tsdb_op, chunk_name""".stripMargin,
-
-    "cdc_marker_decompression" ->
-      s"""WITH $msgPrefixCtes,
-         |mcat AS (SELECT DISTINCT chunk_day,
-         |    concat('_hyper_1_', CAST(chunk_day AS VARCHAR), '_chunk') AS chunk_name
-         |  FROM mwal)
-         |SELECT b.end_lsn AS lsn, w.xid, '$$' AS op, 'd' AS tsdb_op,
-         |  mcat.chunk_name, COUNT(*) AS n_suppressed, MAX(w.ts_ms) AS ts_ms
-         |FROM mwalp w JOIN mbr b ON w.xid = b.xid
-         |JOIN mcat ON mcat.chunk_day = w.chunk_day
-         |WHERE w.op = 'c' AND w.lsn > b.start_lsn
-         |  -- unclosed brackets suppress but emit NO event (the Spark
-         |  -- side's __next_end.isNotNull gate) — pin the same semantics
-         |  AND b.end_lsn IS NOT NULL AND w.lsn < b.end_lsn
-         |GROUP BY b.end_lsn, w.xid, mcat.chunk_name
-         |ORDER BY lsn, chunk_name""".stripMargin,
-
-    "cdc_marker_suppress" ->
-      s"""WITH $msgPrefixCtes
-         |SELECT w.lsn, w.xid, w.op
-         |FROM mwalp w LEFT JOIN mbr b ON w.xid = b.xid
-         |WHERE NOT (b.start_lsn IS NOT NULL AND w.op = 'c'
-         |  AND w.lsn > b.start_lsn
-         |  AND (b.end_lsn IS NULL OR w.lsn < b.end_lsn))
-         |ORDER BY lsn""".stripMargin,
-
-    "cdc_marker_negative" ->
-      s"""WITH $msgPrefixCtes,
-         |outbox AS (SELECT DISTINCT xid FROM mwalp WHERE msg_prefix = 'app.outbox')
-         |SELECT w.xid, COUNT(*) AS n_creates_kept
-         |FROM mwalp w JOIN outbox o ON w.xid = o.xid
-         |WHERE w.op = 'c'
-         |GROUP BY w.xid ORDER BY w.xid""".stripMargin,
-
-    "cdc_chunk_status_catalog" ->
-      s"""WITH $chunkStatusCtes,
-         |fs AS (SELECT chunk_id, new_status AS status FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY chunk_id ORDER BY lsn DESC) AS rn
-         |    FROM su) z WHERE rn = 1),
-         |cnt AS (SELECT epoch_ns(ts) // 86400000000000 - 19723 AS d, COUNT(*) AS n_events
-         |  FROM events GROUP BY 1)
-         |SELECT concat('_hyper_1_', CAST(f.chunk_id AS VARCHAR), '_chunk') AS chunk_name,
-         |  f.status, (f.status & 8) = 8 AS partial,
-         |  concat('compress_hyper_2_', CAST(f.chunk_id AS VARCHAR), '_chunk') AS compressed_chunk_name,
-         |  'events' AS ht_table, cnt.n_events
-         |FROM fs f JOIN cnt ON cnt.d = f.chunk_id
-         |WHERE f.status <> 0
-         |ORDER BY chunk_name""".stripMargin,
-
-    "cdc_chunk_delete_decompression" ->
-      """WITH mx AS (SELECT MAX(event_id) AS max_lsn,
-        |    MAX(epoch_ns(ts) // 1000000) AS max_ts,
-        |    MAX(epoch_ns(ts) // 86400000000000 - 19723) AS max_day FROM events),
-        |days AS (SELECT DISTINCT epoch_ns(ts) // 86400000000000 - 19723 AS d FROM events),
-        |b AS (SELECT d, ((max_lsn // 10) + 10) * 10 AS base, max_ts, max_day FROM days, mx),
-        |del AS (SELECT base + (max_day + 1) * 40 + d * 4 AS lsn, base, max_ts,
-        |    concat('compress_hyper_2_', CAST(d AS VARCHAR), '_chunk') AS chunk_name
-        |  FROM b WHERE d % 4 = 0)
-        |SELECT lsn, lsn // 10 AS xid, '$' AS op, 'd' AS tsdb_op, chunk_name,
-        |  'public' AS key_schema, 'events' AS key_table,
-        |  max_ts + (lsn - base) AS ts_ms
-        |FROM del ORDER BY lsn""".stripMargin,
-
-    "cdc_compression_envelope" -> {
-      val env = graft.cdc.Cdc.eventsEnvelopeSchemaJson
-      val tsKey = graft.model.DebeziumSchema.timescaleKeySchemaJson
-      s"""WITH $chunkStatusCtes
-         |SELECT lsn, chunk_name,
-         |  '{"payload":{"op":"$$","source":{"connector":"spark-graft","db":"graft","lsn":"' || hex(lsn >> 32) || '/' || hex(lsn & 4294967295) || '","name":"graft","schema":"public","snapshot":false,"table":"events","ts_ms":' || ts_ms || ',"txId":null,"version":"0.1.0"},"ts_ms":' || ts_ms || ',"tsdb_op":"' || tsdb_op || '"},"schema":$env}' AS envelope,
-         |  '{"payload":{"schema":"public","table":"events"},"schema":$tsKey}' AS key_json
-         |FROM ce
-         |ORDER BY lsn, chunk_name, envelope""".stripMargin
-    },
-
-    "cdc_logical_messages" ->
-      s"""WITH $msgPrefixCtes
-         |SELECT lsn, 'm' AS op, msg_prefix AS prefix,
-         |  base64(encode(props)) AS content
-         |FROM mwalp WHERE op = 'm' AND msg_prefix NOT IN
-         |  ('::timescaledb-decompression-start', '::timescaledb-decompression-end')
-         |ORDER BY lsn""".stripMargin,
-
-    "cdc_stats_counters" ->
-      s"""SELECT op, n_events, largest_txn FROM
-         |  (SELECT $opCaseSql AS op, COUNT(*) AS n_events FROM events GROUP BY op) a
-         |CROSS JOIN
-         |  (SELECT MAX(c) AS largest_txn FROM
-         |    (SELECT COUNT(*) AS c FROM events GROUP BY event_id // 10) t) b
-         |ORDER BY op""".stripMargin,
-
-    "cdc_watermarks" ->
-      """SELECT 'events' AS table_name,
-        |  MIN(event_id) AS low_lsn, MAX(event_id) AS high_lsn,
-        |  MIN(event_id) AS low_key, MAX(event_id) AS high_key
-        |FROM events""".stripMargin,
-
-    // upsert twin recomputes last-per-key with a window rank — the
-    // Spark side's max_by partial agg must land on the identical state
-    "cdc_apply_upsert" ->
-      s"""WITH wal AS (
-         |  SELECT event_id AS lsn, user_id, value,
-         |    epoch_ns(ts) // 1000000 AS ts_ms, $opCaseSql AS op
-         |  FROM events),
-         |ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY lsn DESC) AS rn
-         |  FROM wal WHERE op IN ('r','c','u','d'))
-         |SELECT user_id, lsn AS last_lsn, op AS last_op, value, ts_ms
-         |FROM ranked WHERE rn = 1 AND op <> 'd' ORDER BY user_id""".stripMargin,
-
-    // refresh twin recomputes the rollup from scratch — equality proves
-    // the base⊎delta partial-state merge is exact
-    // scd2 twin: lead() over the same keyed event order
-    "cdc_scd2" ->
-      s"""WITH wal AS (
-         |  SELECT event_id AS lsn, user_id, value,
-         |    epoch_ns(ts) // 1000000 AS ts_ms, $opCaseSql AS op
-         |  FROM events),
-         |v AS (
-         |  SELECT *, lead(lsn, 1) OVER (PARTITION BY user_id ORDER BY lsn) AS valid_to_lsn
-         |  FROM wal WHERE op IN ('r','c','u','d'))
-         |SELECT user_id, lsn AS valid_from_lsn, valid_to_lsn, op, value, ts_ms,
-         |  valid_to_lsn IS NULL AS is_current
-         |FROM v WHERE op <> 'd' ORDER BY user_id, valid_from_lsn""".stripMargin,
-
-    // forget twin: semi-join against the surviving-key replay
-    "cdc_forget" ->
-      s"""WITH wal AS (
-         |  SELECT event_id AS lsn, user_id, $opCaseSql AS op
-         |  FROM events),
-         |ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY lsn DESC) AS rn
-         |  FROM wal WHERE op IN ('r','c','u','d')),
-         |alive AS (SELECT user_id FROM ranked WHERE rn = 1 AND op <> 'd')
-         |SELECT w.lsn, w.user_id, w.op FROM wal w
-         |WHERE w.user_id IN (SELECT user_id FROM alive)
-         |ORDER BY w.lsn""".stripMargin,
-
-    // unwrap twin: flat projection with after-null-on-delete rules
-    "cdc_unwrap" ->
-      s"""SELECT user_id,
-         |  CASE WHEN op = 'd' THEN NULL ELSE value END AS value,
-         |  CASE WHEN op = 'd' THEN NULL ELSE props END AS props,
-         |  op AS __op, lsn AS __lsn, ts_ms AS __source_ts_ms,
-         |  'public.events' AS __table,
-         |  CASE WHEN op = 'd' THEN 'true' ELSE 'false' END AS __deleted
-         |FROM (SELECT event_id AS lsn, user_id, value, props,
-         |        epoch_ns(ts) // 1000000 AS ts_ms, $opCaseSql AS op
-         |      FROM events)
-         |WHERE op IN ('r','c','u','d') ORDER BY __lsn""".stripMargin,
-
-    // outbox twin: inserts only, re-topic + key + payload projection
-    "cdc_outbox_route" ->
-      s"""SELECT 'outbox.event.' || event_type AS topic, user_id AS key,
-         |  props AS value, event_id AS lsn, epoch_ns(ts) // 1000000 AS ts_ms
-         |FROM events WHERE $opCaseSql = 'c' ORDER BY lsn""".stripMargin,
-
-    // incremental-snapshot twin: fenced last-writer-wins state for the
-    // chunk, anti-joined against the window's touched keys, ∪ window
-    "cdc_incremental_snapshot" ->
-      s"""WITH b AS (SELECT max(event_id) AS ml, max(user_id) AS mu FROM events),
-         |wal AS (
-         |  SELECT event_id AS lsn, user_id, value,
-         |    epoch_ns(ts) // 1000000 AS ts_ms, $opCaseSql AS op
-         |  FROM events),
-         |win AS (SELECT w.* FROM wal w CROSS JOIN b
-         |        WHERE w.lsn > b.ml // 2 AND w.lsn <= b.ml * 3 // 4
-         |          AND w.op IN ('c','u','d')),
-         |state AS (SELECT * FROM (
-         |    SELECT w.*, row_number() OVER (PARTITION BY user_id ORDER BY lsn DESC) AS rn
-         |    FROM wal w CROSS JOIN b
-         |    WHERE w.lsn <= b.ml // 2 AND w.op IN ('r','c','u','d'))
-         |  WHERE rn = 1 AND op <> 'd'),
-         |chunk AS (SELECT s.* FROM state s CROSS JOIN b
-         |          WHERE s.user_id > b.mu // 4 AND s.user_id <= b.mu // 2),
-         |touched AS (SELECT DISTINCT w.user_id FROM win w CROSS JOIN b
-         |            WHERE w.user_id > b.mu // 4 AND w.user_id <= b.mu // 2)
-         |SELECT c.user_id, 'r' AS op, b.ml // 2 AS lsn, c.value, c.ts_ms
-         |FROM chunk c CROSS JOIN b
-         |WHERE c.user_id NOT IN (SELECT user_id FROM touched)
-         |UNION ALL
-         |SELECT user_id, op, lsn, value, ts_ms FROM win
-         |ORDER BY lsn, user_id, op""".stripMargin,
-
-    // compaction twin: last-per-key below the fence ∪ all above
-    "cdc_compact_log" ->
-      s"""WITH f AS (SELECT max(event_id) // 2 AS fence FROM events),
-         |wal AS (
-         |  SELECT event_id AS lsn, user_id,
-         |    epoch_ns(ts) // 1000000 AS ts_ms, $opCaseSql AS op
-         |  FROM events),
-         |below AS (SELECT w.* FROM wal w CROSS JOIN f
-         |          WHERE w.lsn <= f.fence AND w.op IN ('r','c','u','d')),
-         |last_below AS (SELECT user_id, max(lsn) AS lsn FROM below GROUP BY user_id)
-         |SELECT b.lsn, b.user_id, b.op, b.ts_ms
-         |FROM below b JOIN last_below l ON b.user_id = l.user_id AND b.lsn = l.lsn
-         |UNION ALL
-         |SELECT w.lsn, w.user_id, w.op, w.ts_ms
-         |FROM wal w CROSS JOIN f WHERE w.lsn > f.fence
-         |ORDER BY lsn""".stripMargin,
-
-    // time-travel twin: last-writer-wins over the fenced slice only
-    "cdc_time_travel" ->
-      s"""WITH f AS (SELECT max(event_id) // 2 AS fence FROM events),
-         |wal AS (
-         |  SELECT event_id AS lsn, user_id, value,
-         |    epoch_ns(ts) // 1000000 AS ts_ms, $opCaseSql AS op
-         |  FROM events CROSS JOIN f WHERE event_id <= fence),
-         |ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY lsn DESC) AS rn
-         |  FROM wal WHERE op IN ('r','c','u','d'))
-         |SELECT user_id, lsn AS last_lsn, op AS last_op, value, ts_ms
-         |FROM ranked WHERE rn = 1 AND op <> 'd' ORDER BY user_id""".stripMargin,
-
-    "cdc_cagg_refresh" ->
-      s"""SELECT epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day,
-         |  COUNT(*) AS n,
-         |  CAST(SUM(CAST(floor(value * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_micros
-         |FROM events WHERE $opCaseSql = 'c'
-         |GROUP BY 1 ORDER BY chunk_day""".stripMargin,
-
-    // heartbeat twin: hourly buckets, max lsn
-    "cdc_heartbeats" ->
-      """SELECT (epoch_ns(ts) // 1000000 // 3600000) * 3600000 AS beat_ms,
-        |  MAX(event_id) AS high_lsn, COUNT(*) AS n_events
-        |FROM events GROUP BY 1 ORDER BY beat_ms""".stripMargin,
-
-    // mask twin: value excluded, props sha256-hex (lowercase both sides)
-    "cdc_column_mask" ->
-      s"""SELECT event_id AS lsn, user_id, $opCaseSql AS op,
-         |  sha256(props) AS props
-         |FROM events ORDER BY lsn""".stripMargin,
-
-    // gap twin: identical lead() over the identically-carved stream
-    "cdc_lsn_gaps" ->
-      """WITH mm AS (SELECT max(event_id) AS ml FROM events),
-        |d AS (SELECT event_id AS lsn FROM events CROSS JOIN mm
-        |      WHERE NOT (event_id BETWEEN ml // 4 AND ml // 4 + 9)
-        |        AND NOT (event_id BETWEEN ml // 2 AND ml // 2 + 4)),
-        |g AS (SELECT lsn, lead(lsn, 1) OVER (ORDER BY lsn) AS next_lsn FROM d)
-        |SELECT lsn AS gap_after_lsn, next_lsn AS resume_lsn,
-        |  next_lsn - lsn - 1 AS missing
-        |FROM g WHERE next_lsn - lsn > 1 ORDER BY gap_after_lsn""".stripMargin,
-
-    // reconcile twin: both sides' digests recomputed with the same tamper
-    "cdc_reconcile" -> {
-      def digest(src: String, p: String) =
-        s"""${p}h AS (SELECT chunk_day,
-           |  CAST(CASE WHEN hu >= CAST(9223372036854775808 AS HUGEINT)
-           |       THEN hu - CAST(18446744073709551616 AS HUGEINT) ELSE hu END
-           |       AS BIGINT) AS rh
-           |  FROM (SELECT chunk_day, ${fnvSql(
-                      "(lsn || '|' || user_id || '|' || event_type || '|' || " +
-                        "v_micros || '|' || props)")} AS hu FROM $src) ${p}z),
-           |${p}c AS (SELECT chunk_day, COUNT(*) AS n_rows,
-           |  CAST(bit_xor(rh) AS BIGINT) AS cs FROM ${p}h GROUP BY 1)""".stripMargin
-      s"""WITH wal AS (SELECT event_id AS lsn, user_id, event_type, props, value,
-         |    epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day FROM events),
-         |mm AS (SELECT max(lsn) AS ml FROM wal),
-         |sv AS (SELECT chunk_day, lsn, user_id, event_type, props,
-         |    CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS v_micros FROM wal),
-         |tv AS (SELECT chunk_day, lsn, user_id, event_type, props,
-         |    CAST(floor((CASE WHEN lsn = (SELECT ml // 3 FROM mm)
-         |                     THEN value + 1 ELSE value END) * 1000000 + 0.5)
-         |         AS BIGINT) AS v_micros
-         |  FROM wal WHERE lsn <> (SELECT ml // 2 FROM mm) AND chunk_day <> 0),
-         |${digest("sv", "s")},
-         |${digest("tv", "t")}
-         |SELECT 'events' AS table_name, chunk_day,
-         |  CASE WHEN sc.n_rows IS NULL THEN 'missing_on_source'
-         |       WHEN tc.n_rows IS NULL THEN 'missing_on_target'
-         |       WHEN sc.n_rows <> tc.n_rows THEN 'count_mismatch'
-         |       WHEN sc.cs <> tc.cs THEN 'checksum_mismatch'
-         |       ELSE 'equal' END AS status
-         |FROM sc FULL OUTER JOIN tc USING (chunk_day)
-         |ORDER BY table_name, chunk_day""".stripMargin
-    },
-
-    // ivm-join twin: the from-scratch view truth
-    "cdc_ivm_join" ->
-      """SELECT e.event_id AS lsn, e.user_id, e.value, c.c_nationkey
-        |FROM events e JOIN customer c ON c.c_custkey = e.user_id
-        |ORDER BY lsn""".stripMargin,
-
-    // weekly-cagg twin: weekly truth recomputed from scratch
-    "cdc_cagg_weekly" ->
-      s"""SELECT (epoch_ns(ts) // 86400000000000 - 19723) // 7 AS chunk_week,
-         |  COUNT(*) AS n,
-         |  CAST(SUM(CAST(floor(value * 1000000 + 0.5) AS BIGINT)) AS BIGINT)
-         |    AS sum_micros
-         |FROM events WHERE $opCaseSql = 'c'
-         |GROUP BY 1 ORDER BY chunk_week""".stripMargin,
-
-    // checksum twin: signed FNV-64a per row, XOR-folded per chunk
-    "cdc_chunk_checksums" -> {
-      val rowStr = "lsn || '|' || user_id || '|' || event_type || '|' || " +
-        "v_micros || '|' || props"
-      s"""WITH wal AS (
-         |  SELECT event_id AS lsn, user_id, event_type, props,
-         |    CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS v_micros,
-         |    epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day
-         |  FROM events),
-         |h AS (SELECT chunk_day,
-         |  CAST(CASE WHEN hu >= CAST(9223372036854775808 AS HUGEINT)
-         |       THEN hu - CAST(18446744073709551616 AS HUGEINT) ELSE hu END
-         |       AS BIGINT) AS rh
-         |  FROM (SELECT chunk_day, ${fnvSql(s"($rowStr)")} AS hu FROM wal) z)
-         |SELECT 'events' AS table_name, chunk_day, COUNT(*) AS n_rows,
-         |  CAST(bit_xor(rh) AS BIGINT) AS checksum
-         |FROM h GROUP BY 2 ORDER BY table_name, chunk_day""".stripMargin
-    },
-
-    // schema-diff twin: the expected change set as literal truth
-    "cdc_schema_diff" ->
-      """SELECT * FROM (VALUES
-        |  ('event_type', 'renamed', 'kind'),
-        |  ('geo', 'added', 'bigint'),
-        |  ('props', 'dropped', 'string'),
-        |  ('value', 'type_changed', 'double->decimal(18,6)'))
-        |  AS t(column_name, change, detail)
-        |ORDER BY column_name, change""".stripMargin,
-
-    "cdc_catalog_columns" ->
-      """SELECT * FROM (VALUES
-        |  ('event_id','bigint',true,true,1,false,NULL,1),
-        |  ('ts','bigint',true,false,NULL,true,'time',2),
-        |  ('user_id','bigint',true,false,NULL,false,NULL,3),
-        |  ('event_type','string',true,false,NULL,false,NULL,4),
-        |  ('value','double',true,false,NULL,false,NULL,5),
-        |  ('props','string',true,false,NULL,false,NULL,6))
-        |  AS t(column_name, data_type, nullable, is_primary_key, key_seq, is_dimension, dim_type, ordinal)
-        |ORDER BY ordinal""".stripMargin,
-
-    "cdc_chunk_added" ->
-      """SELECT concat('_hyper_1_', CAST(chunk_day AS VARCHAR), '_chunk') AS chunk_name,
-        |  MIN(event_id) AS registered_at_lsn,
-        |  'events' AS parent_hypertable
-        |FROM (SELECT event_id, epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day FROM events) t
-        |GROUP BY chunk_day ORDER BY registered_at_lsn""".stripMargin,
-
-    "cdc_sqs_dedup_id" ->
-      """SELECT event_id AS lsn,
-        |  sha256(concat_ws('|', CAST(event_id AS VARCHAR), CAST(event_id // 10 AS VARCHAR), props)) AS dedup_id
-        |FROM events ORDER BY lsn""".stripMargin,
-
-    "q_array_agg" ->
-      """SELECT user_id, array_to_string(list_sort(list(event_type)), ',') AS types, COUNT(*) AS n
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_explode_tokens" ->
-      """SELECT doc_id, pos, t[pos] AS tok FROM
-        |  (SELECT doc_id, string_split(text, ' ') AS t
-        |   FROM (SELECT * FROM documents ORDER BY doc_id LIMIT 50)) d,
-        |  LATERAL unnest(generate_series(1, len(t))) AS u(pos)
-        |ORDER BY doc_id, pos""".stripMargin,
-
-    "cdc_event_filter" ->
-      s"""SELECT event_id AS lsn, $opCaseSql AS op, user_id
-         |FROM events
-         |WHERE $opCaseSql = 'c' AND user_id > 5
-         |ORDER BY lsn""".stripMargin,
-
-    "cdc_truncate" ->
-      s"""SELECT MIN(event_id) AS lsn, event_id // 10 AS xid, 't' AS op,
-         |  'public' AS schema_name, 'events' AS table_name,
-         |  MIN(epoch_ns(ts) // 1000000) AS ts_ms,
-         |  CAST(NULL AS VARCHAR) AS before, CAST(NULL AS VARCHAR) AS after
-         |FROM events
-         |WHERE $opCaseSql = 'd'
-         |GROUP BY xid, schema_name, table_name
-         |ORDER BY xid""".stripMargin,
-
-    "cdc_message_txn_flag" ->
-      s"""WITH $msgPrefixCtes
-         |SELECT lsn,
-         |  lsn % 2 = 0 AS transactional,
-         |  CASE WHEN lsn % 2 = 0 THEN xid END AS tx_id,
-         |  CASE WHEN lsn % 2 = 0 THEN ts_ms END AS msg_ts_ms,
-         |  msg_prefix AS prefix, to_base64(encode(props)) AS content
-         |FROM mwalp WHERE op = 'm' AND msg_prefix NOT IN
-         |  ('::timescaledb-decompression-start', '::timescaledb-decompression-end')
-         |ORDER BY lsn""".stripMargin,
-
-    "cdc_envelope_schema" -> (SparkEntry.eventsEnvelopeOracle + "\nORDER BY lsn"),
-
-    "cdc_multitable" -> {
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val dz = graft.model.DebeziumSchema
-      def snapOracle(table: String, lsn: String, tsMs: String, rowJson: String,
-                     keyPayload: String, rowSchema: StructType,
-                     pk: Seq[(String, org.apache.spark.sql.types.DataType)]): String = {
-        val topic = s"graft.public.$table"
-        val env = dz.envelopeSchemaJson(rowSchema, topic)
-        val key = dz.keySchemaJson(topic, pk)
-        s"""SELECT '$topic' AS topic, $lsn AS lsn,
-           |  '{"payload":{"after":' || $rowJson || ',"op":"r","source":{"connector":"spark-graft","db":"graft","lsn":"' || hex(($lsn) >> 32) || '/' || hex(($lsn) & 4294967295) || '","name":"graft","schema":"public","snapshot":true,"table":"$table","ts_ms":' || $tsMs || ',"txId":null,"version":"0.1.0"},"ts_ms":' || $tsMs || '},"schema":$env}' AS envelope,
-           |  '{"payload":' || $keyPayload || ',"schema":$key}' AS key_json
-           |FROM $table""".stripMargin
-      }
-      val orders = snapOracle("orders", "o_orderkey", "epoch_ms(o_orderdate)",
-        s"""'{"o_custkey":' || o_custkey || ',"o_orderkey":' || o_orderkey || ',"total_cents":' || ${centsSql("o_totalprice")} || '}'""",
-        """'{"o_orderkey":' || o_orderkey || '}'""",
-        StructType(Seq(StructField("o_custkey", LongType),
-          StructField("o_orderkey", LongType), StructField("total_cents", LongType))),
-        Seq("o_orderkey" -> LongType))
-      val lineitem = snapOracle("lineitem", "l_orderkey * 10 + l_linenumber",
-        "epoch_ms(l_shipdate)",
-        s"""'{"l_linenumber":' || l_linenumber || ',"l_orderkey":' || l_orderkey || ',"qty_cents":' || ${centsSql("l_quantity")} || '}'""",
-        """'{"l_linenumber":' || l_linenumber || ',"l_orderkey":' || l_orderkey || '}'""",
-        StructType(Seq(StructField("l_linenumber", LongType),
-          StructField("l_orderkey", LongType), StructField("qty_cents", LongType))),
-        Seq("l_orderkey" -> LongType, "l_linenumber" -> LongType))
-      // plain join, NOT stripMargin: the spliced sub-queries contain
-      // line-leading '||' that margin stripping would corrupt
-      Seq("SELECT * FROM (",
-        "SELECT 'graft.public.events' AS topic, lsn, envelope, key_json",
-        s"FROM (${SparkEntry.eventsEnvelopeOracle})",
-        "UNION ALL", orders, "UNION ALL", lineitem,
-        ") ORDER BY topic, lsn").mkString("\n")
-    },
-
-    "cdc_filter_paths" ->
-      s"""SELECT event_id AS lsn, $opCaseSql AS op, user_id
-         |FROM events
-         |WHERE $opCaseSql = 'u' OR user_id IN (1, 2, 3)
-         |ORDER BY lsn""".stripMargin,
-
-    "cdc_filter_strfns" ->
-      """SELECT event_id AS lsn, props
-        |FROM events
-        |WHERE contains(props, '7') AND NOT starts_with(props, '{"k": 1')
-        |  AND regexp_matches(props, '[0-9][0-9]')
-        |ORDER BY lsn""".stripMargin,
-
-    "cdc_filter_builtins" ->
-      """SELECT event_id AS lsn, user_id, event_type
-        |FROM events
-        |WHERE length(props) % 2 = 0 AND least(user_id, 500) < 500
-        |  AND strpos(props, 'k') - 1 = 2
-        |  AND (upper(event_type) IN ('PURCHASE', 'VIEW', 'ERROR')
-        |       OR starts_with(CASE WHEN starts_with(event_type, 'sign')
-        |                           THEN substring(event_type, length('sign') + 1)
-        |                           ELSE event_type END, 'up'))
-        |ORDER BY lsn""".stripMargin,
-
-    "cdc_filter_ternary" ->
-      s"""SELECT event_id AS lsn, $opCaseSql AS op, user_id
-         |FROM events
-         |WHERE (CASE WHEN user_id > 50 THEN $opCaseSql = 'c' ELSE $opCaseSql <> 'c' END)
-         |  AND ends_with(coalesce(props, ''), '9}')
-         |ORDER BY lsn""".stripMargin,
-
-    // wave-2 twin: slice = 1-based substring of the same width; map
-    // membership = key-set IN; type(user_id)=='int' = non-null bigint
-    "cdc_filter_wave2" ->
-      """SELECT event_id AS lsn, event_type, user_id
-        |FROM events
-        |WHERE substring(event_type, 1, 3) IN ('sig', 'pur', 'vie')
-        |  AND length(substring(props, 3, 4)) = 4
-        |  AND user_id IS NOT NULL
-        |ORDER BY lsn""".stripMargin,
-
-    // wave-3 twin: the let binding inlines to the same slice-cast; the
-    // dialect's 0-based end-exclusive [6:-1] is duck's 1-based
-    // inclusive [7:-2]; take(1..v, 3) = range(1, least(v,3)+1)
-    // (end-exclusive); findIndex = 1-based list_position - 1
-    "cdc_filter_wave3" ->
-      """WITH e AS (SELECT event_id AS lsn, user_id, props,
-        |             CAST(props[7:-2] AS BIGINT) AS v FROM events)
-        |SELECT lsn, user_id, props FROM e
-        |WHERE v BETWEEN 10 AND 60
-        |  AND list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |        range(1, least(v, 3) + 1)), (a, b) -> a + b) = 6
-        |  AND list_position(list_transform(string_split(props, ':'),
-        |        x -> starts_with(x, ' ')), true) - 1 = 1
-        |ORDER BY lsn""".stripMargin,
-
-    "cdc_filter_wave4" ->
-      """WITH e AS (SELECT event_id AS lsn, user_id, props,
-        |    string_split(props, ':') AS t,
-        |    CAST(props[7:-2] AS BIGINT) AS v FROM events),
-        |x AS (SELECT lsn, user_id, props, v, t,
-        |    list_concat(list_transform(t, s -> CAST(length(s) AS BIGINT)), [v]) AS ext FROM e)
-        |SELECT lsn, user_id, props FROM x
-        |WHERE (CASE WHEN list_position(list_reverse(list_transform(t, s -> ends_with(s, '}'))), true) = 0 THEN -1
-        |       ELSE len(t) - list_position(list_reverse(list_transform(t, s -> ends_with(s, '}'))), true) END) = 1
-        |  AND list_reverse(list_filter(t, s -> starts_with(s, '{')))[1] = t[1]
-        |  AND list_slice(list_sort(ext), len(ext), len(ext)) = [v]
-        |  AND list_aggregate(ext, 'avg') >= 20.0
-        |  AND len(list_filter(t, s -> length(s) = 4)) >= 1
-        |  AND decode(from_base64(to_base64(encode(props)))) = props
-        |ORDER BY lsn""".stripMargin,
-
-    // wave-5 twin: DuckDB bit operators + the same reverse-trick
-    // lastIndexOf (strpos ≡ instr: 1-based, 0 when absent)
-    "cdc_filter_wave5" ->
-      """WITH e AS (SELECT event_id AS lsn, user_id, props FROM events)
-        |SELECT lsn, user_id, props FROM e
-        |WHERE (user_id & 7) IN (1, 2, 3)
-        |  AND (1 << 3) = 8
-        |  AND ((user_id << 1) >> 1) = user_id
-        |  AND xor(user_id | 4, 4) <= user_id
-        |  AND (CASE WHEN strpos(reverse(props), reverse('1')) = 0 THEN -1
-        |       ELSE length(props) - strpos(reverse(props), reverse('1')) - length('1') + 1 END) >= 2
-        |  AND (CASE WHEN strpos(reverse(props), reverse('zz')) = 0 THEN -1
-        |       ELSE length(props) - strpos(reverse(props), reverse('zz')) - length('zz') + 1 END) = -1
-        |ORDER BY lsn""".stripMargin,
-
-    "cdc_filter_wave6" ->
-      """WITH e AS (SELECT event_id AS lsn, user_id, event_type, props FROM events)
-        |SELECT lsn, user_id, event_type, props FROM e
-        |WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) >= 40
-        |  AND len(json_keys(props)) = 1
-        |  AND json_extract_string(props, '$.k') = json_extract_string(props, '$.k')
-        |  AND len(string_split(event_type, 'e')) >= 2
-        |  AND NOT starts_with(event_type, 'e')
-        |  AND length(to_json(json_keys(props))) = 5
-        |ORDER BY lsn""".stripMargin,
-
-    "cdc_filter_wave7" ->
-      """SELECT event_id AS lsn, user_id, props FROM events
-        |WHERE json_extract_string(props, '$.k') IS NOT NULL
-        |  AND coalesce(json_extract_string(props, '$.absent'), '42') = '42'
-        |  AND CAST(json_extract_string(props, '$.k') AS BIGINT) >= 0
-        |  AND coalesce(CAST(json_extract_string(props, '$.absent') AS BIGINT), -1) = -1
-        |ORDER BY lsn""".stripMargin,
-
-    // wave-8 twin: every schema-introspection conjunct folds to a
-    // compile-time truth, leaving only the payload predicate
-    "cdc_filter_wave8" ->
-      """SELECT event_id AS lsn, user_id FROM events
-        |WHERE user_id % 2 = 0 ORDER BY lsn""".stripMargin,
-
-    // wave-9 twin: the fixed-offset zone makes ParseInLocation plain
-    // interval arithmetic; dt is ts floored to seconds both sides
-    "cdc_filter_wave9" ->
-      """WITH e AS (SELECT event_id AS lsn, user_id,
-        |                  strftime(ts, '%Y-%m-%d %H:%M:%S') AS dt,
-        |                  date_trunc('second', ts) AS tsec FROM events)
-        |SELECT lsn, user_id, dt FROM e
-        |WHERE tsec + INTERVAL 5 HOUR < TIMESTAMP '2024-01-15 19:00:00'
-        |  AND tsec >= TIMESTAMP '2024-01-05 00:00:00'
-        |  AND user_id % 3 = 0
-        |ORDER BY lsn""".stripMargin,
-
-    "cdc_filter_closures" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-        |SELECT doc_id, len(t) AS n_toks FROM tok
-        |WHERE len(list_filter(t, x -> starts_with(x, 'b'))) > 0
-        |  AND len(list_filter(list_transform(t, x -> length(x)), y -> y >= 7)) > 3
-        |  AND len(list_filter(t, x -> x = 'zzz')) = 0
-        |  AND NOT (len(list_filter(t, x -> length(x) < 7)) = len(t))
-        |ORDER BY doc_id""".stripMargin,
-
-    "events_sessionize" ->
-      s"""SELECT user_id, CAST(sess_no AS BIGINT) AS sess_no, COUNT(*) AS n_events,
-         |  MIN(ts_ms) AS sess_start_ms, MAX(ts_ms) AS sess_end_ms
-         |FROM (
-         |  SELECT user_id, ts_ms,
-         |    SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_ms, lsn
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_no
-         |  FROM (
-         |    SELECT user_id, event_id AS lsn, epoch_ns(ts) // 1000000 AS ts_ms,
-         |      CASE WHEN lag(epoch_ns(ts) // 1000000, 1) OVER (PARTITION BY user_id ORDER BY epoch_ns(ts) // 1000000, event_id) IS NULL
-         |             OR epoch_ns(ts) // 1000000 - lag(epoch_ns(ts) // 1000000, 1) OVER (PARTITION BY user_id ORDER BY epoch_ns(ts) // 1000000, event_id) > 3600000
-         |           THEN 1 ELSE 0 END AS new_sess
-         |    FROM events) a) b
-         |GROUP BY user_id, sess_no
-         |ORDER BY user_id, sess_no""".stripMargin,
-
-    // overlap twin: the same session CTE, then a plain inequality join
-    // (DuckDB's IEJoin handles it natively — the binning is Spark-side
-    // physical strategy, invisible in the result)
-    "q_interval_overlap" ->
-      s"""WITH sess AS (
-         |  SELECT user_id, CAST(sess_no AS BIGINT) AS sess_no,
-         |    MIN(ts_ms) AS sess_start_ms, MAX(ts_ms) AS sess_end_ms
-         |  FROM (
-         |    SELECT user_id, ts_ms,
-         |      SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_ms, lsn
-         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_no
-         |    FROM (
-         |      SELECT user_id, event_id AS lsn, epoch_ns(ts) // 1000000 AS ts_ms,
-         |        CASE WHEN lag(epoch_ns(ts) // 1000000, 1) OVER (PARTITION BY user_id ORDER BY epoch_ns(ts) // 1000000, event_id) IS NULL
-         |               OR epoch_ns(ts) // 1000000 - lag(epoch_ns(ts) // 1000000, 1) OVER (PARTITION BY user_id ORDER BY epoch_ns(ts) // 1000000, event_id) > 3600000
-         |             THEN 1 ELSE 0 END AS new_sess
-         |      FROM events) a) b
-         |  GROUP BY user_id, sess_no),
-         |p AS (SELECT event_id AS purchase_lsn, epoch_ns(ts) // 1000000 AS pt_ms
-         |      FROM events WHERE event_type = 'purchase')
-         |SELECT s.user_id, s.sess_no, p.purchase_lsn, p.pt_ms
-         |FROM sess s JOIN p ON p.pt_ms BETWEEN s.sess_start_ms AND s.sess_end_ms
-         |ORDER BY s.user_id, s.sess_no, p.purchase_lsn""".stripMargin,
-
-    // identical semantics to q_interval_overlap — the Spark side differs
-    // only in HOW the plan is produced (optimizer rewrite vs manual
-    // binning), which the twin result must not see
-    "q_range_autobin" ->
-      s"""WITH sess AS (
-         |  SELECT user_id, CAST(sess_no AS BIGINT) AS sess_no,
-         |    MIN(ts_ms) AS sess_start_ms, MAX(ts_ms) AS sess_end_ms
-         |  FROM (
-         |    SELECT user_id, ts_ms,
-         |      SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_ms, lsn
-         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_no
-         |    FROM (
-         |      SELECT user_id, event_id AS lsn, epoch_ns(ts) // 1000000 AS ts_ms,
-         |        CASE WHEN lag(epoch_ns(ts) // 1000000, 1) OVER (PARTITION BY user_id ORDER BY epoch_ns(ts) // 1000000, event_id) IS NULL
-         |               OR epoch_ns(ts) // 1000000 - lag(epoch_ns(ts) // 1000000, 1) OVER (PARTITION BY user_id ORDER BY epoch_ns(ts) // 1000000, event_id) > 3600000
-         |             THEN 1 ELSE 0 END AS new_sess
-         |      FROM events) a) b
-         |  GROUP BY user_id, sess_no),
-         |p AS (SELECT event_id AS purchase_lsn, epoch_ns(ts) // 1000000 AS pt_ms
-         |      FROM events WHERE event_type = 'purchase')
-         |SELECT s.user_id, s.sess_no, p.purchase_lsn, p.pt_ms
-         |FROM sess s JOIN p ON p.pt_ms BETWEEN s.sess_start_ms AND s.sess_end_ms
-         |ORDER BY s.user_id, s.sess_no, p.purchase_lsn""".stripMargin,
-
-    // funnel twin: identical greedy join-chain (min step-1, earliest
-    // next-step after the previous inside the entry window), on MICROS
-    // (epoch_ns // 1000 ≡ Spark's ts div 1000 — DuckDB truncates
-    // TIMESTAMP_NS to micro precision, so micros is the shared grid)
-    "events_funnel" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000 AS tsn, event_type FROM events),
-        |s1 AS (SELECT user_id, min(tsn) AS ts_1 FROM e
-        |       WHERE event_type = 'view' GROUP BY user_id),
-        |s2 AS (SELECT s1.user_id, max(s1.ts_1) AS ts_1, min(e.tsn) AS ts_2
-        |       FROM s1 LEFT JOIN e ON e.user_id = s1.user_id
-        |         AND e.event_type = 'click'
-        |         AND e.tsn > s1.ts_1 AND e.tsn <= s1.ts_1 + 604800000000
-        |       GROUP BY s1.user_id),
-        |s3 AS (SELECT s2.user_id, max(ts_1) AS ts_1, max(ts_2) AS ts_2,
-        |         min(e.tsn) AS ts_3
-        |       FROM s2 LEFT JOIN e ON e.user_id = s2.user_id
-        |         AND e.event_type = 'purchase'
-        |         AND e.tsn > s2.ts_2 AND e.tsn <= s2.ts_1 + 604800000000
-        |       GROUP BY s2.user_id)
-        |SELECT user_id, ts_1, ts_2, ts_3,
-        |  CAST(1 + CASE WHEN ts_2 IS NULL THEN 0 ELSE 1 END
-        |         + CASE WHEN ts_3 IS NULL THEN 0 ELSE 1 END AS BIGINT) AS steps_completed
-        |FROM s3 ORDER BY user_id""".stripMargin,
-
-    // retention twin: integer week buckets over epoch nanos
-    "events_retention" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) // 604800000000000 AS period FROM events),
-        |f AS (SELECT user_id, min(period) AS cohort_period FROM e GROUP BY user_id)
-        |SELECT f.cohort_period, e.period - f.cohort_period AS period_offset,
-        |  CAST(count(DISTINCT e.user_id) AS BIGINT) AS n_active_users
-        |FROM e JOIN f ON e.user_id = f.user_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // time-bucket twin: arg_min/arg_max on the identical combined key
-    "events_time_bucket" ->
-      """WITH wal AS (
-        |  SELECT event_id AS lsn, event_type, value,
-        |    epoch_ns(ts) // 1000000 AS ts_ms,
-        |    epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day
-        |  FROM events)
-        |SELECT event_type, chunk_day,
-        |  arg_min(value, ts_ms * 1000000 + lsn) AS first_value,
-        |  arg_max(value, ts_ms * 1000000 + lsn) AS last_value,
-        |  min(value) AS min_value, max(value) AS max_value, COUNT(*) AS n
-        |FROM wal GROUP BY 1, 2 ORDER BY event_type, chunk_day""".stripMargin,
-
-    // candlestick twin: same cents/volume integerization, arg_min/arg_max
-    // on the combined order, floor (//) division matches Spark's div on
-    // the all-positive notional
-    "events_candlestick" ->
-      """WITH wal AS (
-        |  SELECT event_id AS lsn, event_type,
-        |    epoch_ns(ts) // 1000000 AS ts_ms,
-        |    epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day,
-        |    CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS cents,
-        |    CAST(json_extract_string(props, '$.k') AS BIGINT) AS vol
-        |  FROM events)
-        |SELECT event_type, chunk_day,
-        |  arg_min(cents, ts_ms * 1000000 + lsn) AS open_cents,
-        |  arg_max(cents, ts_ms * 1000000 + lsn) AS close_cents,
-        |  max(cents) AS high_cents, min(cents) AS low_cents,
-        |  min(ts_ms * 1000000 + lsn) AS open_ord,
-        |  max(ts_ms * 1000000 + lsn) AS close_ord,
-        |  COUNT(*) AS n_ticks,
-        |  CAST(sum(vol) AS BIGINT) AS volume,
-        |  CAST(sum(cents * vol) AS BIGINT) AS notional_cents,
-        |  CAST(sum(cents * vol) AS BIGINT) * 10000
-        |    // nullif(CAST(sum(vol) AS BIGINT), 0) AS vwap_micro
-        |FROM wal GROUP BY 1, 2 ORDER BY event_type, chunk_day""".stripMargin,
-
-    // saturating-math twin: identical operand derivation (both engines'
-    // % keeps the dividend sign), BIGINT arithmetic, i32/pos clamps
-    "conv_saturating_i32" ->
-      """WITH wal AS (SELECT event_id AS lsn,
-        |    CAST((CAST(floor(value * 100 + 0.5) AS BIGINT) * 48271) % 2147483647 AS INT) AS a,
-        |    CAST(((event_id * 69621) % 2147483647) - 1073741823 AS INT) AS b
-        |  FROM events)
-        |SELECT lsn, a, b,
-        |  CAST(least(greatest(CAST(a AS BIGINT) + CAST(b AS BIGINT), -2147483648), 2147483647) AS INT) AS sat_add,
-        |  CAST(least(greatest(CAST(a AS BIGINT) - CAST(b AS BIGINT), -2147483648), 2147483647) AS INT) AS sat_sub,
-        |  CAST(least(greatest(CAST(a AS BIGINT) * CAST(b AS BIGINT), -2147483648), 2147483647) AS INT) AS sat_mul,
-        |  CAST(least(greatest(CAST(a AS BIGINT) + CAST(b AS BIGINT), 0), 2147483647) AS INT) AS sat_add_pos,
-        |  CAST(least(greatest(CAST(a AS BIGINT) - CAST(b AS BIGINT), 0), 2147483647) AS INT) AS sat_sub_pos
-        |FROM wal ORDER BY lsn""".stripMargin,
-
-    // candlestick-rollup twin: the WEEK computed from scratch off raw
-    // ticks — hash equality against the Spark side's daily-merge is
-    // exactly the rollup() mergeable-state contract
-    "events_candlestick_weekly" ->
-      """WITH wal AS (
-        |  SELECT event_id AS lsn, event_type,
-        |    epoch_ns(ts) // 1000000 AS ts_ms,
-        |    epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day,
-        |    CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS cents,
-        |    CAST(json_extract_string(props, '$.k') AS BIGINT) AS vol
-        |  FROM events)
-        |SELECT event_type, chunk_day // 7 AS chunk_week,
-        |  arg_min(cents, ts_ms * 1000000 + lsn) AS open_cents,
-        |  arg_max(cents, ts_ms * 1000000 + lsn) AS close_cents,
-        |  max(cents) AS high_cents, min(cents) AS low_cents,
-        |  min(ts_ms * 1000000 + lsn) AS open_ord,
-        |  max(ts_ms * 1000000 + lsn) AS close_ord,
-        |  COUNT(*) AS n_ticks,
-        |  CAST(sum(vol) AS BIGINT) AS volume,
-        |  CAST(sum(cents * vol) AS BIGINT) AS notional_cents,
-        |  CAST(sum(cents * vol) AS BIGINT) * 10000
-        |    // nullif(CAST(sum(vol) AS BIGINT), 0) AS vwap_micro
-        |FROM wal GROUP BY 1, 2 ORDER BY event_type, chunk_week""".stripMargin,
-
-    // heartbeat twin: lead-gap per user on the same order key; the
-    // final (null-gap) beat is excluded from the sum and contributes
-    // its TTL via the constant term, exactly as the Spark side does
-    "events_heartbeat" ->
-      """WITH wal AS (
-        |  SELECT event_id AS lsn, user_id,
-        |    epoch_ns(ts) // 1000000 AS ts_ms
-        |  FROM events),
-        |g AS (
-        |  SELECT user_id, ts_ms,
-        |    lead(ts_ms) OVER (PARTITION BY user_id
-        |      ORDER BY ts_ms * 1000000 + lsn) - ts_ms AS gap
-        |  FROM wal)
-        |SELECT user_id,
-        |  COUNT(*) AS n_beats,
-        |  min(ts_ms) AS first_seen_ms,
-        |  max(ts_ms) AS last_seen_ms,
-        |  CAST(coalesce(sum(CASE WHEN gap IS NOT NULL
-        |      THEN least(gap, 43200000) END), 0) + 43200000 AS BIGINT)
-        |    AS uptime_ms,
-        |  CAST(sum(CASE WHEN gap > 43200000 THEN 1 ELSE 0 END) + 1 AS BIGINT)
-        |    AS num_live_ranges,
-        |  max(CASE WHEN gap > 43200000 THEN gap END) AS longest_gap_ms,
-        |  max(ts_ms) - min(ts_ms) + 43200000
-        |    - CAST(coalesce(sum(CASE WHEN gap IS NOT NULL
-        |        THEN least(gap, 43200000) END), 0) + 43200000 AS BIGINT)
-        |    AS downtime_ms
-        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // interpolated time-weight twin: per-type lead spans, inclusive
-    // generate_series over spanned days, clip to each day; both engines
-    // do the identical integer ms arithmetic
-    "events_time_weighted_interp" ->
-      """WITH wal AS (
-        |  SELECT event_id AS lsn, event_type,
-        |    epoch_ns(ts) // 1000000 AS ts_ms,
-        |    CAST(floor(value * 1000 + 0.5) AS BIGINT) AS v_milli
-        |  FROM events),
-        |sp AS (
-        |  SELECT event_type, v_milli, ts_ms,
-        |    lead(ts_ms) OVER (PARTITION BY event_type
-        |      ORDER BY ts_ms * 1000000 + lsn) AS next_ts
-        |  FROM wal),
-        |seg AS (
-        |  SELECT event_type, v_milli, ts_ms, next_ts,
-        |    unnest(generate_series(ts_ms // 86400000,
-        |                           (next_ts - 1) // 86400000)) AS day
-        |  FROM sp WHERE next_ts IS NOT NULL AND next_ts > ts_ms)
-        |SELECT event_type,
-        |  CAST(day - 19723 AS INTEGER) AS chunk_day,
-        |  CAST(sum(v_milli * (least(next_ts, (day + 1) * 86400000)
-        |        - greatest(ts_ms, day * 86400000))) AS BIGINT)
-        |    AS weighted_milli_ms,
-        |  CAST(sum(least(next_ts, (day + 1) * 86400000)
-        |        - greatest(ts_ms, day * 86400000)) AS BIGINT) AS covered_ms,
-        |  COUNT(*) AS n_segs,
-        |  CAST(sum(v_milli * (least(next_ts, (day + 1) * 86400000)
-        |        - greatest(ts_ms, day * 86400000))) AS BIGINT) * 1000
-        |    // nullif(CAST(sum(least(next_ts, (day + 1) * 86400000)
-        |        - greatest(ts_ms, day * 86400000)) AS BIGINT), 0) AS twa_micro
-        |FROM seg GROUP BY 1, 2 ORDER BY event_type, chunk_day""".stripMargin,
-
-    // HDR-quantile twin: msb via binary-string length (integer-exact in
-    // both engines), running window cum, first qualifying bucket, the
-    // identical integer interpolation
-    "events_hdr_quantiles" ->
-      """WITH wal AS (
-        |  SELECT event_type,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) + 1 AS shifted
-        |  FROM events),
-        |b AS (
-        |  SELECT event_type,
-        |    CAST(length(printf('%b', shifted)) - 1 AS INTEGER) AS bucket,
-        |    COUNT(*) AS cnt
-        |  FROM wal GROUP BY 1, 2),
-        |c AS (
-        |  SELECT event_type, bucket, cnt,
-        |    CAST(sum(cnt) OVER (PARTITION BY event_type
-        |      ORDER BY bucket) AS BIGINT) AS cum,
-        |    CAST(sum(cnt) OVER (PARTITION BY event_type) AS BIGINT) AS total
-        |  FROM b),
-        |x AS (
-        |  SELECT c.*, p FROM c
-        |  CROSS JOIN (SELECT unnest([50, 90, 99]) AS p) ps
-        |  WHERE cum >= (total * p + 99) // 100)
-        |SELECT event_type, p, total AS n, bucket,
-        |  (1::BIGINT << bucket)
-        |    + ((((total * p + 99) // 100) - cum + cnt)
-        |       * (1::BIGINT << bucket)) // cnt
-        |    - 1 AS approx_cents
-        |FROM x
-        |QUALIFY row_number() OVER (PARTITION BY event_type, p
-        |  ORDER BY bucket) = 1
-        |ORDER BY event_type, p""".stripMargin,
-
-    // gapfill twin: dense generate_series grid + IGNORE NULLS window
-    "events_gapfill_locf" ->
-      """WITH wal AS (
-        |  SELECT event_id AS lsn, event_type, value,
-        |    epoch_ns(ts) // 1000000 AS ts_ms,
-        |    epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day
-        |  FROM events),
-        |daily AS (SELECT event_type, chunk_day,
-        |    arg_max(value, ts_ms * 1000000 + lsn) AS day_last, COUNT(*) AS n
-        |  FROM wal GROUP BY 1, 2),
-        |r AS (SELECT min(chunk_day) AS lo, max(chunk_day) AS hi FROM wal),
-        |grid AS (SELECT t.event_type, g.d AS chunk_day
-        |  FROM (SELECT DISTINCT event_type FROM wal) t
-        |  CROSS JOIN (SELECT unnest(generate_series((SELECT lo FROM r),
-        |                                            (SELECT hi FROM r))) AS d) g),
-        |filled AS (SELECT g.event_type, g.chunk_day,
-        |    COALESCE(d.n, 0) AS n, d.day_last
-        |  FROM grid g LEFT JOIN daily d USING (event_type, chunk_day))
-        |SELECT event_type, chunk_day, n,
-        |  last_value(day_last IGNORE NULLS) OVER (PARTITION BY event_type
-        |    ORDER BY chunk_day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS value_locf
-        |FROM filled ORDER BY event_type, chunk_day""".stripMargin,
-
-    // interpolate twin: same masked wal, same grid, anchors via
-    // IGNORE-NULLS windows; the linear blend is the TEXTUALLY identical
-    // double expression (fixed IEEE order), rounded half-up to milli
-    "events_gapfill_interp" ->
-      """WITH wal AS (
-        |  SELECT event_id AS lsn, event_type, value,
-        |    epoch_ns(ts) // 1000000 AS ts_ms,
-        |    epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day
-        |  FROM events
-        |  WHERE (epoch_ns(ts) // 86400000000000 - 19723 + length(event_type)) % 3 != 0),
-        |daily AS (SELECT event_type, chunk_day,
-        |    arg_max(CAST(floor(value * 1000 + 0.5) AS BIGINT),
-        |            ts_ms * 1000000 + lsn) AS day_last_milli,
-        |    COUNT(*) AS n
-        |  FROM wal GROUP BY 1, 2),
-        |r AS (SELECT min(chunk_day) AS lo, max(chunk_day) AS hi FROM wal),
-        |grid AS (SELECT t.event_type, g.d AS chunk_day
-        |  FROM (SELECT DISTINCT event_type FROM wal) t
-        |  CROSS JOIN (SELECT unnest(generate_series((SELECT lo FROM r),
-        |                                            (SELECT hi FROM r))) AS d) g),
-        |filled AS (SELECT g.event_type, g.chunk_day,
-        |    COALESCE(d.n, 0) AS n, d.day_last_milli
-        |  FROM grid g LEFT JOIN daily d USING (event_type, chunk_day)),
-        |anch AS (SELECT *,
-        |  last_value(day_last_milli IGNORE NULLS) OVER wprev AS v_prev,
-        |  last_value(CASE WHEN day_last_milli IS NOT NULL THEN chunk_day END
-        |             IGNORE NULLS) OVER wprev AS d_prev,
-        |  first_value(day_last_milli IGNORE NULLS) OVER wnext AS v_next,
-        |  first_value(CASE WHEN day_last_milli IS NOT NULL THEN chunk_day END
-        |              IGNORE NULLS) OVER wnext AS d_next
-        |  FROM filled
-        |  WINDOW wprev AS (PARTITION BY event_type ORDER BY chunk_day
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |         wnext AS (PARTITION BY event_type ORDER BY chunk_day
-        |           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT event_type, chunk_day, n,
-        |  CASE
-        |    WHEN day_last_milli IS NOT NULL THEN day_last_milli
-        |    WHEN v_prev IS NOT NULL AND v_next IS NOT NULL THEN
-        |      CAST(FLOOR(CAST(v_prev AS DOUBLE)
-        |        + (CAST(v_next AS DOUBLE) - CAST(v_prev AS DOUBLE))
-        |          * (CAST(chunk_day - d_prev AS DOUBLE)
-        |             / CAST(d_next - d_prev AS DOUBLE)) + 0.5) AS BIGINT)
-        |    ELSE NULL END AS value_interp_milli
-        |FROM anch ORDER BY event_type, chunk_day""".stripMargin,
-
-    // attribution twin: plain interval self-join on the ms integers
-    "events_attribution" ->
-      """WITH wal AS (SELECT event_id AS lsn, user_id, event_type,
-        |    epoch_ns(ts) // 1000000 AS ts_ms FROM events),
-        |v AS (SELECT user_id AS v_user, lsn AS view_lsn, ts_ms AS view_ms
-        |      FROM wal WHERE event_type = 'view'),
-        |p AS (SELECT user_id, lsn AS purchase_lsn, ts_ms AS purchase_ms
-        |      FROM wal WHERE event_type = 'purchase')
-        |SELECT p.user_id, purchase_lsn, view_lsn, purchase_ms, view_ms
-        |FROM p JOIN v ON v.v_user = p.user_id
-        |  AND view_ms <= purchase_ms AND view_ms >= purchase_ms - 3600000
-        |ORDER BY purchase_lsn, view_lsn""".stripMargin,
-
-    // time-weight twin: identical lead() integral in integer units
-    "events_time_weighted" ->
-      """WITH wal AS (
-        |  SELECT event_id AS lsn, event_type,
-        |    CAST(floor(value * 1000 + 0.5) AS BIGINT) AS v_milli,
-        |    epoch_ns(ts) // 1000000 AS ts_ms,
-        |    epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day
-        |  FROM events),
-        |led AS (SELECT *, lead(ts_ms, 1) OVER (
-        |    PARTITION BY event_type, chunk_day
-        |    ORDER BY ts_ms * 1000000 + lsn) AS next_ts FROM wal)
-        |SELECT event_type, chunk_day,
-        |  CAST(SUM(CASE WHEN next_ts IS NOT NULL
-        |       THEN v_milli * (next_ts - ts_ms) ELSE 0 END) AS BIGINT)
-        |    AS weighted_milli_ms,
-        |  max(ts_ms) - min(ts_ms) AS span_ms, COUNT(*) AS n
-        |FROM led GROUP BY 1, 2 ORDER BY event_type, chunk_day""".stripMargin,
-
-    // stats_agg twin: identical integer sums; accessors share the exact
-    // double operation order (IEEE ops on equal inputs are bit-equal)
-    "events_stats_agg" ->
-      """WITH wal AS (
-        |  SELECT event_type,
-        |    (epoch_ns(ts) // 1000000 - (SELECT min(epoch_ns(ts) // 1000000) FROM events)) // 60000 AS x,
-        |    CAST(floor(value * 1000 + 0.5) AS BIGINT) AS y
-        |  FROM events),
-        |acc AS (SELECT event_type, COUNT(*) AS n,
-        |    CAST(SUM(x) AS BIGINT) AS sum_x, CAST(SUM(y) AS BIGINT) AS sum_y,
-        |    CAST(SUM(x * y) AS BIGINT) AS sum_xy,
-        |    CAST(SUM(x * x) AS BIGINT) AS sum_x2,
-        |    CAST(SUM(y * y) AS BIGINT) AS sum_y2
-        |  FROM wal GROUP BY event_type),
-        |sl AS (SELECT *,
-        |    CASE WHEN CAST(n AS DOUBLE) * CAST(sum_x2 AS DOUBLE)
-        |              - CAST(sum_x AS DOUBLE) * CAST(sum_x AS DOUBLE) = 0.0 THEN 0
-        |         ELSE CAST(FLOOR(
-        |           (CAST(n AS DOUBLE) * CAST(sum_xy AS DOUBLE)
-        |              - CAST(sum_x AS DOUBLE) * CAST(sum_y AS DOUBLE))
-        |           / (CAST(n AS DOUBLE) * CAST(sum_x2 AS DOUBLE)
-        |              - CAST(sum_x AS DOUBLE) * CAST(sum_x AS DOUBLE))
-        |           * 1000000.0 + 0.5) AS BIGINT) END AS slope_micro
-        |  FROM acc)
-        |SELECT event_type, n, sum_x, sum_y, sum_xy, sum_x2, sum_y2, slope_micro,
-        |  CASE WHEN n = 0 THEN 0
-        |       ELSE CAST(FLOOR(
-        |         (CAST(sum_y AS DOUBLE) - CAST(slope_micro AS DOUBLE) / 1000000.0
-        |            * CAST(sum_x AS DOUBLE)) / CAST(n AS DOUBLE) + 0.5) AS BIGINT) END
-        |    AS intercept_milli
-        |FROM sl ORDER BY event_type""".stripMargin,
-
-    "events_stats_rollup" ->
-      """WITH wal AS (
-        |  SELECT event_type,
-        |    epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day,
-        |    (epoch_ns(ts) // 1000000 - (SELECT min(epoch_ns(ts) // 1000000) FROM events)) // 60000 AS x,
-        |    CAST(floor(value * 1000 + 0.5) AS BIGINT) AS y
-        |  FROM events)
-        |SELECT event_type, chunk_day, COUNT(*) AS n,
-        |  CAST(SUM(x) AS BIGINT) AS sum_x, CAST(SUM(y) AS BIGINT) AS sum_y,
-        |  CAST(SUM(x * y) AS BIGINT) AS sum_xy,
-        |  CAST(SUM(x * x) AS BIGINT) AS sum_x2,
-        |  CAST(SUM(y * y) AS BIGINT) AS sum_y2
-        |FROM wal GROUP BY 1, 2 ORDER BY event_type, chunk_day""".stripMargin,
-
-    // stats2d twin: identical sums, identical fixed-order double
-    // accessor text (division/sqrt are correctly rounded — bit-equal)
-    "events_stats2d" ->
-      """WITH wal AS (
-        |  SELECT event_type,
-        |    (epoch_ns(ts) // 1000000 - (SELECT min(epoch_ns(ts) // 1000000) FROM events)) // 60000 AS x,
-        |    CAST(floor(value * 1000 + 0.5) AS BIGINT) AS y
-        |  FROM events),
-        |acc AS (SELECT event_type, COUNT(*) AS n,
-        |    CAST(SUM(x) AS BIGINT) AS sum_x, CAST(SUM(y) AS BIGINT) AS sum_y,
-        |    CAST(SUM(x * y) AS BIGINT) AS sum_xy,
-        |    CAST(SUM(x * x) AS BIGINT) AS sum_x2,
-        |    CAST(SUM(y * y) AS BIGINT) AS sum_y2
-        |  FROM wal GROUP BY event_type),
-        |sl AS (SELECT *,
-        |    CASE WHEN CAST(n AS DOUBLE) * CAST(sum_x2 AS DOUBLE)
-        |              - CAST(sum_x AS DOUBLE) * CAST(sum_x AS DOUBLE) = 0.0 THEN 0
-        |         ELSE CAST(FLOOR(
-        |           (CAST(n AS DOUBLE) * CAST(sum_xy AS DOUBLE)
-        |              - CAST(sum_x AS DOUBLE) * CAST(sum_y AS DOUBLE))
-        |           / (CAST(n AS DOUBLE) * CAST(sum_x2 AS DOUBLE)
-        |              - CAST(sum_x AS DOUBLE) * CAST(sum_x AS DOUBLE))
-        |           * 1000000.0 + 0.5) AS BIGINT) END AS slope_micro
-        |  FROM acc),
-        |ic AS (SELECT *,
-        |    CASE WHEN n = 0 THEN 0
-        |         ELSE CAST(FLOOR(
-        |           (CAST(sum_y AS DOUBLE) - CAST(slope_micro AS DOUBLE) / 1000000.0
-        |              * CAST(sum_x AS DOUBLE)) / CAST(n AS DOUBLE) + 0.5) AS BIGINT) END
-        |      AS intercept_milli
-        |  FROM sl),
-        |cr AS (SELECT *,
-        |    CASE WHEN CAST(n AS DOUBLE) * CAST(sum_x2 AS DOUBLE)
-        |              - CAST(sum_x AS DOUBLE) * CAST(sum_x AS DOUBLE) <= 0.0
-        |           OR CAST(n AS DOUBLE) * CAST(sum_y2 AS DOUBLE)
-        |              - CAST(sum_y AS DOUBLE) * CAST(sum_y AS DOUBLE) <= 0.0
-        |         THEN NULL
-        |         ELSE (CAST(n AS DOUBLE) * CAST(sum_xy AS DOUBLE)
-        |                 - CAST(sum_x AS DOUBLE) * CAST(sum_y AS DOUBLE))
-        |              / (SQRT(CAST(n AS DOUBLE) * CAST(sum_x2 AS DOUBLE)
-        |                      - CAST(sum_x AS DOUBLE) * CAST(sum_x AS DOUBLE))
-        |                 * SQRT(CAST(n AS DOUBLE) * CAST(sum_y2 AS DOUBLE)
-        |                        - CAST(sum_y AS DOUBLE) * CAST(sum_y AS DOUBLE)))
-        |    END AS corr_d
-        |  FROM ic)
-        |SELECT event_type, n, sum_x, sum_y, sum_xy, sum_x2, sum_y2,
-        |  slope_micro, intercept_milli,
-        |  CASE WHEN n = 0 THEN NULL
-        |       ELSE CAST(FLOOR(
-        |         (CAST(sum_xy AS DOUBLE)
-        |            - CAST(sum_x AS DOUBLE) * CAST(sum_y AS DOUBLE)
-        |              / CAST(n AS DOUBLE))
-        |         / CAST(n AS DOUBLE) + 0.5) AS BIGINT) END AS covar_xy,
-        |  CAST(FLOOR(corr_d * 1000000.0 + 0.5) AS BIGINT) AS corr_micro,
-        |  CAST(FLOOR(corr_d * corr_d * 1000000.0 + 0.5) AS BIGINT) AS determination_micro,
-        |  CASE WHEN slope_micro = 0 THEN NULL
-        |       ELSE CAST(FLOOR(-CAST(intercept_milli AS DOUBLE)
-        |                       / (CAST(slope_micro AS DOUBLE) / 1000000.0)
-        |                       * 1000.0 + 0.5) AS BIGINT) END AS x_intercept_milli
-        |FROM cr ORDER BY event_type""".stripMargin,
-
-    // moments twin: identical deci-scale power sums (y⁴ ≤ 10¹⁶·rows
-    // fits i64 — no HUGEINT reaches the output), identical
-    // central-moment expansion text
-    "events_stats_moments" ->
-      """WITH wal AS (
-        |  SELECT event_type,
-        |    epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day,
-        |    CAST(floor(value * 10 + 0.5) AS BIGINT) AS y
-        |  FROM events),
-        |acc AS (SELECT event_type, chunk_day, COUNT(*) AS n,
-        |    CAST(SUM(y) AS BIGINT) AS sum_y,
-        |    CAST(SUM(y * y) AS BIGINT) AS sum_y2,
-        |    CAST(SUM(y * y * y) AS BIGINT) AS sum_y3,
-        |    CAST(SUM(y * y * y * y) AS BIGINT) AS sum_y4
-        |  FROM wal GROUP BY 1, 2),
-        |mm AS (SELECT *, CAST(sum_y AS DOUBLE) / CAST(n AS DOUBLE) AS mu FROM acc),
-        |ctr AS (SELECT *,
-        |    CAST(sum_y2 AS DOUBLE) / CAST(n AS DOUBLE) - mu * mu AS m2,
-        |    CAST(sum_y3 AS DOUBLE) / CAST(n AS DOUBLE)
-        |      - 3.0 * mu * (CAST(sum_y2 AS DOUBLE) / CAST(n AS DOUBLE))
-        |      + 2.0 * mu * mu * mu AS m3,
-        |    CAST(sum_y4 AS DOUBLE) / CAST(n AS DOUBLE)
-        |      - 4.0 * mu * (CAST(sum_y3 AS DOUBLE) / CAST(n AS DOUBLE))
-        |      + 6.0 * mu * mu * (CAST(sum_y2 AS DOUBLE) / CAST(n AS DOUBLE))
-        |      - 3.0 * mu * mu * mu * mu AS m4
-        |  FROM mm)
-        |SELECT event_type, chunk_day, n, sum_y, sum_y2, sum_y3, sum_y4,
-        |  CASE WHEN n >= 2 AND m2 > 0.0
-        |    THEN CAST(FLOOR(m3 / (m2 * SQRT(m2)) * 1000000.0 + 0.5) AS BIGINT)
-        |  END AS skew_micro,
-        |  CASE WHEN n >= 2 AND m2 > 0.0
-        |    THEN CAST(FLOOR((m4 / (m2 * m2) - 3.0) * 1000000.0 + 0.5) AS BIGINT)
-        |  END AS kurtosis_micro
-        |FROM ctr ORDER BY event_type, chunk_day""".stripMargin,
-
-    // max_n twin: identical row_number windows and (value, lsn) ties
-    "events_max_n" ->
-      """WITH wal AS (SELECT event_id AS lsn, event_type, user_id,
-        |    CAST(floor(value * 1000 + 0.5) AS BIGINT) AS v_milli FROM events
-        |  WHERE value IS NOT NULL),
-        |mx AS (SELECT 'max_n' AS side, event_type,
-        |    CAST(row_number() OVER (PARTITION BY event_type
-        |      ORDER BY v_milli DESC, lsn) AS BIGINT) AS rnk,
-        |    v_milli, lsn, user_id FROM wal QUALIFY rnk <= 5),
-        |mn AS (SELECT 'min_n' AS side, event_type,
-        |    CAST(row_number() OVER (PARTITION BY event_type
-        |      ORDER BY v_milli ASC, lsn) AS BIGINT) AS rnk,
-        |    v_milli, lsn, user_id FROM wal QUALIFY rnk <= 5)
-        |SELECT * FROM mx UNION ALL SELECT * FROM mn
-        |ORDER BY side, event_type, rnk""".stripMargin,
-
-    // percentile-rank twin: same power-of-two buckets; probe bucket
-    // index/width are compile-time constants on both sides
-    "events_hdr_rank" ->
-      """WITH wal AS (
-        |  SELECT event_type,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) + 1 AS shifted
-        |  FROM events),
-        |b AS (
-        |  SELECT event_type,
-        |    CAST(length(printf('%b', shifted)) - 1 AS INTEGER) AS bucket,
-        |    COUNT(*) AS cnt
-        |  FROM wal GROUP BY 1, 2),
-        |p AS (SELECT * FROM (VALUES
-        |    (CAST(1000 AS BIGINT), CAST(1001 AS BIGINT), 9, CAST(512 AS BIGINT)),
-        |    (CAST(10000 AS BIGINT), CAST(10001 AS BIGINT), 13, CAST(8192 AS BIGINT)),
-        |    (CAST(30000 AS BIGINT), CAST(30001 AS BIGINT), 14, CAST(16384 AS BIGINT)),
-        |    (CAST(56000 AS BIGINT), CAST(56001 AS BIGINT), 15, CAST(32768 AS BIGINT)))
-        |  v(probe_cents, shifted, pb, pw))
-        |SELECT event_type, probe_cents, CAST(SUM(cnt) AS BIGINT) AS n,
-        |  (CAST(SUM(CASE WHEN bucket < pb THEN cnt
-        |                 WHEN bucket = pb THEN ((p.shifted - pw + 1) * cnt) // pw
-        |                 ELSE 0 END) AS BIGINT) * 1000000)
-        |    // CAST(SUM(cnt) AS BIGINT) AS rank_ppm
-        |FROM b CROSS JOIN p GROUP BY event_type, probe_cents
-        |ORDER BY event_type, probe_cents""".stripMargin,
-
-    // state_agg twin: lead() over the same (ts,lsn) order per user
-    "events_state_agg" ->
-      """WITH wal AS (
-        |  SELECT event_id AS lsn, event_type, user_id,
-        |    epoch_ns(ts) // 1000000 AS ts_ms FROM events),
-        |led AS (SELECT *,
-        |    lead(ts_ms, 1) OVER (PARTITION BY user_id ORDER BY ts_ms * 1000000 + lsn) AS next_ts,
-        |    lead(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts_ms * 1000000 + lsn) AS next_type
-        |  FROM wal)
-        |SELECT event_type,
-        |  CAST(SUM(CASE WHEN next_ts IS NOT NULL THEN next_ts - ts_ms ELSE 0 END) AS BIGINT) AS total_ms,
-        |  CAST(SUM(CASE WHEN next_ts IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_intervals,
-        |  CAST(SUM(CASE WHEN next_type IS NOT NULL AND next_type <> event_type THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_transitions_out,
-        |  CAST(SUM(CASE WHEN next_ts IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_open
-        |FROM led GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // state_timeline twin: identical change-flag running sum and
-    // period-level lead, the same [start, next-start) end convention
-    "events_state_timeline" ->
-      """WITH wal AS (
-        |  SELECT event_id AS lsn, event_type, user_id,
-        |    epoch_ns(ts) // 1000000 AS ts_ms FROM events),
-        |flg AS (SELECT *,
-        |    CASE WHEN lag(event_type, 1) OVER w IS NULL
-        |           OR lag(event_type, 1) OVER w <> event_type
-        |         THEN 1 ELSE 0 END AS chg
-        |  FROM wal
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_ms * 1000000 + lsn)),
-        |per AS (SELECT *,
-        |    CAST(SUM(chg) OVER (PARTITION BY user_id
-        |      ORDER BY ts_ms * 1000000 + lsn) AS BIGINT) AS period
-        |  FROM flg),
-        |agg AS (SELECT user_id, period, event_type AS state,
-        |    min(ts_ms) AS start_ms, max(ts_ms) AS last_ms,
-        |    COUNT(*) AS n_events
-        |  FROM per GROUP BY 1, 2, 3)
-        |SELECT user_id, period, state, start_ms,
-        |  coalesce(lead(start_ms, 1) OVER (PARTITION BY user_id ORDER BY period),
-        |           last_ms) AS end_ms,
-        |  coalesce(lead(start_ms, 1) OVER (PARTITION BY user_id ORDER BY period),
-        |           last_ms) - start_ms AS duration_ms,
-        |  n_events
-        |FROM agg ORDER BY user_id, period""".stripMargin,
-
-    // interpolated_duration_in twin: per-USER lead holds, the same
-    // day-clip arithmetic as the time_weighted_interp twin, aggregated
-    // per (state, day)
-    "events_duration_in_interp" ->
-      """WITH wal AS (
-        |  SELECT event_id AS lsn, event_type, user_id,
-        |    epoch_ns(ts) // 1000000 AS ts_ms FROM events),
-        |sp AS (
-        |  SELECT event_type, ts_ms,
-        |    lead(ts_ms) OVER (PARTITION BY user_id
-        |      ORDER BY ts_ms * 1000000 + lsn) AS next_ts
-        |  FROM wal),
-        |seg AS (
-        |  SELECT event_type, ts_ms, next_ts,
-        |    unnest(generate_series(ts_ms // 86400000,
-        |                           (next_ts - 1) // 86400000)) AS day
-        |  FROM sp WHERE next_ts IS NOT NULL AND next_ts > ts_ms)
-        |SELECT event_type AS state,
-        |  CAST(day - 19723 AS INTEGER) AS chunk_day,
-        |  CAST(sum(least(next_ts, (day + 1) * 86400000)
-        |        - greatest(ts_ms, day * 86400000)) AS BIGINT) AS duration_ms,
-        |  COUNT(*) AS n_segments
-        |FROM seg GROUP BY 1, 2 ORDER BY state, chunk_day""".stripMargin,
-
-    // lttb twin: same centroid anchors, same scaled integer area argmax
-    "events_lttb" ->
-      """WITH pts AS (
-        |  SELECT event_type, event_id AS lsn, epoch_ns(ts) // 1000000 AS ts_ms,
-        |    (epoch_ns(ts) // 1000000 - (SELECT min(epoch_ns(ts) // 1000000) FROM events)) // 60000 AS x,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS y
-        |  FROM events),
-        |bkt AS (SELECT *,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY ts_ms, lsn) AS rn,
-        |    ((row_number() OVER (PARTITION BY event_type ORDER BY ts_ms, lsn) - 1) * 40)
-        |      // (count(*) OVER (PARTITION BY event_type)) AS bucket
-        |  FROM pts),
-        |cen AS (SELECT event_type, bucket, CAST(SUM(x) AS BIGINT) AS cx,
-        |    CAST(SUM(y) AS BIGINT) AS cy, COUNT(*) AS cn
-        |  FROM bkt GROUP BY 1, 2),
-        |ends AS (SELECT event_type,
-        |    min_by(x, rn) AS fx, min_by(y, rn) AS fy,
-        |    max_by(x, rn) AS lx, max_by(y, rn) AS ly
-        |  FROM bkt GROUP BY event_type),
-        |anch AS (SELECT c.event_type, c.bucket,
-        |    coalesce(lag(cx) OVER wob, fx) AS px, coalesce(lag(cy) OVER wob, fy) AS py,
-        |    coalesce(lag(cn) OVER wob, 1) AS pn,
-        |    coalesce(lead(cx) OVER wob, lx) AS nx, coalesce(lead(cy) OVER wob, ly) AS ny,
-        |    coalesce(lead(cn) OVER wob, 1) AS nn
-        |  FROM cen c JOIN ends e ON c.event_type = e.event_type
-        |  WINDOW wob AS (PARTITION BY c.event_type ORDER BY c.bucket)),
-        |scored AS (SELECT b.event_type, b.bucket, b.ts_ms, b.lsn, b.y,
-        |    abs((px - b.x * pn) * (ny - b.y * nn) - (nx - b.x * nn) * (py - b.y * pn)) AS area2
-        |  FROM bkt b JOIN anch a ON b.event_type = a.event_type AND b.bucket = a.bucket)
-        |SELECT event_type, bucket, ts_ms, lsn, y AS v_centi FROM (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY event_type, bucket ORDER BY area2 DESC, ts_ms, lsn) AS rn
-        |  FROM scored) z
-        |WHERE rn = 1 ORDER BY event_type, bucket""".stripMargin,
-
-    // seasonality twin: same Thursday-anchored integer epoch math
-    "events_seasonality" ->
-      """SELECT event_type,
-        |  (epoch_ns(ts) // 1000000 // 86400000 + 4) % 7 AS dow,
-        |  (epoch_ns(ts) // 1000000 // 3600000) % 24 AS hour,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(floor(value * 1000000 + 0.5) AS BIGINT)) AS BIGINT)
-        |    AS sum_micros
-        |FROM events GROUP BY 1, 2, 3 ORDER BY event_type, dow, hour""".stripMargin,
-
-    // cusum twin: identical scaled-deviation argmax
-    "events_change_point" ->
-      """WITH wal AS (SELECT event_id AS lsn, event_type,
-        |    CAST(floor(value * 1000 + 0.5) AS BIGINT) AS vm FROM events),
-        |pref AS (SELECT *,
-        |    CAST(SUM(vm) OVER (PARTITION BY event_type ORDER BY lsn
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS c,
-        |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY lsn) AS BIGINT) AS i
-        |  FROM wal),
-        |tot AS (SELECT event_type, CAST(SUM(vm) AS BIGINT) AS s, COUNT(*) AS n
-        |        FROM wal GROUP BY 1),
-        |dev AS (SELECT p.event_type, p.lsn,
-        |    abs(t.n * p.c - p.i * t.s) AS dev, t.n, t.s
-        |  FROM pref p JOIN tot t USING (event_type)),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY event_type
-        |        ORDER BY dev DESC, lsn ASC) AS rn FROM dev)
-        |SELECT event_type, lsn AS change_lsn, CAST(dev AS BIGINT) AS max_dev,
-        |  n, s AS sum_milli
-        |FROM r WHERE rn = 1 ORDER BY event_type""".stripMargin,
-
-    // histogram twin: identical integer bucket CASE
-    "events_histogram" ->
-      """SELECT event_type,
-        |  CAST(CASE WHEN vm < 100000000 THEN -1
-        |       WHEN vm >= 900000000 THEN 10
-        |       ELSE (vm - 100000000) * 10 // 800000000 END AS INT) AS bucket,
-        |  COUNT(*) AS n
-        |FROM (SELECT event_type,
-        |        CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vm FROM events) z
-        |GROUP BY 1, 2 ORDER BY event_type, bucket""".stripMargin,
-
-    // instant-rate twin: QUALIFY row_number()=1 picks the same final
-    // pair; the division is the identical fixed-order double expression
-    "events_instant_rate" ->
-      """WITH wal AS (
-        |  SELECT event_id AS lsn, event_type,
-        |    CAST(floor(value * 1000 + 0.5) AS BIGINT) AS v_milli,
-        |    epoch_ns(ts) // 1000000 AS ts_ms
-        |  FROM events),
-        |lagged AS (SELECT *,
-        |    lag(v_milli, 1) OVER w AS prev_v, lag(ts_ms, 1) OVER w AS prev_ts
-        |  FROM wal WINDOW w AS (PARTITION BY event_type
-        |    ORDER BY ts_ms * 1000000 + lsn)),
-        |lastpair AS (SELECT * FROM lagged WHERE prev_ts IS NOT NULL
-        |  QUALIFY row_number() OVER (PARTITION BY event_type
-        |    ORDER BY ts_ms * 1000000 + lsn DESC) = 1),
-        |d AS (SELECT event_type,
-        |    v_milli - prev_v AS idelta_milli,
-        |    ts_ms - prev_ts AS dt_ms,
-        |    CASE WHEN v_milli >= prev_v THEN v_milli - prev_v
-        |         ELSE v_milli END AS counter_idelta_milli
-        |  FROM lastpair)
-        |SELECT event_type, idelta_milli, dt_ms, counter_idelta_milli,
-        |  CASE WHEN dt_ms > 0 THEN
-        |    CAST(FLOOR(CAST(idelta_milli AS DOUBLE) / CAST(dt_ms AS DOUBLE)
-        |               * 1000000.0 + 0.5) AS BIGINT)
-        |  ELSE NULL END AS irate_micro,
-        |  CASE WHEN dt_ms > 0 THEN
-        |    CAST(FLOOR(CAST(counter_idelta_milli AS DOUBLE) / CAST(dt_ms AS DOUBLE)
-        |               * 1000000.0 + 0.5) AS BIGINT)
-        |  ELSE NULL END AS counter_irate_micro
-        |FROM d ORDER BY event_type""".stripMargin,
-
-    // extrapolation twin: the integer accumulator CTEs mirror the Spark
-    // agg exactly; the double ladder is TEXTUALLY the same expressions
-    // in the same order, so both engines execute the identical IEEE
-    // sequence before the micro floor
-    "events_counter_increase" ->
-      """WITH wal AS (
-        |  SELECT event_id AS lsn, event_type,
-        |    CAST(epoch_ns(ts) // 86400000000000 - 19723 AS INT) AS chunk_day,
-        |    CAST(floor(value * 1000 + 0.5) AS BIGINT) AS v_milli,
-        |    epoch_ns(ts) // 1000000 AS ts_ms
-        |  FROM events),
-        |lagged AS (SELECT *, lag(v_milli, 1) OVER (
-        |    PARTITION BY event_type, chunk_day
-        |    ORDER BY ts_ms * 1000000 + lsn) AS prev FROM wal),
-        |agg AS (SELECT event_type, chunk_day,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CASE WHEN prev IS NOT NULL AND v_milli < prev THEN 1 ELSE 0 END)
-        |       AS BIGINT) AS n_resets,
-        |  CAST(SUM(CASE WHEN prev IS NULL THEN 0
-        |       WHEN v_milli >= prev THEN v_milli - prev
-        |       ELSE v_milli END) AS BIGINT) AS delta_milli,
-        |  MIN(ts_ms) AS first_ts, MAX(ts_ms) AS last_ts,
-        |  arg_min(v_milli, ts_ms * 1000000 + lsn) AS v_first
-        |  FROM lagged GROUP BY event_type, chunk_day),
-        |b AS (SELECT *,
-        |  (CAST(chunk_day AS BIGINT) + 19723) * 86400000 AS range_start,
-        |  (CAST(chunk_day AS BIGINT) + 19723) * 86400000 + 86400000 AS range_end
-        |  FROM agg),
-        |d1 AS (SELECT *,
-        |  CAST(last_ts - first_ts AS DOUBLE) AS sampled_d,
-        |  CASE WHEN n >= 2 THEN CAST(last_ts - first_ts AS DOUBLE) / CAST(n - 1 AS DOUBLE)
-        |       ELSE 0.0 END AS avg_d,
-        |  CAST(first_ts - range_start AS DOUBLE) AS to_start0_d,
-        |  CAST(range_end - last_ts AS DOUBLE) AS to_end_d
-        |  FROM b),
-        |d2 AS (SELECT *,
-        |  CASE WHEN delta_milli > 0 AND v_first >= 0
-        |    THEN sampled_d * (CAST(v_first AS DOUBLE) / CAST(delta_milli AS DOUBLE))
-        |    ELSE to_start0_d END AS to_zero_d
-        |  FROM d1),
-        |d3 AS (SELECT *, LEAST(to_start0_d, to_zero_d) AS to_start_d FROM d2),
-        |d4 AS (SELECT *,
-        |  sampled_d
-        |    + (CASE WHEN to_start_d < avg_d * 1.1 THEN to_start_d ELSE avg_d / 2.0 END)
-        |    + (CASE WHEN to_end_d < avg_d * 1.1 THEN to_end_d ELSE avg_d / 2.0 END)
-        |    AS extrap_d
-        |  FROM d3)
-        |SELECT event_type, chunk_day, n, n_resets, delta_milli,
-        |  CASE WHEN n >= 2 AND last_ts > first_ts
-        |    THEN CAST(FLOOR(CAST(delta_milli AS DOUBLE) * (extrap_d / sampled_d)
-        |                    * 1000.0 + 0.5) AS BIGINT)
-        |    ELSE NULL END AS increase_micro
-        |FROM d4 ORDER BY event_type, chunk_day""".stripMargin,
-
-    // counter-delta twin: lag() diffs, resets contribute whole
-    "events_counter_delta" ->
-      """WITH wal AS (
-        |  SELECT event_id AS lsn, user_id,
-        |    CAST(floor(value * 1000 + 0.5) AS BIGINT) AS v_milli,
-        |    epoch_ns(ts) // 1000000 AS ts_ms
-        |  FROM events),
-        |lagged AS (SELECT *, lag(v_milli, 1) OVER (
-        |    PARTITION BY user_id ORDER BY ts_ms * 1000000 + lsn) AS prev FROM wal)
-        |SELECT user_id,
-        |  CAST(SUM(CASE WHEN prev IS NULL THEN 0
-        |       WHEN v_milli >= prev THEN v_milli - prev
-        |       ELSE v_milli END) AS BIGINT) AS delta_milli,
-        |  CAST(SUM(CASE WHEN prev IS NOT NULL AND v_milli < prev THEN 1 ELSE 0 END)
-        |       AS BIGINT) AS n_resets,
-        |  COUNT(*) AS n
-        |FROM lagged GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // gauge_agg twin: identical window pairs; the edge pairs select via
-    // FILTERed arg_min/arg_max where Spark uses the sentinel ordering,
-    // and the rates evaluate the byte-identical fixed-order double text
-    // time-weight twin: identical segment integrals, HUGEINT sums, one
-    // integral division to millicents (null on zero-duration buckets)
-    "events_time_weight" ->
-      """WITH wal AS (
-        |  SELECT event_id AS lsn, event_type, value,
-        |    epoch_ns(ts) // 1000000 AS ts_ms,
-        |    epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day
-        |  FROM events WHERE value IS NOT NULL),
-        |p AS (SELECT event_type, chunk_day, ts_ms,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS v_cents,
-        |    lead(CAST(floor(value * 100 + 0.5) AS BIGINT)) OVER w AS next_v,
-        |    lead(ts_ms) OVER w AS next_ts
-        |  FROM wal
-        |  WINDOW w AS (PARTITION BY event_type, chunk_day
-        |               ORDER BY ts_ms * 1000000 + lsn)),
-        |a AS (SELECT event_type, chunk_day, CAST(COUNT(*) AS BIGINT) AS n_points,
-        |    MAX(ts_ms) - MIN(ts_ms) AS den_ms,
-        |    SUM(CASE WHEN next_ts IS NOT NULL
-        |        THEN v_cents * (next_ts - ts_ms) ELSE 0 END) AS num_locf,
-        |    SUM(CASE WHEN next_ts IS NOT NULL
-        |        THEN (v_cents + next_v) * (next_ts - ts_ms) ELSE 0 END) AS num_lin2x
-        |  FROM p GROUP BY 1, 2)
-        |SELECT event_type, chunk_day, n_points, den_ms,
-        |  CASE WHEN den_ms > 0 THEN CAST((num_locf * 1000) // den_ms AS BIGINT) END
-        |    AS twa_locf_millicents,
-        |  CASE WHEN den_ms > 0 THEN CAST((num_lin2x * 500) // den_ms AS BIGINT) END
-        |    AS twa_linear_millicents
-        |FROM a ORDER BY event_type, chunk_day""".stripMargin,
-
-    "events_gauge_agg" ->
-      """WITH wal AS (
-        |  SELECT event_id AS lsn, event_type, value,
-        |    epoch_ns(ts) // 1000000 AS ts_ms,
-        |    epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day
-        |  FROM events),
-        |p AS (SELECT event_type, chunk_day, ts_ms,
-        |    ts_ms * 1000000 + lsn AS ord,
-        |    CAST(floor(value * 1000 + 0.5) AS BIGINT) AS v_milli,
-        |    lag(CAST(floor(value * 1000 + 0.5) AS BIGINT)) OVER w AS prev_v,
-        |    lag(ts_ms) OVER w AS prev_ts
-        |  FROM wal
-        |  WINDOW w AS (PARTITION BY event_type, chunk_day
-        |               ORDER BY ts_ms * 1000000 + lsn)),
-        |a AS (SELECT event_type, chunk_day, COUNT(*) AS n,
-        |    arg_min(v_milli, ord) AS v_first,
-        |    arg_max(v_milli, ord) AS v_last,
-        |    arg_min(v_milli - prev_v, ord) FILTER (prev_v IS NOT NULL) AS il,
-        |    arg_min(ts_ms - prev_ts, ord) FILTER (prev_v IS NOT NULL) AS ilgap,
-        |    arg_max(v_milli - prev_v, ord) FILTER (prev_v IS NOT NULL) AS ir,
-        |    arg_max(ts_ms - prev_ts, ord) FILTER (prev_v IS NOT NULL) AS irgap
-        |  FROM p GROUP BY 1, 2)
-        |SELECT event_type, chunk_day, n,
-        |  v_last - v_first AS delta_milli,
-        |  CASE WHEN n >= 2 THEN il END AS idelta_left_milli,
-        |  CASE WHEN n >= 2 THEN ir END AS idelta_right_milli,
-        |  CASE WHEN n >= 2 AND ilgap > 0 THEN
-        |    CAST(FLOOR(CAST(il AS DOUBLE) / CAST(ilgap AS DOUBLE)
-        |               * 1000000.0 + 0.5) AS BIGINT) END AS irate_left_micro,
-        |  CASE WHEN n >= 2 AND irgap > 0 THEN
-        |    CAST(FLOOR(CAST(ir AS DOUBLE) / CAST(irgap AS DOUBLE)
-        |               * 1000000.0 + 0.5) AS BIGINT) END AS irate_right_micro
-        |FROM a ORDER BY event_type, chunk_day""".stripMargin,
-
-    // freq_agg twin: the gate keys (type × user_id%8 = 40 distinct) fit
-    // the capacity-64 summary, so Misra–Gries is EXACT — estimates are
-    // plain group counts and the carried error bound is zero; a sketch
-    // that ever decremented would hash red on max_err
-    "events_freq_topn" ->
-      """WITH k AS (
-        |  SELECT event_type || '#' || CAST(user_id % 8 AS VARCHAR) AS key
-        |  FROM events),
-        |t AS (SELECT COUNT(*) AS n_rows FROM k)
-        |SELECT k.key, COUNT(*) AS est, CAST(0 AS BIGINT) AS max_err, t.n_rows
-        |FROM k, t GROUP BY k.key, t.n_rows
-        |ORDER BY est DESC, key""".stripMargin,
-
-    // asap twin: identical densified hourly series, one UNION branch per
-    // candidate window (SQL frames are literal), telescoped roughness in
-    // HUGEINT (Spark: decimal) — internal only, the hash covers the
-    // winning window's smoothed series
-    "events_asap_smooth" -> {
-      val branches = Seq(2, 3, 4, 6, 8, 12, 24).map { w =>
-        s"""  SELECT event_type, minh, $w AS w, hour,
-           |    CAST(sum(x) OVER (PARTITION BY event_type ORDER BY hour
-           |      ROWS BETWEEN ${w - 1} PRECEDING AND CURRENT ROW) AS BIGINT) AS s
-           |  FROM dense""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH wal AS (
-         |  SELECT event_type, epoch_ns(ts) // 3600000000000 AS hour,
-         |    CAST(floor(value * 1000 + 0.5) AS BIGINT) AS vm
-         |  FROM events),
-         |b AS (SELECT event_type, hour, CAST(sum(vm) AS BIGINT) AS x
-         |      FROM wal GROUP BY 1, 2),
-         |bounds AS (SELECT event_type, min(hour) AS minh, max(hour) AS maxh
-         |           FROM b GROUP BY 1),
-         |dense0 AS (SELECT event_type, minh,
-         |             unnest(generate_series(minh, maxh)) AS hour FROM bounds),
-         |dense AS (SELECT d.event_type, d.minh, d.hour, coalesce(b.x, 0) AS x
-         |          FROM dense0 d LEFT JOIN b
-         |            ON b.event_type = d.event_type AND b.hour = d.hour),
-         |sm AS (
-         |$branches
-         |),
-         |v AS (SELECT * FROM sm WHERE hour >= minh + w - 1),
-         |d AS (SELECT event_type, minh, w, hour, s,
-         |        s - lag(s) OVER (PARTITION BY event_type, w
-         |          ORDER BY hour) AS dd FROM v),
-         |r AS (SELECT event_type, w, sum(CAST(dd AS HUGEINT) * dd) AS rough
-         |      FROM d WHERE hour >= minh + w GROUP BY 1, 2),
-         |win AS (SELECT event_type, w FROM r
-         |        QUALIFY row_number() OVER (PARTITION BY event_type
-         |          ORDER BY rough, w) = 1)
-         |SELECT v.event_type, v.w AS window_w, v.hour, v.s AS smoothed_milli
-         |FROM v JOIN win ON win.event_type = v.event_type AND win.w = v.w
-         |ORDER BY 1, 3""".stripMargin
-    },
-
-    // M4 twin: same rank buckets as the Spark side; four row_number
-    // champions per bucket (this DuckDB's arg_min can't order by a
-    // composite), value ties to the earliest point
-    "events_m4" ->
-      """WITH wal AS (
-        |  SELECT event_id AS lsn, event_type,
-        |    epoch_ns(ts) // 1000000 AS ts_ms,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-        |  FROM events),
-        |rk AS (SELECT *,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY ts_ms, lsn) AS rn,
-        |    COUNT(*) OVER (PARTITION BY event_type) AS n
-        |  FROM wal),
-        |bk AS (SELECT *, (rn - 1) * 40 // n AS bucket FROM rk),
-        |c AS (SELECT *,
-        |    row_number() OVER (PARTITION BY event_type, bucket
-        |      ORDER BY ts_ms, lsn) AS rf,
-        |    row_number() OVER (PARTITION BY event_type, bucket
-        |      ORDER BY ts_ms DESC, lsn DESC) AS rl,
-        |    row_number() OVER (PARTITION BY event_type, bucket
-        |      ORDER BY v, ts_ms, lsn) AS rmin,
-        |    row_number() OVER (PARTITION BY event_type, bucket
-        |      ORDER BY v DESC, ts_ms, lsn) AS rmax
-        |  FROM bk)
-        |SELECT event_type, bucket, COUNT(*) AS n_pts,
-        |  max(CASE WHEN rf = 1 THEN ts_ms END) AS first_ts,
-        |  max(CASE WHEN rf = 1 THEN v END) AS first_v,
-        |  max(CASE WHEN rl = 1 THEN ts_ms END) AS last_ts,
-        |  max(CASE WHEN rl = 1 THEN v END) AS last_v,
-        |  max(CASE WHEN rmin = 1 THEN ts_ms END) AS min_ts,
-        |  max(CASE WHEN rmin = 1 THEN v END) AS min_v,
-        |  max(CASE WHEN rmax = 1 THEN ts_ms END) AS max_ts,
-        |  max(CASE WHEN rmax = 1 THEN v END) AS max_v
-        |FROM c GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // CMS twin: exact per-key counts + the contract booleans stated true
-    // — an estimate below truth (impossible for a correct CMS) or past
-    // ε·N (deterministic with the fixed seed) hashes red
-    "events_cms_heavy" ->
-      """WITH wal AS (SELECT user_id FROM events),
-        |t AS (SELECT COUNT(*) AS n_rows FROM wal)
-        |SELECT w.user_id, COUNT(*) AS true_cnt, t.n_rows,
-        |  true AS never_undercounts, true AS within_eps_n
-        |FROM wal w, t GROUP BY w.user_id, t.n_rows
-        |ORDER BY w.user_id""".stripMargin,
-
-    // HLL-rollup twin: the oracle states the exact distincts and asserts
-    // the sketch estimates (rollup-of-day-sketches AND direct) land
-    // inside the 5% bound — a drifting or wrongly-merged sketch flips
-    // the booleans and hashes red
-    "events_hll_rollup" ->
-      """WITH wal AS (
-        |  SELECT event_type, user_id,
-        |    epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day
-        |  FROM events),
-        |d AS (SELECT event_type, chunk_day,
-        |        COUNT(DISTINCT user_id) AS day_users
-        |      FROM wal GROUP BY 1, 2)
-        |SELECT w.event_type,
-        |  (SELECT COUNT(*) FROM d WHERE d.event_type = w.event_type) AS n_days,
-        |  COUNT(DISTINCT w.user_id) AS exact_users,
-        |  (SELECT CAST(SUM(day_users) AS BIGINT) FROM d
-        |    WHERE d.event_type = w.event_type) AS sum_day_users,
-        |  true AS rollup_within_5pct,
-        |  true AS direct_within_5pct
-        |FROM wal w GROUP BY w.event_type ORDER BY w.event_type""".stripMargin,
-
-    "q_asof_join" ->
-      """SELECT e.event_id, e.user_id, MAX(epoch_ms(o.o_orderdate)) AS last_order_ms
-        |FROM (SELECT event_id, user_id, epoch_ns(ts) // 1000000 AS ts_ms FROM events) e
-        |LEFT JOIN orders o
-        |  ON o.o_custkey = e.user_id AND epoch_ms(o.o_orderdate) <= e.ts_ms
-        |GROUP BY e.event_id, e.user_id
-        |ORDER BY e.event_id""".stripMargin,
-
-    "q6_forecast_revenue" ->
-      """SELECT CAST(SUM(CAST(FLOOR((l_extendedprice * l_discount) * 100.0 + 0.5)
-        |         AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |  COUNT(*) AS n
-        |FROM lineitem
-        |WHERE l_shipdate >= DATE '1994-01-01' AND l_shipdate < DATE '1995-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, COUNT(*) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1996-04-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey
-        |                AND l_shipdate > o_orderdate + INTERVAL 30 DAY)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q7_volume_shipping" ->
-      s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-         |  CAST(year(l_shipdate) AS INT) AS l_year,
-         |  CAST(SUM(${centsSql("l_extendedprice * (1.0 - l_discount)")}) AS BIGINT) AS revenue_cents
-         |FROM lineitem
-         |JOIN orders ON l_orderkey = o_orderkey
-         |JOIN supplier ON l_suppkey = s_suppkey
-         |JOIN customer ON o_custkey = c_custkey
-         |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-         |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-         |WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-         |   OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
-         |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    "q10_returned_items" ->
-      s"""SELECT c_custkey, c_name, revenue_cents, n_name
-         |FROM (SELECT o_custkey,
-         |        CAST(SUM(${centsSql("l_extendedprice * (1.0 - l_discount)")}) AS BIGINT) AS revenue_cents
-         |      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |      WHERE l_returnflag = 'R'
-         |        AND o_orderdate >= DATE '1995-10-01' AND o_orderdate < DATE '1996-01-01'
-         |      GROUP BY o_custkey) r
-         |JOIN customer ON o_custkey = c_custkey
-         |JOIN nation ON c_nationkey = n_nationkey
-         |ORDER BY revenue_cents DESC, c_custkey LIMIT 20""".stripMargin,
-
-    "q12_shipping_delay" ->
-      """SELECT CASE WHEN datediff('day', o_orderdate, l_shipdate) > 90 THEN 'late'
-        |            WHEN datediff('day', o_orderdate, l_shipdate) > 30 THEN 'slow'
-        |            ELSE 'fast' END AS delay_band,
-        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS high_line_count,
-        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT)
-        |    AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q14_promo_effect" ->
-      s"""SELECT
-         |  CAST(SUM(CASE WHEN p_type = 'PROMO'
-         |    THEN ${centsSql("l_extendedprice * (1.0 - l_discount)")} ELSE 0 END) AS BIGINT)
-         |    AS promo_cents,
-         |  CAST(SUM(${centsSql("l_extendedprice * (1.0 - l_discount)")}) AS BIGINT) AS total_cents
-         |FROM lineitem JOIN part ON l_partkey = p_partkey
-         |WHERE l_shipdate >= DATE '1995-09-01' AND l_shipdate < DATE '1995-10-01'""".stripMargin,
-
-    "q16_supplier_cnt" ->
-      """SELECT p_brand, p_size, CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_brand <> 'Brand#9' AND p_type <> 'PROMO'
-        |  AND p_size IN (1, 5, 9, 13, 17, 21, 25, 29)
-        |GROUP BY p_brand, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_size""".stripMargin,
-
-    "q18_large_volume" ->
-      s"""SELECT c_custkey, c_name, o_orderkey, epoch_ms(o_orderdate) AS order_ms,
-         |  ${centsSql("o_totalprice")} AS total_cents, sum_qty_cents
-         |FROM (SELECT l_orderkey,
-         |        CAST(SUM(${centsSql("l_quantity")}) AS BIGINT) AS sum_qty_cents
-         |      FROM lineitem GROUP BY l_orderkey HAVING sum_qty_cents > 30000) big
-         |JOIN orders ON l_orderkey = o_orderkey
-         |JOIN customer ON o_custkey = c_custkey
-         |ORDER BY total_cents DESC, o_orderkey LIMIT 100""".stripMargin,
-
-    "q19_disjunctive" ->
-      s"""SELECT CAST(SUM(${centsSql("l_extendedprice * (1.0 - l_discount)")}) AS BIGINT)
-         |    AS revenue_cents,
-         |  COUNT(*) AS n
-         |FROM lineitem JOIN part ON l_partkey = p_partkey
-         |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 21)
-         |   OR (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 30)
-         |   OR (p_brand = 'Brand#20' AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 40)""".stripMargin,
-
-    "q21_waiting_supplier" ->
-      """WITH late AS (
-        |  SELECT l_orderkey, l_suppkey FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE l_shipdate > o_orderdate + INTERVAL 60 DAY)
-        |SELECT s_name, COUNT(*) AS numwait
-        |FROM late l1 JOIN supplier ON l1.l_suppkey = s_suppkey
-        |WHERE EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM late l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey)
-        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 50""".stripMargin,
-
-    "q22_dormant_customers" ->
-      s"""WITH st AS (SELECT CAST(SUM(${centsSql("c_acctbal")}) AS BIGINT) AS pos_sum,
-         |              COUNT(*) AS pos_n
-         |            FROM customer WHERE c_acctbal > 0)
-         |SELECT c_nationkey, COUNT(*) AS numcust,
-         |  CAST(SUM(${centsSql("c_acctbal")}) AS BIGINT) AS totacctbal_cents
-         |FROM customer, st
-         |WHERE ${centsSql("c_acctbal")} * pos_n > pos_sum
-         |  AND NOT EXISTS (SELECT 1 FROM orders
-         |                  WHERE o_custkey = c_custkey AND o_orderdate >= DATE '2000-01-01')
-         |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-
-    "q8_market_share" ->
-      s"""SELECT year(o_orderdate) AS o_year,
-         |  CAST(SUM(CASE WHEN n2.n_name = 'NATION_1'
-         |    THEN ${centsSql("l_extendedprice * (1.0 - l_discount)")} ELSE 0 END) AS BIGINT)
-         |    AS nation_cents,
-         |  CAST(SUM(${centsSql("l_extendedprice * (1.0 - l_discount)")}) AS BIGINT)
-         |    AS total_cents
-         |FROM lineitem
-         |JOIN orders ON l_orderkey = o_orderkey
-         |JOIN customer ON o_custkey = c_custkey
-         |JOIN nation n1 ON c_nationkey = n1.n_nationkey
-         |JOIN region ON n1.n_regionkey = r_regionkey AND r_name = 'ASIA'
-         |JOIN supplier ON l_suppkey = s_suppkey
-         |JOIN nation n2 ON s_nationkey = n2.n_nationkey
-         |WHERE o_orderdate >= DATE '1995-01-01' AND o_orderdate < DATE '1997-01-01'
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q9_product_profit" ->
-      s"""SELECT n_name AS nation, year(o_orderdate) AS o_year,
-         |  CAST(SUM(${centsSql("l_extendedprice * (1.0 - l_discount)")}) AS BIGINT)
-         |    AS profit_cents
-         |FROM lineitem
-         |JOIN part ON l_partkey = p_partkey AND p_name LIKE '%red%'
-         |JOIN orders ON l_orderkey = o_orderkey
-         |JOIN supplier ON l_suppkey = s_suppkey
-         |JOIN nation ON s_nationkey = n_nationkey
-         |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
-
-    "q11_important_stock" ->
-      s"""WITH vals AS (
-         |  SELECT l_partkey,
-         |    CAST(SUM(${centsSql("l_extendedprice * l_quantity")}) AS BIGINT) AS value_cents
-         |  FROM lineitem
-         |  JOIN supplier ON l_suppkey = s_suppkey
-         |  JOIN nation ON s_nationkey = n_nationkey AND n_name = 'NATION_2'
-         |  GROUP BY 1)
-         |SELECT l_partkey, value_cents FROM vals
-         |WHERE value_cents * 1000 > (SELECT CAST(SUM(value_cents) AS BIGINT) FROM vals)
-         |ORDER BY value_cents DESC, l_partkey""".stripMargin,
-
-    "q13_order_distribution" ->
-      """SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist
-        |FROM (SELECT c_custkey, CAST(COUNT(o_custkey) AS BIGINT) AS c_count
-        |      FROM customer LEFT OUTER JOIN
-        |        (SELECT o_custkey FROM orders WHERE o_orderpriority <> '1-URGENT') o
-        |        ON c_custkey = o_custkey
-        |      GROUP BY c_custkey) c
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "q15_top_supplier" ->
-      s"""WITH rev AS (
-         |  SELECT l_suppkey,
-         |    CAST(SUM(${centsSql("l_extendedprice * (1.0 - l_discount)")}) AS BIGINT)
-         |      AS total_revenue_cents
-         |  FROM lineitem
-         |  WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1996-04-01'
-         |  GROUP BY l_suppkey)
-         |SELECT s_suppkey, s_name, total_revenue_cents
-         |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-         |WHERE total_revenue_cents = (SELECT MAX(total_revenue_cents) FROM rev)
-         |ORDER BY s_suppkey""".stripMargin,
-
-    "q17_small_quantity" ->
-      s"""WITH li AS (SELECT l_partkey, l_quantity, l_extendedprice
-         |  FROM lineitem JOIN part ON l_partkey = p_partkey AND p_brand = 'Brand#3'),
-         |pp AS (SELECT l_partkey AS agg_partkey,
-         |    CAST(SUM(${centsSql("l_quantity")}) AS BIGINT) AS sum_qty_cents,
-         |    COUNT(*) AS n_lines
-         |  FROM li GROUP BY 1)
-         |SELECT CAST(SUM(${centsSql("l_extendedprice")}) AS BIGINT) AS yearly_cents
-         |FROM li JOIN pp ON l_partkey = agg_partkey
-         |WHERE ${centsSql("l_quantity")} * 5 * n_lines < sum_qty_cents""".stripMargin,
-
-    "q20_dominant_supplier" ->
-      s"""WITH li AS (SELECT l_partkey, l_suppkey,
-         |    CAST(${centsSql("l_quantity")} AS BIGINT) AS qc
-         |  FROM lineitem
-         |  WHERE l_shipdate >= DATE '1995-01-01' AND l_shipdate < DATE '1996-01-01'),
-         |pp AS (SELECT l_partkey, CAST(SUM(qc) AS BIGINT) AS part_qty_cents
-         |       FROM li GROUP BY 1),
-         |ps AS (SELECT l_partkey, l_suppkey, CAST(SUM(qc) AS BIGINT) AS supp_qty_cents
-         |       FROM li GROUP BY 1, 2)
-         |SELECT DISTINCT s_suppkey, s_name, n_name
-         |FROM ps JOIN pp USING (l_partkey)
-         |JOIN supplier ON l_suppkey = s_suppkey
-         |JOIN nation ON s_nationkey = n_nationkey
-         |WHERE supp_qty_cents * 2 > part_qty_cents
-         |ORDER BY s_suppkey""".stripMargin,
-
-    "layout_zorder_key" ->
-      s"""SELECT event_id, ${Layout.mortonKeySql("user_id", "event_id", 16)} AS zkey
-         |FROM events ORDER BY event_id""".stripMargin,
-
-    "layout_zorder_extents" ->
-      s"""WITH e AS (SELECT
-         |    user_id % 256 AS zx,
-         |    (CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) >> 8) % 256 AS zy,
-         |    ${Layout.mortonKeySql("user_id", "(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) >> 8)", 8)} AS zkey
-         |  FROM events)
-         |SELECT zkey >> 10 AS bucket, COUNT(*) AS n_rows,
-         |  MIN(zx) AS min_x, MAX(zx) AS max_x,
-         |  MIN(zy) AS min_y, MAX(zy) AS max_y
-         |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "layout_zonemap_prune" ->
-      """SELECT event_id, user_id, CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS value_cents
-        |FROM events
-        |WHERE CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) BETWEEN 2000 AND 3000
-        |ORDER BY event_id""".stripMargin,
-
-    // k-center twin: 8 unrolled farthest-point rounds; dist arithmetic
-    // mirrors the Spark expression ((a·a + c·c) - 2·a·c, same fold order)
-    "sample_kcenter" -> {
-      val k = 8
-      val sb = new StringBuilder
-      sb.append("WITH e AS (SELECT vec_id, embedding FROM embeddings),\n")
-      sb.append("s0 AS (SELECT vec_id, embedding FROM e ORDER BY vec_id LIMIT 1),\n")
-      def distSql(v: String, c: String) =
-        s"((${duckDot(s"$v.embedding", s"$v.embedding")} + ${duckDot(s"$c.embedding", s"$c.embedding")}) - " +
-          s"2 * ${duckDot(s"$v.embedding", s"$c.embedding")})"
-      sb.append(s"d0 AS (SELECT e.vec_id, e.embedding, ${distSql("e", "s0")} AS d FROM e, s0),\n")
-      (1 until k).foreach { r =>
-        sb.append(s"s$r AS (SELECT vec_id, embedding, d FROM d${r - 1} ORDER BY d DESC, vec_id LIMIT 1),\n")
-        if (r < k - 1)
-          sb.append(s"d$r AS (SELECT d${r - 1}.vec_id, d${r - 1}.embedding, " +
-            s"least(d${r - 1}.d, ${distSql(s"d${r - 1}", s"s$r")}) AS d FROM d${r - 1}, s$r),\n")
-      }
-      val selects = (s"SELECT 0 AS rank, vec_id, CAST(0.0 AS DOUBLE) AS dist FROM s0" +:
-        (1 until k).map(r => s"SELECT $r, vec_id, d FROM s$r"))
-      sb.setLength(sb.length - 2) // drop trailing comma-newline
-      sb.append("\n" + selects.mkString("\nUNION ALL ") + "\nORDER BY rank")
-      sb.toString
-    },
-
-    "sample_priority" ->
-      s"""WITH keyed AS (SELECT doc_id, n_chars,
-         |    CAST(${fnvSql("'doc_' || CAST(doc_id AS VARCHAR)")} % 1000000 AS BIGINT) + 1 AS u
-         |  FROM documents)
-         |SELECT doc_id, n_chars, (CAST(n_chars AS BIGINT) * 1000000) // u AS priority
-         |FROM keyed ORDER BY priority DESC, doc_id LIMIT 100""".stripMargin,
-
-    "profile_heavy_hitters" ->
-      """SELECT tok, COUNT(*) AS cnt
-        |FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents) t
-        |GROUP BY tok HAVING cnt >= 700
-        |ORDER BY cnt DESC, tok""".stripMargin,
-
-    "text_boilerplate_remove" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |chl AS (SELECT doc_id, list_transform(range(0, (len(t)-1)//3 + 1),
-        |          i -> array_to_string(t[(i*3+1):(i*3+3)], ' ')) AS chunks FROM tok),
-        |ch AS (SELECT doc_id, unnest(chunks) AS chunk,
-        |         unnest(range(0, len(chunks))) AS chunk_idx FROM chl),
-        |dfc AS (SELECT chunk, count(*) AS chunk_df FROM ch GROUP BY chunk),
-        |j AS (SELECT doc_id, chunk_idx, chunk, chunk_df FROM ch JOIN dfc USING (chunk))
-        |SELECT doc_id,
-        |  coalesce(string_agg(CASE WHEN chunk_df < 3 THEN chunk END, ' ' ORDER BY chunk_idx), '')
-        |    AS clean_text,
-        |  COUNT(*) AS n_chunks,
-        |  CAST(SUM(CASE WHEN chunk_df >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_removed
-        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "text_blocklist_hits" ->
-      """WITH h AS (SELECT doc_id, text,
-        |    (length(text) - length(replace(text, 'slow', ''))) // 4 AS c1,
-        |    (length(text) - length(replace(text, 'big table', ''))) // 9 AS c2,
-        |    (length(text) - length(replace(text, 'vector', ''))) // 6 AS c3
-        |  FROM documents)
-        |SELECT doc_id, c1 + c2 + c3 AS n_hits,
-        |  (CASE WHEN c1 > 0 THEN 1 ELSE 0 END + CASE WHEN c2 > 0 THEN 1 ELSE 0 END
-        |    + CASE WHEN c3 > 0 THEN 1 ELSE 0 END) AS n_terms_hit,
-        |  ((c1 + c2 + c3) * 1000000) // greatest(length(text), 1) AS hit_ppm_per_char
-        |FROM h ORDER BY doc_id""".stripMargin,
-
-    // funnel twin: each stage recomputed over the previous stage's set
-    "pipeline_funnel_report" ->
-      s"""WITH q AS (SELECT * FROM documents WHERE length(text) >= 100),
-         |en AS (SELECT * FROM q WHERE lang = 'en'),
-         |ex AS (SELECT * FROM (SELECT *, row_number() OVER (
-         |         PARTITION BY text ORDER BY doc_id) AS rn FROM en) z WHERE rn = 1),
-         |tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM ex),
-         |sh0 AS (SELECT DISTINCT doc_id,
-         |         unnest(list_transform(list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-         |           x -> x[1] || ' ' || x[2] || ' ' || x[3])) AS shingle
-         |       FROM tok WHERE len(t) >= 3),
-         |sh AS (SELECT doc_id, shingle FROM (
-         |    SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS dfc FROM sh0) zc
-         |  WHERE dfc <= ${Dedup.DefaultDfCap}),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-         |          FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |          GROUP BY a.doc_id, b.doc_id),
-         |dups AS (SELECT DISTINCT doc_b FROM pairs
-         |         JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-         |         WHERE shared * 10 >= 4 * (sa.n + sb.n - shared)),
-         |pr AS (SELECT * FROM ex WHERE doc_id NOT IN (SELECT doc_b FROM dups))
-         |SELECT 1 AS stage_no, 'raw' AS stage, COUNT(*) AS n_docs FROM documents
-         |UNION ALL SELECT 2, 'min_length', COUNT(*) FROM q
-         |UNION ALL SELECT 3, 'english', COUNT(*) FROM en
-         |UNION ALL SELECT 4, 'exact_dedup', COUNT(*) FROM ex
-         |UNION ALL SELECT 5, 'neardup_prune', COUNT(*) FROM pr
-         |ORDER BY stage_no""".stripMargin,
-
-    "dedup_prune" ->
-      s"""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh0 AS (SELECT DISTINCT doc_id,
-        |         unnest(list_transform(list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-        |           x -> x[1] || ' ' || x[2] || ' ' || x[3])) AS shingle
-        |       FROM tok WHERE len(t) >= 3),
-        |sh AS (SELECT doc_id, shingle FROM (
-        |    SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS dfc FROM sh0) zc
-        |  WHERE dfc <= ${Dedup.DefaultDfCap}),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-        |          FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |          GROUP BY a.doc_id, b.doc_id),
-        |dups AS (SELECT DISTINCT doc_b FROM pairs
-        |         JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-        |         WHERE shared * 10 >= 4 * (sa.n + sb.n - shared))
-        |SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_b FROM dups)
-        |ORDER BY doc_id""".stripMargin,
-
-    "conv_timestamp_millis" ->
-      """SELECT l_orderkey, l_linenumber, epoch_ms(l_shipdate) AS ship_ms
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "conv_timestamptz_text" ->
-      s"""SELECT event_id, ${duckTsText("epoch_ns(ts)")} AS ts_text
-         |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_time_text" ->
-      """SELECT event_id, strftime(make_timestamp(epoch_ns(ts) // 1000), '%H:%M:%S.%f') AS time_text
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_date_days" ->
-      """SELECT o_orderkey, datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS order_days
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "conv_interval_micros" ->
-      """SELECT event_id,
-        |  user_id * 2629800000000 + (event_id % 30) * 86400000000
-        |    + (epoch_ns(ts) % 1000000000) // 1000 AS interval_us
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_numeric_double" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(CAST(l_extendedprice AS DECIMAL(18,2)) AS DOUBLE) AS num_val
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "conv_bytea_hex" ->
-      """SELECT doc_id, lower(hex(encode(substr(text, 1, 16)))) AS hex16
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "conv_json_extract" ->
-      """SELECT event_id, json_extract_string(props, '$.k') AS k_val
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_bits_string" ->
-      """SELECT event_id, lpad(bin(user_id % 256), 8, '0') AS bits
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_range_string" ->
-      """SELECT event_id,
-        |  concat('[', CAST(event_id AS VARCHAR), ',', CAST(event_id + 10 AS VARCHAR), ')') AS range_text
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_point_string" ->
-      """SELECT event_id,
-        |  concat('(', CAST(user_id AS VARCHAR), ',', CAST((epoch_ns(ts) % 1000000000) // 1000000 AS VARCHAR), ')') AS point_text
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_numrange_path" ->
-      """SELECT event_id,
-        |  concat('[',
-        |    CAST((user_id * 100 + 50) // 100 AS VARCHAR), '.', lpad(CAST((user_id * 100 + 50) % 100 AS VARCHAR), 2, '0'), ',',
-        |    CAST((user_id * 100 + 175) // 100 AS VARCHAR), '.', lpad(CAST((user_id * 100 + 175) % 100 AS VARCHAR), 2, '0'), ')') AS numrange_text,
-        |  concat('[(', CAST(user_id AS VARCHAR), ',', CAST(event_id % 100 AS VARCHAR), '),(',
-        |         CAST(user_id + 2 AS VARCHAR), ',', CAST(event_id % 100 + 3 AS VARCHAR), ')]') AS path_text
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_uuid_string" ->
-      """SELECT event_id, concat_ws('-',
-        |  substr(md5(CAST(event_id AS VARCHAR)), 1, 8),
-        |  substr(md5(CAST(event_id AS VARCHAR)), 9, 4),
-        |  substr(md5(CAST(event_id AS VARCHAR)), 13, 4),
-        |  substr(md5(CAST(event_id AS VARCHAR)), 17, 4),
-        |  substr(md5(CAST(event_id AS VARCHAR)), 21, 12)) AS uuid_text
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_inet_string" ->
-      """SELECT event_id,
-        |  concat('10.', CAST(user_id % 256 AS VARCHAR), '.', CAST(event_id % 256 AS VARCHAR), '.1/24') AS cidr4,
-        |  concat('fe80::', lower(hex(user_id % 65536))) AS inet6
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_macaddr_string" ->
-      """SELECT event_id,
-        |  printf('%02x:%02x:%02x:%02x:%02x:%02x',
-        |    ((event_id * 65536 + user_id) >> 40) & 255, ((event_id * 65536 + user_id) >> 32) & 255,
-        |    ((event_id * 65536 + user_id) >> 24) & 255, ((event_id * 65536 + user_id) >> 16) & 255,
-        |    ((event_id * 65536 + user_id) >> 8) & 255, (event_id * 65536 + user_id) & 255) AS mac,
-        |  printf('%02x:%02x:%02x:%02x:%02x:%02x:%02x:%02x',
-        |    ((event_id * 4294967296 + user_id) >> 56) & 255, ((event_id * 4294967296 + user_id) >> 48) & 255,
-        |    ((event_id * 4294967296 + user_id) >> 40) & 255, ((event_id * 4294967296 + user_id) >> 32) & 255,
-        |    ((event_id * 4294967296 + user_id) >> 24) & 255, ((event_id * 4294967296 + user_id) >> 16) & 255,
-        |    ((event_id * 4294967296 + user_id) >> 8) & 255, (event_id * 4294967296 + user_id) & 255) AS mac8
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_enum_string" ->
-      """SELECT event_id, event_type AS enum_val FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_composite_json" ->
-      """SELECT event_id,
-        |  CAST(to_json(struct_pack(user_id := user_id, kind := event_type)) AS VARCHAR) AS comp_json
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_hstore_text" ->
-      """SELECT event_id, 'a,b' AS hs_keys,
-        |  concat(CAST(user_id AS VARCHAR), ',', CAST(event_id % 10 AS VARCHAR)) AS hs_vals
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_uint32_long" ->
-      """SELECT event_id,
-        |  CASE WHEN (event_id * 2654435761) % 4294967296 - 2147483648 < 0
-        |       THEN (event_id * 2654435761) % 4294967296 - 2147483648 + 4294967296
-        |       ELSE (event_id * 2654435761) % 4294967296 - 2147483648 END AS uval
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_scalar_widths" ->
-      """SELECT event_id, CAST(user_id % 32768 AS SMALLINT) AS i16,
-        |  CAST(CAST(value AS REAL) AS DOUBLE) AS f4d,
-        |  event_id % 2 = 0 AS is_even
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_tsrange_string" ->
-      s"""SELECT event_id,
-         |  concat('[', ${duckTsText("epoch_ns(ts)")}, ',', ${duckTsText("epoch_ns(ts) + 3600000000000")}, ')') AS tsrange_text
-         |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_daterange_string" ->
-      """SELECT o_orderkey,
-        |  concat('[', strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d'), ',',
-        |         strftime(CAST(o_orderdate AS DATE) + 30, '%Y-%m-%d'), ')') AS daterange_text
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "conv_geo_shapes" ->
-      """SELECT event_id,
-        |  concat('(', CAST(user_id AS VARCHAR), ',', CAST(event_id % 100 AS VARCHAR), '),(',
-        |         CAST(user_id + 10 AS VARCHAR), ',', CAST(event_id % 100 + 10 AS VARCHAR), ')') AS box_text,
-        |  concat('{', CAST(user_id AS VARCHAR), ',', CAST(event_id % 7 + 1 AS VARCHAR), ',3}') AS line_text,
-        |  concat('[(', CAST(user_id AS VARCHAR), ',', CAST(event_id % 100 AS VARCHAR), '),(',
-        |         CAST(user_id + 5 AS VARCHAR), ',', CAST(event_id % 100 + 5 AS VARCHAR), ')]') AS lseg_text,
-        |  concat('<(', CAST(user_id AS VARCHAR), ',', CAST(event_id % 100 AS VARCHAR), '),7>') AS circle_text,
-        |  concat('((', CAST(user_id AS VARCHAR), ',', CAST(event_id % 100 AS VARCHAR), '),(',
-        |         CAST(user_id + 1 AS VARCHAR), ',', CAST(event_id % 100 AS VARCHAR), '),(',
-        |         CAST(user_id AS VARCHAR), ',', CAST(event_id % 100 + 1 AS VARCHAR), '))') AS poly_text
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_postgis" ->
-      """WITH b AS (
-        |  SELECT event_id, user_id % 1000 AS x, event_id % 100 AS y FROM events
-        |), w AS (
-        |  SELECT event_id,
-        |    '0000000001' ||
-        |      hex(4841369599423283200 + x) || hex(4841369599423283200 + y) AS ph,
-        |    '000000000200000005' ||
-        |      hex(4841369599423283200 + x) || hex(4841369599423283200 + y) ||
-        |      hex(4841369599423283200 + x + 1) || hex(4841369599423283200 + y + 1) ||
-        |      hex(4841369599423283200 + x + 2) || hex(4841369599423283200 + y + 2) ||
-        |      hex(4841369599423283200 + x + 3) || hex(4841369599423283200 + y + 3) ||
-        |      hex(4841369599423283200 + x + 4) || hex(4841369599423283200 + y + 4) AS lh
-        |  FROM b
-        |)
-        |SELECT event_id,
-        |  CAST(to_json(struct_pack(wkb := to_base64(unhex(ph)), srid := 4326)) AS VARCHAR) AS geom_point,
-        |  CAST(to_json(struct_pack(wkb := to_base64(unhex(lh)), srid := 3857)) AS VARCHAR) AS geog_line,
-        |  CAST(to_json([struct_pack(wkb := to_base64(unhex(ph)), srid := 4326),
-        |                struct_pack(wkb := to_base64(unhex(lh)), srid := 3857)]) AS VARCHAR) AS geom_arr
-        |FROM w ORDER BY event_id""".stripMargin,
-
-    "conv_array_scalar_sweep" ->
-      s"""SELECT event_id,
-         |  concat('t_', CAST(user_id AS VARCHAR), ',idx_', CAST(event_id % 10 AS VARCHAR)) AS name_arr,
-         |  concat(lower(hex(encode(event_type))), ',', lower(hex(encode(event_type || '!')))) AS bytea_arr,
-         |  concat(CAST(user_id % 32768 AS VARCHAR), ',', CAST(event_id % 32768 AS VARCHAR)) AS i16_arr,
-         |  concat(CAST(user_id % 1000000 AS VARCHAR), ',', CAST(event_id % 1000000 AS VARCHAR)) AS i32_arr,
-         |  concat('{"k":', CAST(user_id AS VARCHAR), '};{"k":', CAST(event_id % 10 AS VARCHAR), '}') AS json_arr,
-         |  concat('10.', CAST(user_id % 256 AS VARCHAR), '.', CAST(event_id % 256 AS VARCHAR), '.0/24,',
-         |         '192.168.', CAST(event_id % 256 AS VARCHAR), '.0/16') AS cidr_arr,
-         |  concat(CAST(CAST(CAST(user_id % 8388608 AS REAL) AS BIGINT) AS VARCHAR), ',',
-         |         CAST(CAST(CAST(event_id % 8388608 AS REAL) AS BIGINT) AS VARCHAR)) AS f4_arr,
-         |  concat(${duckMac8("user_id")}, ',', ${duckMac8("event_id")}) AS mac8_arr,
-         |  concat('fe80::', lower(hex(user_id % 65536)), ',fe80::', lower(hex(event_id % 65536))) AS inet6_arr,
-         |  concat(substr(event_type, 1, 1), ',', substr(event_type, 2, 1)) AS qchar_arr,
-         |  concat(CAST(${duckUint("event_id")} AS VARCHAR), ',', CAST(${duckUint("user_id")} AS VARCHAR)) AS oid_arr,
-         |  concat(event_type, ',view') AS enum_arr,
-         |  concat('<e id="', CAST(event_id AS VARCHAR), '"/>;<u id="', CAST(user_id AS VARCHAR), '"/>') AS xml_arr,
-         |  concat(lpad(bin(user_id % 256), 8, '0'), ',', lpad(bin(event_id % 32), 5, '0')) AS varbit_arr,
-         |  concat(rpad(event_type, 10, ' '), '|x  ') AS bp_arr,
-         |  concat('{"a":"', CAST(user_id AS VARCHAR), '","b":"', CAST(event_id % 10 AS VARCHAR), '"};',
-         |         '{"c":"', event_type, '"}') AS hstore_arr
-         |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_array_temporal_geo_sweep" ->
-      s"""SELECT event_id,
-         |  concat(strftime(make_timestamp(epoch_ns(ts) // 1000), '%H:%M:%S.%f'), ',',
-         |         strftime(make_timestamp(epoch_ns(ts) // 1000 + 60000000), '%H:%M:%S.%f')) AS time_arr,
-         |  concat(strftime(make_timestamp(epoch_ns(ts) // 1000), '%H:%M:%S.%f'), '+00,',
-         |         strftime(make_timestamp(epoch_ns(ts) // 1000 + 60000000), '%H:%M:%S.%f'), '+00') AS timetz_arr,
-         |  concat('[', CAST(user_id AS VARCHAR), ',', CAST(user_id + 5 AS VARCHAR), ');[',
-         |         CAST(event_id AS VARCHAR), ',', CAST(event_id + 10 AS VARCHAR), ')') AS intrange_arr,
-         |  concat('[', ${duckCentsText("user_id * 100 + 50")}, ',', ${duckCentsText("user_id * 100 + 175")}, ');[',
-         |         ${duckCentsText("event_id % 100 * 100 + 25")}, ',', ${duckCentsText("event_id % 100 * 100 + 99")}, ')') AS numrange_arr,
-         |  concat('[', ${duckTsText("epoch_ns(ts)")}, ',', ${duckTsText("epoch_ns(ts) + 3600000000000")}, ');[',
-         |         ${duckTsText("epoch_ns(ts) + 7200000000000")}, ',', ${duckTsText("epoch_ns(ts) + 10800000000000")}, ')') AS tstzrange_arr,
-         |  concat('[', strftime(make_timestamp(epoch_ns(ts) // 1000), '%Y-%m-%d'), ',',
-         |         strftime(make_timestamp(epoch_ns(ts) // 1000 + 2592000000000), '%Y-%m-%d'), ');[',
-         |         strftime(make_timestamp(epoch_ns(ts) // 1000 + 86400000000), '%Y-%m-%d'), ',',
-         |         strftime(make_timestamp(epoch_ns(ts) // 1000 + 691200000000), '%Y-%m-%d'), ')') AS daterange_arr,
-         |  concat('[(', CAST(user_id AS VARCHAR), ',', CAST(event_id % 100 AS VARCHAR), '),(',
-         |         CAST(user_id + 5 AS VARCHAR), ',', CAST(event_id % 100 + 5 AS VARCHAR), ')];[(',
-         |         CAST(user_id + 1 AS VARCHAR), ',', CAST(event_id % 100 AS VARCHAR), '),(',
-         |         CAST(user_id + 6 AS VARCHAR), ',', CAST(event_id % 100 + 9 AS VARCHAR), ')]') AS lseg_arr,
-         |  concat('(', CAST(user_id AS VARCHAR), ',', CAST(event_id % 100 AS VARCHAR), '),(',
-         |         CAST(user_id + 10 AS VARCHAR), ',', CAST(event_id % 100 + 10 AS VARCHAR), ');(',
-         |         CAST(user_id AS VARCHAR), ',', CAST(event_id % 100 AS VARCHAR), '),(',
-         |         CAST(user_id + 2 AS VARCHAR), ',', CAST(event_id % 100 + 3 AS VARCHAR), ')') AS box_arr,
-         |  concat('((', CAST(user_id AS VARCHAR), ',', CAST(event_id % 100 AS VARCHAR), '),(',
-         |         CAST(user_id + 1 AS VARCHAR), ',', CAST(event_id % 100 AS VARCHAR), '),(',
-         |         CAST(user_id AS VARCHAR), ',', CAST(event_id % 100 + 1 AS VARCHAR), '));((',
-         |         CAST(user_id AS VARCHAR), ',', CAST(event_id % 100 AS VARCHAR), '),(',
-         |         CAST(user_id + 2 AS VARCHAR), ',', CAST(event_id % 100 AS VARCHAR), '),(',
-         |         CAST(user_id AS VARCHAR), ',', CAST(event_id % 100 + 2 AS VARCHAR), '))') AS poly_arr,
-         |  concat('{', CAST(user_id AS VARCHAR), ',', CAST(event_id % 100 + 1 AS VARCHAR), ',3};{',
-         |         CAST(user_id + 1 AS VARCHAR), ',', CAST(event_id % 100 + 2 AS VARCHAR), ',7}') AS line_arr,
-         |  concat('<(', CAST(user_id AS VARCHAR), ',', CAST(event_id % 100 AS VARCHAR), '),7>;<(',
-         |         CAST(user_id + 1 AS VARCHAR), ',', CAST(event_id % 100 + 1 AS VARCHAR), '),2>') AS circle_arr,
-         |  concat('[(', CAST(user_id AS VARCHAR), ',', CAST(event_id % 100 AS VARCHAR), '),(',
-         |         CAST(user_id + 2 AS VARCHAR), ',', CAST(event_id % 100 + 3 AS VARCHAR), ')];[(',
-         |         CAST(user_id + 1 AS VARCHAR), ',', CAST(event_id % 100 AS VARCHAR), '),(',
-         |         CAST(user_id + 3 AS VARCHAR), ',', CAST(event_id % 100 + 4 AS VARCHAR), ')]') AS path_arr
-         |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_ltree_xml_char" ->
-      """SELECT event_id,
-        |  concat('root.u', CAST(user_id AS VARCHAR), '.e', CAST(event_id % 10 AS VARCHAR)) AS ltree_path,
-        |  concat('<e id="', CAST(event_id AS VARCHAR), '"/>') AS xml_text,
-        |  substr(event_type, 1, 1) AS qchar,
-        |  rpad(event_type, 12, ' ') AS bp12
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_timetz_text" ->
-      """SELECT event_id,
-        |  strftime(make_timestamp(epoch_ns(ts) // 1000), '%H:%M:%S.%f') || '+00' AS timetz_text
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_interval_negative" ->
-      """SELECT event_id,
-        |  (user_id - 100) * 2629800000000 + (event_id % 30 - 15) * 86400000000
-        |    + (epoch_ns(ts) % 1000000000) // 1000 AS interval_us
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_numeric_edges" ->
-      """SELECT event_id,
-        |  event_id / 1000.0 AS small_val,
-        |  event_id * 1000000000000.0 AS big_val,
-        |  -(event_id / 7.0) AS frac_val
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_array_long" ->
-      """SELECT event_id,
-        |  array_to_string(list_transform(
-        |    [CAST(user_id % 100 AS INTEGER) - 50, CAST(event_id % 97 AS INTEGER) - 48],
-        |    x -> CASE WHEN x < 0 THEN CAST(x AS BIGINT) + 4294967296 ELSE CAST(x AS BIGINT) END), ',') AS arr_vals
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_array_date_days" ->
-      """SELECT o_orderkey,
-        |  array_to_string([
-        |    datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)),
-        |    datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE) + 10)], ',') AS days_arr
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "conv_array_ts_millis" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  array_to_string([epoch_ms(l_shipdate), epoch_ms(l_shipdate + INTERVAL 1 DAY)], ',') AS ms_arr
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "conv_array_mixed" ->
-      """SELECT event_id,
-        |  array_to_string(list_transform([event_id % 2 = 0, user_id % 3 = 0],
-        |    x -> CAST(x AS VARCHAR)), ',') AS bool_arr,
-        |  array_to_string([
-        |    concat_ws('-', substr(md5(CAST(event_id AS VARCHAR)), 1, 8), substr(md5(CAST(event_id AS VARCHAR)), 9, 4),
-        |      substr(md5(CAST(event_id AS VARCHAR)), 13, 4), substr(md5(CAST(event_id AS VARCHAR)), 17, 4),
-        |      substr(md5(CAST(event_id AS VARCHAR)), 21, 12)),
-        |    concat_ws('-', substr(md5(CAST(user_id AS VARCHAR)), 1, 8), substr(md5(CAST(user_id AS VARCHAR)), 9, 4),
-        |      substr(md5(CAST(user_id AS VARCHAR)), 13, 4), substr(md5(CAST(user_id AS VARCHAR)), 17, 4),
-        |      substr(md5(CAST(user_id AS VARCHAR)), 21, 12))], ',') AS uuid_arr,
-        |  array_to_string([event_type, upper(event_type)], ',') AS txt_arr,
-        |  array_to_string([
-        |    user_id * 2629800000000 + (event_id % 30) * 86400000000,
-        |    (user_id - 100) * 2629800000000 + (event_id % 30 - 15) * 86400000000], ',') AS interval_arr,
-        |  CAST(to_json([struct_pack(a := user_id), struct_pack(a := event_id % 10)]) AS VARCHAR) AS comp_arr
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_array_more" ->
-      s"""SELECT event_id,
-         |  concat('(', CAST(user_id AS VARCHAR), ',', CAST(event_id % 100 AS VARCHAR), ');(',
-         |         CAST(user_id + 1 AS VARCHAR), ',', CAST(event_id % 100 + 1 AS VARCHAR), ')') AS point_arr,
-         |  printf('%02x:%02x:%02x:%02x:%02x:%02x',
-         |    ((event_id * 65536 + user_id) >> 40) & 255, ((event_id * 65536 + user_id) >> 32) & 255,
-         |    ((event_id * 65536 + user_id) >> 24) & 255, ((event_id * 65536 + user_id) >> 16) & 255,
-         |    ((event_id * 65536 + user_id) >> 8) & 255, (event_id * 65536 + user_id) & 255)
-         |  || ',' ||
-         |  printf('%02x:%02x:%02x:%02x:%02x:%02x',
-         |    ((user_id * 65536 + event_id) >> 40) & 255, ((user_id * 65536 + event_id) >> 32) & 255,
-         |    ((user_id * 65536 + event_id) >> 24) & 255, ((user_id * 65536 + event_id) >> 16) & 255,
-         |    ((user_id * 65536 + event_id) >> 8) & 255, (user_id * 65536 + event_id) & 255) AS mac_arr,
-         |  ${duckTsText("epoch_ns(ts)")} || ',' || ${duckTsText("epoch_ns(ts) + 60000000000")} AS tstz_arr,
-         |  CAST((user_id * 100 + 25) // 100 AS VARCHAR) || '.' || lpad(CAST((user_id * 100 + 25) % 100 AS VARCHAR), 2, '0')
-         |  || ',' ||
-         |  CAST((event_id * 100 + 75) // 100 AS VARCHAR) || '.' || lpad(CAST((event_id * 100 + 75) % 100 AS VARCHAR), 2, '0') AS f8_arr,
-         |  concat('root.u', CAST(user_id AS VARCHAR), ',root.e', CAST(event_id % 10 AS VARCHAR)) AS ltree_arr
-         |FROM events ORDER BY event_id""".stripMargin,
-
-    "conv_array_bits" ->
-      """SELECT event_id,
-        |  array_to_string([lpad(bin(user_id % 256), 8, '0'), lpad(bin(event_id % 256), 8, '0')], ',') AS bits_arr
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    // Upgraded from rows-only: the marker-voting argmax is expressible
-    // in DuckDB (regexp_extract_all + list_position first-max, matching
-    // Spark's array_position lexicographic tie-break; \b is ASCII-class
-    // in both Java regex and RE2)
-    "text_langid" ->
-      """SELECT doc_id,
-        |  CASE WHEN greatest(de, en, es, fr, zh) = 0 THEN 'und'
-        |       ELSE ['de','en','es','fr','zh'][list_position([de, en, es, fr, zh], greatest(de, en, es, fr, zh))]
-        |  END AS pred_lang
-        |FROM (SELECT doc_id,
-        |  len(regexp_extract_all(text, '\b(der|die|das|und)\b')) AS de,
-        |  len(regexp_extract_all(text, '\b(the|a|of|and)\b')) AS en,
-        |  len(regexp_extract_all(text, '\b(el|la|los|y)\b')) AS es,
-        |  len(regexp_extract_all(text, '\b(le|la|les|et)\b')) AS fr,
-        |  len(regexp_extract_all(text, '\b(的|是|了|在)\b')) AS zh
-        |  FROM documents) t
-        |ORDER BY doc_id""".stripMargin,
-
-    // markup strip mirrored step by step (DuckDB regexp_replace needs
-    // the explicit 'g' flag — Spark's is global by default)
-    "text_strip_markup" ->
-      """WITH h AS (SELECT doc_id,
-        |  '<html><head><script type="text/javascript">var x = 1 < 2;' ||
-        |  '</script><style>p{color:red}</style></head><body><h1 class="t">' ||
-        |  source || '</h1><p>' || replace(text, ' the ', ' &amp; ') ||
-        |  ' &lt;tag&gt; &amp;lt;literal&#39;s&nbsp;end</p>' ||
-        |  '<!-- note --></body></html>' AS html FROM documents),
-        |s1 AS (SELECT doc_id, regexp_replace(regexp_replace(html,
-        |  '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
-        |  '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS x FROM h),
-        |s2 AS (SELECT doc_id, regexp_replace(x, '<[^>]*>', ' ', 'g') AS x FROM s1),
-        |s3 AS (SELECT doc_id, replace(replace(replace(replace(replace(replace(x,
-        |  '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-        |  '&nbsp;', ' '), '&amp;', '&') AS x FROM s2),
-        |c AS (SELECT doc_id, trim(regexp_replace(x, '\s+', ' ', 'g')) AS clean
-        |      FROM s3)
-        |SELECT doc_id, clean,
-        |  CAST(len(string_split_regex(trim(clean), '\s+')) AS BIGINT) AS n_tokens
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    "text_langid_confusion" ->
-      """SELECT lang, CASE WHEN greatest(de, en, es, fr, zh) = 0 THEN 'und'
-        |       ELSE ['de','en','es','fr','zh'][list_position([de, en, es, fr, zh], greatest(de, en, es, fr, zh))]
-        |  END AS pred_lang, count(*) AS n_docs
-        |FROM (SELECT lang,
-        |  len(regexp_extract_all(text, '\b(der|die|das|und)\b')) AS de,
-        |  len(regexp_extract_all(text, '\b(the|a|of|and)\b')) AS en,
-        |  len(regexp_extract_all(text, '\b(el|la|los|y)\b')) AS es,
-        |  len(regexp_extract_all(text, '\b(le|la|les|et)\b')) AS fr,
-        |  len(regexp_extract_all(text, '\b(的|是|了|在)\b')) AS zh
-        |  FROM documents) t
-        |GROUP BY lang, pred_lang ORDER BY lang, pred_lang""".stripMargin,
-
-    // Upgraded from rows-only: FNV-64a as a HUGEINT byte fold (names are
-    // ASCII so ascii(char) = byte), unsigned modulo for free since the
-    // accumulator stays in [0, 2^64)
-    "cdc_snapshot_partitions" ->
-      """SELECT tbl, CAST(list_reduce(
-        |    list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |      list_transform(range(1, length(tbl) + 1),
-        |        i -> ascii(substr(tbl, CAST(i AS INTEGER), 1)))),
-        |    (acc, b) -> (xor(acc, CAST(b AS HUGEINT)) * 1099511628211) % 18446744073709551616
-        |  ) % 5 AS BIGINT) AS partition
-        |FROM (SELECT DISTINCT 'public.events_' || CAST(user_id AS VARCHAR) AS tbl FROM events) t
-        |ORDER BY tbl""".stripMargin,
-
-    "text_quality" ->
-      """SELECT doc_id, length(text) AS n_chars,
-        |  len(string_split_regex(trim(text), '\s+')) AS n_tokens,
-        |  len(list_filter(string_split(text, ' '), x -> x IN ('the','a'))) AS n_stop,
-        |  len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\s]')) AS n_bpe_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "pipeline_gopher_filter" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |word AS (SELECT doc_id, len(t) AS n_tokens, len(list_distinct(t)) AS n_distinct_tokens FROM tok),
-        |g2 AS (SELECT doc_id, unnest(list_transform(list_zip(t[1:len(t)-1], t[2:len(t)]),
-        |         x -> x[1] || ' ' || x[2])) AS gram FROM tok WHERE len(t) >= 2),
-        |c2 AS (SELECT doc_id, gram, count(*) AS c FROM g2 GROUP BY 1, 2),
-        |t2 AS (SELECT doc_id, max(c) AS tc, CAST(sum(c) AS BIGINT) AS ng FROM c2 GROUP BY 1),
-        |stop AS (SELECT doc_id, len(list_filter(string_split(text, ' '), x -> x IN ('the', 'a'))) AS n_stop
-        |         FROM documents)
-        |SELECT w.doc_id, n_tokens, n_distinct_tokens,
-        |       coalesce(tc, 0) AS top2_count, coalesce(ng, 0) AS n_2grams
-        |FROM word w LEFT JOIN t2 USING (doc_id) JOIN stop USING (doc_id)
-        |WHERE n_tokens BETWEEN 20 AND 1000 AND n_distinct_tokens * 2 >= n_tokens
-        |  AND coalesce(tc, 0) * 20 <= coalesce(ng, 0) AND n_stop >= 1
-        |ORDER BY doc_id""".stripMargin,
-
-    // lsh-eval twin: the minhash candidate CTEs (`pairs`) + the df-capped
-    // exact-Jaccard truth CTEs, then three counts and two integer ratios
-    "dedup_lsh_eval" -> (minhashPairCtes +
-      s""",
-         |tsh AS (SELECT doc_id, shingle FROM (
-         |    SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS dfc FROM sh) zc
-         |  WHERE dfc <= ${Dedup.DefaultDfCap}),
-         |tsizes AS (SELECT doc_id, count(*) AS n FROM tsh GROUP BY doc_id),
-         |tpairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-         |           FROM tsh a JOIN tsh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |           GROUP BY 1, 2),
-         |truth AS (SELECT doc_a, doc_b FROM tpairs
-         |          JOIN tsizes sa ON doc_a = sa.doc_id JOIN tsizes sb ON doc_b = sb.doc_id
-         |          WHERE shared * 10 >= 4 * (sa.n + sb.n - shared)),
-         |hits AS (SELECT p.doc_a FROM pairs p JOIN truth t USING (doc_a, doc_b)),
-         |c AS (SELECT (SELECT count(*) FROM truth) AS n_true,
-         |             (SELECT count(*) FROM pairs) AS n_candidates,
-         |             (SELECT count(*) FROM hits) AS n_hits)
-         |SELECT n_true, n_candidates, n_hits,
-         |  CAST(CASE WHEN n_candidates = 0 THEN 0
-         |       ELSE n_hits * 1000000 // n_candidates END AS BIGINT) AS precision_ppm,
-         |  CAST(CASE WHEN n_true = 0 THEN 0
-         |       ELSE n_hits * 1000000 // n_true END AS BIGINT) AS recall_ppm
-         |FROM c""".stripMargin),
-
-    "dedup_incremental" ->
-      s"""WITH tok AS (SELECT doc_id, source, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, source,
-        |         unnest(list_transform(list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-        |           x -> x[1] || ' ' || x[2] || ' ' || x[3])) AS shingle
-        |       FROM tok WHERE len(t) >= 3),
-        |b0 AS (SELECT doc_id, shingle FROM sh WHERE length(source) = 5),
-        |h0 AS (SELECT doc_id, shingle FROM sh WHERE length(source) = 4),
-        |hot AS (SELECT shingle FROM (SELECT shingle FROM b0 UNION ALL SELECT shingle FROM h0) u
-        |        GROUP BY shingle HAVING count(*) > ${Dedup.DefaultDfCap}),
-        |b AS (SELECT * FROM b0 WHERE shingle NOT IN (SELECT shingle FROM hot)),
-        |h AS (SELECT * FROM h0 WHERE shingle NOT IN (SELECT shingle FROM hot)),
-        |nb AS (SELECT doc_id, count(*) AS n FROM b GROUP BY 1),
-        |nh AS (SELECT doc_id, count(*) AS n FROM h GROUP BY 1),
-        |dropped AS (SELECT DISTINCT p.doc_id FROM (
-        |    SELECT b.doc_id, h.doc_id AS hist_id, count(*) AS shared
-        |    FROM b JOIN h ON b.shingle = h.shingle GROUP BY 1, 2) p
-        |  JOIN nb ON p.doc_id = nb.doc_id JOIN nh ON p.hist_id = nh.doc_id
-        |  WHERE p.shared * 10 >= 4 * (nb.n + nh.n - p.shared))
-        |SELECT d.doc_id, d.source FROM documents d
-        |WHERE length(d.source) = 5 AND d.doc_id NOT IN (SELECT doc_id FROM dropped)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "pipeline_clean_corpus" ->
-      """WITH votes AS (
-        |  SELECT doc_id, text,
-        |    len(string_split_regex(trim(text), '\s+')) AS n_tokens,
-        |    len(regexp_extract_all(text, '\b(der|die|das|und)\b')) AS de,
-        |    len(regexp_extract_all(text, '\b(the|a|of|and)\b')) AS en,
-        |    len(regexp_extract_all(text, '\b(el|la|los|y)\b')) AS es,
-        |    len(regexp_extract_all(text, '\b(le|la|les|et)\b')) AS fr,
-        |    len(regexp_extract_all(text, '\b(的|是|了|在)\b')) AS zh
-        |  FROM documents
-        |), scored AS (
-        |  SELECT doc_id, text, n_tokens,
-        |    CASE WHEN greatest(de, en, es, fr, zh) = 0 THEN 'und'
-        |         ELSE ['de','en','es','fr','zh'][list_position([de, en, es, fr, zh], greatest(de, en, es, fr, zh))]
-        |    END AS lang
-        |  FROM votes
-        |), kept AS (
-        |  SELECT * FROM scored WHERE n_tokens >= 5 AND lang IN ('en','de','es','fr')
-        |)
-        |SELECT min(doc_id) AS doc_id, min(lang) AS lang, min(n_tokens) AS n_tokens
-        |FROM kept GROUP BY md5(text)
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_fingerprint" ->
-      """SELECT doc_id, list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |  list_transform(string_split(text, ' '), t -> CAST(length(t) * 31 + ascii(substr(t, 1, 1)) AS BIGINT))),
-        |  (acc, v) -> (acc * 131 + v) % 1000000007) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "text_repetition" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |word AS (SELECT doc_id, len(t) AS n_tokens, len(list_distinct(t)) AS n_distinct_tokens FROM tok),
-        |g2 AS (SELECT doc_id, unnest(list_transform(list_zip(t[1:len(t)-1], t[2:len(t)]),
-        |         x -> x[1] || ' ' || x[2])) AS gram FROM tok WHERE len(t) >= 2),
-        |c2 AS (SELECT doc_id, gram, count(*) AS c FROM g2 GROUP BY 1, 2),
-        |t2 AS (SELECT doc_id, max(c) AS top2_count, CAST(sum(c) AS BIGINT) AS n_2grams FROM c2 GROUP BY 1),
-        |g3 AS (SELECT doc_id, unnest(list_transform(list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-        |         x -> x[1] || ' ' || x[2] || ' ' || x[3])) AS gram FROM tok WHERE len(t) >= 3),
-        |c3 AS (SELECT doc_id, gram, count(*) AS c FROM g3 GROUP BY 1, 2),
-        |t3 AS (SELECT doc_id, max(c) AS top3_count, CAST(sum(c) AS BIGINT) AS n_3grams FROM c3 GROUP BY 1)
-        |SELECT w.doc_id, n_tokens, n_distinct_tokens,
-        |       coalesce(top2_count, 0) AS top2_count, coalesce(n_2grams, 0) AS n_2grams,
-        |       coalesce(top3_count, 0) AS top3_count, coalesce(n_3grams, 0) AS n_3grams
-        |FROM word w LEFT JOIN t2 USING (doc_id) LEFT JOIN t3 USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_pii_redact" ->
-      """WITH seeded AS (
-        |  SELECT doc_id,
-        |    substr(text, 1, 40) || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com' ||
-        |    ' host 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.7' ||
-        |    ' tel 21-555-' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-1234' AS raw
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(raw, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INT) AS n_email,
-        |  CAST(len(regexp_extract_all(raw, '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')) AS INT) AS n_ip,
-        |  CAST(len(regexp_extract_all(raw, '\b[0-9]{2}-[0-9]{3}-[0-9]{3}-[0-9]{4}\b')) AS INT) AS n_phone,
-        |  regexp_replace(regexp_replace(regexp_replace(raw,
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |      '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g'),
-        |      '\b[0-9]{2}-[0-9]{3}-[0-9]{3}-[0-9]{4}\b', '<PHONE>', 'g') AS redacted
-        |FROM seeded ORDER BY doc_id""".stripMargin,
-
-    "text_contamination" ->
-      """WITH tok AS (SELECT doc_id, source, string_split(text, ' ') AS t FROM documents),
-        |g AS (SELECT doc_id, source, unnest(list_transform(
-        |        list_zip(t[1:len(t)-4], t[2:len(t)-3], t[3:len(t)-2], t[4:len(t)-1], t[5:len(t)]),
-        |        x -> x[1] || ' ' || x[2] || ' ' || x[3] || ' ' || x[4] || ' ' || x[5])) AS gram
-        |     FROM tok WHERE len(t) >= 5),
-        |bench AS (SELECT DISTINCT gram FROM g WHERE source IN ('src0', 'src1')),
-        |corpus AS (SELECT DISTINCT doc_id, gram FROM g WHERE source NOT IN ('src0', 'src1')),
-        |perdoc AS (SELECT doc_id, count(*) AS n_grams FROM corpus GROUP BY 1),
-        |hits AS (SELECT doc_id, count(*) AS n_contaminated
-        |         FROM corpus JOIN bench USING (gram) GROUP BY 1)
-        |SELECT p.doc_id, n_grams, coalesce(n_contaminated, 0) AS n_contaminated
-        |FROM perdoc p LEFT JOIN hits USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-    "emb_quantize" ->
-      """WITH m AS (SELECT vec_id, embedding,
-        |  list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS absmax
-        |FROM embeddings)
-        |SELECT vec_id, absmax / 127.0 AS scale,
-        |  CASE WHEN absmax = 0
-        |    THEN array_to_string(list_transform(embedding, v -> 0), ',')
-        |    ELSE array_to_string(list_transform(embedding,
-        |           v -> CAST(floor(CAST(v AS DOUBLE) * 127.0 / absmax + 0.5) AS INT)), ',')
-        |  END AS q_csv
-        |FROM m ORDER BY vec_id""".stripMargin,
-
-    // PQ twin: same sliced-codebook quantizer, same 2·a·c − ‖c‖² argmin
-    // (sequential-fold doubles), row_number tie-break by code id
-    // PQ twins now fit the codebook: 2 unrolled per-subspace exact-mean
-    // Lloyd rounds (duckPqKmeans) replacing the sliced-seed CTE — the
-    // Spark default is the FITTED codebook
-    "ann_pq_codes" ->
-      s"""WITH ${duckPqKmeans(16, 8, 8, 2, "pq")},
-         |scored AS (SELECT c.vec_id, c.sm, b.cid,
-         |    2 * ${duckDot("c.subvec", "b.csub")} - ${duckDot("b.csub", "b.csub")} AS score
-         |  FROM pqcorp c JOIN pq2 b ON c.sm = b.sm),
-         |best AS (SELECT vec_id, sm, cid,
-         |    row_number() OVER (PARTITION BY vec_id, sm ORDER BY score DESC, cid ASC) AS rn
-         |  FROM scored)
-         |SELECT vec_id, CAST(sm AS BIGINT) AS subspace, CAST(cid AS BIGINT) AS code
-         |FROM best WHERE rn = 1 ORDER BY vec_id, subspace""".stripMargin,
-
-    // ADC twin: the fitted pq-codebook CTEs + per-query distance table,
-    // score sum as an sm-ordered sequential fold (NOT an unordered SUM)
-    "ann_pq_adc_topk" ->
-      s"""WITH ${duckPqKmeans(16, 8, 8, 2, "pq")},
-         |cscored AS (SELECT c.vec_id, c.sm, b.cid,
-         |    2 * ${duckDot("c.subvec", "b.csub")} - ${duckDot("b.csub", "b.csub")} AS score
-         |  FROM pqcorp c JOIN pq2 b ON c.sm = b.sm),
-         |codes AS (SELECT vec_id, sm, cid AS code FROM (
-         |    SELECT vec_id, sm, cid,
-         |      row_number() OVER (PARTITION BY vec_id, sm ORDER BY score DESC, cid ASC) AS rn
-         |    FROM cscored) t WHERE rn = 1),
-         |q AS (SELECT vec_id AS query_id, sm, subvec AS qsub
-         |      FROM pqcorp WHERE vec_id < 10),
-         |dt AS (SELECT query_id, b.sm, b.cid,
-         |    2 * ${duckDot("q.qsub", "b.csub")} - ${duckDot("b.csub", "b.csub")} AS score
-         |  FROM q JOIN pq2 b ON q.sm = b.sm),
-         |joined AS (SELECT dt.query_id, c.vec_id, c.sm, dt.score
-         |  FROM codes c JOIN dt ON c.sm = dt.sm AND c.code = dt.cid
-         |  WHERE dt.query_id <> c.vec_id),
-         |summed AS (SELECT query_id, vec_id AS neighbor_id,
-         |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list(score ORDER BY sm)),
-         |      (a, x) -> a + x) AS adc_score
-         |  FROM joined GROUP BY 1, 2),
-         |ranked AS (SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY adc_score DESC, neighbor_id ASC) AS rank FROM summed)
-         |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, adc_score
-         |FROM ranked WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-
-    // JL projection twin: the SAME generated planes rendered as
-    // exact-double literals, the same sequential-fold dot product
-    "embed_project" -> {
-      val planes = graft.ops.Similarity.lshPlanes(64, 8, 7L)
-      val cols = (0 until 8).map { j =>
-        val lst = planes(j).map(f => f.toDouble.toString).mkString("[", ", ", "]")
-        s"${duckDot("embedding", lst)} AS p$j"
-      }.mkString(",\n")
-      s"SELECT vec_id,\n$cols\nFROM embeddings ORDER BY vec_id"
-    },
-
-    // dim-stats twin: unnest with positional index, integer micros
-    // drift twin: the dim-stats CTE per parity slice, integer mean shift
-    "embed_dim_drift" ->
-      """WITH vm AS (SELECT vec_id, CAST(i - 1 AS INT) AS pos,
-        |    CAST(floor(CAST(embedding[CAST(i AS INT)] AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS vm
-        |  FROM embeddings CROSS JOIN range(1, 65) t(i)),
-        |sa AS (SELECT pos, CAST(SUM(vm) // COUNT(*) AS BIGINT) AS mean_a_micro,
-        |         MIN(vm) AS min_a, MAX(vm) AS max_a
-        |       FROM vm WHERE vec_id % 2 = 0 GROUP BY pos),
-        |sb AS (SELECT pos, CAST(SUM(vm) // COUNT(*) AS BIGINT) AS mean_b_micro,
-        |         MIN(vm) AS min_b, MAX(vm) AS max_b
-        |       FROM vm WHERE vec_id % 2 = 1 GROUP BY pos)
-        |SELECT sa.pos, mean_a_micro, mean_b_micro,
-        |  abs(mean_b_micro - mean_a_micro) AS mean_shift_micro,
-        |  CAST(CASE WHEN max_a = min_a THEN 0
-        |       ELSE abs(mean_b_micro - mean_a_micro) * 1000000 // (max_a - min_a)
-        |  END AS BIGINT) AS drift_ppm,
-        |  (min_b < min_a OR max_b > max_a) AS range_expanded
-        |FROM sa JOIN sb USING (pos) ORDER BY sa.pos""".stripMargin,
-
-    "embed_dim_stats" ->
-      """SELECT CAST(i - 1 AS INT) AS pos, COUNT(*) AS n,
-        |  CAST(SUM(vm) AS BIGINT) AS sum_micros,
-        |  MIN(vm) AS min_micros, MAX(vm) AS max_micros
-        |FROM (SELECT i, CAST(floor(CAST(embedding[CAST(i AS INT)] AS DOUBLE)
-        |        * 1000000 + 0.5) AS BIGINT) AS vm
-        |      FROM embeddings CROSS JOIN range(1, 65) t(i)) z
-        |GROUP BY 1 ORDER BY pos""".stripMargin,
-
-    // power-iteration twin: identical integer matvecs + sign-safe renorm
-    "embed_power_iteration" -> {
-      val steps = (1 to 3).map { i =>
-        s"""s$i AS (SELECT x.vec_id, SUM(x.xq * v.v) AS s
-           |  FROM x JOIN v${i - 1} v USING (pos) GROUP BY 1),
-           |w$i AS (SELECT x.pos, SUM(s.s * x.xq) AS w
-           |  FROM x JOIN s$i s USING (vec_id) GROUP BY 1),
-           |n$i AS (SELECT MAX(ABS(w)) AS m FROM w$i),
-           |v$i AS (SELECT pos, CAST(CASE WHEN m = 0 THEN 0
-           |    WHEN w < 0 THEN -((ABS(w) * 1000) // m)
-           |    ELSE (ABS(w) * 1000) // m END AS BIGINT) AS v
-           |  FROM w$i CROSS JOIN n$i)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH x AS (SELECT vec_id, CAST(i - 1 AS INT) AS pos,
-         |    CAST(floor(CAST(embedding[CAST(i AS INT)] AS DOUBLE) * 1000.0 + 0.5)
-         |         AS BIGINT) AS xq
-         |  FROM embeddings CROSS JOIN range(1, 65) t(i)),
-         |v0 AS (SELECT CAST(i - 1 AS INT) AS pos, CAST(1000 AS BIGINT) AS v
-         |  FROM range(1, 65) t(i)),
-         |$steps
-         |SELECT pos, v FROM v3 ORDER BY pos""".stripMargin
-    },
-
-    // centroid twin: floor(c*1e6+0.5) micros summed as BIGINT — integer
-    // sums are association-order-free, unlike float means
-    "embed_centroids" ->
-      """SELECT label, pos - 1 AS pos,
-        |  CAST(sum(CAST(floor(CAST(embedding[pos] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT)
-        |    AS comp_micros_sum,
-        |  count(*) AS n
-        |FROM (SELECT label, embedding,
-        |        unnest(generate_series(1, len(embedding))) AS pos
-        |      FROM embeddings) t
-        |GROUP BY 1, 2 ORDER BY label, pos""".stripMargin,
-
-    // classifier twin: FNV-64a per token (HUGEINT fold), bucket = % 1024
-    // (2^64 ≡ 0 mod 1024 so unsigned ≡ signed pmod), Knuth spread to
-    // milli-weights, BIGINT sum. ascii(char)=byte holds for ASCII text
-    // only (the corpus is ASCII — same documented assumption as
-    // cdc_snapshot_partitions); Spark hashes UTF-8 bytes either way.
-    "text_classifier" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
-        |w AS (SELECT doc_id,
-        |  CAST(((list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |      list_transform(range(1, length(t) + 1),
-        |        i -> ascii(substr(t, CAST(i AS INTEGER), 1)))),
-        |      (acc, c) -> (xor(acc, CAST(c AS HUGEINT)) * 1099511628211) % 18446744073709551616)
-        |    % 1024) * 2654435761 % 2001 - 1000) AS BIGINT) AS w
-        |  FROM tok)
-        |SELECT doc_id, CAST(sum(w) AS BIGINT) AS score_milli,
-        |  CAST(sum(w) AS BIGINT) > 0 AS kept
-        |FROM w GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // compressibility twin: DuckDB 4-gram zip + distinct count
-    "text_compressibility" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |g AS (SELECT doc_id,
-        |    list_transform(list_zip(t[1:len(t)-3], t[2:len(t)-2], t[3:len(t)-1], t[4:len(t)]),
-        |      x -> x[1] || ' ' || x[2] || ' ' || x[3] || ' ' || x[4]) AS gs
-        |  FROM tok WHERE len(t) >= 4)
-        |SELECT doc_id, CAST(len(gs) AS BIGINT) AS n_grams,
-        |  CAST(len(list_distinct(gs)) AS BIGINT) AS n_distinct,
-        |  CAST(len(list_distinct(gs)) * 1000000 // len(gs) AS BIGINT) AS distinct_ppm
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    // RAKE twin: identical phrase runs, deg/freq milli scores
-    "text_rake_keywords" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |tk AS (SELECT doc_id, i - 1 AS pos, t[i] AS tok
-        |       FROM (SELECT doc_id, t, unnest(generate_series(1, len(t))) AS i
-        |             FROM tok) z),
-        |st AS (SELECT doc_id, pos FROM tk WHERE tok IN ('the', 'a')),
-        |nr AS (SELECT k.doc_id, k.pos, k.tok,
-        |        (SELECT count(*) FROM st s
-        |         WHERE s.doc_id = k.doc_id AND s.pos < k.pos) AS phrase_id
-        |       FROM tk k WHERE k.tok NOT IN ('the', 'a')),
-        |ph AS (SELECT doc_id, phrase_id,
-        |         string_agg(tok, ' ' ORDER BY pos) AS phrase, COUNT(*) AS plen
-        |       FROM nr GROUP BY 1, 2),
-        |wr AS (SELECT doc_id, phrase_id, phrase, plen,
-        |         unnest(string_split(phrase, ' ')) AS word FROM ph),
-        |ws AS (SELECT doc_id, word,
-        |         (1000 * SUM(plen)) // COUNT(*) AS wscore_milli
-        |       FROM wr GROUP BY 1, 2),
-        |sc AS (SELECT w.doc_id, w.phrase_id, w.phrase,
-        |         CAST(SUM(s.wscore_milli) AS BIGINT) AS score_milli
-        |       FROM wr w JOIN ws s ON s.doc_id = w.doc_id AND s.word = w.word
-        |       GROUP BY 1, 2, 3),
-        |rk AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-        |         ORDER BY score_milli DESC, phrase, phrase_id) AS rank FROM sc)
-        |SELECT doc_id, CAST(rank AS INT) AS rank, phrase, score_milli
-        |FROM rk WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-
-    "classifier_perceptron" ->
-      s"""${perceptronCtes(3)}
-         |SELECT pos, w FROM w3 ORDER BY pos""".stripMargin,
-
-    // calibration twin: same trained w3, same margins, bins relative
-    // to max |margin| via the portable FLOOR(x·n/max) signed division
-    // (integer div truncates in Spark but floors in DuckDB — double
-    // floor agrees everywhere, exact below 2^53)
-    "classifier_calibration" ->
-      s"""${perceptronCtes(3)},
-         |mf AS (SELECT f.doc_id, f.y, SUM(f.xv * w.w) AS margin
-         |  FROM f JOIN w3 w USING (pos) GROUP BY 1, 2),
-         |mx AS (SELECT max(abs(margin)) AS maxabs FROM mf),
-         |bins AS (SELECT CASE WHEN maxabs = 0 THEN CAST(0 AS BIGINT)
-         |    ELSE greatest(CAST(-4 AS BIGINT), least(CAST(4 AS BIGINT),
-         |      CAST(FLOOR(CAST(margin AS DOUBLE) * 4.0
-         |                 / CAST(maxabs AS DOUBLE)) AS BIGINT))) END AS bin, y
-         |  FROM mf CROSS JOIN mx)
-         |SELECT bin, COUNT(*) AS n_docs,
-         |  CAST(SUM(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-         |  (CAST(SUM(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS BIGINT) * 1000000)
-         |    // COUNT(*) AS pos_ppm
-         |FROM bins GROUP BY bin ORDER BY bin""".stripMargin,
-
-    "classifier_perceptron_eval" ->
-      s"""${perceptronCtes(3)},
-         |mf AS (SELECT f.doc_id, f.y, SUM(f.xv * w.w) AS margin
-         |  FROM f JOIN w3 w USING (pos) GROUP BY 1, 2)
-         |SELECT y, COUNT(*) AS n_docs,
-         |  CAST(SUM(CASE WHEN y * margin > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_correct
-         |FROM mf GROUP BY y ORDER BY y""".stripMargin,
-
-    "chunk_documents" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |st AS (SELECT doc_id, t,
-        |         unnest(generate_series(1, greatest(len(t) - 8, 1), 24)) AS start
-        |       FROM tok)
-        |SELECT doc_id, CAST((start - 1) // 24 AS BIGINT) AS chunk_no,
-        |  len(t[start:start+31]) AS n_chunk_tokens,
-        |  array_to_string(t[start:start+31], ' ') AS chunk_text
-        |FROM st ORDER BY doc_id, chunk_no""".stripMargin,
-
-    "tokenize_ids" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |pos AS (SELECT doc_id, unnest(generate_series(1, len(t))) AS pos, t FROM tok),
-        |tokens AS (SELECT doc_id, pos, t[pos] AS tok FROM pos),
-        |freq AS (SELECT tok AS token, count(*) AS cnt FROM tokens GROUP BY 1),
-        |vocab AS (SELECT token, id FROM (
-        |  SELECT token, row_number() OVER (ORDER BY cnt DESC, token) - 1 AS id FROM freq)
-        |  WHERE id < 100)
-        |SELECT doc_id,
-        |  array_to_string(list(CAST(coalesce(v.id, -1) AS VARCHAR) ORDER BY pos), ',') AS ids_csv
-        |FROM tokens LEFT JOIN vocab v ON tok = v.token
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // BPE twin: 6 unrolled merge rounds (duckBpe); each round's winner
-    // row becomes one output row in training order
-    "vocab_bpe_merges" ->
-      (s"WITH ${duckBpe(6)},\nm AS (" +
-        (1 to 6).map(i =>
-          s"SELECT $i AS rank, split_part(pr, ' ', 1) AS lhs, " +
-            s"split_part(pr, ' ', 2) AS rhs, replace(pr, ' ', '') AS merged, " +
-            s"cnt AS weighted_count FROM bpe${i}_b").mkString(" UNION ALL ") +
-        ")\nSELECT * FROM m ORDER BY rank"),
-
-    // fertility twin: per-source word counts joined to the round-6 word
-    // table; symbol count = segmented-symbol list length
-    "vocab_bpe_fertility" ->
-      s"""WITH ${duckBpe(6)},
-         |sw AS (SELECT source, tok AS w, count(*) AS f FROM (
-         |  SELECT source, unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok FROM documents) t
-         |  WHERE tok <> '' GROUP BY source, tok)
-         |SELECT sw.source, CAST(sum(sw.f) AS BIGINT) AS n_words,
-         |  CAST(sum(sw.f * len(string_split(k.sym, ' '))) AS BIGINT) AS n_symbols
-         |FROM sw JOIN bpe6 k ON sw.w = k.w GROUP BY sw.source ORDER BY source""".stripMargin,
-
-    // encode twin: frequency-ranked symbol ids over the fitted vocab,
-    // per-word segmentation join, ids ordered by (word pos, sym pos)
-    // packed-ids twin: the encode CTEs + global offsets + window chop
-    "pack_token_ids" ->
-      s"""WITH ${duckBpe(6)},
-         |sc AS (SELECT s AS symbol, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-         |  SELECT unnest(string_split(sym, ' ')) AS s, freq FROM bpe6) z GROUP BY s),
-         |svocab AS (SELECT symbol, row_number() OVER (ORDER BY cnt DESC, symbol) - 1 AS id FROM sc),
-         |tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
-         |wpos AS (SELECT doc_id, unnest(generate_series(1, len(t))) AS wp, t FROM tok),
-         |words AS (SELECT doc_id, wp, t[wp] AS w FROM wpos WHERE t[wp] <> ''),
-         |enc AS (SELECT doc_id, wp, string_split(k.sym, ' ') AS syms FROM words JOIN bpe6 k USING (w)),
-         |spos AS (SELECT doc_id, wp, unnest(generate_series(1, len(syms))) AS sp, syms FROM enc),
-         |symrows AS (SELECT doc_id, wp, sp, syms[sp] AS symbol FROM spos),
-         |ids AS (SELECT s.doc_id, v.id,
-         |    row_number() OVER (PARTITION BY s.doc_id ORDER BY s.wp, s.sp) - 1 AS tp
-         |  FROM symrows s JOIN svocab v USING (symbol)),
-         |lens AS (SELECT doc_id, count(*) AS n FROM ids GROUP BY 1),
-         |starts AS (SELECT d.doc_id, d.source,
-         |    sum(l.n) OVER (PARTITION BY d.source ORDER BY d.doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - l.n AS doc_start
-         |  FROM documents d JOIN lens l USING (doc_id)),
-         |g AS (SELECT st.source, i.doc_id, i.id, st.doc_start + i.tp AS gpos
-         |  FROM ids i JOIN starts st USING (doc_id))
-         |SELECT source, CAST(gpos // 256 AS BIGINT) AS win, COUNT(*) AS n_ids,
-         |  array_to_string(list(CAST(id AS VARCHAR) ORDER BY gpos), ',') AS ids_csv
-         |FROM g GROUP BY 1, 2 ORDER BY source, win""".stripMargin,
-
-    "vocab_bpe_encode" ->
-      s"""WITH ${duckBpe(6)},
-         |sc AS (SELECT s AS symbol, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-         |  SELECT unnest(string_split(sym, ' ')) AS s, freq FROM bpe6) z GROUP BY s),
-         |svocab AS (SELECT symbol, row_number() OVER (ORDER BY cnt DESC, symbol) - 1 AS id FROM sc),
-         |tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
-         |wpos AS (SELECT doc_id, unnest(generate_series(1, len(t))) AS wp, t FROM tok),
-         |words AS (SELECT doc_id, wp, t[wp] AS w FROM wpos WHERE t[wp] <> ''),
-         |enc AS (SELECT doc_id, wp, string_split(k.sym, ' ') AS syms FROM words JOIN bpe6 k USING (w)),
-         |spos AS (SELECT doc_id, wp, unnest(generate_series(1, len(syms))) AS sp, syms FROM enc),
-         |symrows AS (SELECT doc_id, wp, sp, syms[sp] AS symbol FROM spos)
-         |SELECT s.doc_id, count(*) AS n_ids,
-         |  array_to_string(list(CAST(v.id AS VARCHAR) ORDER BY s.wp, s.sp), ',') AS ids_csv
-         |FROM symrows s JOIN svocab v USING (symbol) GROUP BY s.doc_id ORDER BY s.doc_id""".stripMargin,
-
-    // substring-span twin: same windows, keeper = rn 1 over
-    // (doc_id, start) ≡ Spark's min(struct), reassembly by position
-    "dedup_substring_spans" ->
-      s"""WITH tok0 AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |tok AS (SELECT doc_id, pos - 1 AS pos, t[pos] AS tok
-        |        FROM (SELECT doc_id, t, unnest(generate_series(1, len(t))) AS pos FROM tok0) z),
-        |win AS (SELECT doc_id, start - 1 AS start, array_to_string(t[start:start+9], ' ') AS gram
-        |        FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 9)) AS start
-        |              FROM tok0 WHERE len(t) >= 10) z),
-        |marked AS (SELECT doc_id, start FROM (
-        |    SELECT doc_id, start,
-        |      row_number() OVER (PARTITION BY gram ORDER BY doc_id, start) AS rn,
-        |      count(*) OVER (PARTITION BY gram) AS cnt
-        |    FROM win) x WHERE rn > 1 AND cnt <= ${Dedup.DefaultDfCap}),
-        |covered AS (SELECT DISTINCT doc_id, pos FROM (
-        |    SELECT doc_id, unnest(generate_series(start, start + 9)) AS pos FROM marked) y),
-        |kept AS (SELECT t.doc_id, t.pos, t.tok
-        |         FROM tok t LEFT JOIN covered c ON t.doc_id = c.doc_id AND t.pos = c.pos
-        |         WHERE c.pos IS NULL),
-        |reb AS (SELECT doc_id, count(*) AS n_kept,
-        |          array_to_string(list(tok ORDER BY pos), ' ') AS cleaned
-        |        FROM kept GROUP BY 1)
-        |SELECT d.doc_id, CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens,
-        |  CAST(coalesce(r.n_kept, 0) AS BIGINT) AS n_kept,
-        |  coalesce(r.cleaned, '') AS cleaned
-        |FROM documents d LEFT JOIN reb r ON d.doc_id = r.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // self-span twin: identical span machinery with the window keyed
-    // by (doc_id, gram) — repeats never cross documents
-    "dedup_self_spans" ->
-      s"""WITH tok0 AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |tok AS (SELECT doc_id, pos - 1 AS pos, t[pos] AS tok
-        |        FROM (SELECT doc_id, t, unnest(generate_series(1, len(t))) AS pos FROM tok0) z),
-        |win AS (SELECT doc_id, start - 1 AS start, array_to_string(t[start:start+2], ' ') AS gram
-        |        FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 2)) AS start
-        |              FROM tok0 WHERE len(t) >= 3) z),
-        |marked AS (SELECT doc_id, start FROM (
-        |    SELECT doc_id, start,
-        |      row_number() OVER (PARTITION BY doc_id, gram ORDER BY start) AS rn
-        |    FROM win) x WHERE rn > 1),
-        |covered AS (SELECT DISTINCT doc_id, pos FROM (
-        |    SELECT doc_id, unnest(generate_series(start, start + 2)) AS pos FROM marked) y),
-        |kept AS (SELECT t.doc_id, t.pos, t.tok
-        |         FROM tok t LEFT JOIN covered c ON t.doc_id = c.doc_id AND t.pos = c.pos
-        |         WHERE c.pos IS NULL),
-        |reb AS (SELECT doc_id, count(*) AS n_kept,
-        |          array_to_string(list(tok ORDER BY pos), ' ') AS cleaned
-        |        FROM kept GROUP BY 1)
-        |SELECT d.doc_id, CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens,
-        |  CAST(coalesce(r.n_kept, 0) AS BIGINT) AS n_kept,
-        |  coalesce(r.cleaned, '') AS cleaned
-        |FROM documents d LEFT JOIN reb r ON d.doc_id = r.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // tf-idf twin: tf·1e6//df integer ranking, lexicographic tie-break
-    "text_tfidf_topk" ->
-      """WITH tf AS (
-        |  SELECT doc_id, term, count(*) AS tf
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents) t
-        |  GROUP BY 1, 2),
-        |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
-        |    CAST(tf.tf * 1000000 // dfreq.df AS BIGINT) AS score_milli
-        |  FROM tf JOIN dfreq ON tf.term = dfreq.term),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY doc_id
-        |             ORDER BY score_milli DESC, term ASC) AS rank
-        |  FROM scored)
-        |SELECT doc_id, CAST(rank AS BIGINT) AS rank, term,
-        |  CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df, score_milli
-        |FROM ranked WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-
-    // mixture twin: same FNV ppm hash, same integer-division order
-    // (t_total*pct//100*w//W*1e6//t_s), HUGEINT fold % 1e6 = unsigned mod
-    "mix_curriculum" ->
-      """WITH toks AS (
-        |  SELECT source, doc_id,
-        |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens,
-        |    CAST(list_reduce(
-        |      list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |        list_transform(range(1, length(k) + 1),
-        |          i -> ascii(substr(k, CAST(i AS INTEGER), 1)))),
-        |      (acc, b) -> (xor(acc, CAST(b AS HUGEINT)) * 1099511628211) % 18446744073709551616
-        |    ) % 1000000 AS BIGINT) AS ppm
-        |  FROM (SELECT source, doc_id, text, 'doc_' || CAST(doc_id AS VARCHAR) AS k FROM documents) t),
-        |s AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS t_s,
-        |        CASE WHEN length(source) = 4 THEN 3 ELSE 1 END AS w_s
-        |      FROM toks GROUP BY 1),
-        |g AS (SELECT CAST(sum(t_s) AS BIGINT) AS t_total, CAST(sum(w_s) AS BIGINT) AS w_total FROM s),
-        |r AS (SELECT source,
-        |        CASE WHEN t_total * 60 // 100 * w_s // w_total >= t_s THEN 1000000
-        |             ELSE t_total * 60 // 100 * w_s // w_total * 1000000 // t_s
-        |        END AS threshold_ppm
-        |      FROM s CROSS JOIN g)
-        |SELECT t.source, r.threshold_ppm, count(*) AS n_total,
-        |  CAST(sum(CASE WHEN ppm < threshold_ppm THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |  CAST(sum(CASE WHEN ppm < threshold_ppm THEN n_tokens ELSE 0 END) AS BIGINT) AS kept_tokens
-        |FROM toks t JOIN r ON t.source = r.source
-        |GROUP BY 1, 2 ORDER BY t.source""".stripMargin,
-
-    "sample_stratified" ->
-      """WITH keyed AS (
-        |  SELECT source,
-        |    CAST(list_reduce(
-        |      list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |        list_transform(range(1, length(k) + 1),
-        |          i -> ascii(substr(k, CAST(i AS INTEGER), 1)))),
-        |      (acc, b) -> (xor(acc, CAST(b AS HUGEINT)) * 1099511628211) % 18446744073709551616
-        |    ) % 100 AS BIGINT) AS bucket,
-        |    CASE WHEN length(source) = 4 THEN 70 ELSE 30 END AS rate
-        |  FROM (SELECT source, 'doc_' || CAST(doc_id AS VARCHAR) AS k FROM documents) t)
-        |SELECT source, count(*) AS n_total,
-        |  CAST(sum(CASE WHEN bucket < rate THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-        |FROM keyed GROUP BY source ORDER BY source""".stripMargin,
-
-    "pack_shards" ->
-      """WITH t AS (SELECT source, doc_id,
-        |             len(string_split_regex(trim(text), '\s+')) AS n_tokens
-        |           FROM documents),
-        |c AS (SELECT source, doc_id, n_tokens,
-        |        sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens AS start_tok
-        |      FROM t)
-        |SELECT source, CAST(start_tok // 512 AS BIGINT) AS shard,
-        |  count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS shard_tokens
-        |FROM c GROUP BY 1, 2 ORDER BY source, shard""".stripMargin,
-
-    // token-level chop: same running-offset CTE, then each doc unnests
-    // over its window-id range with slice arithmetic
-    "pack_windows" ->
-      """WITH t AS (SELECT source, doc_id,
-        |             len(string_split_regex(trim(text), '\s+')) AS nt
-        |           FROM documents),
-        |c AS (SELECT source, doc_id, nt,
-        |        CAST(sum(nt) OVER (PARTITION BY source ORDER BY doc_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - nt
-        |        AS BIGINT) AS s
-        |      FROM t WHERE nt > 0),
-        |e AS (SELECT source, doc_id, s, s + nt AS e FROM c),
-        |x AS (SELECT source, doc_id, s, e,
-        |        unnest(range(s // 256, (e - 1) // 256 + 1)) AS win FROM e)
-        |SELECT source, CAST(win AS BIGINT) AS win, doc_id,
-        |  CAST(greatest(s, win * 256) - s AS BIGINT) AS doc_from,
-        |  CAST(least(e, (win + 1) * 256) - greatest(s, win * 256) AS BIGINT)
-        |    AS slice_len,
-        |  CAST(greatest(s, win * 256) - win * 256 AS BIGINT) AS win_off
-        |FROM x ORDER BY source, win, doc_id""".stripMargin,
-
-    // efficiency twin: same whitespace token counts, three strategy
-    // arms unioned, ceil-div as (n + w - 1) // w
-    "pack_efficiency" ->
-      """WITH nt AS (SELECT source,
-        |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS nt
-        |  FROM documents
-        |  WHERE len(string_split_regex(trim(text), '\s+')) > 0),
-        |ws AS (SELECT unnest([64, 128, 256, 512]) AS w),
-        |pd AS (SELECT w, 'pad_doc' AS strategy,
-        |    CAST(sum((nt + w - 1) // w) AS BIGINT) AS n_sequences,
-        |    CAST(sum(nt) AS BIGINT) AS content_tokens,
-        |    CAST(sum(((nt + w - 1) // w) * w - nt) AS BIGINT) AS padding_tokens,
-        |    CAST(0 AS BIGINT) AS truncated_tokens
-        |  FROM nt CROSS JOIN ws GROUP BY w),
-        |cl AS (SELECT w, 'clip' AS strategy,
-        |    CAST(count(*) AS BIGINT) AS n_sequences,
-        |    CAST(sum(least(nt, w)) AS BIGINT) AS content_tokens,
-        |    CAST(sum(greatest(0, w - nt)) AS BIGINT) AS padding_tokens,
-        |    CAST(sum(greatest(0, nt - w)) AS BIGINT) AS truncated_tokens
-        |  FROM nt CROSS JOIN ws GROUP BY w),
-        |gt AS (SELECT source, CAST(sum(nt) AS BIGINT) AS gtv FROM nt GROUP BY source),
-        |ch AS (SELECT w, 'chop' AS strategy,
-        |    CAST(sum((gtv + w - 1) // w) AS BIGINT) AS n_sequences,
-        |    CAST(sum(gtv) AS BIGINT) AS content_tokens,
-        |    CAST(sum(((gtv + w - 1) // w) * w - gtv) AS BIGINT) AS padding_tokens,
-        |    CAST(0 AS BIGINT) AS truncated_tokens
-        |  FROM gt CROSS JOIN ws GROUP BY w),
-        |u AS (SELECT * FROM pd UNION ALL SELECT * FROM cl UNION ALL SELECT * FROM ch)
-        |SELECT CAST(w AS BIGINT) AS window_tokens, strategy, n_sequences,
-        |  content_tokens, padding_tokens, truncated_tokens,
-        |  CAST(content_tokens * 1000000 // (n_sequences * w) AS BIGINT) AS efficiency_ppm
-        |FROM u ORDER BY window_tokens, strategy""".stripMargin,
-
-    // jsonl twin: identical line synthesis; corruption = try_cast NULL
-    // or missing lang — the same verdict the Spark side anchors on lang
-    "ingest_jsonl" ->
-      """WITH raw AS (
-        |  SELECT doc_id AS line_no, doc_id % 8 AS shard,
-        |    '{"id": ' || CAST(doc_id AS VARCHAR) || ', "lang": "' || lang ||
-        |      '", "nc": ' || CAST(n_chars AS VARCHAR) || '}' AS fl
-        |  FROM documents),
-        |lines AS (SELECT line_no, shard,
-        |    CASE WHEN line_no % 7 = 3 THEN left(fl, 10) ELSE fl END AS line
-        |  FROM raw),
-        |p AS (SELECT line_no, shard, line, try_cast(line AS JSON) AS j FROM lines),
-        |f AS (SELECT *,
-        |    (j IS NULL OR json_extract_string(j, '$.lang') IS NULL) AS is_corrupt
-        |  FROM p)
-        |SELECT line_no, shard,
-        |  CASE WHEN is_corrupt THEN NULL
-        |       ELSE CAST(json_extract(j, '$.id') AS BIGINT) END AS id,
-        |  CASE WHEN is_corrupt THEN NULL
-        |       ELSE json_extract_string(j, '$.lang') END AS lang,
-        |  CASE WHEN is_corrupt THEN NULL
-        |       ELSE CAST(json_extract(j, '$.nc') AS BIGINT) END AS nc,
-        |  is_corrupt,
-        |  CASE WHEN is_corrupt THEN line END AS quarantine_raw
-        |FROM f ORDER BY line_no""".stripMargin,
-
-    "ingest_quarantine" ->
-      """WITH raw AS (
-        |  SELECT doc_id, doc_id % 8 AS shard,
-        |    '{"id": ' || CAST(doc_id AS VARCHAR) || ', "lang": "' || lang ||
-        |      '", "nc": ' || CAST(n_chars AS VARCHAR) || '}' AS fl
-        |  FROM documents),
-        |lines AS (SELECT shard,
-        |    CASE WHEN doc_id % 7 = 3 THEN left(fl, 10) ELSE fl END AS line
-        |  FROM raw),
-        |f AS (SELECT shard,
-        |    (try_cast(line AS JSON) IS NULL OR
-        |     json_extract_string(try_cast(line AS JSON), '$.lang') IS NULL)
-        |      AS is_corrupt
-        |  FROM lines)
-        |SELECT shard, COUNT(*) AS n_lines,
-        |  CAST(SUM(CASE WHEN is_corrupt THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupt
-        |FROM f GROUP BY shard ORDER BY shard""".stripMargin,
-
-    // URL normalization mirrored step by step: parse with the same RE2
-    // regexes, strip default port / trailing dot / fragment, drop
-    // tracking params, byte-sort survivors
-    "web_url_dedup" ->
-      s"""WITH b AS (SELECT doc_id, $synthHostSql AS hb FROM documents),
-         |u AS (SELECT doc_id, $synthUrlSql AS url FROM b),
-         |p AS (SELECT doc_id,
-         |  lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://.*$$', 1)) AS scheme,
-         |  lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*).*$$', 1)) AS auth,
-         |  regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*).*$$', 1) AS path0,
-         |  regexp_extract(url, '^[^?#]*\\?([^#]*).*$$', 1) AS q FROM u),
-         |n AS (SELECT doc_id, scheme,
-         |  regexp_replace(regexp_replace(auth, ':[0-9]+$$', ''), '\\.$$', '') AS hostc,
-         |  regexp_extract(auth, ':([0-9]+)$$', 1) AS port,
-         |  CASE WHEN path0 = '' THEN '/' ELSE path0 END AS path,
-         |  list_sort(list_filter(string_split(q, '&'),
-         |    x -> strlen(x) > 0 AND NOT starts_with(string_split(x, '=')[1], 'utm_')
-         |         AND NOT list_contains(['fbclid','gclid','msclkid','mc_cid','mc_eid','ref'],
-         |                               string_split(x, '=')[1]))) AS kept FROM p),
-         |k AS (SELECT doc_id, scheme || '://' ||
-         |  (CASE WHEN port = '' OR (scheme = 'http' AND port = '80')
-         |         OR (scheme = 'https' AND port = '443')
-         |        THEN hostc ELSE hostc || ':' || port END) || path ||
-         |  (CASE WHEN len(kept) > 0 THEN '?' || array_to_string(kept, '&')
-         |        ELSE '' END) AS url_norm FROM n)
-         |SELECT url_norm, count(*) AS n_docs, min(doc_id) AS keeper
-         |FROM k GROUP BY url_norm ORDER BY url_norm""".stripMargin,
-
-    // joint-dedup twin: minhash pairs ∪ URL star edges → recursive CC
-    "web_joint_dedup" -> (minhashPairCtes +
-      s""",
-         |b AS (SELECT doc_id, $synthHostSql AS hb FROM documents),
-         |u AS (SELECT doc_id, $synthUrlSql AS url FROM b),
-         |p AS (SELECT doc_id,
-         |  lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://.*$$', 1)) AS scheme,
-         |  lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*).*$$', 1)) AS auth,
-         |  regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*).*$$', 1) AS path0,
-         |  regexp_extract(url, '^[^?#]*\\?([^#]*).*$$', 1) AS q FROM u),
-         |n AS (SELECT doc_id, scheme,
-         |  regexp_replace(regexp_replace(auth, ':[0-9]+$$', ''), '\\.$$', '') AS hostc,
-         |  regexp_extract(auth, ':([0-9]+)$$', 1) AS port,
-         |  CASE WHEN path0 = '' THEN '/' ELSE path0 END AS path,
-         |  list_sort(list_filter(string_split(q, '&'),
-         |    x -> strlen(x) > 0 AND NOT starts_with(string_split(x, '=')[1], 'utm_')
-         |         AND NOT list_contains(['fbclid','gclid','msclkid','mc_cid','mc_eid','ref'],
-         |                               string_split(x, '=')[1]))) AS kept FROM p),
-         |k AS (SELECT doc_id, scheme || '://' ||
-         |  (CASE WHEN port = '' OR (scheme = 'http' AND port = '80')
-         |         OR (scheme = 'https' AND port = '443')
-         |        THEN hostc ELSE hostc || ':' || port END) || path ||
-         |  (CASE WHEN len(kept) > 0 THEN '?' || array_to_string(kept, '&')
-         |        ELSE '' END) AS url_norm FROM n),
-         |ka AS (SELECT url_norm, MIN(doc_id) AS m FROM k GROUP BY 1),
-         |urlp AS (SELECT ka.m AS doc_a, k.doc_id AS doc_b
-         |         FROM k JOIN ka USING (url_norm) WHERE k.doc_id > ka.m),
-         |alle AS (SELECT doc_a, doc_b FROM pairs UNION SELECT doc_a, doc_b FROM urlp),
-         |edges AS (SELECT doc_a AS a, doc_b AS b FROM alle
-         |          UNION SELECT doc_b, doc_a FROM alle),
-         |cc AS (SELECT a AS doc, a AS label FROM edges
-         |       UNION SELECT e.a, cc.label FROM cc JOIN edges e ON cc.doc = e.b)
-         |SELECT doc AS doc_id, CAST(MIN(label) AS BIGINT) AS cluster_id,
-         |  MIN(label) = doc AS keep
-         |FROM cc GROUP BY doc ORDER BY doc_id""".stripMargin),
-
-    // pagerank twin: the identical integer iterations, unrolled
-    // triangles twin: same synthetic 3-out-link graph, same degree-
-    // ordered orientation, wedge join + closure semi-join
-    "graph_triangles" ->
-      """WITH nn AS (SELECT max(doc_id) + 1 AS n FROM documents),
-        |e AS (SELECT DISTINCT src, dst FROM (
-        |    SELECT doc_id AS src, (doc_id+1) % n AS dst FROM documents CROSS JOIN nn
-        |    UNION ALL SELECT doc_id, (doc_id+2) % n FROM documents CROSS JOIN nn
-        |    UNION ALL SELECT doc_id, (doc_id*31+7) % n FROM documents CROSS JOIN nn)
-        |  WHERE src <> dst),
-        |und AS (SELECT src AS u, dst AS v FROM e UNION SELECT dst, src FROM e),
-        |deg AS (SELECT u AS nd, count(*) AS d FROM und GROUP BY u),
-        |ori AS (SELECT und.u AS a, und.v AS b
-        |  FROM und JOIN deg du ON und.u = du.nd JOIN deg dv ON und.v = dv.nd
-        |  WHERE du.d < dv.d OR (du.d = dv.d AND und.u < und.v)),
-        |w AS (SELECT e1.a, e1.b, e2.b AS c FROM ori e1 JOIN ori e2 ON e1.b = e2.a),
-        |t AS (SELECT w.a, w.b, w.c FROM w
-        |      WHERE EXISTS (SELECT 1 FROM ori o WHERE o.a = w.a AND o.b = w.c)),
-        |x AS (SELECT unnest([a, b, c]) AS node FROM t)
-        |SELECT node, COUNT(*) AS n_triangles FROM x GROUP BY node ORDER BY node""".stripMargin,
-
-    // redirect twin: the closed form of the synthetic forest — chain
-    // length and terminal are analytic, so the hash match proves the
-    // doubling, not a second implementation of it
-    "web_redirect_resolve" ->
-      """SELECT doc_id AS src, doc_id - (doc_id % 7) AS final_dst,
-        |  CAST(doc_id % 7 AS BIGINT) AS hops
-        |FROM documents WHERE doc_id % 7 <> 0 ORDER BY src""".stripMargin,
-
-    // Benford twin: identical first-digit-of-decimal-string derivation,
-    // the shared Scala expectation literals
-    "profile_benford" -> {
-      val expectedCase = "CASE g.digit " + ops.Profile.BenfordExpectedPpm.map {
-        case (d, e) => s"WHEN $d THEN $e"
-      }.mkString(" ") + " END"
-      s"""WITH v AS (SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events),
-         |p AS (SELECT cents FROM v WHERE cents > 0),
-         |d AS (SELECT CAST(substr(CAST(cents AS VARCHAR), 1, 1) AS INT) AS digit FROM p),
-         |c AS (SELECT digit, COUNT(*) AS n_obs FROM d GROUP BY 1),
-         |t AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS tt FROM c),
-         |g AS (SELECT CAST(unnest(range(1, 10)) AS INT) AS digit)
-         |SELECT g.digit, CAST(COALESCE(c.n_obs, 0) AS BIGINT) AS n_obs,
-         |  (CAST(COALESCE(c.n_obs, 0) AS BIGINT) * 1000000) // t.tt AS obs_ppm,
-         |  CAST($expectedCase AS BIGINT) AS expected_ppm
-         |FROM g LEFT JOIN c USING (digit) CROSS JOIN t
-         |ORDER BY g.digit""".stripMargin
-    },
-
-    // HITS twin: same synthetic edges, unrolled auth-then-hub rounds,
-    // max-renormalization by integer division per half-step
-    "web_hits" -> {
-      val iterCtes = (1 to 3).map { i =>
-        val ph = if (i == 1) "h0" else s"h${i - 1}"
-        s"""ar$i AS (SELECT e.dst AS node, SUM(h.hub) AS raw
-           |  FROM e JOIN $ph h ON h.node = e.src GROUP BY 1),
-           |am$i AS (SELECT max(raw) AS m FROM ar$i),
-           |a$i AS (SELECT n.node,
-           |    CAST(COALESCE((r.raw * 1000000) // mm.m, 0) AS BIGINT) AS auth
-           |  FROM nodes n LEFT JOIN ar$i r ON n.node = r.node CROSS JOIN am$i mm),
-           |hr$i AS (SELECT e.src AS node, SUM(a.auth) AS raw
-           |  FROM e JOIN a$i a ON a.node = e.dst GROUP BY 1),
-           |hm$i AS (SELECT max(raw) AS m FROM hr$i),
-           |h$i AS (SELECT n.node,
-           |    CAST(COALESCE((r.raw * 1000000) // mm.m, 0) AS BIGINT) AS hub
-           |  FROM nodes n LEFT JOIN hr$i r ON n.node = r.node CROSS JOIN hm$i mm)"""
-          .stripMargin
-      }.mkString(",\n")
-      s"""WITH nn AS (SELECT max(doc_id) + 1 AS n FROM documents),
-         |e AS (SELECT DISTINCT src, dst FROM (
-         |    SELECT doc_id AS src, (doc_id*31+7) % n AS dst FROM documents CROSS JOIN nn
-         |    UNION ALL SELECT doc_id, (doc_id*17+3) % n FROM documents CROSS JOIN nn
-         |    UNION ALL SELECT doc_id, (doc_id*13+11) % n FROM documents CROSS JOIN nn)
-         |  WHERE src <> dst),
-         |nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-         |h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS hub FROM nodes),
-         |$iterCtes
-         |SELECT h3.node AS doc_id, h3.hub, a3.auth
-         |FROM h3 JOIN a3 ON h3.node = a3.node ORDER BY doc_id""".stripMargin
-    },
-
-    "web_pagerank" -> {
-      val iterCtes = (1 to 5).map { i =>
-        val prev = if (i == 1) "r0" else s"r${i - 1}"
-        s"""r$i AS (SELECT n.node,
-           |    CAST(150000 + (85 * COALESCE(c.s, 0)) // 100 AS BIGINT) AS rank
-           |  FROM nodes n LEFT JOIN (
-           |    SELECT e.dst AS node, SUM(r.rank // o.outdeg) AS s
-           |    FROM e JOIN outd o ON e.src = o.src JOIN $prev r ON r.node = e.src
-           |    GROUP BY e.dst) c ON n.node = c.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH nn AS (SELECT max(doc_id) + 1 AS n FROM documents),
-         |e AS (SELECT DISTINCT src, dst FROM (
-         |    SELECT doc_id AS src, (doc_id*31+7) % n AS dst FROM documents CROSS JOIN nn
-         |    UNION ALL SELECT doc_id, (doc_id*17+3) % n FROM documents CROSS JOIN nn
-         |    UNION ALL SELECT doc_id, (doc_id*13+11) % n FROM documents CROSS JOIN nn)
-         |  WHERE src <> dst),
-         |outd AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
-         |nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-         |r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank FROM nodes),
-         |$iterCtes
-         |SELECT node AS doc_id, rank FROM r5 ORDER BY doc_id""".stripMargin
-    },
-
-    "web_domain_stats" ->
-      s"""WITH b AS (SELECT doc_id, text, $synthHostSql AS hb FROM documents),
-         |u AS (SELECT doc_id, text, $synthUrlSql AS url FROM b),
-         |h AS (SELECT doc_id, text,
-         |  regexp_replace(regexp_replace(
-         |    lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*).*$$', 1)),
-         |    ':[0-9]+$$', ''), '\\.$$', '') AS host FROM u),
-         |d AS (SELECT doc_id, text, host, string_split(host, '.') AS ls,
-         |             len(string_split(host, '.')) AS nl FROM h),
-         |r AS (SELECT doc_id, text,
-         |  CASE WHEN nl <= 2 THEN host
-         |       WHEN strlen(ls[nl]) = 2 AND list_contains(
-         |              ['co','com','net','org','gov','ac','edu'], ls[nl-1])
-         |       THEN ls[nl-2] || '.' || ls[nl-1] || '.' || ls[nl]
-         |       ELSE ls[nl-1] || '.' || ls[nl] END AS domain FROM d)
-         |SELECT domain, count(*) AS n_docs,
-         |  CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT)
-         |    AS n_tokens
-         |FROM r GROUP BY domain ORDER BY domain""".stripMargin,
-
-    "web_domain_filter" ->
-      s"""WITH b AS (SELECT doc_id, source, $synthHostSql AS hb FROM documents),
-         |u AS (SELECT doc_id, source, $synthUrlSql AS url FROM b),
-         |h AS (SELECT doc_id, source,
-         |  regexp_replace(regexp_replace(
-         |    lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*).*$$', 1)),
-         |    ':[0-9]+$$', ''), '\\.$$', '') AS host FROM u),
-         |d AS (SELECT doc_id, source, host, string_split(host, '.') AS ls,
-         |             len(string_split(host, '.')) AS nl FROM h),
-         |r AS (SELECT doc_id, source,
-         |  CASE WHEN nl <= 2 THEN host
-         |       WHEN strlen(ls[nl]) = 2 AND list_contains(
-         |              ['co','com','net','org','gov','ac','edu'], ls[nl-1])
-         |       THEN ls[nl-2] || '.' || ls[nl-1] || '.' || ls[nl]
-         |       ELSE ls[nl-1] || '.' || ls[nl] END AS domain FROM d)
-         |SELECT source, count(*) AS n_kept FROM r
-         |WHERE domain NOT IN ('site7.com', 'site13.com', 'site0.co.uk')
-         |GROUP BY source ORDER BY source""".stripMargin,
-
-    "web_domain_cap" ->
-      s"""WITH b AS (SELECT doc_id, n_chars, $synthHostSql AS hb FROM documents),
-         |u AS (SELECT doc_id, n_chars, $synthUrlSql AS url FROM b),
-         |h AS (SELECT doc_id, n_chars,
-         |  regexp_replace(regexp_replace(
-         |    lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*).*$$', 1)),
-         |    ':[0-9]+$$', ''), '\\.$$', '') AS host FROM u),
-         |d AS (SELECT doc_id, n_chars, host, string_split(host, '.') AS ls,
-         |             len(string_split(host, '.')) AS nl FROM h),
-         |r AS (SELECT doc_id, n_chars,
-         |  CASE WHEN nl <= 2 THEN host
-         |       WHEN strlen(ls[nl]) = 2 AND list_contains(
-         |              ['co','com','net','org','gov','ac','edu'], ls[nl-1])
-         |       THEN ls[nl-2] || '.' || ls[nl-1] || '.' || ls[nl]
-         |       ELSE ls[nl-1] || '.' || ls[nl] END AS domain FROM d),
-         |k AS (SELECT domain, doc_id, n_chars, row_number() OVER (
-         |        PARTITION BY domain ORDER BY n_chars DESC, doc_id) AS rk
-         |      FROM r)
-         |SELECT domain, doc_id, n_chars FROM k WHERE rk <= 5
-         |ORDER BY domain, doc_id""".stripMargin,
-
-    // concat twin: pack_shards' window math + per-doc char offsets
-    // (Σ previous len+eosLen inside the shard) + ordered string_agg
-    "pack_concat" ->
-      """WITH t AS (SELECT source, doc_id, text,
-        |             len(string_split_regex(trim(text), '\s+')) AS n_tokens
-        |           FROM documents),
-        |c AS (SELECT source, doc_id, text, n_tokens,
-        |        sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens AS start_tok
-        |      FROM t),
-        |sh AS (SELECT source, doc_id, text, n_tokens,
-        |         CAST(start_tok // 512 AS BIGINT) AS shard FROM c),
-        |o AS (SELECT source, shard, doc_id, text, n_tokens,
-        |        coalesce(sum(strlen(text) + 7) OVER (PARTITION BY source, shard
-        |          ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-        |      FROM sh)
-        |SELECT source, shard, count(*) AS n_docs,
-        |  CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
-        |  string_agg(text, '<|eos|>' ORDER BY doc_id) AS blob,
-        |  string_agg(CAST(off AS VARCHAR), ',' ORDER BY doc_id) AS offsets_csv
-        |FROM o GROUP BY 1, 2 ORDER BY source, shard""".stripMargin,
-
-    // manifest twin: size + sha256 over the identical blobs
-    "pack_manifest" ->
-      """WITH t AS (SELECT source, doc_id, text,
-        |             len(string_split_regex(trim(text), '\s+')) AS n_tokens
-        |           FROM documents),
-        |c AS (SELECT source, doc_id, text, n_tokens,
-        |        sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens AS start_tok
-        |      FROM t),
-        |sh AS (SELECT source, doc_id, text, n_tokens,
-        |         CAST(start_tok // 512 AS BIGINT) AS shard FROM c),
-        |b AS (SELECT source, shard, count(*) AS n_docs,
-        |        CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
-        |        string_agg(text, '<|eos|>' ORDER BY doc_id) AS blob
-        |      FROM sh GROUP BY 1, 2)
-        |SELECT source, shard, n_docs, shard_tokens,
-        |  CAST(strlen(blob) AS BIGINT) AS blob_bytes, sha256(blob) AS sha256
-        |FROM b ORDER BY source, shard""".stripMargin,
-
-    "dedup_exact" ->
-      """SELECT md5(text) AS text_hash, MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
-        |FROM documents GROUP BY md5(text) ORDER BY text_hash""".stripMargin,
-
-    // MinHash-LSH twin: FNV-64a per shingle (HUGEINT fold, two's-
-    // complement → signed → pmod P), the same LCG-derived affine family
-    // (exact HUGEINT arithmetic & 0x7fffffff reproduces Scala's wrapped
-    // i64 low bits — truncation to 64 bits never changes low-31 bits),
-    // per-band min-tuple keys, bucket self-join
-    "dedup_minhash_lsh" ->
-      minhashPairsSql("tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents)"),
-
-    // paragraph-granularity twin: identical MinHash+LSH tail over
-    // 16-token chunk units re-keyed as doc_id*1000+chunk_no (same
-    // windows as TextAnalysis.chunk width=16 overlap=0)
-    "dedup_paragraph_minhash" ->
-      minhashPairsSql(
-        """tok0 AS (SELECT doc_id, string_split(text, ' ') AS t0 FROM documents),
-          |st AS (SELECT doc_id, t0,
-          |         unnest(range(1, greatest(len(t0), 1) + 1, 16)) AS start
-          |       FROM tok0),
-          |tok AS (SELECT doc_id * 1000 + (start - 1) // 16 AS doc_id,
-          |          list_slice(t0, start, start + 15) AS t
-          |        FROM st)""".stripMargin),
-
-
-    // full 64-bit SimHash twin: FNV-64a per token as a HUGEINT fold
-    // (ascii-per-char = utf-8 bytes on this corpus), term-frequency bit
-    // votes, signature rebuilt from HUGEINT powers then two's-complement
-    // converted to the signed BIGINT Spark emits
-    "dedup_simhash" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-        |h AS (SELECT doc_id,
-        |        list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |          list_transform(range(1, length(tok) + 1),
-        |            i -> ascii(substr(tok, CAST(i AS INTEGER), 1)))),
-        |          (acc, b) -> (xor(acc, CAST(b AS HUGEINT)) * 1099511628211) % 18446744073709551616) AS hv
-        |      FROM tok),
-        |bits AS (SELECT doc_id, b, sum(CASE WHEN (hv >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-        |         FROM h CROSS JOIN (SELECT unnest(range(0, 64)) AS b) bb
-        |         GROUP BY doc_id, b),
-        |sig AS (SELECT doc_id,
-        |          sum(CASE WHEN s > 0 THEN CAST(1 AS HUGEINT) << b ELSE CAST(0 AS HUGEINT) END) AS v
-        |        FROM bits GROUP BY doc_id)
-        |SELECT doc_id, CAST(CASE WHEN v >= CAST(9223372036854775808 AS HUGEINT)
-        |                         THEN v - CAST(18446744073709551616 AS HUGEINT)
-        |                         ELSE v END AS BIGINT) AS simhash
-        |FROM sig ORDER BY doc_id""".stripMargin,
-
-    // novelty twin: identical 3-gram derivation + first-occurrence min
-    "text_ngram_novelty" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT DISTINCT doc_id,
-        |         unnest(list_transform(list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-        |           x -> x[1] || ' ' || x[2] || ' ' || x[3])) AS shingle
-        |       FROM tok WHERE len(t) >= 3),
-        |fd AS (SELECT shingle, MIN(doc_id) AS first_doc FROM sh GROUP BY shingle),
-        |per AS (SELECT s.doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
-        |    CAST(SUM(CASE WHEN f.first_doc = s.doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel
-        |  FROM sh s JOIN fd f USING (shingle) GROUP BY s.doc_id)
-        |SELECT d.doc_id, COALESCE(n_grams, 0) AS n_grams,
-        |  COALESCE(n_novel, 0) AS n_novel,
-        |  CASE WHEN COALESCE(n_grams, 0) > 0
-        |    THEN CAST((n_novel * 1000000) // n_grams AS BIGINT) END AS novelty_ppm
-        |FROM documents d LEFT JOIN per USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-    "dedup_ngram_jaccard" ->
-      s"""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         |sh0 AS (SELECT DISTINCT doc_id,
-         |         unnest(list_transform(list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-         |           x -> x[1] || ' ' || x[2] || ' ' || x[3])) AS shingle
-         |       FROM tok WHERE len(t) >= 3),
-         |sh AS (SELECT doc_id, shingle FROM (
-         |    SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS dfc FROM sh0) zc
-         |  WHERE dfc <= ${Dedup.DefaultDfCap}),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-         |          FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |          GROUP BY a.doc_id, b.doc_id)
-         |SELECT doc_a, doc_b, shared, sa.n AS n_a, sb.n AS n_b
-         |FROM pairs JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-         |WHERE shared * 10 >= 4 * (sa.n + sb.n - shared)
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "dedup_clusters" ->
-      s"""WITH RECURSIVE
-        |tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh0 AS (SELECT DISTINCT doc_id, unnest(list_transform(list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-        |        x -> x[1] || ' ' || x[2] || ' ' || x[3])) AS shingle FROM tok WHERE len(t) >= 3),
-        |sh AS (SELECT doc_id, shingle FROM (
-        |    SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS dfc FROM sh0) zc
-        |  WHERE dfc <= ${Dedup.DefaultDfCap}),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-        |          FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |          GROUP BY a.doc_id, b.doc_id),
-        |near AS (SELECT doc_a, doc_b FROM pairs
-        |         JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-        |         WHERE shared * 10 >= 4 * (sa.n + sb.n - shared)),
-        |edges AS (SELECT doc_a AS a, doc_b AS b FROM near UNION SELECT doc_b, doc_a FROM near),
-        |cc AS (SELECT a AS doc, a AS label FROM edges
-        |       UNION
-        |       SELECT e.a, cc.label FROM cc JOIN edges e ON cc.doc = e.b)
-        |SELECT doc AS doc_id, MIN(label) AS cluster_id FROM cc GROUP BY doc ORDER BY doc_id""".stripMargin,
-
-    // canonical twin: the clusters chain, labels left-joined onto the
-    // whole corpus (singletons label as themselves), keeper = rn 1 over
-    // (n_chars desc, doc_id)
-    "dedup_canonical" ->
-      s"""WITH RECURSIVE
-        |tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh0 AS (SELECT DISTINCT doc_id, unnest(list_transform(list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-        |        x -> x[1] || ' ' || x[2] || ' ' || x[3])) AS shingle FROM tok WHERE len(t) >= 3),
-        |sh AS (SELECT doc_id, shingle FROM (
-        |    SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS dfc FROM sh0) zc
-        |  WHERE dfc <= ${Dedup.DefaultDfCap}),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-        |          FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |          GROUP BY a.doc_id, b.doc_id),
-        |near AS (SELECT doc_a, doc_b FROM pairs
-        |         JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-        |         WHERE shared * 10 >= 4 * (sa.n + sb.n - shared)),
-        |edges AS (SELECT doc_a AS a, doc_b AS b FROM near UNION SELECT doc_b, doc_a FROM near),
-        |cc AS (SELECT a AS doc, a AS label FROM edges
-        |       UNION
-        |       SELECT e.a, cc.label FROM cc JOIN edges e ON cc.doc = e.b),
-        |lab AS (SELECT doc AS doc_id, MIN(label) AS cluster_id FROM cc GROUP BY doc),
-        |full0 AS (SELECT d.doc_id, coalesce(l.cluster_id, d.doc_id) AS cluster_id, d.n_chars
-        |         FROM documents d LEFT JOIN lab l ON d.doc_id = l.doc_id)
-        |SELECT doc_id, cluster_id, n_chars,
-        |  row_number() OVER (PARTITION BY cluster_id ORDER BY n_chars DESC, doc_id) = 1 AS keep
-        |FROM full0 ORDER BY doc_id""".stripMargin,
-
-    "dedup_neardup_embedding" ->
-      s"""WITH e AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS norm FROM embeddings)
-         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |  ${duckDot("a.embedding", "b.embedding")} / (a.norm * b.norm) AS cosine
-         |FROM e a JOIN e b ON a.vec_id < b.vec_id
-         |WHERE cosine >= 0.45 ORDER BY id_a, id_b""".stripMargin,
-
-    // multi-table SRP-LSH twin: per-table sign-bit buckets against the
-    // shared generated hyperplanes (seeds 42..47), candidate union via
-    // (table, bucket) equi-join, exact-cosine recheck — all double math
-    // is the proven sequential-fold parity pattern
-    "ann_lsh_cosine" ->
-      s"""WITH e AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS norm FROM embeddings),
-         |k AS (${(0 until 6).map(t =>
-                  s"SELECT vec_id, $t AS tbl, ${duckLshBucket("embedding", 64, 8, 42L + t)} AS bucket FROM e")
-                  .mkString("\n|      UNION ALL ")}),
-         |cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         |         FROM k a JOIN k b ON a.tbl = b.tbl AND a.bucket = b.bucket
-         |                          AND a.vec_id < b.vec_id)
-         |SELECT id_a, id_b,
-         |  ${duckDot("ea.embedding", "eb.embedding")} / (ea.norm * eb.norm) AS cosine
-         |FROM cand JOIN e ea ON ea.vec_id = id_a JOIN e eb ON eb.vec_id = id_b
-         |WHERE cosine >= 0.3 ORDER BY id_a, id_b""".stripMargin,
-
-    // occupancy-census twin: same generated hyperplanes, per-(table,
-    // bucket) counts, then all-integer per-table aggregates; DuckDB's
-    // SUM(BIGINT) widens to HUGEINT so each sum casts back before the
-    // exact integer halving (c·(c−1) is even)
-    "ann_lsh_occupancy" ->
-      s"""WITH k AS (${(0 until 6).map(t =>
-              s"SELECT CAST($t AS INTEGER) AS tbl, ${duckLshBucket("embedding", 64, 8, 42L + t)} AS bucket FROM embeddings")
-              .mkString("\n|      UNION ALL ")}),
-         |occ AS (SELECT tbl, bucket, count(*) AS occupancy FROM k GROUP BY tbl, bucket)
-         |SELECT tbl, count(*) AS n_buckets, max(occupancy) AS max_occupancy,
-         |  CAST(sum(occupancy) AS BIGINT) AS n_vectors,
-         |  CAST(sum(occupancy * (occupancy - 1)) AS BIGINT) // 2 AS candidate_pairs
-         |FROM occ GROUP BY tbl ORDER BY tbl""".stripMargin,
-
-    // IVF twin: deterministic coarse centroids (lowest-id 16 vectors),
-    // argmax assignment with (sim desc, centroid_id) tie-break, top-4
-    // probe lists per query, exact-cosine rerank inside probed lists —
-    // every double is the sequential-fold parity pattern
-    // fitted-default IVF twin: 2 unrolled exact-mean Lloyd rounds
-    // (duckKmeans), then the proven assign/probe/score CTE shapes
-    // against the FITTED centroids km2
-    "ann_ivf_topk" ->
-      s"""WITH e AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS norm FROM embeddings),
-         |${duckKmeans("e", 16, 64, 2, "km")},
-         |asg AS (SELECT vec_id, centroid_id FROM (
-         |    SELECT e.vec_id, c.centroid_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckDot("e.embedding", "c.centroid")} / (e.norm * c.cnorm) DESC,
-         |                 c.centroid_id) AS rn
-         |    FROM e CROSS JOIN km2 c) t WHERE rn = 1),
-         |q AS (SELECT vec_id AS query_id, embedding AS qe, norm AS qnorm FROM e WHERE vec_id < 10),
-         |pr AS (SELECT query_id, centroid_id FROM (
-         |    SELECT q.query_id, c.centroid_id,
-         |      row_number() OVER (PARTITION BY q.query_id
-         |        ORDER BY ${duckDot("q.qe", "c.centroid")} / (q.qnorm * c.cnorm) DESC,
-         |                 c.centroid_id) AS rn
-         |    FROM q CROSS JOIN km2 c) t WHERE rn <= 4),
-         |scored AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-         |             ${duckDot("q.qe", "e.embedding")} / (q.qnorm * e.norm) AS cosine
-         |           FROM pr JOIN asg ON pr.centroid_id = asg.centroid_id
-         |                JOIN e ON e.vec_id = asg.vec_id
-         |                JOIN q ON q.query_id = pr.query_id
-         |           WHERE q.query_id <> e.vec_id),
-         |ranked AS (SELECT *, row_number() OVER (PARTITION BY query_id
-         |             ORDER BY cosine DESC, neighbor_id) AS rnk FROM scored)
-         |SELECT query_id, neighbor_id, rnk, cosine FROM ranked
-         |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-
-    // recall twin: brute-force top-5 LEFT JOIN the nProbe=2 IVF top-5
-    // (same fitted km2 CTEs as ann_ivf_topk) — hits counted per query
-    "ann_recall_report" ->
-      s"""WITH e AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS norm FROM embeddings),
-         |${duckKmeans("e", 16, 64, 2, "km")},
-         |asg AS (SELECT vec_id, centroid_id FROM (
-         |    SELECT e.vec_id, c.centroid_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckDot("e.embedding", "c.centroid")} / (e.norm * c.cnorm) DESC,
-         |                 c.centroid_id) AS rn
-         |    FROM e CROSS JOIN km2 c) t WHERE rn = 1),
-         |q AS (SELECT vec_id AS query_id, embedding AS qe, norm AS qnorm FROM e WHERE vec_id < 10),
-         |pr AS (SELECT query_id, centroid_id FROM (
-         |    SELECT q.query_id, c.centroid_id,
-         |      row_number() OVER (PARTITION BY q.query_id
-         |        ORDER BY ${duckDot("q.qe", "c.centroid")} / (q.qnorm * c.cnorm) DESC,
-         |                 c.centroid_id) AS rn
-         |    FROM q CROSS JOIN km2 c) t WHERE rn <= 2),
-         |iscored AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-         |             ${duckDot("q.qe", "e.embedding")} / (q.qnorm * e.norm) AS cosine
-         |           FROM pr JOIN asg ON pr.centroid_id = asg.centroid_id
-         |                JOIN e ON e.vec_id = asg.vec_id
-         |                JOIN q ON q.query_id = pr.query_id
-         |           WHERE q.query_id <> e.vec_id),
-         |ivf AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cosine DESC, neighbor_id) AS rnk FROM iscored) t WHERE rnk <= 5),
-         |escored AS (SELECT q.query_id, c.vec_id AS neighbor_id,
-         |    ${duckDot("q.qe", "c.embedding")} / (q.qnorm * c.norm) AS cosine
-         |  FROM q JOIN e c ON q.query_id <> c.vec_id),
-         |exact AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cosine DESC, neighbor_id) AS rnk FROM escored) t WHERE rnk <= 5)
-         |SELECT exact.query_id, COUNT(*) AS k,
-         |  CAST(SUM(CASE WHEN ivf.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-         |  CAST(SUM(CASE WHEN ivf.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) * 100
-         |    // COUNT(*) AS BIGINT) AS recall_pct
-         |FROM exact LEFT JOIN ivf ON exact.query_id = ivf.query_id
-         |     AND exact.neighbor_id = ivf.neighbor_id
-         |GROUP BY exact.query_id ORDER BY exact.query_id""".stripMargin,
-
-    // sampled-fit twin: the kmeans CTEs run over the vec_id%2=0 slice,
-    // assignment/probe/score over the full corpus
-    "ann_ivf_sampled_topk" ->
-      s"""WITH e AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS norm FROM embeddings),
-         |es AS (SELECT * FROM e WHERE vec_id % 2 = 0),
-         |${duckKmeans("es", 16, 64, 2, "km")},
-         |asg AS (SELECT vec_id, centroid_id FROM (
-         |    SELECT e.vec_id, c.centroid_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckDot("e.embedding", "c.centroid")} / (e.norm * c.cnorm) DESC,
-         |                 c.centroid_id) AS rn
-         |    FROM e CROSS JOIN km2 c) t WHERE rn = 1),
-         |q AS (SELECT vec_id AS query_id, embedding AS qe, norm AS qnorm FROM e WHERE vec_id < 10),
-         |pr AS (SELECT query_id, centroid_id FROM (
-         |    SELECT q.query_id, c.centroid_id,
-         |      row_number() OVER (PARTITION BY q.query_id
-         |        ORDER BY ${duckDot("q.qe", "c.centroid")} / (q.qnorm * c.cnorm) DESC,
-         |                 c.centroid_id) AS rn
-         |    FROM q CROSS JOIN km2 c) t WHERE rn <= 4),
-         |scored AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-         |             ${duckDot("q.qe", "e.embedding")} / (q.qnorm * e.norm) AS cosine
-         |           FROM pr JOIN asg ON pr.centroid_id = asg.centroid_id
-         |                JOIN e ON e.vec_id = asg.vec_id
-         |                JOIN q ON q.query_id = pr.query_id
-         |           WHERE q.query_id <> e.vec_id),
-         |ranked AS (SELECT *, row_number() OVER (PARTITION BY query_id
-         |             ORDER BY cosine DESC, neighbor_id) AS rnk FROM scored)
-         |SELECT query_id, neighbor_id, rnk, cosine FROM ranked
-         |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-
-    // balance twin: the fitted (2-round) quantizer's per-list sizes and
-    // micro-rounded cohesion — sim folds identically (sequential
-    // list_reduce ≡ Spark's aggregate HOF), so floor(sim·10⁶+0.5) is
-    // bit-equal and the BIGINT sums are order-free
-    "ann_ivf_balance" ->
-      s"""WITH e AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS norm FROM embeddings),
-         |${duckKmeans("e", 16, 64, 2, "km")},
-         |asg AS (SELECT vec_id, centroid_id,
-         |    CAST(floor(sim * 1000000.0 + 0.5) AS BIGINT) AS sim_micro FROM (
-         |    SELECT e.vec_id, c.centroid_id,
-         |      ${duckDot("e.embedding", "c.centroid")} / (e.norm * c.cnorm) AS sim,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckDot("e.embedding", "c.centroid")} / (e.norm * c.cnorm) DESC,
-         |                 c.centroid_id) AS rn
-         |    FROM e CROSS JOIN km2 c) t WHERE rn = 1),
-         |pl AS (SELECT centroid_id, count(*) AS n_vectors,
-         |         sum(sim_micro) AS sum_sim_micro, min(sim_micro) AS min_sim_micro
-         |       FROM asg GROUP BY centroid_id),
-         |t AS (SELECT sum(n_vectors) AS tot FROM pl)
-         |SELECT centroid_id, CAST(n_vectors AS BIGINT) AS n_vectors,
-         |  CAST(n_vectors * 1000000 // tot AS BIGINT) AS share_ppm,
-         |  CAST(sum_sim_micro AS BIGINT) AS sum_sim_micro,
-         |  CAST(min_sim_micro AS BIGINT) AS min_sim_micro
-         |FROM pl CROSS JOIN t ORDER BY centroid_id""".stripMargin,
-
-    // the seeded (kmeansIters = 0) baseline keeps the SQL-trivial
-    // lowest-id quantizer oracle
-    "ann_ivf_seed_topk" ->
-      s"""WITH e AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS norm FROM embeddings),
-         |c AS (SELECT vec_id AS centroid_id, embedding AS centroid, norm AS cnorm
-         |      FROM e ORDER BY vec_id LIMIT 16),
-         |asg AS (SELECT vec_id, centroid_id FROM (
-         |    SELECT e.vec_id, c.centroid_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckDot("e.embedding", "c.centroid")} / (e.norm * c.cnorm) DESC,
-         |                 c.centroid_id) AS rn
-         |    FROM e CROSS JOIN c) t WHERE rn = 1),
-         |q AS (SELECT vec_id AS query_id, embedding AS qe, norm AS qnorm FROM e WHERE vec_id < 10),
-         |pr AS (SELECT query_id, centroid_id FROM (
-         |    SELECT q.query_id, c.centroid_id,
-         |      row_number() OVER (PARTITION BY q.query_id
-         |        ORDER BY ${duckDot("q.qe", "c.centroid")} / (q.qnorm * c.cnorm) DESC,
-         |                 c.centroid_id) AS rn
-         |    FROM q CROSS JOIN c) t WHERE rn <= 4),
-         |scored AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-         |             ${duckDot("q.qe", "e.embedding")} / (q.qnorm * e.norm) AS cosine
-         |           FROM pr JOIN asg ON pr.centroid_id = asg.centroid_id
-         |                JOIN e ON e.vec_id = asg.vec_id
-         |                JOIN q ON q.query_id = pr.query_id
-         |           WHERE q.query_id <> e.vec_id),
-         |ranked AS (SELECT *, row_number() OVER (PARTITION BY query_id
-         |             ORDER BY cosine DESC, neighbor_id) AS rnk FROM scored)
-         |SELECT query_id, neighbor_id, rnk, cosine FROM ranked
-         |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-
-    // deeper fit (3 Lloyd rounds) — previously rows-only (float means);
-    // exact fixed-point means make it hash-verifiable
-    "ann_ivf_kmeans_topk" ->
-      s"""WITH e AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS norm FROM embeddings),
-         |${duckKmeans("e", 16, 64, 3, "km")},
-         |asg AS (SELECT vec_id, centroid_id FROM (
-         |    SELECT e.vec_id, c.centroid_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckDot("e.embedding", "c.centroid")} / (e.norm * c.cnorm) DESC,
-         |                 c.centroid_id) AS rn
-         |    FROM e CROSS JOIN km3 c) t WHERE rn = 1),
-         |q AS (SELECT vec_id AS query_id, embedding AS qe, norm AS qnorm FROM e WHERE vec_id < 10),
-         |pr AS (SELECT query_id, centroid_id FROM (
-         |    SELECT q.query_id, c.centroid_id,
-         |      row_number() OVER (PARTITION BY q.query_id
-         |        ORDER BY ${duckDot("q.qe", "c.centroid")} / (q.qnorm * c.cnorm) DESC,
-         |                 c.centroid_id) AS rn
-         |    FROM q CROSS JOIN km3 c) t WHERE rn <= 4),
-         |scored AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-         |             ${duckDot("q.qe", "e.embedding")} / (q.qnorm * e.norm) AS cosine
-         |           FROM pr JOIN asg ON pr.centroid_id = asg.centroid_id
-         |                JOIN e ON e.vec_id = asg.vec_id
-         |                JOIN q ON q.query_id = pr.query_id
-         |           WHERE q.query_id <> e.vec_id),
-         |ranked AS (SELECT *, row_number() OVER (PARTITION BY query_id
-         |             ORDER BY cosine DESC, neighbor_id) AS rnk FROM scored)
-         |SELECT query_id, neighbor_id, rnk, cosine FROM ranked
-         |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-
-    "ann_cosine_topk" ->
-      s"""WITH e AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS norm FROM embeddings),
-         |q AS (SELECT * FROM e WHERE vec_id < 10),
-         |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    ${duckDot("q.embedding", "c.embedding")} / (q.norm * c.norm) AS cosine
-         |  FROM q JOIN e c ON q.vec_id <> c.vec_id),
-         |ranked AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, rnk, cosine FROM ranked WHERE rnk <= 5
-         |ORDER BY query_id, rnk""".stripMargin,
-
-    // MMR twin: generated greedy unroll — see mmrOracle
-    "ann_mmr_diverse" -> mmrOracle(4, 30),
-
-    // Matryoshka twin: full-dim and 16-dim-prefix cosine rankings via
-    // the shared fold helpers, k-row semi-join overlap per query
-    "ann_matryoshka_recall" ->
-      s"""WITH e AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS norm FROM embeddings),
-         |p AS (SELECT vec_id, embedding[1:16] AS pe FROM embeddings),
-         |pn AS (SELECT vec_id, pe, ${duckNorm("pe")} AS pnorm FROM p),
-         |q AS (SELECT * FROM e WHERE vec_id < 10),
-         |qp AS (SELECT * FROM pn WHERE vec_id < 10),
-         |ft AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY CASE WHEN q.norm * c.norm = 0 THEN -2.0
-         |          ELSE ${duckDot("q.embedding", "c.embedding")} / (q.norm * c.norm) END DESC,
-         |                 c.vec_id) AS rnk
-         |    FROM q JOIN e c ON q.vec_id <> c.vec_id) z WHERE rnk <= 10),
-         |pt AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY CASE WHEN q.pnorm * c.pnorm = 0 THEN -2.0
-         |          ELSE ${duckDot("q.pe", "c.pe")} / (q.pnorm * c.pnorm) END DESC,
-         |                 c.vec_id) AS rnk
-         |    FROM qp q JOIN pn c ON q.vec_id <> c.vec_id) z WHERE rnk <= 10),
-         |h AS (SELECT p.query_id, CAST(count(*) AS BIGINT) AS n_hits
-         |  FROM pt p JOIN ft f
-         |    ON f.query_id = p.query_id AND f.neighbor_id = p.neighbor_id
-         |  GROUP BY 1)
-         |SELECT q.vec_id AS query_id, COALESCE(h.n_hits, 0) AS n_hits,
-         |  (COALESCE(h.n_hits, 0) * 1000000) // 10 AS recall_ppm
-         |FROM (SELECT vec_id FROM embeddings WHERE vec_id < 10) q
-         |LEFT JOIN h ON h.query_id = q.vec_id
-         |ORDER BY query_id""".stripMargin,
-
-    // SQ8 twin: identical absmax fold, identical int8 code transform,
-    // exact i64 code dot, one fixed-order double score per pair
-    "ann_sq_topk" ->
-      """WITH am AS (SELECT vec_id, embedding,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))),
-        |      (m, v) -> greatest(m, v)) AS amax
-        |  FROM embeddings),
-        |qz AS (SELECT vec_id, amax / 127.0 AS scale,
-        |    CASE WHEN amax = 0 THEN list_transform(embedding, v -> CAST(0 AS BIGINT))
-        |         ELSE list_transform(embedding,
-        |           v -> CAST(floor(CAST(v AS DOUBLE) * 127.0 / amax + 0.5) AS BIGINT))
-        |    END AS q
-        |  FROM am),
-        |sc AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(list_zip(q.q, c.q), x -> x[1] * x[2])),
-        |      (acc, v) -> acc + v) AS idot,
-        |    (q.scale * c.scale) AS ss
-        |  FROM (SELECT * FROM qz WHERE vec_id < 10) q
-        |  JOIN qz c ON q.vec_id <> c.vec_id),
-        |r AS (SELECT query_id, neighbor_id, idot,
-        |    ss * CAST(idot AS DOUBLE) AS score FROM sc)
-        |SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rnk,
-        |  idot, score
-        |FROM r QUALIFY rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-
-    // IVF-PQ twin: the fitted ann_ivf_topk assign/probe CTEs route, the
-    // fitted ann_pq_adc_topk codes/dtable/ordered-fold CTEs score,
-    // joined on the probed lists only
-    "ann_ivf_pq_topk" ->
-      s"""${ivfPqRankedCtes}
-         |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, adc_score
-         |FROM ranked WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-
-    // two-stage search twin: PQ candidates (top-30) exactly re-scored
-    "ann_ivf_pq_rerank" ->
-      s"""${ivfPqRankedCtes},
-         |rcand AS (SELECT query_id, neighbor_id FROM ranked WHERE rank <= 30),
-         |rr AS (SELECT r.query_id, r.neighbor_id,
-         |    ${duckDot("ne.embedding", "qq.qe")} / (ne.norm * qq.qnorm) AS cosine
-         |  FROM rcand r JOIN e ne ON ne.vec_id = r.neighbor_id
-         |    JOIN q qq ON qq.query_id = r.query_id),
-         |rr2 AS (SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine DESC, neighbor_id ASC) AS rank FROM rr)
-         |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, cosine
-         |FROM rr2 WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-
-        // SemDeDup twin: the IVF-assign CTE shape (argmax = row_number over
-    // cosine DESC, centroid_id ASC — proven equal to Spark's
-    // array_max(struct(sim, -id))) keeping the winning cosine itself,
-    // then within-cluster pairs only
-    "dedup_semantic" ->
-      s"""WITH e AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS norm FROM embeddings),
-         |${duckKmeans("e", 16, 64, 2, "km")},
-         |asg AS (SELECT vec_id, centroid_id, sim AS centroid_sim FROM (
-         |    SELECT e.vec_id, c.centroid_id,
-         |      ${duckDot("e.embedding", "c.centroid")} / (e.norm * c.cnorm) AS sim,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckDot("e.embedding", "c.centroid")} / (e.norm * c.cnorm) DESC,
-         |                 c.centroid_id) AS rn
-         |    FROM e CROSS JOIN km2 c) t WHERE rn = 1)
-         |SELECT a.centroid_id AS cluster_id, a.vec_id AS id_a, b.vec_id AS id_b,
-         |  ${duckDot("ea.embedding", "eb.embedding")} / (ea.norm * eb.norm) AS cosine,
-         |  a.centroid_sim AS centroid_sim_a, b.centroid_sim AS centroid_sim_b
-         |FROM asg a JOIN asg b ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
-         |  JOIN e ea ON ea.vec_id = a.vec_id JOIN e eb ON eb.vec_id = b.vec_id
-         |WHERE ${duckDot("ea.embedding", "eb.embedding")} / (ea.norm * eb.norm) >= 0.4
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // sweep twin: the dedup_semantic pair CTEs at floor 0.2, each
-    // pair's LOSER by semanticPrune's policy (higher centroid_sim, tie
-    // → higher id), then bucket + two cumulative sums from the top
-    "dedup_semantic_sweep" ->
-      s"""WITH e AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS norm FROM embeddings),
-         |${duckKmeans("e", 16, 64, 2, "km")},
-         |asg AS (SELECT vec_id, centroid_id, sim AS centroid_sim FROM (
-         |    SELECT e.vec_id, c.centroid_id,
-         |      ${duckDot("e.embedding", "c.centroid")} / (e.norm * c.cnorm) AS sim,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckDot("e.embedding", "c.centroid")} / (e.norm * c.cnorm) DESC,
-         |                 c.centroid_id) AS rn
-         |    FROM e CROSS JOIN km2 c) t WHERE rn = 1),
-         |pairs AS (SELECT CASE WHEN b.centroid_sim < a.centroid_sim
-         |      THEN a.vec_id ELSE b.vec_id END AS loser,
-         |    ${duckDot("ea.embedding", "eb.embedding")} / (ea.norm * eb.norm) AS cosine
-         |  FROM asg a JOIN asg b ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
-         |    JOIN e ea ON ea.vec_id = a.vec_id JOIN e eb ON eb.vec_id = b.vec_id
-         |  WHERE ${duckDot("ea.embedding", "eb.embedding")} / (ea.norm * eb.norm) >= 0.2),
-         |bk AS (SELECT least(CAST(floor((cosine - 0.2) / 0.05) AS INT), 15) AS b, loser FROM pairs),
-         |pc AS (SELECT b, count(*) AS n_pairs FROM bk GROUP BY b),
-         |dm AS (SELECT b, count(*) AS n_new_drops FROM (
-         |    SELECT loser, max(b) AS b FROM bk GROUP BY loser) z GROUP BY b),
-         |j AS (SELECT coalesce(pc.b, dm.b) AS b,
-         |        coalesce(pc.n_pairs, 0) AS n_pairs,
-         |        coalesce(dm.n_new_drops, 0) AS n_new_drops
-         |      FROM pc FULL JOIN dm ON pc.b = dm.b)
-         |SELECT CAST(200 + b * 50 AS BIGINT) AS threshold_milli,
-         |  CAST(n_pairs AS BIGINT) AS n_pairs,
-         |  CAST(sum(n_pairs) OVER (ORDER BY b DESC
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pairs_at_or_above,
-         |  CAST(sum(n_new_drops) OVER (ORDER BY b DESC
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS docs_dropped_at_or_above
-         |FROM j ORDER BY threshold_milli""".stripMargin,
-
-    // prune twin: pairs always have id_a < id_b, so a drops only when
-    // strictly beaten on centroid_sim; b drops on loss OR tie
-    "dedup_semantic_prune" ->
-      s"""WITH e AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS norm FROM embeddings),
-         |${duckKmeans("e", 16, 64, 2, "km")},
-         |asg AS (SELECT vec_id, centroid_id, sim AS centroid_sim FROM (
-         |    SELECT e.vec_id, c.centroid_id,
-         |      ${duckDot("e.embedding", "c.centroid")} / (e.norm * c.cnorm) AS sim,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckDot("e.embedding", "c.centroid")} / (e.norm * c.cnorm) DESC,
-         |                 c.centroid_id) AS rn
-         |    FROM e CROSS JOIN km2 c) t WHERE rn = 1),
-         |pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |    a.centroid_sim AS sa, b.centroid_sim AS sb
-         |  FROM asg a JOIN asg b ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
-         |    JOIN e ea ON ea.vec_id = a.vec_id JOIN e eb ON eb.vec_id = b.vec_id
-         |  WHERE ${duckDot("ea.embedding", "eb.embedding")} / (ea.norm * eb.norm) >= 0.4),
-         |dropped AS (SELECT id_a AS vec_id FROM pairs WHERE sb < sa
-         |  UNION SELECT id_b FROM pairs WHERE sa < sb OR sa = sb)
-         |SELECT vec_id, label FROM embeddings
-         |WHERE vec_id NOT IN (SELECT vec_id FROM dropped)
-         |ORDER BY vec_id""".stripMargin,
-
-    // incremental-SemDeDup twin: history-derived centroids, both sides
-    // argmax-assigned (rn=1 over cosine DESC, centroid_id), batch×
-    // history cosine within cluster only, anti-join on the hit set
-    "dedup_semantic_incremental" ->
-      s"""WITH e AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS norm FROM embeddings),
-         |h0 AS (SELECT * FROM e WHERE vec_id < 350),
-         |b0 AS (SELECT * FROM e WHERE vec_id >= 350),
-         |${duckKmeans("h0", 16, 64, 2, "km")},
-         |ha AS (SELECT vec_id, centroid_id FROM (
-         |    SELECT h0.vec_id, c.centroid_id,
-         |      row_number() OVER (PARTITION BY h0.vec_id
-         |        ORDER BY ${duckDot("h0.embedding", "c.centroid")} / (h0.norm * c.cnorm) DESC,
-         |                 c.centroid_id) AS rn
-         |    FROM h0 CROSS JOIN km2 c) t WHERE rn = 1),
-         |ba AS (SELECT vec_id, centroid_id FROM (
-         |    SELECT b0.vec_id, c.centroid_id,
-         |      row_number() OVER (PARTITION BY b0.vec_id
-         |        ORDER BY ${duckDot("b0.embedding", "c.centroid")} / (b0.norm * c.cnorm) DESC,
-         |                 c.centroid_id) AS rn
-         |    FROM b0 CROSS JOIN km2 c) t WHERE rn = 1),
-         |hits AS (SELECT DISTINCT ba.vec_id
-         |  FROM ba JOIN ha ON ba.centroid_id = ha.centroid_id AND ba.vec_id <> ha.vec_id
-         |    JOIN e be ON be.vec_id = ba.vec_id JOIN e he ON he.vec_id = ha.vec_id
-         |  WHERE ${duckDot("be.embedding", "he.embedding")} / (be.norm * he.norm) >= 0.4)
-         |SELECT vec_id, label FROM embeddings
-         |WHERE vec_id >= 350 AND vec_id NOT IN (SELECT vec_id FROM hits)
-         |ORDER BY vec_id""".stripMargin,
-
-    // bloom-prune twin: the bloom is a prefilter only — observable
-    // semantics are exactly "batch minus docs whose content exists in
-    // history"
-    "dedup_bloom_prune" ->
-      """SELECT d.doc_id, d.source FROM documents d
-        |WHERE length(d.source) = 5
-        |  AND d.text NOT IN (SELECT text FROM documents WHERE length(source) = 4)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // LM-quality twin: the same add-one-smoothed integer bigram
-    // likelihood — exact integer terms, order-free sums
-    "text_lm_quality" ->
-      """WITH ref AS (SELECT string_split(text, ' ') AS t FROM documents WHERE length(source) = 4),
-        |cb AS (SELECT bigram, count(*) AS cb FROM (
-        |    SELECT unnest(list_transform(list_zip(t[1:len(t)-1], t[2:len(t)]),
-        |      x -> x[1] || ' ' || x[2])) AS bigram FROM ref WHERE len(t) >= 2) z
-        |  GROUP BY bigram),
-        |cu AS (SELECT w1, count(*) AS cu FROM (
-        |    SELECT unnest(t) AS w1 FROM ref) z GROUP BY w1),
-        |v AS (SELECT count(*) AS v FROM cu),
-        |db AS (SELECT doc_id,
-        |    unnest(list_transform(list_zip(t[1:len(t)-1], t[2:len(t)]),
-        |      x -> x[1] || ' ' || x[2])) AS bigram
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents
-        |        WHERE length(source) = 5) z WHERE len(t) >= 2),
-        |sc AS (SELECT d.doc_id,
-        |    (1000000 * (coalesce(cb.cb, 0) + 1)) // (coalesce(cu.cu, 0) + v.v) AS term
-        |  FROM db d
-        |  LEFT JOIN cb ON cb.bigram = d.bigram
-        |  LEFT JOIN cu ON cu.w1 = string_split(d.bigram, ' ')[1]
-        |  CROSS JOIN v),
-        |agg AS (SELECT doc_id, sum(term) AS ms, count(*) AS nb FROM sc GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(agg.ms // agg.nb, 0) AS BIGINT) AS score_micro,
-        |  CAST(coalesce(agg.nb, 0) AS BIGINT) AS n_bigrams
-        |FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id
-        |WHERE length(d.source) = 5
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // source-profile twin: doc-level token counts, per-source distinct
-    // vocabulary, the same integer ratio arithmetic
-    "profile_source_stats" ->
-      """WITH toks AS (SELECT source, string_split(text, ' ') AS t FROM documents),
-        |base AS (SELECT source, COUNT(*) AS n_docs,
-        |    CAST(sum(len(t)) AS BIGINT) AS total_tokens
-        |  FROM toks GROUP BY source),
-        |dist AS (SELECT source, CAST(count(DISTINCT w) AS BIGINT) AS distinct_tokens
-        |  FROM (SELECT source, unnest(t) AS w FROM toks) z GROUP BY source)
-        |SELECT b.source, b.n_docs, b.total_tokens, d.distinct_tokens,
-        |  d.distinct_tokens * 1000000 // nullif(b.total_tokens, 0) AS ttr_ppm,
-        |  b.total_tokens * 1000 // b.n_docs AS mean_doc_tokens_milli
-        |FROM base b JOIN dist d ON b.source = d.source
-        |ORDER BY b.source""".stripMargin,
-
-    // watermark twin: adjacent-token pairs by list index (tokens
-    // hoisted into plain columns FIRST — fnvSql's fold lambda binds
-    // `i`, which would shadow an index passed inside the expression),
-    // same FNV→pmod hash, same fixed-order z text
-    "text_watermark_detect" ->
-      s"""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         |pr AS (SELECT doc_id, t[i] AS ta, t[i + 1] AS tb FROM (
-         |    SELECT doc_id, t, unnest(range(1, len(t))) AS i
-         |    FROM tok WHERE len(t) >= 2) z),
-         |hu AS (SELECT doc_id, ${fnvSql("ta")} AS ua, ${fnvSql("tb")} AS ub FROM pr),
-         |hx AS (SELECT doc_id, ${signedModP("ua")} AS ha, ${signedModP("ub")} AS hb FROM hu),
-         |g AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pairs,
-         |    CAST(SUM(CASE WHEN (ha + hb) % 4 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_green
-         |  FROM hx GROUP BY 1),
-         |zz AS (SELECT d.doc_id,
-         |    COALESCE(g.n_pairs, 0) AS n_pairs, COALESCE(g.n_green, 0) AS n_green
-         |  FROM documents d LEFT JOIN g ON d.doc_id = g.doc_id),
-         |zs AS (SELECT *,
-         |    CASE WHEN n_pairs > 0 THEN
-         |      CAST(FLOOR((CAST(n_green AS DOUBLE) - CAST(n_pairs AS DOUBLE) / 4.0)
-         |                  / SQRT(3.0 * CAST(n_pairs AS DOUBLE) / 16.0)
-         |                  * 1000.0 + 0.5) AS BIGINT)
-         |    END AS z_milli
-         |  FROM zz)
-         |SELECT doc_id, n_pairs, n_green, z_milli,
-         |  COALESCE(z_milli >= 4000, false) AS watermarked
-         |FROM zs ORDER BY doc_id""".stripMargin,
-
-    // gini twin: same sorted-rank identity over the |sources|-row
-    // aggregate, ties by source name (value-invariant), integer ppm
-    "profile_gini" ->
-      """WITH per AS (SELECT source, count(*) AS n_docs,
-        |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-        |  FROM documents GROUP BY 1),
-        |r AS (SELECT *,
-        |    CAST(row_number() OVER (ORDER BY n_tokens, source) AS BIGINT) AS rt,
-        |    CAST(row_number() OVER (ORDER BY n_docs, source) AS BIGINT) AS rd
-        |  FROM per)
-        |SELECT CAST(count(*) AS BIGINT) AS n_groups,
-        |  CAST(SUM(n_docs) AS BIGINT) AS total_docs,
-        |  CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-        |  CASE WHEN count(*) * SUM(n_tokens) = 0 THEN 0
-        |    ELSE CAST(((2 * SUM(rt * n_tokens) - (count(*) + 1) * SUM(n_tokens)) * 1000000)
-        |         // (count(*) * SUM(n_tokens)) AS BIGINT) END AS gini_tokens_ppm,
-        |  CASE WHEN count(*) * SUM(n_docs) = 0 THEN 0
-        |    ELSE CAST(((2 * SUM(rd * n_docs) - (count(*) + 1) * SUM(n_docs)) * 1000000)
-        |         // (count(*) * SUM(n_docs)) AS BIGINT) END AS gini_docs_ppm
-        |FROM r""".stripMargin,
-
-    // heaps twin: identical first-occurrence trick, integer ppm cutoffs
-    "profile_heaps_curve" ->
-      """WITH mx AS (SELECT MAX(doc_id) AS m FROM documents),
-        |tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-        |fo AS (SELECT token, MIN(doc_id) AS first_doc FROM tok GROUP BY token),
-        |f AS (SELECT unnest([CAST(125000 AS BIGINT), 250000, 500000, 1000000]) AS frac_ppm),
-        |c AS (SELECT frac_ppm, (m * frac_ppm) // 1000000 AS cutoff_id FROM f, mx)
-        |SELECT c.frac_ppm, c.cutoff_id,
-        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM documents d WHERE d.doc_id <= c.cutoff_id) AS n_docs,
-        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM fo WHERE fo.first_doc <= c.cutoff_id) AS vocab
-        |FROM c ORDER BY frac_ppm""".stripMargin,
-
-    // stupid-backoff twin: the same three count tables, existence-based
-    // tier dispatch, identical integer arithmetic (// is DuckDB's div)
-    "text_stupid_backoff" ->
-      """WITH ref AS (SELECT string_split(text, ' ') AS t FROM documents WHERE length(source) = 4),
-        |c3 AS (SELECT tri, count(*) AS c3 FROM (
-        |    SELECT unnest(list_transform(
-        |      list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-        |      x -> x[1] || ' ' || x[2] || ' ' || x[3])) AS tri
-        |    FROM ref WHERE len(t) >= 3) z GROUP BY tri),
-        |c2 AS (SELECT bi, count(*) AS c2 FROM (
-        |    SELECT unnest(list_transform(list_zip(t[1:len(t)-1], t[2:len(t)]),
-        |      x -> x[1] || ' ' || x[2])) AS bi FROM ref WHERE len(t) >= 2) z
-        |  GROUP BY bi),
-        |c1 AS (SELECT w, count(*) AS c1 FROM (
-        |    SELECT unnest(t) AS w FROM ref) z GROUP BY w),
-        |n AS (SELECT count(*) AS n FROM (SELECT unnest(t) AS w FROM ref) z),
-        |dt AS (SELECT doc_id, string_split(tri, ' ') AS p, tri FROM (
-        |    SELECT doc_id, unnest(list_transform(
-        |      list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-        |      x -> x[1] || ' ' || x[2] || ' ' || x[3])) AS tri
-        |    FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents
-        |          WHERE length(source) = 5) q WHERE len(t) >= 3) z),
-        |sc AS (SELECT dt.doc_id,
-        |    CASE WHEN t3.c3 IS NOT NULL THEN (1000000 * t3.c3) // p2.c2
-        |         WHEN b2.c2 IS NOT NULL THEN (400000 * b2.c2) // u1.c1
-        |         WHEN uw.c1 IS NOT NULL THEN (160000 * uw.c1) // n.n
-        |         ELSE 0 END AS term
-        |  FROM dt
-        |  LEFT JOIN c3 t3 ON t3.tri = dt.tri
-        |  LEFT JOIN c2 p2 ON p2.bi = dt.p[1] || ' ' || dt.p[2]
-        |  LEFT JOIN c2 b2 ON b2.bi = dt.p[2] || ' ' || dt.p[3]
-        |  LEFT JOIN c1 u1 ON u1.w = dt.p[2]
-        |  LEFT JOIN c1 uw ON uw.w = dt.p[3]
-        |  CROSS JOIN n),
-        |agg AS (SELECT doc_id, sum(term) AS ms, count(*) AS nt FROM sc GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(agg.ms // agg.nt, 0) AS BIGINT) AS score_micro,
-        |  CAST(coalesce(agg.nt, 0) AS BIGINT) AS n_trigrams
-        |FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id
-        |WHERE length(d.source) = 5
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // BLEU twin: tagged-gram union per order (slices guarded by len —
-    // DuckDB's negative slice bounds wrap from the end, so the n >
-    // len(t) case must be excluded explicitly, matching the Spark
-    // ngrams kernel's empty-result contract), clipped min-join, ppm by
-    // integer division
-    "text_bleu_pairs" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |cand AS (SELECT doc_id - 1 AS pair_id, t FROM tok WHERE doc_id % 2 = 1),
-        |refs AS (SELECT doc_id AS pair_id, t FROM tok WHERE doc_id % 2 = 0),
-        |cg AS (SELECT pair_id, g, count(*) AS c FROM (
-        |    SELECT pair_id, unnest(list_transform(t, x -> '1|' || x)) AS g FROM cand
-        |    UNION ALL
-        |    SELECT pair_id, unnest(list_transform(list_zip(t[1:len(t)-1], t[2:len(t)]),
-        |      x -> '2|' || x[1] || ' ' || x[2])) FROM cand WHERE len(t) >= 2
-        |    UNION ALL
-        |    SELECT pair_id, unnest(list_transform(
-        |      list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-        |      x -> '3|' || x[1] || ' ' || x[2] || ' ' || x[3])) FROM cand WHERE len(t) >= 3
-        |    UNION ALL
-        |    SELECT pair_id, unnest(list_transform(
-        |      list_zip(t[1:len(t)-3], t[2:len(t)-2], t[3:len(t)-1], t[4:len(t)]),
-        |      x -> '4|' || x[1] || ' ' || x[2] || ' ' || x[3] || ' ' || x[4]))
-        |    FROM cand WHERE len(t) >= 4) z GROUP BY 1, 2),
-        |rg AS (SELECT pair_id, g, count(*) AS rc FROM (
-        |    SELECT pair_id, unnest(list_transform(t, x -> '1|' || x)) AS g FROM refs
-        |    UNION ALL
-        |    SELECT pair_id, unnest(list_transform(list_zip(t[1:len(t)-1], t[2:len(t)]),
-        |      x -> '2|' || x[1] || ' ' || x[2])) FROM refs WHERE len(t) >= 2
-        |    UNION ALL
-        |    SELECT pair_id, unnest(list_transform(
-        |      list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-        |      x -> '3|' || x[1] || ' ' || x[2] || ' ' || x[3])) FROM refs WHERE len(t) >= 3
-        |    UNION ALL
-        |    SELECT pair_id, unnest(list_transform(
-        |      list_zip(t[1:len(t)-3], t[2:len(t)-2], t[3:len(t)-1], t[4:len(t)]),
-        |      x -> '4|' || x[1] || ' ' || x[2] || ' ' || x[3] || ' ' || x[4]))
-        |    FROM refs WHERE len(t) >= 4) z GROUP BY 1, 2),
-        |tot AS (SELECT pair_id, CAST(split_part(g, '|', 1) AS INT) AS n,
-        |    CAST(SUM(c) AS BIGINT) AS total FROM cg GROUP BY 1, 2),
-        |clip AS (SELECT c.pair_id, CAST(split_part(c.g, '|', 1) AS INT) AS n,
-        |    CAST(SUM(least(c.c, r.rc)) AS BIGINT) AS clipped
-        |  FROM cg c JOIN rg r USING (pair_id, g) GROUP BY 1, 2),
-        |prec AS (SELECT t.pair_id, t.n,
-        |    (COALESCE(cl.clipped, 0) * 1000000) // t.total AS p_ppm
-        |  FROM tot t LEFT JOIN clip cl USING (pair_id, n)),
-        |lens AS (SELECT c.pair_id, CAST(len(c.t) AS BIGINT) AS len_c,
-        |    CAST(len(r.t) AS BIGINT) AS len_r
-        |  FROM cand c JOIN refs r USING (pair_id))
-        |SELECT l.pair_id, l.len_c, l.len_r, l.len_c >= l.len_r AS bp_ok,
-        |  max(CASE WHEN n = 1 THEN p_ppm END) AS p1_ppm,
-        |  max(CASE WHEN n = 2 THEN p_ppm END) AS p2_ppm,
-        |  max(CASE WHEN n = 3 THEN p_ppm END) AS p3_ppm,
-        |  max(CASE WHEN n = 4 THEN p_ppm END) AS p4_ppm
-        |FROM lens l LEFT JOIN prec USING (pair_id)
-        |GROUP BY 1, 2, 3, 4 ORDER BY l.pair_id""".stripMargin,
-
-    // chunk-dedup twin: 20-token windows, corpus-wide first occurrence
-    // by (doc_id, chunk_idx) survives, in-order reassembly
-    "dedup_chunk_exact" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |ch AS (SELECT doc_id, i AS chunk_idx,
-        |         array_to_string(t[i*20+1 : i*20+20], ' ') AS chunk
-        |       FROM (SELECT doc_id, t, unnest(range(0, (len(t) - 1) // 20 + 1)) AS i
-        |             FROM tok) z),
-        |kept AS (SELECT doc_id, chunk_idx, chunk FROM (
-        |    SELECT doc_id, chunk_idx, chunk,
-        |      row_number() OVER (PARTITION BY chunk ORDER BY doc_id, chunk_idx) AS rn
-        |    FROM ch) x WHERE rn = 1),
-        |reb AS (SELECT doc_id, count(*) AS n_kept_chunks,
-        |          array_to_string(list(chunk ORDER BY chunk_idx), ' ') AS cleaned
-        |        FROM kept GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  CAST((len(string_split(d.text, ' ')) - 1) // 20 + 1 AS BIGINT) AS n_chunks,
-        |  CAST(coalesce(r.n_kept_chunks, 0) AS BIGINT) AS n_kept_chunks,
-        |  coalesce(r.cleaned, '') AS cleaned
-        |FROM documents d LEFT JOIN reb r ON d.doc_id = r.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // sharding is pure execution strategy — observable semantics are
-    // identical to the single-bloom form, so the twin is the same SQL
-    "dedup_bloom_sharded" ->
-      """SELECT d.doc_id, d.source FROM documents d
-        |WHERE length(d.source) = 5
-        |  AND d.text NOT IN (SELECT text FROM documents WHERE length(source) = 4)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // edit-distance twin: identical even-split segmentation (remainder
-    // spread left), same df-capped blocking, same distinct-then-verify.
-    // Default = the scale-safe cap (EditDistanceDfCap)
-    "dedup_edit_distance" -> editDistanceOracle(250),
-
-    // recall-leaning opt-in twin: the wide cap that keeps boilerplate
-    // blocks in play (the pre-r15 default; SCALING.md sf0.8 forensics
-    // measured its quadratic candidate regime)
-    "dedup_edit_recall" -> editDistanceOracle(2000),
-
-    // excised-block audit twin: the hot CTE of the edit-distance oracle
-    // surfaced as the output (same segmentation, same cap comparison)
-    "dedup_edit_excised" ->
-      """WITH t AS (SELECT doc_id AS id, substring(text, 1, 24) AS s FROM documents
-        |           WHERE length(substring(text, 1, 24)) >= 1),
-        |segs AS (
-        |  SELECT id, s, length(s) AS L, iv.i AS seg_i,
-        |    substring(s, CAST(iv.i * (length(s) // 7) + least(iv.i, length(s) % 7) + 1 AS INTEGER),
-        |      CAST((length(s) // 7) + CASE WHEN iv.i < length(s) % 7 THEN 1 ELSE 0 END AS INTEGER)) AS seg
-        |  FROM t CROSS JOIN (SELECT unnest(range(0, 7)) AS i) iv
-        |  WHERE length(s) >= 7
-        |  UNION ALL
-        |  SELECT id, s, length(s) AS L, CAST(0 AS BIGINT) AS seg_i, '' AS seg
-        |  FROM t WHERE length(s) < 7)
-        |SELECT seg_i, seg, L AS seg_len, count(*) AS df
-        |FROM segs GROUP BY 1, 2, 3 HAVING count(*) > 8
-        |ORDER BY seg_i, seg, seg_len""".stripMargin,
-
-    // z-order twin: the same statically-unrolled bit interleave
-    "layout_zorder" -> {
-      val terms = for {
-        i <- 0 until 10
-        (c, j) <- Seq("(n_chars % 1024)", "(doc_id % 1024)").zipWithIndex
-      } yield s"((($c >> $i) & 1) << ${i * 2 + j})"
-      s"""SELECT doc_id, CAST(${terms.mkString(" + ")} AS BIGINT) AS zval
-         |FROM documents ORDER BY doc_id""".stripMargin
-    },
-
-    // temperature twin: identical floor-sqrt weights + nested-floor ppm
-    "mix_temperature" ->
-      """WITH s AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS n_tokens
-        |           FROM documents GROUP BY source),
-        |w AS (SELECT source, n_tokens,
-        |        CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT) AS weight FROM s),
-        |t AS (SELECT sum(weight) AS w_sum FROM w)
-        |SELECT w.source, w.n_tokens, w.weight,
-        |  CAST(CASE WHEN w.n_tokens <= 0 OR t.w_sum <= 0 THEN 0
-        |       ELSE least(1000000, ((CAST(50000 AS BIGINT) * 1000000 // t.w_sum) * w.weight) // w.n_tokens)
-        |  END AS BIGINT) AS rate_ppm
-        |FROM w CROSS JOIN t ORDER BY source""".stripMargin,
-
-    // unimax twin: identical window cumsums over the cap-sorted sources
-    "mix_unimax" ->
-      """WITH s AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS n_tokens
-        |           FROM documents GROUP BY source),
-        |c AS (SELECT source, n_tokens, n_tokens * 2 AS cap_tokens FROM s),
-        |f AS (SELECT *,
-        |    coalesce(sum(cap_tokens) OVER (ORDER BY cap_tokens, source
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pfx,
-        |    count(*) OVER (ORDER BY cap_tokens, source
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS rem
-        |  FROM c),
-        |g AS (SELECT *, cap_tokens * rem <= 100000 - pfx AS sat FROM f),
-        |t AS (SELECT coalesce(sum(CASE WHEN sat THEN cap_tokens END), 0) AS sat_sum,
-        |             sum(CASE WHEN sat THEN 0 ELSE 1 END) AS n_unsat FROM g),
-        |a AS (SELECT g.source, g.n_tokens, g.cap_tokens,
-        |        CASE WHEN g.sat THEN g.cap_tokens
-        |             ELSE (100000 - t.sat_sum) // t.n_unsat END AS alloc_tokens
-        |      FROM g CROSS JOIN t)
-        |SELECT source, n_tokens, cap_tokens, CAST(alloc_tokens AS BIGINT) AS alloc_tokens,
-        |  CAST(CASE WHEN n_tokens <= 0 THEN 0
-        |       ELSE alloc_tokens * 1000 // n_tokens END AS BIGINT) AS epochs_milli
-        |FROM a ORDER BY source""".stripMargin,
-
-    // Neyman twin: identical exact sums → fixed-order sd_milli floor,
-    // identical integer-weight largest-remainder apportionment twice
-    "sample_neyman" ->
-      """WITH per AS (SELECT source, COUNT(*) AS n_docs,
-        |    CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS sx,
-        |    CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT)
-        |             * CAST(len(string_split(text, ' ')) AS BIGINT)) AS BIGINT) AS sx2
-        |  FROM documents GROUP BY 1),
-        |sd AS (SELECT source, n_docs,
-        |    CASE WHEN CAST(sx2 AS DOUBLE) / CAST(n_docs AS DOUBLE)
-        |           - (CAST(sx AS DOUBLE) / CAST(n_docs AS DOUBLE))
-        |             * (CAST(sx AS DOUBLE) / CAST(n_docs AS DOUBLE)) <= 0.0
-        |      THEN CAST(0 AS BIGINT)
-        |      ELSE CAST(FLOOR(SQRT(
-        |        CAST(sx2 AS DOUBLE) / CAST(n_docs AS DOUBLE)
-        |          - (CAST(sx AS DOUBLE) / CAST(n_docs AS DOUBLE))
-        |            * (CAST(sx AS DOUBLE) / CAST(n_docs AS DOUBLE)))
-        |        * 1000.0 + 0.5) AS BIGINT) END AS sd_milli
-        |  FROM per),
-        |ny AS (SELECT *, n_docs * sd_milli AS w FROM sd),
-        |nt AS (SELECT CAST(COALESCE(SUM(w), 0) AS BIGINT) AS tw FROM ny),
-        |nb AS (SELECT ny.*, nt.tw,
-        |    CASE WHEN nt.tw > 0 THEN CAST((1000 * w) // nt.tw AS BIGINT) ELSE 0 END AS base,
-        |    CASE WHEN nt.tw > 0 THEN CAST((1000 * w) % nt.tw AS BIGINT) ELSE 0 END AS r
-        |  FROM ny CROSS JOIN nt),
-        |na AS (SELECT *,
-        |    CASE WHEN tw > 0 THEN 1000 - CAST(SUM(base) OVER () AS BIGINT) ELSE 0 END AS leftv,
-        |    row_number() OVER (ORDER BY r DESC, source) AS rn FROM nb),
-        |n1 AS (SELECT source, n_docs, sd_milli,
-        |    CAST(base + CASE WHEN rn <= leftv THEN 1 ELSE 0 END AS BIGINT) AS alloc_neyman
-        |  FROM na),
-        |py AS (SELECT source, n_docs, CAST(n_docs AS BIGINT) AS w FROM sd),
-        |pt AS (SELECT CAST(COALESCE(SUM(w), 0) AS BIGINT) AS tw FROM py),
-        |pb AS (SELECT py.*, pt.tw,
-        |    CASE WHEN pt.tw > 0 THEN CAST((1000 * w) // pt.tw AS BIGINT) ELSE 0 END AS base,
-        |    CASE WHEN pt.tw > 0 THEN CAST((1000 * w) % pt.tw AS BIGINT) ELSE 0 END AS r
-        |  FROM py CROSS JOIN pt),
-        |pa AS (SELECT *,
-        |    CASE WHEN tw > 0 THEN 1000 - CAST(SUM(base) OVER () AS BIGINT) ELSE 0 END AS leftv,
-        |    row_number() OVER (ORDER BY r DESC, source) AS rn FROM pb),
-        |p1 AS (SELECT source,
-        |    CAST(base + CASE WHEN rn <= leftv THEN 1 ELSE 0 END AS BIGINT) AS alloc_prop
-        |  FROM pa)
-        |SELECT n1.source, n1.n_docs, n1.sd_milli, n1.alloc_neyman, p1.alloc_prop
-        |FROM n1 JOIN p1 USING (source) ORDER BY n1.source""".stripMargin,
-
-    // quality-waterfall twin: the sourceProfile stats CTEs, TTR
-    // priority, cumulative-cap window, identical clamp arithmetic
-    "mix_quality_budget" ->
-      """WITH toks AS (SELECT source, string_split(text, ' ') AS t FROM documents),
-        |base AS (SELECT source, COUNT(*) AS n_docs,
-        |    CAST(sum(len(t)) AS BIGINT) AS total_tokens
-        |  FROM toks GROUP BY source),
-        |dist AS (SELECT source, CAST(count(DISTINCT w) AS BIGINT) AS distinct_tokens
-        |  FROM (SELECT source, unnest(t) AS w FROM toks) z GROUP BY source),
-        |st AS (SELECT b.source, b.total_tokens AS n_tokens,
-        |    d.distinct_tokens * 1000000 // nullif(b.total_tokens, 0) AS priority
-        |  FROM base b JOIN dist d ON b.source = d.source),
-        |wf AS (SELECT *, CAST((n_tokens * 20) // 10 AS BIGINT) AS cap_tokens,
-        |    CAST(COALESCE(SUM((n_tokens * 20) // 10) OVER (
-        |      ORDER BY priority DESC, source
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |      AS cum_before
-        |  FROM st)
-        |SELECT source, n_tokens, priority, cap_tokens,
-        |  CAST(greatest(0, least(cap_tokens, 20000 - cum_before)) AS BIGINT)
-        |    AS take_tokens,
-        |  CAST(CASE WHEN n_tokens > 0
-        |    THEN (greatest(0, least(cap_tokens, 20000 - cum_before)) * 1000)
-        |         // n_tokens ELSE 0 END AS BIGINT) AS epochs_milli
-        |FROM wf ORDER BY source""".stripMargin,
-
-    // splits twin: the classifier twin's FNV HUGEINT fold over the TEXT
-    // (content-keyed), unsigned % 1e6, same ppm thresholds
-    "sample_splits" ->
-      """WITH h AS (SELECT doc_id,
-        |  list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |      list_transform(range(1, length(text) + 1),
-        |        i -> ascii(substr(text, CAST(i AS INTEGER), 1)))),
-        |      (acc, c) -> (xor(acc, CAST(c AS HUGEINT)) * 1099511628211) % 18446744073709551616)
-        |    % 1000000 AS hv
-        |  FROM documents)
-        |SELECT doc_id, CASE WHEN hv < 800000 THEN 'train'
-        |                    WHEN hv < 900000 THEN 'val'
-        |                    ELSE 'test' END AS split
-        |FROM h ORDER BY doc_id""".stripMargin,
-
-    "sample_cap_per_source" ->
-      """SELECT doc_id, source, n_chars FROM (
-        |  SELECT doc_id, source, n_chars,
-        |    row_number() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id) AS rk
-        |  FROM documents) t
-        |WHERE rk <= 20 ORDER BY doc_id""".stripMargin,
-
-    "sample_top_quantile" ->
-      """SELECT doc_id, source, n_chars FROM (
-        |  SELECT doc_id, source, n_chars,
-        |    row_number() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id) AS rk,
-        |    count(*) OVER (PARTITION BY source) AS n
-        |  FROM documents) t
-        |WHERE rk * 100 <= n * 25 ORDER BY doc_id""".stripMargin,
-
-    // BM25 twin: the same integer fixed-point pipeline (k1=1200, b=750
-    // milli; linear idf in ppm), N/avgdl recomputed from the same corpus,
-    // `//` = Spark's `div` on BIGINT
-    "text_bm25_topk" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |lens AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
-        |g AS (SELECT count(*) AS n, CAST(sum(dl) AS BIGINT) AS tot FROM lens),
-        |av AS (SELECT greatest(tot * 1000 // greatest(n, 1), 1) AS avgdl_milli, n FROM g),
-        |tf AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl, term, count(*) AS tf
-        |       FROM (SELECT doc_id, t, unnest(t) AS term FROM toks) z
-        |       WHERE term IN ('hash', 'join', 'vector')
-        |       GROUP BY 1, 2, 3),
-        |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |scored AS (SELECT tf.doc_id,
-        |    (av.n * 1000000 // dfreq.df) * tf.tf * (1200 + 1000) //
-        |      (tf.tf * 1000 + 1200 * (1000 - 750 + 750 * tf.dl * 1000 // av.avgdl_milli) // 1000)
-        |      AS contrib
-        |  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN av),
-        |agg AS (SELECT doc_id, CAST(sum(contrib) AS BIGINT) AS score_milli,
-        |          count(*) AS n_terms_hit
-        |        FROM scored GROUP BY 1)
-        |SELECT doc_id, score_milli, n_terms_hit FROM agg
-        |ORDER BY score_milli DESC, doc_id LIMIT 15""".stripMargin,
-
-    // hybrid-retrieval twin: the bm25 CTE chain at k=50 + the
-    // hash-embedding dot product (bucket-join form — identical to the
-    // zip_with dot, non-shared lanes contribute 0) + integer RRF merge
-    // maxsim twin: sparse bucket-join dots with the zero-fill cases made
-    // explicit — a unit/chunk pair sharing no bucket has dot EXACTLY 0,
-    // so (a) per-(doc,unit) max includes 0 when any chunk is absent from
-    // the join, (b) absent (doc,unit) pairs contribute 0 via the grid
-    "profile_k_anonymity" ->
-      """WITH g AS (SELECT lang, source, count(*) AS sz FROM documents GROUP BY 1, 2)
-        |SELECT 'lang,source' AS qi, CAST(5 AS BIGINT) AS k,
-        |  COUNT(*) AS n_groups,
-        |  CAST(SUM(CASE WHEN sz < 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_small_groups,
-        |  CAST(SUM(CASE WHEN sz < 5 THEN sz ELSE 0 END) AS BIGINT) AS n_rows_at_risk,
-        |  min(sz) AS min_group_size,
-        |  (SUM(CASE WHEN sz < 5 THEN sz ELSE 0 END) = 0) AS passed
-        |FROM g""".stripMargin,
-
-    // MAD twin: same lower-median rank definition, same (value,id) and
-    // (dev,id) total orders
-    "profile_mad_outliers" ->
-      """WITH base AS (SELECT source, doc_id, CAST(n_chars AS BIGINT) AS v,
-        |    row_number() OVER (PARTITION BY source ORDER BY n_chars, doc_id) AS rn,
-        |    count(*) OVER (PARTITION BY source) AS n
-        |  FROM documents),
-        |med AS (SELECT source, v AS med FROM base WHERE rn = (n + 1) // 2),
-        |dev AS (SELECT b.source, b.doc_id, b.v, b.n, abs(b.v - m.med) AS dv, m.med
-        |  FROM base b JOIN med m USING (source)),
-        |mad AS (SELECT source, dv AS mad FROM (
-        |    SELECT source, dv, n,
-        |      row_number() OVER (PARTITION BY source ORDER BY dv, doc_id) AS rd
-        |    FROM dev) z WHERE rd = (n + 1) // 2)
-        |SELECT d.source, COUNT(*) AS n, min(d.med) AS median, min(m.mad) AS mad,
-        |  CAST(SUM(CASE WHEN d.dv > 3 * m.mad THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-        |  max(CASE WHEN d.dv > 3 * m.mad THEN d.v END) AS worst_value
-        |FROM dev d JOIN mad m USING (source)
-        |GROUP BY d.source ORDER BY d.source""".stripMargin,
-
-    "retrieval_maxsim" ->
-      s"""WITH chl AS (SELECT doc_id, list_transform(range(0, (len(t)-1)//8 + 1),
-         |      i -> array_to_string(t[(i*8+1):(i*8+8)], ' ')) AS chunks
-         |    FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents) z),
-         |ch AS (SELECT doc_id, unnest(range(0, len(chunks))) AS chunk_idx,
-         |        unnest(chunks) AS chunk FROM chl),
-         |ctok AS (SELECT doc_id, chunk_idx, unnest(string_split(chunk, ' ')) AS t FROM ch),
-         |chv AS (SELECT doc_id, chunk_idx, ${fnvSql("t")} AS hv FROM ctok),
-         |cagg AS (SELECT doc_id, chunk_idx, CAST(hv % 64 AS BIGINT) AS bkt,
-         |    CAST(SUM(CASE WHEN (hv // 64) % 2 = 0 THEN 1 ELSE -1 END) AS BIGINT) AS v
-         |  FROM chv GROUP BY 1, 2, 3),
-         |q(unit_id, unit) AS (VALUES (0, 'vector'), (1, 'batch window'), (2, 'slow scan')),
-         |qtok AS (SELECT unit_id, unnest(string_split(unit, ' ')) AS t FROM q),
-         |qhv AS (SELECT unit_id, ${fnvSql("t")} AS hv FROM qtok),
-         |qagg AS (SELECT unit_id, CAST(hv % 64 AS BIGINT) AS bkt,
-         |    CAST(SUM(CASE WHEN (hv // 64) % 2 = 0 THEN 1 ELSE -1 END) AS BIGINT) AS v
-         |  FROM qhv GROUP BY 1, 2),
-         |nch AS (SELECT doc_id, COUNT(*) AS n FROM ch GROUP BY doc_id),
-         |dots AS (SELECT c.doc_id, c.chunk_idx, qq.unit_id, SUM(c.v * qq.v) AS dot
-         |  FROM cagg c JOIN qagg qq USING (bkt) GROUP BY 1, 2, 3),
-         |mx AS (SELECT d.doc_id, d.unit_id,
-         |    CASE WHEN COUNT(*) < any_value(n.n) THEN greatest(max(dot), 0)
-         |         ELSE max(dot) END AS maxsim
-         |  FROM dots d JOIN nch n USING (doc_id) GROUP BY d.doc_id, d.unit_id),
-         |grid AS (SELECT d.doc_id, q.unit_id FROM (SELECT doc_id FROM documents) d CROSS JOIN q),
-         |mx2 AS (SELECT g.doc_id, g.unit_id, coalesce(m.maxsim, 0) AS maxsim
-         |  FROM grid g LEFT JOIN mx m USING (doc_id, unit_id)),
-         |sc AS (SELECT doc_id, CAST(SUM(maxsim) AS BIGINT) AS score FROM mx2 GROUP BY doc_id)
-         |SELECT doc_id, score,
-         |  CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rank
-         |FROM sc ORDER BY score DESC, doc_id LIMIT 10""".stripMargin,
-
-    "retrieval_rrf" -> (retrievalCtes +
-      """
-        |f AS (SELECT coalesce(sp.doc_id, de.doc_id) AS doc_id, sp.sparse_rank, de.dense_rank,
-        |        coalesce(1000000 // (60 + sp.sparse_rank), 0) +
-        |        coalesce(1000000 // (60 + de.dense_rank), 0) AS rrf_micro
-        |      FROM sp FULL OUTER JOIN de ON sp.doc_id = de.doc_id)
-        |SELECT doc_id, sparse_rank, dense_rank, CAST(rrf_micro AS BIGINT) AS rrf_micro,
-        |  row_number() OVER (ORDER BY rrf_micro DESC, doc_id) AS rank
-        |FROM (SELECT * FROM f ORDER BY rrf_micro DESC, doc_id LIMIT 20) z
-        |ORDER BY rank""".stripMargin),
-
-    // eval twin: relevance = sparse_rank ≤ 10; recall/MRR per system
-    "retrieval_eval" -> (retrievalCtes +
-      """
-        |f AS (SELECT coalesce(sp.doc_id, de.doc_id) AS doc_id, sp.sparse_rank, de.dense_rank,
-        |        coalesce(1000000 // (60 + sp.sparse_rank), 0) +
-        |        coalesce(1000000 // (60 + de.dense_rank), 0) AS rrf_micro
-        |      FROM sp FULL OUTER JOIN de ON sp.doc_id = de.doc_id),
-        |rr AS (SELECT doc_id, row_number() OVER (ORDER BY rrf_micro DESC, doc_id) AS rank
-        |       FROM (SELECT * FROM f ORDER BY rrf_micro DESC, doc_id LIMIT 20) z),
-        |rel AS (SELECT doc_id FROM sp WHERE sparse_rank <= 10),
-        |dm AS (SELECT 'dense' AS system, count(*) AS n_hits, min(dense_rank) AS fr
-        |       FROM de WHERE dense_rank <= 20 AND doc_id IN (SELECT doc_id FROM rel)),
-        |rm AS (SELECT 'rrf' AS system, count(*) AS n_hits, min(rank) AS fr
-        |       FROM rr WHERE doc_id IN (SELECT doc_id FROM rel))
-        |SELECT system, CAST(n_hits AS BIGINT) AS n_hits,
-        |  CAST(n_hits * 1000000 // 10 AS BIGINT) AS recall_ppm,
-        |  CAST(coalesce(1000000 // fr, 0) AS BIGINT) AS mrr_micro
-        |FROM (SELECT * FROM dm UNION ALL SELECT * FROM rm) u ORDER BY system""".stripMargin),
-
-    // NDCG twin: same rel/pools, the generated integer-micro discount
-    // CASE (shared Scala constants), integer dcg sums, ppm division
-    "retrieval_ndcg" -> (retrievalCtes +
-      s"""
-        |f AS (SELECT coalesce(sp.doc_id, de.doc_id) AS doc_id, sp.sparse_rank, de.dense_rank,
-        |        coalesce(1000000 // (60 + sp.sparse_rank), 0) +
-        |        coalesce(1000000 // (60 + de.dense_rank), 0) AS rrf_micro
-        |      FROM sp FULL OUTER JOIN de ON sp.doc_id = de.doc_id),
-        |rr AS (SELECT doc_id, row_number() OVER (ORDER BY rrf_micro DESC, doc_id) AS rank
-        |       FROM (SELECT * FROM f ORDER BY rrf_micro DESC, doc_id LIMIT 10) z),
-        |rel AS (SELECT doc_id FROM sp WHERE sparse_rank <= 10),
-        |dm AS (SELECT 'dense' AS system, count(*) AS n_hits,
-        |        CAST(coalesce(SUM(${ndcgDiscCase("dense_rank", 10)}), 0) AS BIGINT) AS dcg_micro
-        |       FROM de WHERE dense_rank <= 10 AND doc_id IN (SELECT doc_id FROM rel)),
-        |rm AS (SELECT 'rrf' AS system, count(*) AS n_hits,
-        |        CAST(coalesce(SUM(${ndcgDiscCase("rank", 10)}), 0) AS BIGINT) AS dcg_micro
-        |       FROM rr WHERE doc_id IN (SELECT doc_id FROM rel))
-        |SELECT system, CAST(n_hits AS BIGINT) AS n_hits, dcg_micro,
-        |  CAST(${ops.Retrieval.ndcgDiscountsMicro(10).sum} AS BIGINT) AS idcg_micro,
-        |  (dcg_micro * 1000000) // ${ops.Retrieval.ndcgDiscountsMicro(10).sum} AS ndcg_ppm
-        |FROM (SELECT * FROM dm UNION ALL SELECT * FROM rm) u ORDER BY system""".stripMargin),
-
-    // rank-eval twin: same arms/truth, identical integer rank math
-    "retrieval_rank_eval" -> (retrievalCtes +
-      """
-        |f AS (SELECT coalesce(sp.doc_id, de.doc_id) AS doc_id, sp.sparse_rank, de.dense_rank,
-        |        coalesce(1000000 // (60 + sp.sparse_rank), 0) +
-        |        coalesce(1000000 // (60 + de.dense_rank), 0) AS rrf_micro
-        |      FROM sp FULL OUTER JOIN de ON sp.doc_id = de.doc_id),
-        |rr AS (SELECT doc_id, row_number() OVER (ORDER BY rrf_micro DESC, doc_id) AS rank
-        |       FROM (SELECT * FROM f ORDER BY rrf_micro DESC, doc_id LIMIT 10) z),
-        |rel AS (SELECT doc_id FROM sp WHERE sparse_rank <= 10),
-        |dh AS (SELECT CAST(dense_rank AS BIGINT) AS r,
-        |        row_number() OVER (ORDER BY dense_rank) AS hit_idx
-        |       FROM de WHERE dense_rank <= 10 AND doc_id IN (SELECT doc_id FROM rel)),
-        |rh AS (SELECT CAST(rank AS BIGINT) AS r,
-        |        row_number() OVER (ORDER BY rank) AS hit_idx
-        |       FROM rr WHERE doc_id IN (SELECT doc_id FROM rel)),
-        |dm AS (SELECT 'dense' AS system, CAST(count(*) AS BIGINT) AS n_hits,
-        |        CAST(coalesce(MIN(r), 0) AS BIGINT) AS firstr,
-        |        CAST(coalesce(SUM((hit_idx * 1000000) // r), 0) AS BIGINT) AS apsum
-        |       FROM dh),
-        |rm AS (SELECT 'rrf' AS system, CAST(count(*) AS BIGINT) AS n_hits,
-        |        CAST(coalesce(MIN(r), 0) AS BIGINT) AS firstr,
-        |        CAST(coalesce(SUM((hit_idx * 1000000) // r), 0) AS BIGINT) AS apsum
-        |       FROM rh)
-        |SELECT system, n_hits,
-        |  CAST(CASE WHEN firstr > 0 THEN 1000000 // firstr ELSE 0 END AS BIGINT) AS mrr_micro,
-        |  (n_hits * 1000000) // 10 AS p_at_k_ppm,
-        |  (n_hits * 1000000) // 10 AS recall_ppm,
-        |  apsum // 10 AS ap_micro
-        |FROM (SELECT * FROM dm UNION ALL SELECT * FROM rm) u ORDER BY system""".stripMargin),
-
-    // hard-negative twin: dense pool minus the sparse top-50 doc set
-    "retrieval_hard_negatives" -> (retrievalCtes +
-      """
-        |hn AS (SELECT doc_id, dot, dense_rank FROM de
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM sp))
-        |SELECT doc_id, dot, dense_rank FROM hn ORDER BY dense_rank LIMIT 20""".stripMargin),
-
-    // signature-estimate twin: the shared minhash CTEs (mh exposes the
-    // per-i minima; sh the shingle sets), matches and shared counts per
-    // candidate pair, identical ppm arithmetic
-    "dedup_minhash_est" -> (minhashPairCtes +
-      """,
-        |sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY 1),
-        |sg AS (SELECT p.doc_a, p.doc_b,
-        |    CAST(SUM(CASE WHEN ma.mh = mb.mh THEN 1 ELSE 0 END) AS BIGINT) AS sig_matches
-        |  FROM pairs p
-        |  JOIN mh ma ON ma.doc_id = p.doc_a
-        |  JOIN mh mb ON mb.doc_id = p.doc_b AND mb.i = ma.i
-        |  GROUP BY 1, 2),
-        |shd AS (SELECT p.doc_a, p.doc_b, CAST(count(*) AS BIGINT) AS shared
-        |  FROM pairs p
-        |  JOIN sh a ON a.doc_id = p.doc_a
-        |  JOIN sh b ON b.doc_id = p.doc_b AND b.shingle = a.shingle
-        |  GROUP BY 1, 2)
-        |SELECT s.doc_a, s.doc_b, s.sig_matches,
-        |  COALESCE(d.shared, 0) AS shared, na.n_sh AS n_a, nb.n_sh AS n_b,
-        |  (s.sig_matches * 1000000) // 16 AS est_ppm,
-        |  (COALESCE(d.shared, 0) * 1000000)
-        |    // (na.n_sh + nb.n_sh - COALESCE(d.shared, 0)) AS jaccard_ppm
-        |FROM sg s LEFT JOIN shd d USING (doc_a, doc_b)
-        |JOIN sizes na ON na.doc_id = s.doc_a
-        |JOIN sizes nb ON nb.doc_id = s.doc_b
-        |ORDER BY s.doc_a, s.doc_b""".stripMargin),
-
-    // leakage twin: the minhash-LSH pair CTEs + the content-keyed split
-    // hash, keeping only pairs whose endpoints land in different splits
-    "split_leakage" -> (minhashPairCtes +
-      s""",
-        |spl AS (SELECT doc_id,
-        |  CASE WHEN hvs < 800000 THEN 'train' WHEN hvs < 900000 THEN 'val' ELSE 'test' END AS split
-        |  FROM (SELECT doc_id, ${fnvSql("text")} % 1000000 AS hvs
-        |    FROM documents) hx)
-        |SELECT p.doc_a, p.doc_b, sa.split AS split_a, sb.split AS split_b
-        |FROM pairs p JOIN spl sa ON p.doc_a = sa.doc_id JOIN spl sb ON p.doc_b = sb.doc_id
-        |WHERE sa.split <> sb.split
-        |ORDER BY doc_a, doc_b""".stripMargin),
-
-    // cluster-leak twin: recursive CC over the pair graph, split hash
-    // per member, leak = cluster spanning >1 split
-    "split_leakage_clusters" -> (minhashPairCtes +
-      s""",
-        |edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs UNION SELECT doc_b, doc_a FROM pairs),
-        |cc AS (SELECT a AS doc, a AS label FROM edges
-        |       UNION SELECT e.a, cc.label FROM cc JOIN edges e ON cc.doc = e.b),
-        |lab AS (SELECT doc AS doc_id, MIN(label) AS cluster_id FROM cc GROUP BY doc),
-        |spl AS (SELECT doc_id,
-        |  CASE WHEN hvs < 800000 THEN 'train' WHEN hvs < 900000 THEN 'val' ELSE 'test' END AS split
-        |  FROM (SELECT doc_id, ${fnvSql("text")} % 1000000 AS hvs
-        |    FROM documents) hx)
-        |SELECT CAST(l.cluster_id AS BIGINT) AS cluster_id, COUNT(*) AS n_docs,
-        |  COUNT(DISTINCT s.split) AS n_splits,
-        |  string_agg(DISTINCT s.split, ',' ORDER BY s.split) AS splits
-        |FROM lab l JOIN spl s USING (doc_id)
-        |GROUP BY l.cluster_id HAVING COUNT(DISTINCT s.split) > 1
-        |ORDER BY cluster_id""".stripMargin),
-
-    // cluster-split twin: the same pair CTEs + recursive connected
-    // components (min label), split hash over the representative's text
-    "split_by_cluster" -> (minhashPairCtes +
-      s""",
-        |edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs UNION SELECT doc_b, doc_a FROM pairs),
-        |cc AS (SELECT a AS doc, a AS label FROM edges
-        |       UNION SELECT e.a, cc.label FROM cc JOIN edges e ON cc.doc = e.b),
-        |lab AS (SELECT doc AS doc_id, MIN(label) AS cluster_id FROM cc GROUP BY doc),
-        |keyed AS (SELECT d.doc_id, l.cluster_id, coalesce(r.text, d.text) AS key_text
-        |          FROM documents d LEFT JOIN lab l USING (doc_id)
-        |          LEFT JOIN documents r ON r.doc_id = l.cluster_id),
-        |spl AS (SELECT doc_id, cluster_id,
-        |  CASE WHEN hvs < 800000 THEN 'train' WHEN hvs < 900000 THEN 'val' ELSE 'test' END AS split
-        |  FROM (SELECT doc_id, cluster_id, ${fnvSql("key_text")} % 1000000 AS hvs
-        |    FROM keyed) hx)
-        |SELECT doc_id, CAST(cluster_id AS BIGINT) AS cluster_id, split
-        |FROM spl ORDER BY doc_id""".stripMargin),
-
-    // normalized-dedup twin: identical ASCII normalization ('g' = all
-    // occurrences, matching Spark's replace-all default)
-    "dedup_norm_exact" ->
-      """SELECT md5(trim(regexp_replace(regexp_replace(lower(text),
-        |         '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS norm_hash,
-        |  MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
-        |FROM documents GROUP BY 1 ORDER BY norm_hash""".stripMargin,
-
-    // CDC-chunk twin: same boundary rule via the shared FNV fold
-    "dedup_cdc_chunks" ->
-      s"""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         |g AS (SELECT doc_id, start - 1 AS gpos,
-         |        array_to_string(t[start:start+2], ' ') AS gram
-         |      FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 2)) AS start
-         |            FROM tok WHERE len(t) >= 3) z),
-         |b AS (SELECT doc_id, gpos FROM g
-         |      WHERE gpos > 0 AND (${fnvSql("gram")}) % 16 = 0),
-         |tk AS (SELECT doc_id, i - 1 AS pos, t[i] AS tok
-         |       FROM (SELECT doc_id, t, unnest(generate_series(1, len(t))) AS i
-         |             FROM tok) z),
-         |tc AS (SELECT k.doc_id, k.pos, k.tok,
-         |         (SELECT count(*) FROM b
-         |          WHERE b.doc_id = k.doc_id AND b.gpos <= k.pos) AS chunk_id
-         |       FROM tk k),
-         |ch AS (SELECT doc_id, chunk_id,
-         |         string_agg(tok, ' ' ORDER BY pos) AS chunk_text
-         |       FROM tc GROUP BY 1, 2),
-         |kp AS (SELECT *, row_number() OVER (
-         |         PARTITION BY chunk_text ORDER BY doc_id, chunk_id) AS rn
-         |       FROM ch)
-         |SELECT doc_id, COUNT(*) AS n_chunks,
-         |  CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept_chunks,
-         |  COALESCE(string_agg(CASE WHEN rn = 1 THEN chunk_text END,
-         |                      ' ' ORDER BY chunk_id), '') AS cleaned
-         |FROM kp GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // NFC twin: DuckDB's nfc_normalize on the same synthesized variants
-    "dedup_unicode_nfc" ->
-      """WITH v AS (SELECT doc_id,
-        |  unnest([text || ' caf' || chr(233), text || ' cafe' || chr(769)]) AS raw
-        |  FROM documents)
-        |SELECT doc_id, CAST(count(DISTINCT raw) AS BIGINT) AS n_raw,
-        |  CAST(count(DISTINCT nfc_normalize(raw)) AS BIGINT) AS n_nfc
-        |FROM v GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // winnow-prune twin: the pairs CTE + right-side anti-join
-    "dedup_winnow_prune" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |g AS (SELECT doc_id, start - 1 AS pos,
-        |        array_to_string(t[start:start+4], ' ') AS gram
-        |      FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 4)) AS start
-        |            FROM tok WHERE len(t) >= 5) z),
-        |h AS (SELECT doc_id, pos,
-        |        CAST(CASE WHEN hu >= CAST(9223372036854775808 AS HUGEINT)
-        |                  THEN hu - CAST(18446744073709551616 AS HUGEINT) ELSE hu END AS BIGINT) AS h
-        |      FROM (SELECT doc_id, pos,
-        |              list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |                list_transform(range(1, length(gram) + 1),
-        |                  i -> ascii(substr(gram, CAST(i AS INTEGER), 1)))),
-        |                (acc, c) -> (xor(acc, CAST(c AS HUGEINT)) * 1099511628211) % 18446744073709551616) AS hu
-        |            FROM g) y),
-        |fp0 AS (SELECT DISTINCT doc_id, fp FROM (
-        |        SELECT doc_id,
-        |          min(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |            ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
-        |          count(*) OVER (PARTITION BY doc_id ORDER BY pos
-        |            ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS n_in_win
-        |        FROM h) w WHERE n_in_win = 4),
-        |fp AS (SELECT doc_id, fp FROM (
-        |        SELECT doc_id, fp, count(*) OVER (PARTITION BY fp) AS dfc FROM fp0) zc
-        |      WHERE dfc <= 2000),
-        |drops AS (SELECT DISTINCT b.doc_id
-        |  FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |  GROUP BY a.doc_id, b.doc_id HAVING count(*) >= 2)
-        |SELECT doc_id, source FROM documents
-        |WHERE doc_id NOT IN (SELECT doc_id FROM drops)
-        |ORDER BY doc_id""".stripMargin,
-
-    // cluster-report twin: the recursive-CTE clustering + two aggregates
-    "dedup_cluster_report" ->
-      s"""WITH RECURSIVE
-        |tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh0 AS (SELECT DISTINCT doc_id, unnest(list_transform(list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-        |        x -> x[1] || ' ' || x[2] || ' ' || x[3])) AS shingle FROM tok WHERE len(t) >= 3),
-        |sh AS (SELECT doc_id, shingle FROM (
-        |    SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS dfc FROM sh0) zc
-        |  WHERE dfc <= ${Dedup.DefaultDfCap}),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-        |          FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |          GROUP BY a.doc_id, b.doc_id),
-        |near AS (SELECT doc_a, doc_b FROM pairs
-        |         JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-        |         WHERE shared * 10 >= 4 * (sa.n + sb.n - shared)),
-        |edges AS (SELECT doc_a AS a, doc_b AS b FROM near UNION SELECT doc_b, doc_a FROM near),
-        |cc AS (SELECT a AS doc, a AS label FROM edges
-        |       UNION
-        |       SELECT e.a, cc.label FROM cc JOIN edges e ON cc.doc = e.b),
-        |lab AS (SELECT doc, MIN(label) AS cluster_id FROM cc GROUP BY doc),
-        |cs AS (SELECT cluster_id, count(*) AS sz FROM lab GROUP BY 1)
-        |SELECT sz, count(*) AS n_clusters FROM cs GROUP BY sz ORDER BY sz""".stripMargin,
-
-    "dedup_containment" ->
-      s"""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh0 AS (SELECT DISTINCT doc_id,
-        |         unnest(list_transform(list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-        |           x -> x[1] || ' ' || x[2] || ' ' || x[3])) AS shingle
-        |       FROM tok WHERE len(t) >= 3),
-        |sh AS (SELECT doc_id, shingle FROM (
-        |    SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS dfc FROM sh0) zc
-        |  WHERE dfc <= ${Dedup.DefaultDfCap}),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-        |          FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |          GROUP BY a.doc_id, b.doc_id)
-        |SELECT doc_a, doc_b, shared, sa.n AS n_a, sb.n AS n_b,
-        |  CASE WHEN sa.n <= sb.n THEN doc_a ELSE doc_b END AS contained
-        |FROM pairs JOIN sizes sa ON doc_a = sa.doc_id JOIN sizes sb ON doc_b = sb.doc_id
-        |WHERE shared * 10 >= least(sa.n, sb.n) * 8
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // winnowing twin: FNV HUGEINT fold → signed BIGINT BEFORE the window
-    // min (Spark's min is over the signed value), full windows only
-    "dedup_winnow_fp" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |g AS (SELECT doc_id, start - 1 AS pos,
-        |        array_to_string(t[start:start+4], ' ') AS gram
-        |      FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 4)) AS start
-        |            FROM tok WHERE len(t) >= 5) z),
-        |h AS (SELECT doc_id, pos,
-        |        CAST(CASE WHEN hu >= CAST(9223372036854775808 AS HUGEINT)
-        |                  THEN hu - CAST(18446744073709551616 AS HUGEINT) ELSE hu END AS BIGINT) AS h
-        |      FROM (SELECT doc_id, pos,
-        |              list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |                list_transform(range(1, length(gram) + 1),
-        |                  i -> ascii(substr(gram, CAST(i AS INTEGER), 1)))),
-        |                (acc, c) -> (xor(acc, CAST(c AS HUGEINT)) * 1099511628211) % 18446744073709551616) AS hu
-        |            FROM g) y),
-        |win AS (SELECT doc_id,
-        |          min(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |            ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
-        |          count(*) OVER (PARTITION BY doc_id ORDER BY pos
-        |            ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS n_in_win
-        |        FROM h)
-        |SELECT DISTINCT doc_id, fp FROM win WHERE n_in_win = 4
-        |ORDER BY doc_id, fp""".stripMargin,
-
-    "dedup_winnow_pairs" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |g AS (SELECT doc_id, start - 1 AS pos,
-        |        array_to_string(t[start:start+4], ' ') AS gram
-        |      FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 4)) AS start
-        |            FROM tok WHERE len(t) >= 5) z),
-        |h AS (SELECT doc_id, pos,
-        |        CAST(CASE WHEN hu >= CAST(9223372036854775808 AS HUGEINT)
-        |                  THEN hu - CAST(18446744073709551616 AS HUGEINT) ELSE hu END AS BIGINT) AS h
-        |      FROM (SELECT doc_id, pos,
-        |              list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |                list_transform(range(1, length(gram) + 1),
-        |                  i -> ascii(substr(gram, CAST(i AS INTEGER), 1)))),
-        |                (acc, c) -> (xor(acc, CAST(c AS HUGEINT)) * 1099511628211) % 18446744073709551616) AS hu
-        |            FROM g) y),
-        |fp0 AS (SELECT DISTINCT doc_id, fp FROM (
-        |        SELECT doc_id,
-        |          min(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |            ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
-        |          count(*) OVER (PARTITION BY doc_id ORDER BY pos
-        |            ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS n_in_win
-        |        FROM h) w WHERE n_in_win = 4),
-        |fp AS (SELECT doc_id, fp FROM (
-        |        SELECT doc_id, fp, count(*) OVER (PARTITION BY fp) AS dfc FROM fp0) zc
-        |      WHERE dfc <= 2000)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
-        |FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2 HAVING count(*) >= 2
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // divergence twin: identical floored-ppm distributions; the absent
-    // mass enters as Q_total − Σ_present q (never a source × vocab join)
-    "corpus_divergence" ->
-      """WITH st AS (SELECT source, unnest(string_split(text, ' ')) AS token FROM documents),
-        |sc AS (SELECT source, token, count(*) AS n FROM st GROUP BY 1, 2),
-        |corpus AS (SELECT token, CAST(sum(n) AS BIGINT) AS m FROM sc GROUP BY 1),
-        |mt AS (SELECT CAST(sum(m) AS BIGINT) AS mm FROM corpus),
-        |q AS (SELECT token, m * 1000000 // mt.mm AS q_ppm FROM corpus CROSS JOIN mt),
-        |qt AS (SELECT CAST(sum(q_ppm) AS BIGINT) AS qtot FROM q),
-        |ns AS (SELECT source, CAST(sum(n) AS BIGINT) AS n_tokens,
-        |         CAST(count(*) AS BIGINT) AS n_distinct FROM sc GROUP BY 1),
-        |per AS (SELECT sc.source,
-        |    CAST(sum(abs(sc.n * 1000000 // ns.n_tokens - q.q_ppm)) AS BIGINT) AS present,
-        |    CAST(sum(q.q_ppm) AS BIGINT) AS q_present
-        |  FROM sc JOIN q USING (token) JOIN ns USING (source) GROUP BY 1)
-        |SELECT per.source, ns.n_tokens, ns.n_distinct,
-        |  CAST((per.present + (qt.qtot - per.q_present)) // 2 AS BIGINT) AS tv_ppm
-        |FROM per JOIN ns USING (source) CROSS JOIN qt ORDER BY source""".stripMargin,
-
-    "corpus_diff" ->
-      """WITH after AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id < 40 THEN text || ' v2' ELSE text END AS text
-        |  FROM documents WHERE doc_id >= 20
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id < 10),
-        |b AS (SELECT doc_id, md5(text) AS hb FROM documents),
-        |a AS (SELECT doc_id, md5(text) AS ha FROM after)
-        |SELECT coalesce(b.doc_id, a.doc_id) AS doc_id,
-        |  CASE WHEN b.doc_id IS NULL THEN 'added'
-        |       WHEN a.doc_id IS NULL THEN 'removed'
-        |       WHEN hb = ha THEN 'unchanged'
-        |       ELSE 'modified' END AS change
-        |FROM b FULL OUTER JOIN a ON b.doc_id = a.doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    // quality-bucket twin: the text_classifier HUGEINT fold per token,
-    // then the integer quantile gate rank*100 <= n*50
-    "pipeline_quality_buckets" ->
-      """WITH tok AS (SELECT doc_id, source, unnest(string_split(text, ' ')) AS t FROM documents),
-        |w AS (SELECT doc_id, source,
-        |  CAST(((list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |      list_transform(range(1, length(t) + 1),
-        |        i -> ascii(substr(t, CAST(i AS INTEGER), 1)))),
-        |      (acc, c) -> (xor(acc, CAST(c AS HUGEINT)) * 1099511628211) % 18446744073709551616)
-        |    % 1024) * 2654435761 % 2001 - 1000) AS BIGINT) AS w
-        |  FROM tok),
-        |scored AS (SELECT doc_id, source, CAST(sum(w) AS BIGINT) AS score_milli
-        |           FROM w GROUP BY 1, 2),
-        |ranked AS (SELECT *,
-        |    row_number() OVER (PARTITION BY source ORDER BY score_milli DESC, doc_id) AS rk,
-        |    count(*) OVER (PARTITION BY source) AS n
-        |  FROM scored)
-        |SELECT doc_id, source, score_milli FROM ranked
-        |WHERE rk * 100 <= n * 50 ORDER BY doc_id""".stripMargin,
-
-    // DSIR twin: FNV HUGEINT fold % 4096 (2^64 ≡ 0 mod 4096, so the
-    // unsigned mod equals Spark's signed pmod), integer ppm weights
-    "sample_dsir_topk" ->
-      """WITH tok AS (SELECT doc_id, source, string_split(text, ' ') AS t FROM documents),
-        |g AS (SELECT doc_id, source,
-        |        unnest(list_transform(list_zip(t[1:len(t)-1], t[2:len(t)]),
-        |          x -> x[1] || ' ' || x[2])) AS gram
-        |      FROM tok WHERE len(t) >= 2),
-        |b AS (SELECT doc_id, source,
-        |        CAST(list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |          list_transform(range(1, length(gram) + 1),
-        |            i -> ascii(substr(gram, CAST(i AS INTEGER), 1)))),
-        |          (acc, c) -> (xor(acc, CAST(c AS HUGEINT)) * 1099511628211) % 18446744073709551616)
-        |          % 4096 AS BIGINT) AS bucket
-        |      FROM g),
-        |tc AS (SELECT bucket, count(*) AS t_count FROM b WHERE source = 'src0' GROUP BY 1),
-        |rc AS (SELECT bucket, count(*) AS r_count FROM b WHERE source <> 'src0' GROUP BY 1),
-        |w AS (SELECT rc.bucket, coalesce(tc.t_count, 0) * 1000000 // rc.r_count AS w_ppm
-        |      FROM rc LEFT JOIN tc ON rc.bucket = tc.bucket),
-        |tf AS (SELECT doc_id, bucket, count(*) AS tf FROM b WHERE source <> 'src0' GROUP BY 1, 2)
-        |SELECT tf.doc_id, CAST(sum(tf.tf * w.w_ppm) // sum(tf.tf) AS BIGINT) AS dsir_score_ppm
-        |FROM tf JOIN w ON tf.bucket = w.bucket
-        |GROUP BY tf.doc_id
-        |ORDER BY dsir_score_ppm DESC, tf.doc_id LIMIT 100""".stripMargin,
-
-    "corpus_top_ngrams" ->
-      """SELECT gram, count(*) AS n_occurrences
-        |FROM (SELECT unnest(list_transform(list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-        |        x -> x[1] || ' ' || x[2] || ' ' || x[3])) AS gram
-        |      FROM (SELECT string_split(text, ' ') AS t FROM documents) z
-        |      WHERE len(t) >= 3)
-        |GROUP BY gram ORDER BY n_occurrences DESC, gram LIMIT 20""".stripMargin,
-
-    // boilerplate twin: distinct per-doc 3-grams, df across docs, the
-    // same integer ppm (all counts nonneg, so // matches div)
-    "text_boilerplate" ->
-      """WITH g AS (SELECT doc_id,
-        |    unnest(list_distinct(list_transform(list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-        |      x -> x[1] || ' ' || x[2] || ' ' || x[3]))) AS gram
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents) z
-        |  WHERE len(t) >= 3),
-        |d AS (SELECT gram, count(*) AS gram_df FROM g GROUP BY gram),
-        |p AS (SELECT g.doc_id, count(*) AS n_grams,
-        |        sum(CASE WHEN d.gram_df >= 4 THEN 1 ELSE 0 END) AS n_common
-        |      FROM g JOIN d USING (gram) GROUP BY g.doc_id)
-        |SELECT doc_id, CAST(coalesce(p.n_grams, 0) AS BIGINT) AS n_grams,
-        |  CAST(coalesce(p.n_common, 0) AS BIGINT) AS n_common,
-        |  CAST(coalesce(p.n_common * 1000000 // p.n_grams, 0) AS BIGINT) AS boilerplate_ppm
-        |FROM documents LEFT JOIN p USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-    // topic twin: the hash-embedding CTEs (REAL list form) feed the
-    // unrolled-Lloyd kmeans CTEs, then the same argmax-assign shape as
-    // every IVF twin, then integer c-TF-IDF
-    "topic_clusters" ->
-      s"""$topicAsgCtes,
-         |sizes AS (SELECT topic_id, COUNT(*) AS n_docs FROM asg GROUP BY topic_id),
-         |terms AS (SELECT a.topic_id, tok.t AS term FROM tok JOIN asg a USING (doc_id)),
-         |ctf AS (SELECT topic_id, term, COUNT(*) AS ctf FROM terms GROUP BY 1, 2),
-         |ttok AS (SELECT topic_id, COUNT(*) AS topic_tokens FROM terms GROUP BY 1),
-         |tdf AS (SELECT term, COUNT(*) AS topic_df FROM ctf GROUP BY term),
-         |scored AS (SELECT c.topic_id, c.term,
-         |    (c.ctf * 1000000 // t.topic_tokens) * (8 // d.topic_df) AS score_fp
-         |  FROM ctf c JOIN ttok t USING (topic_id) JOIN tdf d USING (term)),
-         |ranked AS (SELECT *, row_number() OVER (PARTITION BY topic_id
-         |    ORDER BY score_fp DESC, term) AS rank FROM scored)
-         |SELECT r.topic_id, s.n_docs, CAST(r.rank AS BIGINT) AS rank, r.term,
-         |  CAST(r.score_fp AS BIGINT) AS score_fp
-         |FROM ranked r JOIN sizes s USING (topic_id)
-         |WHERE r.rank <= 3 ORDER BY r.topic_id, r.rank""".stripMargin,
-
-    // purity twin: the shared assignment CTEs + a (topic, lang) count
-    // with the same (n DESC, lang DESC) dominant-label tie-break
-    "topic_purity" ->
-      s"""$topicAsgCtes,
-         |bl AS (SELECT a.topic_id, d.lang, COUNT(*) AS n
-         |  FROM asg a JOIN documents d USING (doc_id) GROUP BY 1, 2),
-         |tp AS (SELECT topic_id, lang, CAST(n AS BIGINT) AS n,
-         |    row_number() OVER (PARTITION BY topic_id
-         |      ORDER BY n DESC, lang DESC) AS rn,
-         |    CAST(SUM(n) OVER (PARTITION BY topic_id) AS BIGINT) AS n_docs
-         |  FROM bl)
-         |SELECT topic_id, n_docs, lang AS top_lang, n AS n_top,
-         |  (n * 1000000) // n_docs AS purity_ppm
-         |FROM tp WHERE rn = 1 ORDER BY topic_id""".stripMargin,
-
-    // grouping-sets twin: same three grains, same composite GROUPING
-    // bitmask convention (leftmost argument = most significant bit)
-    "q_grouping_sets" ->
-      """WITH wal AS (SELECT event_type,
-        |    epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day,
-        |    CAST(floor(value * 1000 + 0.5) AS BIGINT) AS vm
-        |  FROM events)
-        |SELECT CAST(GROUPING(event_type, chunk_day) AS BIGINT) AS gid,
-        |  event_type, chunk_day, COUNT(*) AS n,
-        |  CAST(SUM(vm) AS BIGINT) AS sum_milli
-        |FROM wal GROUP BY GROUPING SETS ((event_type), (chunk_day), ())
-        |ORDER BY gid, event_type, chunk_day""".stripMargin,
-
-    // unpivot twin: ANSI UNPIVOT in the FROM clause
-    "q_unpivot_daily" ->
-      """WITH wal AS (SELECT
-        |    epoch_ns(ts) // 86400000000000 - 19723 AS chunk_day,
-        |    CAST(floor(value * 1000 + 0.5) AS BIGINT) AS vm
-        |  FROM events),
-        |wide AS (SELECT chunk_day, COUNT(*) AS n_events,
-        |    CAST(SUM(vm) AS BIGINT) AS sum_milli,
-        |    CAST(MAX(vm) AS BIGINT) AS max_milli
-        |  FROM wal GROUP BY 1)
-        |SELECT chunk_day, metric, value FROM wide
-        |UNPIVOT (value FOR metric IN (n_events, sum_milli, max_milli))
-        |ORDER BY chunk_day, metric""".stripMargin,
-
-    // hash-embedding twin: the classifier twin's FNV HUGEINT fold per
-    // token; bucket = % 64 (2^64 ≡ 0 mod 64 so unsigned ≡ signed pmod),
-    // sign = bit 6 ((hv // 64) % 2 ≡ Spark's (h >>> 6) & 1), dense csv
-    // over the 0..63 grid with 0 for untouched buckets
-    "text_hash_embedding" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
-        |h AS (SELECT doc_id,
-        |  list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT),
-        |      list_transform(range(1, length(t) + 1),
-        |        i -> ascii(substr(t, CAST(i AS INTEGER), 1)))),
-        |      (acc, c) -> (xor(acc, CAST(c AS HUGEINT)) * 1099511628211) % 18446744073709551616) AS hv
-        |  FROM tok),
-        |b AS (SELECT doc_id, CAST(hv % 64 AS BIGINT) AS bkt,
-        |        CASE WHEN (hv // 64) % 2 = 0 THEN 1 ELSE -1 END AS s FROM h),
-        |agg AS (SELECT doc_id, bkt, sum(s) AS v FROM b GROUP BY 1, 2),
-        |grid AS (SELECT d.doc_id, dims.b FROM (SELECT doc_id FROM documents) d
-        |         CROSS JOIN (SELECT unnest(range(0, 64)) AS b) dims)
-        |SELECT g.doc_id,
-        |  array_to_string(list(CAST(CAST(coalesce(a.v, 0) AS BIGINT) AS VARCHAR)
-        |    ORDER BY g.b), ',') AS emb_csv
-        |FROM grid g LEFT JOIN agg a ON a.doc_id = g.doc_id AND a.bkt = g.b
-        |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin,
-
-    // overlap twin: distinct (source, gram) sets, self-join on gram with
-    // src_a < src_b, integer Jaccard over the union size
-    "source_overlap" ->
-      """WITH sg AS (SELECT DISTINCT src, gram FROM (
-        |    SELECT source AS src,
-        |      unnest(list_distinct(list_transform(list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-        |        x -> x[1] || ' ' || x[2] || ' ' || x[3]))) AS gram
-        |    FROM (SELECT source, string_split(text, ' ') AS t FROM documents) z
-        |    WHERE len(t) >= 3)),
-        |sz AS (SELECT src, count(*) AS n FROM sg GROUP BY src),
-        |i AS (SELECT a.src AS source_a, b.src AS source_b, count(*) AS n_common
-        |      FROM sg a JOIN sg b ON a.gram = b.gram AND a.src < b.src
-        |      GROUP BY 1, 2)
-        |SELECT i.source_a, i.source_b,
-        |  CAST(sa.n AS BIGINT) AS n_a, CAST(sb.n AS BIGINT) AS n_b,
-        |  CAST(i.n_common AS BIGINT) AS n_common,
-        |  CAST(i.n_common * 1000000 // (sa.n + sb.n - i.n_common) AS BIGINT) AS jaccard_ppm
-        |FROM i JOIN sz sa ON sa.src = i.source_a
-        |  JOIN sz sb ON sb.src = i.source_b
-        |ORDER BY source_a, source_b""".stripMargin,
-
-    // approx-overlap twin: the exact sizes restated + the bound booleans
-    // asserted true — a drifting sketch or broken inclusion-exclusion
-    // flips a boolean and hashes red
-    "source_overlap_approx" ->
-      """WITH sg AS (SELECT DISTINCT src, gram FROM (
-        |    SELECT source AS src,
-        |      unnest(list_distinct(list_transform(list_zip(t[1:len(t)-2], t[2:len(t)-1], t[3:len(t)]),
-        |        x -> x[1] || ' ' || x[2] || ' ' || x[3]))) AS gram
-        |    FROM (SELECT source, string_split(text, ' ') AS t FROM documents) z
-        |    WHERE len(t) >= 3)),
-        |sz AS (SELECT src, count(*) AS n FROM sg GROUP BY src),
-        |i AS (SELECT a.src AS source_a, b.src AS source_b, count(*) AS n_common
-        |      FROM sg a JOIN sg b ON a.gram = b.gram AND a.src < b.src
-        |      GROUP BY 1, 2)
-        |SELECT i.source_a, i.source_b,
-        |  CAST(sa.n AS BIGINT) AS n_a, CAST(sb.n AS BIGINT) AS n_b,
-        |  CAST(i.n_common AS BIGINT) AS n_common,
-        |  true AS a_within_5pct, true AS b_within_5pct,
-        |  true AS common_within_5pct_of_union
-        |FROM i JOIN sz sa ON sa.src = i.source_a
-        |  JOIN sz sb ON sb.src = i.source_b
-        |ORDER BY source_a, source_b""".stripMargin,
-
-    // script-profile twin: identical literal-character classes (the one
-    // form Java regex and RE2 share), list_position argmax = first-wins
-    "text_script_profile" -> {
-      val classes = graft.ops.TextAnalysis.scriptRanges
-      val cnt = classes.map { case (n, cls) =>
-        s"CAST(len(regexp_extract_all(text, '$cls')) AS BIGINT) AS n_$n"
-      }.mkString(",\n|    ")
-      val names = classes.map { case (n, _) => s"'$n'" }.mkString("[", ", ", "]")
-      val cols = classes.map { case (n, _) => s"n_$n" }.mkString("[", ", ", "]")
-      val great = classes.map { case (n, _) => s"n_$n" }.mkString("greatest(", ", ", ")")
-      s"""WITH c AS (SELECT doc_id,
-         |    $cnt,
-         |    CAST(length(text) AS BIGINT) AS n_chars_total
-         |  FROM documents)
-         |SELECT *, CASE WHEN $great = 0 THEN 'none'
-         |  ELSE $names[list_position($cols, $great)] END AS dominant_script
-         |FROM c ORDER BY doc_id""".stripMargin
-    },
-
-    "profile_columns" ->
-      """SELECT 'doc_id' AS column_name, COUNT(*) AS n_rows,
-        |  CAST(SUM(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-        |  COUNT(DISTINCT doc_id) AS n_distinct FROM documents
-        |UNION ALL
-        |SELECT 'lang', COUNT(*),
-        |  CAST(SUM(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |  COUNT(DISTINCT lang) FROM documents
-        |UNION ALL
-        |SELECT 'source', COUNT(*),
-        |  CAST(SUM(CASE WHEN source IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |  COUNT(DISTINCT source) FROM documents
-        |UNION ALL
-        |SELECT 'n_chars', COUNT(*),
-        |  CAST(SUM(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |  COUNT(DISTINCT n_chars) FROM documents
-        |ORDER BY column_name""".stripMargin,
-
-    // skew twin: counts + prefix shares over the same deterministic order
-    "profile_skew" ->
-      """WITH c AS (SELECT user_id AS key, count(*) AS cnt FROM events GROUP BY 1),
-        |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM c),
-        |r AS (SELECT key, cnt, row_number() OVER (ORDER BY cnt DESC, key) AS rank
-        |      FROM c)
-        |SELECT CAST(rank AS INT) AS rank, key, cnt,
-        |  CAST(cnt * 1000000 // total AS BIGINT) AS share_ppm,
-        |  CAST(sum(cnt) OVER (ORDER BY rank) * 1000000 // total AS BIGINT)
-        |    AS cum_share_ppm
-        |FROM r CROSS JOIN t WHERE rank <= 5 ORDER BY rank""".stripMargin,
-
-    "profile_constraints" ->
-      """WITH v AS (SELECT COUNT(*) AS n_rows,
-        |    CAST(SUM(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v1,
-        |    CAST(SUM(CASE WHEN lang IN ('en','de','fr','es','zh','ja')
-        |      THEN 0 ELSE 1 END) AS BIGINT) AS v2,
-        |    CAST(SUM(CASE WHEN n_chars > 0 THEN 0 ELSE 1 END) AS BIGINT) AS v3,
-        |    CAST(SUM(CASE WHEN length(text) = n_chars THEN 0 ELSE 1 END) AS BIGINT) AS v4,
-        |    CAST(SUM(CASE WHEN length(text) >= 200 THEN 0 ELSE 1 END) AS BIGINT) AS v5
-        |  FROM documents)
-        |SELECT "constraint", n_rows, n_violations, n_violations = 0 AS passed FROM (
-        |  SELECT 'doc_id_not_null' AS "constraint", n_rows, v1 AS n_violations FROM v
-        |  UNION ALL SELECT 'lang_known', n_rows, v2 FROM v
-        |  UNION ALL SELECT 'n_chars_positive', n_rows, v3 FROM v
-        |  UNION ALL SELECT 'n_chars_matches_text', n_rows, v4 FROM v
-        |  UNION ALL SELECT 'text_min_length', n_rows, v5 FROM v) t
-        |ORDER BY "constraint"""".stripMargin,
-
-    "corpus_profile" ->
-      """SELECT source, count(*) AS n_docs,
-        |  CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS n_tokens,
-        |  count(DISTINCT md5(text)) AS n_distinct,
-        |  count(DISTINCT lang) AS n_langs,
-        |  CAST(max(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS max_doc_tokens,
-        |  count(*) - count(DISTINCT md5(text)) AS n_exact_dups
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-    // approx twin: exact aggregates checked directly, HLL estimates via
-    // their error-bound booleans (same stance as q_quantiles_approx)
-    "corpus_profile_approx" ->
-      """SELECT source, count(*) AS n_docs,
-        |  CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS n_tokens,
-        |  true AS distinct_ok, true AS langs_ok
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-    // snapshot-only twin: initial_only keeps only op='r' rows; the
-    // scoped filter condition applies (canonical name matches)
-    "cdc_config_snapshot_only" ->
-      s"""SELECT event_id AS lsn, $opCaseSql AS op,
-         |  'timescaledb.public.events' AS topic, event_id, user_id
-         |FROM events
-         |WHERE $opCaseSql = 'r' AND event_id % 2 = 0
-         |ORDER BY lsn""".stripMargin,
-
-    // config-pipeline twin: read gate off → c/u/d survive (m/$ are off
-    // by reference default), includes match, filter condition applied,
-    // configured topic prefix
-    "cdc_config_pipeline" ->
-      s"""SELECT event_id AS lsn, $opCaseSql AS op,
-         |  'cfg.public.events' AS topic, event_id, user_id
-         |FROM events
-         |WHERE $opCaseSql IN ('c', 'u', 'd') AND user_id > 3
-         |ORDER BY lsn""".stripMargin
-  )
+  lazy val oracleSql: Map[String, String] =
+    Query.registry.map { case (name, q) => name -> q.oracle }
 }

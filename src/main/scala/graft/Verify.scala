@@ -50,13 +50,14 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(t => selected(t._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // keys sorted: two dumps of the same registry are byte-identical,
+    // whatever the map's iteration order
+    def obj(kv: Iterable[(String, String)]): String =
+      kv.toSeq.sortBy(_._1).map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(SparkEntry.oracleSql.filter(t => selected(t._1))))
     import scala.jdk.CollectionConverters._
-    val errJson = failures.asScala.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    Files.writeString(Paths.get(s"$outDir/errors.json"), obj(failures.asScala))
     if (!failures.isEmpty) {
       System.err.println(s"[verify] ${failures.size} quer(ies) FAILED — see $outDir/errors.json")
       spark.stop()

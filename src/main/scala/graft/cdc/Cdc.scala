@@ -1420,12 +1420,16 @@ object Cdc {
     val schemaJson = eventsEnvelopeSchemaJson
 
     // row image: alphabetical keys; props embeds raw (it IS json); money
-    // as integer cents (representation-stable across engines)
+    // as integer cents (representation-stable across engines). A null
+    // field renders as JSON null: `concat` is null if any input is, and
+    // a null envelope is a tombstone to the wire sinks (an unchanged-
+    // TOAST props decodes to null on the pgoutput path)
+    def orJsonNull(c: Column): Column = coalesce(c.cast(StringType), lit("null"))
     val rowJson = concat(
       lit("{\"event_id\":"), col("event_id"),
-      lit(",\"props\":"), col("props"),
-      lit(",\"user_id\":"), col("user_id"),
-      lit(",\"value_cents\":"), floor(col("value") * 100.0 + 0.5).cast(LongType),
+      lit(",\"props\":"), orJsonNull(col("props")),
+      lit(",\"user_id\":"), orJsonNull(col("user_id")),
+      lit(",\"value_cents\":"), orJsonNull(floor(col("value") * 100.0 + 0.5).cast(LongType)),
       lit("}"))
     val srcJson = sourceJson(dbName, "public", "events",
       col("lsn"), col("ts_ms"), snapshot = false, txId = Some(col("xid")))

@@ -51,7 +51,7 @@ final case class KafkaWireSink(
     // SASL PLAIN (`kafka.go:53-66`, sarama SASLTypePlaintext): when a
     // username is set, every connection runs SaslHandshake(v1) +
     // SaslAuthenticate(v0) before its first Produce. Other mechanisms
-    // (SCRAM, GSSAPI) stay native-path-only.
+    // (SCRAM, GSSAPI) are unsupported.
     saslUsername: String = "",
     saslPassword: String = "",
     // TLS (`kafka.go:66-77`, sarama Net.TLS): JDK SSLEngine over the

@@ -6,10 +6,9 @@ import org.apache.spark.sql.{DataFrame, Row}
   * `internal/eventing/sink/sinkmanager.go`): named sink factories with a
   * lifecycle, pluggable by config.
   *
-  * Spark-first: built-in sinks (console, parquet, kafka) use native
-  * `writeStream.format(...)` — exactly-once via checkpoint where the
-  * format supports it. Everything else (the reference's NATS/Redis/
-  * Kinesis/SQS/HTTP) plugs in as a `foreachBatch` emitter; retry with
+  * Spark-first: console and parquet use Spark's own writers. Everything
+  * else (the reference's Kafka/NATS/Redis/Kinesis/SQS/HTTP) plugs in as
+  * a `foreachBatch` emitter over its wire protocol; retry with
   * exponential backoff mirrors `eventemitter.go:107,145-153` (8 tries).
   */
 trait Sink extends Serializable {
@@ -174,8 +173,8 @@ object Sinks {
         val mechanism = p("sink.kafka.sasl.mechanism", "PLAIN").toUpperCase
         if (saslOn && mechanism != "PLAIN")
           throw new IllegalArgumentException(
-            s"kafka wire client implements SASL PLAIN only, got '$mechanism'; " +
-              "other mechanisms need the native format(\"kafka\") path")
+            s"kafka sink implements SASL PLAIN only, got '$mechanism'; " +
+              "other mechanisms are unsupported")
         // sasl.enabled with no username must FAIL, not silently produce
         // unauthenticated (the emit-side handshake is gated on a
         // non-empty user, so an empty one would disable SASL entirely)
@@ -187,13 +186,13 @@ object Sinks {
           saslUsername = if (saslOn) p("sink.kafka.sasl.user") else "",
           saslPassword = if (saslOn) p("sink.kafka.sasl.password") else "",
           // sink.kafka.tls.* ≙ kafka.go:66-77 (enabled + skipverify);
-          // clientauth (mTLS) remains native-path-only — fail loudly
+          // clientauth (mTLS) is unsupported — fail loudly
           tlsEnabled = p("sink.kafka.tls.enabled", "false").toBoolean,
           tlsSkipVerify = {
             if (p("sink.kafka.tls.clientauth", "0") != "0")
               throw new IllegalArgumentException(
-                "kafka wire client has no mTLS client auth; " +
-                  "sink.kafka.tls.clientauth needs the native format(\"kafka\") path")
+                "kafka sink has no mTLS client auth; " +
+                  "sink.kafka.tls.clientauth is unsupported")
             p("sink.kafka.tls.skipverify", "false").toBoolean
           })
       case "nats" => NatsSink(NatsSinkConfig(
@@ -217,7 +216,7 @@ object Sinks {
         retryBackoffMaxMs = p("sink.redis.retries.backoff.max", "512").toLong,
         tls = p("sink.redis.tls.enabled", "false").toBoolean,
         tlsSkipVerify = {
-          // mTLS client certs stay native-path like the kafka sink —
+          // mTLS client certs are unsupported, as for the kafka sink —
           // fail LOUDLY rather than silently connecting without them
           if (p("sink.redis.tls.clientauth", "0") != "0")
             throw new IllegalArgumentException(
@@ -334,43 +333,6 @@ final case class ParquetSink(outDir: String) extends Sink {
     batch.write.mode("append").parquet(outDir)
 }
 
-/** Kafka sink — S9 (`internal/eventing/sink/kafka/kafka.go:40-125`).
-  * Spark-first: the native `format("kafka")` streaming sink (exactly-once
-  * per topic-partition with checkpointing + idempotent producer), not a
-  * per-event client. Key/value columns must be the envelope JSON
-  * (`Cdc.envelopeJson` provides both); topic from the naming strategy.
-  * Config assembly mirrors the reference's SASL/TLS/idempotence knobs.
-  */
-final case class KafkaSinkConfig(
-    bootstrapServers: String,
-    idempotent: Boolean = false,
-    saslMechanism: Option[String] = None,
-    saslJaas: Option[String] = None,
-    tls: Boolean = false) {
-  def options: Map[String, String] = {
-    val base = Map("kafka.bootstrap.servers" -> bootstrapServers)
-    val idem = if (idempotent) Map("kafka.enable.idempotence" -> "true") else Map.empty
-    val sasl = saslMechanism.map("kafka.sasl.mechanism" -> _).toMap ++
-      saslJaas.map("kafka.sasl.jaas.config" -> _).toMap
-    val sec = if (tls) Map("kafka.security.protocol" ->
-      (if (saslMechanism.isDefined) "SASL_SSL" else "SSL"))
-    else if (saslMechanism.isDefined) Map("kafka.security.protocol" -> "SASL_PLAINTEXT")
-    else Map.empty[String, String]
-    base ++ idem ++ sasl ++ sec
-  }
-
-  /** The exact frame the Kafka sink serializes: (topic, key, value) —
-    * the wire contract of `format("kafka")`. Split out so the shape is
-    * assertable without a broker. */
-  def wirePlan(df: DataFrame): DataFrame =
-    df.selectExpr("topic", "CAST(key AS STRING) AS key", "CAST(envelope AS STRING) AS value")
-
-  /** Attach to a streaming envelope DataFrame carrying (topic, key,
-    * envelope) columns. Caller starts the query with its checkpoint. */
-  def writer(df: DataFrame): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    options.foldLeft(wirePlan(df).writeStream.format("kafka")) { case (w, (k, v)) => w.option(k, v) }
-}
-
 /** HTTP sink option assembly — S14
   * (`internal/eventing/sink/http/http.go:50-100`): authentication
   * none/basic/header, TLS skip-verify/client-auth. The header map is the
@@ -434,11 +396,10 @@ final case class HttpSink(config: HttpSinkConfig) extends Sink {
   }
 }
 
-/** NATS sink option assembly — S10
+/** NATS sink configuration — S10
   * (`internal/eventing/sink/nats/nats.go:44-64`): address + one of
-  * userinfo / credentials / jwt authorization; unknown types fail
-  * loudly. The assembled option map is the connect contract a JetStream
-  * emitter would use. */
+  * userinfo / credentials / jwt authorization. The wire client
+  * implements userinfo only; [[NatsSink]] fails loudly on the others. */
 final case class NatsSinkConfig(
     address: String = "nats://localhost:4222",
     authorization: String = "userinfo",
@@ -453,21 +414,9 @@ final case class NatsSinkConfig(
     // keeps the fire-and-forget core-NATS PUB + PING-flush form
     jetStream: Boolean = true,
     // ack timeout, c.Sink.Nats.Timeout parity (nats.go:113-116)
-    timeoutSeconds: Int = 5) {
-  def options: Map[String, String] = {
-    val auth = authorization match {
-      case "userinfo" => Map("user" -> username, "password" -> password)
-      case "credentials" => Map("credentials.certificate" -> credentialsCertificate,
-        "credentials.seeds" -> credentialsSeeds.mkString(","))
-      case "jwt" => Map("jwt" -> jwt, "jwt.seed" -> jwtSeed)
-      case other =>
-        throw new IllegalArgumentException(s"nats AuthorizationType '$other' doesn't exist")
-    }
-    Map("address" -> address, "authorization" -> authorization) ++ auth
-  }
-}
+    timeoutSeconds: Int = 5)
 
-/** Redis sink option assembly — S11
+/** Redis sink configuration — S11
   * (`internal/eventing/sink/redis/redis.go:45-80`): network/address/
   * auth/db plus the client's retry-backoff knobs (the reference reuses
   * go-redis's retrier rather than `Sinks.withRetry`). */
@@ -497,17 +446,7 @@ final case class RedisSinkConfig(
     // exist. Accepted and validated for config-surface parity.
     poolSize: Int = 0,
     poolTimeoutMs: Long = 0,
-    idleTimeoutMs: Long = 0) {
-  def options: Map[String, String] = Map(
-    "network" -> network, "addr" -> address, "password" -> password,
-    "db" -> database.toString, "maxRetries" -> retriesMax.toString,
-    "minRetryBackoffMs" -> retryBackoffMinMs.toString,
-    "maxRetryBackoffMs" -> retryBackoffMaxMs.toString,
-    "tls" -> tls.toString, "tlsSkipVerify" -> tlsSkipVerify.toString,
-    "dialTimeoutMs" -> dialTimeoutMs.toString,
-    "readTimeoutMs" -> readTimeoutMs.toString,
-    "poolSize" -> poolSize.toString)
-}
+    idleTimeoutMs: Long = 0)
 
 /** Minimal RESP2 client for the reference's Redis emit
   * (`redis.go:111-131`: `XADD <topic> * key <key> envelope <envelope>`
@@ -777,9 +716,10 @@ object AwsSigV4 {
   }
 }
 
-/** Kinesis sink option assembly — S12
+/** Kinesis sink configuration — S12
   * (`internal/eventing/sink/awskinesis/awskinesis.go:49-62,143`): the
-  * stream name is mandatory; the partition key per record is the TOPIC
+  * stream name is mandatory (checked before the first request); the
+  * partition key per record is the TOPIC
   * NAME (per-topic ordering, same contract as the reference). */
 final case class KinesisSinkConfig(
     streamName: Option[String],
@@ -791,20 +731,13 @@ final case class KinesisSinkConfig(
     accessKeyId: String = "",
     secretAccessKey: String = "",
     sessionToken: String = "") {
-  def options: Map[String, String] = {
-    val name = streamName.getOrElse(
-      throw new IllegalArgumentException("kinesis stream name is not provided"))
-    Map("streamName" -> name, "streamCreate" -> streamCreate.toString) ++
-      region.map("region" -> _) ++ shardCount.map("shardCount" -> _.toString) ++
-      streamMode.map("streamMode" -> _) ++
-      (if (endpoint.nonEmpty) Map("endpoint" -> endpoint) else Map.empty)
-  }
   /** awskinesis.go:143: PartitionKey = topic name. */
   def partitionKey(topicName: String): String = topicName
 }
 
-/** SQS sink option assembly — S13
-  * (`internal/eventing/sink/awssqs/awssqs.go:50-56,115-121`): FIFO
+/** SQS sink configuration — S13
+  * (`internal/eventing/sink/awssqs/awssqs.go:50-56,115-121`): the queue
+  * url is mandatory (checked at emit); FIFO
   * group id = topic name; the deduplication id derives from the
   * envelope (lsn + txId), the same content-keyed idempotence the
   * `cdc_sqs_dedup_id` query replicates column-side. */
@@ -815,12 +748,6 @@ final case class SqsSinkConfig(
     accessKeyId: String = "",
     secretAccessKey: String = "",
     sessionToken: String = "") {
-  def options: Map[String, String] = {
-    val url = queueUrl.getOrElse(
-      throw new IllegalArgumentException("sqs queue url is not provided"))
-    Map("queueUrl" -> url) ++ region.map("region" -> _) ++
-      (if (endpoint.nonEmpty) Map("endpoint" -> endpoint) else Map.empty)
-  }
   def messageGroupId(topicName: String): String = topicName
 }
 

@@ -415,6 +415,17 @@ object ConfigPipeline {
     * SCRAM-requiring or TLS-requiring server validates instead of
     * failing a config that would work. */
   def wireProbe(props: Map[String, String]): Seq[Option[String]] = {
+    val client = replicationDial(props)()
+    try client.identifySystem()
+    finally client.close()
+  }
+
+  /** The configured replication dial: `postgresql.connection`, with
+    * `postgresql.password` overriding a password in the connection
+    * string (the reference's precedence), and the sslmode's TLS posture.
+    * The config is parsed and validated now; each call of the result
+    * opens a connection and completes the startup handshake. */
+  private def replicationDial(props: Map[String, String]): () => graft.sources.PgReplicationClient = {
     val (host, port, db, user, passOpt) = connectionParts(props)
     val password = props.get("postgresql.password").filter(_.nonEmpty)
       .orElse(passOpt).getOrElse("")
@@ -424,10 +435,12 @@ object ConfigPipeline {
       case "verify-ca" => (Some(javax.net.ssl.SSLContext.getDefault), false)
       case "verify-full" => (Some(javax.net.ssl.SSLContext.getDefault), true)
     }
-    val client = new graft.sources.PgReplicationClient(host, port, user, db,
-      password = password, sslContext = sslCtx, sslVerifyHostname = verifyHost)
-    try { client.handshake(); client.identifySystem() }
-    finally client.close()
+    () => {
+      val client = new graft.sources.PgReplicationClient(host, port, user, db,
+        password = password, sslContext = sslCtx, sslVerifyHostname = verifyHost)
+      try { client.handshake(); client }
+      catch { case e: Throwable => client.close(); throw e }
+    }
   }
 
   /** Config-driven wire attach — the missing half of the first-attach
@@ -447,15 +460,7 @@ object ConfigPipeline {
     * per parquet commit). */
   def wireTail(spark: SparkSession, props: Map[String, String],
                startLsn: Long = 0L): Long = {
-    val (host, port, db, user, passOpt) = connectionParts(props)
-    val password = props.get("postgresql.password").filter(_.nonEmpty)
-      .orElse(passOpt).getOrElse("")
-    val (sslCtx, verifyHost) = sslMode(props) match {
-      case "disable" | "allow" | "prefer" => (None, false)
-      case "require" => (Some(graft.sources.PgWire.permissiveTlsContext()), false)
-      case "verify-ca" => (Some(javax.net.ssl.SSLContext.getDefault), false)
-      case "verify-full" => (Some(javax.net.ssl.SSLContext.getDefault), true)
-    }
+    val dial = replicationDial(props)
     val dir = props.getOrElse("postgresql.pgoutput.path",
       throw new IllegalArgumentException(
         "wireTail requires postgresql.pgoutput.path — the segment spool directory"))
@@ -463,9 +468,7 @@ object ConfigPipeline {
     val publication = props.getOrElse("postgresql.publication.name", "graft_pub")
     val framesPerSegment = int(props, "graft.wire.segment.frames", 1024)
     def connect(lsn: Long): graft.sources.PgReplicationClient = {
-      val c = new graft.sources.PgReplicationClient(host, port, user, db,
-        password = password, sslContext = sslCtx, sslVerifyHostname = verifyHost)
-      c.handshake()
+      val c = dial()
       c.startReplication(slot, publication, lsn)
       c
     }

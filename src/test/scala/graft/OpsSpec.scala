@@ -2558,7 +2558,7 @@ class OpsSpec extends SparkSpec {
       "sink.kafka.sasl.password" -> "kp"))
       === KafkaWireSink(bootstrap = "localhost:9092",
         saslUsername = "ku", saslPassword = "kp"))
-    // non-PLAIN mechanisms and mTLS client auth still fail loudly to the native path
+    // non-PLAIN mechanisms and mTLS client auth are unsupported: they fail loudly
     assertThrows[IllegalArgumentException] {
       Sinks.fromConfig(Map("sink.type" -> "kafka",
         "sink.kafka.sasl.enabled" -> "true",
@@ -2592,10 +2592,11 @@ class OpsSpec extends SparkSpec {
       "sink.http.url" -> "https://e", "sink.http.authentication.type" -> "basic",
       "sink.http.authentication.basic.username" -> "u")).asInstanceOf[HttpSink]
     assert(http.config.authenticationType === "basic")
-    // mandatory-key validation defers to the sink configs (reference wording)
+    // a missing mandatory stream name fails at the sink's first emit,
+    // before any request (reference wording)
     assertThrows[IllegalArgumentException] {
       Sinks.fromConfig(Map("sink.type" -> "kinesis")).asInstanceOf[KinesisSink]
-        .config.options
+        .emit(spark.emptyDataFrame, 0L)
     }
     assertThrows[IllegalArgumentException] {
       Sinks.fromConfig(Map("sink.type" -> "pulsar"))
@@ -2644,50 +2645,6 @@ class OpsSpec extends SparkSpec {
     assert(df.select(graft.model.Envelope.sanitizeTopic(col("t"))).head.getString(0) === "a_b_c_d")
   }
 
-  test("kafka sink config assembles security/idempotence options (kafka.go:40-125)") {
-    import graft.sinks.KafkaSinkConfig
-    val plain = KafkaSinkConfig("b:9092")
-    assert(plain.options === Map("kafka.bootstrap.servers" -> "b:9092"))
-    val saslSsl = KafkaSinkConfig("b:9092", idempotent = true,
-      saslMechanism = Some("SCRAM-SHA-256"), saslJaas = Some("jaas"), tls = true)
-    assert(saslSsl.options("kafka.security.protocol") === "SASL_SSL")
-    assert(saslSsl.options("kafka.enable.idempotence") === "true")
-    assert(saslSsl.options("kafka.sasl.mechanism") === "SCRAM-SHA-256")
-    val saslPlain = KafkaSinkConfig("b:9092", saslMechanism = Some("PLAIN"))
-    assert(saslPlain.options("kafka.security.protocol") === "SASL_PLAINTEXT")
-    val sslOnly = KafkaSinkConfig("b:9092", tls = true)
-    assert(sslOnly.options("kafka.security.protocol") === "SSL")
-  }
-
-  test("kafka writer emits the (topic, key, value) wire frame from real envelopes") {
-    import graft.sinks.KafkaSinkConfig
-    val cfg = KafkaSinkConfig("b:9092", idempotent = true)
-    // real envelope stream: topic from the naming strategy, key/envelope
-    // JSON from the CDC builder — the exact frame the reference's Kafka
-    // sink serializes (kafka.go:100-125)
-    val env = graft.cdc.Cdc.envelopeJson(spark, sf001)
-      .withColumn("topic",
-        graft.model.Envelope.topicName("graft", lit("public"), lit("events")))
-      .withColumn("key", to_json(struct(col("lsn"))))
-    val wire = cfg.wirePlan(env)
-    assert(wire.schema.fieldNames.toSeq === Seq("topic", "key", "value"))
-    assert(wire.schema.fields.forall(_.dataType ===
-      org.apache.spark.sql.types.StringType))
-    val r = wire.orderBy(expr("get_json_object(key, '$.lsn')").cast("long")).head
-    assert(r.getString(0) === "graft.public.events")
-    assert(r.getString(1).contains("\"lsn\""))
-    assert(r.getString(2).contains("\"payload\""))
-    // writer assembly on a real STREAMING frame attaches every option to
-    // the kafka format without needing a broker (start() is the only
-    // broker-bound step)
-    val stream = spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-      .select(lit("graft.public.events").as("topic"),
-        to_json(struct(col("value").as("lsn"))).as("key"),
-        lit("{}").as("envelope"))
-    val w = cfg.writer(stream)
-    assert(w != null)
-  }
-
   test("http sink config assembles auth headers (http.go:50-100)") {
     import graft.sinks.HttpSinkConfig
     assert(HttpSinkConfig("http://h/ep").headers === Map.empty)
@@ -2703,38 +2660,16 @@ class OpsSpec extends SparkSpec {
     assert(e.getMessage.contains("doesn't exist"))
   }
 
-  test("nats/redis/kinesis/sqs sink configs assemble reference option shapes") {
+  test("kinesis partition key and sqs message group id are the topic name") {
     import graft.sinks._
-    // NATS: the three authorization forms + fail-loud unknown
-    assert(NatsSinkConfig(username = "u", password = "p").options
-      === Map("address" -> "nats://localhost:4222", "authorization" -> "userinfo",
-        "user" -> "u", "password" -> "p"))
-    assert(NatsSinkConfig(authorization = "jwt", jwt = "j", jwtSeed = "s")
-      .options("jwt") === "j")
-    assert(NatsSinkConfig(authorization = "credentials",
-      credentialsCertificate = "cert", credentialsSeeds = Seq("s1", "s2"))
-      .options("credentials.seeds") === "s1,s2")
-    intercept[IllegalArgumentException] {
-      NatsSinkConfig(authorization = "oauth").options
-    }
-    // Redis: defaults mirror redis.go:45-80
-    val redis = RedisSinkConfig().options
-    assert(redis("addr") === "localhost:6379" && redis("network") === "tcp"
-      && redis("minRetryBackoffMs") === "8" && redis("maxRetryBackoffMs") === "512")
-    // Kinesis: mandatory stream name; partition key = topic name
+    // per-topic ordering, the reference's contract (awskinesis.go:143,
+    // awssqs.go:115-121)
     val kin = KinesisSinkConfig(Some("graft-stream"), region = Some("eu-west-1"),
       shardCount = Some(4))
-    assert(kin.options("streamName") === "graft-stream")
-    assert(kin.options("shardCount") === "4")
     assert(kin.partitionKey("graft.public.events") === "graft.public.events")
-    intercept[IllegalArgumentException] { KinesisSinkConfig(None).options }
-    // SQS: mandatory queue url; FIFO group id = topic name
     val sqs = SqsSinkConfig(Some("https://sqs/q.fifo"))
-    assert(sqs.options("queueUrl") === "https://sqs/q.fifo")
     assert(sqs.messageGroupId("graft.public.events") === "graft.public.events")
-    intercept[IllegalArgumentException] { SqsSinkConfig(None).options }
   }
-
   test("naming strategy: event and message topic names (debezium.go:20-60)") {
     val df = Seq(("public", "events")).toDF("s", "t")
     assert(df.select(graft.model.Envelope.topicName("graft", col("s"), col("t")))

@@ -26,6 +26,29 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.sameElements(batch))
   }
 
+  test("wire stream: an unchanged-TOAST update renders its envelope, props as JSON null") {
+    // every 3rd update's props rides the wire as unchanged TOAST ('u')
+    // and decodes to null; the row image must render it as null, never
+    // null out the whole envelope — the wire sinks send a null envelope
+    // as a tombstone, and a compacted topic would delete the row
+    import org.apache.spark.sql.functions.col
+    val dir = Files.createTempDirectory("graft-toast").toString
+    graft.cdc.PgOutput.encodeSegments(Tables.events(spark, sf001), toastEvery = 3)
+      .write.mode("overwrite").parquet(s"$dir/segments")
+    val (envelope, _) = graft.cdc.Cdc.eventsEnvelopeCols()
+    val q = StreamPipeline.envelopeStream(spark, sf001, pgoutputPath = Some(s"$dir/segments"))
+      .select(col("op"), col("props"), envelope.as("envelope"))
+      .writeStream.format("memory").queryName("toast_envelopes")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(240000), "stream did not finish within the timeout")
+    val updates = spark.table("toast_envelopes").filter(col("op") === "u").collect()
+    val toasted = updates.filter(_.isNullAt(1))
+    assert(toasted.nonEmpty, "the fixture must carry unchanged-TOAST updates")
+    assert(updates.forall(r => !r.isNullAt(2)),
+      s"${updates.count(_.isNullAt(2))} of ${updates.length} update envelopes are null")
+    toasted.foreach(r => assert(r.getString(2).contains("\"props\":null,")))
+  }
+
   test("mid-stream ADD COLUMN widens the envelope across micro-batches without restart (T9)") {
     // the in-flight half of the reference's ApplySchemaUpdate
     // (systemcatalog.go:347-373): a fresh Relation message with a new
