@@ -603,8 +603,8 @@ object Cdc {
     * the J1 catalog broadcast (never re-synthesized at emission). The
     * flag itself is the [[withMarkerFlag]] window — sequential
     * semantics (several brackets per txn, inserts between brackets
-    * survive), the same contract the keyed-state streaming twin
-    * `graft.streaming.MarkerTracker` replays live.
+    * survive), the same contract the streaming wire arm applies in the
+    * decode walk (`PgOutput.decodeSegments(markerSuppress = true)`).
     */
   def markerDecompression(wal: DataFrame): DataFrame =
     markerDecompressionPrefixed(withMessagePrefix(wal), chunkCatalogOf(wal))

@@ -690,8 +690,21 @@ object PgOutput {
 
   /** Decode pgoutput segment blobs back into WAL change rows — a pure
     * per-segment flatMap (valid on batch AND streaming frames). The
-    * relation cache and current-xid live per segment, exactly the state
-    * the reference keeps per replication socket.
+    * relation cache, current xid and decompression-marker flag live per
+    * segment, exactly the state the reference keeps per replication
+    * socket. A segment's LEADING frames whose lsn is below its
+    * `start_lsn` are context a tailer replayed at a rotation (relations,
+    * the open Begin, the open bracket's Start marker): they set that
+    * state and emit no row.
+    *
+    * `markerSuppress` turns on the 2.12+ marker path's suppression in
+    * the walk, as the reference's transaction tracker does on the
+    * replication stream (`transactiontracker.go:208-218,383-392`): a
+    * transactional `::timescaledb-decompression-start` message sets the
+    * flag, the end message, Begin and Commit clear it, and an Insert
+    * emits no row while it is set. Updates, deletes, truncates and the
+    * marker messages themselves still emit — the batch
+    * `Cdc.markerSuppressPrefixed` contract.
     *
     * `resolver` is the startup-loaded pg_type map
     * (`JdbcSideChannel.pgTypeResolver`, mirroring the reference's
@@ -701,13 +714,18 @@ object PgOutput {
     * would only cover the driver. */
   def decodeSegments(frames: DataFrame,
                      resolver: graft.types.TypeRegistry.Resolver =
-                       graft.types.TypeRegistry.Resolver.empty): Dataset[DecodedWal] = {
+                       graft.types.TypeRegistry.Resolver.empty,
+                     markerSuppress: Boolean = false): Dataset[DecodedWal] = {
     val spark = frames.sparkSession
     import spark.implicits._
-    frames.select(col("segment"), col("data")).as[(Long, Array[Byte])].flatMap {
-      case (segment, blob) =>
+    val (start, end) = (Cdc.DecompressionMarkerStartId, Cdc.DecompressionMarkerEndId)
+    frames.select(col("segment"), col("start_lsn"), col("data"))
+      .as[(Long, Long, Array[Byte])].flatMap {
+      case (segment, startLsn, blob) =>
         val relations = scala.collection.mutable.Map[Int, RelationMsg]()
         var currentXid = -1L
+        var decompressing = false // the open bracket's flag
+        var context = true        // still in the replayed leading frames
         // registry-driven value decode keyed by the Relation message's
         // column OIDs — ONE path for text AND binary tuple formats (the
         // reference requests `binary 'true'` on PG14+), name-keyed so
@@ -749,13 +767,14 @@ object PgOutput {
             before_value = g[Double]("value"),
             before_props = g[String]("props"))
         }
-        readFrames(blob).flatMap {
-          case (_, RelationMsg(id, ns, rel, ri, cols)) =>
+        def rows(lsn: Long, msg: PgMsg): Seq[DecodedWal] = msg match {
+          case RelationMsg(id, ns, rel, ri, cols) =>
             relations(id) = RelationMsg(id, ns, rel, ri, cols); Nil
-          case (_, BeginMsg(_, _, xid)) => currentXid = xid.toLong & 0xffffffffL; Nil
-          case (_, _: CommitMsg)        => currentXid = -1L; Nil
-          case (_, _: OriginMsg)        => Nil
-          case (_, TypeMsg(oid, _, name)) =>
+          case BeginMsg(_, _, xid) =>
+            currentXid = xid.toLong & 0xffffffffL; decompressing = false; Nil
+          case _: CommitMsg => currentXid = -1L; decompressing = false; Nil
+          case _: OriginMsg => Nil
+          case TypeMsg(oid, _, name) =>
             // lazy mid-stream type announcement (`replicationhandler.go:
             // 318-328` OnTypeEvent → typemanager registration): a
             // user-defined type registers before first use, as its text
@@ -765,29 +784,37 @@ object PgOutput {
                 graft.types.TypeRegistry.Registration(
                   oid, name, org.apache.spark.sql.types.StringType, s => s))
             Nil
-          case (lsn, InsertMsg(id, nt))          => Seq(tupleRow(lsn, "I", id, nt))
-          case (lsn, UpdateMsg(id, ok, ot, nt)) =>
+          case InsertMsg(_, _) if markerSuppress && decompressing => Nil
+          case InsertMsg(id, nt)          => Seq(tupleRow(lsn, "I", id, nt))
+          case UpdateMsg(id, ok, ot, nt) =>
             val row = tupleRow(lsn, "U", id, nt)
             Seq((ok, ot) match {
               case (Some(k), Some(t)) => withBefore(row, id, k, t)
               case _                  => row // no old tuple on the wire
             })
-          case (lsn, DeleteMsg(id, k, ot)) =>
+          case DeleteMsg(id, k, ot) =>
             // delete's tuple IS the old row; record which identity form
             // the wire used alongside the main-column decode
             Seq(tupleRow(lsn, "D", id, ot).copy(old_kind = Some(k.toString)))
-          case (lsn, TruncateMsg(_, ids)) =>
+          case TruncateMsg(_, ids) =>
             ids.map { id =>
               val rel = relations.get(id)
               DecodedWal(segment, lsn, currentXid, "T",
                 rel.map(_.namespace), rel.map(_.relName),
                 None, None, None, None, None, None)
             }
-          case (lsn, LogicalMsg(txn, _, pfx, content)) =>
+          case LogicalMsg(txn, _, pfx, content) =>
+            if (txn && pfx == start) decompressing = true
+            else if (txn && pfx == end) decompressing = false
             Seq(DecodedWal(segment, lsn, if (txn) currentXid else -1L, "M",
               None, None, None, None, None, None, None,
               Some(new String(content, UTF_8)),
               msg_prefix = Some(pfx)))
+        }
+        readFrames(blob).flatMap { case (lsn, msg) =>
+          if (context && lsn >= startLsn) context = false
+          val out = rows(lsn, msg)
+          if (context) Nil else out
         }
     }
   }
@@ -949,6 +976,8 @@ object PgOutput {
     * file-fed micro-batch stream). */
   def streamDecoded(spark: SparkSession, segmentsPath: String,
                     resolver: graft.types.TypeRegistry.Resolver =
-                      graft.types.TypeRegistry.Resolver.empty): Dataset[DecodedWal] =
-    decodeSegments(spark.readStream.schema(frameSchema).parquet(segmentsPath), resolver)
+                      graft.types.TypeRegistry.Resolver.empty,
+                    markerSuppress: Boolean = false): Dataset[DecodedWal] =
+    decodeSegments(spark.readStream.schema(frameSchema).parquet(segmentsPath), resolver,
+      markerSuppress)
 }

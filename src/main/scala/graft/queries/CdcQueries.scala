@@ -114,17 +114,14 @@ object CdcQueries {
     Query("cdc_wire_marker_suppress", (s, dir) => {
       // the 2.12+ marker flow END-TO-END ON THE WIRE: real
       // ::timescaledb-decompression-start/end logical-message FRAMES
-      // ride the pgoutput bytes (transactiontracker.go:33-34), the
-      // byte decode surfaces their prefix for free (msg_prefix), and
-      // the same prefix-gated suppression that runs on the parquet
-      // fixture drops exactly the bracketed physical re-INSERTs
-      val wal = graft.cdc.PgOutput.decodeSegments(
+      // ride the pgoutput bytes (transactiontracker.go:33-34), and the
+      // decode walk drops exactly the bracketed physical re-INSERTs as
+      // it reads them — the streaming wire arm's suppression, checked
+      // here against the oracle's bracket arithmetic
+      graft.cdc.PgOutput.decodeSegments(
           graft.cdc.PgOutput.segmentsSpread(s, dir,
             graft.cdc.PgOutput.encodeSegments(Tables.events(s, dir),
-              markerTxns = true))).toDF()
-        .withColumn("op",
-          when(col("op_wire") === "I", lit("c")).otherwise(col("op_wire")))
-      Cdc.markerSuppressPrefixed(wal)
+              markerTxns = true)), markerSuppress = true)
         .select(col("lsn"), col("xid"), col("op_wire"))
         .orderBy(col("lsn"))
     },

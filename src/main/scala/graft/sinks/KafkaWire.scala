@@ -26,8 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * and sarama's `Net.MaxOpenRequests`: the next chunk renders while
   * earlier requests are on the wire. Keys and values are copied once,
   * as bytes, from Spark's rows into request buffers the connection
-  * reuses ([[KafkaWire.ProduceRequest]]). Dial and every response read
-  * are bounded by `timeoutMs`.
+  * reuses ([[KafkaWire.ProduceRequest]]). Dial, every write and every
+  * response read are bounded by `timeoutMs`.
   *
   * Ordering: with several requests in flight and no idempotent
   * producer, a batch that failed and is retried by `Sinks.withRetry`
@@ -78,7 +78,7 @@ final case class KafkaWireSink(
       qe.toRdd.foreachPartition { (rows: Iterator[InternalRow]) =>
         if (rows.hasNext) {                // empty partition: don't even dial
           val (host, port) = Sinks.hostPort(address, 9092)
-          val sock = Sinks.dialSocket(host, port, tls, tlsSkip, timeout, timeout)
+          val sock = Sinks.dialSocket(host, port, tls, tlsSkip, timeout, timeout, timeout)
           try {
             sock.setTcpNoDelay(true)       // as Kafka's own clients do
             val conn = new KafkaWire.Connection(sock)

@@ -75,14 +75,19 @@ object Sinks {
   }
 
   /** Dial a (possibly TLS) socket with the configured deadlines: a
-    * bounded connect, SO_TIMEOUT on reads, and for TLS the one trust
-    * policy of [[sslSocketFactory]] — skipVerify trusts anything,
-    * otherwise platform trust store + HTTPS endpoint identification,
-    * eager handshake so a bad certificate fails at dial. */
+    * bounded connect, SO_TIMEOUT on reads, a [[WriteBoundedSocket]]
+    * deadline on every write (0 = unbounded, as for reads), and for TLS
+    * the one trust policy of [[sslSocketFactory]] — skipVerify trusts
+    * anything, otherwise platform trust store + HTTPS endpoint
+    * identification, eager handshake so a bad certificate fails at
+    * dial. TLS layers over the bounded TCP socket, so an expired record
+    * write closes the TCP socket under it. */
   private[sinks] def dialSocket(host: String, port: Int, tls: Boolean,
                                 skipVerify: Boolean, dialTimeoutMs: Long,
-                                readTimeoutMs: Long): java.net.Socket = {
-    val base = new java.net.Socket()
+                                readTimeoutMs: Long,
+                                writeTimeoutMs: Long): java.net.Socket = {
+    val base =
+      if (writeTimeoutMs > 0) new WriteBoundedSocket(writeTimeoutMs) else new java.net.Socket()
     base.connect(new java.net.InetSocketAddress(host, port), dialTimeoutMs.toInt)
     if (readTimeoutMs > 0) base.setSoTimeout(readTimeoutMs.toInt)
     if (!tls) base
@@ -416,6 +421,56 @@ final case class NatsSinkConfig(
     // ack timeout, c.Sink.Nats.Timeout parity (nats.go:113-116)
     timeoutSeconds: Int = 5)
 
+/** A TCP socket whose writes are bounded. SO_TIMEOUT bounds reads only:
+  * a blocking write to a peer that stopped reading while its buffers
+  * are full never returns. Each write on this socket's output stream
+  * stamps its start time; one daemon thread polls the open sockets and
+  * closes one whose write has not returned within `timeoutMs`, so the
+  * write fails with a `SocketException` (an `IOException`) that
+  * `Sinks.withRetry` and the DLQ handle as any failed emit. No timer is
+  * armed per write or per record. */
+private[sinks] final class WriteBoundedSocket(timeoutMs: Long) extends java.net.Socket {
+  // System.nanoTime() when the pending write began (odd, so never 0);
+  // 0 while no write is pending
+  @volatile private var since = 0L
+  private lazy val bounded: java.io.OutputStream = {
+    WriteBoundedSocket.watch(this)
+    new java.io.FilterOutputStream(super.getOutputStream) {
+      private def timed(write: => Unit): Unit = {
+        since = System.nanoTime() | 1L
+        try write finally since = 0L
+      }
+      override def write(b: Int): Unit = timed(out.write(b))
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = timed(out.write(b, off, len))
+      override def flush(): Unit = timed(out.flush())
+    }
+  }
+  override def getOutputStream: java.io.OutputStream = bounded
+
+  private def expired(now: Long): Boolean = {
+    val s = since
+    s != 0L && now - s > timeoutMs * 1000000L
+  }
+}
+
+private object WriteBoundedSocket {
+  private val open = java.util.concurrent.ConcurrentHashMap.newKeySet[WriteBoundedSocket]()
+  private lazy val watchdog: Thread = {
+    val t = new Thread(() => while (true) {
+      Thread.sleep(100)
+      val now = System.nanoTime()
+      open.forEach { s =>
+        if (s.isClosed) open.remove(s)
+        else if (s.expired(now)) { open.remove(s); s.close() }
+      }
+    }, "graft-sink-write-bound")
+    t.setDaemon(true)
+    t.start()
+    t
+  }
+  private def watch(s: WriteBoundedSocket): Unit = { watchdog; open.add(s) }
+}
+
 /** Redis sink configuration — S11
   * (`internal/eventing/sink/redis/redis.go:45-80`): network/address/
   * auth/db plus the client's retry-backoff knobs (the reference reuses
@@ -432,10 +487,8 @@ final case class RedisSinkConfig(
     tlsSkipVerify: Boolean = false,
     // `sink.redis.timeouts.{dial,read,write}` (`redis.go:66-74`). Dial
     // and read map to connect timeout / SO_TIMEOUT on the partition
-    // socket. JDK blocking sockets have no write deadline; every XADD
-    // awaits its reply, so a stalled peer surfaces through the BOUNDED
-    // ack read on the same round-trip — the failure the reference's
-    // write timeout guards is caught one step later, not never.
+    // socket, write to a [[WriteBoundedSocket]] deadline; an unset write
+    // timeout takes the read timeout, as go-redis's does.
     dialTimeoutMs: Long = 0,
     readTimeoutMs: Long = 0,
     writeTimeoutMs: Long = 0,
@@ -464,10 +517,11 @@ final case class RedisSink(config: RedisSinkConfig) extends Sink {
     val database = config.database
     val (tls, skipVerify) = (config.tls, config.tlsSkipVerify)
     val (dialMs, readMs) = (config.dialTimeoutMs, config.readTimeoutMs)
+    val writeMs = if (config.writeTimeoutMs > 0) config.writeTimeoutMs else readMs
     batch.select("topic", "key", "envelope").foreachPartition { (rows: Iterator[Row]) =>
       if (rows.hasNext) {                  // empty partition: don't even dial
       val (host, port) = Sinks.hostPort(address, 6379)
-      val sock = Sinks.dialSocket(host, port, tls, skipVerify, dialMs, readMs)
+      val sock = Sinks.dialSocket(host, port, tls, skipVerify, dialMs, readMs, writeMs)
       try {
         val out = new java.io.BufferedOutputStream(sock.getOutputStream)
         val in  = new java.io.DataInputStream(
@@ -558,13 +612,15 @@ final case class NatsSink(config: NatsSinkConfig) extends Sink {
     batch.select(cols.head, cols.tail: _*).foreachPartition { (rows: Iterator[Row]) =>
       if (rows.hasNext) {                  // empty partition: don't even dial
       val (host, port) = Sinks.hostPort(address, 4222)
-      val sock = new java.net.Socket(host, port)
+      // ack timeout is a JETSTREAM contract (a lost ack must throw,
+      // not hang); core mode's single flush PONG lands after a whole
+      // partition of PUBs drains — bounding it at 5 s would turn a
+      // slow-but-healthy broker into 8 duplicate-producing retries.
+      // Dial and each single write are bounded in both modes.
+      val sock = Sinks.dialSocket(host, port, tls = false, skipVerify = false,
+        dialTimeoutMs = timeoutMs, readTimeoutMs = if (js) timeoutMs else 0,
+        writeTimeoutMs = timeoutMs)
       try {
-        // ack timeout is a JETSTREAM contract (a lost ack must throw,
-        // not hang); core mode's single flush PONG lands after a whole
-        // partition of PUBs drains — bounding it at 5 s would turn a
-        // slow-but-healthy broker into 8 duplicate-producing retries
-        if (js) sock.setSoTimeout(timeoutMs)
         val out = new java.io.BufferedOutputStream(sock.getOutputStream)
         val in  = new java.io.DataInputStream(
           new java.io.BufferedInputStream(sock.getInputStream))

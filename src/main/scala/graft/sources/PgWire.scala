@@ -4,7 +4,7 @@ import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFExc
 import java.net.{InetSocketAddress, Socket}
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
-import graft.cdc.PgOutput
+import graft.cdc.{Cdc, PgOutput}
 
 /** PostgreSQL v3 wire protocol — the replication-session subset: the
   * TRANSPORT layer under [[graft.cdc.PgOutput]]'s byte decoder, closing
@@ -609,7 +609,7 @@ object PgWireTailer {
     * PROCESSED LSN — the cursor to hand the next session's
     * START_REPLICATION. */
   def tail(spark: org.apache.spark.sql.SparkSession, client: PgReplicationClient,
-           segmentsPath: String, framesPerSegment: Int = 1000): Long = {
+           segmentsPath: String, framesPerSegment: Int): Long = {
     require(framesPerSegment > 0, "framesPerSegment must be positive")
     // a reconnecting session appends after the segments already on disk
     val base = nextSegmentIndex(spark, segmentsPath)
@@ -623,19 +623,23 @@ object PgWireTailer {
     // (`containers/relationcache.go`): the cache state IS what makes a
     // resume point valid.
     val relCache = scala.collection.mutable.LinkedHashMap[Int, (Long, Array[Byte])]()
-    // the open transaction's Begin frame: decodeSegments takes the xid
-    // from the Begin it last saw IN THE SEGMENT, so a rotation inside a
-    // transaction replays it too — otherwise the rows after the rotation
-    // decode with xid -1 and escape per-transaction marker suppression
+    // the open transaction's Begin frame and its open decompression
+    // bracket's Start marker: decodeSegments takes the xid and the
+    // marker flag from the frames IN THE SEGMENT, so a rotation inside a
+    // transaction replays them too — otherwise the rows after the
+    // rotation decode with xid -1 and escape marker suppression. The
+    // replayed frames keep their lsns, below the segment's start_lsn,
+    // so the decoder reads them as context and emits no row for them.
     var openBegin: Option[(Long, Array[Byte])] = None
+    var openStart: Option[(Long, Array[Byte])] = None
     while (open) {
       val bos = new ByteArrayOutputStream()
       val o = new DataOutputStream(bos)
       var n = 0
       var startLsn = -1L
       var endLsn = client.processedLsn
-      if (rotations > 0) (relCache.values ++ openBegin).foreach { case (lsn, msg) =>
-        PgOutput.writeFrame(o, lsn, msg)
+      if (rotations > 0) (relCache.values ++ openBegin ++ openStart).foreach {
+        case (lsn, msg) => PgOutput.writeFrame(o, lsn, msg)
       }
       while (n < framesPerSegment && open) client.nextRaw() match {
         case Some((lsn, msg)) =>
@@ -643,8 +647,15 @@ object PgWireTailer {
           endLsn = math.max(endLsn, lsn + msg.length)
           if (msg.nonEmpty) msg(0).toChar match {
             case 'R' => relCache(ByteBuffer.wrap(msg, 1, 4).getInt) = (lsn, msg)
-            case 'B' => openBegin = Some((lsn, msg))
-            case 'C' => openBegin = None
+            case 'B' => openBegin = Some((lsn, msg)); openStart = None
+            case 'C' => openBegin = None; openStart = None
+            case 'M' => PgOutput.decode(msg) match {
+              case PgOutput.LogicalMsg(true, _, Cdc.DecompressionMarkerStartId, _) =>
+                openStart = Some((lsn, msg))
+              case PgOutput.LogicalMsg(true, _, Cdc.DecompressionMarkerEndId, _) =>
+                openStart = None
+              case _ =>
+            }
             case _ =>
           }
           PgOutput.writeFrame(o, lsn, msg); n += 1
@@ -691,7 +702,7 @@ object PgWireTailer {
   def tailResilient(spark: org.apache.spark.sql.SparkSession,
                     connect: Long => PgReplicationClient,
                     startLsn: Long, segmentsPath: String,
-                    framesPerSegment: Int = 1000,
+                    framesPerSegment: Int,
                     maxReconnects: Int = 5,
                     backoffInitialMs: Long = 50L): Long = {
     var cursor = startLsn

@@ -87,24 +87,11 @@ class WalMicroBatchStream(path: String, batchSize: Int)
   // stream observes WAL growth — the tail-capable behavior of the
   // reference's replication socket; AvailableNow snapshots it once so
   // that run has a stable endpoint.
-  //
-  // A growing WAL is replaced atomically, which can land between the
-  // length stat and the footer read: the read then seeks the old length
-  // in the new file and fails. Only when the file's (length, mtime)
-  // changed under the read is it retried, on the new file.
   private def readMaxLsn(): Long = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val walPath = new org.apache.hadoop.fs.Path(s"$path/events.parquet")
-    val fs = walPath.getFileSystem(conf)
-    val before = fs.getFileStatus(walPath)
-    def replaced: Boolean = {
-      val now = fs.getFileStatus(walPath)
-      now.getLen != before.getLen || now.getModificationTime != before.getModificationTime
+    val reader = WalFile.openStable(path) { (status, conf) =>
+      org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf))
     }
-    val reader =
-      try org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(before, conf))
-      catch { case _: Exception if replaced => return readMaxLsn() }
     try {
       import scala.jdk.CollectionConverters._
       val maxes = for {
@@ -167,6 +154,27 @@ class WalMicroBatchStream(path: String, batchSize: Int)
     }
 }
 
+private[sources] object WalFile {
+  /** Stat `dir/events.parquet` and `open` it. A growing WAL is replaced
+    * atomically, which can land between a stat and the open that trusts
+    * its length: the open then seeks the old length in the new file and
+    * fails. Only when the file's (length, mtime) changed under `open` is
+    * it retried, on the new file. */
+  def openStable[T](dir: String)(
+      open: (org.apache.hadoop.fs.FileStatus, org.apache.hadoop.conf.Configuration) => T): T = {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val walPath = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
+    val fs = walPath.getFileSystem(conf)
+    val before = fs.getFileStatus(walPath)
+    def replaced: Boolean = {
+      val now = fs.getFileStatus(walPath)
+      now.getLen != before.getLen || now.getModificationTime != before.getModificationTime
+    }
+    try open(before, conf)
+    catch { case _: Exception if replaced => openStable(dir)(open) }
+  }
+}
+
 /** An LSN half-open range `[lo, hi)` — the only thing shipped to
   * executors; the reader re-opens the WAL (file) itself. */
 case class WalRangePartition(path: String, lo: Long, hi: Long) extends InputPartition
@@ -182,19 +190,29 @@ class WalRangeReader(path: String, lo: Long, hi: Long)
   import org.apache.parquet.hadoop.example.GroupReadSupport
   import org.apache.parquet.example.data.Group
 
-  private val reader: ParquetReader[Group] = {
-    val pred = FilterApi.and(
-      FilterApi.gtEq(FilterApi.longColumn("event_id"), java.lang.Long.valueOf(lo)),
-      FilterApi.lt(FilterApi.longColumn("event_id"), java.lang.Long.valueOf(hi)))
-    ParquetReader.builder(new GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(s"$path/events.parquet"))
-      .withConf(new org.apache.hadoop.conf.Configuration())
-      .withFilter(FilterCompat.get(pred))
-      .build()
-  }
+  // the builder stats the WAL and the first read opens it, so the first
+  // record is read here, under the replaced-WAL retry
+  private val (reader, first) =
+    WalFile.openStable(path) { (_, conf) =>
+      val pred = FilterApi.and(
+        FilterApi.gtEq(FilterApi.longColumn("event_id"), java.lang.Long.valueOf(lo)),
+        FilterApi.lt(FilterApi.longColumn("event_id"), java.lang.Long.valueOf(hi)))
+      val r = ParquetReader.builder(new GroupReadSupport(),
+          new org.apache.hadoop.fs.Path(s"$path/events.parquet"))
+        .withConf(conf)
+        .withFilter(FilterCompat.get(pred))
+        .build()
+      try (r, r.read())
+      catch { case e: Exception => r.close(); throw e }
+    }
 
   private var current: Group = _
-  override def next(): Boolean = { current = reader.read(); current != null }
+  private var started = false
+  override def next(): Boolean = {
+    current = if (started) reader.read() else first
+    started = true
+    current != null
+  }
 
   /** Raw-int64→nanos multiplier for `ts`, derived from the column's
     * parquet logical type (testdata generations have shipped both

@@ -560,10 +560,13 @@ object ConfigPipeline {
   /** `timescaledb.experimental.decompression.markers`: selects the
     * 2.12+ MARKER decompression flow (exact
     * `::timescaledb-decompression-start/end` prefix gating, P7
-    * suppression between WAL and envelope) over the default
+    * suppression of the bracketed re-INSERTs) over the default
     * status-machine mode — the config analog of the reference's
     * version gate (`transactiontracker.go:376-415` activates on
-    * TSDB ≥ 2.12). */
+    * TSDB ≥ 2.12). The streaming form tracks the brackets in the
+    * pgoutput decode walk, so it requires `postgresql.pgoutput.path`
+    * ([[start]] rejects it without one); batch [[fromProperties]]
+    * applies the `Cdc.markerSuppress` window to the parquet stand-in. */
   def markerMode(props: Map[String, String]): Boolean =
     bool(props, "timescaledb.experimental.decompression.markers",
       default = false)
@@ -723,6 +726,8 @@ object ConfigPipeline {
          Option[graft.catalog.PublicationManager],
          Option[graft.catalog.ReplicationSlotManager]) = {
     txnWindow(props)
+    StreamPipeline.requireWireForMarkers(markerMode(props),
+      props.get("postgresql.pgoutput.path"))
     val pubM = props.get("postgresql.publication.name").filter(_.nonEmpty)
       .map(_ => publicationManager(props))
     pubM.foreach(_.ensurePublication())

@@ -47,28 +47,24 @@ object StreamPipeline {
   /** Alternate streaming WAL source — BINARY pgoutput segment blobs
     * decoded executor-side (`Cdc.PgOutput`), shaped onto the same
     * columns `walStream` yields so the whole downstream pipeline is
-    * source-agnostic. By default logical-message rows (no table, no
-    * timestamp on the wire) are excluded here — they belong on the
-    * message topic, not in chunk resolution; `keepMessages=true` (the
-    * marker-mode arm) keeps them as op='m' rows with their decoded
-    * `msg_prefix` and placeholder chunk_day/ts_ms, because the marker
-    * tracker must consume the bracket prefixes before any event gate
-    * (`transactiontracker.go:383-392`). ONE select shapes both forms —
-    * the chunk-day epoch rule and the op mapping exist exactly once.
-    * `chunk_day`/`ts_ms` derive from the decoded tuple exactly as
-    * `Cdc.shapeWal` derives them from parquet.
+    * source-agnostic. Logical-message rows (no table, no timestamp on
+    * the wire) are excluded: they belong on the message topic, not in
+    * chunk resolution. `markerSuppress` drops the decompression
+    * brackets' re-INSERTs in the decode walk itself
+    * ([[graft.cdc.PgOutput.decodeSegments]]), where the bracket
+    * prefixes are still in stream order. `chunk_day`/`ts_ms` derive
+    * from the decoded tuple exactly as `Cdc.shapeWal` derives them from
+    * parquet.
     */
   def walStreamPgOutput(spark: SparkSession, segmentsPath: String,
                         typeResolver: graft.types.TypeRegistry.Resolver =
                           graft.types.TypeRegistry.Resolver.empty,
-                        keepMessages: Boolean = false): DataFrame =
-    graft.cdc.PgOutput.streamDecoded(spark, segmentsPath, typeResolver)
+                        markerSuppress: Boolean = false): DataFrame =
+    graft.cdc.PgOutput.streamDecoded(spark, segmentsPath, typeResolver, markerSuppress)
       .toDF()
-      .filter(col("op_wire") =!= "T" &&
-        (lit(keepMessages) || col("op_wire") =!= "M"))
+      .filter(col("op_wire").isin("I", "U", "D"))
       .select(col("lsn"), col("xid"),
-        when(col("op_wire") === "M", lit("m"))
-          .otherwise(graft.cdc.Cdc.opExpr(col("event_type"))).as("op"),
+        graft.cdc.Cdc.opExpr(col("event_type")).as("op"),
         col("schema_name"), col("table_name"),
         coalesce(expr(s"ts div ${graft.cdc.Cdc.NanosPerDay}")
             .minus(lit(graft.cdc.Cdc.EpochDay20240101)).cast("int"),
@@ -84,7 +80,9 @@ object StreamPipeline {
     *
     * `pgoutputPath`: when set, the WAL comes from binary pgoutput
     * segment blobs instead of the parquet stand-in — the config surface
-    * is `postgresql.pgoutput.path` (ConfigPipeline).
+    * is `postgresql.pgoutput.path` (ConfigPipeline). `markerSuppress`
+    * (the 2.12+ marker path) needs it: the brackets are tracked in the
+    * decode walk, and the parquet stand-in has no wire frames to walk.
     */
   def envelopeStream(spark: SparkSession, dir: String,
                      enabledOps: Seq[String] = Envelope.Op.all,
@@ -92,8 +90,8 @@ object StreamPipeline {
                      typeResolver: graft.types.TypeRegistry.Resolver =
                        graft.types.TypeRegistry.Resolver.empty,
                      markerSuppress: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val raw = pgoutputPath.fold {
+    requireWireForMarkers(markerSuppress, pgoutputPath)
+    val wal = pgoutputPath.fold {
       // parquet stand-in: the fixture carries no per-row message
       // prefix (a live wire stream decodes it natively), and the
       // per-txn window derivation can't run on a streaming frame — so
@@ -105,39 +103,7 @@ object StreamPipeline {
         .filter(col("op") === Envelope.Op.Message)
         .select(col("lsn"), col("msg_prefix"))
       walStream(spark, dir).join(broadcast(prefixes), Seq("lsn"), "left")
-    } { path =>
-      // one shaping definition for both wire forms: marker mode keeps
-      // the 'M' frames through the TRACKER (they carry the bracket
-      // prefixes; message rows drop again after it — the wire arm's
-      // message topic is a separate surface), the default form
-      // excludes them upstream so no row carries a prefix
-      walStreamPgOutput(spark, path, typeResolver,
-        keepMessages = markerSuppress)
-    }
-    // config-selected 2.12+ marker arm: P7 suppression via the keyed-
-    // state tracker, between the WAL and chunk resolution — the
-    // reference's transaction-tracker position. withTimeout=false here:
-    // the config topology runs Trigger.AvailableNow, and a pending
-    // processing-time timer keeps it scheduling empty batches forever
-    // (TxnAssembler caveat); a continuous-trigger deployment calls
-    // MarkerTracker.tracked directly with the window bounds on.
-    val wal =
-      if (!markerSuppress) raw
-      else {
-        val typed = raw.select(col("lsn"), col("xid"), col("op"),
-            col("chunk_day").cast("int").as("chunk_day"), col("ts_ms"),
-            col("msg_prefix"), col("event_id"), col("user_id"),
-            col("value"), col("props"))
-          .as[graft.streaming.MarkerTracker.WalRow]
-        val kept = graft.streaming.MarkerTracker
-          .tracked(typed, withTimeout = false).toDF()
-          .filter(col("tsdb_op").isNull) // 'd' events ride the T3 arm
-          .drop("tsdb_op", "n_suppressed")
-        // wire-arm message rows leave the stream after the tracker
-        if (pgoutputPath.isDefined)
-          kept.filter(col("op") =!= Envelope.Op.Message)
-        else kept
-      }
+    }(walStreamPgOutput(spark, _, typeResolver, markerSuppress))
     val resolved = wal
       .join(broadcast(Cdc.chunkCatalog(spark, dir)), Seq("chunk_day"))
       .join(broadcast(Cdc.hypertableCatalog(spark)), Seq("hypertable_id"))
@@ -151,6 +117,15 @@ object StreamPipeline {
         col("event_id"), col("user_id"), col("value"), col("props"),
         col("msg_prefix"))
   }
+
+  /** Streaming marker mode runs only on the wire arm: fail before any
+    * stream or control-plane state exists. */
+  private[graft] def requireWireForMarkers(markerSuppress: Boolean,
+                                           pgoutputPath: Option[String]): Unit =
+    require(!markerSuppress || pgoutputPath.isDefined,
+      "timescaledb.experimental.decompression.markers=true streams only from " +
+        "pgoutput segments: set postgresql.pgoutput.path (the parquet stand-in " +
+        "has no wire frames to track decompression brackets in)")
 
   /** STREAM-STREAM interval join — the one Structured Streaming join
     * class the rest of the pipeline doesn't exercise: each purchase

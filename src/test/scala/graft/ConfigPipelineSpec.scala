@@ -603,6 +603,30 @@ class ConfigPipelineSpec extends SparkSpec {
       "marker mode suppresses rows the default mode keeps")
   }
 
+  test("marker mode without postgresql.pgoutput.path fails before any state exists") {
+    // the brackets are tracked in the pgoutput decode walk; the parquet
+    // stand-in has no frames to walk, so both entry points refuse the
+    // combination, naming both keys, before a checkpoint is written
+    val dir = Files.createTempDirectory("graft-cfg-marker-noseg").toString
+    val props = Map(
+      "sink.type" -> "null",
+      "timescaledb.experimental.decompression.markers" -> "true",
+      "statestorage.type" -> "file",
+      "statestorage.file.path" -> s"$dir/ckpt")
+    def named(e: Throwable): Boolean =
+      e.getMessage.contains("timescaledb.experimental.decompression.markers") &&
+        e.getMessage.contains("postgresql.pgoutput.path")
+    val e1 = intercept[IllegalArgumentException] {
+      ConfigPipeline.start(spark, sf001, props, dir)
+    }
+    assert(named(e1), e1.getMessage)
+    assert(!new java.io.File(s"$dir/ckpt").exists(), "no checkpoint was created")
+    val e2 = intercept[IllegalArgumentException] {
+      graft.streaming.StreamPipeline.envelopeStream(spark, sf001, markerSuppress = true)
+    }
+    assert(named(e2), e2.getMessage)
+  }
+
   test("streaming start() from config delivers the batch result through the sink") {
     val dir = Files.createTempDirectory("graft-cfg-sink").toString
     val ckpt = Files.createTempDirectory("graft-cfg-ckpt").toString

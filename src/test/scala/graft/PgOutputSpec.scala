@@ -408,4 +408,54 @@ class PgOutputSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(streamed === batch)
   }
+
+  test("decode-time marker suppression equals the batch window: brackets, strays, commit") {
+    // one segment, two transactions: two brackets with an insert between
+    // them, an update inside a bracket, a stray End, a trailing Start
+    // that only Commit closes, and a next transaction whose insert must
+    // survive — decode with the flag on must keep exactly the rows the
+    // batch `Cdc.markerSuppressPrefixed` window keeps over the plain decode
+    val (s, e) = (graft.cdc.Cdc.DecompressionMarkerStartId, graft.cdc.Cdc.DecompressionMarkerEndId)
+    def tup(i: Long) = rowTuple(i, 1700000000000000000L + i, 7L, "signup", 1.0, "{}")
+    def ins(i: Long) = InsertMsg(EventsRelId, tup(i))
+    def marker(lsn: Long, prefix: String) =
+      LogicalMsg(transactional = true, lsn, prefix, Array.emptyByteArray)
+    val frames: Seq[(Long, PgMsg)] = Seq(
+      1L -> RelationMsg(EventsRelId, "public", "events", 'd'.toByte, EventsRelCols),
+      2L -> BeginMsg(30L, 0L, 1),
+      3L -> ins(3),                                  // before any bracket: kept
+      4L -> marker(4L, s),
+      5L -> ins(5),                                  // bracket 1: dropped
+      6L -> marker(6L, e),
+      7L -> ins(7),                                  // between brackets: kept
+      8L -> marker(8L, s),
+      9L -> ins(9),                                  // bracket 2: dropped
+      10L -> UpdateMsg(EventsRelId, None, None, tup(10)), // updates ride through
+      11L -> DeleteMsg(EventsRelId, 'O', tup(11)),   // and deletes
+      12L -> marker(12L, e),
+      13L -> marker(13L, e),                         // stray End: a plain message
+      14L -> ins(14),                                // kept
+      15L -> LogicalMsg(transactional = false, 15L, s, Array.emptyByteArray), // not the txn's
+      16L -> ins(16),                                // kept
+      17L -> marker(17L, s),                         // trailing Start
+      18L -> ins(18),                                // dropped up to Commit
+      19L -> CommitMsg(0, 30L, 31L, 0L),
+      20L -> BeginMsg(40L, 0L, 2),
+      21L -> ins(21),                                // next transaction: kept
+      22L -> CommitMsg(0, 40L, 41L, 0L))
+    val bos = new java.io.ByteArrayOutputStream()
+    val o = new java.io.DataOutputStream(bos)
+    frames.foreach { case (lsn, m) => writeFrame(o, lsn, PgOutput.encode(m)) }
+    val segs = Seq((0L, 1L, bos.toByteArray)).toDF("segment", "start_lsn", "data")
+    val on = PgOutput.decodeSegments(segs, markerSuppress = true).collect()
+    val off = PgOutput.decodeSegments(segs).toDF()
+    val batch = graft.cdc.Cdc.markerSuppressPrefixed(off.withColumn("op",
+        when(col("op_wire") === "I", lit("c")).otherwise(col("op_wire"))))
+      .select("lsn").as[Long].collect().sorted
+    assert(on.map(_.lsn).sorted.toSeq === batch.toSeq)
+    assert(on.filter(_.op_wire == "I").map(_.lsn).sorted.toSeq === Seq(3L, 7L, 14L, 16L, 21L))
+    assert(on.filter(_.op_wire != "I").map(_.lsn).sorted.toSeq ===
+      Seq(4L, 6L, 8L, 10L, 11L, 12L, 13L, 15L, 17L), "markers, updates and deletes all emit")
+    assert(off.count() === on.length + 3L, "flag off: every insert decodes")
+  }
 }

@@ -343,6 +343,124 @@ class PgWireSpec extends AnyFunSuite {
     } finally c.close()
   }
 
+  /** Spool `frames` from a scripted walsender through the tailer into a
+    * fresh segment directory. */
+  private def tailScript(frames: Seq[(Long, PgOutput.PgMsg)], framesPerSegment: Int,
+                         tag: String): String = {
+    val srv = new FakeWalsender(
+      script = _ => frames.map { case (l, m) => (l, PgOutput.encode(m)) }, sendKeepalive = false)
+    val dir = java.nio.file.Files.createTempDirectory(tag).toString
+    val c = new PgReplicationClient("127.0.0.1", srv.port, "rep", "events_db")
+    try {
+      c.handshake()
+      c.startReplication("graft_slot", "graft_pub", 0L)
+      graft.sources.PgWireTailer.tail(SparkSpec.session, c, dir, framesPerSegment)
+      assert(srv.done.await(5, TimeUnit.SECONDS))
+    } finally c.close()
+    dir
+  }
+
+  private def marker(lsn: Long, prefix: String) =
+    PgOutput.LogicalMsg(transactional = true, lsn, prefix, Array.emptyByteArray)
+  private val (markerStart, markerEnd) =
+    (graft.cdc.Cdc.DecompressionMarkerStartId, graft.cdc.Cdc.DecompressionMarkerEndId)
+
+  test("tailer rotation inside a marker bracket replays its Start: bracketed inserts drop") {
+    // 11 frames at 2 a segment: three rotations fall inside the bracket,
+    // and each later segment must still decode under the open bracket
+    val spark = SparkSpec.session
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit, when}
+    def tup(i: Int) = PgOutput.rowTuple(6000L + i, 1700000000000000000L + i, 7L, "signup", 1.0, "{}")
+    def ins(i: Int) = PgOutput.InsertMsg(PgOutput.EventsRelId, tup(i))
+    val frames = Seq(
+      0x4000L -> PgOutput.BeginMsg(0x4b01L, 78000000L, 903),
+      0x4100L -> PgOutput.RelationMsg(PgOutput.EventsRelId, "public", "events",
+        'd'.toByte, PgOutput.EventsRelCols),
+      0x4200L -> ins(0),
+      0x4300L -> marker(0x4300L, markerStart),
+      0x4400L -> ins(1),
+      0x4500L -> ins(2),
+      0x4600L -> PgOutput.UpdateMsg(PgOutput.EventsRelId, None, None, tup(3)),
+      0x4700L -> ins(4),
+      0x4800L -> marker(0x4800L, markerEnd),
+      0x4900L -> ins(5),
+      0x4a00L -> PgOutput.CommitMsg(0, 0x4b01L, 0x4b02L, 78000000L))
+    val dir = tailScript(frames, framesPerSegment = 2, "graft-wire-bracket")
+    val segs = spark.read.schema(PgOutput.frameSchema).parquet(dir)
+    assert(segs.count() === 6L, "11 frames at 2 a segment")
+    val on = PgOutput.decodeSegments(segs, markerSuppress = true).collect()
+    assert(on.filter(_.op_wire == "I").flatMap(_.event_id).sorted.toSeq === Seq(6000L, 6005L))
+    assert(on.filter(_.op_wire == "M").map(_.lsn).sorted.toSeq === Seq(0x4300L, 0x4800L),
+      "one M row per marker frame: the replayed Start is context")
+    assert(on.map(_.xid).toSet === Set(903L))
+    val off = PgOutput.decodeSegments(segs).toDF()
+    assert(off.filter(col("op_wire") === "M").count() === 2L)
+    val batch = graft.cdc.Cdc.markerSuppressPrefixed(off.withColumn("op",
+        when(col("op_wire") === "I", lit("c")).otherwise(col("op_wire"))))
+      .select("lsn").as[Long].collect().sorted
+    assert(on.map(_.lsn).sorted.toSeq === batch.toSeq)
+  }
+
+  test("marker-mode config stream restarted mid-bracket equals the uninterrupted run") {
+    // the tailer's segments land in a config-started marker-mode
+    // stream's directory in two steps, cut inside a bracket; AvailableNow
+    // after each step on one checkpoint delivers what one run over all
+    // segments delivers, and no step keeps a state store
+    val spark = SparkSpec.session
+    import spark.implicits._
+    val sf001 = "/root/testdata/sf0.001"
+    val ev = Tables.events(spark, sf001)
+      .select("event_id", "ts", "user_id", "value", "props")
+      .orderBy("event_id").as[(Long, Long, Long, Double, String)].take(10)
+    def tup(i: Int, et: String) = {
+      val (id, ts, uid, v, props) = ev(i)
+      PgOutput.rowTuple(id, ts, uid, et, v, Option(props).getOrElse("{}"))
+    }
+    def ins(i: Int) = PgOutput.InsertMsg(PgOutput.EventsRelId, tup(i, "signup"))
+    val msgs: Seq[PgOutput.PgMsg] = Seq(
+      PgOutput.BeginMsg(0, 0L, 11),
+      PgOutput.RelationMsg(PgOutput.EventsRelId, "public", "events", 'f'.toByte,
+        PgOutput.EventsRelCols),
+      ins(0), marker(0, markerStart), ins(1), ins(2),                  // cut after ins(2)
+      PgOutput.UpdateMsg(PgOutput.EventsRelId, None, None, tup(3, "purchase")),
+      ins(4), marker(0, markerEnd), ins(5), PgOutput.CommitMsg(0, 0L, 0L, 0L),
+      PgOutput.BeginMsg(0, 0L, 12), marker(0, markerStart), ins(6), ins(7),
+      PgOutput.CommitMsg(0, 0L, 0L, 0L),                              // trailing Start
+      PgOutput.BeginMsg(0, 0L, 13), ins(8),
+      PgOutput.DeleteMsg(PgOutput.EventsRelId, 'O', tup(9, "error")),
+      PgOutput.CommitMsg(0, 0L, 0L, 0L))
+    val frames = msgs.zipWithIndex.map { case (m, i) => (0x5000L + 0x10L * i) -> m }
+    val spool = tailScript(frames, framesPerSegment = 2, "graft-wire-restart-spool")
+    val segs = spark.read.schema(PgOutput.frameSchema).parquet(spool)
+    assert(segs.count() === 10L)
+    def run(steps: Seq[org.apache.spark.sql.DataFrame]): Seq[Long] = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-wire-restart").toString
+      val sink = new graft.sinks.CollectorSink
+      val name = s"collector-${new java.io.File(dir).getName}"
+      graft.sinks.Sinks.register(name, () => sink)
+      val props = Map(
+        "sink.type" -> name,
+        "timescaledb.experimental.decompression.markers" -> "true",
+        "postgresql.pgoutput.path" -> s"$dir/segments",
+        "statestorage.type" -> "file",
+        "statestorage.file.path" -> s"$dir/ckpt")
+      steps.foreach { step =>
+        step.write.mode("append").parquet(s"$dir/segments")
+        val q = graft.streaming.ConfigPipeline.start(spark, sf001, props, dir)
+        assert(q.awaitTermination(300000), "marker-mode stream did not finish")
+        assert(q.recentProgress.nonEmpty &&
+          q.recentProgress.forall(_.stateOperators.isEmpty), "no state store on the wire path")
+      }
+      sink.rows.map(_.getAs[Long]("lsn")).toSeq
+    }
+    val straight = run(Seq(segs))
+    val restarted = run(Seq(segs.filter($"segment" <= 2), segs.filter($"segment" > 2)))
+    assert(straight.sorted === Seq(2, 6, 9, 17, 18).map(frames(_)._1),
+      "inserts 1, 2, 4 (bracket) and 6, 7 (trailing Start) are suppressed")
+    assert(restarted.sorted === straight.sorted)
+  }
+
   test("live chain: streaming decode consumes segments WHILE the tailer spools them") {
     // the full production topology, CONCURRENT: one thread drains the
     // replication socket into rotating segment files (single-reader by

@@ -250,218 +250,6 @@ class StreamingSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS ct_trans")
   }
 
-  test("streaming marker tracker ≡ batch suppression and events across mid-txn splits (T3/P7)") {
-    // the 2.12+ marker path's live home: per-txn keyed state carrying
-    // ongoingDecompression across micro-batches — fed in three batches
-    // whose cuts land mid-transaction, it must reproduce BOTH batch
-    // surfaces (markerSuppress's kept rows, markerDecompression's
-    // per-bracket 'd' events) exactly
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions.col
-    import graft.streaming.MarkerTracker
-    import graft.streaming.MarkerTracker.WalRow
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val wal = graft.cdc.Cdc.walEvents(spark, sf001)
-    val rows = graft.cdc.Cdc.withMessagePrefix(wal)
-      .select(col("lsn"), col("xid"), col("op"), col("chunk_day"),
-        col("ts_ms"), col("msg_prefix"),
-        col("event_id"), col("user_id"), col("value"), col("props"))
-      .as[WalRow].collect().sortBy(_.lsn)
-    val n = rows.length
-    val cuts = Seq(n / 3 + 4, 2 * n / 3 + 7) // off the txn boundaries
-    val parts = Seq(rows.slice(0, cuts(0)), rows.slice(cuts(0), cuts(1)),
-      rows.slice(cuts(1), n))
-    assert(parts.forall(_.nonEmpty))
-    val mem = MemoryStream[WalRow]
-    // bounded replay: withTimeout=false keeps NoTimeout semantics so
-    // processAllAvailable terminates (a pending processing-time timer
-    // holds noNewData false forever — see TxnAssembler's trigger caveat)
-    val q = MarkerTracker.tracked(mem.toDS(), withTimeout = false)
-      .writeStream.format("memory").queryName("mt_out")
-      .outputMode("append").start()
-    try {
-      parts.foreach { p => mem.addData(p.toSeq); q.processAllAvailable() }
-    } finally q.stop()
-    val streamedKept = spark.sql(
-      "SELECT lsn FROM mt_out WHERE tsdb_op IS NULL")
-      .collect().map(_.getLong(0)).sorted
-    val batchKept = graft.cdc.Cdc.markerSuppress(wal)
-      .select("lsn").collect().map(_.getLong(0)).sorted
-    assert(streamedKept.length === batchKept.length &&
-      streamedKept.sameElements(batchKept),
-      "streamed survivors equal the batch window's")
-    val streamedD = spark.sql(
-      "SELECT lsn, xid, chunk_day, n_suppressed, ts_ms FROM mt_out " +
-        "WHERE tsdb_op = 'd'")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
-        r.getLong(3), r.getLong(4))).sortBy(t => (t._1, t._3))
-    val batchD = graft.cdc.Cdc.markerDecompression(wal)
-      .select("lsn", "xid", "chunk_name", "n_suppressed", "ts_ms")
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        r.getString(2).stripPrefix("_hyper_1_").stripSuffix("_chunk").toInt,
-        r.getLong(3), r.getLong(4))).sortBy(t => (t._1, t._3))
-    assert(streamedD.length === batchD.length && streamedD.sameElements(batchD),
-      "streamed per-bracket 'd' events equal the batch flow's")
-    assert(streamedD.nonEmpty, "the fixture carries real brackets")
-    spark.sql("DROP TABLE IF EXISTS mt_out")
-  }
-
-  test("marker tracker state lives only while a bracket is open (no per-txn residue)") {
-    // xid cardinality is data-sized, so idle transactions must leave NO
-    // state entry behind — unlike the chunk tracker whose keys are
-    // DDL-bounded. TestGroupState exposes the update/remove decisions.
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    import graft.streaming.MarkerTracker
-    import graft.streaming.MarkerTracker.{TxnState, WalRow}
-    val S = graft.cdc.Cdc.DecompressionMarkerStartId
-    val E = graft.cdc.Cdc.DecompressionMarkerEndId
-    import org.apache.spark.api.java.{Optional => JOpt}
-    def fresh(init: Option[TxnState]) = TestGroupState.create[TxnState](
-      init.map(JOpt.of[TxnState]).getOrElse(JOpt.empty[TxnState]()),
-      GroupStateTimeout.NoTimeout, 0L,
-      JOpt.empty[Long](), hasTimedOut = false)
-    // marker-free txn: rows pass through, NO state written
-    val idle = fresh(None)
-    val out1 = MarkerTracker.track(1L,
-      Iterator(WalRow(1L, 1L, "c", 0, 10L, None)), idle).toSeq
-    assert(out1.map(_.lsn) === Seq(1L) && !idle.isUpdated && !idle.isRemoved)
-    // open bracket: state persists across the batch boundary
-    val open = fresh(None)
-    MarkerTracker.track(2L, Iterator(
-      WalRow(10L, 2L, "m", 0, 100L, Some(S)),
-      WalRow(11L, 2L, "c", 0, 110L, None)), open).toSeq
-    assert(open.isUpdated && open.get.ongoing && open.get.counts.nonEmpty)
-    // the closing batch emits the event AND removes the entry
-    val closing = fresh(Some(TxnState(ongoing = true, Map(0 -> (1L, 110L)))))
-    val out3 = MarkerTracker.track(2L,
-      Iterator(WalRow(12L, 2L, "m", 0, 120L, Some(E))), closing).toSeq
-    assert(out3.exists(o => o.tsdb_op.contains("d") && o.n_suppressed === 1L))
-    assert(closing.isRemoved, "closed bracket leaves no state behind")
-  }
-
-  test("marker tracker evicts an expired bracket window, draining the tally (T2×T3)") {
-    // the reference's transaction-window bounds on the tracker's OWN
-    // store (transactiontracker.go:458-482): a bracket whose end marker
-    // never arrives is drained at the deadline, and an oversized
-    // bracket drains at the tally cap — TestGroupState pins both
-    // decisions directly
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    import graft.streaming.MarkerTracker
-    import graft.streaming.MarkerTracker.{TxnState, WalRow}
-    import org.apache.spark.api.java.{Optional => JOpt}
-    val S = graft.cdc.Cdc.DecompressionMarkerStartId
-    def timed(init: Option[TxnState], nowMs: Long, timedOut: Boolean) =
-      TestGroupState.create[TxnState](
-        init.map(JOpt.of[TxnState]).getOrElse(JOpt.empty[TxnState]()),
-        GroupStateTimeout.ProcessingTimeTimeout, nowMs,
-        JOpt.empty[Long](), hasTimedOut = timedOut)
-    val step = MarkerTracker.track(60000L, 10000L, withTimeout = true) _
-    // timeout callback: no data, deadline passed → drain at lastLsn, remove
-    val expired = timed(Some(TxnState(ongoing = true,
-      Map(3 -> (7L, 300L)), lastLsn = 42L, deadlineMs = 1000L)),
-      nowMs = 2000L, timedOut = true)
-    val evicted = step(9L, Iterator.empty, expired).toSeq
-    assert(evicted.map(o => (o.lsn, o.chunk_day, o.tsdb_op, o.n_suppressed)) ===
-      Seq((42L, 3, Some("d"), 7L)), "eviction drains the tallied state")
-    assert(expired.isRemoved, "the never-closed bracket's entry is evicted")
-    // expired window met by new data on the same trigger: drain first,
-    // then the fresh rows stream through untracked
-    val stale = timed(Some(TxnState(ongoing = true,
-      Map(1 -> (2L, 100L)), lastLsn = 10L, deadlineMs = 1000L)),
-      nowMs = 5000L, timedOut = false)
-    val out = step(7L, Iterator(WalRow(11L, 7L, "c", 1, 110L, None)), stale).toSeq
-    assert(out.map(o => (o.lsn, o.tsdb_op, o.n_suppressed)) ===
-      Seq((10L, Some("d"), 2L), (11L, None, 0L)),
-      "post-drain passthrough: the create survives instead of being suppressed")
-    assert(stale.isRemoved, "drained window leaves no entry")
-    // a fresh Start arms the callback for the FULL window from open
-    val opening = timed(None, nowMs = 50000L, timedOut = false)
-    step(8L, Iterator(WalRow(20L, 8L, "m", 0, 200L, Some(S))), opening).toSeq
-    assert(opening.isUpdated && opening.get.deadlineMs === 110000L,
-      "deadline is fixed from bracket open (now + 60s)")
-    // tally cap: the overflowing create drains the bracket in place
-    val cap = MarkerTracker.track(60000L, 3L, withTimeout = true) _
-    val big = timed(Some(TxnState(ongoing = true,
-      Map(2 -> (2L, 100L)), lastLsn = 30L, deadlineMs = 120000L)),
-      nowMs = 1000L, timedOut = false)
-    val out2 = cap(6L, Iterator(
-      WalRow(31L, 6L, "c", 2, 130L, None),
-      WalRow(32L, 6L, "c", 2, 140L, None)), big).toSeq
-    assert(out2.map(o => (o.lsn, o.tsdb_op, o.n_suppressed)) ===
-      Seq((31L, Some("d"), 3L), (32L, None, 0L)),
-      "overflow drains at the cap and streams the rest through")
-    assert(big.isRemoved)
-  }
-
-  test("checkpoint restart mid-bracket: marker output equals the uninterrupted run (T1×T3)") {
-    // the reference's restart test composed with the marker tracker
-    // (streamer_restart_test.go:59): stop the query while a bracket is
-    // OPEN with tallies pending, restart from the checkpoint, and the
-    // resumed state must close the bracket exactly where the
-    // uninterrupted run does — identical rows out, nothing lost or
-    // duplicated across the restart
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.MarkerTracker
-    import graft.streaming.MarkerTracker.WalRow
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val S = graft.cdc.Cdc.DecompressionMarkerStartId
-    val E = graft.cdc.Cdc.DecompressionMarkerEndId
-    // the stop lands mid-bracket: txn 5's bracket opens and tallies two
-    // chunks in part 1, closes in part 2; txn 6 is entirely post-restart
-    val part1 = Seq(
-      WalRow(100L, 5L, "m", 0, 1000L, Some(S)),
-      WalRow(101L, 5L, "c", 0, 1010L, None),
-      WalRow(102L, 5L, "c", 1, 1020L, None))
-    val part2 = Seq(
-      WalRow(103L, 5L, "c", 0, 1030L, None),
-      WalRow(104L, 5L, "m", 0, 1040L, Some(E)),
-      WalRow(105L, 5L, "c", 0, 1050L, None),
-      WalRow(110L, 6L, "m", 0, 1100L, Some(S)),
-      WalRow(111L, 6L, "c", 2, 1110L, None),
-      WalRow(112L, 6L, "m", 0, 1120L, Some(E)))
-    type Out = (Long, Long, Int, Option[String], Long)
-    def run(restart: Boolean): Seq[Out] = {
-      val ckpt = Files.createTempDirectory("graft-mt-restart").toString
-      // keyed by batchId: foreachBatch is at-least-once across a
-      // restart, so a replayed batch overwrites rather than duplicates
-      val got = scala.collection.mutable.Map[Long, Seq[Out]]()
-      val mem = MemoryStream[WalRow]
-      def startQ() = MarkerTracker.tracked(mem.toDS(), withTimeout = false)
-        .toDF().writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          got(id) = b.collect().map(r => (r.getLong(0), r.getLong(1),
-            r.getInt(3), Option(r.getString(5)), r.getLong(6))).toSeq
-          ()
-        }
-        .outputMode("append").start()
-      if (restart) {
-        val q1 = startQ()
-        try { mem.addData(part1); q1.processAllAvailable() } finally q1.stop()
-        val q2 = startQ() // resume from the checkpointed offsets + state
-        try { mem.addData(part2); q2.processAllAvailable() } finally q2.stop()
-      } else {
-        val q = startQ()
-        try {
-          mem.addData(part1); q.processAllAvailable()
-          mem.addData(part2); q.processAllAvailable()
-        } finally q.stop()
-      }
-      got.toSeq.sortBy(_._1).flatMap(_._2)
-    }
-    val straight  = run(restart = false)
-    val restarted = run(restart = true)
-    assert(restarted === straight,
-      "restart from checkpoint mid-bracket reproduces the uninterrupted output")
-    // and the resumed bracket really carried its pre-stop tallies: the
-    // close at lsn 104 drains chunk 0 (rows 101+103) and chunk 1 (102)
-    val d5 = restarted.filter(o => o._2 === 5L && o._4.contains("d"))
-      .map(o => (o._1, o._3, o._5)).sorted
-    assert(d5 === Seq((104L, 0, 2L), (104L, 1, 1L)),
-      "the bracket's pre-stop tallies survived the restart")
-  }
-
   test("checkpoint restart mid-history: compression transitions equal the uninterrupted run (T1×T3)") {
     // the status-machine twin of the restart case: per-chunk last-known
     // status must resume from the state store, or post-restart updates
@@ -510,56 +298,6 @@ class StreamingSpec extends SparkSpec {
     val restarted = run(restart = true).sortBy(t => (t._1, t._3))
     assert(restarted === straight,
       "restart from checkpoint mid-history reproduces the uninterrupted transitions")
-  }
-
-  test("live stream: a never-closed bracket is evicted and a late end marker is inert") {
-    // end-to-end form of the eviction: a short window, a bracket whose
-    // end marker never arrives, a later trigger fires the timer — the
-    // tallied 'd' event emits, and the end marker arriving AFTER the
-    // eviction is a plain message (no phantom second event)
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.MarkerTracker
-    import graft.streaming.MarkerTracker.WalRow
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val S = graft.cdc.Cdc.DecompressionMarkerStartId
-    val E = graft.cdc.Cdc.DecompressionMarkerEndId
-    val mem = MemoryStream[WalRow]
-    val q = MarkerTracker.tracked(mem.toDS(), timeoutMs = 250L)
-      .writeStream.format("memory").queryName("mt_evict")
-      .outputMode("append").start()
-    // pending processing-time timers hold noNewData false, so
-    // processAllAvailable would spin forever (TxnAssembler caveat) —
-    // poll the sink for the expected row count instead
-    def rowCount(): Long =
-      spark.sql("SELECT count(*) FROM mt_evict").head.getLong(0)
-    def awaitCount(want: Long): Unit = {
-      val deadline = System.nanoTime + 120e9.toLong
-      while (rowCount() < want && System.nanoTime < deadline) Thread.sleep(100)
-      assert(rowCount() >= want, s"timed out waiting for $want rows")
-    }
-    try {
-      mem.addData(Seq(
-        WalRow(100L, 5L, "m", 0, 1000L, Some(S)),
-        WalRow(101L, 5L, "c", 0, 1010L, None),
-        WalRow(102L, 5L, "c", 0, 1020L, None)))
-      awaitCount(1) // the start marker rides through; creates suppressed
-      Thread.sleep(600) // let the 250 ms window expire
-      mem.addData(Seq(WalRow(200L, 9L, "u", 1, 2000L, None)))
-      awaitCount(3) // + the unrelated row + the drained 'd' event
-      mem.addData(Seq(WalRow(103L, 5L, "m", 0, 1030L, Some(E))))
-      awaitCount(4) // + the late end marker as a plain message
-    } finally q.stop()
-    val rows = spark.sql(
-      "SELECT lsn, xid, tsdb_op, n_suppressed FROM mt_evict ORDER BY lsn").collect()
-    val dEvents = rows.filter(r => !r.isNullAt(2))
-    assert(dEvents.map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSeq ===
-      Seq((102L, 5L, 2L)),
-      "exactly one drained event at the last-seen lsn, tally intact")
-    // the start marker + the unrelated row + the late end marker survive
-    assert(rows.filter(_.isNullAt(2)).map(_.getLong(0)).toSeq === Seq(100L, 200L, 103L).sorted,
-      "the late end marker rides through as a plain message")
-    spark.sql("DROP TABLE IF EXISTS mt_evict")
   }
 
   test("windowed aggregation with watermark matches batch hourly counts (A2)") {

@@ -101,15 +101,19 @@ class WalSourceSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("high-watermark read survives the WAL being replaced mid-read") {
-    // a growing WAL is swapped in atomically; a footer read racing the
-    // swap must re-read the new file, never fail the stream
+  /** Run `read` against a WAL directory for 3 s while a writer thread
+    * keeps swapping in a 300- and a 500-event version atomically, the
+    * way a growing WAL is replaced. */
+  private def whileWalSwaps(read: String => Unit): Unit = {
     import java.nio.file.{Files, StandardCopyOption => C}
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("wal-swap")
     val versions = Seq(300L, 500L).map { n =>
       val out = Files.createTempDirectory("wal-swap-v").toString
-      spark.range(0, n).select(col("id").as("event_id"))
+      spark.range(0, n).select(
+          col("id").as("event_id"), (col("id") * 1000000000L).as("ts"),
+          (col("id") % 50).as("user_id"), lit("view").as("event_type"),
+          (col("id") * lit(1.0)).as("value"), lit("{}").as("props"))
         .coalesce(1).write.mode("overwrite").parquet(out)
       new java.io.File(out).listFiles().find(_.getName.endsWith(".parquet")).get.toPath
     }
@@ -119,7 +123,6 @@ class WalSourceSpec extends SparkSpec {
       Files.move(staged, dir.resolve("events.parquet"), C.REPLACE_EXISTING, C.ATOMIC_MOVE)
     }
     swapIn(versions.head)
-    val stream = new graft.sources.WalMicroBatchStream(dir.toString, 100)
     @volatile var stop = false
     val writer = new Thread(() => {
       var i = 1
@@ -128,11 +131,35 @@ class WalSourceSpec extends SparkSpec {
     writer.start()
     try {
       val deadline = System.nanoTime() + 3e9.toLong
-      while (System.nanoTime() < deadline) {
-        val hw = stream.reportLatestOffset().asInstanceOf[graft.sources.LsnOffset].lsn
-        assert(hw === 300L || hw === 500L)
-      }
+      while (System.nanoTime() < deadline) read(dir.toString)
     } finally { stop = true; writer.join() }
+  }
+
+  test("high-watermark read survives the WAL being replaced mid-read") {
+    // a footer read racing the swap must re-read the new file, never
+    // fail the stream
+    whileWalSwaps { dir =>
+      val hw = new graft.sources.WalMicroBatchStream(dir, 100)
+        .reportLatestOffset().asInstanceOf[graft.sources.LsnOffset].lsn
+      assert(hw === 300L || hw === 500L)
+    }
+  }
+
+  test("range reads survive the WAL being replaced between stat and open") {
+    // an executor's range reader stats events.parquet and opens it on
+    // the first read; a replace in between must not fail the read or
+    // serve a torn one
+    var reads = 0
+    whileWalSwaps { dir =>
+      // [100, 300) exists in both versions
+      val r = new graft.sources.WalRangeReader(dir, 100L, 300L)
+      val lsns = try Iterator.continually(r.next()).takeWhile(identity)
+          .map(_ => r.get().getLong(0)).toVector
+        finally r.close()
+      assert(lsns === (100L until 300L).toVector)
+      reads += 1
+    }
+    assert(reads > 10, s"only $reads range reads in 3 s")
   }
 
   test("restart recovery at sf0.1 with a heap-bounded driver (100k events)") {
