@@ -830,7 +830,8 @@ object PgOutput {
     * `Tables.spread` — on a real layout (row groups ≥ cores, segment
     * bytes ≫ AQE's advisory size) this is a NO-OP by construction, and
     * the production wire path ([[streamDecoded]]) takes its parallelism
-    * from the segment store's own splits, never from this helper. */
+    * from the segment source's byte-balanced file packing, never from
+    * this helper. */
   def segmentsSpread(spark: SparkSession, dir: String, segs: DataFrame): DataFrame =
     Tables.spread(spark, dir, "events", segs, col("segment"))
 
@@ -970,14 +971,17 @@ object PgOutput {
       .orderBy(col("lsn"))
   }
 
-  /** Streaming twin: readStream the segment parquet and run the SAME
-    * decode flatMap — the alternate `WalSource` reader over binary
-    * fixtures (`replicationhandler.go:115-215`'s socket loop, as a
-    * file-fed micro-batch stream). */
+  /** Streaming twin: the segment files under `segmentsPath`, read by
+    * [[graft.sources.SegmentDataSource]], run through the SAME decode
+    * flatMap (`replicationhandler.go:115-215`'s socket loop, as a
+    * file-fed micro-batch stream). The source lists the directory on the
+    * driver and orders files by (mtime, name), so planning a batch runs
+    * no Spark job; the files must come from one sequential writer (the
+    * tailer, a spool), and one written behind the offset fails the query. */
   def streamDecoded(spark: SparkSession, segmentsPath: String,
                     resolver: graft.types.TypeRegistry.Resolver =
                       graft.types.TypeRegistry.Resolver.empty,
                     markerSuppress: Boolean = false): Dataset[DecodedWal] =
-    decodeSegments(spark.readStream.schema(frameSchema).parquet(segmentsPath), resolver,
-      markerSuppress)
+    decodeSegments(spark.readStream.format(classOf[graft.sources.SegmentDataSource].getName)
+      .option("path", segmentsPath).load(), resolver, markerSuppress)
 }

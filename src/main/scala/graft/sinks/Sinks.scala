@@ -487,10 +487,11 @@ final case class RedisSinkConfig(
     tlsSkipVerify: Boolean = false,
     // `sink.redis.timeouts.{dial,read,write}` (`redis.go:66-74`). Dial
     // and read map to connect timeout / SO_TIMEOUT on the partition
-    // socket, write to a [[WriteBoundedSocket]] deadline; an unset write
-    // timeout takes the read timeout, as go-redis's does.
-    dialTimeoutMs: Long = 0,
-    readTimeoutMs: Long = 0,
+    // socket, write to a [[WriteBoundedSocket]] deadline. go-redis's
+    // defaults and conventions: dial 5 s, read 3 s, write = read; 0
+    // (an unset key) takes the default, a negative value sets no deadline.
+    dialTimeoutMs: Long = RedisSinkConfig.DefaultDialTimeoutMs,
+    readTimeoutMs: Long = RedisSinkConfig.DefaultReadTimeoutMs,
     writeTimeoutMs: Long = 0,
     // `sink.redis.poolsize` + `timeouts.{pool,idle}` (`redis.go:75-83`):
     // go-redis pools connections inside one process; here each executor
@@ -500,6 +501,16 @@ final case class RedisSinkConfig(
     poolSize: Int = 0,
     poolTimeoutMs: Long = 0,
     idleTimeoutMs: Long = 0)
+
+object RedisSinkConfig {
+  val DefaultDialTimeoutMs = 5000L
+  val DefaultReadTimeoutMs = 3000L
+
+  /** go-redis's reading of a timeout: 0 takes `default`, a negative value
+    * means no deadline (0 to [[Sinks.dialSocket]]). */
+  private[sinks] def deadlineMs(ms: Long, default: Long): Long =
+    if (ms == 0) default else math.max(ms, 0L)
+}
 
 /** Minimal RESP2 client for the reference's Redis emit
   * (`redis.go:111-131`: `XADD <topic> * key <key> envelope <envelope>`
@@ -516,8 +527,10 @@ final case class RedisSink(config: RedisSinkConfig) extends Sink {
     val password = config.password
     val database = config.database
     val (tls, skipVerify) = (config.tls, config.tlsSkipVerify)
-    val (dialMs, readMs) = (config.dialTimeoutMs, config.readTimeoutMs)
-    val writeMs = if (config.writeTimeoutMs > 0) config.writeTimeoutMs else readMs
+    import RedisSinkConfig.deadlineMs
+    val dialMs = deadlineMs(config.dialTimeoutMs, RedisSinkConfig.DefaultDialTimeoutMs)
+    val readMs = deadlineMs(config.readTimeoutMs, RedisSinkConfig.DefaultReadTimeoutMs)
+    val writeMs = deadlineMs(config.writeTimeoutMs, readMs)
     batch.select("topic", "key", "envelope").foreachPartition { (rows: Iterator[Row]) =>
       if (rows.hasNext) {                  // empty partition: don't even dial
       val (host, port) = Sinks.hostPort(address, 6379)

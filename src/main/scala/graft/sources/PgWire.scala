@@ -588,7 +588,9 @@ final class PgReplicationClient(host: String, port: Int, user: String,
   * into the bounded segment blobs [[graft.cdc.PgOutput.streamDecoded]]
   * already consumes, so the DECODE fans out across executors and the
   * downstream pipeline checkpoints file offsets exactly as with
-  * fixture data. The tailer itself is O(segment) memory and does no
+  * fixture data. The tailer is the segment source's single sequential
+  * writer: it commits one file at a time, so (mtime, name) order is its
+  * commit order. The tailer itself is O(segment) memory and does no
   * decoding — wire bytes pass through verbatim (writeFrame re-frames
   * with the same 'w' layout, length-prefixed for the file format).
   *

@@ -24,9 +24,11 @@ object StatsEndpoint {
 
   /** Prometheus text exposition (v0.0.4) of the counter map. Counters
     * the reference doesn't name surface under `graft_` so nothing
-    * silently disappears from the scrape. */
+    * silently disappears from the scrape, and so do the per-source
+    * `gauges`, labelled with the source they describe. */
   def render(counters: scala.collection.Map[String, Long],
-             runtimeStats: Boolean = true): String = {
+             runtimeStats: Boolean = true,
+             gauges: scala.collection.Map[(String, String), Long] = Map.empty): String = {
     val sb = new StringBuilder
     series.foreach { case (key, name, typ) =>
       sb.append("# TYPE ").append(name).append(' ').append(typ).append('\n')
@@ -37,6 +39,14 @@ object StatsEndpoint {
       val safe = "graft_" + k.replaceAll("[^a-zA-Z0-9_]", "_")
       sb.append("# TYPE ").append(safe).append(" counter\n")
       sb.append(safe).append(' ').append(v).append('\n')
+    }
+    gauges.groupBy(_._1._1).toSeq.sortBy(_._1).foreach { case (name, bySource) =>
+      sb.append("# TYPE graft_").append(name).append(" gauge\n")
+      bySource.toSeq.sortBy(_._1._2).foreach { case ((_, source), v) =>
+        val label = source.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n")
+        sb.append("graft_").append(name).append("{source=\"").append(label).append("\"} ")
+          .append(v).append('\n')
+      }
     }
     if (runtimeStats) sb.append(runtimeMetrics())
     sb.toString
@@ -113,7 +123,7 @@ object StatsEndpoint {
       new java.net.InetSocketAddress(port), 0)
     server.createContext("/metrics", new com.sun.net.httpserver.HttpHandler {
       def handle(ex: com.sun.net.httpserver.HttpExchange): Unit = {
-        val body = render(listener.counters, runtimeStats).getBytes("UTF-8")
+        val body = render(listener.counters, runtimeStats, listener.gauges).getBytes("UTF-8")
         ex.getResponseHeaders.add("Content-Type",
           "text/plain; version=0.0.4; charset=utf-8")
         ex.sendResponseHeaders(200, body.length.toLong)

@@ -16,6 +16,10 @@ import scala.collection.concurrent.TrieMap
   */
 class StatsListener extends StreamingQueryListener {
   val counters = new TrieMap[String, Long]()
+  /** (gauge name, source description) → the value the source last
+    * reported: the segment source's backlog, files and bytes listed but
+    * not yet served. */
+  val gauges = new TrieMap[(String, String), Long]()
 
   private def add(k: String, v: Long): Unit =
     counters.updateWith(k) { c => Some(c.getOrElse(0L) + v) }
@@ -49,5 +53,12 @@ class StatsListener extends StreamingQueryListener {
     }
     if (om.containsKey("graft_emitted"))
       add("emitted.count", long(om.get("graft_emitted"), "n_emitted"))
+    e.progress.sources.foreach { s =>
+      val m = s.metrics
+      if (m.containsKey("pendingFiles")) {
+        gauges(("source_pending_segment_files", s.description)) = m.get("pendingFiles").toLong
+        gauges(("source_pending_segment_bytes", s.description)) = m.get("pendingBytes").toLong
+      }
+    }
   }
 }

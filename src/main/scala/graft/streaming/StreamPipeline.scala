@@ -4,7 +4,7 @@ import graft.Tables
 import graft.cdc.Cdc
 import graft.model.Envelope
 import graft.sinks.Sink
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -15,9 +15,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * persists the restart LSN (`eventemitter.go:163`,
   * `replicationcontext.go:251-281`). The Spark shape:
   *
-  *   - source: `readStream` over WAL-like batches (here: the events
-  *     parquet; a real pgoutput `MicroBatchStream` slots in behind the
-  *     same DataFrame contract — SURVEY §7.1 source strategy);
+  *   - source: `readStream` over WAL-like batches — the events parquet
+  *     stand-in, or pgoutput segment files through
+  *     [[graft.sources.SegmentDataSource]] behind the same DataFrame
+  *     contract (SURVEY §7.1 source strategy);
   *   - offsets/recovery (T1): the checkpoint directory IS the offset
   *     store — restart resumes exactly where the last committed batch
   *     ended, the analog of restart-LSN handling;
@@ -74,9 +75,14 @@ object StreamPipeline {
         col("msg_prefix"))
 
   /** Full streaming envelope pipeline: shape → gates → envelope columns.
-    * The chunk catalog is resolved against a *static* DataFrame — a
-    * stream-static broadcast join, the Spark analog of the reference's
-    * in-memory chunk cache (`containers/relationcache.go`).
+    * The joined chunk → hypertable catalog is read ONCE, on the driver,
+    * when the stream is built — the reference loads its chunk cache at
+    * startup (`containers/relationcache.go`) — and every micro-batch
+    * resolves `chunk_day` against that snapshot with a literal map
+    * lookup: no join, so no catalog job runs per batch. Inner-join
+    * semantics hold: a row whose `chunk_day` is not in the snapshot is
+    * dropped. A chunk created after the stream starts resolves after a
+    * restart.
     *
     * `pgoutputPath`: when set, the WAL comes from binary pgoutput
     * segment blobs instead of the parquet stand-in — the config surface
@@ -104,18 +110,30 @@ object StreamPipeline {
         .select(col("lsn"), col("msg_prefix"))
       walStream(spark, dir).join(broadcast(prefixes), Seq("lsn"), "left")
     }(walStreamPgOutput(spark, _, typeResolver, markerSuppress))
-    val resolved = wal
-      .join(broadcast(Cdc.chunkCatalog(spark, dir)), Seq("chunk_day"))
-      .join(broadcast(Cdc.hypertableCatalog(spark)), Seq("hypertable_id"))
-    resolved
-      .filter(col("op").isin(enabledOps: _*))
+    val chunk = chunkLookup(spark, dir)(col("chunk_day"))
+    wal
+      .filter(chunk.isNotNull && col("op").isin(enabledOps: _*))
       .select(
         col("lsn"), col("xid"), col("op"), col("ts_ms"),
-        col("ht_schema").as("schema_name"), col("ht_table").as("table_name"),
-        col("chunk_name"),
-        Envelope.topicName("graft", col("ht_schema"), col("ht_table")).as("topic"),
+        chunk("ht_schema").as("schema_name"), chunk("ht_table").as("table_name"),
+        chunk("chunk_name").as("chunk_name"),
+        Envelope.topicName("graft", chunk("ht_schema"), chunk("ht_table")).as("topic"),
         col("event_id"), col("user_id"), col("value"), col("props"),
         col("msg_prefix"))
+  }
+
+  /** A chunk's resolution: its name and its hypertable's. */
+  final case class ChunkRef(chunk_name: String, ht_schema: String, ht_table: String)
+
+  /** `chunk_day` → [[ChunkRef]] of the chunk catalog joined to the
+    * hypertable catalog, collected now, as a map literal. */
+  private def chunkLookup(spark: SparkSession, dir: String): Column = {
+    import spark.implicits._
+    typedLit(Cdc.chunkCatalog(spark, dir)
+      .join(Cdc.hypertableCatalog(spark), Seq("hypertable_id"))
+      .select(col("chunk_day"), col("chunk_name"), col("ht_schema"), col("ht_table"))
+      .as[(Int, String, String, String)].collect()
+      .map { case (day, name, schema, table) => day -> ChunkRef(name, schema, table) }.toMap)
   }
 
   /** Streaming marker mode runs only on the wire arm: fail before any

@@ -49,6 +49,38 @@ class StreamingSpec extends SparkSpec {
     toasted.foreach(r => assert(r.getString(2).contains("\"props\":null,")))
   }
 
+  test("wire stream: a row whose chunk_day is not in the catalog is dropped") {
+    // the catalog is read once when the stream is built; a row that does
+    // not resolve against it is dropped, as the inner join dropped it
+    import org.apache.spark.sql.functions.{col, when}
+    val spark0 = spark
+    import spark0.implicits._
+    val dir = Files.createTempDirectory("graft-unresolved").toString
+    val moved = col("event_id") % 97 === 0
+    val events = Tables.events(spark, sf001)
+      .withColumn("ts", when(moved, col("ts") + 400L * graft.cdc.Cdc.NanosPerDay).otherwise(col("ts")))
+    graft.cdc.PgOutput.encodeSegments(events).write.parquet(s"$dir/segments")
+    val q = StreamPipeline.envelopeStream(spark, sf001, pgoutputPath = Some(s"$dir/segments"))
+      .writeStream.format("memory").queryName("unresolved_chunks")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(240000), "stream did not finish within the timeout")
+    val out = spark.table("unresolved_chunks")
+    assert(out.columns.toSeq === Seq("lsn", "xid", "op", "ts_ms", "schema_name", "table_name",
+      "chunk_name", "topic", "event_id", "user_id", "value", "props", "msg_prefix"))
+    val decoded = graft.cdc.PgOutput.decodeSegments(
+        spark.read.schema(graft.cdc.PgOutput.frameSchema).parquet(s"$dir/segments"))
+      .filter(col("op_wire").isin("I", "U", "D"))
+    val expected = decoded.filter(!moved).select("lsn").as[Long].collect().sorted
+    assert(decoded.filter(moved).count() > 0, "the fixture moves some rows out of the catalog")
+    assert(out.select("lsn").as[Long].collect().sorted === expected)
+    val sample = out.filter(col("event_id") === 1L)
+      .select("schema_name", "table_name", "chunk_name", "topic", "ts_ms").as[(String, String, String, String, Long)]
+      .head()
+    val day = sample._5 / 86400000L - graft.cdc.Cdc.EpochDay20240101
+    assert(sample === (("public", "events", s"_hyper_1_${day}_chunk", "graft.public.events", sample._5)))
+    spark.sql("DROP TABLE IF EXISTS unresolved_chunks")
+  }
+
   test("mid-stream ADD COLUMN widens the envelope across micro-batches without restart (T9)") {
     // the in-flight half of the reference's ApplySchemaUpdate
     // (systemcatalog.go:347-373): a fresh Relation message with a new
@@ -705,6 +737,67 @@ class StreamingSpec extends SparkSpec {
           runtimeStats = false).contains("streamer_runtime_"))
       } finally server.stop(0)
     } finally spark.streams.removeListener(listener)
+  }
+
+  test("stats endpoint: a replayed batch reports the spool backlog as pending-segment gauges") {
+    // a crash after batch 0 was delivered and before it was committed:
+    // the restart replays batch 0 while four more segment files wait,
+    // and the scrape shows them until the next batch serves them
+    import org.apache.spark.sql.functions.col
+    val dir = Files.createTempDirectory("graft-pending").toString
+    val segs = graft.cdc.PgOutput.encodeSegments(Tables.events(spark, sf001), segmentTxns = 10)
+    def write(f: org.apache.spark.sql.Column, n: Int): Unit =
+      segs.filter(f).repartitionByRange(n, col("segment")).write.mode("append")
+        .parquet(s"$dir/segments")
+    write(col("segment") < 6, 6)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val name = s"pending-${new java.io.File(dir).getName}"
+    graft.sinks.Sinks.register(name, () => new graft.sinks.Sink {
+      def name = "pending"
+      def emit(batch: org.apache.spark.sql.DataFrame, batchId: Long): Unit = {
+        batch.collect()
+        if (batchId == 1) release.await(120, java.util.concurrent.TimeUnit.SECONDS)
+      }
+    })
+    val probe = new java.net.ServerSocket(0)
+    val port = probe.getLocalPort
+    probe.close()
+    val props = Map(
+      "sink.type" -> name,
+      "postgresql.pgoutput.path" -> s"$dir/segments",
+      "statestorage.type" -> "file",
+      "statestorage.file.path" -> s"$dir/ckpt",
+      "stats.port" -> port.toString)
+    def scrape(): String = {
+      val url = new java.net.URI(s"http://127.0.0.1:$port/metrics").toURL
+      new String(url.openStream().readAllBytes(), "UTF-8")
+    }
+    def gauge(body: String, metric: String): Option[Long] = body.linesIterator
+      .find(l => l.startsWith(s"graft_$metric{") && l.contains(dir))
+      .map(_.split(' ').last.toLong)
+    def awaitGauge(metric: String, value: Long): Unit = {
+      val deadline = System.nanoTime + 60e9.toLong
+      while (gauge(scrape(), metric) != Some(value) && System.nanoTime < deadline) Thread.sleep(50)
+      assert(gauge(scrape(), metric) === Some(value), scrape())
+    }
+    try {
+      val first = graft.streaming.ConfigPipeline.start(spark, sf001, props, dir)
+      assert(first.awaitTermination(240000), "stream did not finish within the timeout")
+      awaitGauge("source_pending_segment_files", 0)
+      Seq("0", ".0.crc").foreach(f => Files.deleteIfExists(java.nio.file.Paths.get(dir, "ckpt", "commits", f)))
+      write(col("segment") >= 6, 4)
+      val waiting = new java.io.File(s"$dir/segments").listFiles()
+        .filter(f => f.getName.endsWith(".parquet")).sortBy(_.lastModified).takeRight(4)
+      val q = graft.streaming.ConfigPipeline.start(spark, sf001, props, dir)
+      try {
+        awaitGauge("source_pending_segment_files", 4)
+        awaitGauge("source_pending_segment_bytes", waiting.map(_.length).sum)
+        assert(q.recentProgress.head.sources(0).metrics.get("pendingFiles") === "4")
+      } finally release.countDown()
+      assert(q.awaitTermination(240000), "stream did not finish within the timeout")
+      awaitGauge("source_pending_segment_files", 0)
+      assert(scrape().contains("# TYPE graft_source_pending_segment_files gauge"))
+    } finally graft.streaming.StatsEndpoint.stop(port)
   }
 
   test("stats endpoint: a bound port belongs to ONE session — a second session fails loudly") {

@@ -81,6 +81,41 @@ class BoundedWriteSpec extends SparkSpec {
     }
   }
 
+  test("redis sink, default config: a server that reads the XADD and never replies fails the emit") {
+    // go-redis's default read timeout (3 s) bounds the wait for the reply
+    val server = new java.net.ServerSocket(0, 50, java.net.InetAddress.getByName("127.0.0.1"))
+    val accepted = new java.util.concurrent.ConcurrentLinkedQueue[java.net.Socket]()
+    val reader = new Thread(() =>
+      try while (true) {
+        val s = server.accept()
+        accepted.add(s)
+        new Thread(() => try s.getInputStream.transferTo(java.io.OutputStream.nullOutputStream())
+          catch { case _: java.io.IOException => () }).start()
+      } catch { case _: java.io.IOException => () })
+    reader.setDaemon(true)
+    reader.start()
+    try {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration._
+      import spark.implicits._
+      val sink = Sinks.fromConfig(Map("sink.type" -> "redis",
+        "sink.redis.address" -> s"127.0.0.1:${server.getLocalPort}"))
+      val rows = Seq(("t", "k", "e")).toDF("topic", "key", "envelope").coalesce(1)
+      val t0 = System.nanoTime()
+      val outcome = Future(scala.util.Try(sink.emit(rows, 1L)))(
+        scala.concurrent.ExecutionContext.global)
+      val result = Await.result(outcome, 60.seconds)
+      val took = (System.nanoTime() - t0) / 1e9
+      assert(result.isFailure, "a server that never replies must fail the emit")
+      assert(causes(result.failed.get).contains("java.net.SocketTimeoutException"),
+        causes(result.failed.get))
+      assert(took < 20, s"emit took $took s")
+    } finally {
+      server.close()
+      accepted.forEach(s => s.close())
+    }
+  }
+
   test("nats sink: a server that stops reading after the handshake fails the emit within its timeout") {
     withStalledPeer("INFO {\"server_id\":\"stalled\"}\r\n", Seq("PING" -> "PONG\r\n")) { port =>
       assertFailsWithin(NatsSink(NatsSinkConfig(address = s"nats://127.0.0.1:$port",
