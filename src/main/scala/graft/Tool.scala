@@ -21,7 +21,8 @@ object Tool {
     Cmd("bench", "<query> <sfDir> [iters=3]",
       "time one query through the bench's noop-write loop", 2, bench),
     Cmd("profile", "<query> <sfDir> [iters=2]",
-      "time one query, then print per-job wall time and per-stage task metrics of the last run",
+      "time one query, then print the last run's construction and action jobs and seconds, " +
+        "per-job wall time and per-stage task metrics",
       2, profile),
     Cmd("run", "<query> <sfDir> [explain]",
       "show a sample, optionally the formatted physical plan, and ROWS=<count>", 2, runQuery),
@@ -86,6 +87,8 @@ object Tool {
     timeRuns(a(0), intArg(a, 2, 3))(build(spark, sfDir))
   }
 
+  private val Phase = "graft.profile.phase"
+
   /** The "where do the seconds go" view the disabled UI would give. */
   private def profile(spark: SparkSession, a: Seq[String]): Unit = {
     val (name, build, sfDir) = (a(0), query(a(0)), a(1))
@@ -95,12 +98,14 @@ object Tool {
                      var deserMs: Long = 0L, var runMs: Long = 0L,
                      var gcMs: Long = 0L, var shufFetchMs: Long = 0L)
     val jobs = mutable.LinkedHashMap[Int, (Long, Long)]()
+    val jobPhase = mutable.Map[Int, String]().withDefaultValue("?")
     val stages = mutable.LinkedHashMap[Int, Stage]()
     val jobStages = mutable.LinkedHashMap[Int, Seq[Int]]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
         jobs(e.jobId) = (e.time, -1L)
         jobStages(e.jobId) = e.stageIds
+        Option(e.properties).flatMap(p => Option(p.getProperty(Phase))).foreach(jobPhase(e.jobId) = _)
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.synchronized {
         jobs.get(e.jobId).foreach(t => jobs(e.jobId) = (t._1, e.time))
@@ -124,20 +129,31 @@ object Tool {
     }
     Bench.warmUp(spark, sfDir)
     timeRuns(s"$name warm", iters - 1)(build(spark, sfDir))
-    spark.sparkContext.addSparkListener(listener)
-    try timeRuns(s"$name profiled", 1)(build(spark, sfDir))
-    finally {
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    // jobs carry the phase that submitted them as a local property, so
+    // the asynchronous listener attributes each to construction or action
+    val seconds = try {
+      sc.setLocalProperty(Phase, "construction")
+      val t0 = System.nanoTime()
+      val df = build(spark, sfDir)
+      val constructS = (System.nanoTime() - t0) / 1e9
+      sc.setLocalProperty(Phase, "action")
+      Seq("construction" -> constructS, "action" -> timeRuns(s"$name profiled action", 1)(df).head)
+    } finally {
+      sc.setLocalProperty(Phase, null)
       Thread.sleep(300) // let the listener bus drain the last task ends
-      spark.sparkContext.removeSparkListener(listener)
+      sc.removeSparkListener(listener)
     }
     jobs.synchronized {
+      seconds.foreach { case (p, s) => println(f"== $p: ${jobPhase.values.count(_ == p)} jobs, $s%.3f s") }
       println(s"== jobs (${jobs.size}) for the profiled run of $name")
       jobs.foreach { case (id, (s0, s1)) =>
         val detail = jobStages.getOrElse(id, Nil).sorted.flatMap(sid => stages.get(sid).map(st =>
           s"stage$sid[n=${st.n} task=${st.taskMs}ms max=${st.maxTaskMs}ms " +
             s"deser=${st.deserMs} run=${st.runMs} gc=${st.gcMs} fetch=${st.shufFetchMs} ${st.name}]"))
           .mkString(" ")
-        println(f"job $id%3d wall=${if (s1 > 0) s1 - s0 else -1}%5d ms  $detail")
+        println(f"job $id%3d ${jobPhase(id)}%-12s wall=${if (s1 > 0) s1 - s0 else -1}%5d ms  $detail")
       }
     }
   }
@@ -202,7 +218,7 @@ object Tool {
     "cdc_envelope_json" -> "one from_json per JSON column (not one parse per field); the parse-back projection stays in one codegen span",
     "events_hdr_quantiles" -> "sketch collapses to ≤64 rows/group in the partial agg; windows + quantile explode run over sketch-sized data",
     "text_boilerplate_remove" -> "chunk df as an unordered window count: one pass over the chunked corpus, one shuffle on the chunk key",
-    "cdc_pgoutput_envelope" -> "wire bytes → flatMap decode → ONE codegen'd projection renders before (old tuple) + after (TOAST keys omitted) + source; r17: the only pre-sort exchange is the census-gated segment fan-out (segmentsSpread — a no-op on real layouts), so decode+render run cluster-wide",
+    "cdc_pgoutput_envelope" -> "wire bytes → flatMap decode → ONE codegen'd projection renders before (old tuple) + after (TOAST keys omitted) + source; r17: the only pre-sort exchange is the census-gated segment fan-out (Tables.spread on the encoded frame — a no-op on real layouts), so decode+render run cluster-wide",
     // closing round 9: sketch aggregates + paragraph dedup
     "events_freq_topn" -> "Misra–Gries TypedImperativeAggregate: ObjectHashAggregate partials shuffle ONE capacity-sized sketch state per partition, never rows",
     "events_asap_smooth" -> "corpus read once into the hourly partial agg; r17: ALL candidate windows ride ONE WindowExec (same partition/order, different frames) and unfold via explode — the 7-branch union is gone; winner still broadcast",

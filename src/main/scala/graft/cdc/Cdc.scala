@@ -1565,7 +1565,7 @@ object Cdc {
     // layout (row groups ≥ cores), so the "zero shuffle before the
     // final sort" scale posture is intact where it matters.
     val ev = withMessagePrefix(
-      graft.Tables.spread(spark, dir, "events", walEvents(spark, dir), col("lsn")))
+      graft.Tables.spread(walEvents(spark, dir), col("lsn")))
       .select(
         lit(evTopic).as("topic"), col("lsn"), col("ts_ms"), col("op"), col("xid"),
         col("event_id"), col("user_id"), col("value"), col("props"),
@@ -1577,8 +1577,7 @@ object Cdc {
         nullL.as("user_id"), nullD.as("value"), nullS.as("props"),
         nullS.as("msg_prefix"),
         rowJson.as("row_json"), keyPayload.as("key_payload"))
-    val o = Tables.spread(spark, dir, "orders",
-      Tables.orders(spark, dir), col("o_orderkey"))
+    val o = Tables.spread(Tables.orders(spark, dir), col("o_orderkey"))
     val orders = snapNarrow(o, oTopic,
       lsn = col("o_orderkey"),
       tsMs = PgConverters.timestampToMillis(col("o_orderdate")),
@@ -1587,8 +1586,7 @@ object Cdc {
         lit(",\"total_cents\":"), floor(col("o_totalprice") * 100.0 + 0.5).cast(LongType),
         lit("}")),
       keyPayload = concat(lit("{\"o_orderkey\":"), col("o_orderkey"), lit("}")))
-    val li = Tables.spread(spark, dir, "lineitem",
-      Tables.lineitem(spark, dir),
+    val li = Tables.spread(Tables.lineitem(spark, dir),
       col("l_orderkey") * 10 + col("l_linenumber"))
     val lineitem = snapNarrow(li, s"$dbName.public.lineitem",
       lsn = col("l_orderkey") * 10 + col("l_linenumber"),

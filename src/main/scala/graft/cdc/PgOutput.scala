@@ -395,7 +395,51 @@ object PgOutput {
     */
   def encodeSegments(events: DataFrame, txnSize: Int = 10, segmentTxns: Int = 100,
                      binary: Boolean = false, toastEvery: Int = 0,
-                     markerTxns: Boolean = false): DataFrame = {
+                     markerTxns: Boolean = false): DataFrame =
+    segments(events, txnSize, segmentTxns) { (o, rows) =>
+      writeFrame(o, rows.head._1,
+        encode(RelationMsg(EventsRelId, "public", "events", 'f', EventsRelCols)))
+      // marker mode doubles the frame-lsn domain so the bracket
+      // markers land on odd lsns just outside their rows
+      def L(eid: Long): Long = if (markerTxns) eid * 2 else eid
+      rows.groupBy(_._1 / txnSize).toSeq.sortBy(_._1).foreach { case (xid, txn) =>
+        val commitLsn = L(txn.last._1)
+        val commitMicros = txn.last._2 / 1000L - PgEpochMicros
+        val isDecompTxn = markerTxns && xid % 7 == 3
+        writeFrame(o, L(txn.head._1), encode(BeginMsg(commitLsn, commitMicros, xid.toInt)))
+        if (isDecompTxn) {
+          val s = L(txn.head._1) - 1
+          writeFrame(o, s, encode(LogicalMsg(transactional = true, s,
+            graft.cdc.Cdc.DecompressionMarkerStartId, Array.emptyByteArray)))
+        }
+        txn.foreach { case (eid, ts, uid, et, v, props, _) =>
+          def tup = if (binary) rowTupleBinary(eid, ts, uid, et, v, props)
+                    else rowTuple(eid, ts, uid, et, v, props)
+          // unchanged-TOAST elision: props (the only TOASTable column)
+          // rides as 'u' in the new tuple of the selected updates; a
+          // null is never TOASTed ('n' lives inline in the heap tuple)
+          def newTup =
+            if (toastEvery > 0 && props != null && eid % toastEvery == 0)
+              tup.updated(5, UnchangedCol)
+            else tup
+          writeFrame(o, L(eid), encode(rowMsg(et, tup, newTup, L(eid), props)))
+        }
+        if (isDecompTxn) {
+          val e = L(txn.last._1) + 1
+          writeFrame(o, e, encode(LogicalMsg(transactional = true, e,
+            graft.cdc.Cdc.DecompressionMarkerEndId, Array.emptyByteArray)))
+        }
+        writeFrame(o, commitLsn, encode(CommitMsg(0, commitLsn, commitLsn + 1, commitMicros)))
+      }
+    }
+
+  private type EventRow = (Long, Long, Long, String, Double, String, Long)
+
+  /** The fixture segment scaffold: `events` grouped into segments of
+    * `txnSize * segmentTxns` rows by event_id; `frames` writes each
+    * segment's rows, sorted by event_id, into its blob. */
+  private def segments(events: DataFrame, txnSize: Int, segmentTxns: Int)(
+      frames: (DataOutputStream, Seq[EventRow]) => Unit): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
     val rowsPerSegment = txnSize.toLong * segmentTxns
@@ -403,60 +447,28 @@ object PgOutput {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"), col("props"))
       .withColumn("segment", expr(s"event_id div $rowsPerSegment"))
-      .as[(Long, Long, Long, String, Double, String, Long)]
+      .as[EventRow]
       .groupByKey(_._7)
       .mapGroups { (segment, it) =>
         // a segment is bounded at rowsPerSegment rows by construction —
         // safe to materialize and sort in one task
         val rows = it.toSeq.sortBy(_._1)
         val bos = new ByteArrayOutputStream(rows.length * 96)
-        val o = new DataOutputStream(bos)
-        val startLsn = rows.head._1
-        writeFrame(o, startLsn,
-          encode(RelationMsg(EventsRelId, "public", "events", 'f', EventsRelCols)))
-        // marker mode doubles the frame-lsn domain so the bracket
-        // markers land on odd lsns just outside their rows
-        def L(eid: Long): Long = if (markerTxns) eid * 2 else eid
-        rows.groupBy(_._1 / txnSize).toSeq.sortBy(_._1).foreach { case (xid, txn) =>
-          val commitLsn = L(txn.last._1)
-          val commitMicros = txn.last._2 / 1000L - PgEpochMicros
-          val isDecompTxn = markerTxns && xid % 7 == 3
-          writeFrame(o, L(txn.head._1), encode(BeginMsg(commitLsn, commitMicros, xid.toInt)))
-          if (isDecompTxn) {
-            val s = L(txn.head._1) - 1
-            writeFrame(o, s, encode(LogicalMsg(transactional = true, s,
-              graft.cdc.Cdc.DecompressionMarkerStartId, Array.emptyByteArray)))
-          }
-          txn.foreach { case (eid, ts, uid, et, v, props, _) =>
-            def tup = if (binary) rowTupleBinary(eid, ts, uid, et, v, props)
-                      else rowTuple(eid, ts, uid, et, v, props)
-            // unchanged-TOAST elision: props (the only TOASTable column)
-            // rides as 'u' in the new tuple of the selected updates; a
-            // null is never TOASTed ('n' lives inline in the heap tuple)
-            def newTup =
-              if (toastEvery > 0 && props != null && eid % toastEvery == 0)
-                tup.updated(5, UnchangedCol)
-              else tup
-            val msg = et match {
-              case "signup"   => InsertMsg(EventsRelId, tup)
-              case "purchase" => UpdateMsg(EventsRelId, Some('O'), Some(tup), newTup)
-              case "error"    => DeleteMsg(EventsRelId, 'O', tup)
-              case "click"    => LogicalMsg(transactional = true, L(eid), "graft.props",
-                (if (props == null) "" else props).getBytes(UTF_8))
-              case _          => InsertMsg(EventsRelId, tup) // view
-            }
-            writeFrame(o, L(eid), encode(msg))
-          }
-          if (isDecompTxn) {
-            val e = L(txn.last._1) + 1
-            writeFrame(o, e, encode(LogicalMsg(transactional = true, e,
-              graft.cdc.Cdc.DecompressionMarkerEndId, Array.emptyByteArray)))
-          }
-          writeFrame(o, commitLsn, encode(CommitMsg(0, commitLsn, commitLsn + 1, commitMicros)))
-        }
-        (segment, startLsn, bos.toByteArray)
+        frames(new DataOutputStream(bos), rows)
+        (segment, rows.head._1, bos.toByteArray)
       }
       .toDF("segment", "start_lsn", "data")
+  }
+
+  /** One fixture row's DML (or, for a click, logical-message) frame. */
+  private def rowMsg(eventType: String, tup: => Seq[TupleCol], newTup: => Seq[TupleCol],
+                     lsn: Long, props: String): PgMsg = eventType match {
+    case "signup"   => InsertMsg(EventsRelId, tup)
+    case "purchase" => UpdateMsg(EventsRelId, Some('O'), Some(tup), newTup)
+    case "error"    => DeleteMsg(EventsRelId, 'O', tup)
+    case "click"    => LogicalMsg(transactional = true, lsn, "graft.props",
+      (if (props == null) "" else props).getBytes(UTF_8))
+    case _          => InsertMsg(EventsRelId, tup) // view
   }
 
   /** The events relation AFTER the fixture's mid-stream DDL (`ALTER
@@ -479,55 +491,9 @@ object PgOutput {
     */
   def encodeSegmentsEvolving(events: DataFrame, addScoreFrom: Long,
                              txnSize: Int = 10,
-                             segmentTxns: Int = 100): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val rowsPerSegment = txnSize.toLong * segmentTxns
-    events
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"), col("props"))
-      .withColumn("segment", expr(s"event_id div $rowsPerSegment"))
-      .as[(Long, Long, Long, String, Double, String, Long)]
-      .groupByKey(_._7)
-      .mapGroups { (segment, it) =>
-        val rows = it.toSeq.sortBy(_._1)
-        val bos = new ByteArrayOutputStream(rows.length * 96)
-        val o = new DataOutputStream(bos)
-        val startLsn = rows.head._1
-        var evolved = startLsn >= addScoreFrom
-        def relMsg = RelationMsg(EventsRelId, "public", "events", 'f',
-          if (evolved) EventsRelColsEvolved else EventsRelCols)
-        writeFrame(o, startLsn, encode(relMsg))
-        rows.groupBy(_._1 / txnSize).toSeq.sortBy(_._1).foreach { case (xid, txn) =>
-          val commitLsn = txn.last._1
-          val commitMicros = txn.last._2 / 1000L - PgEpochMicros
-          writeFrame(o, txn.head._1, encode(BeginMsg(commitLsn, commitMicros, xid.toInt)))
-          txn.foreach { case (eid, ts, uid, et, v, props, _) =>
-            if (!evolved && eid >= addScoreFrom) {
-              // the DDL boundary: re-announce the relation mid-stream
-              evolved = true
-              writeFrame(o, eid, encode(relMsg))
-            }
-            def tup = {
-              val base = rowTuple(eid, ts, uid, et, v, props)
-              if (evolved) base :+ textCol((uid % 100).toString) else base
-            }
-            val msg = et match {
-              case "signup"   => InsertMsg(EventsRelId, tup)
-              case "purchase" => UpdateMsg(EventsRelId, Some('O'), Some(tup), tup)
-              case "error"    => DeleteMsg(EventsRelId, 'O', tup)
-              case "click"    => LogicalMsg(transactional = true, eid, "graft.props",
-                (if (props == null) "" else props).getBytes(UTF_8))
-              case _          => InsertMsg(EventsRelId, tup)
-            }
-            writeFrame(o, eid, encode(msg))
-          }
-          writeFrame(o, commitLsn, encode(CommitMsg(0, commitLsn, commitLsn + 1, commitMicros)))
-        }
-        (segment, startLsn, bos.toByteArray)
-      }
-      .toDF("segment", "start_lsn", "data")
-  }
+                             segmentTxns: Int = 100): DataFrame =
+    encodeSegmentsDdl(events, addScoreFrom, EventsRelColsEvolved, txnSize, segmentTxns)(
+      (tup, uid) => tup :+ textCol((uid % 100).toString))
 
   /** The events relation AFTER a mid-stream `ALTER COLUMN user_id TYPE
     * text` — same column at the same ordinal, NEW type oid (25). The
@@ -550,54 +516,41 @@ object PgOutput {
     */
   def encodeSegmentsRetyping(events: DataFrame, retypeFrom: Long,
                              txnSize: Int = 10,
-                             segmentTxns: Int = 100): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val rowsPerSegment = txnSize.toLong * segmentTxns
-    events
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"), col("props"))
-      .withColumn("segment", expr(s"event_id div $rowsPerSegment"))
-      .as[(Long, Long, Long, String, Double, String, Long)]
-      .groupByKey(_._7)
-      .mapGroups { (segment, it) =>
-        val rows = it.toSeq.sortBy(_._1)
-        val bos = new ByteArrayOutputStream(rows.length * 96)
-        val o = new DataOutputStream(bos)
-        val startLsn = rows.head._1
-        var retyped = startLsn >= retypeFrom
-        def relMsg = RelationMsg(EventsRelId, "public", "events", 'f',
-          if (retyped) EventsRelColsRetyped else EventsRelCols)
-        writeFrame(o, startLsn, encode(relMsg))
-        rows.groupBy(_._1 / txnSize).toSeq.sortBy(_._1).foreach { case (xid, txn) =>
-          val commitLsn = txn.last._1
-          val commitMicros = txn.last._2 / 1000L - PgEpochMicros
-          writeFrame(o, txn.head._1, encode(BeginMsg(commitLsn, commitMicros, xid.toInt)))
-          txn.foreach { case (eid, ts, uid, et, v, props, _) =>
-            if (!retyped && eid >= retypeFrom) {
-              retyped = true
-              writeFrame(o, eid, encode(relMsg))
-            }
-            def tup = {
-              val base = rowTuple(eid, ts, uid, et, v, props)
-              if (retyped) base.updated(2, textCol(s"u$uid")) else base
-            }
-            val msg = et match {
-              case "signup"   => InsertMsg(EventsRelId, tup)
-              case "purchase" => UpdateMsg(EventsRelId, Some('O'), Some(tup), tup)
-              case "error"    => DeleteMsg(EventsRelId, 'O', tup)
-              case "click"    => LogicalMsg(transactional = true, eid, "graft.props",
-                (if (props == null) "" else props).getBytes(UTF_8))
-              case _          => InsertMsg(EventsRelId, tup)
-            }
-            writeFrame(o, eid, encode(msg))
+                             segmentTxns: Int = 100): DataFrame =
+    encodeSegmentsDdl(events, retypeFrom, EventsRelColsRetyped, txnSize, segmentTxns)(
+      (tup, uid) => tup.updated(2, textCol(s"u$uid")))
+
+  /** The DDL fixtures' shared encoding: from row `ddlFrom` on, the
+    * relation is re-announced with `ddlCols` (a segment entirely past
+    * the boundary opens with it) and every tuple goes through `ddlTuple`
+    * (the text tuple and the row's user_id). Text tuples only. */
+  private def encodeSegmentsDdl(events: DataFrame, ddlFrom: Long, ddlCols: Seq[RelCol],
+                                txnSize: Int, segmentTxns: Int)(
+      ddlTuple: (Seq[TupleCol], Long) => Seq[TupleCol]): DataFrame =
+    segments(events, txnSize, segmentTxns) { (o, rows) =>
+      var changed = rows.head._1 >= ddlFrom
+      def relMsg = RelationMsg(EventsRelId, "public", "events", 'f',
+        if (changed) ddlCols else EventsRelCols)
+      writeFrame(o, rows.head._1, encode(relMsg))
+      rows.groupBy(_._1 / txnSize).toSeq.sortBy(_._1).foreach { case (xid, txn) =>
+        val commitLsn = txn.last._1
+        val commitMicros = txn.last._2 / 1000L - PgEpochMicros
+        writeFrame(o, txn.head._1, encode(BeginMsg(commitLsn, commitMicros, xid.toInt)))
+        txn.foreach { case (eid, ts, uid, et, v, props, _) =>
+          if (!changed && eid >= ddlFrom) {
+            // the DDL boundary: re-announce the relation mid-stream
+            changed = true
+            writeFrame(o, eid, encode(relMsg))
           }
-          writeFrame(o, commitLsn, encode(CommitMsg(0, commitLsn, commitLsn + 1, commitMicros)))
+          def tup = {
+            val base = rowTuple(eid, ts, uid, et, v, props)
+            if (changed) ddlTuple(base, uid) else base
+          }
+          writeFrame(o, eid, encode(rowMsg(et, tup, tup, eid, props)))
         }
-        (segment, startLsn, bos.toByteArray)
+        writeFrame(o, commitLsn, encode(CommitMsg(0, commitLsn, commitLsn + 1, commitMicros)))
       }
-      .toDF("segment", "start_lsn", "data")
-  }
+    }
 
   /** One SCHEMA-AGNOSTIC decoded WAL row: the tuple rides as parallel
     * (name, oid, raw text value) arrays in relation-declared order
@@ -819,28 +772,12 @@ object PgOutput {
     }
   }
 
-  /** Layout-aware fan-out for the fixture-encoded segment frame (guide
-    * §2.5): the per-segment decode flatMap (and everything above it) is
-    * CPU-bound per row, but the groupByKey exchange that produced the
-    * segments is BYTE-tiny at fixture scale, so AQE coalesces it to 2-3
-    * tasks and the whole decode+render pipeline runs nearly serial
-    * (profiled: cdc_pgoutput_envelope spent 2×2.3 s of task time on 3
-    * tasks). Keyed repartition on `segment` to the session parallelism,
-    * gated on the SOURCE events table's row-group census exactly like
-    * `Tables.spread` — on a real layout (row groups ≥ cores, segment
-    * bytes ≫ AQE's advisory size) this is a NO-OP by construction, and
-    * the production wire path ([[streamDecoded]]) takes its parallelism
-    * from the segment source's byte-balanced file packing, never from
-    * this helper. */
-  def segmentsSpread(spark: SparkSession, dir: String, segs: DataFrame): DataFrame =
-    Tables.spread(spark, dir, "events", segs, col("segment"))
-
   /** The full gate path: events → pgoutput bytes → decoded WAL, shaped
     * like the envelope the parquet-path `Cdc.shapeWal` produces on the
     * same logical events (the `cdc_pgoutput_decode` correctness entry). */
   def decodeGate(spark: SparkSession, dir: String, binary: Boolean = false): DataFrame = {
-    val wal = decodeSegments(segmentsSpread(spark, dir,
-      encodeSegments(Tables.events(spark, dir), binary = binary)))
+    val wal = decodeSegments(Tables.spread(
+      encodeSegments(Tables.events(spark, dir), binary = binary), col("segment")))
     wal.select(
       col("lsn"), col("xid"), col("op_wire"),
       Cdc.opExpr(col("event_type")).as("op"),
@@ -862,9 +799,9 @@ object PgOutput {
     */
   def toastGate(spark: SparkSession, dir: String, toastEvery: Int = 3,
                 binary: Boolean = false): DataFrame = {
-    val wal = decodeSegments(segmentsSpread(spark, dir,
+    val wal = decodeSegments(Tables.spread(
       encodeSegments(Tables.events(spark, dir),
-        binary = binary, toastEvery = toastEvery)))
+        binary = binary, toastEvery = toastEvery), col("segment")))
     val omitted = array_contains(col("unchanged_cols"), "props")
     val renderOpts = Map("ignoreNullFields" -> "false")
     val payload = when(omitted,
@@ -890,9 +827,9 @@ object PgOutput {
     * downstream replica needs to reconstruct state. */
   def beforeGate(spark: SparkSession, dir: String, toastEvery: Int = 3,
                  binary: Boolean = false): DataFrame = {
-    val wal = decodeSegments(segmentsSpread(spark, dir,
+    val wal = decodeSegments(Tables.spread(
       encodeSegments(Tables.events(spark, dir),
-        binary = binary, toastEvery = toastEvery)))
+        binary = binary, toastEvery = toastEvery), col("segment")))
     wal.filter(col("op_wire") === "U")
       .select(
         col("lsn"), col("old_kind"),
@@ -941,9 +878,9 @@ object PgOutput {
     * The only shuffle is the final gate sort. */
   def envelopeGate(spark: SparkSession, dir: String, toastEvery: Int = 3,
                    binary: Boolean = false): DataFrame = {
-    val wal = decodeSegments(segmentsSpread(spark, dir,
+    val wal = decodeSegments(Tables.spread(
       encodeSegments(Tables.events(spark, dir),
-        binary = binary, toastEvery = toastEvery)))
+        binary = binary, toastEvery = toastEvery), col("segment")))
       .filter(col("op_wire").isin("I", "U", "D"))
     // ONE from_json for the typed fields (a sparse schema parses the
     // envelope once; per-field get_json_object re-parsed it 4×) plus the

@@ -119,9 +119,9 @@ object CdcQueries {
       // it reads them — the streaming wire arm's suppression, checked
       // here against the oracle's bracket arithmetic
       graft.cdc.PgOutput.decodeSegments(
-          graft.cdc.PgOutput.segmentsSpread(s, dir,
+          Tables.spread(
             graft.cdc.PgOutput.encodeSegments(Tables.events(s, dir),
-              markerTxns = true)), markerSuppress = true)
+              markerTxns = true), col("segment")), markerSuppress = true)
         .select(col("lsn"), col("xid"), col("op_wire"))
         .orderBy(col("lsn"))
     },
@@ -161,8 +161,8 @@ object CdcQueries {
       // don't recompute what you already computed)
       val wide = graft.streaming.SchemaEvolution.resolveBatch(
         graft.cdc.PgOutput.decodeRowsDynamic(
-          graft.cdc.PgOutput.segmentsSpread(s, dir,
-            graft.cdc.PgOutput.encodeSegmentsEvolving(ev, boundary))).toDF()
+          Tables.spread(
+            graft.cdc.PgOutput.encodeSegmentsEvolving(ev, boundary), col("segment"))).toDF()
           .localCheckpoint(true))
       wide.select(col("lsn"), col("op_wire").as("op"),
           col("event_id"), col("user_id"), col("event_type"),
@@ -196,8 +196,8 @@ object CdcQueries {
       // two census collects — unpinned, the encode+decode flatMap would
       // replay six times (guide §1.2)
       val dyn = graft.cdc.PgOutput.decodeRowsDynamic(
-        graft.cdc.PgOutput.segmentsSpread(s, dir,
-          graft.cdc.PgOutput.encodeSegmentsEvolving(ev, boundary))).toDF()
+        Tables.spread(
+          graft.cdc.PgOutput.encodeSegmentsEvolving(ev, boundary), col("segment"))).toDF()
         .localCheckpoint(true)
       def arm(batch: org.apache.spark.sql.DataFrame) = {
         val wide = graft.streaming.SchemaEvolution.resolveBatch(batch)
@@ -245,8 +245,8 @@ object CdcQueries {
       // lineage replays of the wire encode+decode otherwise
       val wide = graft.streaming.SchemaEvolution.resolveBatch(
         graft.cdc.PgOutput.decodeRowsDynamic(
-          graft.cdc.PgOutput.segmentsSpread(s, dir,
-            graft.cdc.PgOutput.encodeSegmentsRetyping(ev, boundary))).toDF()
+          Tables.spread(
+            graft.cdc.PgOutput.encodeSegmentsRetyping(ev, boundary), col("segment"))).toDF()
           .localCheckpoint(true))
       wide.select(col("lsn"), col("op_wire").as("op"),
           col("event_id"), col("user_id"), col("event_type"),
@@ -276,8 +276,8 @@ object CdcQueries {
       // decoded rows by xid must reproduce the exact txn windows the
       // parquet path derives arithmetically
       val wal = graft.cdc.PgOutput.decodeSegments(
-        graft.cdc.PgOutput.segmentsSpread(s, dir,
-          graft.cdc.PgOutput.encodeSegments(Tables.events(s, dir))))
+        Tables.spread(
+          graft.cdc.PgOutput.encodeSegments(Tables.events(s, dir)), col("segment")))
       wal.groupBy(col("xid"))
         .agg(count(lit(1)).as("n_events"),
           min(col("lsn")).as("first_lsn"), max(col("lsn")).as("last_lsn"))
@@ -1201,7 +1201,7 @@ object CdcQueries {
       // the ~1 KB render + full parse-back run ABOVE it on all lanes —
       // below it they ran inside the single-row-group scan task. Same
       // rows, same builder (envelopeJsonCol), same parse.
-      Tables.sortedSpread(s, dir, "events", Cdc.walEvents(s, dir), col("lsn"))
+      Tables.sortedSpread(Cdc.walEvents(s, dir), col("lsn"))
         .select(col("lsn"),
           from_json(Cdc.envelopeJsonCol(), envSchema).as("env"),
           from_json(Cdc.envelopeKeyJsonCol, keySchema).as("k"))

@@ -12,9 +12,9 @@ import QueryHelpers._
 object ConvQueries {
 
   /** A table the keyed gates read, and the key it is sorted by. */
-  private final case class Keyed(table: String, read: (SparkSession, String) => DataFrame, key: String*)
-  private val events = Keyed("events", Tables.events, "event_id")
-  private val lineitem = Keyed("lineitem", Tables.lineitem, "l_orderkey", "l_linenumber")
+  private final case class Keyed(read: (SparkSession, String) => DataFrame, key: String*)
+  private val events = Keyed(Tables.events, "event_id")
+  private val lineitem = Keyed(Tables.lineitem, "l_orderkey", "l_linenumber")
 
   /** A keyed single-column gate: the rows of `from`, sorted by its key
     * (`Tables.sortedSpread`), projected to the key and `conv` as `column`. */
@@ -167,7 +167,7 @@ object ConvQueries {
   val all: Seq[Query] = keyedConvs.map { g =>
     Query(g.name, (s, dir) => {
       val key = g.from.key.map(col)
-      Tables.sortedSpread(s, dir, g.from.table, g.from.read(s, dir), key: _*)
+      Tables.sortedSpread(g.from.read(s, dir), key: _*)
         .select(key :+ g.conv.as(g.column): _*)
     }, g.oracle)
   } ++ Seq(
@@ -193,7 +193,7 @@ object ConvQueries {
       // (engine-independent: no float-to-string), plus the open `path`
       // form [(x,y),...] completing the geometry family
       val loC = col("user_id") * 100 + 50
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
+      Tables.sortedSpread(Tables.events(s, dir), col("event_id"))
         .select(col("event_id"),
           PgConverters.rangeToString(decimalCentsText(loC), decimalCentsText(loC + 125)).as("numrange_text"),
           PgConverters.pathToText(closed = false,
@@ -210,7 +210,7 @@ object ConvQueries {
 
     Query("conv_inet_string", (s, dir) => {
       // inet/cidr v4 + v6 text passthrough (README type table)
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
+      Tables.sortedSpread(Tables.events(s, dir), col("event_id"))
         .select(col("event_id"),
           PgConverters.textPassthrough(concat(lit("10."), pmod(col("user_id"), lit(256)),
             lit("."), pmod(col("event_id"), lit(256)), lit(".1/24"))).as("cidr4"),
@@ -223,7 +223,7 @@ object ConvQueries {
         |FROM events ORDER BY event_id""".stripMargin),
 
     Query("conv_macaddr_string", (s, dir) => {
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
+      Tables.sortedSpread(Tables.events(s, dir), col("event_id"))
         .select(col("event_id"),
           PgConverters.macaddrToText(col("event_id") * 65536 + col("user_id")).as("mac"),
           PgConverters.macaddr8ToText(col("event_id") * 4294967296L + col("user_id")).as("mac8"))
@@ -245,7 +245,7 @@ object ConvQueries {
       val hsJson = concat(lit("{\"a\":\""), col("user_id"),
         lit("\",\"b\":\""), pmod(col("event_id"), lit(10)), lit("\"}"))
       val m = PgConverters.hstoreToMap(hsJson)
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
+      Tables.sortedSpread(Tables.events(s, dir), col("event_id"))
         .select(col("event_id"),
           array_join(map_keys(m), ",").as("hs_keys"),
           array_join(map_values(m), ",").as("hs_vals"))
@@ -256,7 +256,7 @@ object ConvQueries {
 
     Query("conv_scalar_widths", (s, dir) => {
       // int2 / float4 / boolean width mappings
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
+      Tables.sortedSpread(Tables.events(s, dir), col("event_id"))
         .select(col("event_id"),
           pmod(col("user_id"), lit(32768)).cast("smallint").as("i16"),
           col("value").cast("float").cast("double").as("f4d"),
@@ -285,7 +285,7 @@ object ConvQueries {
       // box, line, lseg, circle, polygon text forms (integer coords keep
       // numeric rendering engine-independent)
       val u = col("user_id"); val m = pmod(col("event_id"), lit(100))
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
+      Tables.sortedSpread(Tables.events(s, dir), col("event_id"))
         .select(col("event_id"),
           PgConverters.boxToText(u, m, u + 10, m + 10).as("box_text"),
           PgConverters.lineToText(u, pmod(col("event_id"), lit(7)) + 1, lit(3)).as("line_text"),
@@ -322,7 +322,7 @@ object ConvQueries {
       val lineWkb = unhex(concat((lit("000000000200000005") +: pts): _*))
       val geom = PgConverters.postgisToStruct(pointWkb, lit(4326))
       val geog = PgConverters.postgisToStruct(lineWkb, lit(3857))
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
+      Tables.sortedSpread(Tables.events(s, dir), col("event_id"))
         .select(col("event_id"),
           to_json(geom).as("geom_point"),
           to_json(geog).as("geog_line"),
@@ -350,7 +350,7 @@ object ConvQueries {
         |FROM w ORDER BY event_id""".stripMargin),
 
     Query("conv_ltree_xml_char", (s, dir) => {
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
+      Tables.sortedSpread(Tables.events(s, dir), col("event_id"))
         .select(col("event_id"),
           PgConverters.textPassthrough(concat(lit("root.u"), col("user_id"),
             lit(".e"), pmod(col("event_id"), lit(10)))).as("ltree_path"),
@@ -369,7 +369,7 @@ object ConvQueries {
     Query("conv_numeric_edges", (s, dir) => {
       // numeric magnitudes: tiny / huge / repeating-fraction doubles;
       // single IEEE ops (correctly rounded) keep engines bit-identical
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
+      Tables.sortedSpread(Tables.events(s, dir), col("event_id"))
         .select(col("event_id"),
           (col("event_id") / 1000.0).as("small_val"),
           (col("event_id") * 1000000000000.0).as("big_val"),
@@ -399,7 +399,7 @@ object ConvQueries {
       // boolean[], uuid[], text[], interval[], composite[] element lifts
       val u = col("user_id"); val e = col("event_id")
       val uuidOf = (c: Column) => PgConverters.uuidFromHex32(md5(c.cast("string")))
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
+      Tables.sortedSpread(Tables.events(s, dir), col("event_id"))
         .select(e.as("event_id"),
           array_join(transform(array(pmod(e, lit(2)) === 0, pmod(u, lit(3)) === 0),
             _.cast("string")), ",").as("bool_arr"),
@@ -436,7 +436,7 @@ object ConvQueries {
       val u = col("user_id"); val e = col("event_id")
       val m = pmod(e, lit(100))
       // sort first, project after — see conv_array_scalar_sweep
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
+      Tables.sortedSpread(Tables.events(s, dir), col("event_id"))
         .select(e.as("event_id"),
           array_join(array(
             PgConverters.pointToText(u, m),
@@ -483,7 +483,7 @@ object ConvQueries {
       // sort FIRST, project after: the range exchange ships the narrow
       // source rows, not the ~17 wide rendered strings (the projection
       // is order-preserving, so output order is unchanged)
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
+      Tables.sortedSpread(Tables.events(s, dir), col("event_id"))
         .select(e.as("event_id"),
           array_join(array(concat(lit("t_"), u), concat(lit("idx_"), pmod(e, lit(10)))), ",").as("name_arr"),
           array_join(array(lower(hex(col("event_type").cast("binary"))),
@@ -555,7 +555,7 @@ object ConvQueries {
       def day(shift: Int) = date_format(
         timestamp_micros(expr(s"ts div 1000 + ${shift.toLong * 86400000000L}")), "yyyy-MM-dd")
       // sort first, project after — see conv_array_scalar_sweep
-      Tables.sortedSpread(s, dir, "events", Tables.events(s, dir), col("event_id"))
+      Tables.sortedSpread(Tables.events(s, dir), col("event_id"))
         .select(e.as("event_id"),
           array_join(array(PgConverters.timeToText(t0), PgConverters.timeToText(t1)), ",").as("time_arr"),
           array_join(array(PgConverters.timetzToText(t0), PgConverters.timetzToText(t1)), ",").as("timetz_arr"),

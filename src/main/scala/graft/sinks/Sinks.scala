@@ -330,14 +330,6 @@ object NullSink extends Sink {
   }
 }
 
-/** Parquet directory sink — append-mode, partitioned by topic like the
-  * reference partitions by Kafka topic (`spi/stream/stream.go:61`). */
-final case class ParquetSink(outDir: String) extends Sink {
-  def name = "parquet"
-  def emit(batch: DataFrame, batchId: Long): Unit =
-    batch.write.mode("append").parquet(outDir)
-}
-
 /** HTTP sink option assembly — S14
   * (`internal/eventing/sink/http/http.go:50-100`): authentication
   * none/basic/header, TLS skip-verify/client-auth. The header map is the

@@ -492,7 +492,11 @@ final class PgReplicationClient(host: String, port: Int, user: String,
     * [[confirm]] (or automatically when `ackOnSurface`). The raw form
     * feeds [[PgWireTailer]]'s segment writer; [[next]] decodes in
     * place. */
-  def nextRaw(): Option[(Long, Array[Byte])] = {
+  def nextRaw(): Option[(Long, Array[Byte])] = nextRaw(() => ())
+
+  /** [[nextRaw]] that runs `onIdle` on each idle tick, before the tick's
+    * status update, so a cursor `onIdle` confirms goes out with it. */
+  private[graft] def nextRaw(onIdle: () => Unit): Option[(Long, Array[Byte])] = {
     while (true) {
       // Only the BETWEEN-message wait may time out benignly (an idle
       // stream): volunteer the cursor and keep waiting — the
@@ -503,6 +507,7 @@ final class PgReplicationClient(host: String, port: Int, user: String,
         try in.read()
         catch {
           case _: java.net.SocketTimeoutException =>
+            onIdle()
             writeLock.synchronized { sendStatus(); confirmsSinceAck = 0 }
             -2
         }
@@ -604,7 +609,8 @@ final class PgReplicationClient(host: String, port: Int, user: String,
 object PgWireTailer {
 
   /** Drain `client` (already in COPY-BOTH mode) into `segmentsPath`,
-    * rotating a parquet file every `framesPerSegment` frames. Stops at
+    * rotating a parquet file every `framesPerSegment` frames, and on an
+    * idle status tick when the open segment ends at a Commit. Stops at
     * CopyDone, flushing the partial tail segment. Each rotation's
     * parquet commit is followed by `client.confirm(segment end LSN)` —
     * the ack cursor never runs ahead of durable data. Returns the final
@@ -634,45 +640,54 @@ object PgWireTailer {
     // so the decoder reads them as context and emits no row for them.
     var openBegin: Option[(Long, Array[Byte])] = None
     var openStart: Option[(Long, Array[Byte])] = None
-    while (open) {
-      val bos = new ByteArrayOutputStream()
-      val o = new DataOutputStream(bos)
-      var n = 0
-      var startLsn = -1L
-      var endLsn = client.processedLsn
+    val bos = new ByteArrayOutputStream()
+    val o = new DataOutputStream(bos)
+    var n = 0
+    var startLsn = -1L
+    var endLsn = 0L
+    var atCommit = false
+    def begin(): Unit = {
+      bos.reset(); n = 0; startLsn = -1L; endLsn = client.processedLsn
       if (rotations > 0) (relCache.values ++ openBegin ++ openStart).foreach {
         case (lsn, msg) => PgOutput.writeFrame(o, lsn, msg)
       }
-      while (n < framesPerSegment && open) client.nextRaw() match {
-        case Some((lsn, msg)) =>
-          if (startLsn < 0) startLsn = lsn
-          endLsn = math.max(endLsn, lsn + msg.length)
-          if (msg.nonEmpty) msg(0).toChar match {
-            case 'R' => relCache(ByteBuffer.wrap(msg, 1, 4).getInt) = (lsn, msg)
-            case 'B' => openBegin = Some((lsn, msg)); openStart = None
-            case 'C' => openBegin = None; openStart = None
-            case 'M' => PgOutput.decode(msg) match {
-              case PgOutput.LogicalMsg(true, _, Cdc.DecompressionMarkerStartId, _) =>
-                openStart = Some((lsn, msg))
-              case PgOutput.LogicalMsg(true, _, Cdc.DecompressionMarkerEndId, _) =>
-                openStart = None
-              case _ =>
-            }
+    }
+    def commit(): Unit = if (n > 0) {
+      import scala.jdk.CollectionConverters._
+      val row = org.apache.spark.sql.Row(base + rotations, startLsn, bos.toByteArray)
+      spark.createDataFrame(Seq(row).asJava, PgOutput.frameSchema)
+        .write.mode("append").parquet(segmentsPath)
+      // the parquet commit above is the durability line: only now may
+      // the slot's confirmed_flush_lsn advance past these frames
+      client.confirm(endLsn)
+      rotations += 1
+      begin()
+    }
+    begin()
+    // an idle tick commits a segment that ends at a transaction's
+    // Commit, so a quiet stream still delivers (and acks) its last
+    // transaction; a segment open mid-transaction waits for more frames
+    while (open) client.nextRaw(() => if (atCommit) commit()) match {
+      case Some((lsn, msg)) =>
+        if (startLsn < 0) startLsn = lsn
+        endLsn = math.max(endLsn, lsn + msg.length)
+        if (msg.nonEmpty) msg(0).toChar match {
+          case 'R' => relCache(ByteBuffer.wrap(msg, 1, 4).getInt) = (lsn, msg)
+          case 'B' => openBegin = Some((lsn, msg)); openStart = None
+          case 'C' => openBegin = None; openStart = None
+          case 'M' => PgOutput.decode(msg) match {
+            case PgOutput.LogicalMsg(true, _, Cdc.DecompressionMarkerStartId, _) =>
+              openStart = Some((lsn, msg))
+            case PgOutput.LogicalMsg(true, _, Cdc.DecompressionMarkerEndId, _) =>
+              openStart = None
             case _ =>
           }
-          PgOutput.writeFrame(o, lsn, msg); n += 1
-        case None => open = false
-      }
-      if (n > 0) {
-        import scala.jdk.CollectionConverters._
-        val row = org.apache.spark.sql.Row(base + rotations, startLsn, bos.toByteArray)
-        spark.createDataFrame(Seq(row).asJava, PgOutput.frameSchema)
-          .write.mode("append").parquet(segmentsPath)
-        // the parquet commit above is the durability line: only now may
-        // the slot's confirmed_flush_lsn advance past these frames
-        client.confirm(endLsn)
-        rotations += 1
-      }
+          case _ =>
+        }
+        PgOutput.writeFrame(o, lsn, msg); n += 1
+        atCommit = msg.nonEmpty && msg(0) == 'C'
+        if (n >= framesPerSegment) commit()
+      case None => open = false; commit()
     }
     client.processedLsn
   }

@@ -13,6 +13,9 @@ import scala.collection.concurrent.TrieMap
   * to the envelope stream; this listener folds each batch's observed
   * row into monotone counters — the Spark twin of the reference's
   * stats engine reporting (`stats/reporter.go:30-36`).
+  * `envelopeStream`'s `graft_unresolved` rows (dropped by chunk
+  * resolution) fold into `unresolved_rows_total`, scraped as
+  * `graft_unresolved_rows_total`.
   */
 class StatsListener extends StreamingQueryListener {
   val counters = new TrieMap[String, Long]()
@@ -53,6 +56,8 @@ class StatsListener extends StreamingQueryListener {
     }
     if (om.containsKey("graft_emitted"))
       add("emitted.count", long(om.get("graft_emitted"), "n_emitted"))
+    if (om.containsKey("graft_unresolved"))
+      add("unresolved_rows_total", long(om.get("graft_unresolved"), "n_unresolved"))
     e.progress.sources.foreach { s =>
       val m = s.metrics
       if (m.containsKey("pendingFiles")) {

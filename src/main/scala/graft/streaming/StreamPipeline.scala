@@ -36,9 +36,8 @@ object StreamPipeline {
     */
   def walStream(spark: SparkSession, dir: String): DataFrame = {
     Tables.eventsConf(spark)
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val stream = spark.readStream
-      .schema(schema)
+      .schema(Tables.t(spark, dir, "events").schema)
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", "events.parquet") // source dir, events file only
       .parquet(dir)
@@ -81,8 +80,9 @@ object StreamPipeline {
     * resolves `chunk_day` against that snapshot with a literal map
     * lookup: no join, so no catalog job runs per batch. Inner-join
     * semantics hold: a row whose `chunk_day` is not in the snapshot is
-    * dropped. A chunk created after the stream starts resolves after a
-    * restart.
+    * dropped, and counted in the `graft_unresolved` observed metric
+    * ([[StatsListener]]'s `unresolved_rows_total`). A chunk created
+    * after the stream starts resolves after a restart.
     *
     * `pgoutputPath`: when set, the WAL comes from binary pgoutput
     * segment blobs instead of the parquet stand-in — the config surface
@@ -110,9 +110,13 @@ object StreamPipeline {
         .select(col("lsn"), col("msg_prefix"))
       walStream(spark, dir).join(broadcast(prefixes), Seq("lsn"), "left")
     }(walStreamPgOutput(spark, _, typeResolver, markerSuppress))
-    val chunk = chunkLookup(spark, dir)(col("chunk_day"))
+    // one lookup per row, in a codegen'd projection below the observe
+    val chunk = col("__chunk")
     wal
-      .filter(chunk.isNotNull && col("op").isin(enabledOps: _*))
+      .filter(col("op").isin(enabledOps: _*))
+      .withColumn("__chunk", chunkLookup(spark, dir)(col("chunk_day")))
+      .observe("graft_unresolved", count_if(chunk.isNull).as("n_unresolved"))
+      .filter(chunk.isNotNull)
       .select(
         col("lsn"), col("xid"), col("op"), col("ts_ms"),
         chunk("ht_schema").as("schema_name"), chunk("ht_table").as("table_name"),
@@ -219,10 +223,6 @@ object StreamPipeline {
       .select(col("user_id"), col("n_events"),
         col("sess_start_ms"), col("sess_end_ms"))
 
-  /** Run the pipeline into a pluggable sink with checkpointed recovery
-    * (T1). `processAllAvailable` + `stop` gives the synchronous batch
-    * drain used by tests; production callers use `awaitTermination`.
-    */
   /** A1 — the reference's Prometheus counters
     * (`internal/stats/stats.go:35-100`) as observed metrics: per-batch
     * totals and per-op counts, surfaced in StreamingQueryProgress and
@@ -243,6 +243,10 @@ object StreamPipeline {
   def withEmitted(df: DataFrame): DataFrame =
     df.observe("graft_emitted", count(lit(1)).as("n_emitted"))
 
+  /** Run the pipeline into a pluggable sink with checkpointed recovery
+    * (T1). `processAllAvailable` + `stop` gives the synchronous batch
+    * drain used by tests; production callers use `awaitTermination`.
+    */
   def run(spark: SparkSession, dir: String, checkpointDir: String,
           sink: Sink, queryName: String = "graft-cdc"): StreamingQuery =
     withStats(envelopeStream(spark, dir))

@@ -6,6 +6,7 @@ import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.cdc.PgOutput
 import graft.sources.{PgReplicationClient, PgWire, Scram}
 
@@ -734,6 +735,48 @@ class PgWireSpec extends AnyFunSuite {
       assert(done.await(5, TimeUnit.SECONDS))
       assert(idleAcks >= 3, s"expected timer-driven acks during ~900ms idle, got $idleAcks")
     } finally { c.close(); server.close() }
+  }
+
+  test("tailer: an idle stream spools its last commit and confirms its LSN within one status interval") {
+    // one committed transaction, then the sender holds the stream: the
+    // segment must not wait for framesPerSegment frames or CopyDone, or
+    // the slot's confirmed LSN stays at 0 on a quiet database
+    val spark = SparkSpec.session
+    val gate = new CountDownLatch(1)
+    val frames = Fake.defaultFrames :+ (0x2700L -> PgOutput.BeginMsg(0x2801L, 78000000L, 902))
+    val srv = new FakeWalsender(script = _ => frames.map { case (l, m) => (l, PgOutput.encode(m)) },
+      sendKeepalive = false, gateAtFrame = Some((4, gate)))
+    val commitEnd = 0x2600L + PgOutput.encode(Fake.defaultFrames.last._2).length
+    val dir = java.nio.file.Files.createTempDirectory("graft-wire-idle").toString
+    val c = new PgReplicationClient("127.0.0.1", srv.port, "rep", "events_db", statusIntervalMs = 300)
+    @volatile var tailed: Either[Throwable, Long] = null
+    val tailer = new Thread(() => tailed =
+      try Right(graft.sources.PgWireTailer.tail(spark, c, dir, framesPerSegment = 1024))
+      catch { case e: Throwable => Left(e) })
+    try {
+      c.handshake()
+      c.startReplication("graft_slot", "graft_pub", 0L)
+      tailer.setDaemon(true); tailer.start()
+      def segments(): Long = scala.util.Try(
+        spark.read.schema(PgOutput.frameSchema).parquet(dir).count()).getOrElse(0L)
+      val deadline = System.nanoTime + 30e9.toLong
+      while ((segments() == 0L || !srv.acks.asScala.exists(_.flushedLsn == commitEnd)) &&
+             System.nanoTime < deadline) Thread.sleep(50)
+      assert(segments() === 1L, "the committed transaction is spooled while the stream is held")
+      val acks = srv.acks.asScala.map(_.flushedLsn)
+      assert(acks.contains(commitEnd), s"acks: ${acks.mkString(", ")}")
+      // the first idle tick after the Commit delivers it: at most one
+      // status update (a tick before the frames arrived) reports less
+      assert(acks.count(_ < commitEnd) <= 1, s"acks: ${acks.mkString(", ")}")
+      val ins = PgOutput.decodeSegments(spark.read.schema(PgOutput.frameSchema).parquet(dir))
+        .collect().filter(_.op_wire == "I")
+      assert(ins.flatMap(_.event_id).toSeq === Seq(4001L))
+    } finally {
+      gate.countDown()
+      tailer.join(30000)
+      c.close()
+    }
+    assert(tailed != null && tailed.isRight, s"tail ended with $tailed")
   }
 
   test("lsnText/parseLsn round-trip the X/Y hex form") {

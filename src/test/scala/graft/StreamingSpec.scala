@@ -81,6 +81,46 @@ class StreamingSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS unresolved_chunks")
   }
 
+  test("wire stream: rows dropped by chunk resolution are counted on /metrics") {
+    // segments stamped 400 days past the fixture's days: every row of
+    // them misses the chunk catalog and is dropped, and the
+    // graft_unresolved observed metric counts exactly those rows
+    import org.apache.spark.sql.functions.{col, when}
+    val dir = Files.createTempDirectory("graft-unresolved-count").toString
+    val moved = col("event_id") % 7 === 0
+    graft.cdc.PgOutput.encodeSegments(Tables.events(spark, sf001)
+        .withColumn("ts", when(moved, col("ts") + 400L * graft.cdc.Cdc.NanosPerDay).otherwise(col("ts"))))
+      .write.parquet(s"$dir/segments")
+    val dropped = graft.cdc.PgOutput.decodeSegments(
+        spark.read.schema(graft.cdc.PgOutput.frameSchema).parquet(s"$dir/segments"))
+      .filter(col("op_wire").isin("I", "U", "D") && moved).count()
+    assert(dropped > 0L)
+    val listener = new graft.streaming.StatsListener
+    spark.streams.addListener(listener)
+    try {
+      val q = StreamPipeline.envelopeStream(spark, sf001, pgoutputPath = Some(s"$dir/segments"))
+        .writeStream.format("memory").queryName("unresolved_counted")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(240000), "stream did not finish within the timeout")
+      val delivered = spark.table("unresolved_counted").count()
+      val observed = q.recentProgress.flatMap(p => Option(p.observedMetrics.get("graft_unresolved")))
+        .map(_.getAs[Long]("n_unresolved")).sum
+      assert(observed === dropped)
+      val deadline = System.nanoTime + 60e9.toLong // listener delivery is async
+      while (listener.counters.getOrElse("unresolved_rows_total", 0L) < dropped &&
+             System.nanoTime < deadline) Thread.sleep(50)
+      assert(listener.counters("unresolved_rows_total") === dropped)
+      val scrape = graft.streaming.StatsEndpoint.render(listener.counters, runtimeStats = false)
+      assert(scrape.linesIterator.contains(s"graft_unresolved_rows_total $dropped"), scrape)
+      assert(delivered + dropped === graft.cdc.PgOutput.decodeSegments(
+          spark.read.schema(graft.cdc.PgOutput.frameSchema).parquet(s"$dir/segments"))
+        .filter(col("op_wire").isin("I", "U", "D")).count())
+    } finally {
+      spark.streams.removeListener(listener)
+      spark.sql("DROP TABLE IF EXISTS unresolved_counted")
+    }
+  }
+
   test("mid-stream ADD COLUMN widens the envelope across micro-batches without restart (T9)") {
     // the in-flight half of the reference's ApplySchemaUpdate
     // (systemcatalog.go:347-373): a fresh Relation message with a new

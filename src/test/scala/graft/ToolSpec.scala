@@ -31,6 +31,20 @@ class ToolSpec extends SparkSpec {
     assert(out.linesIterator.contains(s"ROWS=$expected"), out)
   }
 
+  test("Tool profile: construction and action jobs and seconds are reported apart") {
+    // the warm iteration opens the tables; the profiled build then runs
+    // no job, and every job of the run belongs to the noop write
+    val (code, out, err) = captured("profile", "q3_shipping_priority", sf001, "2")(spark)
+    assert(code === 0, err)
+    val construction = """== construction: (\d+) jobs, ([0-9.]+) s""".r
+    val action = """== action: (\d+) jobs, ([0-9.]+) s""".r
+    val lines = out.linesIterator.toSeq
+    assert(lines.collectFirst { case construction(n, _) => n.toInt } === Some(0), out)
+    val actionJobs = lines.collectFirst { case action(n, _) => n.toInt }
+    assert(actionJobs.exists(_ > 0), out)
+    assert(lines.count(_.matches("""job +\d+ action .*""")) === actionJobs.get, out)
+  }
+
   test("Bench summary: exactly one \"metric\":\"total\" line, and it is the last") {
     val lines = Bench.summaryLines("1.500", 3, 2, """{"q1_pricing_summary":0.500}""",
       """{"q9":"boom"}""", "bench_detail.json", "/data/sf0.1")
