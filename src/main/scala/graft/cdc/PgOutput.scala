@@ -138,16 +138,19 @@ object PgOutput {
       val a = new Array[Byte](n); b.get(a); a
     }
     def tuple(): Seq[TupleCol] = {
-      val n = b.getShort.toInt
-      (0 until n).map { _ =>
-        b.get().toChar match {
+      val cols = new Array[TupleCol](b.getShort.toInt)
+      var i = 0
+      while (i < cols.length) {
+        cols(i) = b.get().toChar match {
           case 'n' => NullCol
           case 'u' => UnchangedCol
           case 't' => TextCol(bytes(b.getInt))
           case 'b' => BinaryCol(bytes(b.getInt))
           case c   => throw new IllegalArgumentException(s"pgoutput: bad tuple col kind '$c'")
         }
+        i += 1
       }
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(cols)
     }
     b.get().toChar match {
       case 'B' => BeginMsg(b.getLong, b.getLong, b.getInt)
@@ -322,14 +325,59 @@ object PgOutput {
       f"${ldt.getHour}%02d:${ldt.getMinute}%02d:${ldt.getSecond}%02d.$frac%09d"
   }
 
+  /** PostgreSQL's text output of `timestamp` and `timestamptz` (ISO
+    * DateStyle) → Long epoch nanos: `YYYY-MM-DD HH:MM:SS`, then 1–9
+    * fractional digits when the fraction is not zero, then for
+    * `timestamptz` a UTC offset `+HH`, `+HH:MM` or `+HH:MM:SS`, which is
+    * applied. `infinity` and BC dates have no epoch-nanos value and fail. */
   def tsFromText(s: String): Long = {
-    val Array(d, t) = s.split(" ")
-    val Array(hms, frac) = t.split("\\.")
-    val Array(y, mo, dd) = d.split("-").map(_.toInt)
-    val Array(h, mi, se) = hms.split(":").map(_.toInt)
-    val sec = java.time.LocalDateTime.of(y, mo, dd, h, mi, se)
-      .toEpochSecond(java.time.ZoneOffset.UTC)
-    sec * NanosPerSec + frac.padTo(9, '0').toLong
+    def bad(why: String): Nothing =
+      throw new IllegalArgumentException(s"pgoutput: cannot decode timestamp '$s': $why")
+    if (s.endsWith("infinity")) bad("infinite timestamps have no epoch value")
+    if (s.endsWith(" BC")) bad("BC dates are not supported")
+    var i = 0
+    def num(minDigits: Int, maxDigits: Int): Int = {
+      val from = i
+      var v = 0
+      while (i < s.length && i - from < maxDigits && s.charAt(i) >= '0' && s.charAt(i) <= '9') {
+        v = v * 10 + (s.charAt(i) - '0'); i += 1
+      }
+      if (i - from < minDigits) bad(s"expected a number at offset $from")
+      v
+    }
+    def sep(c: Char): Unit = {
+      if (i >= s.length || s.charAt(i) != c) bad(s"expected '$c' at offset $i")
+      i += 1
+    }
+    val year = num(4, 6); sep('-')
+    val month = num(2, 2); sep('-')
+    val day = num(2, 2); sep(' ')
+    val hour = num(2, 2); sep(':')
+    val minute = num(2, 2); sep(':')
+    val second = num(2, 2)
+    var nanos = 0L
+    if (i < s.length && s.charAt(i) == '.') {
+      i += 1
+      val from = i
+      nanos = num(1, 9).toLong
+      var scale = 9 - (i - from)
+      while (scale > 0) { nanos *= 10; scale -= 1 }
+    }
+    var offsetSec = 0
+    if (i < s.length && (s.charAt(i) == '+' || s.charAt(i) == '-')) {
+      val sign = if (s.charAt(i) == '-') -1 else 1
+      i += 1
+      var off = num(2, 2) * 3600
+      if (i < s.length && s.charAt(i) == ':') { i += 1; off += num(2, 2) * 60 }
+      if (i < s.length && s.charAt(i) == ':') { i += 1; off += num(2, 2) }
+      offsetSec = sign * off
+    }
+    if (i != s.length) bad(s"unexpected text at offset $i")
+    if (hour > 23 || minute > 59 || second > 59) bad("time of day out of range")
+    val days =
+      try java.time.LocalDate.of(year, month, day).toEpochDay
+      catch { case e: java.time.DateTimeException => bad(e.getMessage) }
+    (days * 86400L + hour * 3600L + minute * 60L + second - offsetSec) * NanosPerSec + nanos
   }
 
   private def textCol(s: String): TupleCol = if (s == null) NullCol else TextCol(s.getBytes(UTF_8))
@@ -641,11 +689,49 @@ object PgOutput {
       // the 2.12+ marker gate keys on it for free; op='M' rows only)
       msg_prefix: Option[String] = None)
 
+  /** [[graft.types.TypeRegistry.Plan]] of one Relation message for
+    * [[decodeSegments]]. `decode` parses every carried column of a
+    * tuple by ordinal and returns the [[DecodedWal]] columns event_id,
+    * ts, user_id, event_type, value and props (null when the relation
+    * lacks one, or the tuple carries 'n' or 'u'), then the names of the
+    * columns carried as 'u' (unchanged TOAST; Nil without one). */
+  private final class WalPlan(rel: RelationMsg, resolver: graft.types.TypeRegistry.Resolver) {
+    val cols = new graft.types.TypeRegistry.Plan(rel.cols.map(c => (c.name, c.typeOid)), resolver)
+    val namespace: Option[String] = Some(rel.namespace)
+    val relName: Option[String] = Some(rel.relName)
+    // column ordinal → DecodedWal slot, or -1
+    private val slot = cols.names.map(WalPlan.Fields.indexOf(_))
+
+    def decode(t: Seq[TupleCol]): Array[Any] = {
+      cols.checkArity(t)
+      val out = new Array[Any](WalPlan.Fields.length + 1)
+      var unchanged: List[String] = Nil
+      val it = t.iterator
+      var i = 0
+      while (it.hasNext) {
+        val c = it.next()
+        if (c eq UnchangedCol) unchanged = cols.names(i) :: unchanged
+        else {
+          val v = cols.value(i, c)
+          if (slot(i) >= 0) out(slot(i)) = v
+        }
+        i += 1
+      }
+      out(WalPlan.Fields.length) = unchanged.reverse
+      out
+    }
+  }
+
+  private object WalPlan {
+    val Fields: Array[String] = Array("event_id", "ts", "user_id", "event_type", "value", "props")
+    def opt[T](v: Any): Option[T] = Option(v).asInstanceOf[Option[T]]
+  }
+
   /** Decode pgoutput segment blobs back into WAL change rows — a pure
     * per-segment flatMap (valid on batch AND streaming frames). The
-    * relation cache, current xid and decompression-marker flag live per
-    * segment, exactly the state the reference keeps per replication
-    * socket. A segment's LEADING frames whose lsn is below its
+    * relation cache with each relation's decode plan, the current xid
+    * and the decompression-marker flag live per segment, exactly the
+    * state the reference keeps per replication socket. A segment's LEADING frames whose lsn is below its
     * `start_lsn` are context a tailer replayed at a rotation (relations,
     * the open Begin, the open bracket's Start marker): they set that
     * state and emit no row.
@@ -675,54 +761,37 @@ object PgOutput {
     frames.select(col("segment"), col("start_lsn"), col("data"))
       .as[(Long, Long, Array[Byte])].flatMap {
       case (segment, startLsn, blob) =>
-        val relations = scala.collection.mutable.Map[Int, RelationMsg]()
+        val relations = scala.collection.mutable.LongMap[RelationMsg]()
+        // one decode plan per relation (`decoderplan.go:32-101`), built
+        // on the relation's first tuple; a Relation message drops its
+        // relation's plan, a Type message every plan with a column of
+        // that OID. ONE path for text AND binary tuple formats (the
+        // reference requests `binary 'true'` on PG14+), shared by the
+        // main tuple AND the old-tuple submessage so the before/after
+        // surfaces can never diverge in decode semantics.
+        val plans = scala.collection.mutable.LongMap[WalPlan]()
         var currentXid = -1L
         var decompressing = false // the open bracket's flag
         var context = true        // still in the replayed leading frames
-        // registry-driven value decode keyed by the Relation message's
-        // column OIDs — ONE path for text AND binary tuple formats (the
-        // reference requests `binary 'true'` on PG14+), name-keyed so
-        // relations other than the events fixture (or a relation that
-        // evolved mid-stream) decode what they have. Shared by the main
-        // tuple AND the old-tuple submessage so the before/after
-        // surfaces can never diverge in decode semantics.
-        def decodeVals(relId: Int, t: Seq[TupleCol])
-            : (RelationMsg, Map[String, Any], String => Option[Any]) = {
-          val rel = relations.getOrElse(relId,
-            throw new IllegalStateException(s"pgoutput: unknown relation id $relId"))
-          val vals = graft.types.TypeRegistry
-            .decodeTuple(rel.cols.map(c => (c.name, c.typeOid)), t, resolver).toMap
-          (rel, vals, n => vals.get(n).flatMap(Option(_)))
-        }
-        def tupleRow(lsn: Long, opWire: String, relId: Int, t: Seq[TupleCol]): DecodedWal = {
-          val (rel, _, g0) = decodeVals(relId, t)
-          def g[T](n: String): Option[T] = g0(n).map(_.asInstanceOf[T])
-          // decodeTuple omits 'u' keys (reference contract) — recover the
-          // omission set from the wire tuple so the envelope can drop keys
-          val unchanged = rel.cols.map(_.name).zip(t)
-            .collect { case (n, UnchangedCol) => n }
-          DecodedWal(segment, lsn, currentXid, opWire,
-            Some(rel.namespace), Some(rel.relName),
-            g[Long]("event_id"), g[Long]("ts"),
-            g[Long]("user_id"), g[String]("event_type"),
-            g[Double]("value"), g[String]("props"), unchanged)
-        }
-        // decode an old-tuple submessage into the before_* fields of an
-        // already-built row ('O' = full old row, 'K' = key cols only —
-        // whatever the wire carried, through the SAME decode helper)
-        def withBefore(row: DecodedWal, relId: Int, kind: Char,
-                       ot: Seq[TupleCol]): DecodedWal = {
-          val (_, _, g0) = decodeVals(relId, ot)
-          def g[T](n: String): Option[T] = g0(n).map(_.asInstanceOf[T])
-          row.copy(old_kind = Some(kind.toString),
-            before_event_id = g[Long]("event_id"),
-            before_user_id = g[Long]("user_id"),
-            before_value = g[Double]("value"),
-            before_props = g[String]("props"))
+        def plan(relId: Int): WalPlan = plans.getOrElseUpdate(relId,
+          new WalPlan(relations.getOrElse(relId,
+            throw new IllegalStateException(s"pgoutput: unknown relation id $relId")), resolver))
+        // `ot`, when given, is the old-tuple submessage: it decodes into
+        // the before_* fields ('O' = full old row, 'K' = key cols only)
+        def tupleRow(lsn: Long, opWire: String, relId: Int, t: Seq[TupleCol],
+                     oldKind: Option[String] = None, ot: Seq[TupleCol] = null): DecodedWal = {
+          val p = plan(relId)
+          val v = p.decode(t)
+          val old = if (ot == null) null else p.decode(ot)
+          def before[T](i: Int): Option[T] = if (old == null) None else WalPlan.opt(old(i))
+          DecodedWal(segment, lsn, currentXid, opWire, p.namespace, p.relName,
+            WalPlan.opt(v(0)), WalPlan.opt(v(1)), WalPlan.opt(v(2)), WalPlan.opt(v(3)),
+            WalPlan.opt(v(4)), WalPlan.opt(v(5)), v(6).asInstanceOf[List[String]], oldKind,
+            before(0), before(2), before(4), before(5))
         }
         def rows(lsn: Long, msg: PgMsg): Seq[DecodedWal] = msg match {
-          case RelationMsg(id, ns, rel, ri, cols) =>
-            relations(id) = RelationMsg(id, ns, rel, ri, cols); Nil
+          case r: RelationMsg =>
+            relations(r.relId) = r; plans -= r.relId; Nil
           case BeginMsg(_, _, xid) =>
             currentXid = xid.toLong & 0xffffffffL; decompressing = false; Nil
           case _: CommitMsg => currentXid = -1L; decompressing = false; Nil
@@ -736,19 +805,18 @@ object PgOutput {
               graft.types.TypeRegistry.register(
                 graft.types.TypeRegistry.Registration(
                   oid, name, org.apache.spark.sql.types.StringType, s => s))
+            plans.filterInPlace((_, p) => !p.cols.hasOid(oid))
             Nil
           case InsertMsg(_, _) if markerSuppress && decompressing => Nil
           case InsertMsg(id, nt)          => Seq(tupleRow(lsn, "I", id, nt))
-          case UpdateMsg(id, ok, ot, nt) =>
-            val row = tupleRow(lsn, "U", id, nt)
-            Seq((ok, ot) match {
-              case (Some(k), Some(t)) => withBefore(row, id, k, t)
-              case _                  => row // no old tuple on the wire
-            })
+          case UpdateMsg(id, ok, ot, nt) => (ok, ot) match {
+            case (Some(k), Some(t)) => Seq(tupleRow(lsn, "U", id, nt, Some(k.toString), t))
+            case _                  => Seq(tupleRow(lsn, "U", id, nt)) // no old tuple on the wire
+          }
           case DeleteMsg(id, k, ot) =>
             // delete's tuple IS the old row; record which identity form
             // the wire used alongside the main-column decode
-            Seq(tupleRow(lsn, "D", id, ot).copy(old_kind = Some(k.toString)))
+            Seq(tupleRow(lsn, "D", id, ot, Some(k.toString)))
           case TruncateMsg(_, ids) =>
             ids.map { id =>
               val rel = relations.get(id)

@@ -3,7 +3,12 @@ package graft.sources
 import java.util
 
 import graft.cdc.PgOutput
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -12,6 +17,7 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, Par
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReportsSourceMetrics, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSourceV2 micro-batch source over a directory of pgoutput segment
   * parquet files (`PgOutput.frameSchema`: one `(segment, start_lsn,
@@ -29,6 +35,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * is the (mtime, name) of the last file served. Planning a batch runs
   * no Spark job: its partitions carry file paths, and the executors
   * read the files with parquet-hadoop.
+  *
+  * The listing and the readers use one Hadoop configuration: the
+  * session's (`sessionState.newHadoopConf()`, so `spark.hadoop.*` and
+  * session-set filesystem keys apply), taken once per stream and
+  * broadcast once per stream to the readers, as Spark's own parquet scan
+  * does. A reader opens each file through that configuration and never
+  * builds one of its own.
   *
   * The contract is a SINGLE SEQUENTIAL WRITER (the engine's tailer, a
   * spool), whose commit order is (mtime, name) order. A file that
@@ -103,7 +116,8 @@ class SegmentMicroBatchStream(path: String)
     extends MicroBatchStream with SupportsTriggerAvailableNow with ReportsSourceMetrics {
 
   private val dir = new Path(path)
-  private lazy val fs = dir.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
+  private val conf = new StreamConf
+  private lazy val fs = dir.getFileSystem(conf.hadoop)
   private var listed = false
   @volatile private var listing: Vector[SegmentFile] = Vector.empty
   @volatile private var availableNowCap: Option[SegmentOffset] = None
@@ -179,13 +193,10 @@ class SegmentMicroBatchStream(path: String)
       "pendingBytes", pending.iterator.map(_.length).sum.toString)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = new PartitionReaderFactory {
-    override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-      new SegmentReader(partition.asInstanceOf[SegmentPartition].paths)
-  }
+  override def createReaderFactory(): PartitionReaderFactory = SegmentReaderFactory(conf.forReaders)
 
   override def commit(end: Offset): Unit = () // the checkpoint's offset log is the store
-  override def stop(): Unit = ()
+  override def stop(): Unit = conf.release()
   override def toString: String = s"SegmentSource[$path]"
 }
 
@@ -208,13 +219,14 @@ object SegmentMicroBatchStream {
   }
 }
 
-/** Reads `(segment, start_lsn, data)` rows from each file in turn. */
-class SegmentReader(paths: Array[String]) extends PartitionReader[InternalRow] {
-  import org.apache.parquet.example.data.Group
-  import org.apache.parquet.hadoop.ParquetReader
-  import org.apache.parquet.hadoop.example.GroupReadSupport
+final case class SegmentReaderFactory(conf: Broadcast[SerializableConfiguration])
+    extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new SegmentReader(partition.asInstanceOf[SegmentPartition].paths, conf.value.value)
+}
 
-  private val conf = new org.apache.hadoop.conf.Configuration()
+/** Reads `(segment, start_lsn, data)` rows from each file in turn. */
+class SegmentReader(paths: Array[String], conf: Configuration) extends PartitionReader[InternalRow] {
   private var nextFile = 0
   private var reader: ParquetReader[Group] = _
   private var current: Group = _
@@ -223,8 +235,7 @@ class SegmentReader(paths: Array[String]) extends PartitionReader[InternalRow] {
     current = if (reader == null) null else reader.read()
     while (current == null && nextFile < paths.length) {
       if (reader != null) reader.close()
-      reader = ParquetReader.builder(new GroupReadSupport(), new Path(paths(nextFile)))
-        .withConf(conf).build()
+      reader = GroupFiles.open(HadoopInputFile.fromPath(new Path(paths(nextFile)), conf))
       nextFile += 1
       current = reader.read()
     }

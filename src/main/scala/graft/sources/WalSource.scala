@@ -1,6 +1,10 @@
 package graft.sources
 
 import java.util
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -10,6 +14,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** Custom DataSourceV2 micro-batch source with **LSN offsets** — the
   * Spark shape of the reference's replication channel
@@ -33,7 +38,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * that range itself (parquet-hadoop with an lsn range filter pushed to
   * row groups), exactly how a production pgoutput source would hold a
   * per-reader replication-socket cursor. Driver heap stays O(1) in the
-  * WAL size.
+  * WAL size. The footer reads and the range readers use the session's
+  * Hadoop configuration, taken once per stream and broadcast once per
+  * stream to the readers (see [[SegmentDataSource]]).
   */
 class WalDataSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = WalDataSource.schema
@@ -87,10 +94,11 @@ class WalMicroBatchStream(path: String, batchSize: Int)
   // stream observes WAL growth — the tail-capable behavior of the
   // reference's replication socket; AvailableNow snapshots it once so
   // that run has a stable endpoint.
+  private val conf = new StreamConf
+
   private def readMaxLsn(): Long = {
-    val reader = WalFile.openStable(path) { (status, conf) =>
-      org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf))
+    val reader = WalFile.openStable(path, conf.hadoop) { status =>
+      org.apache.parquet.hadoop.ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf.hadoop))
     }
     try {
       import scala.jdk.CollectionConverters._
@@ -133,7 +141,7 @@ class WalMicroBatchStream(path: String, batchSize: Int)
   override def deserializeOffset(json: String): Offset =
     LsnOffset("""\d+""".r.findFirstIn(json).map(_.toLong).getOrElse(0L))
   override def commit(end: Offset): Unit = () // checkpoint log is the store
-  override def stop(): Unit = ()
+  override def stop(): Unit = conf.release()
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val lo = start.asInstanceOf[LsnOffset].lsn
@@ -145,13 +153,15 @@ class WalMicroBatchStream(path: String, batchSize: Int)
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-        val p = partition.asInstanceOf[WalRangePartition]
-        new WalRangeReader(p.path, p.lo, p.hi)
-      }
-    }
+  override def createReaderFactory(): PartitionReaderFactory = WalReaderFactory(conf.forReaders)
+}
+
+final case class WalReaderFactory(conf: Broadcast[SerializableConfiguration])
+    extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val p = partition.asInstanceOf[WalRangePartition]
+    new WalRangeReader(p.path, p.lo, p.hi, conf.value.value)
+  }
 }
 
 private[sources] object WalFile {
@@ -160,18 +170,16 @@ private[sources] object WalFile {
     * its length: the open then seeks the old length in the new file and
     * fails. Only when the file's (length, mtime) changed under `open` is
     * it retried, on the new file. */
-  def openStable[T](dir: String)(
-      open: (org.apache.hadoop.fs.FileStatus, org.apache.hadoop.conf.Configuration) => T): T = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val walPath = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
+  def openStable[T](dir: String, conf: Configuration)(open: FileStatus => T): T = {
+    val walPath = new Path(s"$dir/events.parquet")
     val fs = walPath.getFileSystem(conf)
     val before = fs.getFileStatus(walPath)
     def replaced: Boolean = {
       val now = fs.getFileStatus(walPath)
       now.getLen != before.getLen || now.getModificationTime != before.getModificationTime
     }
-    try open(before, conf)
-    catch { case _: Exception if replaced => openStable(dir)(open) }
+    try open(before)
+    catch { case _: Exception if replaced => openStable(dir, conf)(open) }
   }
 }
 
@@ -182,26 +190,20 @@ case class WalRangePartition(path: String, lo: Long, hi: Long) extends InputPart
 /** Executor-side range scan: parquet-hadoop reader with the lsn range
   * pushed as a row-group + record filter, decoding straight to the WAL
   * shape (op mapping, ts_ms, xid — the `Cdc.shapeWal` contract). */
-class WalRangeReader(path: String, lo: Long, hi: Long)
+class WalRangeReader(path: String, lo: Long, hi: Long, conf: Configuration)
     extends PartitionReader[InternalRow] {
   import org.apache.parquet.filter2.compat.FilterCompat
   import org.apache.parquet.filter2.predicate.FilterApi
-  import org.apache.parquet.hadoop.ParquetReader
-  import org.apache.parquet.hadoop.example.GroupReadSupport
   import org.apache.parquet.example.data.Group
 
-  // the builder stats the WAL and the first read opens it, so the first
-  // record is read here, under the replaced-WAL retry
+  // the reader trusts the stat's length and the first read opens the
+  // file, so the first record is read here, under the replaced-WAL retry
   private val (reader, first) =
-    WalFile.openStable(path) { (_, conf) =>
+    WalFile.openStable(path, conf) { status =>
       val pred = FilterApi.and(
         FilterApi.gtEq(FilterApi.longColumn("event_id"), java.lang.Long.valueOf(lo)),
         FilterApi.lt(FilterApi.longColumn("event_id"), java.lang.Long.valueOf(hi)))
-      val r = ParquetReader.builder(new GroupReadSupport(),
-          new org.apache.hadoop.fs.Path(s"$path/events.parquet"))
-        .withConf(conf)
-        .withFilter(FilterCompat.get(pred))
-        .build()
+      val r = GroupFiles.open(HadoopInputFile.fromStatus(status, conf), FilterCompat.get(pred))
       try (r, r.read())
       catch { case e: Exception => r.close(); throw e }
     }

@@ -24,11 +24,13 @@ object StatsEndpoint {
 
   /** Prometheus text exposition (v0.0.4) of the counter map. Counters
     * the reference doesn't name surface under `graft_` so nothing
-    * silently disappears from the scrape, and so do the per-source
-    * `gauges`, labelled with the source they describe. */
+    * silently disappears from the scrape, and so do the `gauges`, each
+    * series with its labels in their given order. */
   def render(counters: scala.collection.Map[String, Long],
              runtimeStats: Boolean = true,
-             gauges: scala.collection.Map[(String, String), Long] = Map.empty): String = {
+             gauges: scala.collection.Map[(String, Seq[(String, String)]), Long] = Map.empty)
+      : String = {
+    import scala.math.Ordering.Implicits.seqOrdering
     val sb = new StringBuilder
     series.foreach { case (key, name, typ) =>
       sb.append("# TYPE ").append(name).append(' ').append(typ).append('\n')
@@ -40,11 +42,13 @@ object StatsEndpoint {
       sb.append("# TYPE ").append(safe).append(" counter\n")
       sb.append(safe).append(' ').append(v).append('\n')
     }
-    gauges.groupBy(_._1._1).toSeq.sortBy(_._1).foreach { case (name, bySource) =>
+    gauges.groupBy(_._1._1).toSeq.sortBy(_._1).foreach { case (name, byLabels) =>
       sb.append("# TYPE graft_").append(name).append(" gauge\n")
-      bySource.toSeq.sortBy(_._1._2).foreach { case ((_, source), v) =>
-        val label = source.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n")
-        sb.append("graft_").append(name).append("{source=\"").append(label).append("\"} ")
+      byLabels.toSeq.sortBy(_._1._2).foreach { case ((_, labels), v) =>
+        val rendered = labels.map { case (k, value) =>
+          k + "=\"" + value.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n") + "\""
+        }
+        sb.append("graft_").append(name).append(rendered.mkString("{", ",", "} "))
           .append(v).append('\n')
       }
     }

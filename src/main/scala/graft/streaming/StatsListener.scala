@@ -15,14 +15,16 @@ import scala.collection.concurrent.TrieMap
   * stats engine reporting (`stats/reporter.go:30-36`).
   * `envelopeStream`'s `graft_unresolved` rows (dropped by chunk
   * resolution) fold into `unresolved_rows_total`, scraped as
-  * `graft_unresolved_rows_total`.
+  * `graft_unresolved_rows_total`. The last batch's `durationMs` phases
+  * are gauges, scraped as `graft_batch_duration_ms{query,phase}`.
   */
 class StatsListener extends StreamingQueryListener {
   val counters = new TrieMap[String, Long]()
-  /** (gauge name, source description) → the value the source last
-    * reported: the segment source's backlog, files and bytes listed but
-    * not yet served. */
-  val gauges = new TrieMap[(String, String), Long]()
+  /** (gauge name, labels) → the value last reported: the segment
+    * source's backlog, files and bytes listed but not yet served
+    * (labelled with the source), and the phases of the last batch that
+    * ran (labelled with the query and the phase). */
+  val gauges = new TrieMap[(String, Seq[(String, String)]), Long]()
 
   private def add(k: String, v: Long): Unit =
     counters.updateWith(k) { c => Some(c.getOrElse(0L) + v) }
@@ -61,9 +63,26 @@ class StatsListener extends StreamingQueryListener {
     e.progress.sources.foreach { s =>
       val m = s.metrics
       if (m.containsKey("pendingFiles")) {
-        gauges(("source_pending_segment_files", s.description)) = m.get("pendingFiles").toLong
-        gauges(("source_pending_segment_bytes", s.description)) = m.get("pendingBytes").toLong
+        val source = Seq("source" -> s.description)
+        gauges(("source_pending_segment_files", source)) = m.get("pendingFiles").toLong
+        gauges(("source_pending_segment_bytes", source)) = m.get("pendingBytes").toLong
+      }
+    }
+    // an idle trigger reports no addBatch: keep the last batch's phases
+    val phases = e.progress.durationMs
+    if (phases.containsKey("addBatch")) {
+      val query = Option(e.progress.name).getOrElse(e.progress.id.toString)
+      StatsListener.BatchPhases.foreach { phase =>
+        if (phases.containsKey(phase))
+          gauges(("batch_duration_ms", Seq("query" -> query, "phase" -> phase))) =
+            phases.get(phase).longValue()
       }
     }
   }
+}
+
+object StatsListener {
+  /** The `durationMs` phases exported as `graft_batch_duration_ms`. */
+  val BatchPhases: Seq[String] =
+    Seq("addBatch", "queryPlanning", "latestOffset", "commitOffsets", "triggerExecution")
 }

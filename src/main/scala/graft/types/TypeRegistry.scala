@@ -3,6 +3,7 @@ package graft.types
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.ConcurrentHashMap
 
+import graft.cdc.PgOutput.{BinaryCol, TextCol, TupleCol, UnchangedCol}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
@@ -219,6 +220,48 @@ object TypeRegistry {
       StructField(name, converterFor(oid, resolver).dataType, nullable = true)
     })
 
+  /** A relation's decode plan (`internal/typemanager/decoderplan.go:
+    * 32-101`): its column names and OIDs in arrays, and one
+    * [[Registration]] per column, resolved on first use and kept once it
+    * resolves. Built once per Relation message; each tuple then decodes
+    * column by ordinal. */
+  final class Plan(cols: Seq[(String, Int)], resolver: Resolver = Resolver.empty) {
+    val names: Array[String] = cols.iterator.map(_._1).toArray
+    val oids: Array[Int] = cols.iterator.map(_._2).toArray
+    private val regs = new Array[Registration](oids.length)
+
+    def hasOid(oid: Int): Boolean = oids.contains(oid)
+
+    // arity must match the cached Relation exactly: a zip would silently
+    // TRUNCATE a desynced stream into a plausible row whose missing
+    // trailing column is indistinguishable from TOAST key omission —
+    // exactly the corruption this module promises to fail loudly on
+    def checkArity(tuple: Seq[TupleCol]): Unit =
+      require(names.length == tuple.length,
+        s"tuple arity ${tuple.length} != relation arity ${names.length} " +
+          s"(cols: ${names.mkString(",")}) — stream desync or stale relation cache")
+
+    private def registration(i: Int): Registration = {
+      var r = regs(i)
+      if (r == null) { r = converterFor(oids(i), resolver); regs(i) = r }
+      r
+    }
+
+    /** Column `i`'s value as carried by `c`; null for `'n'` and for
+      * `'u'` (unchanged TOAST), which the caller tells apart by kind. */
+    def value(i: Int, c: TupleCol): Any = c match {
+      case TextCol(b) => registration(i).parse(new String(b, UTF_8))
+      case BinaryCol(b) =>
+        val reg = registration(i)
+        if (reg.parseBinary == null)
+          throw new IllegalArgumentException(
+            s"column ${names(i)}: type ${reg.name} (oid ${oids(i)}) has no binary codec " +
+              "(pgoutput binary mode); re-slot with a text subscription")
+        reg.parseBinary(b)
+      case _ => null
+    }
+  }
+
   /** Decode one text tuple against its relation columns — the generic
     * (registry-driven) twin of the fixture-specific decode in
     * `PgOutput.decodeSegments`. New columns of types never seen before
@@ -230,29 +273,12 @@ object TypeRegistry {
     * logical replication never read the value off disk, so the decoded
     * map must not pretend it saw one. Downstream envelope rendering
     * relies on the distinction: `"col": null` vs the key being absent. */
-  def decodeTuple(cols: Seq[(String, Int)], tuple: Seq[graft.cdc.PgOutput.TupleCol],
+  def decodeTuple(cols: Seq[(String, Int)], tuple: Seq[TupleCol],
                   resolver: Resolver = Resolver.empty): Seq[(String, Any)] = {
-    // arity must match the cached Relation exactly: a zip would silently
-    // TRUNCATE a desynced stream into a plausible row whose missing
-    // trailing column is indistinguishable from TOAST key omission —
-    // exactly the corruption this module promises to fail loudly on
-    require(cols.length == tuple.length,
-      s"tuple arity ${tuple.length} != relation arity ${cols.length} " +
-        s"(cols: ${cols.map(_._1).mkString(",")}) — stream desync or stale relation cache")
-    cols.zip(tuple).flatMap { case ((name, oid), c) =>
-      c match {
-        case graft.cdc.PgOutput.NullCol      => Some(name -> (null: Any))
-        case graft.cdc.PgOutput.UnchangedCol => None // TOAST: key absent, not null
-        case graft.cdc.PgOutput.TextCol(b)   =>
-          Some(name -> converterFor(oid, resolver).parse(new String(b, UTF_8)))
-        case graft.cdc.PgOutput.BinaryCol(b) =>
-          val reg = converterFor(oid, resolver)
-          if (reg.parseBinary == null)
-            throw new IllegalArgumentException(
-              s"column $name: type ${reg.name} (oid $oid) has no binary codec " +
-                "(pgoutput binary mode); re-slot with a text subscription")
-          Some(name -> reg.parseBinary(b))
-      }
-    }
+    val plan = new Plan(cols, resolver)
+    plan.checkArity(tuple)
+    tuple.iterator.zipWithIndex.collect {
+      case (c, i) if c ne UnchangedCol => plan.names(i) -> plan.value(i, c) // TOAST: key absent
+    }.toSeq
   }
 }

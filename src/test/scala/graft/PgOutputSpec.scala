@@ -88,6 +88,59 @@ class PgOutputSpec extends SparkSpec {
     assert(tsToText(1704067207179575000L) === "2024-01-01 00:00:07.179575000")
   }
 
+  test("timestamp text: whole seconds, 1-9 fraction digits and timestamptz offsets") {
+    val base = tsFromText("2024-01-01 00:00:07.000000000")
+    assert(base === 1704067207000000000L)
+    assert(tsFromText("2024-01-01 00:00:07") === base, "PG drops a zero fraction")
+    assert(tsFromText("2024-01-01 00:00:07.1") === base + 100000000L)
+    assert(tsFromText("2024-01-01 00:00:07.179575") === base + 179575000L)
+    assert(tsFromText("2024-01-01 00:00:07.179575+00") === base + 179575000L)
+    assert(tsFromText("2024-01-01 05:30:07+05:30") === base)
+    assert(tsFromText("2023-12-31 19:00:07-05") === base)
+    assert(tsFromText("2024-01-01 00:00:37.5+00:00:30") === base + 500000000L)
+    assert(tsFromText("1969-12-31 23:59:59.999999999") === -1L)
+    Seq("infinity", "-infinity", "0044-03-15 12:00:00 BC", "2024-01-01 00:00:07.",
+      "2024-01-01", "2024-13-01 00:00:00", "2024-01-01 24:00:00",
+      "2024-01-01 00:00:07.1234567891", "2024-01-01 00:00:07+5").foreach { t =>
+      val e = intercept[IllegalArgumentException](tsFromText(t))
+      assert(e.getMessage.contains(s"'$t'"), e.getMessage)
+    }
+  }
+
+  test("a timestamptz column decodes its offset text form in a segment") {
+    val rel = RelationMsg(12, "public", "ticks", 'f', Seq(
+      RelCol(1, "event_id", 20, -1), RelCol(0, "ts", 1184, -1)))
+    val bos = new java.io.ByteArrayOutputStream()
+    val o = new java.io.DataOutputStream(bos)
+    writeFrame(o, 1L, PgOutput.encode(rel))
+    writeFrame(o, 2L, PgOutput.encode(BeginMsg(5L, 0L, 1)))
+    Seq(3L -> "2024-01-01 00:00:07.179575+00", 4L -> "2024-01-01 01:00:07+01").foreach {
+      case (id, ts) => writeFrame(o, id, PgOutput.encode(InsertMsg(12,
+        Seq(TextCol(id.toString.getBytes(UTF_8)), TextCol(ts.getBytes(UTF_8))))))
+    }
+    writeFrame(o, 5L, PgOutput.encode(CommitMsg(0, 5L, 6L, 0L)))
+    val rows = PgOutput.decodeSegments(
+      Seq((0L, 1L, bos.toByteArray)).toDF("segment", "start_lsn", "data"))
+      .collect().sortBy(_.lsn)
+    assert(rows.map(r => (r.event_id, r.ts)).toSeq ===
+      Seq((Some(3L), Some(1704067207179575000L)), (Some(4L), Some(1704067207000000000L))))
+  }
+
+  test("decode plans follow a mid-segment Relation: the evolving fixture decodes every row") {
+    // sf0.001 is one 1,000-event segment: the ALTER lands mid-segment
+    // and mid-transaction, and every later tuple carries a seventh
+    // column that a plan kept across the Relation would reject
+    val ev = Tables.events(spark, sf001)
+    def rows(segs: org.apache.spark.sql.DataFrame) =
+      PgOutput.decodeSegments(segs).collect().sortBy(r => (r.lsn, r.op_wire)).toSeq
+    val evolving = PgOutput.encodeSegmentsEvolving(ev, addScoreFrom = 455L)
+    assert(evolving.count() === 1L)
+    val evolved = rows(evolving)
+    val plain = rows(PgOutput.encodeSegments(ev))
+    assert(evolved.length === ev.count())
+    assert(evolved === plain, "the six shared columns equal the plain encoding's rows")
+  }
+
   test("frame framing rejects corrupt length prefixes before allocating") {
     // hostile/bit-rotted prefix claiming 2 GB must fail loudly, not
     // attempt the allocation; a truncated blob must not AIOOBE

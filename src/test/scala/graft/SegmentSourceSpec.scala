@@ -166,6 +166,29 @@ class SegmentSourceSpec extends SparkSpec {
       e.getMessage)
   }
 
+  test("segment readers open files through the session's Hadoop settings") {
+    // the `graftspool` scheme exists only in the session conf, and with
+    // its FileSystem cache off the driver's listing instance is not
+    // reused: a reader that builds its own configuration cannot open it
+    val local = tempDir("graft-seg-scheme")
+    writeSegments(local, 0L until 6L)
+    val keys = Seq("fs.graftspool.impl" -> classOf[SpoolFileSystem].getName,
+      "fs.graftspool.impl.disable.cache" -> "true")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val got = new ConcurrentLinkedQueue[(Long, Int)]()
+      val q = segmentStream(s"graftspool://$local").writeStream
+        .option("checkpointLocation", tempDir("graft-seg-scheme-ckpt"))
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          b.collect().foreach(r => got.add((r.getLong(0), r.getAs[Array[Byte]](2).length)))
+        }
+        .trigger(Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(120000), "segment stream did not finish")
+      q.exception.foreach(e => throw e)
+      assert(got.asScala.toSeq.sorted === (0L until 6L).map(n => (n, (n * 37 % 4000).toInt)))
+    } finally keys.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   test("a config-driven wire stream runs one Spark job per micro-batch") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -235,4 +258,11 @@ class SegmentSourceSpec extends SparkSpec {
       graft.streaming.StatsEndpoint.stop(statsPort)
     }
   }
+}
+
+/** The local filesystem under the `graftspool` scheme, which no Hadoop
+  * default registers. */
+class SpoolFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftspool:///")
+  override def getScheme: String = "graftspool"
 }

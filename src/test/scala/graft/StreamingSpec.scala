@@ -840,6 +840,42 @@ class StreamingSpec extends SparkSpec {
     } finally graft.streaming.StatsEndpoint.stop(port)
   }
 
+  test("stats endpoint: the last batch's duration phases scrape as labelled gauges") {
+    import graft.streaming.{StatsEndpoint, StatsListener}
+    // a source series renders exactly as it did with one `source` label
+    val source = Map(("source_pending_segment_files", Seq("source" -> "Seg[a\"b]")) -> 3L)
+    assert(StatsEndpoint.render(Map.empty, runtimeStats = false, source).endsWith(
+      "# TYPE graft_source_pending_segment_files gauge\n" +
+        "graft_source_pending_segment_files{source=\"Seg[a\\\"b]\"} 3\n"))
+
+    val dir = Files.createTempDirectory("graft-phases").toString
+    graft.cdc.PgOutput.encodeSegments(Tables.events(spark, sf001), segmentTxns = 25)
+      .write.parquet(s"$dir/segments")
+    val listener = new StatsListener
+    spark.streams.addListener(listener)
+    try {
+      val q = graft.cdc.PgOutput.streamDecoded(spark, s"$dir/segments").toDF().writeStream
+        .queryName("phases_probe")
+        .option("checkpointLocation", s"$dir/ckpt")
+        .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) => b.collect(): Unit)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(240000), "stream did not finish within the timeout")
+      q.exception.foreach(e => throw e)
+      val last = q.recentProgress.filter(_.durationMs.containsKey("addBatch")).last.durationMs
+      val want = StatsListener.BatchPhases.map { p =>
+        assert(last.containsKey(p), s"progress has no $p phase: $last")
+        s"""graft_batch_duration_ms{query="phases_probe",phase="$p"} ${last.get(p)}"""
+      }
+      def scrape() = StatsEndpoint.render(listener.counters, runtimeStats = false, listener.gauges)
+      val deadline = System.nanoTime + 60e9.toLong
+      while (!want.forall(scrape().linesIterator.contains) && System.nanoTime < deadline)
+        Thread.sleep(50)
+      val body = scrape()
+      assert(body.contains("# TYPE graft_batch_duration_ms gauge\n"), body)
+      want.foreach(line => assert(body.linesIterator.contains(line), body))
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("stats endpoint: a bound port belongs to ONE session — a second session fails loudly") {
     // grab an ephemeral port, then simulate two sessions contending for
     // it (plain ServerSocket: close() releases the bind synchronously —

@@ -152,7 +152,7 @@ class WalSourceSpec extends SparkSpec {
     var reads = 0
     whileWalSwaps { dir =>
       // [100, 300) exists in both versions
-      val r = new graft.sources.WalRangeReader(dir, 100L, 300L)
+      val r = new graft.sources.WalRangeReader(dir, 100L, 300L, spark.sessionState.newHadoopConf())
       val lsns = try Iterator.continually(r.next()).takeWhile(identity)
           .map(_ => r.get().getLong(0)).toVector
         finally r.close()
