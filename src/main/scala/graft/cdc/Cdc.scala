@@ -62,11 +62,18 @@ object Cdc {
       .withColumn("op", opExpr(col("event_type")))
       .withColumn("schema_name", lit("public"))
       .withColumn("table_name", lit("events"))
-      // ts is Long nanos (Tables.events); integer div keeps exactness —
-      // double division at 1e18 ns magnitude would lose ULPs.
-      .withColumn("chunk_day",
-        (expr(s"ts div $NanosPerDay") - EpochDay20240101).cast(IntegerType))
-      .withColumn("ts_ms", expr("ts div 1000000"))
+      .withColumn("chunk_day", chunkDayOfTs)
+      .withColumn("ts_ms", tsMsOfTs)
+
+  /** The 24h chunk of `ts` (Long epoch nanos: `Tables.events`, or a
+    * decoded pgoutput tuple), as days since 2024-01-01. Integer `div`
+    * keeps exactness — double division at 1e18 ns magnitude would lose
+    * ULPs. */
+  def chunkDayOfTs: Column =
+    (expr(s"ts div $NanosPerDay") - EpochDay20240101).cast(IntegerType)
+
+  /** `ts` (Long epoch nanos) in epoch millis, by integer `div`. */
+  def tsMsOfTs: Column = expr("ts div 1000000")
 
   /** Chunk catalog (dimension table): one row per 24h chunk, shaped like
     * `_timescaledb_catalog.chunk` (`internal/sidechannel/queries.go:122-128`,

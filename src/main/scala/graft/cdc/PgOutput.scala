@@ -233,8 +233,9 @@ object PgOutput {
 
   /** The ack the client loop sends on its standby deadline (and
     * immediately when a keepalive sets replyRequested) — carrying the
-    * committed LSN cursor, which is exactly the streaming Offset the
-    * `WalSource` checkpoints. */
+    * client's processed LSN cursor (under the segment tailer, the end of
+    * the last segment whose parquet write committed): the restart point
+    * the server keeps for the slot. */
   def encodeStatusUpdate(s: StandbyStatusUpdate): Array[Byte] = {
     val bos = new ByteArrayOutputStream(34)
     val o = new DataOutputStream(bos)

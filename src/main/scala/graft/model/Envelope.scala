@@ -32,14 +32,12 @@ object Envelope {
   }
 
   /** event_type → op for the WAL stand-in — the ONE source of truth
-    * shared by the batch shaping (`Cdc.opExpr`), the source-column gate
-    * inversion (`Cdc.opGateAtSource`), and the streaming range reader
-    * (`WalRangeReader`); anything not mapped is a logical message. */
+    * shared by the batch and streaming shaping (`Cdc.opExpr`) and the
+    * source-column gate inversion (`Cdc.opGateAtSource`); anything not
+    * mapped is a logical message. */
   val eventTypeToOp: Map[String, String] = Map(
     "signup" -> Op.Create, "purchase" -> Op.Update,
     "error" -> Op.Delete, "view" -> Op.Read, "click" -> Op.Message)
-  def opFor(eventType: String): String =
-    eventTypeToOp.getOrElse(eventType, Op.Message)
 
   /** tsdb_op values — `spi/schema/eventschema.go:46-51`. */
   object TsdbOp {

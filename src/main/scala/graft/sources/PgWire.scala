@@ -602,9 +602,10 @@ final class PgReplicationClient(host: String, port: Int, user: String,
   * Delivery: a segment is CONFIRMED (and therefore acked) only after
   * its parquet write commits — a crash mid-segment re-reads those
   * frames from the slot's restart LSN, which is exactly the
-  * at-least-once the reference provides. Duplicate frames carry
-  * duplicate LSNs, which the downstream envelope gate dedups exactly
-  * like WalSource restarts (dropDuplicatesWithinWatermark("lsn")).
+  * at-least-once the reference provides. The re-read frames reach the
+  * envelope stream again with their original LSNs and nothing on that
+  * path drops them, so a sink can see an event twice: delivery is
+  * at-least-once, and idempotence on LSN is the sink's to provide.
   */
 object PgWireTailer {
 

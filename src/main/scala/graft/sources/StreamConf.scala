@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
@@ -34,8 +33,8 @@ private[sources] final class StreamConf {
   * its options from the file's own Hadoop configuration; parquet's
   * path-based builder would parse a fresh `Configuration` per file. */
 private[sources] object GroupFiles {
-  def open(file: InputFile, filter: FilterCompat.Filter = FilterCompat.NOOP): ParquetReader[Group] =
+  def open(file: InputFile): ParquetReader[Group] =
     new ParquetReader.Builder[Group](file) {
       override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport()
-    }.withFilter(filter).build()
+    }.build()
 }

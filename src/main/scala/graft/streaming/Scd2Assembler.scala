@@ -40,8 +40,8 @@ object Scd2Assembler {
       open.foreach { o =>
         // fail-loud ordering guard: a batch delivering an lsn at or
         // below the stored open version would emit an inverted interval
-        // and silently corrupt the dimension — the file source must feed
-        // lsn-monotone batches (WalSource's per-partition contract)
+        // and silently corrupt the dimension — `walStream` must feed
+        // lsn-monotone batches (one events file per trigger)
         require(e.lsn > o.lsn,
           s"SCD2 stream out of order for key $key: event lsn ${e.lsn} <= open version lsn ${o.lsn}")
         out += ClosedVersion(key, o.lsn, e.lsn, o.op, o.value, o.tsMs)

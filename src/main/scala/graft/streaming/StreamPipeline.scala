@@ -52,9 +52,9 @@ object StreamPipeline {
     * chunk resolution. `markerSuppress` drops the decompression
     * brackets' re-INSERTs in the decode walk itself
     * ([[graft.cdc.PgOutput.decodeSegments]]), where the bracket
-    * prefixes are still in stream order. `chunk_day`/`ts_ms` derive
-    * from the decoded tuple exactly as `Cdc.shapeWal` derives them from
-    * parquet.
+    * prefixes are still in stream order. `chunk_day`/`ts_ms` are
+    * `Cdc.shapeWal`'s own columns over the decoded tuple's `ts`, with
+    * defaults for a tuple that carries none.
     */
   def walStreamPgOutput(spark: SparkSession, segmentsPath: String,
                         typeResolver: graft.types.TypeRegistry.Resolver =
@@ -64,12 +64,10 @@ object StreamPipeline {
       .toDF()
       .filter(col("op_wire").isin("I", "U", "D"))
       .select(col("lsn"), col("xid"),
-        graft.cdc.Cdc.opExpr(col("event_type")).as("op"),
+        Cdc.opExpr(col("event_type")).as("op"),
         col("schema_name"), col("table_name"),
-        coalesce(expr(s"ts div ${graft.cdc.Cdc.NanosPerDay}")
-            .minus(lit(graft.cdc.Cdc.EpochDay20240101)).cast("int"),
-          lit(-1)).as("chunk_day"),
-        coalesce(expr("ts div 1000000"), lit(0L)).as("ts_ms"),
+        coalesce(Cdc.chunkDayOfTs, lit(-1)).as("chunk_day"),
+        coalesce(Cdc.tsMsOfTs, lit(0L)).as("ts_ms"),
         col("event_id"), col("user_id"), col("value"), col("props"),
         col("msg_prefix"))
 
@@ -130,14 +128,22 @@ object StreamPipeline {
   final case class ChunkRef(chunk_name: String, ht_schema: String, ht_table: String)
 
   /** `chunk_day` → [[ChunkRef]] of the chunk catalog joined to the
-    * hypertable catalog, collected now, as a map literal. */
+    * hypertable catalog, as a map literal. Each catalog is collected on
+    * its own and the join runs here: every chunk carries the one
+    * hypertable's id as a constant, so a Spark join of the two plans as
+    * a nested-loop join. */
   private def chunkLookup(spark: SparkSession, dir: String): Column = {
     import spark.implicits._
+    val hypertables = Cdc.hypertableCatalog(spark)
+      .select(col("hypertable_id"), col("ht_schema"), col("ht_table"))
+      .as[(Int, String, String)].collect()
+      .map { case (id, schema, table) => id -> (schema, table) }.toMap
     typedLit(Cdc.chunkCatalog(spark, dir)
-      .join(Cdc.hypertableCatalog(spark), Seq("hypertable_id"))
-      .select(col("chunk_day"), col("chunk_name"), col("ht_schema"), col("ht_table"))
-      .as[(Int, String, String, String)].collect()
-      .map { case (day, name, schema, table) => day -> ChunkRef(name, schema, table) }.toMap)
+      .select(col("chunk_day"), col("chunk_name"), col("hypertable_id"))
+      .as[(Int, String, Int)].collect()
+      .flatMap { case (day, name, id) =>
+        hypertables.get(id).map { case (schema, table) => day -> ChunkRef(name, schema, table) }
+      }.toMap)
   }
 
   /** Streaming marker mode runs only on the wire arm: fail before any

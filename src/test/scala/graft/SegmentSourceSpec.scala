@@ -258,6 +258,37 @@ class SegmentSourceSpec extends SparkSpec {
       graft.streaming.StatsEndpoint.stop(statsPort)
     }
   }
+
+  test("building a wire envelope stream plans no nested-loop join") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    val plans = new ConcurrentLinkedQueue[String]()
+    val barrier = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.stageInfos.exists(_.rddInfos.exists(_.name == "lookup-plans-barrier")))
+          barrier.countDown()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(u.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      // building the stream collects the chunk lookup; nothing is started
+      graft.streaming.StreamPipeline.envelopeStream(spark, sf001,
+        pgoutputPath = Some(tempDir("graft-seg-lookup")))
+      sc.parallelize(Seq(1), 1).setName("lookup-plans-barrier").count()
+      val deadline = System.currentTimeMillis() + 30000
+      while (barrier.getCount > 0 && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(barrier.getCount === 0, "the listener bus did not deliver the barrier job")
+    } finally sc.removeSparkListener(listener)
+    val all = plans.asScala.toSeq
+    assert(all.exists(_.contains("events.parquet")), s"the chunk catalog read was not seen: $all")
+    all.foreach { p => assert(!p.contains("BroadcastNestedLoopJoin"), p) }
+  }
 }
 
 /** The local filesystem under the `graftspool` scheme, which no Hadoop
