@@ -913,8 +913,8 @@ object PgOutput {
     * strictly more faithful on updates: `before` comes from the decoded
     * OLD tuple (REPLICA IDENTITY FULL), not the parquet path's new-row
     * stand-in, and `after` omits unchanged-TOAST keys
-    * (`decoderplan.go:54-59`). Shared by the batch gate and the
-    * streaming throughput bench so both measure identical rendering.
+    * (`decoderplan.go:54-59`). Only [[envelopeGate]] renders with it;
+    * the stream and the benchmark render with `Cdc.eventsEnvelopeCols`.
     * One codegen'd projection with a per-row `when` between two
     * `to_json` branches — no shuffle. */
   def wireEnvelopeCol(dbName: String = "graft"): org.apache.spark.sql.Column = {

@@ -172,8 +172,10 @@ object ConfigPipeline {
         throw new IllegalArgumentException(s"$key: illegal integer '$v'"))
     }
 
-  /** Parsed transaction-window bounds — the values a consumer hands to
-    * [[TxnAssembler.txnStream]] (see [[txnSummaries]]). */
+  /** Parsed `postgresql.transaction.window.*` bounds. [[fromProperties]]
+    * and [[start]] validate them up front but apply no window: a
+    * consumer hands `maxSize` and `timeoutSeconds * 1000` to
+    * [[TxnAssembler.txnStream]]. */
   def txnWindow(props: Map[String, String]): TxnWindow = {
     val tw = TxnWindow(
       bool(props, "postgresql.transaction.window.enabled", default = true),
@@ -182,20 +184,6 @@ object ConfigPipeline {
     require(tw.timeoutSeconds > 0 && tw.maxSize > 0,
       s"transaction window bounds must be positive: $tw")
     tw
-  }
-
-  /** The config-applied transaction window: per-transaction summaries
-    * over the WAL stream with the CONFIGURED 10 000-entry / 60 s-style
-    * bounds (window disabled → effectively unbounded merge, modeled as
-    * Long.MaxValue size with the maximum timeout the state store
-    * accepts). */
-  def txnSummaries(spark: SparkSession, dir: String,
-                   props: Map[String, String]): org.apache.spark.sql.Dataset[TxnAssembler.TxnSummary] = {
-    val tw = txnWindow(props)
-    if (tw.enabled)
-      TxnAssembler.txnStream(spark, dir, tw.maxSize.toLong, tw.timeoutSeconds * 1000L)
-    else
-      TxnAssembler.txnStream(spark, dir, Long.MaxValue, Long.MaxValue / 4)
   }
 
   def snapshotMode(props: Map[String, String]): String = {
@@ -747,16 +735,11 @@ object ConfigPipeline {
     val sink = Sinks.fromConfig(props)
     // Prometheus scrape surface, reference parity: stats.enabled default
     // true, stats.port default 8081 (stats.go:35-100); one listener +
-    // server per JVM however many pipelines start
-    val statsOn = bool(props, "stats.enabled", default = true)
-    if (statsOn)
+    // server per JVM however many pipelines start. The key starts or
+    // skips the endpoint only: the observe nodes are always in the plan
+    if (bool(props, "stats.enabled", default = true))
       StatsEndpoint.ensure(spark, props.getOrElse("stats.port", "8081").toInt,
         runtimeStats = bool(props, "stats.runtime.enabled", default = true))
-    // channel counters observe BEFORE shape() (the reference counts them
-    // at the replication handler, pre-filter — replicationhandler.go:41)
-    // and emitted AFTER it (eventemitter.go:51) — without the split, a
-    // filtering config makes calls_total ≡ emitted_count and the
-    // channel/emitted gap every reference dashboard plots disappears
     // WAL source dispatch: `postgresql.pgoutput.path` switches the
     // stream onto binary pgoutput segment blobs (the wire-decode path);
     // default is the parquet stand-in. Same downstream pipeline either way.
@@ -770,11 +753,10 @@ object ConfigPipeline {
         props.getOrElse("graft.pgtypes.sql", graft.sources.JdbcSideChannel.PgTypesQuery))
       case None => graft.types.TypeRegistry.Resolver.empty
     }
-    val base = StreamPipeline.envelopeStream(spark, dir, effectiveOps(props),
+    val shaped = shape(StreamPipeline.envelopeStream(spark, dir, effectiveOps(props),
       pgoutputPath = props.get("postgresql.pgoutput.path"),
       typeResolver = typeResolver,
-      markerSuppress = markerMode(props))
-    val shaped = shape(if (statsOn) StreamPipeline.withStats(base) else base, props)
+      markerSuppress = markerMode(props)), props)
     // Wire sinks consume RENDERED rows (topic, key, envelope and, for
     // SQS, a content dedup id) — render HERE, after filters and masking, so an
     // excluded/masked column can never leak into an envelope byte.
@@ -785,7 +767,13 @@ object ConfigPipeline {
     // primary must receive renderable rows on the day it engages.
     val rendered =
       if (needsWireRender(props)) renderWireRows(shaped, props) else shaped
-    val query = (if (statsOn) StreamPipeline.withEmitted(rendered) else rendered)
+    // channel counters are observed inside envelopeStream, ahead of chunk
+    // resolution (the reference counts them at the replication handler,
+    // before anything resolves or filters — replicationhandler.go:41),
+    // and emitted here, on the rows the sink gets (eventemitter.go:51),
+    // so the channel/emitted gap every reference dashboard plots shows
+    // what resolution and the filters dropped
+    val query = rendered.observe("graft_emitted", count(lit(1)).as("n_emitted"))
       .writeStream
       .queryName(topicPrefix(props))
       .option("checkpointLocation", ckpt)

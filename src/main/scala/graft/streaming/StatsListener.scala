@@ -9,12 +9,13 @@ import scala.collection.concurrent.TrieMap
   * `eventemitter.go:51-54`: emitted.count), so dashboards built against
   * the reference's Prometheus surface read the same series here.
   *
-  * Wiring: `StreamPipeline.run` attaches `observe("graft_stats", ...)`
-  * to the envelope stream; this listener folds each batch's observed
-  * row into monotone counters — the Spark twin of the reference's
-  * stats engine reporting (`stats/reporter.go:30-36`).
-  * `envelopeStream`'s `graft_unresolved` rows (dropped by chunk
-  * resolution) fold into `unresolved_rows_total`, scraped as
+  * Wiring: `StreamPipeline.envelopeStream` observes `graft_stats`
+  * ahead of chunk resolution, and `ConfigPipeline.start` observes
+  * `graft_emitted` on the rows it hands the sink; this listener folds
+  * each batch's observed rows into monotone counters — the Spark twin
+  * of the reference's stats engine reporting (`stats/reporter.go:30-36`).
+  * `graft_stats`' `n_unresolved` (the rows chunk resolution drops)
+  * folds into `unresolved_rows_total`, scraped as
   * `graft_unresolved_rows_total`. The last batch's `durationMs` phases
   * are gauges, scraped as `graft_batch_duration_ms{query,phase}`.
   */
@@ -48,18 +49,12 @@ class StatsListener extends StreamingQueryListener {
       add("deletes", long(row, "n_deletes"))
       add("truncates", long(row, "n_truncates"))
       add("messages", long(row, "n_messages"))
-      // pipelines with a post-filter graft_emitted observe report the
-      // true emitted count there; otherwise (no filters between channel
-      // and sink) the channel count IS the emitted count. Neither path
-      // reads progress.sink.numOutputRows — the foreachBatch sink
-      // reports -1 (no sink metrics), which would pin the series at zero
-      if (!om.containsKey("graft_emitted"))
-        add("emitted.count", long(row, "n_events"))
+      add("unresolved_rows_total", long(row, "n_unresolved"))
     }
+    // not progress.sink.numOutputRows: the foreachBatch sink reports -1
+    // (no sink metrics), which would pin the series at zero
     if (om.containsKey("graft_emitted"))
       add("emitted.count", long(om.get("graft_emitted"), "n_emitted"))
-    if (om.containsKey("graft_unresolved"))
-      add("unresolved_rows_total", long(om.get("graft_unresolved"), "n_unresolved"))
     e.progress.sources.foreach { s =>
       val m = s.metrics
       if (m.containsKey("pendingFiles")) {

@@ -3,10 +3,8 @@ package graft.streaming
 import graft.Tables
 import graft.cdc.Cdc
 import graft.model.Envelope
-import graft.sinks.Sink
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured Streaming path of the engine — SURVEY §2.9.
   *
@@ -78,9 +76,16 @@ object StreamPipeline {
     * resolves `chunk_day` against that snapshot with a literal map
     * lookup: no join, so no catalog job runs per batch. Inner-join
     * semantics hold: a row whose `chunk_day` is not in the snapshot is
-    * dropped, and counted in the `graft_unresolved` observed metric
-    * ([[StatsListener]]'s `unresolved_rows_total`). A chunk created
-    * after the stream starts resolves after a restart.
+    * dropped. A chunk created after the stream starts resolves after a
+    * restart.
+    *
+    * A1 counters: one `graft_stats` observe node sits after the op gate
+    * and the chunk lookup, before the resolution filter — the reference
+    * counts replication-channel calls in its replication handler, before
+    * anything resolves or filters them (`replicationhandler.go:39-64`).
+    * It carries the reference's per-op counts (`stats.go:35-100`) and
+    * `n_unresolved`, the rows resolution then drops; [[StatsListener]]
+    * folds them and [[StatsEndpoint]] scrapes them.
     *
     * `pgoutputPath`: when set, the WAL comes from binary pgoutput
     * segment blobs instead of the parquet stand-in — the config surface
@@ -110,10 +115,18 @@ object StreamPipeline {
     }(walStreamPgOutput(spark, _, typeResolver, markerSuppress))
     // one lookup per row, in a codegen'd projection below the observe
     val chunk = col("__chunk")
+    def ops(op: String) = count_if(col("op") === op)
     wal
       .filter(col("op").isin(enabledOps: _*))
       .withColumn("__chunk", chunkLookup(spark, dir)(col("chunk_day")))
-      .observe("graft_unresolved", count_if(chunk.isNull).as("n_unresolved"))
+      .observe("graft_stats",
+        count(lit(1)).as("n_events"),
+        ops(Envelope.Op.Create).as("n_inserts"),
+        ops(Envelope.Op.Update).as("n_updates"),
+        ops(Envelope.Op.Delete).as("n_deletes"),
+        ops(Envelope.Op.Truncate).as("n_truncates"),
+        ops(Envelope.Op.Message).as("n_messages"),
+        count_if(chunk.isNull).as("n_unresolved"))
       .filter(chunk.isNotNull)
       .select(
         col("lsn"), col("xid"), col("op"), col("ts_ms"),
@@ -228,38 +241,4 @@ object StreamPipeline {
         min(col("ts_ms")).as("sess_start_ms"), max(col("ts_ms")).as("sess_end_ms"))
       .select(col("user_id"), col("n_events"),
         col("sess_start_ms"), col("sess_end_ms"))
-
-  /** A1 — the reference's Prometheus counters
-    * (`internal/stats/stats.go:35-100`) as observed metrics: per-batch
-    * totals and per-op counts, surfaced in StreamingQueryProgress and
-    * folded by [[StatsListener]] / scraped by [[StatsEndpoint]]. */
-  def withStats(df: DataFrame): DataFrame =
-    df.observe("graft_stats",
-      count(lit(1)).as("n_events"),
-      sum(when(col("op") === "c", 1).otherwise(0)).as("n_inserts"),
-      sum(when(col("op") === "u", 1).otherwise(0)).as("n_updates"),
-      sum(when(col("op") === "d", 1).otherwise(0)).as("n_deletes"),
-      sum(when(col("op") === "t", 1).otherwise(0)).as("n_truncates"),
-      sum(when(col("op") === "m", 1).otherwise(0)).as("n_messages"))
-
-  /** The EMITTED counter observed separately, post-filter: the
-    * reference counts channel calls at the replication handler
-    * (pre-filter) and emitted events at the emitter (post-filter) —
-    * two different plan points, two observe nodes. */
-  def withEmitted(df: DataFrame): DataFrame =
-    df.observe("graft_emitted", count(lit(1)).as("n_emitted"))
-
-  /** Run the pipeline into a pluggable sink with checkpointed recovery
-    * (T1). `processAllAvailable` + `stop` gives the synchronous batch
-    * drain used by tests; production callers use `awaitTermination`.
-    */
-  def run(spark: SparkSession, dir: String, checkpointDir: String,
-          sink: Sink, queryName: String = "graft-cdc"): StreamingQuery =
-    withStats(envelopeStream(spark, dir))
-      .writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch((batch: DataFrame, id: Long) => sink.emit(batch, id))
-      .trigger(Trigger.AvailableNow())
-      .start()
 }

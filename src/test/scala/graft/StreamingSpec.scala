@@ -10,10 +10,25 @@ import java.nio.file.Files
   * restart; at-least-once into sinks). */
 class StreamingSpec extends SparkSpec {
 
+  /** `ConfigPipeline.start` of the parquet stand-in into `sink`,
+    * registered as `name`, with `name` as the query name (the topic
+    * prefix): every op flows (the defaults drop `r` and `m`), and no
+    * stats endpoint starts. */
+  private def startInto(name: String, sink: graft.sinks.Sink,
+                        ckpt: String): org.apache.spark.sql.streaming.StreamingQuery = {
+    graft.sinks.Sinks.register(name, () => sink)
+    graft.streaming.ConfigPipeline.start(spark, sf001, Map(
+      "sink.type" -> name,
+      "topic.prefix" -> name,
+      "postgresql.snapshot.initial" -> "always",
+      "postgresql.events.message" -> "true",
+      "stats.enabled" -> "false"), ckpt)
+  }
+
   test("streaming envelope equals batch envelope (one code path)") {
     val sink = new CollectorSink
     val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    val q = StreamPipeline.run(spark, sf001, ckpt, sink)
+    val q = startInto("graft-cdc", sink, ckpt)
     assert(q.awaitTermination(240000), "stream did not finish within the timeout")
     // A1: observed metrics surface the reference's stats counters
     val obs = q.lastProgress.observedMetrics.get("graft_stats")
@@ -83,8 +98,9 @@ class StreamingSpec extends SparkSpec {
 
   test("wire stream: rows dropped by chunk resolution are counted on /metrics") {
     // segments stamped 400 days past the fixture's days: every row of
-    // them misses the chunk catalog and is dropped, and the
-    // graft_unresolved observed metric counts exactly those rows
+    // them misses the chunk catalog and is dropped; graft_stats counts
+    // exactly those rows as unresolved, and counts them as channel calls
+    // too, ahead of resolution, as the reference's replication handler
     import org.apache.spark.sql.functions.{col, when}
     val dir = Files.createTempDirectory("graft-unresolved-count").toString
     val moved = col("event_id") % 7 === 0
@@ -103,15 +119,19 @@ class StreamingSpec extends SparkSpec {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       assert(q.awaitTermination(240000), "stream did not finish within the timeout")
       val delivered = spark.table("unresolved_counted").count()
-      val observed = q.recentProgress.flatMap(p => Option(p.observedMetrics.get("graft_unresolved")))
+      val observed = q.recentProgress.flatMap(p => Option(p.observedMetrics.get("graft_stats")))
         .map(_.getAs[Long]("n_unresolved")).sum
       assert(observed === dropped)
       val deadline = System.nanoTime + 60e9.toLong // listener delivery is async
-      while (listener.counters.getOrElse("unresolved_rows_total", 0L) < dropped &&
+      while ((listener.counters.getOrElse("unresolved_rows_total", 0L) < dropped ||
+              listener.counters.getOrElse("total", 0L) < delivered + dropped) &&
              System.nanoTime < deadline) Thread.sleep(50)
       assert(listener.counters("unresolved_rows_total") === dropped)
+      assert(listener.counters("total") === delivered + dropped)
       val scrape = graft.streaming.StatsEndpoint.render(listener.counters, runtimeStats = false)
       assert(scrape.linesIterator.contains(s"graft_unresolved_rows_total $dropped"), scrape)
+      assert(scrape.linesIterator.contains(
+        s"streamer_replicationchannel_calls_total ${delivered + dropped}"), scrape)
       assert(delivered + dropped === graft.cdc.PgOutput.decodeSegments(
           spark.read.schema(graft.cdc.PgOutput.frameSchema).parquet(s"$dir/segments"))
         .filter(col("op_wire").isin("I", "U", "D")).count())
@@ -119,6 +139,33 @@ class StreamingSpec extends SparkSpec {
       spark.streams.removeListener(listener)
       spark.sql("DROP TABLE IF EXISTS unresolved_counted")
     }
+  }
+
+  test("a config-driven wire stream plans the two observe nodes with stats on and off") {
+    import org.apache.spark.sql.execution.CollectMetricsExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val dir = Files.createTempDirectory("graft-observe-nodes").toString
+    graft.cdc.PgOutput.encodeSegments(Tables.events(spark, sf001)).write.parquet(s"$dir/segments")
+    val probe = new java.net.ServerSocket(0)
+    val port = probe.getLocalPort
+    probe.close()
+    try {
+      Seq("true", "false").foreach { statsOn =>
+        val name = s"observe-nodes-$statsOn"
+        graft.sinks.Sinks.register(name, () => new CollectorSink)
+        val q = graft.streaming.ConfigPipeline.start(spark, sf001, Map(
+          "sink.type" -> name,
+          "topic.prefix" -> name,
+          "postgresql.pgoutput.path" -> s"$dir/segments",
+          "stats.enabled" -> statsOn,
+          "stats.port" -> port.toString), s"$dir/ckpt-$statsOn")
+        assert(q.awaitTermination(240000), "stream did not finish within the timeout")
+        q.exception.foreach(e => throw e)
+        val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+        val names = plan.collect { case c: CollectMetricsExec => c.name }
+        assert(names.sorted === Seq("graft_emitted", "graft_stats"), s"stats.enabled=$statsOn: $plan")
+      }
+    } finally graft.streaming.StatsEndpoint.stop(port)
   }
 
   test("mid-stream ADD COLUMN widens the envelope across micro-batches without restart (T9)") {
@@ -739,7 +786,7 @@ class StreamingSpec extends SparkSpec {
     try {
       val ckpt = java.nio.file.Files.createTempDirectory("stats-ckpt").toString
       val sink = new graft.sinks.CollectorSink
-      val q = StreamPipeline.run(spark, sf001, ckpt, sink, "stats-test")
+      val q = startInto("stats-test", sink, ckpt)
       assert(q.awaitTermination(240000), "stream did not finish within the timeout")
       // listener delivery is async — poll briefly for the final totals
       val deadline = System.nanoTime + 60e9.toLong
@@ -901,7 +948,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("fq-ckpt").toString
     // first two emit attempts throw — withRetry must absorb them
     val sink = graft.sinks.Sinks.withRetry(new graft.sinks.FileQueueSink(dir, failFirst = 2))
-    val q = StreamPipeline.run(spark, sf001, ckpt, sink, "fq-test")
+    val q = startInto("fq-test", sink, ckpt)
     assert(q.awaitTermination(240000), "stream did not finish within the timeout")
     val delivered = spark.read.json(s"$dir/batch=*")
     assert(delivered.count() === 1000L)
@@ -909,8 +956,7 @@ class StreamingSpec extends SparkSpec {
     // redelivery of the same batches (fresh checkpoint, same dir) must
     // leave the queue unchanged — batch-id-keyed overwrite idempotence
     val ckpt2 = java.nio.file.Files.createTempDirectory("fq-ckpt2").toString
-    val q2 = StreamPipeline.run(spark, sf001, ckpt2,
-      new graft.sinks.FileQueueSink(dir), "fq-test-replay")
+    val q2 = startInto("fq-test-replay", new graft.sinks.FileQueueSink(dir), ckpt2)
     assert(q2.awaitTermination(240000), "stream did not finish within the timeout")
     assert(spark.read.json(s"$dir/batch=*").count() === 1000L, "replay is idempotent")
   }
@@ -918,13 +964,13 @@ class StreamingSpec extends SparkSpec {
   test("restart with same checkpoint emits nothing new (T1 recovery, no dupes)") {
     val sink = new CollectorSink
     val ckpt = Files.createTempDirectory("graft-ckpt2").toString
-    val q1 = StreamPipeline.run(spark, sf001, ckpt, sink, "graft-restart-1")
+    val q1 = startInto("graft-restart-1", sink, ckpt)
     assert(q1.awaitTermination(240000), "stream did not finish within the timeout")
     val afterFirst = sink.rows.size
     assert(afterFirst === 1000)
     // "restart": new query, same checkpoint — the committed offset makes
     // the already-processed file invisible, like resuming from stored LSN
-    val q2 = StreamPipeline.run(spark, sf001, ckpt, sink, "graft-restart-2")
+    val q2 = startInto("graft-restart-2", sink, ckpt)
     assert(q2.awaitTermination(240000), "stream did not finish within the timeout")
     assert(sink.rows.size === afterFirst, "no events re-emitted after restart")
   }
