@@ -1381,14 +1381,6 @@ object Cdc {
       lit(",\"schema\":"), lit(keySchemaJson), lit("}"))
   }
 
-  /** Oracle-parity variant of the full `{payload, schema}` envelope: the
-    * JSON is assembled with string concatenation (still one codegen
-    * projection) so an independent engine can build the byte-identical
-    * text. Key blocks follow the per-event-kind rules
-    * (`eventschema.go:180-197`): op='m' → `{prefix}` with the message key
-    * schema, otherwise the PK key. Object keys are in Go-map-marshal
-    * (sorted) order throughout.
-    */
   /** Plan-time schema constants for the events table envelope — shared
     * between the Spark query and the oracle SQL generator so both sides
     * embed the byte-identical descriptor. */
@@ -1422,55 +1414,17 @@ object Cdc {
     * envelope and the `{prefix}` key, `eventschema.go:132-150,325-341`)
     * — a live stream decodes it off the wire for free; the parquet
     * fixture derives it once via [[withMessagePrefix]]. No surface
-    * fabricates a prefix. */
+    * fabricates a prefix. Each column is one codegen'd expression that
+    * writes the whole JSON text in one pass ([[EventsEnvelopeText]] has
+    * the layout and the null rules); money is integer cents
+    * (representation-stable across engines). */
   def eventsEnvelopeCols(dbName: String = "graft"): (Column, Column) = {
-    val schemaJson = eventsEnvelopeSchemaJson
-
-    // row image: alphabetical keys; props embeds raw (it IS json); money
-    // as integer cents (representation-stable across engines). A null
-    // field renders as JSON null: `concat` is null if any input is, and
-    // a null envelope is a tombstone to the wire sinks (an unchanged-
-    // TOAST props decodes to null on the pgoutput path)
-    def orJsonNull(c: Column): Column = coalesce(c.cast(StringType), lit("null"))
-    val rowJson = concat(
-      lit("{\"event_id\":"), col("event_id"),
-      lit(",\"props\":"), orJsonNull(col("props")),
-      lit(",\"user_id\":"), orJsonNull(col("user_id")),
-      lit(",\"value_cents\":"), orJsonNull(floor(col("value") * 100.0 + 0.5).cast(LongType)),
-      lit("}"))
-    val srcJson = sourceJson(dbName, "public", "events",
-      col("lsn"), col("ts_ms"), snapshot = false, txId = Some(col("xid")))
-    val msgJson = concat(
-      lit("{\"content\":\""), PgConverters.base64Std(col("props").cast(BinaryType)),
-      lit("\",\"prefix\":\""), col("msg_prefix"), lit("\"}"))
-    def tail = concat(lit(",\"op\":\""), col("op"), lit("\",\"source\":"),
-      srcJson, lit(",\"ts_ms\":"), col("ts_ms"), lit("}"))
-    val payload =
-      when(col("op").isin(Envelope.Op.Read, Envelope.Op.Create),
-        concat(lit("{\"after\":"), rowJson, tail))
-      .when(col("op") === Envelope.Op.Update,
-        concat(lit("{\"after\":"), rowJson, lit(",\"before\":"), rowJson, tail))
-      .when(col("op") === Envelope.Op.Delete,
-        concat(lit("{\"before\":"), rowJson, tail))
-      .otherwise( // op='m' — logical message block (eventschema.go:325-341)
-        concat(lit("{\"message\":"), msgJson, tail))
-    val keyPayload =
-      when(col("op") === Envelope.Op.Message,
-        concat(lit("{\"prefix\":\""), col("msg_prefix"), lit("\"}")))
-        .otherwise(concat(lit("{\"event_id\":"), col("event_id"), lit("}")))
-    val keySchema =
-      when(col("op") === Envelope.Op.Message,
-        lit(graft.model.DebeziumSchema.messageKeySchemaJson))
-      .otherwise(lit(eventsPkKeySchemaJson))
-    // op='m' rows carry the reference's MessageValueSchema-based envelope
-    // (eventschema.go:287-306), not the table envelope
-    val valueSchema =
-      when(col("op") === Envelope.Op.Message, lit(messageEnvelopeSchemaJson))
-        .otherwise(lit(schemaJson))
-    (concat(lit("{\"payload\":"), payload, lit(",\"schema\":"), valueSchema,
-        lit("}")),
-      concat(lit("{\"payload\":"), keyPayload, lit(",\"schema\":"), keySchema,
-        lit("}")))
+    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+    def e(name: String) = expression(col(name))
+    val valueCents = expression(floor(col("value") * 100.0 + 0.5).cast(LongType))
+    (column(EventsEnvelope(e("op"), e("lsn"), e("xid"), e("ts_ms"), e("event_id"),
+        e("props"), e("user_id"), valueCents, e("msg_prefix"), dbName)),
+      column(EventsKey(e("op"), e("event_id"), e("msg_prefix"))))
   }
 
   /** One table's snapshot-read envelope stream (op='r', snapshot=true,

@@ -47,8 +47,7 @@ object PgWire {
   val SslRequestCode = 80877103 // 1234.5679, the SSLRequest pseudo-version
 
   /** "X/Y" hex form PostgreSQL prints LSNs in. */
-  def lsnText(lsn: Long): String =
-    f"${(lsn >>> 32).toHexString.toUpperCase}%s/${(lsn & 0xffffffffL).toHexString.toUpperCase}%s"
+  def lsnText(lsn: Long): String = graft.cdc.TextBuffer.lsnText(lsn)
 
   def parseLsn(s: String): Long = {
     val Array(hi, lo) = s.split("/")

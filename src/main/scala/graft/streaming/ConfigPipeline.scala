@@ -616,7 +616,11 @@ object ConfigPipeline {
     *    Kinesis) drop the fan-out row and keep the delete event;
     *  - the SQS FIFO dedup id is CONTENT-based over (topic, envelope,
     *    key) — robust to any of the above reshapes — and is rendered
-    *    only when the primary or the DLQ sink is SQS.
+    *    only when the primary or the DLQ sink is SQS;
+    *  - when every configured sink (primary and DLQ) reads named columns
+    *    only, the frame ends with a select of `topic`, `key`,
+    *    `envelope` (and `dedup_id` for SQS), so the micro-batch does
+    *    not materialize shaped columns no sink reads.
     */
   private[graft] def renderWireRows(shaped: DataFrame,
                                     props: Map[String, String]): DataFrame = {
@@ -695,12 +699,24 @@ object ConfigPipeline {
     // only the SQS sink reads the dedup id; foreachBatch hands sinks a
     // Dataset over the already-planned rows, so a sink's select cannot
     // prune an unread column and every render would hash every envelope
-    if (!readsDedupId(props)) tombAware
-    else tombAware.withColumn("dedup_id",
-      sha2(concat_ws("|", col("topic"),
-        coalesce(col("envelope"), lit("∅")),
-        coalesce(col("key"), lit(""))), 256))
+    val withDedup =
+      if (!readsDedupId(props)) tombAware
+      else tombAware.withColumn("dedup_id",
+        sha2(concat_ws("|", col("topic"),
+          coalesce(col("envelope"), lit("∅")),
+          coalesce(col("key"), lit(""))), 256))
+    // for the same reason, hand sinks that read named columns only those
+    // columns; a stdout, file, collector or HTTP sink (which posts whole
+    // rows) anywhere in the config keeps the shaped columns
+    val dlqType = props.get("sink.dlq.type").map(_.toLowerCase)
+    if (!(sinkType +: dlqType.toSeq).forall(columnSinkTypes.contains)) withDedup
+    else withDedup.select((Seq("topic", "key", "envelope") ++
+      (if (readsDedupId(props)) Seq("dedup_id") else Nil)).map(col): _*)
   }
+
+  /** Wire sinks that read only `topic`, `key`, `envelope` and (SQS)
+    * `dedup_id`. */
+  private val columnSinkTypes = wireSinkTypes - "http"
 
   /** The primary or the dead-letter sink is SQS, the one sink that
     * reads `dedup_id`. */

@@ -190,9 +190,11 @@ class ConfigPipelineSpec extends SparkSpec {
     assert(pubM.exists(_.existsPublication) && slotM.exists(_.existsSlot))
     assert(q.awaitTermination(240000))
     assert(sink.rows.nonEmpty)
-    // the termination listener fires asynchronously; wait for the drop
+    // the termination listener fires asynchronously and drops the slot
+    // before it closes the publication; wait for both
     val deadline = System.currentTimeMillis() + 30000
-    while (slotM.exists(_.existsSlot) && System.currentTimeMillis() < deadline)
+    while ((slotM.exists(_.existsSlot) || pubM.exists(_.existsPublication)) &&
+           System.currentTimeMillis() < deadline)
       Thread.sleep(100)
     assert(slotM.exists(!_.existsSlot),
       "created + autodrop slot must drop when the query terminates")
@@ -770,6 +772,35 @@ class ConfigPipelineSpec extends SparkSpec {
     // primary must receive renderable rows the day it engages
     assert(ConfigPipeline.needsWireRender(Map("sink.type" -> "stdout", "sink.dlq.type" -> "kafka")))
     assert(!ConfigPipeline.needsWireRender(Map("sink.type" -> "stdout")))
+  }
+
+  test("wire render: one-pass envelope, and column sinks get only the columns they read") {
+    import org.apache.spark.sql.catalyst.expressions.Concat
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    def render(props: Map[String, String]) =
+      ConfigPipeline.renderWireRows(ConfigPipeline.fromProperties(spark, sf001, props), props)
+    val kafka = render(Map("sink.type" -> "kafka"))
+    val plan = kafka.queryExecution.optimizedPlan
+    val rendered = plan.collect { case p: Project => p.projectList }.flatten
+      .filter(a => a.name == "envelope" || a.name == "key")
+    assert(rendered.map(_.name).toSet === Set("envelope", "key"), plan.toString)
+    assert(rendered.forall(_.collect { case c: Concat => c }.isEmpty),
+      s"a Concat renders the envelope or key:\n$plan")
+    assert(rendered.exists(_.collect { case e: graft.cdc.EventsEnvelope => e }.nonEmpty))
+    assert(kafka.columns.toSeq === Seq("topic", "key", "envelope"))
+    assert(render(Map("sink.type" -> "sqs")).columns.toSeq ===
+      Seq("topic", "key", "envelope", "dedup_id"))
+    assert(render(Map("sink.type" -> "kafka", "sink.dlq.type" -> "nats")).columns.toSeq ===
+      Seq("topic", "key", "envelope"))
+    // a sink that reads whole rows, as primary or DLQ, keeps the shaped
+    // columns next to the rendered ones
+    for (props <- Seq(Map("sink.type" -> "stdout", "sink.dlq.type" -> "kafka"),
+                      Map("sink.type" -> "kafka", "sink.dlq.type" -> "http"),
+                      Map("sink.type" -> "http"))) {
+      val cols = render(props).columns.toSet
+      assert(Set("op", "lsn", "event_id", "topic", "key", "envelope").subsetOf(cols),
+        s"$props: $cols")
+    }
   }
 
   test("production topology, ONE config map: SCRAM-PLUS over TLS → resilient spool → " +
